@@ -2737,13 +2737,21 @@ object SparkEntry {
       .orderBy("doc_id")
   }
 
-  private def o16SeqId(s: SparkSession, dir: String): DataFrame =
+  /** Previous o16 invocation's persisted sort, released on the next call
+    * (same lifecycle as e10PrevCaches). */
+  private var o16PrevIds: Option[AutoCloseable] = None
+
+  private def o16SeqId(s: SparkSession, dir: String): DataFrame = {
+    synchronized { o16PrevIds.foreach(_.close()); o16PrevIds = None }
     // no trailing orderBy: zipWithIndex output is already globally ordered
     // (range partitions from the sort, in-partition order preserved)
-    MutationOps.withContiguousId(
+    val (ids, handle) = MutationOps.withContiguousId(
       T(s, dir, "lineitem").select("l_orderkey", "l_linenumber")
         .orderBy("l_orderkey", "l_linenumber"),
       idName = "seq_id")
+    synchronized { o16PrevIds = Some(handle) }
+    ids
+  }
 
   private def o18Combine(s: SparkSession, dir: String): DataFrame = {
     val li = T(s, dir, "lineitem")
@@ -4898,12 +4906,13 @@ object SparkEntry {
       (tfidfPrevCaches ++ e10PrevCaches).foreach(_.unpersist(blocking = false))
       tfidfPrevCaches = Nil
       e10PrevCaches = Nil
+      o16PrevIds.foreach(_.close())
+      o16PrevIds = None
     }
     graft.operators.DedupOps.releaseJaccardCaches()
     graft.operators.DedupOps.releaseIncrementalCaches()
     graft.operators.DedupOps.releaseEmbedCaches()
     graft.operators.SimilarityOps.releaseSemanticCaches()
-    graft.operators.MutationOps.releaseSeqIdCache()
   }
 
   /** Drop the per-JVM LAYOUT memos (o20's bucketed tables, o21's

@@ -2,7 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.io.{BufferedReader, FileReader}
+import java.io.{BufferedReader, FileInputStream, InputStreamReader}
+import java.nio.charset.StandardCharsets
 
 /** O1/O2/O3 — TSV scan with all-string header-derived schema and optional
   * `#`-comment skipping (reference: cna/reader.go:15-55, mutation/reader.go:15-69).
@@ -16,16 +17,21 @@ import java.io.{BufferedReader, FileReader}
 object TsvReader {
 
   /** O3: header-only schema inference. Reads the first line that is not
-    * `#`-prefixed, splits on the delimiter, types every column string. */
+    * `#`-prefixed, splits on the delimiter, types every column string. The
+    * header is decoded as UTF-8, the charset Spark reads the data cells in,
+    * whatever the platform default. A file with no such line, or a blank
+    * one, has no schema and is rejected naming `path`. */
   def headerColumns(path: String, delimiter: Char = '\t'): Seq[String] = {
-    val r = new BufferedReader(new FileReader(path))
+    val r = new BufferedReader(
+      new InputStreamReader(new FileInputStream(path), StandardCharsets.UTF_8))
     try {
       Iterator
         .continually(r.readLine())
         .takeWhile(_ != null)
         .find(l => !l.startsWith("#"))
+        .filter(_.trim.nonEmpty)
         .map(_.split(delimiter).toSeq)
-        .getOrElse(Seq.empty)
+        .getOrElse(throw new IllegalArgumentException(s"$path: no header line"))
     } finally r.close()
   }
 

@@ -127,14 +127,14 @@ object DedupOps {
     * double on every engine, and the integer output can never drift. */
   /** Previous jaccardVerifiedPairs call's persisted relations, released on
     * the next call (single-live-result lifecycle, same as
-    * MutationOps.withContiguousId / SparkEntry.e10PrevCaches): repeated
-    * invocations — a benchmark loop, a dedup-per-snapshot pipeline — must
-    * not accumulate dead multi-million-row caches in storage memory. */
+    * SparkEntry.e10PrevCaches): repeated invocations — a benchmark loop, a
+    * dedup-per-snapshot pipeline — must not accumulate dead
+    * multi-million-row caches in storage memory. */
   private var jaccardPrevCaches: Seq[DataFrame] = Nil
 
   /** Release the last jaccard call's persisted relations now instead of
     * on the next call — the long-lived-session shutdown hook, same
-    * contract as MutationOps.releaseSeqIdCache. */
+    * contract as SparkEntry.releaseCaches. */
   def releaseJaccardCaches(): Unit = synchronized {
     jaccardPrevCaches.foreach(_.unpersist(blocking = false))
     jaccardPrevCaches = Nil

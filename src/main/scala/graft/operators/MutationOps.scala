@@ -1,9 +1,14 @@
 package graft.operators
 
 import graft.core.Schemas
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** MAF transforms — O13 (mutation_event projection), O14 (mutation
   * projection), O15 (schema-drift-tolerant column lookup), O16 (contiguous
@@ -50,40 +55,55 @@ object MutationOps {
     * is acceptable. `zipWithIndex` computes per-partition counts in one extra
     * narrow job and assigns contiguous offsets per partition: distributed,
     * no shuffle, order = partition order (file/offset order for a scan).
+    *
+    * Returns the stamped DataFrame and the handle of its persisted input;
+    * close the handle once the result is materialized.
     */
-  /** Previous withContiguousId call's persisted input, released on the next
-    * call (same lifecycle pattern as SparkEntry.e10PrevCaches): per-file
-    * import pipelines materialize each file's outputs before the next file
-    * starts, so at most one cache is live. */
-  private var seqIdPrevCache:
-      Option[org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow]] = None
-  private val seqIdCacheLock = new Object
-
-  /** Release the persisted input of the most recent `withContiguousId`
-    * call. Callers that have fully materialized the last result (or are
-    * shutting down) can use this instead of waiting for the next call's
-    * implicit release. */
-  def releaseSeqIdCache(): Unit = seqIdCacheLock.synchronized {
-    seqIdPrevCache.foreach(_.unpersist(blocking = false))
-    seqIdPrevCache = None
+  def withContiguousId(df: DataFrame, idName: String = "MUTATION_EVENT_ID",
+      start: Long = 0L): (DataFrame, AutoCloseable) = {
+    val staged = stage(df)
+    (staged.stamp(start, idName), staged)
   }
 
-  /** SINGLE-LIVE-RESULT CONTRACT: each call unpersists the previous call's
-    * cached input, so only the most recent returned DataFrame has its
-    * global sort pinned. An earlier result kept around lazily stays
-    * CORRECT (ids were assigned from the collected per-partition counts,
-    * which don't change) but silently recomputes its upstream sort on next
-    * evaluation — materialize each result before calling again, and use
-    * [[releaseSeqIdCache]] when done with the last one. This mirrors the
-    * per-file import pipeline, which fully writes file N's outputs before
-    * file N+1 starts (mutation/transformer.go:30-52). */
-  def withContiguousId(df: DataFrame, idName: String = "MUTATION_EVENT_ID",
-      start: Long = 0L): DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
-    import org.apache.spark.sql.graft.Bridge
-    val outSchema = StructType(
-      StructField(idName, LongType, nullable = false) +: df.schema.fields)
+  /** `df`'s rows persisted with their per-partition counts: the first half
+    * of [[withContiguousId]]. `rowCount` is known as soon as `stage`
+    * returns, so a caller stamping several inputs (one per MAF) can compute
+    * every start offset on the driver before any stamp runs.
+    *
+    * The persisted input is owned by this handle, not by a process-wide
+    * memo, so concurrent callers never release each other's live inputs.
+    * Results of `stamp` stay correct after `close` (the offsets don't
+    * change) but re-evaluate the upstream plan when read again. */
+  final class Staged private[MutationOps] (df: DataFrame,
+      rdd: RDD[InternalRow], counts: Array[Long]) extends AutoCloseable {
+    val rowCount: Long = counts.sum
+
+    /** The persisted rows with a non-null long `idName` column prepended,
+      * ids running contiguously from `start` in partition order. */
+    def stamp(start: Long, idName: String = "MUTATION_EVENT_ID"): DataFrame = {
+      val outSchema = StructType(
+        StructField(idName, LongType, nullable = false) +: df.schema.fields)
+      val bc = df.sparkSession.sparkContext.broadcast(counts.scanLeft(start)(_ + _))
+      val stamped = rdd.mapPartitionsWithIndex { case (i, it) =>
+        val proj = UnsafeProjection.create(outSchema)
+        val idRow = new GenericInternalRow(1)
+        val joined = new JoinedRow
+        var id = bc.value(i)
+        it.map { r =>
+          idRow.update(0, id)
+          id += 1
+          // copy: the projection's output buffer is reused per row
+          proj(joined(idRow, r)).copy(): InternalRow
+        }
+      }
+      Bridge.fromInternalRows(df.sparkSession, stamped, outSchema)
+    }
+
+    def close(): Unit = rdd.unpersist(blocking = false)
+  }
+
+  /** Persist `df` and count its rows per partition, in one job. */
+  def stage(df: DataFrame): Staged = {
     // zipWithIndex's structure (per-partition counts in one narrow job,
     // offsets broadcast, ids assigned partition-locally) — but over
     // InternalRows: `df.rdd` would deserialize every row to a boxed Row and
@@ -93,43 +113,26 @@ object MutationOps {
     // passes re-evaluate the upstream plan (for the import workload that
     // upstream is a GLOBAL SORT — at 100 TB running it twice is the
     // dominant cost). The copy is required because the scan reuses its
-    // UnsafeRow buffer; the previous call's cache is released via the memo.
+    // UnsafeRow buffer.
     val rdd = Bridge.internalRows(df)
       .mapPartitions(it => it.map(_.copy()))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    seqIdCacheLock.synchronized {
-      seqIdPrevCache.foreach(_.unpersist(blocking = false))
-      seqIdPrevCache = Some(rdd)
-    }
-    val counts = rdd
-      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(start)(_ + _)
-    val bc = df.sparkSession.sparkContext.broadcast(offsets)
-    val stamped = rdd.mapPartitionsWithIndex { case (i, it) =>
-      val proj = UnsafeProjection.create(outSchema)
-      val idRow = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      var id = bc.value(i)
-      it.map { r =>
-        idRow.update(0, id)
-        id += 1
-        // copy: the projection's output buffer is reused per row
-        proj(joined(idRow, r)).copy(): InternalRow
-      }
-    }
-    Bridge.fromInternalRows(df.sparkSession, stamped, outSchema)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val counts =
+      try rdd.mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
+        .collect().sortBy(_._1).map(_._2)
+      catch { case e: Throwable => rdd.unpersist(blocking = false); throw e }
+    new Staged(df, rdd, counts)
   }
 
-  /** O13+O14 combined: one id-stamped scan, two projections (the reference
-    * emits both tables from a single pass — mutation/transformer.go:330-418).
-    * The id stamp is materialized once; both outputs project from it. */
-  def transformMaf(df: DataFrame, study: String, profile: String,
-      startEventId: Long = 0L): (DataFrame, DataFrame) = {
-    val stamped = withContiguousId(df, start = startEventId)
+  /** O13+O14 combined: both tables projected from one id-stamped input (a
+    * MAF with `MUTATION_EVENT_ID` prepended by [[Staged.stamp]]) — the
+    * reference emits both tables from a single pass
+    * (mutation/transformer.go:330-418). */
+  def transformMaf(stamped: DataFrame, study: String, profile: String)
+      : (DataFrame, DataFrame) = {
     val id = col("MUTATION_EVENT_ID")
-    val events = stamped.select(id +: eventProjection(df): _*)
-    val mutations = stamped.select(id +: mutationProjection(df, study, profile): _*)
+    val events = stamped.select(id +: eventProjection(stamped): _*)
+    val mutations = stamped.select(id +: mutationProjection(stamped, study, profile): _*)
     (events, mutations)
   }
 }

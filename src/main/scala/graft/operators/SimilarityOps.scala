@@ -283,7 +283,7 @@ object SimilarityOps {
 
   /** Release the last semantic-dedup call's persisted assignment now
     * instead of on the next call (long-lived-session shutdown hook,
-    * same contract as MutationOps.releaseSeqIdCache). */
+    * same contract as DedupOps.releaseJaccardCaches). */
   def releaseSemanticCaches(): Unit = synchronized {
     semanticPrevCaches.foreach(_.unpersist(blocking = false))
     semanticPrevCaches = Nil

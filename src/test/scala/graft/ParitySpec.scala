@@ -3,7 +3,9 @@ package graft
 import graft.core.{Schemas, StudyDiscovery, TsvReader}
 import graft.operators.{CnaOps, CombineOps, MutationOps}
 import graft.pipelines.Pipelines
+import graft.sinks.ParquetSink
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
 /** Reference-parity golden tests over the FIXTURES.md §A miniature studies.
@@ -79,7 +81,8 @@ class ParitySpec extends SparkSpec {
 
   test("O13/O14/O15/O16: MAF transform — schemas, mapping, drift fill, ids") {
     val df = TsvReader.readMaf(spark, s"$studies/study_a/data_mutations.txt")
-    val (ev, mu) = MutationOps.transformMaf(df, "study_a", "study_a_mutations")
+    val (stamped, staged) = MutationOps.withContiguousId(df)
+    val (ev, mu) = MutationOps.transformMaf(stamped, "study_a", "study_a_mutations")
     assert(ev.columns.toSeq == Schemas.mutationEvent.fieldNames.toSeq)
     assert(mu.columns.toSeq == Schemas.mutation.fieldNames.toSeq)
     val evRows = ev.orderBy("MUTATION_EVENT_ID").collect()
@@ -97,6 +100,7 @@ class ParitySpec extends SparkSpec {
     assert(m("MATCHED_NORM_SAMPLE_BARCODE") == "")
     assert(m("AMINO_ACID_CHANGE") == "p.V600E")
     assert(m("ANNOTATION_JSON") == "")
+    staged.close()
   }
 
   test("O16: id contiguity invariant across files (per-file offsets)") {
@@ -132,5 +136,67 @@ class ParitySpec extends SparkSpec {
     val again = CombineOps.combineGlob(spark,
       s"$tmp/study_a/*_genetic_alterations.parquet", combined.head)
     assert(again.count() == 2)
+  }
+
+  private def writeUtf8(path: String, text: String): Unit = {
+    Files.createDirectories(Paths.get(path).getParent)
+    Files.write(Paths.get(path), text.getBytes(StandardCharsets.UTF_8))
+  }
+
+  private def meta(study: String, stableId: String, data: String) =
+    s"cancer_study_identifier: $study\nstable_id: $stableId\ndata_filename: $data\n"
+
+  test("O3: a non-ASCII sample column survives into ORDERED_SAMPLE_LIST and SAMPLE_ID") {
+    val tmp = Files.createTempDirectory("graft_utf8").toString
+    val sample = "S\u00e9-01"
+    writeUtf8(s"$tmp/study_u/meta_cna.txt", meta("study_u", "gistic", "data_cna.txt"))
+    writeUtf8(s"$tmp/study_u/data_cna.txt",
+      s"Hugo_Symbol\tEntrez_Gene_Id\tTCGA-S1\t$sample\nBRCA1\t672\t0\t-1\n")
+    val written = Pipelines.convertCna(spark, tmp, withDerived = true)
+    val Seq(_, gps, derived) = written
+    assert(spark.read.parquet(gps).select("ORDERED_SAMPLE_LIST").head().getString(0) ==
+      s"study_u_TCGA-S1,study_u_$sample")
+    assert(spark.read.parquet(derived).select("SAMPLE_ID").collect().map(_.getString(0))
+      .toSet == Set("study_u_TCGA-S1", s"study_u_$sample"))
+  }
+
+  test("TsvReader rejects a file without a header line, naming it") {
+    val tmp = Files.createTempDirectory("graft_nohdr").toString
+    for ((name, text) <- Seq("empty.txt" -> "", "comments.txt" -> "#a\n#b\n")) {
+      writeUtf8(s"$tmp/$name", text)
+      val e = intercept[IllegalArgumentException](TsvReader.readMaf(spark, s"$tmp/$name"))
+      assert(e.getMessage.contains(s"$tmp/$name"))
+    }
+  }
+
+  test("convert-cna: one empty matrix among three fails the call, naming that file") {
+    val tmp = Files.createTempDirectory("graft_cna_fail").toString
+    val cna = Files.readString(Paths.get(s"$studies/study_a/data_cna.txt"))
+    for (st <- Seq("study_a", "study_b", "study_c")) {
+      writeUtf8(s"$tmp/$st/meta_cna.txt", meta(st, "gistic", "data_cna.txt"))
+      writeUtf8(s"$tmp/$st/data_cna.txt", if (st == "study_b") "" else cna)
+    }
+    val e = intercept[IllegalArgumentException](Pipelines.convertCna(spark, tmp))
+    assert(e.getMessage.contains(s"$tmp/study_b/data_cna.txt"))
+  }
+
+  test("convert-mutations: one empty MAF among three — the others write with contiguous ids, the call lists the bad file") {
+    val tmp = Files.createTempDirectory("graft_mut_fail").toString
+    val sources = Map("study_a" -> "study_a", "study_c" -> "study_b")
+    for (st <- Seq("study_a", "study_b", "study_c")) {
+      writeUtf8(s"$tmp/$st/meta_mutations.txt", meta(st, "mutations", "data_mutations.txt"))
+      writeUtf8(s"$tmp/$st/data_mutations.txt", sources.get(st).fold("")(src =>
+        Files.readString(Paths.get(s"$studies/$src/data_mutations.txt"))))
+    }
+    val e = intercept[RuntimeException](Pipelines.convertMutations(spark, tmp))
+    assert(e.getMessage.contains("1 file(s) failed"))
+    assert(e.getMessage.contains(s"$tmp/study_b/data_mutations.txt"))
+    val events = Seq("study_a", "study_c").map(st =>
+      ParquetSink.derivePath(s"$tmp/$st/data_mutations.txt", "mutation_event"))
+    val ids = spark.read.parquet(events: _*).select("MUTATION_EVENT_ID")
+      .collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == (0L until 5L)) // 3 rows study_a + 2 rows study_c
+    assert(!Files.exists(Paths.get(
+      ParquetSink.derivePath(s"$tmp/study_b/data_mutations.txt", "mutation_event"))))
   }
 }

@@ -169,8 +169,9 @@ class PropertySpec extends SparkSpec {
     check("contiguous", Prop.forAllNoShrink(
       Gen.choose(1, 200), Gen.choose(0L, 1000L)) { (n, start) =>
       val df = (1 to n).map(i => (s"r$i", i)).toDF("k", "v").repartition(3)
-      val ids = MutationOps.withContiguousId(df, "id", start)
-        .select("id").collect().map(_.getLong(0)).sorted
+      val (stamped, staged) = MutationOps.withContiguousId(df, "id", start)
+      val ids = stamped.select("id").collect().map(_.getLong(0)).sorted
+      staged.close()
       ids.toSeq == (start until start + n)
     })
   }
@@ -248,8 +249,10 @@ class PropertySpec extends SparkSpec {
           spark.sparkContext.parallelize(
             Seq(org.apache.spark.sql.Row(header.map(_ => "val"): _*))),
           graft.core.Schemas.allStringSchema(header))
-        val (ev, mu) = MutationOps.transformMaf(df, "st", "pf")
+        val (stamped, staged) = MutationOps.withContiguousId(df)
+        val (ev, mu) = MutationOps.transformMaf(stamped, "st", "pf")
         val evRow = ev.head
+        staged.close()
         val idx = ev.columns.indexOf("NCBI_BUILD")
         ev.columns.toSeq == graft.core.Schemas.mutationEvent.fieldNames.toSeq &&
           mu.columns.toSeq == graft.core.Schemas.mutation.fieldNames.toSeq &&
