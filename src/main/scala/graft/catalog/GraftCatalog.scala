@@ -5,7 +5,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import graft.sinks.TableLog
+import graft.sinks.{TableLog, WriteStats}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.analysis.{
@@ -560,6 +560,14 @@ object GraftCatalog {
       key: String): Seq[String] =
     props.find(_._1.equalsIgnoreCase(key)).toSeq
       .flatMap(_._2.split(",")).map(_.trim).filter(_.nonEmpty)
+
+  /** The write-time stats a table's properties declare (`statsCols`,
+    * `strStatsCols`, `bloomStatsCols`), plus the write's `audits`. */
+  private[graft] def writeSpec(props: Map[String, String],
+      audits: Seq[TableLog.StagedAudit] = Nil): WriteStats.Spec =
+    WriteStats.Spec(colsProp(props, "statsCols"),
+      colsProp(props, "strStatsCols"), colsProp(props, "bloomStatsCols"),
+      audits = audits)
 
   /** The configured `GraftCatalog` named `name` on this session, if
     * any — the DML face uses this to claim `catalog.ns.table`

@@ -1,8 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
-
-import graft.sinks.TableLog
+import graft.sinks.{TableLog, WriteStats}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{
@@ -19,7 +17,7 @@ import org.apache.spark.sql.connector.write.{
   RowLevelOperationBuilder, RowLevelOperationInfo, SupportsDelta,
   Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.graft.{
-  ParquetRead, ParquetWrite, ParquetWriteFactory, RowFileWriter}
+  ParquetRead, ParquetWrite, ParquetWriteFactory}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -403,7 +401,7 @@ final class GraftRowLevelScan(op: GraftRlOpBase,
   * filter was actually RECEIVED and what it narrowed to — the
   * oracle-green-while-rule-dead failure mode checked structurally.
   * Drain-on-read keeps it bounded; two queue appends per scan is the
-  * whole cost. Same pattern as `TableLog.stagedScanPasses`. */
+  * whole cost. Same pattern as `TableLog.morFilesPlanned`. */
 private[graft] object RowLevelDiag {
   private val events =
     new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -496,63 +494,58 @@ object GraftRowLevelScan {
 
 /** The write half: executor DataWriters land the replacement groups
   * as parquet files under `data/rl-<uuid>/` (lazy-opened — empty
-  * tasks leave no file), and the driver commit swaps them in for the
-  * scanned groups via ONE manifest. Abort deletes whatever was
-  * staged; nothing unmanifested is ever visible. */
+  * tasks leave no file), measuring their stats and CHECK audits as
+  * they write, and the driver commit swaps them in for the scanned
+  * groups via ONE manifest. Abort deletes whatever was staged;
+  * nothing unmanifested is ever visible. */
 final class GraftReplaceDataWrite(op: GraftRowLevelOperation,
     t: GraftTable, info: LogicalWriteInfo) extends Write {
 
   override def toBatch: BatchWrite = new BatchWrite {
     private val setId =
       java.util.UUID.randomUUID().toString.take(8)
+    private def command =
+      op.command().toString.toLowerCase(java.util.Locale.ROOT)
+    // set at execution (createBatchWriterFactory), never at planning:
+    // op.snap would run the KEY-sidecar self-heal from EXPLAIN
+    @volatile private var stats: WriteStats.Spec = WriteStats.Spec()
 
     override def createBatchWriterFactory(
-        pinfo: PhysicalWriteInfo): DataWriterFactory =
-      new GraftBatchWriterFactory(t.path, s"data/rl-$setId",
-        ParquetWrite.factory(SparkSession.active, info.schema()))
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val files = messages.collect {
-        case m: GraftFileMessage if m.rows > 0 => m.relPath }
-      // UPDATE/MERGE rewrites carry NEW row values — CHECK constraints
-      // ride the commit's staged stats pass as audits (ONE scan of the
-      // staged files certifies stats and checks; a DELETE's output is
-      // survivors a prior commit already certified — skipped). A
-      // throw reaches Spark's abort(), which deletes the staging.
-      val audits =
+        pinfo: PhysicalWriteInfo): DataWriterFactory = {
+      val spark = SparkSession.active
+      // UPDATE/MERGE rewrites carry NEW row values — their CHECK
+      // constraints are audited by the writer tasks (a DELETE's output
+      // is survivors a prior commit already certified — skipped); a
+      // violation throws from commit() into Spark's abort()
+      stats = GraftCatalog.writeSpec(t.props,
         if (op.command() != RowLevelOperation.Command.DELETE)
           TableLog.checkAudits(t.path, op.snap.checks,
-            s"row-level ${op.command().toString.toLowerCase(
-              java.util.Locale.ROOT)}")
-        else Nil
-      TableLog.replaceFilesCommit(SparkSession.active, t.path,
-        op.command().toString.toLowerCase(java.util.Locale.ROOT),
-        op.plannedFiles.map(_.path), files.toSeq,
-        GraftCatalog.colsProp(t.props, "statsCols"),
-        GraftCatalog.colsProp(t.props, "strStatsCols"),
-        GraftCatalog.colsProp(t.props, "bloomStatsCols"),
-        op.snap.version, op.pendingDv, audits)
+            s"row-level $command")
+        else Nil)
+      new GraftBatchWriterFactory(t.path, s"data/rl-$setId",
+        ParquetWrite.factory(spark, info.schema()),
+        stats.bind(spark, info.schema()))
+    }
+
+    override def commit(messages: Array[WriterCommitMessage]): Unit = {
+      TableLog.replaceFilesCommit(SparkSession.active, t.path, command,
+        op.plannedFiles.map(_.path), GraftFileMessage.files(messages),
+        stats, op.snap.version, op.pendingDv)
       ()
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      messages.foreach {
-        case m: GraftFileMessage =>
-          val p = Paths.get(t.path, m.relPath)
-          Files.deleteIfExists(p)
-          Files.deleteIfExists(p.resolveSibling(
-            s".${p.getFileName.toString}.crc"))
-        case _ => ()
-      }
+      GraftFileMessage.files(messages).foreach(f =>
+        WriteStats.deleteStaged(s"${t.path}/${f.name}"))
   }
 }
 
 /** The delta write half: executor [[DeltaWriter]]s land DELETE row
   * ids as per-task deletion-vector sidecar shards and INSERT rows as
   * per-task data files (updates arrive pre-split), each with its
-  * write-time stats computed inline — no second pass over the
-  * vectors; the driver commits ONE manifest carrying the sidecars as
-  * `DeleteEntry`s and the new images by reference
+  * write-time stats and CHECK audits measured as it is written — no
+  * second pass over either; the driver commits ONE manifest carrying
+  * the sidecars as `DeleteEntry`s and the new images by reference
   * ([[TableLog.writeDeltaCommit]]). Abort deletes whatever was
   * staged. */
 final class GraftDeltaWrite(op: GraftDeltaOperation, t: GraftTable,
@@ -564,51 +557,45 @@ final class GraftDeltaWrite(op: GraftDeltaOperation, t: GraftTable,
     // def, not val: toBatch may be called during planning, and
     // forcing op.snap there would run the self-heal from EXPLAIN
     private def planVersion = op.snap.version
+    private def command =
+      op.command().toString.toLowerCase(java.util.Locale.ROOT)
+    @volatile private var stats: WriteStats.Spec = WriteStats.Spec()
 
     override def createBatchWriterFactory(
         pinfo: PhysicalWriteInfo): DeltaWriterFactory = {
       val spark = SparkSession.active
+      // delta UPDATE/MERGE lands new images as data files — the writer
+      // tasks audit CHECK constraints over exactly those; a violation
+      // throws from commit() into Spark's abort(), which deletes the
+      // staging. An operation that only deletes writes no data row and
+      // gets an empty row schema.
+      stats =
+        if (info.schema().isEmpty) WriteStats.Spec()
+        else GraftCatalog.writeSpec(t.props,
+          TableLog.checkAudits(t.path, op.snap.checks, s"delta $command"))
       new GraftDeltaWriterFactory(t.path, s"data/rld-$setId",
         ParquetWrite.factory(spark, info.schema()),
-        ParquetWrite.factory(spark, GraftDeltaWrite.dvSchema))
+        stats.bind(spark, info.schema()),
+        ParquetWrite.factory(spark, GraftDeltaWrite.dvSchema),
+        GraftDeltaWrite.dvStats.bind(spark, GraftDeltaWrite.dvSchema))
     }
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val ms = messages.collect { case m: GraftDeltaMessage => m }
-      // delta UPDATE/MERGE lands new images as data files — CHECK
-      // constraints ride the commit's stats pass over exactly those
-      // (deletes add no data files, so the audits see nothing); a
-      // throw reaches Spark's abort(), which deletes the staging
-      val audits = TableLog.checkAudits(t.path, op.snap.checks,
-        s"delta ${op.command().toString.toLowerCase(
-          java.util.Locale.ROOT)}")
-      val dvEntries = ms.filter(_.dvRows > 0).map(m =>
-        TableLog.FileEntry(m.dvRel,
-          Seq(TableLog.FileStat(TableLog.DvPosField, m.posMin, m.posMax)),
-          Seq(TableLog.FileStrStat(TableLog.DvFileField,
-            m.dvFileMin, m.dvFileMax)),
-          0L, m.dvBytes))
+      val ms = messages.toSeq.collect { case m: GraftDeltaMessage => m }
+      val dvs = ms.flatMap(m => Option(m.dv))
       TableLog.writeDeltaCommit(SparkSession.active, t.path,
-        "write_delta_" +
-          op.command().toString.toLowerCase(java.util.Locale.ROOT),
-        planVersion, op.plannedFiles.map(_.path),
-        dvEntries.toSeq, ms.map(_.dvRows).sum,
-        ms.filter(_.dataRows > 0).map(_.dataRel).toSeq,
-        GraftCatalog.colsProp(t.props, "statsCols"),
-        GraftCatalog.colsProp(t.props, "strStatsCols"),
-        GraftCatalog.colsProp(t.props, "bloomStatsCols"), audits)
+        s"write_delta_$command", planVersion,
+        op.plannedFiles.map(_.path),
+        dvs.map(d => GraftDeltaWrite.dvStats.entry(d.name, d)),
+        dvs.map(_.rows).sum, ms.flatMap(m => Option(m.data)), stats)
       ()
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
       messages.foreach {
         case m: GraftDeltaMessage =>
-          Seq(m.dataRel, m.dvRel).filter(_ != null).foreach { rel =>
-            val p = Paths.get(t.path, rel)
-            Files.deleteIfExists(p)
-            Files.deleteIfExists(p.resolveSibling(
-              s".${p.getFileName.toString}.crc"))
-          }
+          Seq(m.data, m.dv).filter(_ != null).foreach(f =>
+            WriteStats.deleteStaged(s"${t.path}/${f.name}"))
         case _ => ()
       }
   }
@@ -623,65 +610,50 @@ object GraftDeltaWrite {
       org.apache.spark.sql.types.StringType, nullable = false),
     StructField(TableLog.DvPosField,
       org.apache.spark.sql.types.LongType, nullable = false)))
+
+  /** The sidecar's stats — the same position range and file-key range
+    * `TableLog.deleteDv` records, which file-identity fencing reads. */
+  private[catalog] val dvStats = WriteStats.Spec(
+    Seq(TableLog.DvPosField), Seq(TableLog.DvFileField))
 }
 
 /** One delta task's staged output: the data-file shard (inserts) and
-  * the deletion-vector shard (deletes), either possibly absent, with
-  * the vector shard's inline write-time stats (the commit builds its
-  * `DeleteEntry` from these — file-identity fencing needs the stored
-  * key range, and a second read of the sidecar just to learn it would
-  * double the write's I/O). */
-final case class GraftDeltaMessage(dataRel: String, dataRows: Long,
-    dvRel: String, dvRows: Long, dvFileMin: String, dvFileMax: String,
-    posMin: Long, posMax: Long, dvBytes: Long)
-    extends WriterCommitMessage
+  * the deletion-vector shard (deletes), each null when absent. The
+  * commit builds its `DeleteEntry` from the vector shard's measured
+  * position and file-key ranges — file-identity fencing needs them,
+  * and a second read of the sidecar just to learn them would double
+  * the write's I/O. */
+final case class GraftDeltaMessage(data: WriteStats.FileSummary,
+    dv: WriteStats.FileSummary) extends WriterCommitMessage
 
 final class GraftDeltaWriterFactory(tablePath: String, setDir: String,
-    dataPw: ParquetWriteFactory, dvPw: ParquetWriteFactory)
+    dataPw: ParquetWriteFactory, dataStats: WriteStats.Bound,
+    dvPw: ParquetWriteFactory, dvStats: WriteStats.Bound)
     extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
-      private val dataRel =
-        f"$setDir/p$partitionId%05d-t$taskId.parquet"
-      private val dvRel =
-        f"$setDir/dv-p$partitionId%05d-t$taskId.parquet"
-      private var dataW: RowFileWriter = null
-      private var dataRows = 0L
-      private var dvW: RowFileWriter = null
-      private var dvRows = 0L
-      private var fMin: String = null
-      private var fMax: String = null
-      private var pMin = Long.MaxValue
-      private var pMax = Long.MinValue
+      private val attempt = (taskId & 0x7fffffffL).toInt
+      private def staged(pw: ParquetWriteFactory, stats: WriteStats.Bound,
+          rel: String) = new WriteStats.StagedFile(pw, stats,
+        s"$tablePath/$rel", rel, partitionId, attempt)
+      private val data = staged(dataPw, dataStats,
+        f"$setDir/p$partitionId%05d-t$taskId.parquet")
+      private val dv = staged(dvPw, dvStats,
+        f"$setDir/dv-p$partitionId%05d-t$taskId.parquet")
+      private val dvRow = new org.apache.spark.sql.catalyst.expressions
+        .GenericInternalRow(2)
 
       /** `id` = the rowId projection in `rowId()` order:
         * (_file, _pos). The stored key is the file's last two path
         * segments — the deletion-vector convention (`DvSet` keys,
-        * `sidecarFences` stat fencing) — and paths are ASCII, so the
-        * inline String min/max agrees with the binary UTF8 order the
-        * fence comparison uses. */
+        * `sidecarFences` stat fencing). */
       override def delete(meta: InternalRow, id: InternalRow): Unit = {
-        val file = TableLog.lastTwo(id.getUTF8String(0).toString)
-        val pos = id.getLong(1)
-        if (dvW == null) {
-          Files.createDirectories(
-            Paths.get(tablePath, dvRel).getParent)
-          dvW = dvPw.open(s"$tablePath/$dvRel", partitionId,
-            (taskId & 0x7fffffffL).toInt)
-        }
-        val row = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(2)
-        row.update(0,
-          org.apache.spark.unsafe.types.UTF8String.fromString(file))
-        row.update(1, pos)
-        dvW.write(row)
-        dvRows += 1
-        if (fMin == null || file < fMin) fMin = file
-        if (fMax == null || file > fMax) fMax = file
-        if (pos < pMin) pMin = pos
-        if (pos > pMax) pMax = pos
+        dvRow.update(0, org.apache.spark.unsafe.types.UTF8String
+          .fromString(TableLog.lastTwo(id.getUTF8String(0).toString)))
+        dvRow.update(1, id.getLong(1))
+        dv.write(dvRow)
       }
 
       override def update(meta: InternalRow, id: InternalRow,
@@ -690,41 +662,13 @@ final class GraftDeltaWriterFactory(tablePath: String, setDir: String,
           "graft delta write: updates are represented as " +
             "delete+insert (representUpdateAsDeleteAndInsert)")
 
-      override def insert(row: InternalRow): Unit = {
-        if (dataW == null) {
-          Files.createDirectories(
-            Paths.get(tablePath, dataRel).getParent)
-          dataW = dataPw.open(s"$tablePath/$dataRel", partitionId,
-            (taskId & 0x7fffffffL).toInt)
-        }
-        dataW.write(row)
-        dataRows += 1
-      }
+      override def insert(row: InternalRow): Unit = data.write(row)
 
-      override def commit(): WriterCommitMessage = {
-        if (dataW != null) dataW.close()
-        if (dvW != null) dvW.close()
-        GraftDeltaMessage(
-          if (dataW != null) dataRel else null, dataRows,
-          if (dvW != null) dvRel else null, dvRows,
-          fMin, fMax, pMin, pMax,
-          if (dvW != null) Files.size(Paths.get(tablePath, dvRel))
-          else 0L)
-      }
+      override def commit(): WriterCommitMessage =
+        GraftDeltaMessage(data.commit(), dv.commit())
 
-      override def abort(): Unit = {
-        if (dataW != null) dataW.close()
-        if (dvW != null) dvW.close()
-        Seq(dataW -> dataRel, dvW -> dvRel).foreach { case (w, rel) =>
-          if (w != null) {
-            val p = Paths.get(tablePath, rel)
-            Files.deleteIfExists(p)
-            Files.deleteIfExists(p.resolveSibling(
-              s".${p.getFileName.toString}.crc"))
-            ()
-          }
-        }
-      }
+      override def abort(): Unit =
+        try data.abort() finally dv.abort()
 
       override def close(): Unit = ()
     }
@@ -733,36 +677,13 @@ final class GraftDeltaWriterFactory(tablePath: String, setDir: String,
 /** Batch twin of the streaming writer factory: one lazily-opened
   * parquet file per task under the write's staging set. */
 final class GraftBatchWriterFactory(tablePath: String, setDir: String,
-    pw: ParquetWriteFactory) extends DataWriterFactory {
+    pw: ParquetWriteFactory, stats: WriteStats.Bound)
+    extends DataWriterFactory {
 
   override def createWriter(partitionId: Int,
-      taskId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val rel =
-        f"$setDir/p$partitionId%05d-t$taskId.parquet"
-      private var rows = 0L
-      private var w: RowFileWriter = null
-      override def write(r: InternalRow): Unit = {
-        if (w == null) {
-          Files.createDirectories(Paths.get(tablePath, rel).getParent)
-          w = pw.open(s"$tablePath/$rel", partitionId,
-            (taskId & 0x7fffffffL).toInt)
-        }
-        w.write(r)
-        rows += 1
-      }
-      override def commit(): WriterCommitMessage = {
-        if (w != null) w.close()
-        GraftFileMessage(rel, rows)
-      }
-      override def abort(): Unit = if (w != null) {
-        w.close()
-        val p = Paths.get(tablePath, rel)
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling(
-          s".${p.getFileName.toString}.crc"))
-        ()
-      }
-      override def close(): Unit = ()
-    }
+      taskId: Long): DataWriter[InternalRow] = {
+    val rel = f"$setDir/p$partitionId%05d-t$taskId.parquet"
+    new GraftFileWriter(new WriteStats.StagedFile(pw, stats,
+      s"$tablePath/$rel", rel, partitionId, (taskId & 0x7fffffffL).toInt))
+  }
 }

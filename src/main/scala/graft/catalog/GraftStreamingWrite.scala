@@ -1,26 +1,26 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths}
-
-import graft.sinks.TableLog
+import graft.sinks.{TableLog, WriteStats}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{
   DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{
   StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.graft.{ParquetWrite, ParquetWriteFactory, RowFileWriter}
+import org.apache.spark.sql.graft.{ParquetWrite, ParquetWriteFactory}
 import org.apache.spark.sql.types.StructType
 
 /** The NATIVE streaming sink: `df.writeStream.toTable("graft.ns.t")`.
   *
   * Each executor-side [[DataWriter]] writes ONE parquet file directly
   * (Spark's own writer stack via the bridge), opened LAZILY on the
-  * first row so empty tasks leave no file; the epoch commit
+  * first row so empty tasks leave no file, and measures the table's
+  * property-declared stats and its CHECK constraints (the set as of
+  * the epoch's start) while writing ([[WriteStats]]); the epoch commit
   * ([[TableLog.commitStreamEpoch]]) manifests ONLY message-listed
-  * files — a zombie or retried task's orphan can never land — derives
-  * the table's property-declared stats over them, and commits ONE
-  * append stamped `<queryId>#<epochId>`. Micro-batch replays after a
+  * files — a zombie or retried task's orphan can never land — and
+  * commits ONE append stamped `<queryId>#<epochId>`. Micro-batch
+  * replays after a
   * crash-restart find their txn in the manifest chain, delete their
   * duplicate files, and return the committed version: the same
   * exactly-once contract as `appendStream`, now through Spark's native
@@ -41,38 +41,46 @@ final class GraftStreamingWrite(path: String, props: Map[String, String],
     * `data/<uuid>` set id. */
   private val runId = java.util.UUID.randomUUID().toString.take(8)
 
+  /** The epoch's stats spec, set when Spark asks for its writer
+    * factory (once per micro-batch, on the driver) and read back by
+    * that epoch's commit. */
+  @volatile private var stats: WriteStats.Spec = WriteStats.Spec()
+
   override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory =
+      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
+    val spark = SparkSession.active
+    stats = GraftCatalog.writeSpec(props, TableLog.checkAudits(path,
+      TableLog.snapshot(path).map(_.checks).getOrElse(Nil),
+      "streaming append"))
     new GraftStreamWriterFactory(path, queryId, runId,
-      ParquetWrite.factory(SparkSession.active, schema))
+      ParquetWrite.factory(spark, schema), stats.bind(spark, schema))
+  }
 
   override def commit(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit = {
-    val files = messages.collect {
-      case m: GraftFileMessage if m.rows > 0 => m.relPath }
-    TableLog.commitStreamEpoch(SparkSession.active, path, files.toSeq,
-      txnId = s"$queryId#$epochId",
-      statsCols = GraftCatalog.colsProp(props, "statsCols"),
-      strStatsCols = GraftCatalog.colsProp(props, "strStatsCols"),
-      bloomStatsCols = GraftCatalog.colsProp(props, "bloomStatsCols"),
-      writeSchema = Some(schema))
+    TableLog.commitStreamEpoch(SparkSession.active, path,
+      GraftFileMessage.files(messages), txnId = s"$queryId#$epochId",
+      stats, schema)
     ()
   }
 
   override def abort(epochId: Long,
       messages: Array[WriterCommitMessage]): Unit =
-    messages.foreach {
-      case m: GraftFileMessage =>
-        val p = Paths.get(path, m.relPath)
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling(
-          s".${p.getFileName.toString}.crc"))
-      case _ => ()
-    }
+    GraftFileMessage.files(messages).foreach(f =>
+      WriteStats.deleteStaged(s"$path/${f.name}"))
 }
 
-final case class GraftFileMessage(relPath: String, rows: Long)
+/** One writer task's staged file (`file.name` is table-relative), or
+  * null when the task wrote no row. */
+final case class GraftFileMessage(file: WriteStats.FileSummary)
     extends WriterCommitMessage
+
+object GraftFileMessage {
+  def files(messages: Array[WriterCommitMessage])
+      : Seq[WriteStats.FileSummary] =
+    messages.toSeq.collect {
+      case GraftFileMessage(f) if f != null => f }
+}
 
 /** Serializable; ships the driver-captured parquet conf to executors.
   * File names carry (run, epoch, partition, task-attempt): two
@@ -81,37 +89,24 @@ final case class GraftFileMessage(relPath: String, rows: Long)
   * from colliding with the first run's files. Losers stay
   * unmanifested. */
 final class GraftStreamWriterFactory(tablePath: String, queryId: String,
-    runId: String, pw: ParquetWriteFactory)
+    runId: String, pw: ParquetWriteFactory, stats: WriteStats.Bound)
     extends StreamingDataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new DataWriter[InternalRow] {
-      private val rel =
-        f"data/stream-$queryId-e$epochId%06d/p$partitionId%05d-t$taskId-$runId.parquet"
-      private var rows = 0L
-      private var w: RowFileWriter = null
-      override def write(r: InternalRow): Unit = {
-        if (w == null) {
-          Files.createDirectories(Paths.get(tablePath, rel).getParent)
-          w = pw.open(s"$tablePath/$rel", partitionId,
-            (taskId & 0x7fffffffL).toInt)
-        }
-        w.write(r)
-        rows += 1
-      }
-      override def commit(): WriterCommitMessage = {
-        if (w != null) w.close()
-        GraftFileMessage(rel, rows)
-      }
-      override def abort(): Unit = if (w != null) {
-        w.close()
-        val p = Paths.get(tablePath, rel)
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling(
-          s".${p.getFileName.toString}.crc"))
-        ()
-      }
-      override def close(): Unit = ()
-    }
+      epochId: Long): DataWriter[InternalRow] = {
+    val rel =
+      f"data/stream-$queryId-e$epochId%06d/p$partitionId%05d-t$taskId-$runId.parquet"
+    new GraftFileWriter(new WriteStats.StagedFile(pw, stats,
+      s"$tablePath/$rel", rel, partitionId, (taskId & 0x7fffffffL).toInt))
+  }
+}
+
+/** The DataWriter face of one task's [[WriteStats.StagedFile]], shared
+  * by the streaming sink and the row-level ReplaceData write. */
+final class GraftFileWriter(f: WriteStats.StagedFile)
+    extends DataWriter[InternalRow] {
+  override def write(r: InternalRow): Unit = f.write(r)
+  override def commit(): WriterCommitMessage = GraftFileMessage(f.commit())
+  override def abort(): Unit = f.abort()
+  override def close(): Unit = ()
 }

@@ -264,9 +264,9 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
         .asInstanceOf[StructType].fieldNames.contains("_version"))
 
   /** min/max of `_version`: exact over the live files' commit versions
-    * — every manifest entry has ≥1 row (zero-row files are dropped at
-    * write), but a pending MOR sidecar could have emptied the extreme
-    * file, so bail like `statExtreme` does. */
+    * — every manifest entry has ≥1 row (a writer task opens its file
+    * on its first row), but a pending MOR sidecar could have emptied
+    * the extreme file, so bail like `statExtreme` does. */
   private def verExtreme(s: TableLog.Snapshot, isMin: Boolean)
       : Option[Any] = {
     if (s.dels.nonEmpty) return None

@@ -554,9 +554,6 @@ object TableLog {
       renderManifest(stamped).getBytes(UTF_8))
   }
 
-  /** Write `df` as a new immutable data-file set under `<table>/data/`,
-    * returning (relative file paths, footer row count). Never visible
-    * until a manifest referencing it commits. */
   // ---- manifest bloom stats: point-lookup pruning where range stats
   // are blind. A [min,max] range on an UNCLUSTERED high-cardinality key
   // spans nearly the whole domain in every file, so readWhere prunes
@@ -582,8 +579,8 @@ object TableLog {
 
   /** The k bit positions for probe value `v` under modulus `m`,
     * computed THROUGH a one-row Spark plan so the hash is bit-identical
-    * to the builder's distributed `xxhash64` (driver-reimplementing the
-    * hash would silently diverge on type widening). Metadata-sized
+    * to the writer tasks' `xxhash64` (driver-reimplementing the hash
+    * would silently diverge on type widening). Metadata-sized
     * work; `m`/`k` come from the STAT being probed, so files written
     * under any historical sizing keep pruning correctly. */
   private def bloomPositions(spark: SparkSession, v: Any, m: Int,
@@ -595,11 +592,12 @@ object TableLog {
     (0 until k).map(r.getInt)
   }
 
-  private def renderBloom(positions: Iterable[Int]): String = {
-    val bits = new java.util.BitSet(bloomM)
-    positions.foreach(bits.set)
-    java.util.Base64.getEncoder.encodeToString(bits.toByteArray)
-  }
+  /** The manifest entry for one file's bloom bit set on column `c`. */
+  private[graft] def bloomStat(c: String, bits: java.util.BitSet)
+      : FileStrStat =
+    FileStrStat(bloomStatName(c),
+      java.util.Base64.getEncoder.encodeToString(bits.toByteArray),
+      s"$bloomM,$bloomK")
 
   private def bloomMayContain(b64: String, positions: Seq[Int]): Boolean = {
     val bits = java.util.BitSet.valueOf(
@@ -607,13 +605,12 @@ object TableLog {
     positions.forall(bits.get)
   }
 
-  /** A violation-counting aggregate that RIDES the staged-file stats
-    * pass (`statEntriesFor`), so a constrained write costs ONE scan of
-    * the staged files instead of stats + a second enforcement read:
-    * `bad` is TRUE for a violating row; `msg` renders the refusal for
-    * a nonzero count (thrown as the usual require/IllegalArgument).
-    * Used for CHECK constraints on every staged-output face and for
-    * replaceWhere's slice-ownership predicate. */
+  /** A per-row violation flag the writer tasks count while they write
+    * (`bad` is TRUE for a violating row; `msg` renders the refusal for
+    * a nonzero total, thrown as the usual require/IllegalArgument), so
+    * a constrained write audits exactly the rows it writes, in the
+    * same pass. Used for CHECK constraints on every face that writes a
+    * new frame and for replaceWhere's slice-ownership predicate. */
   private[graft] final case class StagedAudit(bad: Column,
       msg: Long => String)
 
@@ -629,6 +626,15 @@ object TableLog {
         s"$bad row(s) — not committing") }
   }
 
+  /** Write `df` as a new immutable data-file set under
+    * `<table>/data/<setId>/`, returning its manifest entries and row
+    * count. Never visible until a manifest referencing it commits.
+    * Every entry's rows, bytes, range, null-count and bloom stats come
+    * from the write job itself ([[WriteStats]]), and the `audits` are
+    * counted over exactly the rows written; a violation refuses the
+    * write. On ANY failure — a failed write job or a refusal — the
+    * whole set directory is deleted before the rethrow, so a refused
+    * write leaves the table byte-identical. */
   private def writeDataFiles(spark: SparkSession, table: String,
       df: DataFrame, statsCols: Seq[String],
       strStatsCols: Seq[String] = Nil,
@@ -636,50 +642,39 @@ object TableLog {
       derivedStats: Seq[(String, Column)] = Nil,
       audits: Seq[StagedAudit] = Nil): (Seq[FileEntry], Long) = {
     val setId = java.util.UUID.randomUUID().toString
-    val outDir = s"$table/data/$setId"
-    val rels = writeStagedFiles(spark, outDir, df)
-      .map(n => s"data/$setId/$n")
-    try statEntriesFor(spark, table, rels, statsCols, strStatsCols,
-      bloomCols, derivedStats, audits, writeSchema = Some(df.schema))
-    catch { case e: Throwable if audits.nonEmpty =>
-      // a refused audited write must leave no staged orphans — this
-      // call owns the staging dir, so it cleans before rethrowing
-      rels.foreach { rel =>
-        val p = Paths.get(table, rel)
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
-      }
+    val outDir = Paths.get(table, "data", setId)
+    val spec = WriteStats.Spec(statsCols, strStatsCols, bloomCols,
+      derivedStats, audits)
+    try {
+      val files = writeStagedFiles(spark, outDir.toString, df, spec)
+      spec.enforce(files)
+      val entries = files.map(s => spec.entry(s"data/$setId/${s.name}", s))
+      (entries, entries.map(_.rows).sum)
+    } catch { case e: Throwable =>
+      org.apache.commons.io.FileUtils.deleteQuietly(outDir.toFile)
       throw e
     }
   }
 
   /** Direct single-pass staged write (guide §1.2/§5, the batch twin of
-    * the streaming sink's DataWriters): each task writes ONE parquet
-    * file straight into the commit's private `data/<setId>/` dir
-    * through the same writer stack a batch `df.write` uses
-    * (ParquetWrite bridge — bytes identical), opened LAZILY on the
-    * first row so empty tasks leave no file. This skips the
-    * FileOutputCommitter protocol entirely — no `_temporary` staging,
-    * no task/job-commit renames, no `_SUCCESS`, no write-command
-    * re-planning — a fixed 50–150 ms of driver time per commit on the
-    * lifecycle faces, and on an object store a rename-storm per
-    * commit. Atomicity is unchanged because the set dir is INVISIBLE
-    * until the manifest CAS publishes it, and only files reported by
-    * WINNING task attempts are returned (a failed attempt deletes its
-    * partial file in its finally; a killed speculative loser's file
-    * stays unmanifested garbage — the same class as a CAS loser's
-    * write). `spark.graft.write.direct=false` restores the committer
-    * path; parity of the two paths is spec-pinned. */
+    * the streaming sink's DataWriters): ONE Spark job in which each task
+    * writes one parquet file straight into `outDir` through the same
+    * writer stack a batch `df.write` uses (ParquetWrite bridge — bytes
+    * identical), opened LAZILY on the first row so empty tasks leave no
+    * file, and measures `stats` over the rows as it writes them. No
+    * FileOutputCommitter protocol — no `_temporary` staging, no
+    * task/job-commit renames, no `_SUCCESS`, no write-command
+    * re-planning. Atomicity is unchanged because the set dir is
+    * INVISIBLE until the manifest CAS publishes it, and only files
+    * reported by WINNING task attempts are returned (a failed attempt
+    * deletes its partial file; a killed speculative loser's file stays
+    * unmanifested garbage — the same class as a CAS loser's write).
+    * Returns the winners' summaries, sorted by file name. */
   private def writeStagedFiles(spark: SparkSession, outDir: String,
-      df: DataFrame): Seq[String] = {
-    if (!spark.conf.get("spark.graft.write.direct", "true").toBoolean) {
-      df.write.parquet(outDir)
-      return listDir(Paths.get(outDir))
-        .map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet"))
-        .sorted
-    }
+      df: DataFrame, stats: WriteStats.Spec = WriteStats.Spec())
+      : Seq[WriteStats.FileSummary] = {
     val pw = org.apache.spark.sql.graft.ParquetWrite.factory(spark, df.schema)
+    val bound = stats.bind(spark, df.schema)
     Files.createDirectories(Paths.get(outDir))
     val rdd = df.queryExecution.toRdd
     // a provably-empty write (0 partitions after AQE finalization, e.g.
@@ -689,455 +684,21 @@ object TableLog {
       rdd,
       (ctx: org.apache.spark.TaskContext,
           it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        if (!it.hasNext) null
-        else {
-          // attempt ids make retried/speculative attempts collision-free;
-          // only the winner's name is returned to the driver
-          val name = f"part-${ctx.partitionId()}%05d-" +
-            s"a${ctx.attemptNumber()}-t${ctx.taskAttemptId()}.parquet"
-          val abs = s"$outDir/$name"
-          var ok = false
-          val w = pw.open(abs, ctx.partitionId(), ctx.attemptNumber())
-          try {
-            while (it.hasNext) w.write(it.next())
-            w.close()
-            ok = true
-          } finally if (!ok) {
-            try w.close() catch { case _: Throwable => () }
-            val p = Paths.get(abs)
-            Files.deleteIfExists(p)
-            Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
-            ()
-          }
-          name
-        }
+        // attempt ids make retried/speculative attempts collision-free;
+        // only the winner's summary is returned to the driver
+        val name = f"part-${ctx.partitionId()}%05d-" +
+          s"a${ctx.attemptNumber()}-t${ctx.taskAttemptId()}.parquet"
+        val f = new WriteStats.StagedFile(pw, bound, s"$outDir/$name",
+          name, ctx.partitionId(), ctx.attemptNumber())
+        var ok = false
+        try {
+          while (it.hasNext) f.write(it.next())
+          val s = f.commit()
+          ok = true
+          s
+        } finally if (!ok) f.abort()
       })
-    written.filter(_ != null).sorted.toSeq
-  }
-
-  /** The manifest-entry pass over ALREADY-WRITTEN files (table-relative
-    * paths): per-file footer row counts, zero-row file deletion, the
-    * stat/bloom aggregation passes, write-time bytes. Shared by
-    * `writeDataFiles` (which just wrote them) and the streaming epoch
-    * commit (whose executor-side DataWriters wrote them — and whose
-    * path list comes from commit MESSAGES, so a zombie task's orphan
-    * file is never manifested). */
-  /** Past this many files in one commit, per-file row counts come
-    * from the distributed stats aggregate instead of driver-side
-    * footer reads (see the comment inside). Var for test override. */
-  private[graft] var footerCountThreshold: Int = 1024
-
-  /** Staged-file DATA scans (stats/audit aggregate passes) — test
-    * observability: with [[StagedAudit]]s riding the stats pass, a
-    * constrained commit must cost exactly ONE scan of its staged
-    * files (pinned as a counter delta, like `morFilesPlanned`). */
-  private[graft] val stagedScanPasses =
-    new java.util.concurrent.atomic.AtomicLong
-
-  private def statEntriesFor(spark: SparkSession, table: String,
-      relPaths: Seq[String], statsCols: Seq[String],
-      strStatsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil,
-      derivedStats: Seq[(String, Column)] = Nil,
-      audits: Seq[StagedAudit] = Nil,
-      writeSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : (Seq[FileEntry], Long) = {
-    import org.apache.spark.sql.functions.{col, input_file_name, max, min}
-    // the just-written files' schema is the writer's schema — reading
-    // with it skips a per-commit parquet schema-inference Spark job
-    // (pure metadata recomputation ahead of each stats/audit pass)
-    def readStaged(paths: Seq[String]): DataFrame =
-      writeSchema.map(s => spark.read.schema(s))
-        .getOrElse(spark.read).parquet(paths: _*)
-    val relByName = relPaths.map(p => p.split("/").last -> p).toMap
-    require(relByName.size == relPaths.size,
-      s"statEntriesFor($table): duplicate file leaf names in $relPaths")
-    val allNames = relPaths.map(_.split("/").last).sorted
-    // Per-file row counts from the parquet FOOTERS, driver-side (the
-    // files were just written, so the metadata is OS-cache hot; this
-    // also replaces the whole-directory count() job). Spark's writer
-    // creates part files EAGERLY, so a task whose input rows were all
-    // filtered away (e.g. a delete-rewrite task whose file fell
-    // entirely inside the deleted range) leaves a ZERO-ROW file — and
-    // the stats pass below groups by input_file_name, in which an
-    // empty file has no group, so it would land in the manifest
-    // STAT-LESS. Stat absence means "keep" to every pruner, so one
-    // such entry silently defeats every future stat prune and makes
-    // disjoint-range no-op deletes impossible. Zero-row files are
-    // deleted here and never manifested.
-    // bounded-parallel: a large append commits thousands of part
-    // files, and on an object store each footer open is a ~10-50 ms
-    // round trip — serial reads would put minutes of driver stall on
-    // every big commit. Past `footerCountThreshold` files even the
-    // pool is a driver stall (100k files × ~30 ms / 16 threads ≈
-    // 3 min), so the count(*) rides the DISTRIBUTED stats aggregate
-    // instead (one grouped pass, zero extra jobs when stat columns
-    // are declared); the zero-row set is then `listing − aggregate
-    // groups` (an empty file contributes no group).
-    val hconf = spark.sessionState.newHadoopConf()
-    // per-file min/max for the stat columns (driver result is
-    // files×cols — metadata-sized). Long and string space; derived
-    // stats (named long expressions over the written columns, e.g. the
-    // z-order value a layout rewrite clustered by) ride the same pass.
-    // per-column non-null counts ride the same pass APPENDED (base
-    // offsets of the range stats stay put): nulls = fileRows − count,
-    // the exactness witness the metadata-only DELETE needs
-    val statAggs = statsCols.flatMap(c => Seq(
-      min(col(c).cast("long")).as(s"mn_$c"),
-      max(col(c).cast("long")).as(s"mx_$c"))) ++
-      strStatsCols.flatMap(c => Seq(
-        min(col(c).cast("string")).as(s"smn_$c"),
-        max(col(c).cast("string")).as(s"smx_$c"))) ++
-      derivedStats.zipWithIndex.flatMap { case ((_, e), i) => Seq(
-        min(e.cast("long")).as(s"dmn_$i"),
-        max(e.cast("long")).as(s"dmx_$i")) } ++
-      statsCols.zipWithIndex.map { case (c, i) =>
-        org.apache.spark.sql.functions.count(col(c)).as(s"cnt_$i") } ++
-      // violation counts per audit, APPENDED so every base offset of
-      // the stat parse stays put; totals are summed across files and
-      // enforced after the pass (one scan certifies stats AND checks)
-      audits.zipWithIndex.map { case (a, i) =>
-        import org.apache.spark.sql.functions.{sum, when, lit}
-        sum(when(a.bad, 1L).otherwise(0L)).as(s"au_$i") }
-    // one grouped-agg row parsed into (long stats, string stats,
-    // per-column NON-NULL counts); `base` = the ordinal of the first
-    // stat column in the row. Null counts can only be derived once the
-    // file's TOTAL row count is known (nulls = rows − nonNull), so the
-    // non-null counts travel as their own map and `withNulls` joins
-    // them in at entry-build time — FileStat.nulls never carries an
-    // intermediate encoding. An all-null file has no range in either
-    // space — omit the stat (readers keep stat-less files, so absence
-    // is safe) instead of NPE-ing on getLong.
-    type ParsedStats = (Seq[FileStat], Seq[FileStrStat], Map[String, Long])
-    def parseStats(r: org.apache.spark.sql.Row, base: Int): ParsedStats = {
-      val off = base + 2 * statsCols.size
-      val doff = off + 2 * strStatsCols.size
-      val coff = doff + 2 * derivedStats.size
-      (statsCols.zipWithIndex.flatMap { case (c, i) =>
-        if (r.isNullAt(base + 2 * i)) None
-        else Some(FileStat(c, r.getLong(base + 2 * i),
-          r.getLong(base + 2 * i + 1)))
-      }.toSeq ++ derivedStats.zipWithIndex.flatMap { case ((n, _), i) =>
-        if (r.isNullAt(doff + 2 * i)) None
-        else Some(FileStat(n, r.getLong(doff + 2 * i),
-          r.getLong(doff + 2 * i + 1)))
-      },
-        strStatsCols.zipWithIndex.flatMap { case (c, i) =>
-          if (r.isNullAt(off + 2 * i)) None
-          else Some(FileStrStat(c, r.getString(off + 2 * i),
-            r.getString(off + 2 * i + 1)))
-        }.toSeq,
-        statsCols.zipWithIndex.map { case (c, i) =>
-          c -> r.getLong(coff + i) }.toMap)
-    }
-    // nulls = rows − nonNull for the declared stat columns (derived
-    // stats carry no count agg and stay at the legacy "unknown")
-    def withNulls(ls: Seq[FileStat], nonNull: Map[String, Long],
-        fileRows: Long): Seq[FileStat] =
-      ls.map(st => nonNull.get(st.col)
-        .map(nn => st.copy(nulls = fileRows - nn)).getOrElse(st))
-    // audit violation counts live AFTER every stat/count column; summed
-    // across the per-file rows of whichever branch ran the pass
-    val auditTotals = new Array[Long](audits.size)
-    def takeAudits(rs: Iterable[org.apache.spark.sql.Row], base: Int)
-        : Unit = {
-      val off = base + 2 * statsCols.size + 2 * strStatsCols.size +
-        2 * derivedStats.size + statsCols.size
-      rs.foreach(r => audits.indices.foreach(i =>
-        if (!r.isNullAt(off + i)) auditTotals(i) += r.getLong(off + i)))
-    }
-    val distributedCount = allNames.size > footerCountThreshold
-    // Footer-harvested stats (small commits): the footer this pass
-    // ALREADY opens for the row count also carries exact per-column
-    // min/max/null-count statistics for plain signed INT32/INT64
-    // columns — the very numbers the distributed stats aggregate
-    // recomputes with a whole Spark job per commit. Below the
-    // footer-count threshold, when every long stat column is a plain
-    // signed integer (no DATE/TIMESTAMP/DECIMAL logical annotation —
-    // their cast-to-long semantics differ from the raw physical value),
-    // every string stat column is BINARY/UTF8 (whose footer min/max
-    // comparator is the same unsigned-lexicographic order Spark's
-    // StringType min/max uses), and the writer recorded null counts,
-    // the stats come from the footers and the aggregate job is
-    // SKIPPED — one fewer Spark job (plus its planning gap) on every
-    // small commit, which at sf0.1 is ~half of a lifecycle query's
-    // per-commit cost. Derived stats, audits (constraint checks) and
-    // any ineligible column fall back to the aggregate pass unchanged;
-    // the distributed path past the threshold is untouched (footer
-    // reads there would be the driver stall the threshold exists to
-    // avoid). Parity with the aggregate pass (same FileStat/FileStrStat
-    // and null accounting) is spec-pinned.
-    // String caveat: parquet-mr OMITS binary chunk stats outright when
-    // min+max exceed its 4 KB cap (absence → the usual distrust
-    // fallback below), but a configured `parquet.statistics.truncate
-    // .length` would record valid-bound PREFIXES instead — pruning-safe
-    // but not value-exact — so string harvesting is disabled whenever
-    // that key is set.
-    val strTruncConfigured =
-      hconf.get("parquet.statistics.truncate.length") != null
-    val footerStatsWanted = !distributedCount &&
-      (statsCols.nonEmpty || strStatsCols.nonEmpty) &&
-      (strStatsCols.isEmpty || !strTruncConfigured) &&
-      derivedStats.isEmpty && audits.isEmpty && bloomCols.isEmpty
-    // per long column (col, min, max, nonNull) and per string column
-    // (col, min, max, nonNull); None = some column ineligible
-    type Harvest = (Long, Option[(Seq[(String, Long, Long, Long)],
-      Seq[(String, String, String, Long)])])
-    // UTF8String.compareTo semantics: unsigned byte-wise, then length —
-    // identical to parquet's UNSIGNED lexicographic BINARY comparator
-    def utf8Cmp(a: Array[Byte], b: Array[Byte]): Int = {
-      val n = math.min(a.length, b.length)
-      var i = 0
-      while (i < n) {
-        val d = (a(i) & 0xff) - (b(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      a.length - b.length
-    }
-    def harvestOf(n: String): Harvest = {
-      import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      import scala.jdk.CollectionConverters._
-      val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(
-            s"$table/${relByName(n)}"), hconf))
-      try {
-        val rows = rdr.getRecordCount
-        if (!footerStatsWanted) return (rows, None)
-        // explicit zero-row guard: an empty file has no blocks, so the
-        // fold below would yield ok=true with nonNull=0 — harmless only
-        // because zero-row files are dropped from `names` before
-        // statsByName consults harvests. Returning None here makes the
-        // footer-stats skip independent of that upstream filter.
-        if (rows == 0L) return (rows, None)
-        val blocks = rdr.getFooter.getBlocks.asScala.toSeq
-        var ok = true
-        val acc = statsCols.map { c =>
-          var mn = Long.MaxValue
-          var mx = Long.MinValue
-          var nonNull = 0L
-          blocks.foreach { b =>
-            b.getColumns.asScala
-              .find(_.getPath.toDotString == c) match {
-              case None => ok = false
-              case Some(cc) =>
-                val pt = cc.getPrimitiveType
-                val typeOk = (pt.getPrimitiveTypeName ==
-                    PrimitiveTypeName.INT32 ||
-                  pt.getPrimitiveTypeName == PrimitiveTypeName.INT64) &&
-                  (pt.getLogicalTypeAnnotation match {
-                    case null => true
-                    case i: LogicalTypeAnnotation
-                        .IntLogicalTypeAnnotation => i.isSigned
-                    case _ => false
-                  })
-                val st = cc.getStatistics
-                if (!typeOk || st == null || !st.isNumNullsSet) ok = false
-                else {
-                  nonNull += cc.getValueCount - st.getNumNulls
-                  if (st.hasNonNullValue) st match {
-                    case l: org.apache.parquet.column.statistics
-                        .LongStatistics =>
-                      mn = math.min(mn, l.getMin)
-                      mx = math.max(mx, l.getMax)
-                    case i: org.apache.parquet.column.statistics
-                        .IntStatistics =>
-                      mn = math.min(mn, i.getMin.toLong)
-                      mx = math.max(mx, i.getMax.toLong)
-                    case _ => ok = false
-                  }
-                }
-            }
-          }
-          // claimed non-null values but no recorded range: distrust
-          if (nonNull > 0 && mn > mx) ok = false
-          (c, mn, mx, nonNull)
-        }
-        val sacc = strStatsCols.map { c =>
-          var mn: Array[Byte] = null
-          var mx: Array[Byte] = null
-          var nonNull = 0L
-          blocks.foreach { b =>
-            b.getColumns.asScala
-              .find(_.getPath.toDotString == c) match {
-              case None => ok = false
-              case Some(cc) =>
-                val pt = cc.getPrimitiveType
-                val typeOk = pt.getPrimitiveTypeName ==
-                    PrimitiveTypeName.BINARY &&
-                  (pt.getLogicalTypeAnnotation match {
-                    case _: LogicalTypeAnnotation
-                        .StringLogicalTypeAnnotation => true
-                    case _ => false
-                  })
-                val st = cc.getStatistics
-                if (!typeOk || st == null || !st.isNumNullsSet) ok = false
-                else {
-                  nonNull += cc.getValueCount - st.getNumNulls
-                  if (st.hasNonNullValue) st match {
-                    case bs: org.apache.parquet.column.statistics
-                        .BinaryStatistics =>
-                      val lo = bs.genericGetMin.getBytes
-                      val hi = bs.genericGetMax.getBytes
-                      if (mn == null || utf8Cmp(lo, mn) < 0) mn = lo
-                      if (mx == null || utf8Cmp(hi, mx) > 0) mx = hi
-                    case _ => ok = false
-                  }
-                }
-            }
-          }
-          // claimed non-null values but no recorded range: distrust
-          // (also the oversized-value case — parquet omits the stats)
-          if (nonNull > 0 && mn == null) ok = false
-          (c,
-            if (mn == null) null
-            else new String(mn, java.nio.charset.StandardCharsets.UTF_8),
-            if (mx == null) null
-            else new String(mx, java.nio.charset.StandardCharsets.UTF_8),
-            nonNull)
-        }
-        (rows, if (ok) Some((acc, sacc)) else None)
-      } finally rdr.close()
-    }
-    def countOf(n: String): Long = harvestOf(n)._1
-    var harvests: Map[String, Harvest] = Map.empty
-    val (countByName: Map[String, Long],
-        distStats: Map[String, ParsedStats]) =
-      if (distributedCount) {
-        import org.apache.spark.sql.functions.{count, lit}
-        val aggs = (count(lit(1)).as("__n") +: statAggs)
-        stagedScanPasses.incrementAndGet()
-        val rs = readStaged(relPaths.map(p => s"$table/$p"))
-          .groupBy(input_file_name().as("__f"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect()
-        takeAudits(rs, 2)
-        val counted = rs.map(r =>
-          r.getString(0).split("/").last -> r.getLong(1)).toMap
-        // files with no aggregate group are deleted as empty below, so
-        // a group keyed by a basename outside the just-written set —
-        // URI-encoding drift, an alien path in the scan — must fail
-        // LOUDLY here: mapping it to getOrElse-0 would physically
-        // delete a non-empty data file (the footer path fails loudly
-        // on the same shape by construction)
-        val unknown = counted.keySet -- allNames
-        require(unknown.isEmpty,
-          s"statEntriesFor($table): distributed row-count groups " +
-            s"match no just-written file: ${unknown.take(5).mkString(",")}")
-        // "no group" usually means a zero-row part file — but prove it
-        // with the file's own footer before the caller deletes it (the
-        // claimed-empty set is small, so this is a handful of
-        // metadata reads, not a driver stall)
-        allNames.filterNot(counted.contains).foreach { n =>
-          val c = countOf(n)
-          require(c == 0L,
-            s"statEntriesFor($table): $n has $c rows in its footer " +
-              "but produced no distributed aggregate group — the " +
-              "scan missed it; refusing to delete it as empty")
-        }
-        (allNames.map(n => n -> counted.getOrElse(n, 0L)).toMap,
-          if (statAggs.isEmpty) Map.empty[String, ParsedStats]
-          else rs.map(r =>
-            r.getString(0).split("/").last -> parseStats(r, 2)).toMap)
-      } else {
-        val hs =
-          if (allNames.size <= 4) allNames.map(n => n -> harvestOf(n)).toMap
-          else {
-            val pool = java.util.concurrent.Executors.newFixedThreadPool(16)
-            try allNames.map(n => n -> pool.submit(
-                new java.util.concurrent.Callable[Harvest] {
-                  override def call(): Harvest = harvestOf(n)
-                }))
-              .map { case (n, f) => n -> f.get() }.toMap
-            finally pool.shutdown()
-          }
-        harvests = hs
-        (hs.map { case (n, (c, _)) => n -> c },
-          Map.empty[String, ParsedStats])
-      }
-    val names = allNames.filter(n => countByName(n) > 0L)
-    allNames.filterNot(countByName(_) > 0L).foreach { n =>
-      val p = Paths.get(table, relByName(n))
-      Files.deleteIfExists(p)
-      Files.deleteIfExists(p.resolveSibling(s".$n.crc"))
-    }
-    val rows = countByName.valuesIterator.sum
-    val livePaths = names.map(n => s"$table/${relByName(n)}")
-    val statsByName: Map[String, ParsedStats] =
-      if (statAggs.isEmpty || names.isEmpty) Map.empty
-      else if (distributedCount) distStats
-      else if (footerStatsWanted &&
-          names.forall(n => harvests.get(n).exists(_._2.isDefined)))
-        // the footer harvest above covered every live file and column:
-        // the stats aggregate job is skipped outright (same FileStat /
-        // FileStrStat / non-null accounting — an all-null column gets
-        // NO range stat, exactly like the aggregate's null min)
-        names.map { n =>
-          val (cols, scols) = harvests(n)._2.get
-          n -> ((cols.collect { case (c, mn, mx, nn) if nn > 0 =>
-            FileStat(c, mn, mx) },
-            scols.collect { case (c, mn, mx, nn) if nn > 0 =>
-              FileStrStat(c, mn, mx) },
-            cols.map { case (c, _, _, nn) => c -> nn }.toMap)
-            : ParsedStats)
-        }.toMap
-      else {
-        stagedScanPasses.incrementAndGet()
-        val rs = readStaged(livePaths)
-          .groupBy(input_file_name().as("__f"))
-          .agg(statAggs.head, statAggs.tail: _*)
-          .collect()
-        takeAudits(rs, 1)
-        rs.map(r => r.getString(0).split("/").last -> parseStats(r, 1))
-          .toMap
-      }
-    // enforce the audits BEFORE anything references the entries —
-    // caller-side staging cleanup (writeDataFiles / Spark abort())
-    // runs on the throw, so a violating batch never reaches a manifest
-    audits.zipWithIndex.foreach { case (a, i) =>
-      require(auditTotals(i) == 0L, a.msg(auditTotals(i))) }
-    // per-file bloom bitsets: one distributed pass per bloom column,
-    // collect_set of ≤ bloomM bit positions per file (bounded driver
-    // result: files × bloomM ints per commit's file set)
-    val bloomByName: Map[String, Seq[FileStrStat]] =
-      if (bloomCols.isEmpty || names.isEmpty) Map.empty
-      else {
-        import org.apache.spark.sql.functions.{collect_set, lit, pmod, xxhash64}
-        val scan = readStaged(livePaths)
-        bloomCols.flatMap { c =>
-          val aggs = (0 until bloomK).map(i =>
-            collect_set(pmod(xxhash64(lit(i), col(c)), lit(bloomM.toLong))
-              .cast("int")).as(s"p$i"))
-          scan.groupBy(input_file_name().as("__f"))
-            .agg(aggs.head, aggs.tail: _*)
-            .collect()
-            .flatMap { r =>
-              val pos = (1 to bloomK).flatMap(i =>
-                r.getSeq[Int](i)).distinct
-              // saturated bloom (high-NDV file): omit — it would prune
-              // ~nothing and absence keeps the file
-              if (pos.size.toDouble / bloomM > bloomMaxFill) None
-              else Some(r.getString(0).split("/").last ->
-                FileStrStat(bloomStatName(c), renderBloom(pos),
-                  s"$bloomM,$bloomK"))
-            }
-        }.groupBy(_._1).map { case (n, xs) => n -> xs.map(_._2).toSeq }
-      }
-    (names.map { n =>
-      val (ls, ss, nonNull) =
-        statsByName.getOrElse(n, (Nil, Nil, Map.empty[String, Long]))
-      // size + row count recorded NOW, while the writer already holds
-      // the file's metadata hot — every later footprint or row-count
-      // question (computeStats, detail, compaction sizing, the
-      // metadata-only DELETE's accounting) becomes a manifest lookup
-      FileEntry(relByName(n), withNulls(ls, nonNull, countByName(n)),
-        ss ++ bloomByName.getOrElse(n, Nil),
-        bytes = try Files.size(Paths.get(table, relByName(n)))
-          catch { case _: java.io.IOException => -1L },
-        rows = countByName(n))
-    }, rows)
+    written.filter(_ != null).sortBy(_.name).toSeq
   }
 
   /** Read the table at its latest version (or a pinned one): a parquet
@@ -1990,13 +1551,14 @@ object TableLog {
     // manifest chain IS the transaction log. O(versions) scan; a
     // long-running ingest can vacuum old versions to bound it.
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    // CHECK constraints gate the batch BEFORE any data file is written
-    // (snapshot-isolated: the set as of the append's start)
-    snapshot(table).foreach(b =>
-      enforceChecks(spark, table, b.checks, df, "append"))
+    // CHECK constraints are audited over the rows the write job writes
+    // (snapshot-isolated: the set as of the append's start); a
+    // violation drops the staged set before any manifest sees it
+    val audits = snapshot(table).map(b =>
+      checkAudits(table, b.checks, "append")).getOrElse(Nil)
     val (newFiles, newRows) =
       writeDataFiles(spark, table, df, statsCols, strStatsCols,
-        bloomStatsCols)
+        bloomStatsCols, audits = audits)
     var committed = -1L
     while (committed < 0) {
       val base = snapshot(table)
@@ -2210,9 +1772,11 @@ object TableLog {
 
   /** One aggregate pass over `df` counting violations per active CHECK
     * constraint (violation = expression FALSE; NULL passes — SQL CHECK
-    * semantics); any violation refuses the whole write with the
-    * constraint's name and count. O(batch), map-side combined, before
-    * a single data file is referenced by a manifest. */
+    * semantics); any violation refuses with the constraint's name and
+    * count. Only for rows that are NOT the rows being written — the
+    * existing data at ADD CONSTRAINT, a restore target, mergeUpsert's
+    * source; a face that writes its frame audits it in the write job
+    * instead ([[checkAudits]]). */
   private def enforceChecks(spark: SparkSession, table: String,
       checks: Seq[(String, String)], df: DataFrame, what: String): Unit = {
     if (checks.isEmpty) return
@@ -2227,18 +1791,12 @@ object TableLog {
     }
   }
 
-  // (the staged-output twin of enforceChecks is gone: the faces whose
-  //  rows are landed before the driver sees a frame — the row-level
-  //  ReplaceData/WriteDelta commits, replaceWhere's slice, an INSERT
-  //  OVERWRITE — now ride their CHECKs on the staged stats pass as
-  //  [[StagedAudit]]s, so a constrained write costs ONE scan)
-
   /** Register a named CHECK constraint — a boolean SQL expression every
     * row of every future row-adding commit (append/appendStream, COW
     * merge/update, mergeUpsert, INSERT OVERWRITE, replaceWhere, the
-    * vanilla-session row-level UPDATE/MERGE) must satisfy, enforced as one
-    * violation-counting aggregate before any manifest references the
-    * batch. EXISTING rows are validated first (one table scan — the
+    * vanilla-session row-level UPDATE/MERGE) must satisfy, counted by
+    * the write job over the rows it writes, before any manifest
+    * references the batch. EXISTING rows are validated first (one table scan — the
     * ADD CONSTRAINT contract), so a committed constraint certifies the
     * whole table, past and future. Metadata-only commit; the current
     * set rides complete in every manifest, so enforcement is a
@@ -3116,43 +2674,31 @@ object TableLog {
     * (`df.writeStream.toTable("graft.ns.t")` —
     * [[graft.catalog.GraftStreamingWrite]]): executor-side DataWriters
     * already wrote `relPaths` directly (one parquet file per task,
-    * opened lazily on first row), and this turns the epoch into ONE
-    * txn-stamped append commit. Only MESSAGE-listed paths are
-    * manifested — a zombie/retried task's orphan file never lands (it
-    * is invisible garbage until vacuum, like any CAS-loser's write).
-    * Same contract as `append`: txn idempotence (a replayed epoch
-    * deletes its duplicate files and returns the committed version),
-    * CHECK constraints on the new rows, additive schema evolution,
-    * feed freed-name guard, counters carried, delta/checkpoint
-    * cadence, feed publication. */
+    * opened lazily on first row, each measured by its task as it was
+    * written — `files` are their table-relative summaries), and this
+    * turns the epoch into ONE txn-stamped append commit. Only
+    * MESSAGE-listed files are manifested — a zombie/retried task's
+    * orphan file never lands (it is invisible garbage until vacuum,
+    * like any CAS-loser's write). Same contract as `append`: txn
+    * idempotence (a replayed epoch deletes its duplicate files and
+    * returns the committed version), CHECK constraints audited over the
+    * written rows (the set as of the epoch's start, carried by
+    * `stats`), additive schema evolution, feed freed-name guard,
+    * counters carried, delta/checkpoint cadence, feed publication. */
   private[graft] def commitStreamEpoch(spark: SparkSession, table: String,
-      relPaths: Seq[String], txnId: String, statsCols: Seq[String],
-      strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil,
-      writeSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Long = {
+      files: Seq[WriteStats.FileSummary], txnId: String,
+      stats: WriteStats.Spec,
+      writeSchema: org.apache.spark.sql.types.StructType): Long = {
     committedTxnVersion(table, txnId).foreach { v =>
-      relPaths.foreach { p =>
-        val ap = Paths.get(table, p)
-        Files.deleteIfExists(ap)
-        Files.deleteIfExists(ap.resolveSibling(
-          s".${ap.getFileName.toString}.crc"))
-      }
+      files.foreach(s => WriteStats.deleteStaged(s"$table/${s.name}"))
       return v
     }
-    if (relPaths.isEmpty) return latestVersion(table)
-    val (entries, newRows) = statEntriesFor(spark, table, relPaths,
-      statsCols, strStatsCols, bloomStatsCols,
-      writeSchema = writeSchema)
-    if (entries.isEmpty) return latestVersion(table)
-    // the writer declared its schema: reading with it keeps this
-    // DataFrame job-free until a CHECK constraint actually scans it
-    // (was: an eager schema-inference Spark job on EVERY epoch commit)
-    val written = writeSchema.map(s => spark.read.schema(s))
-      .getOrElse(spark.read)
-      .parquet(entries.map(f => s"$table/${f.path}"): _*)
-    snapshot(table).foreach(b =>
-      enforceChecks(spark, table, b.checks, written, "streaming append"))
+    if (files.isEmpty) return latestVersion(table)
+    // a violation throws out of the sink's commit(), whose abort()
+    // deletes the epoch's files
+    stats.enforce(files)
+    val entries = files.map(s => stats.entry(s.name, s))
+    val newRows = entries.map(_.rows).sum
     var committed = -1L
     while (committed < 0) {
       val base = snapshot(table)
@@ -3161,8 +2707,8 @@ object TableLog {
         case Some(j) => Some(mergeEvolved(
           org.apache.spark.sql.types.DataType.fromJson(j)
             .asInstanceOf[org.apache.spark.sql.types.StructType],
-          written.schema).json)
-        case None if base.isEmpty => Some(written.schema.json)
+          writeSchema).json)
+        case None if base.isEmpty => Some(writeSchema.json)
         case None => None
       }
       if (feedEnabled(table)) base.foreach { b =>
@@ -3171,7 +2717,7 @@ object TableLog {
             .asInstanceOf[org.apache.spark.sql.types.StructType]
             .fieldNames.toSet).getOrElse(Set.empty[String])
         val freed = b.schemaOps.map(_.col).toSet
-        val readd = written.schema.fieldNames.filterNot(baseNames)
+        val readd = writeSchema.fieldNames.filterNot(baseNames)
           .filter(freed)
         require(readd.isEmpty,
           s"streaming append to feed-enabled $table: column(s) " +
@@ -3721,9 +3267,10 @@ object TableLog {
       val tmp = stage.getParent.resolve(
         s".tmp-${stage.getFileName}-${java.util.UUID.randomUUID()}")
       val winners = writeStagedFiles(spark, tmp.toString, captured)
+        .map(_.name)
       // the stage becomes immutable at the rename and the LINK step
-      // lists it, so a non-winning attempt's leftover must go now (the
-      // committer path used to exclude those for us); winners only
+      // lists it, so a non-winning attempt's leftover must go now;
+      // winners only
       listDir(tmp).map(_.getFileName.toString)
         .filter(n => n.endsWith(".parquet") && !winners.contains(n))
         .foreach { n =>
@@ -4068,10 +3615,10 @@ object TableLog {
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
       val out = fn(readSnapshot(spark, table, base))
       // an OVERWRITE's content is user-provided and uncertified —
-      // CHECK constraints ride the staged-file stats pass as audits
-      // (ONE scan certifies stats and checks; a violation throws
-      // before any manifest references the batch and writeDataFiles
-      // drops the staging). Other rewrite actions carry rows a prior
+      // CHECK constraints are audited by the write job (a violation
+      // throws before any manifest references the batch and
+      // writeDataFiles drops the staging). Other rewrite actions carry
+      // rows a prior
       // commit already certified: compact/zorder re-layout, "merge"
       // enforced its source at the caller, "delete" keeps survivors.
       val audits =
@@ -5190,11 +4737,8 @@ object TableLog {
     // rewrite) are deleted on EVERY non-commit exit — a lost race, the
     // audit throw, a concurrent same-txn commit — instead of sitting
     // unmanifested until a vacuum
-    def dropStaged(fs: Seq[FileEntry]): Unit = fs.foreach { f =>
-      val p = Paths.get(table, f.path)
-      Files.deleteIfExists(p)
-      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
-    }
+    def dropStaged(fs: Seq[FileEntry]): Unit =
+      fs.foreach(f => WriteStats.deleteStaged(s"$table/${f.path}"))
     // CHECK constraints validate against the set seen at write start
     // (the addCheckConstraint snapshot-isolation contract)
     val checks0 = snapshot(table).map(_.checks).getOrElse(Nil)
@@ -5202,8 +4746,7 @@ object TableLog {
     // contract); a lost race re-plans only the keep-side rewrite.
     // Slice-ownership (every new row satisfies the replace predicate
     // — a NULL evaluation violates, unlike CHECK) and the CHECK
-    // constraints ride the staged stats pass as audits: ONE scan of
-    // the new slice certifies stats, predicate and checks, and a
+    // constraints are audited by the slice's write job, and a
     // violation drops the staging inside writeDataFiles.
     val audits = StagedAudit(
       !coalesce(cond, org.apache.spark.sql.functions.lit(false)),
@@ -5516,9 +5059,9 @@ object TableLog {
                 s"${o.dataType.simpleString} — cast the expression " +
                 "explicitly (the manifest schema is not changed by update)")
           }
-        enforceChecks(spark, table, base.checks, updated, "updateDv")
         val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-          statsCols, strStatsCols, bloomStatsCols)
+          statsCols, strStatsCols, bloomStatsCols,
+          audits = checkAudits(table, base.checks, "updateDv"))
         require(newRows == cnt,
           s"updateDv audit failed for $table: wrote $newRows new " +
             s"images for $cnt matched rows — not committing")
@@ -5553,11 +5096,11 @@ object TableLog {
     * `SupportsRowLevelOperations`, the path a VANILLA session's
     * DELETE/UPDATE/MERGE takes on a catalog table): replace
     * `removedPaths` (the groups the operation's scan planned) with
-    * `addedRel` (the rewritten groups Spark's own ReplaceData wrote)
-    * in ONE delta manifest. Stats derive over the new files exactly
-    * like every other write; `rows` stays exact (new counts from the
-    * stats pass, removed counts from one footer-count scan of the
-    * removed files — metadata-cheap). Concurrency: the CAS loop
+    * `added` (the rewritten groups Spark's own ReplaceData wrote,
+    * each measured by its writer task under `stats`) in ONE delta
+    * manifest; `rows` stays exact (new counts from the writer tasks,
+    * removed counts from the manifest, or a counting scan for legacy
+    * entries without one). Concurrency: the CAS loop
     * re-validates that every removed path is STILL LIVE and that no
     * MOR sidecar landed since the scan planned (either means the
     * scanned groups no longer represent the table) — fails with a
@@ -5565,20 +5108,19 @@ object TableLog {
     * removes, no adds) commits nothing. */
   private[graft] def replaceFilesCommit(spark: SparkSession,
       table: String, action: String, removedPaths: Seq[String],
-      addedRel: Seq[String], statsCols: Seq[String],
-      strStatsCols: Seq[String], bloomStatsCols: Seq[String],
+      added: Seq[WriteStats.FileSummary], stats: WriteStats.Spec,
       planVersion: Long = Long.MaxValue,
-      pendingDv: Seq[DeleteEntry] = Nil,
-      audits: Seq[StagedAudit] = Nil): Long = {
+      pendingDv: Seq[DeleteEntry] = Nil): Long = {
     require(!feedEnabled(table) || cdcFeedEnabled(table),
       s"row-level $action on feed-enabled table $table: the " +
         "append-only change feed cannot represent it — " +
         s"enableCdcFeed($table) to capture typed rows, or remove " +
         s"${feedDir(table)} to disable the feed")
-    // CHECK audits ride the stats pass (one scan); a violation throws
-    // out of the caller's commit() and Spark's abort() drops staging
-    val (entries, newRows) = statEntriesFor(spark, table, addedRel,
-      statsCols, strStatsCols, bloomStatsCols, audits = audits)
+    // a CHECK violation the writer tasks counted throws out of the
+    // caller's commit() and Spark's abort() drops the staging
+    stats.enforce(added)
+    val entries = added.map(a => stats.entry(a.name, a))
+    val newRows = entries.map(_.rows).sum
     if (removedPaths.isEmpty && entries.isEmpty)
       return latestVersion(table)
     // MOR-aware removed-row count: the raw footer count of a replaced
@@ -5855,18 +5397,18 @@ object TableLog {
   private[graft] def writeDeltaCommit(spark: SparkSession,
       table: String, action: String, planVersion: Long,
       scannedPaths: Seq[String], dvEntries: Seq[FileEntry],
-      deleted: Long, addedRel: Seq[String], statsCols: Seq[String],
-      strStatsCols: Seq[String], bloomStatsCols: Seq[String],
-      audits: Seq[StagedAudit] = Nil): Long = {
+      deleted: Long, added: Seq[WriteStats.FileSummary],
+      stats: WriteStats.Spec): Long = {
     require(!feedEnabled(table) || cdcFeedEnabled(table),
       s"row-level $action on feed-enabled table $table: the " +
         "append-only change feed cannot represent it — " +
         s"enableCdcFeed($table) to capture typed rows, or remove " +
         s"${feedDir(table)} to disable the feed")
-    // CHECK audits ride the stats pass over the new images (one scan);
-    // a violation throws out of commit() and Spark's abort() cleans up
-    val (entries, newRows) = statEntriesFor(spark, table, addedRel,
-      statsCols, strStatsCols, bloomStatsCols, audits = audits)
+    // a CHECK violation the writer tasks counted over the new images
+    // throws out of commit() and Spark's abort() cleans up
+    stats.enforce(added)
+    val entries = added.map(a => stats.entry(a.name, a))
+    val newRows = entries.map(_.rows).sum
     if (dvEntries.isEmpty && entries.isEmpty)
       return latestVersion(table)
     // FOLD the per-task deletion-vector shards into ONE sidecar before
@@ -5900,11 +5442,7 @@ object TableLog {
           Seq(DvPosField), Seq(DvFileField), Nil)
         // the shards are superseded before any manifest saw them —
         // drop them now (Spark's abort() re-deletes idempotently)
-        dvEntries.foreach { e =>
-          val p = Paths.get(table, e.path)
-          Files.deleteIfExists(p)
-          Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
-        }
+        dvEntries.foreach(e => WriteStats.deleteStaged(s"$table/${e.path}"))
         fs
       } else dvEntries
     var committed = -1L
@@ -5944,11 +5482,8 @@ object TableLog {
       // a failed commit aborts the statement; Spark's abort() deletes
       // the ORIGINAL staged shards by message path — the folded
       // sidecar is ours to clean
-      if (dvCommit ne dvEntries) dvCommit.foreach { f =>
-        val p = Paths.get(table, f.path)
-        Files.deleteIfExists(p)
-        Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
-      }
+      if (dvCommit ne dvEntries)
+        dvCommit.foreach(f => WriteStats.deleteStaged(s"$table/${f.path}"))
       throw e
     }
     if (feedEnabled(table)) publishFeed(spark, table)
@@ -5962,7 +5497,7 @@ object TableLog {
     maintainDvIfHeavy(spark, table,
       spark.conf.getOption("spark.graft.rowLevel.maxPendingDvBytes")
         .map(_.toLong).getOrElse(64L << 20),
-      statsCols, strStatsCols, bloomStatsCols,
+      stats.statsCols, stats.strStatsCols, stats.bloomCols,
       spark.conf.getOption("spark.graft.rowLevel.maxPendingDvSidecars")
         .map(_.toInt).getOrElse(64))
     committed
@@ -6122,9 +5657,9 @@ object TableLog {
               s"${o.dataType.simpleString} — cast the expression " +
               "explicitly (the manifest schema is not changed by update)")
         }
-        enforceChecks(spark, table, base.checks, updated, "updateMor")
         val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-          statsCols, strStatsCols, bloomStatsCols)
+          statsCols, strStatsCols, bloomStatsCols,
+          audits = checkAudits(table, base.checks, "updateMor"))
         require(newRows == matchedRows,
           s"updateMor audit failed for $table: wrote $newRows new " +
             s"images for $matchedRows matched rows — not committing")
@@ -6216,8 +5751,12 @@ object TableLog {
       txnId: Option[String], bloomStatsCols: Seq[String]): Long = {
     import org.apache.spark.sql.functions.col
     val keys = touchedKeys.select(col(keyCol)).distinct()
+    // CHECK constraints as of the write's start, audited over the
+    // written inserts (the append contract)
     val (newFiles, newRows) = writeDataFiles(spark, table, ins,
-      statsCols, strStatsCols, bloomStatsCols)
+      statsCols, strStatsCols, bloomStatsCols,
+      audits = checkAudits(table,
+        snapshot(table).map(_.checks).getOrElse(Nil), what))
     require(newRows == insRows,
       s"$what audit failed for $table: wrote $newRows rows from a " +
         s"$insRows-row insert set — not committing")
@@ -6229,7 +5768,6 @@ object TableLog {
     while (committed < 0) {
       val base = snapshotOrFail(table)
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      enforceChecks(spark, table, base.checks, ins, what)
       val candidates = affectedOf(base)
       val matched =
         if (candidates.isEmpty) 0L
@@ -6321,12 +5859,12 @@ object TableLog {
             s"${o.dataType.simpleString} — cast the expression " +
             "explicitly (the manifest schema is not changed by update)")
       }
-      // only the rows the update actually touches need re-validation —
-      // untouched rows were validated when they were written
-      enforceChecks(spark, table, base.checks, updated.where(cond),
-        "updateWhere")
+      // the write job audits every row it writes: the updated images,
+      // and the untouched rows of the affected files (validated when
+      // they were written, so they pass)
       val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-        statsCols, strStatsCols, bloomStatsCols)
+        statsCols, strStatsCols, bloomStatsCols,
+        audits = checkAudits(table, base.checks, "updateWhere"))
       require(newRows == scanRows,
         s"update audit failed for $table: rewrite produced $newRows " +
           s"rows from $scanRows — not committing")
@@ -6776,15 +6314,16 @@ object TableLog {
       val base = snapshotOrFail(table)
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
       // `inserts` is the complete source relation (updates + new
-      // keys); the carried remainder was validated when written
-      enforceChecks(spark, table, base.checks, inserts, "merge")
+      // keys); the write job audits it together with the carried
+      // remainder, which was validated when written and passes
+      val audits = checkAudits(table, base.checks, "merge")
       val affected = affectedOf(base)
       val affectedPaths = affected.map(_.path)
       val (newFiles, newRows, matched, scanRows) =
         if (affected.isEmpty) {
           // every file's stats exclude every touched key: pure insert
           val (nf, nr) = writeDataFiles(spark, table, inserts, statsCols,
-            strStatsCols, bloomStatsCols)
+            strStatsCols, bloomStatsCols, audits = audits)
           (nf, nr, 0L, 0L)
         } else {
           val scan = morScan(spark, table, base, affected)
@@ -6793,7 +6332,7 @@ object TableLog {
           val remainder = scan.join(touchedKeys, Seq(keyCol), "left_anti")
           val (nf, nr) = writeDataFiles(spark, table,
             remainder.unionByName(inserts), statsCols, strStatsCols,
-            bloomStatsCols)
+            bloomStatsCols, audits = audits)
           (nf, nr, m, sRows)
         }
       require(newRows == scanRows - matched + insRows,

@@ -1107,159 +1107,18 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.latestVersion(t) == v)
   }
 
-  test("distributed commit-stats count pass (past the footer " +
-      "threshold): zero-row files still never manifest, stats and " +
-      "rows identical to the footer path") {
-    val saved = TableLog.footerCountThreshold
-    TableLog.footerCountThreshold = 0 // force the distributed path
-    try {
-      val t = tmp("graft_log_zerorow_dist")
-      TableLog.create(spark, t,
-        spark.range(4000).toDF("k").repartitionByRange(4, $"k"),
-        statsCols = Seq("k"))
-      val before = TableLog.snapshot(t).get
-      assert(before.files.size == 4)
-      assert(before.rows == 4000L)
-      assert(before.files.forall(_.stats.exists(_.col == "k")),
-        "distributed pass must derive the same per-file stats")
-      // delete exactly one interior file's range: its rewrite is a
-      // zero-row part file — with the distributed pass, the zero-row
-      // set is listing − aggregate groups, and it must still vanish
-      val f1 = before.files.find { f =>
-        val s = f.stats.find(_.col == "k").get
-        s.min <= 1500 && 1500 <= s.max
-      }.get
-      val st = f1.stats.find(_.col == "k").get
-      val v = TableLog.deleteWhere(spark, t, "k", st.min, st.max,
-        statsCols = Seq("k"))
-      val after = TableLog.snapshot(t).get
-      assert(v == before.version + 1)
-      assert(!after.files.map(_.path).contains(f1.path))
-      assert(after.files.size == 3)
-      assert(after.files.forall(_.stats.exists(_.col == "k")))
-      val expected = 4000L - (st.max - st.min + 1)
-      assert(after.rows == expected)
-      assert(TableLog.read(spark, t).count() == expected)
-      // the no-op contract survives here too
-      assert(TableLog.deleteWhere(spark, t, "k", 1000000, 2000000,
-        statsCols = Seq("k")) == v)
-      // null counts ride the distributed pass like the footer path:
-      // nulls = per-file rows − the aggregate's non-null count
-      assert(after.files.forall(
-        _.stats.find(_.col == "k").exists(_.nulls == 0)),
-        "null-free files must record nulls = 0 through the " +
-          "distributed pass")
-      TableLog.append(spark, t,
-        spark.range(4).selectExpr(
-          "IF(id % 2 = 0, id + 50000, NULL) AS k").coalesce(1),
-        statsCols = Seq("k"))
-      val nf = TableLog.snapshot(t).get.files
-        .find(_.stats.exists(st => st.col == "k" && st.min >= 50000))
-        .getOrElse(fail("null-bearing file not found"))
-      assert(nf.stats.find(_.col == "k").get.nulls == 2,
-        "the distributed pass must record the exact null count")
-    } finally TableLog.footerCountThreshold = saved
-  }
-
-  test("footer-harvested commit stats (small commits): FileStat " +
-      "ranges, null counts and rows identical to the aggregate pass; " +
-      "ineligible shapes still take the aggregate") {
-    val mk = () => spark.range(1000).selectExpr(
-      "id AS k",
-      "CAST(id % 7 AS int) AS vi",
-      "CAST(id % 3 AS short) AS vs",
-      "IF(id % 2 = 0, id, NULL) AS maybe",
-      "CAST(NULL AS long) AS allnull").repartitionByRange(4, $"k")
-    val cols = Seq("k", "vi", "vs", "maybe", "allnull")
-    // eligible small commit: stats come from the footers, ZERO staged
-    // data scans (the whole point — one fewer Spark job per commit)
-    val tF = tmp("graft_log_fstats_f")
-    val p0 = TableLog.stagedScanPasses.get()
-    TableLog.create(spark, tF, mk(), statsCols = cols)
-    assert(TableLog.stagedScanPasses.get() - p0 == 0,
-      "an eligible small commit must not run the stats aggregate job")
-    // same data through the DISTRIBUTED aggregate pass
-    val saved = TableLog.footerCountThreshold
-    TableLog.footerCountThreshold = 0
-    val tA = tmp("graft_log_fstats_a")
-    try TableLog.create(spark, tA, mk(), statsCols = cols)
-    finally TableLog.footerCountThreshold = saved
-    def shape(t: String) = TableLog.snapshot(t).get.files
-      .map(f => (f.rows,
-        f.stats.map(s => (s.col, s.min, s.max, s.nulls)).sortBy(_._1)))
-      .sortBy(_._2.headOption.map(_._2).getOrElse(Long.MaxValue))
-    assert(shape(tF) == shape(tA),
-      "footer-harvested stats must equal the aggregate pass exactly")
-    assert(TableLog.snapshot(tF).get.rows == 1000L)
-    // the all-null column records NO range stat on either path
-    assert(TableLog.snapshot(tF).get.files
-      .forall(!_.stats.exists(_.col == "allnull")))
-    // string stat columns are footer-harvested too (BINARY/UTF8 footer
-    // min/max use the same unsigned-lexicographic order as Spark's
-    // StringType min/max): zero staged scans, value-exact parity with
-    // the aggregate pass — including empty strings, multi-byte UTF-8,
-    // a nullable column and an all-null column
-    val mkS = () => spark.range(100).selectExpr(
-      "id AS k",
-      "CASE WHEN id % 11 = 0 THEN '' WHEN id % 7 = 0 " +
-        "THEN concat('é→', id) ELSE concat('s', id) END AS s",
-      "IF(id % 2 = 0, concat('m', id), NULL) AS smaybe",
-      "CAST(NULL AS string) AS snull").repartitionByRange(4, $"k")
-    val strCols = Seq("s", "smaybe", "snull")
-    val tS = tmp("graft_log_fstats_s")
-    val p1 = TableLog.stagedScanPasses.get()
-    TableLog.create(spark, tS, mkS(),
-      statsCols = Seq("k"), strStatsCols = strCols)
-    assert(TableLog.stagedScanPasses.get() - p1 == 0,
-      "an eligible string-stat commit must not run the stats aggregate")
-    TableLog.footerCountThreshold = 0
-    val tSA = tmp("graft_log_fstats_sa")
-    try TableLog.create(spark, tSA, mkS(),
-      statsCols = Seq("k"), strStatsCols = strCols)
-    finally TableLog.footerCountThreshold = saved
-    def strShape(t: String) = TableLog.snapshot(t).get.files
-      .map(f => (f.rows,
-        f.stats.map(s => (s.col, s.min, s.max, s.nulls)).sortBy(_._1),
-        f.strStats.map(s => (s.col, s.min, s.max)).sortBy(_._1)))
-      .sortBy(_._2.headOption.map(_._2).getOrElse(Long.MaxValue))
-    assert(strShape(tS) == strShape(tSA),
-      "footer-harvested string stats must equal the aggregate pass")
-    assert(TableLog.snapshot(tS).get.files.forall(f =>
-      f.stats.exists(_.col == "k") && f.strStats.exists(_.col == "s") &&
-        !f.strStats.exists(_.col == "snull")))
-  }
-
-  test("direct staged write: manifest shape and read-back identical " +
-      "to the committer path; empty writes and zero-row tasks leave " +
-      "no manifested file") {
-    // deterministic HASH partitioning for the cross-table comparison:
-    // repartitionByRange boundaries are sample-seeded by rdd.id, so
-    // two separate executions split rows differently near boundaries
-    // (see the replaceWhere meta test's comment) — that would flake
-    // this parity pin on either write path
+  test("direct staged write: empty writes and zero-row tasks leave no " +
+      "manifested file, and every staged parquet file is manifested") {
     val mk = () => spark.range(5000).selectExpr(
       "id AS k", "CAST(id % 9 AS int) AS v",
       "concat('p', id % 4) AS s").repartition(4, $"k")
     val tD = tmp("graft_log_direct")
     TableLog.create(spark, tD, mk(),
       statsCols = Seq("k", "v"), strStatsCols = Seq("s"))
-    val tC = tmp("graft_log_committer")
-    spark.conf.set("spark.graft.write.direct", "false")
-    try TableLog.create(spark, tC, mk(),
-      statsCols = Seq("k", "v"), strStatsCols = Seq("s"))
-    finally spark.conf.unset("spark.graft.write.direct")
-    def shape(t: String) = TableLog.snapshot(t).get.files
-      .map(f => (f.rows,
-        f.stats.map(s => (s.col, s.min, s.max, s.nulls)).sortBy(_._1),
-        f.strStats.map(s => (s.col, s.min, s.max)).sortBy(_._1)))
-      .sortBy(r => (r._1, r._2.headOption.map(_._2).getOrElse(0L)))
-    assert(shape(tD) == shape(tC),
-      "direct-write manifests must match the committer path")
-    assert(TableLog.read(spark, tD).orderBy("k").collect().toSeq ==
-      TableLog.read(spark, tC).orderBy("k").collect().toSeq)
-    // an EMPTY append behaves identically on both paths: no new files,
-    // rows unchanged (lazy open = no file at all; the committer path's
-    // eager empty part files were deleted as zero-row)
+    assert(TableLog.snapshot(tD).get.files.size == 4)
+    assert(TableLog.read(spark, tD).count() == 5000L)
+    // an EMPTY append adds no file and leaves rows unchanged (files
+    // open lazily on their first row: an empty task writes nothing)
     TableLog.append(spark, tD, mk().where("k < 0"),
       statsCols = Seq("k", "v"), strStatsCols = Seq("s"))
     assert(TableLog.snapshot(tD).get.rows == 5000L)
@@ -2536,29 +2395,57 @@ class TableLogSpec extends SparkSpec {
       TableLog.dropCheckConstraint(t, "nope"))
   }
 
-  test("a constrained staged write costs ONE scan of its staged files " +
-      "(checks ride the stats pass, no second enforcement read)") {
+  test("a constrained staged write scans no staged file (the write job " +
+      "counts its CHECKs and measures its stats)") {
     val t = tmp("graft_log_checks_onepass")
     TableLog.create(spark, t, spark.range(100).select($"id".as("k"),
       ($"id" % 50).as("v")), statsCols = Seq("k"))
     TableLog.addCheckConstraint(spark, t, "v_range", "v >= 0 AND v < 50")
-    // overwrite rewrite: one staged-scan pass certifies stats + CHECK
-    val p0 = TableLog.stagedScanPasses.get()
-    TableLog.rewrite(spark, t, "overwrite", expectRows = _ => None,
-      statsCols = Seq("k"))(
-      _ => spark.range(50).select($"id".as("k"), ($"id" % 50).as("v")))
-    assert(TableLog.stagedScanPasses.get() - p0 == 1,
-      "constrained overwrite must scan its staged files exactly once")
-    // replaceWhere: slice predicate + CHECK + stats in one pass over
-    // the new slice; the keep-side rewrite carries NO audits and its
-    // integer stats come from the just-written footers (zero staged
-    // data scans — the footer-harvest fast path)
-    val p1 = TableLog.stagedScanPasses.get()
-    TableLog.replaceWhere(spark, t, $"k" >= 0 && $"k" < 10,
-      Seq((3L, 49L)).toDF("k", "v"), statsCols = Seq("k"))
-    assert(TableLog.stagedScanPasses.get() - p1 == 1,
-      "constrained replaceWhere = one audited pass over the new " +
-        "slice; the keep-side rewrite's stats are footer-harvested")
+    // every file relation any query of the commit planned
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.analyzed.foreach {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+          l.relation match {
+            case h: org.apache.spark.sql.execution.datasources
+                .HadoopFsRelation =>
+              h.location.inputFiles.foreach(p =>
+                scanned.add(TableLog.lastTwo(p)))
+            case _ => ()
+          }
+        case _ => ()
+      }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def stagedScans(commit: => Long): Set[String] = {
+      val before = TableLog.snapshot(t).get.files.map(_.path).toSet
+      org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark)
+      scanned.clear()
+      spark.listenerManager.register(ql)
+      try {
+        commit
+        org.apache.spark.sql.graft.Bridge.waitListenerBusEmpty(spark)
+      } finally spark.listenerManager.unregister(ql)
+      import scala.jdk.CollectionConverters._
+      val added = TableLog.snapshot(t).get.files.map(_.path).toSet -- before
+      assert(added.nonEmpty)
+      scanned.asScala.toSet.intersect(added.map(TableLog.lastTwo))
+    }
+    // overwrite rewrite: the CHECK and the stats come from the write
+    assert(stagedScans(TableLog.rewrite(spark, t, "overwrite",
+      expectRows = _ => None, statsCols = Seq("k"))(
+      _ => spark.range(50).select($"id".as("k"), ($"id" % 50).as("v"))))
+      .isEmpty, "constrained overwrite read back a file it wrote")
+    // replaceWhere: slice predicate + CHECK + stats over the new slice,
+    // stats of the keep-side rewrite — none reads a staged file
+    assert(stagedScans(TableLog.replaceWhere(spark, t,
+      $"k" >= 0 && $"k" < 10, Seq((3L, 49L)).toDF("k", "v"),
+      statsCols = Seq("k"))).isEmpty,
+      "constrained replaceWhere read back a file it wrote")
     assert(TableLog.read(spark, t).count() == 41)
   }
 
@@ -2587,9 +2474,8 @@ class TableLogSpec extends SparkSpec {
     assert(e2.getMessage.contains("v_range"))
     assert(TableLog.read(spark, t).count() == 100)
     assert(java.nio.file.Files.list(
-        java.nio.file.Paths.get(t, "data")).count() == dataDirs + 1,
-      "the refused slice's staging dir must hold no files (only the " +
-        "empty set dir remains)")
+        java.nio.file.Paths.get(t, "data")).count() == dataDirs,
+      "the refused slice must leave no staging dir behind")
     // the passing twins land
     TableLog.replaceWhere(spark, t, $"k" >= 0 && $"k" < 10,
       Seq((3L, 49L)).toDF("k", "v"), statsCols = Seq("k"))
