@@ -27,7 +27,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (spark.graft.catalogReads.enabled, default on)
     e.injectOptimizerRule(_ => graft.plans.ResolveGraftCatalogReads)
     // expands TableLog.scan leaves, pruning files from query filters
-    // (spark.graft.logPrune.enabled, default on)
     e.injectOptimizerRule(_ => graft.plans.PruneLogScan)
     // SQL DML face: UPDATE/DELETE/MERGE text over tables registered
     // via TableLog.registerSqlTable routes to the TableLog faces

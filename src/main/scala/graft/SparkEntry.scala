@@ -261,9 +261,9 @@ object SparkEntry {
 
   /** Manifest-level data skipping through the commit log: a range-layout
     * create records per-file [min, max] key stats in each manifest
-    * entry, and `readWhere` opens ONLY the overlapping files (the
-    * manifest — not a footer crawl — decides; TableLogSpec asserts the
-    * file-count reduction). The oracle recomputes the same range
+    * entry, and a `scan` range filter opens ONLY the overlapping files
+    * (the manifest — not a footer crawl — decides; TableLogSpec asserts
+    * the file-count reduction). The oracle recomputes the same range
     * aggregate over the raw table, so a wrongly-skipped file would
     * change the hash. Input bounded to a 1-in-10 order slice for the
     * same reason as o34: the query prices the skipping read path, not
@@ -276,19 +276,20 @@ object SparkEntry {
       .select(col("l_orderkey"), round(col("l_quantity")).cast("long").as("qty"))
     graft.sinks.TableLog.create(s, t,
       li.repartitionByRange(8, col("l_orderkey")), statsCols = Seq("l_orderkey"))
-    graft.sinks.TableLog.readWhere(s, t, "l_orderkey", 1000L, 5000L)
+    graft.sinks.TableLog.scan(s, t)
+      .where(col("l_orderkey").between(1000L, 5000L))
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"))
   }
 
-  /** The DECLARATIVE read face (`TableLog.scan` + the PruneLogScan
-    * optimizer rule): the same clustered table as o35, but the range
-    * predicate is a plain `.where` — the rule, not the caller, turns
-    * it into manifest file pruning before the parquet scan is planned.
-    * Result must equal o35's explicit `readWhere` formulation; the
-    * plan-level pruning itself (files opened) is pinned in
-    * LogScanSpec. A second, string-IN predicate rides the same scan to
-    * exercise the categorical prune path under the oracle. */
+  /** The declarative read face (`TableLog.scan` + the PruneLogScan
+    * optimizer rule) over the same clustered table as o35, grouped by
+    * slice: the rule, not the caller, turns each `.where` into manifest
+    * file pruning before the parquet scan is planned. The range slice
+    * must equal o35's aggregate; the plan-level pruning itself (files
+    * opened) is pinned in LogScanSpec. A second, string-equality
+    * predicate rides the same scan to exercise the categorical prune
+    * path under the oracle. */
   private def o57LogScan(s: SparkSession, dir: String): DataFrame = {
     val t = s"$tmpRoot/logscan_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
@@ -2146,7 +2147,8 @@ object SparkEntry {
     * domain and range skipping is blind — the per-file bloom is what
     * prunes the point lookup. The probed key (the slice's smallest
     * partkey) is derived from the data, so the query is deterministic
-    * at any SF and the oracle re-derives it. */
+    * at any SF and the oracle re-derives it. The bloom probe is hashed
+    * on the driver while the query plans, so the lookup is one job. */
   private def o46BloomSkip(s: SparkSession, dir: String): DataFrame = {
     val t = s"$tmpRoot/bloom_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
@@ -2157,7 +2159,7 @@ object SparkEntry {
     tl.create(s, t, li.repartition(8, col("l_orderkey")),
       bloomStatsCols = Seq("l_partkey"))
     val target = li.agg(min("l_partkey")).head.getLong(0)
-    tl.readWherePoint(s, t, "l_partkey", target)
+    tl.scan(s, t).where(col("l_partkey") === target)
       .groupBy("l_partkey")
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         countDistinct(col("l_orderkey")).as("n_orders"))
@@ -2603,13 +2605,13 @@ object SparkEntry {
   /** CATEGORICAL data skipping through the commit log: documents are
     * laid out `repartitionByRange(lang)` so each file covers a tight
     * string range, per-file [min, max] STRING stats land in the
-    * manifest, and `readWhereIn(lang IN …)` opens only the overlapping
-    * files (TableLogSpec pins the file-count reduction; absent stats
-    * keep the file). Partition-style pruning without a partition
-    * directory layout — the column stays in the data, the manifest
-    * stays one flat list. The oracle recomputes the same IN-filter
-    * aggregate over the raw table, so a wrongly-skipped file changes
-    * every output row. */
+    * manifest, and a `scan` filter `lang IN (…)` opens only the
+    * overlapping files (TableLogSpec pins the file-count reduction;
+    * absent stats keep the file). Partition-style pruning without a
+    * partition directory layout — the column stays in the data, the
+    * manifest stays one flat list. The oracle recomputes the same
+    * IN-filter aggregate over the raw table, so a wrongly-skipped file
+    * changes every output row. */
   private def o39CategoricalSkip(s: SparkSession, dir: String): DataFrame = {
     val t = s"$tmpRoot/cat_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
@@ -2617,7 +2619,7 @@ object SparkEntry {
       .select(col("doc_id"), col("lang"), col("n_chars"))
     graft.sinks.TableLog.create(s, t,
       docs.repartitionByRange(8, col("lang")), strStatsCols = Seq("lang"))
-    graft.sinks.TableLog.readWhereIn(s, t, "lang", Seq("en", "fr"))
+    graft.sinks.TableLog.scan(s, t).where(col("lang").isin("en", "fr"))
       .groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"))
       .orderBy("lang")

@@ -849,7 +849,8 @@ object DedupOps {
       if (!existing || keys.isEmpty)
         bk.select(col("id").as("__iid"), col("blk"),
           col("qe").as("__iqe"), col("nrm").as("__inrm")).where(lit(false))
-      else graft.sinks.TableLog.readWhereIn(spark, table, "blk", keys)
+      else graft.sinks.TableLog.scan(spark, table)
+        .where(col("blk").isin(keys: _*))
         .select(col("id").as("__iid"), col("blk"),
           col("qe").as("__iqe"), col("nrm").as("__inrm"))
     // the BATCH is the broadcast side on the good path by the
@@ -1032,10 +1033,10 @@ object DedupOps {
   /** Near-dup dedup of a NEW vector batch against the semantic cell
     * index: assign the batch with the PINNED codebook, read only index
     * files whose `cell` stats overlap the batch's cells
-    * (`readWhereInLong` — the cell-clustered layout makes this
-    * partition-style pruning), verify cosine on quantized integer dots
-    * with the batch as the size-gated broadcast side (the index's wide
-    * rows never shuffle on the good path), append survivors
+    * (a `scan` filter `cell IN (…)` — the cell-clustered layout makes
+    * this partition-style pruning), verify cosine on quantized integer
+    * dots with the batch as the size-gated broadcast side (the index's
+    * wide rows never shuffle on the good path), append survivors
     * cell-clustered. Same dup rule, replay, and
     * manifest-accounting contract as `incrementalEmbedDedup`; the probe
     * cell list is ≤ min(batch, nlist) driver-side longs. */
@@ -1059,7 +1060,8 @@ object DedupOps {
       if (cells.isEmpty)
         bk.select(col("id").as("__iid"), col("cell"),
           col("qe").as("__iqe"), col("nrm").as("__inrm")).where(lit(false))
-      else graft.sinks.TableLog.readWhereInLong(spark, table, "cell", cells)
+      else graft.sinks.TableLog.scan(spark, table)
+        .where(col("cell").isin(cells: _*))
         .select(col("id").as("__iid"), col("cell"),
           col("qe").as("__iqe"), col("nrm").as("__inrm"))
     // size-gated in-plan like the embed twin: `bk` is already in cache

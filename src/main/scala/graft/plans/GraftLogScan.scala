@@ -16,10 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * and the `PruneLogScan` optimizer rule turns whatever `Filter` the
   * query put on top — DataFrame `.where`, SQL over a temp view, a join
   * key condition Catalyst inferred — into MANIFEST-level file pruning
-  * before expanding to the ordinary parquet scan. With the explicit
-  * faces (`readWhere`/`readWhereIn`/…) the USER chooses the pruned
-  * path; with `scan` the OPTIMIZER does, which is what makes the log
-  * table behave like a partitioned catalog table in plain `spark.sql`.
+  * before expanding to the ordinary parquet scan. It is the table's
+  * only filtered read: the OPTIMIZER, not the caller, chooses the
+  * pruned path, which is what makes the log table behave like a
+  * partitioned catalog table in plain `spark.sql`.
   *
   * The leaf pins the SNAPSHOT, not just the path: schema, file list,
   * MOR sidecars and schema-op history are all resolved once at `scan`
@@ -55,15 +55,13 @@ final case class GraftLogRelation(table: String, snapshot: TableLog.Snapshot,
   * onto the leaf, so one match sees the whole conjunction; parquet
   * row-group pushdown still happens later at physical planning
   * (V1 FileSourceStrategy), so manifest pruning and footer pruning
-  * stack. Supported conjuncts — long ranges / equalities, string
-  * equalities (range + bloom stats), IN-lists over literals — prune;
+  * stack. Supported conjuncts — long ranges, equalities of any
+  * literal type (range + bloom stats), IN-lists over literals — prune;
   * everything else is ignored and re-applied by the Filter that stays
   * on top: stats prune IO, never semantics. Expansion goes through
   * `morScan`, so delete sidecars and schema-op name resolution apply
   * exactly as on the eager faces. */
 object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
-
-  val CONF_KEY = "spark.graft.logPrune.enabled"
 
   /** Idempotently register on a live session (builder path:
     * GraftExtensions). */
@@ -74,21 +72,18 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    val prune = conf.getConfString(CONF_KEY, "true").toBoolean
     // transformDown so the whole-table aggregate and Filter-on-relation
     // cases match before the bare relation underneath them would expand
     plan.transformDown {
-      case agg @ Aggregate(Nil, _, AggChild(r: GraftLogRelation), _)
-          if prune =>
+      case agg @ Aggregate(Nil, _, AggChild(r: GraftLogRelation), _) =>
         // unanswerable ⇒ return agg unchanged; transformDown then
         // recurses into its children and the cases below expand the leaf
         metadataAnswer(agg, r).getOrElse(agg)
-      case j: Join if prune &&
-          (RelSide.unapply(j.left).isDefined ||
-            RelSide.unapply(j.right).isDefined) =>
+      case j: Join if RelSide.unapply(j.left).isDefined ||
+          RelSide.unapply(j.right).isDefined =>
         // bail ⇒ unchanged join; recursion expands the leaves normally
         tryDynPrune(j).getOrElse(j)
-      case Filter(cond, r: GraftLogRelation) if prune =>
+      case Filter(cond, r: GraftLogRelation) =>
         Filter(cond, expand(r, boxPrune(r.snapshot, keptFiles(r, cond),
           cond)))
       case r: GraftLogRelation =>
@@ -321,8 +316,8 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
   /** File-prune entry point for the non-declarative faces (the
     * positional DML's predicate pruning): evaluate a RESOLVED
     * predicate tree against the snapshot's stats exactly as the
-    * optimizer rule would — per-leaf ranges, IN-lists, string
-    * equality + bloom, and the conjunction z-box pass. */
+    * optimizer rule would — per-leaf ranges, IN-lists, equality +
+    * bloom, and the conjunction z-box pass. */
   private[graft] def keptFilesOf(s: TableLog.Snapshot, cond: Expression)
       : Seq[TableLog.FileEntry] =
     boxPrune(s, pruneTree(s, cond).getOrElse(s.files), cond)
@@ -334,12 +329,9 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
     * prune — on a z-ordered table a file whose bounding box overlaps
     * the query box but whose z run never enters it drops here, where
     * the per-column stats could not. No z2 stats ⇒ identity. */
-  val BOX_KEY = "spark.graft.logPrune.box.enabled"
-
   private def boxPrune(s: TableLog.Snapshot,
       kept: Seq[TableLog.FileEntry], cond: Expression)
       : Seq[TableLog.FileEntry] = {
-    if (!conf.getConfString(BOX_KEY, "true").toBoolean) return kept
     val ranges = splitConjunctivePredicates(cond)
       .flatMap(leafRange)
       .groupBy(_._1)
@@ -352,37 +344,31 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** One comparison leaf as (column, lo, hi) — the shape both the
-    * per-leaf range prune and the conjunction box pass consume. */
-  private def leafRange(e: Expression): Option[(String, Long, Long)] =
-    e match {
-      case EqualTo(a, l) if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, longLit(l).get, longLit(l).get))
-      case EqualTo(l, a) if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, longLit(l).get, longLit(l).get))
-      case GreaterThanOrEqual(a, l)
-          if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, longLit(l).get, Long.MaxValue))
-      case GreaterThan(a, l)
-          if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, longLit(l).get + 1, Long.MaxValue))
-      case LessThanOrEqual(a, l)
-          if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, Long.MinValue, longLit(l).get))
-      case LessThan(a, l) if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, Long.MinValue, longLit(l).get - 1))
-      case GreaterThanOrEqual(l, a)
-          if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, Long.MinValue, longLit(l).get))
-      case GreaterThan(l, a)
-          if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, Long.MinValue, longLit(l).get - 1))
-      case LessThanOrEqual(l, a)
-          if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, longLit(l).get, Long.MaxValue))
-      case LessThan(l, a) if attrName(a).isDefined && longLit(l).isDefined =>
-        Some((attrName(a).get, longLit(l).get + 1, Long.MaxValue))
-      case _ => None
+    * per-leaf range prune and the conjunction box pass consume
+    * (`literal op column` reads as `column op' literal`). */
+  private def leafRange(e: Expression): Option[(String, Long, Long)] = {
+    val (c, v, colLeft) = e match {
+      case b: BinaryComparison
+          if attrName(b.left).isDefined && longLit(b.right).isDefined =>
+        (attrName(b.left).get, longLit(b.right).get, true)
+      case b: BinaryComparison
+          if attrName(b.right).isDefined && longLit(b.left).isDefined =>
+        (attrName(b.right).get, longLit(b.left).get, false)
+      case _ => return None
     }
+    (e, colLeft) match {
+      case (_: EqualTo, _) => Some((c, v, v))
+      case (_: GreaterThanOrEqual, true) | (_: LessThanOrEqual, false) =>
+        Some((c, v, Long.MaxValue))
+      case (_: GreaterThan, true) | (_: LessThan, false) =>
+        Some((c, v + 1, Long.MaxValue))
+      case (_: LessThanOrEqual, true) | (_: GreaterThanOrEqual, false) =>
+        Some((c, Long.MinValue, v))
+      case (_: LessThan, true) | (_: GreaterThan, false) =>
+        Some((c, Long.MinValue, v - 1))
+      case _ => None // EqualNullSafe
+    }
+  }
 
   /** Evaluate the whole predicate TREE to a surviving file set: AND
     * intersects (an unprunable side simply contributes nothing), OR
@@ -412,6 +398,7 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
 
   private def pruneLeaf(s: TableLog.Snapshot, e: Expression)
       : Option[Seq[TableLog.FileEntry]] = e match {
+    case ColEqLit(c, l) if !versionMeta(s, c) => Some(eqPrune(s, c, l))
     // long comparisons, both literal sides (shared shape with the
     // conjunction box pass). `_version` prunes EXACTLY on the manifest
     // entry's commit version — `WHERE _version = 5` opens only the
@@ -421,17 +408,9 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
       if (versionMeta(s, c))
         Some(s.files.filter(f => f.ver >= lo && f.ver <= hi))
       else Some(TableLog.prunedFilesOf(s, c, lo, hi))
-    case EqualTo(a, v) if attrName(a).isDefined && strLit(v).isDefined =>
-      Some(strEqPrune(s, attrName(a).get, strLit(v).get))
-    case EqualTo(v, a) if attrName(a).isDefined && strLit(v).isDefined =>
-      Some(strEqPrune(s, attrName(a).get, strLit(v).get))
     case In(a, vs) if attrName(a).isDefined && vs.nonEmpty &&
         vs.forall(longLit(_).isDefined) =>
-      if (versionMeta(s, attrName(a).get)) {
-        val set = vs.flatMap(longLit).toSet
-        Some(s.files.filter(f => set(f.ver)))
-      } else Some(TableLog.prunedFilesInLongOf(s, attrName(a).get,
-        vs.flatMap(longLit)))
+      Some(longInPrune(s, attrName(a).get, vs.flatMap(longLit)))
     case In(a, vs) if attrName(a).isDefined && vs.nonEmpty &&
         vs.forall(strLit(_).isDefined) =>
       Some(TableLog.prunedFilesInOf(s, attrName(a).get, vs.flatMap(strLit)))
@@ -439,10 +418,7 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
     // over Catalyst-internal values
     case InSet(a, hs) if attrName(a).isDefined && hs.nonEmpty &&
         hs.forall(_.isInstanceOf[java.lang.Long]) =>
-      if (versionMeta(s, attrName(a).get)) {
-        val set = hs.map(_.asInstanceOf[java.lang.Long].longValue)
-        Some(s.files.filter(f => set(f.ver)))
-      } else Some(TableLog.prunedFilesInLongOf(s, attrName(a).get,
+      Some(longInPrune(s, attrName(a).get,
         hs.toSeq.map(_.asInstanceOf[java.lang.Long].longValue)))
     case InSet(a, hs) if attrName(a).isDefined && hs.nonEmpty &&
         hs.forall(_.isInstanceOf[UTF8String]) =>
@@ -451,15 +427,59 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
     case _ => None // unsupported leaf: no pruning, Filter re-applies
   }
 
-  /** A string equality prunes twice: the [min,max] string range, then
-    * the per-file bloom (which needs a live session for the probe
-    * hash). */
-  private def strEqPrune(s: TableLog.Snapshot, c: String, v: String)
-      : Seq[TableLog.FileEntry] = {
-    val ranged = TableLog.prunedFilesInOf(s, c, Seq(v))
-    TableLog.prunedFilesPointOf(s.copy(files = ranged),
-      SparkSession.active, c, v)
+  /** A long IN-list: exact on `_version`, else by the long stats. */
+  private def longInPrune(s: TableLog.Snapshot, c: String, vs: Seq[Long])
+      : Seq[TableLog.FileEntry] =
+    if (!versionMeta(s, c)) TableLog.prunedFilesInLongOf(s, c, vs)
+    else { val set = vs.toSet; s.files.filter(f => set(f.ver)) }
+
+  /** `column = literal`, either side, with a non-null value (the
+    * analyzed tree's widening cast around a narrower long literal
+    * unwraps as in `longLit`). */
+  private object ColEqLit {
+    def unapply(e: Expression): Option[(String, Literal)] = e match {
+      case EqualTo(a: AttributeReference, v) => eqLit(v).map(a.name -> _)
+      case EqualTo(v, a: AttributeReference) => eqLit(v).map(a.name -> _)
+      case _ => None
+    }
+    private def eqLit(e: Expression): Option[Literal] = e match {
+      case l @ Literal(v, _) => Option(v).map(_ => l)
+      case _ => longLit(e).map(Literal(_))
+    }
   }
+
+  /** An equality prunes twice: by the [min,max] range (long stats for
+    * a long literal, string stats for a string one), then by the
+    * per-file blooms. */
+  private def eqPrune(s: TableLog.Snapshot, c: String, l: Literal)
+      : Seq[TableLog.FileEntry] = {
+    val ranged = (longLit(l), strLit(l)) match {
+      case (Some(v), _) => TableLog.prunedFilesOf(s, c, v, v)
+      case (_, Some(v)) => TableLog.prunedFilesInOf(s, c, Seq(v))
+      case _ => s.files
+    }
+    TableLog.prunedFilesPointOf(s.copy(files = ranged), c, bloomProbes(l))
+  }
+
+  private val numericLattice =
+    Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
+
+  /** A file's bloom hashed each value under the type that FILE was
+    * written with, which is narrower than the column's for files
+    * written before a `widenColumnType` or appended as a narrower batch
+    * (an int file in a long column). So probe the literal under its own
+    * type and under every narrower type of `TableLog.widen`'s lattice
+    * that holds the value exactly; strings never widen and probe once. */
+  private def bloomProbes(l: Literal): Seq[Literal] =
+    l +: numericLattice.filter(t => t != l.dataType &&
+        TableLog.widen(t, l.dataType).contains(l.dataType))
+      .flatMap { t =>
+        // exact = round-trips to the same boxed value (NaN included)
+        Option(Cast(l, t, evalMode = EvalMode.TRY).eval())
+          .filter(n => java.util.Objects.equals(l.value,
+            Cast(Literal(n, t), l.dataType, evalMode = EvalMode.TRY).eval()))
+          .map(Literal(_, t))
+      }
 
   /** Replace the leaf with the ordinary snapshot scan of `files`
     * (MOR- and schema-op-aware), output re-aliased to the relation's

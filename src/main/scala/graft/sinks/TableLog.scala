@@ -60,8 +60,8 @@ object TableLog {
 
   /** Per-file column range, LONG-typed (the engine's integer-first
     * convention: keys, micro-scores, epoch-micros all live in long
-    * space). Stats prune IO, never semantics — `readWhere` keeps any
-    * file whose range overlaps (or that has no stat for the column)
+    * space). Stats prune IO, never semantics — a filtered `scan` keeps
+    * any file whose range overlaps (or that has no stat for the column)
     * and still applies the residual filter.
     *
     * `nulls`: the column's NULL count in this file (−1 on legacy
@@ -556,9 +556,9 @@ object TableLog {
 
   // ---- manifest bloom stats: point-lookup pruning where range stats
   // are blind. A [min,max] range on an UNCLUSTERED high-cardinality key
-  // spans nearly the whole domain in every file, so readWhere prunes
-  // nothing; a small per-file Bloom filter (4 KiB, k=4 — ~0.02% FPP at
-  // 1k distinct keys/file) answers "can this file contain key = v" for
+  // spans nearly the whole domain in every file, so range pruning keeps
+  // everything; a small per-file Bloom filter (4 KiB, k=4 — ~0.02% FPP
+  // at 1k distinct keys/file) answers "can this file contain key = v" for
   // an equality probe. Stored in the existing string-stat slot under the
   // reserved name `bloom:<col>` (min = base64 bitset, max = "m,k"), so
   // the manifest format, parser, and every existing reader are
@@ -578,18 +578,17 @@ object TableLog {
   private def bloomStatName(c: String) = s"bloom:$c"
 
   /** The k bit positions for probe value `v` under modulus `m`,
-    * computed THROUGH a one-row Spark plan so the hash is bit-identical
-    * to the writer tasks' `xxhash64` (driver-reimplementing the hash
-    * would silently diverge on type widening). Metadata-sized
-    * work; `m`/`k` come from the STAT being probed, so files written
-    * under any historical sizing keep pruning correctly. */
-  private def bloomPositions(spark: SparkSession, v: Any, m: Int,
+    * evaluated on the driver from the expression the writer tasks bind
+    * ([[WriteStats]]: `pmod(xxhash64(i, v), m)` over the value's own
+    * type), so the bits are identical and planning runs no Spark job.
+    * `m`/`k` come from the STAT being probed, so files written under
+    * any historical sizing keep pruning correctly. */
+  private def bloomPositions(
+      v: org.apache.spark.sql.catalyst.expressions.Literal, m: Int,
       k: Int): Seq[Int] = {
-    import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
-    val r = spark.range(1).select((0 until k).map(i =>
-      pmod(xxhash64(lit(i), lit(v)), lit(m.toLong)).cast("int")
-        .as(s"p$i")): _*).head()
-    (0 until k).map(r.getInt)
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod, XxHash64}
+    (0 until k).map(i => Pmod(new XxHash64(Seq(Literal(i), v)),
+      Literal(m.toLong)).eval().asInstanceOf[Long].toInt)
   }
 
   /** The manifest entry for one file's bloom bit set on column `c`. */
@@ -598,12 +597,6 @@ object TableLog {
     FileStrStat(bloomStatName(c),
       java.util.Base64.getEncoder.encodeToString(bits.toByteArray),
       s"$bloomM,$bloomK")
-
-  private def bloomMayContain(b64: String, positions: Seq[Int]): Boolean = {
-    val bits = java.util.BitSet.valueOf(
-      java.util.Base64.getDecoder.decode(b64))
-    positions.forall(bits.get)
-  }
 
   /** A per-row violation flag the writer tasks count while they write
     * (`bad` is TRUE for a violating row; `msg` renders the refusal for
@@ -707,16 +700,18 @@ object TableLog {
     readSnapshot(spark, table,
       snapshot(table).getOrElse(sys.error(s"no committed version in $table")))
 
-  /** The DECLARATIVE read face: a DataFrame whose leaf is a Catalyst
+  /** The filtered read face: a DataFrame whose leaf is a Catalyst
     * relation (`GraftLogRelation`), so whatever filters the query puts
     * on it — `.where`, SQL over a temp view, join-inferred predicates —
     * reach the MANIFEST and prune files before the parquet scan is even
     * planned (`plans.PruneLogScan`; the rule is installed on the
-    * session idempotently here). Snapshot-resolved once, like every
-    * read face; results are identical to `read` + the same filters,
-    * pruning included where `readWhere`/`readWhereIn`/`readWherePoint`
-    * would prune. Legacy tables without a recorded schema fall back to
-    * the eager scan (nothing to resolve a leaf schema from). */
+    * session idempotently here): long ranges and IN-lists by the long
+    * stats, string equalities and IN-lists by the string stats, any
+    * equality by the per-file blooms too, and z/hilbert boxes for
+    * conjunctions. Snapshot-resolved once, like every read face;
+    * results are identical to `read` + the same filters. Legacy tables
+    * without a recorded schema fall back to the eager scan (nothing to
+    * resolve a leaf schema from). */
   def scan(spark: SparkSession, table: String): DataFrame =
     mkScan(spark, table, snapshotOrFail(table))
 
@@ -1142,14 +1137,6 @@ object TableLog {
   private[graft] def snapshotOrFail(table: String): Snapshot =
     snapshot(table).getOrElse(sys.error(s"no committed version in $table"))
 
-  /** The manifest files whose `[min,max]` range for `c` OVERLAPS
-    * `[lo,hi]` — plus any file with no stat for `c` (stats are
-    * optional per commit; absence must never drop data). Exposed so
-    * callers/tests can assert skipping without reading data. */
-  def prunedFiles(table: String, c: String, lo: Long, hi: Long)
-      : Seq[FileEntry] =
-    prunedFilesOf(snapshotOrFail(table), c, lo, hi)
-
   /** Per-file stat-lookup resolver for logical column `c`: a file's
     * stats are recorded under the PHYSICAL name it was written with,
     * so after a rename the pruners must look the queried column up
@@ -1170,35 +1157,14 @@ object TableLog {
         resolvePhysical(c, s.schemaOps.filter(_.ver > f.ver)))
     }
 
+  /** The manifest files whose `[min,max]` range for `c` OVERLAPS
+    * `[lo,hi]` — plus any file with no stat for `c` (stats are
+    * optional per commit; absence must never drop data). */
   private[graft] def prunedFilesOf(s: Snapshot, c: String, lo: Long, hi: Long)
       : Seq[FileEntry] = {
     val phys = statNameFor(s, c)
     s.files.filter(f => phys(f).exists(p =>
       f.stats.find(_.col == p).forall(st => st.max >= lo && st.min <= hi)))
-  }
-
-  /** Manifest-level data skipping: scan ONLY the files whose stat range
-    * for `c` overlaps `[lo, hi]`, then apply the filter itself (stats
-    * prune IO, never semantics — so a stale or absent stat can only
-    * cost IO). At 100 TB this is the difference between a full-table
-    * scan and an O(matching files) read for range predicates on the
-    * clustering column: pair with `zOrder`/range-layout writes so file
-    * ranges are tight, and the manifest — not a footer crawl over
-    * millions of files — decides what to open. */
-  def readWhere(spark: SparkSession, table: String, c: String,
-      lo: Long, hi: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    // ONE snapshot resolution threads through prune + scan: a commit
-    // landing mid-call can no longer mix version N's file list with
-    // version N+1's schema (snapshot isolation holds per read)
-    val s = snapshotOrFail(table)
-    val keep = prunedFilesOf(s, c, lo, hi)
-    val base =
-      if (keep.isEmpty) // filter is disjoint from every file range
-        readSnapshot(spark, table, s)
-          .where(org.apache.spark.sql.functions.lit(false))
-      else morScan(spark, table, s, keep)
-    base.where(col(c).between(lo, hi))
   }
 
   /** File-level change feed between two committed versions: data files
@@ -1414,10 +1380,6 @@ object TableLog {
     * `values` — plus any file with no string stat for `c` (absence
     * never drops data). Range containment is decided in UTF-8 byte
     * order, the order the stats were computed in. */
-  def prunedFilesIn(table: String, c: String, values: Seq[String])
-      : Seq[FileEntry] =
-    prunedFilesInOf(snapshotOrFail(table), c, values)
-
   private[graft] def prunedFilesInOf(s: Snapshot, c: String, values: Seq[String])
       : Seq[FileEntry] = {
     val phys = statNameFor(s, c)
@@ -1426,35 +1388,8 @@ object TableLog {
         values.exists(v => utf8Leq(st.min, v) && utf8Leq(v, st.max)))))
   }
 
-  /** CATEGORICAL data skipping: scan only the files whose string range
-    * for `c` can contain one of `values`, then apply the IN filter
-    * itself (stats prune IO, never semantics). Pair with a
-    * `repartitionByRange(col(c))` write layout so each file covers a
-    * tight value range — partition-style pruning WITHOUT a partition
-    * directory layout, so the files stay self-contained (the column is
-    * in the data, not the path) and the manifest stays one flat list.
-    * At 100 TB this is how per-language / per-source slices of a
-    * training corpus read only their share of the lake. */
-  def readWhereIn(spark: SparkSession, table: String, c: String,
-      values: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    // single snapshot resolution — same isolation reasoning as readWhere
-    val s = snapshotOrFail(table)
-    val keep = prunedFilesInOf(s, c, values)
-    val base =
-      if (keep.isEmpty)
-        readSnapshot(spark, table, s)
-          .where(org.apache.spark.sql.functions.lit(false))
-      else morScan(spark, table, s, keep)
-    base.where(col(c).isin(values: _*))
-  }
-
-  /** LONG twin of `prunedFilesIn`: files whose [min,max] long range for
-    * `c` contains any of `values` (absent stat keeps the file). */
-  def prunedFilesInLong(table: String, c: String, values: Seq[Long])
-      : Seq[FileEntry] =
-    prunedFilesInLongOf(snapshotOrFail(table), c, values)
-
+  /** LONG twin of `prunedFilesInOf`: files whose [min,max] long range
+    * for `c` contains any of `values` (absent stat keeps the file). */
   private[graft] def prunedFilesInLongOf(s: Snapshot, c: String, values: Seq[Long])
       : Seq[FileEntry] = {
     val phys = statNameFor(s, c)
@@ -1463,66 +1398,26 @@ object TableLog {
         values.exists(v => st.min <= v && v <= st.max))))
   }
 
-  /** LONG twin of `readWhereIn`: scan only files whose long stat range
-    * for `c` can contain one of `values`, then apply the IN filter (stats
-    * prune IO, never semantics). Pair with a `repartitionByRange(col(c))`
-    * layout — how a cell-keyed index (e.g. the semantic dedup index)
-    * reads only the probed cells' share of the table. */
-  /** Files whose bloom stat for `c` may contain `v` (files without one
-    * are kept — stats prune IO, never semantics). */
-  def prunedFilesPoint(spark: SparkSession, table: String, c: String,
-      v: Any): Seq[FileEntry] =
-    prunedFilesPointOf(snapshotOrFail(table), spark, c, v)
-
-  private[graft] def prunedFilesPointOf(s: Snapshot, spark: SparkSession,
-      c: String, v: Any): Seq[FileEntry] = {
-    // positions depend on the stat's own (m, k): one tiny plan per
+  /** Files whose bloom stat for `c` may contain one of the `probes`
+    * (a value under each type a file may have hashed it with — see
+    * `PruneLogScan`); files without a bloom are kept — stats prune IO,
+    * never semantics. */
+  private[graft] def prunedFilesPointOf(s: Snapshot, c: String,
+      probes: Seq[org.apache.spark.sql.catalyst.expressions.Literal])
+      : Seq[FileEntry] = {
+    // positions depend on the stat's own (m, k): computed once per
     // distinct sizing present in the snapshot (normally exactly one)
-    val posFor = scala.collection.mutable.HashMap[(Int, Int), Seq[Int]]()
+    val posFor = scala.collection.mutable.HashMap[(Int, Int), Seq[Seq[Int]]]()
     val phys = statNameFor(s, c)
     s.files.filter(f => phys(f).exists(p =>
       f.strStats.find(_.col == bloomStatName(p)).forall { st =>
         val Array(m, k) = st.max.split(",", 2).map(_.toInt)
-        bloomMayContain(st.min,
-          posFor.getOrElseUpdate((m, k), bloomPositions(spark, v, m, k)))
+        val bits = java.util.BitSet.valueOf(
+          java.util.Base64.getDecoder.decode(st.min))
+        posFor.getOrElseUpdate((m, k),
+          probes.map(bloomPositions(_, m, k)).distinct)
+          .exists(_.forall(bits.get))
       }))
-  }
-
-  /** Point-lookup read through the manifest bloom stats: scan only the
-    * files whose bloom may contain `c = v`, then apply the equality
-    * filter itself. The value's TYPE must match the column's (the probe
-    * hashes the typed value exactly as the builder did). On an
-    * unclustered high-cardinality key this prunes where `readWhere`'s
-    * range stats cannot — the difference between opening every file and
-    * opening the one or two that can hold the key. An absent bloom
-    * (file written without `bloomStatsCols`, e.g. by an old commit or a
-    * rewrite that didn't rebuild them) keeps the file. Prune and scan
-    * resolve ONE snapshot — no torn read across a racing commit. */
-  def readWherePoint(spark: SparkSession, table: String, c: String,
-      v: Any): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val s = snapshotOrFail(table)
-    val keep = prunedFilesPointOf(s, spark, c, v)
-    if (keep.isEmpty)
-      // every file's bloom excludes v: provably no matching row
-      return scanFiles(spark, s.schemaJson,
-        s.files.take(1).map(f => s"$table/${f.path}"))
-        .where(lit(false))
-    morScan(spark, table, s, keep)
-      .where(col(c) === lit(v))
-  }
-
-  def readWhereInLong(spark: SparkSession, table: String, c: String,
-      values: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val s = snapshotOrFail(table)
-    val keep = prunedFilesInLongOf(s, c, values)
-    val base =
-      if (keep.isEmpty)
-        readSnapshot(spark, table, s)
-          .where(org.apache.spark.sql.functions.lit(false))
-      else morScan(spark, table, s, keep)
-    base.where(col(c).isin(values: _*))
   }
 
   /** Append `df`: new data files + the base snapshot's file list. The
@@ -4176,8 +4071,8 @@ object TableLog {
     * z-clustered file's per-column bounding box can overlap a query
     * box the curve never actually visits inside it, and the z-interval
     * test (`ZOrderLong.zBoxIntersects`) prunes exactly those files —
-    * see `prunedFilesByBox`/`readWhereBox` and the declarative face's
-    * conjunction pass. Raw stats for both z columns are always
+    * see `prunedFilesByBox` and the declarative face's conjunction
+    * pass. Raw stats for both z columns are always
     * recorded too: the box test is only SOUND for files whose data
     * lies within the declared normalization ranges (outside them the
     * masked interleave is non-monotone), and the raw stats are how the
@@ -4539,26 +4434,6 @@ object TableLog {
         }
       }
     }
-  }
-
-  /** Explicit 2-D box read: per-column range pruning, then the
-    * z-interval box prune (`prunedFilesByBox`) on z-ordered tables,
-    * then the residual filter — the face a `readWhere(cA).where(cB)`
-    * caller upgrades to when the table is z-clustered on (cA, cB).
-    * The declarative `scan` face applies the same tightening to any
-    * SQL/DataFrame conjunction automatically. */
-  def readWhereBox(spark: SparkSession, table: String,
-      cA: String, aLo: Long, aHi: Long,
-      cB: String, bLo: Long, bHi: Long): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val s = snapshotOrFail(table)
-    val ranged = prunedFilesOf(
-      s.copy(files = prunedFilesOf(s, cA, aLo, aHi)), cB, bLo, bHi)
-    val kept = prunedFilesByBox(s.copy(files = ranged),
-      Map(cA -> (aLo, aHi), cB -> (bLo, bHi)))
-    morScan(spark, table, s, kept)
-      .where(coalesce(col(cA).cast("long").between(aLo, aHi), lit(false)))
-      .where(coalesce(col(cB).cast("long").between(bLo, bHi), lit(false)))
   }
 
   /** Stats-pruned COPY-ON-WRITE delete: remove the rows where `c` (cast

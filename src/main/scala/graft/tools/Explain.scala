@@ -152,8 +152,8 @@ object Explain {
           .where(col("blk").isNotNull).distinct()
           .collect().map(_.getString(0)).toSeq)
         println(s"[explain] distinct batch blocks: ${keys.size}")
-        val idx = time("readWhereIn build")(
-          graft.sinks.TableLog.readWhereIn(spark, t, "blk", keys))
+        val idx = time("scan build")(graft.sinks.TableLog.scan(spark, t)
+          .where(col("blk").isin(keys: _*)))
         time("idx scan rows")(println(s"[explain] idx rows: ${idx.count()}"))
         val crossCand = bk.join(idx.select(col("id").as("__iid"),
           col("blk"), col("qe").as("__iqe"), col("nrm").as("__inrm")), Seq("blk"))

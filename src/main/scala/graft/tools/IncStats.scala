@@ -119,8 +119,8 @@ object IncStats {
     * 64-file TableLog table from a 5% slice, partitioned on the WRONG
     * key for the probe (l_orderkey layout, l_partkey probe — every
     * file's partkey range spans the domain), then a point lookup
-    * through `readWherePoint` (bloom-pruned) vs the same predicate over
-    * the full `read` (range stats blind → all files). Both sides return
+    * through `scan` (bloom-pruned) vs the same predicate over the full
+    * `read` (range stats blind → all files). Both sides return
     * identical rows; min of 3 each. */
   private def runBloom(spark: SparkSession, sfDir: String): Unit = {
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -145,12 +145,14 @@ object IncStats {
     val nFiles = snapFiles.size
     val nBloomed = snapFiles.count(_.strStats.exists(
       _.col == "bloom:l_partkey"))
-    val kept = graft.sinks.TableLog.prunedFilesPoint(spark, t,
-      "l_partkey", v).size
-    val rangeKept = graft.sinks.TableLog.prunedFiles(t,
-      "l_partkey", v, v).size
-    def point() = graft.sinks.TableLog
-      .readWherePoint(spark, t, "l_partkey", v).count()
+    // files opened: the equality prunes by range and bloom, the
+    // one-value range by range stats alone
+    val lookup = graft.sinks.TableLog.scan(spark, t)
+      .where(col("l_partkey") === v)
+    val kept = lookup.inputFiles.length
+    val rangeKept = graft.sinks.TableLog.scan(spark, t)
+      .where(col("l_partkey").between(v, v)).inputFiles.length
+    def point() = lookup.count()
     def full() = graft.sinks.TableLog.read(spark, t)
       .where(col("l_partkey") === v).count()
     val n1 = point(); val n2 = full()

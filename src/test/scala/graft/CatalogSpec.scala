@@ -3,8 +3,6 @@ package graft
 import graft.catalog.{GraftCatalog, GraftTable}
 import graft.plans.{GraftLogRelation, ResolveGraftCatalogReads}
 import graft.sinks.TableLog
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
@@ -27,14 +25,6 @@ class CatalogSpec extends SparkSpec {
     ResolveGraftCatalogReads.install(spark)
     wh
   }
-
-  private def filesScanned(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.inputFiles.length
-        case _ => 0
-      }
-    }.sum
 
   test("DDL + INSERT + SELECT lifecycle through the catalog") {
     val wh = warehouse

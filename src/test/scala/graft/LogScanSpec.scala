@@ -2,7 +2,6 @@ package graft
 
 import graft.sinks.TableLog
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** The declarative read face: `TableLog.scan` + the `PruneLogScan`
@@ -18,14 +17,12 @@ class LogScanSpec extends SparkSpec {
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString + "/t"
 
-  /** Count the parquet files the optimized plan will open. */
-  private def filesScanned(df: DataFrame): Int =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.inputFiles.length
-        case _ => 0
-      }
-    }.sum
+  /** Files the per-column range stats alone keep for a conjunction of
+    * `(column, lo, hi)` ranges — what the box pass tightens. */
+  private def perColumnKept(t: String, ranges: (String, Long, Long)*): Int =
+    ranges.foldLeft(TableLog.snapshotOrFail(t)) { case (s, (c, lo, hi)) =>
+      s.copy(files = TableLog.prunedFilesOf(s, c, lo, hi))
+    }.files.size
 
   private def mkTable(): String = {
     val t = tmp("graft_log_scan")
@@ -107,13 +104,11 @@ class LogScanSpec extends SparkSpec {
     val e = TableLog.read(spark, t).where($"k".between(1000, 1499))
       .agg(sum("v"), count(lit(1))).head
     assert(r.getLong(0) == e.getLong(0) && r.getLong(1) == e.getLong(1))
-    // disabling the conf disables pruning but not correctness
-    spark.conf.set(graft.plans.PruneLogScan.CONF_KEY, "false")
-    try {
-      val q2 = spark.sql("SELECT count(*) AS n FROM lake WHERE k BETWEEN 1000 AND 1499")
-      assert(filesScanned(q2) == 8)
-      assert(q2.head.getLong(0) == 500)
-    } finally spark.conf.set(graft.plans.PruneLogScan.CONF_KEY, "true")
+    // a pruned SQL count equals the eager read's
+    val q2 = spark.sql("SELECT count(*) AS n FROM lake WHERE k BETWEEN 1000 AND 1499")
+    assert(filesScanned(q2) <= 2)
+    assert(q2.head.getLong(0) ==
+      TableLog.read(spark, t).where($"k".between(1000, 1499)).count())
   }
 
   test("scan: self-join deduplicates the relation; join filters prune each side independently") {
@@ -272,12 +267,7 @@ class LogScanSpec extends SparkSpec {
     // a box there is kept by per-column stats, dropped by the z test
     val q = df.where($"a".between(0, 40) && $"b".between(64, 100))
     val withBox = filesScanned(q)
-    spark.conf.set(graft.plans.PruneLogScan.BOX_KEY, "false")
-    val withoutBox =
-      try filesScanned(
-        TableLog.scan(spark, t)
-          .where($"a".between(0, 40) && $"b".between(64, 100)))
-      finally spark.conf.unset(graft.plans.PruneLogScan.BOX_KEY)
+    val withoutBox = perColumnKept(t, ("a", 0, 40), ("b", 64, 100))
     assert(withBox < withoutBox,
       s"z-interval test must tighten per-column pruning " +
         s"($withBox vs $withoutBox)")
@@ -290,10 +280,6 @@ class LogScanSpec extends SparkSpec {
       checkSame(got, TableLog.read(spark, t)
         .where($"a".between(al, ah) && $"b".between(bl, bh)))
     }
-    // the explicit face prunes the same way and agrees
-    val face = TableLog.readWhereBox(spark, t, "a", 0, 40, "b", 64, 100)
-    assert(face.count() == 41L * 37L)
-    assert(filesScanned(face) == withBox)
     // a LATER append carries no z2 stat: kept by the box pass, rows
     // still correct (stats prune IO, never semantics)
     TableLog.append(spark, t, Seq((20L, 80L, 99L)).toDF("a", "b", "v"))
@@ -321,10 +307,7 @@ class LogScanSpec extends SparkSpec {
       def q() = TableLog.scan(spark, t)
         .where($"a".between(al, ah) && $"b".between(bl, bh))
       val withBox = filesScanned(q())
-      spark.conf.set(graft.plans.PruneLogScan.BOX_KEY, "false")
-      val withoutBox =
-        try filesScanned(q())
-        finally spark.conf.unset(graft.plans.PruneLogScan.BOX_KEY)
+      val withoutBox = perColumnKept(t, ("a", al, ah), ("b", bl, bh))
       assert(withBox <= withoutBox)
       if (withBox < withoutBox) tightened = true
       // correctness: scan ≡ eager read on every box
@@ -370,10 +353,10 @@ class LogScanSpec extends SparkSpec {
         .where($"a".between(al, ah) && $"b".between(bl, bh) &&
           $"c".between(cl, ch))
       val withBox = filesScanned(q())
-      spark.conf.set(graft.plans.PruneLogScan.BOX_KEY, "false")
-      val (withoutBox, expect) =
-        try (filesScanned(q()), q().count())
-        finally spark.conf.unset(graft.plans.PruneLogScan.BOX_KEY)
+      val withoutBox =
+        perColumnKept(t, ("a", al, ah), ("b", bl, bh), ("c", cl, ch))
+      val expect = TableLog.read(spark, t).where($"a".between(al, ah) &&
+        $"b".between(bl, bh) && $"c".between(cl, ch)).count()
       assert(withBox <= withoutBox)
       if (withBox < withoutBox) tightened = true
       assert(q().count() == expect)
@@ -425,10 +408,10 @@ class LogScanSpec extends SparkSpec {
         .where($"a".between(al, ah) && $"b".between(bl, bh) &&
           $"c".between(cl, ch))
       val withBox = filesScanned(q())
-      spark.conf.set(graft.plans.PruneLogScan.BOX_KEY, "false")
-      val (withoutBox, expect) =
-        try (filesScanned(q()), q().count())
-        finally spark.conf.unset(graft.plans.PruneLogScan.BOX_KEY)
+      val withoutBox =
+        perColumnKept(t, ("a", al, ah), ("b", bl, bh), ("c", cl, ch))
+      val expect = TableLog.read(spark, t).where($"a".between(al, ah) &&
+        $"b".between(bl, bh) && $"c".between(cl, ch)).count()
       assert(withBox <= withoutBox)
       if (withBox < withoutBox) tightened = true
       assert(q().count() == expect)

@@ -13,6 +13,19 @@ class TableLogSpec extends SparkSpec {
   private def tmp(name: String): String =
     java.nio.file.Files.createTempDirectory(name).toString + "/t"
 
+  /** `scan` of `t` filtered by `cond`. */
+  private def scanWhere(t: String, cond: org.apache.spark.sql.Column) =
+    TableLog.scan(spark, t).where(cond)
+
+  /** Data files of `t` that `scanWhere(t, cond)` opens (the delete
+    * sidecars a merge-on-read scan anti-joins are not counted). */
+  private def dataFilesScanned(t: String,
+      cond: org.apache.spark.sql.Column): Int = {
+    val data = TableLog.snapshot(t).get.files
+      .map(f => TableLog.lastTwo(f.path)).toSet
+    filesOpened(scanWhere(t, cond)).count(data)
+  }
+
   test("create/append/read: versions increment, content is the union") {
     val t = tmp("graft_log_basic")
     val v1 = TableLog.create(spark, t, spark.range(100).toDF("id"))
@@ -174,8 +187,8 @@ class TableLogSpec extends SparkSpec {
       statsCols = Seq("id", "sparse"))
     // stat-less file is always kept (absence never drops data), so a
     // range read over sparse stays exact across the mixed table
-    assert(TableLog.prunedFiles(t, "sparse", 0, 1000).size == 2)
-    assert(TableLog.readWhere(spark, t, "sparse", 200, 210).count() == 6)
+    assert(dataFilesScanned(t, col("sparse").between(0, 1000)) == 2)
+    assert(scanWhere(t, col("sparse").between(200, 210)).count() == 6)
     assert(TableLog.read(spark, t).count() == 200)
   }
 
@@ -193,14 +206,14 @@ class TableLogSpec extends SparkSpec {
     assert(st.min == "A" && st.max == "🙂",
       s"Spark stats are UTF-8 ordered: $st")
     // the poisoned prune: value inside the UTF-8 range, outside UTF-16's
-    assert(TableLog.prunedFilesIn(t, "s", Seq("￿")).size == 1,
+    assert(dataFilesScanned(t, col("s") === "￿") == 1,
       "file must be kept: \\uffff is within [A, U+1F642] in UTF-8 order")
-    assert(TableLog.readWhereIn(spark, t, "s", Seq("￿")).count() == 1)
+    assert(scanWhere(t, col("s").isin("￿")).count() == 1)
     // and the comparator itself, on the exact disagreement pair
     assert(TableLog.utf8Leq("￿", "🙂"))
     assert(!TableLog.utf8Leq("🙂", "￿"))
     // pruning still prunes: a disjoint probe opens nothing
-    assert(TableLog.prunedFilesIn(t, "s", Seq("0")).isEmpty)
+    assert(dataFilesScanned(t, col("s") === "0") == 0)
   }
 
   test("mergeUpsert audit is real: manifest rows == base − matched + source") {
@@ -317,21 +330,23 @@ class TableLogSpec extends SparkSpec {
     assert(s.files.flatMap(_.stats).map(_.min).min == 0L &&
       s.files.flatMap(_.stats).map(_.max).max == 9999L)
     // a 1/8-width range predicate opens ~1 file, not 8
-    val kept = TableLog.prunedFiles(t, "id", 2000, 2999)
-    assert(kept.size <= 2, s"expected ≤2 of 8 files kept, got ${kept.size}")
-    assert(TableLog.readWhere(spark, t, "id", 2000, 2999).count() == 1000)
+    val slice = col("id").between(2000, 2999)
+    val kept = dataFilesScanned(t, slice)
+    assert(kept <= 2, s"expected ≤2 of 8 files kept, got $kept")
+    assert(scanWhere(t, slice).count() == 1000)
     // disjoint range → zero files, empty result, same schema
-    assert(TableLog.prunedFiles(t, "id", 50000, 60000).isEmpty)
-    assert(TableLog.readWhere(spark, t, "id", 50000, 60000).count() == 0)
+    val disjoint = col("id").between(50000, 60000)
+    assert(dataFilesScanned(t, disjoint) == 0)
+    assert(scanWhere(t, disjoint).count() == 0)
     // an append WITHOUT stats: its files always stay in the pruned set,
-    // so readWhere stays exact even on a mixed-stats table
+    // so the filtered read stays exact even on a mixed-stats table
     TableLog.append(spark, t, spark.range(2500, 2600).toDF("id"))
-    assert(TableLog.prunedFiles(t, "id", 2000, 2999).size > kept.size)
-    assert(TableLog.readWhere(spark, t, "id", 2000, 2999).count() == 1100)
+    assert(dataFilesScanned(t, slice) > kept)
+    assert(scanWhere(t, slice).count() == 1100)
     // compact with stats re-establishes skipping over the merged layout
     TableLog.compact(spark, t, 1L << 18, statsCols = Seq("id"))
     assert(TableLog.snapshot(t).get.files.forall(_.stats.nonEmpty))
-    assert(TableLog.readWhere(spark, t, "id", 2000, 2999).count() == 1100)
+    assert(scanWhere(t, slice).count() == 1100)
   }
 
   test("txn-id appends are idempotent; streaming ingest is exactly-once") {
@@ -486,7 +501,7 @@ class TableLogSpec extends SparkSpec {
       org.apache.spark.sql.types.LongType)
     assert(TableLog.read(spark, t).where(col("id") === 700L).count() == 1)
     // stat pruning stays correct across mixed narrow/wide files
-    val pruned = TableLog.readWhere(spark, t, "id", 0L, 10L)
+    val pruned = scanWhere(t, col("id").between(0L, 10L))
       .agg(count(lit(1))).head.getLong(0)
     assert(pruned == 11) // ids 0..10 from v1; 700 and the 5e9s pruned out
     // a LOSSY change stays refused: long -> double loses >2^53
@@ -509,11 +524,11 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t, df.repartitionByRange(5, col("cat")),
       strStatsCols = Seq("cat"))
     val total = TableLog.snapshot(t).get.files.size
-    val kept = TableLog.prunedFilesIn(t, "cat", Seq("alpha"))
-    assert(kept.size < total, s"no pruning: $total files, kept ${kept.size}")
+    val kept = dataFilesScanned(t, col("cat").isin("alpha"))
+    assert(kept < total, s"no pruning: $total files, kept $kept")
     // content: pruned read == full filter, including the odd-char value
     for (want <- Seq(Seq("alpha"), Seq("x;y:z=w"), Seq("beta", "gamma"))) {
-      val pruned = TableLog.readWhereIn(spark, t, "cat", want)
+      val pruned = scanWhere(t, col("cat").isin(want: _*))
         .agg(count(lit(1)), sum("id")).head
       val full = TableLog.read(spark, t).where(col("cat").isin(want: _*))
         .agg(count(lit(1)), sum("id")).head
@@ -522,7 +537,7 @@ class TableLogSpec extends SparkSpec {
     // a later append WITHOUT string stats: its files have no range for
     // cat, so every IN-read must keep (not skip) them
     TableLog.append(spark, t, Seq((5000L, "alpha")).toDF("id", "cat"))
-    assert(TableLog.readWhereIn(spark, t, "cat", Seq("alpha"))
+    assert(scanWhere(t, col("cat").isin("alpha"))
       .where(col("id") === 5000L).count() == 1)
   }
 
@@ -533,10 +548,10 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t, df.repartitionByRange(8, col("cell")),
       statsCols = Seq("cell"))
     val total = TableLog.snapshot(t).get.files.size
-    val kept = TableLog.prunedFilesInLong(t, "cell", Seq(3L))
-    assert(kept.size < total, s"no pruning: $total files, kept ${kept.size}")
+    val kept = dataFilesScanned(t, col("cell").isin(3L))
+    assert(kept < total, s"no pruning: $total files, kept $kept")
     for (want <- Seq(Seq(3L), Seq(0L, 7L), Seq(42L))) {
-      val pruned = TableLog.readWhereInLong(spark, t, "cell", want)
+      val pruned = scanWhere(t, col("cell").isin(want: _*))
         .agg(count(lit(1)), sum("id")).head
       val full = TableLog.read(spark, t).where(col("cell").isin(want: _*))
         .agg(count(lit(1)), sum("id")).head
@@ -544,7 +559,7 @@ class TableLogSpec extends SparkSpec {
     }
     // stat-less append: its files must be kept by every IN-read
     TableLog.append(spark, t, Seq((5000L, 3L)).toDF("id", "cell"))
-    assert(TableLog.readWhereInLong(spark, t, "cell", Seq(3L))
+    assert(scanWhere(t, col("cell").isin(3L))
       .where(col("id") === 5000L).count() == 1)
   }
 
@@ -2253,7 +2268,7 @@ class TableLogSpec extends SparkSpec {
     // the carried file keeps its ORIGINAL version (version fences intact)
     assert(after.files.find(_.path == bigPath).get.ver == 1)
     // the packed replacement has fresh stats: pruning still works
-    assert(TableLog.prunedFiles(t, "k", 100000, 100050).size == 1)
+    assert(dataFilesScanned(t, col("k").between(100000, 100050)) == 1)
     // below-threshold call is a no-op WITHOUT a commit
     assert(TableLog.compactSmall(spark, t, smallBytes = 10) == v)
     assert(TableLog.snapshot(t).get.version == v)
@@ -2602,7 +2617,7 @@ class TableLogSpec extends SparkSpec {
     assert(java.nio.file.Files.isSameFile(
       java.nio.file.Paths.get(src, f0), java.nio.file.Paths.get(dst, f0)))
     // stats pruning works off the carried manifest
-    assert(TableLog.prunedFiles(dst, "k", 0, 100).size == 1)
+    assert(dataFilesScanned(dst, col("k").between(0, 100)) == 1)
     // CHECK constraints carried: violating append to the CLONE refused
     val e = intercept[IllegalArgumentException](TableLog.append(spark, dst,
       Seq((2000L, 99L)).toDF("k", "val")))
@@ -2669,7 +2684,7 @@ class TableLogSpec extends SparkSpec {
     assert(r8.columns.toSeq == Seq("k", "v"))
     assert(r8.where($"k" === 3L).head.getLong(1) == 6L,
       "restored column must keep its values, not freed-fence to null")
-    assert(TableLog.prunedFiles(t, "k", 0, 10).nonEmpty)
+    assert(dataFilesScanned(t, col("k").between(0, 10)) > 0)
     // CURRENT checks certify restored content: a restore that would
     // smuggle pre-constraint rows back in is refused
     TableLog.deleteWhere(spark, t, "k", 100, 149)                 // v9
@@ -2746,12 +2761,12 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t, spark.range(4000).select($"id".as("k"),
       ($"id" % 7).as("v")).repartitionByRange(8, $"k"),
       statsCols = Seq("k"))
-    assert(TableLog.prunedFiles(t, "k", 100, 200).size == 1)
+    assert(dataFilesScanned(t, col("k").between(100, 200)) == 1)
     TableLog.renameColumn(spark, t, "k", "key")
     // the rename must NOT degrade pruning to "absent stat keeps all"
-    val kept = TableLog.prunedFiles(t, "key", 100, 200)
-    assert(kept.size == 1, s"rename lost pruning: kept ${kept.size} of 8")
-    assert(TableLog.readWhere(spark, t, "key", 100, 200).count() == 101)
+    val kept = dataFilesScanned(t, col("key").between(100, 200))
+    assert(kept == 1, s"rename lost pruning: kept $kept of 8")
+    assert(scanWhere(t, col("key").between(100, 200)).count() == 101)
     // the COW update prune stays tight across the rename too: only the
     // one range-overlapping (pre-rename) file is rewritten
     val before = TableLog.snapshot(t).get.files.map(_.path).toSet
@@ -2766,10 +2781,9 @@ class TableLogSpec extends SparkSpec {
     TableLog.dropColumn(spark, t, "key")
     TableLog.append(spark, t, spark.range(1).select(lit(5000L).as("key"),
       lit(0L).as("v")).coalesce(1), statsCols = Seq("key"))
-    val kept2 = TableLog.prunedFiles(t, "key", 0, 10000)
-    assert(kept2.size == 1,
+    assert(dataFilesScanned(t, col("key").between(0, 10000)) == 1,
       "dead-incarnation files must prune outright for the re-added column")
-    assert(TableLog.readWhere(spark, t, "key", 0, 10000).count() == 1)
+    assert(scanWhere(t, col("key").between(0, 10000)).count() == 1)
   }
 
   test("readChanges across a rename/drop interval resolves old files' physical names") {
@@ -3044,17 +3058,17 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t, df, statsCols = Seq("k"),
       bloomStatsCols = Seq("k"))
     // range stats are indeed blind on this layout
-    assert(TableLog.prunedFiles(t, "k", 42, 42).size == 8)
+    assert(dataFilesScanned(t, col("k").between(42, 42)) == 8)
     // the bloom keeps only the file(s) that can hold the key
-    val hit = TableLog.prunedFilesPoint(spark, t, "k", 42L)
-    assert(hit.size <= 3, s"bloom must prune most files, kept ${hit.size}")
-    val row = TableLog.readWherePoint(spark, t, "k", 42L).collect()
+    val hit = dataFilesScanned(t, col("k") === 42L)
+    assert(hit <= 3, s"bloom must prune most files, kept $hit")
+    val row = scanWhere(t, col("k") === 42L).collect()
     assert(row.map(_.getLong(0)).toSeq == Seq(42L))
     // a value absent from the table: provably-empty result is exact
-    assert(TableLog.readWherePoint(spark, t, "k", 999999L).count() == 0)
+    assert(scanWhere(t, col("k") === 999999L).count() == 0)
     // files without a bloom are kept, never wrongly pruned
     TableLog.append(spark, t, Seq((999999L, -1L)).toDF("k", "payload"))
-    assert(TableLog.readWherePoint(spark, t, "k", 999999L)
+    assert(scanWhere(t, col("k") === 999999L)
       .collect().map(_.getLong(1)).toSeq == Seq(-1L))
     // maintenance that asks for them keeps blooms alive: post-compaction
     // point probes still prune and still find every row
@@ -3062,13 +3076,12 @@ class TableLogSpec extends SparkSpec {
       bloomStatsCols = Seq("k"))
     val afterCompact = TableLog.snapshot(t).get
     assert(afterCompact.files.forall(_.strStats.exists(_.col == "bloom:k")))
-    assert(TableLog.prunedFilesPoint(spark, t, "k", 42L).size <
-      afterCompact.files.size)
-    assert(TableLog.readWherePoint(spark, t, "k", 42L)
+    assert(dataFilesScanned(t, col("k") === 42L) < afterCompact.files.size)
+    assert(scanWhere(t, col("k") === 42L)
       .collect().map(_.getLong(0)).toSeq == Seq(42L))
     // ...and a copy-on-write delete rebuilds them for its rewritten files
     TableLog.deleteWhere(spark, t, "k", 42, 42, bloomStatsCols = Seq("k"))
-    assert(TableLog.readWherePoint(spark, t, "k", 42L).count() == 0)
+    assert(scanWhere(t, col("k") === 42L).count() == 0)
     assert(TableLog.snapshot(t).get.files
       .forall(_.strStats.exists(_.col == "bloom:k")))
     // a saturated (high-NDV) file's bloom is OMITTED, not stored
@@ -3079,8 +3092,39 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.snapshot(t).get.files
       .exists(_.strStats.forall(_.col != "bloom:k")),
       "the high-NDV files must carry no bloom")
-    assert(TableLog.readWherePoint(spark, t, "k", 1100000L)
+    assert(scanWhere(t, col("k") === 1100000L)
       .collect().map(_.getLong(0)).toSeq == Seq(1100000L))
+  }
+
+  test("bloom point lookups find rows in every type cohort of a widened column") {
+    val t = tmp("graft_log_bloom_widen")
+    // unclustered keys, so range stats keep every file of a cohort and
+    // only the blooms can prune; each cohort hashes its keys under the
+    // type its files were written with
+    def batch(lo: Long, n: Long, files: Int) = spark.range(0, n, 1, files)
+      .select((($"id" * 2654435761L) % n + lo).as("id"), $"id".as("payload"))
+    val asInt = col("id").cast("int").as("id")
+    TableLog.create(spark, t, batch(0, 4000, 4).select(asInt, $"payload"),
+      statsCols = Seq("id"), bloomStatsCols = Seq("id"))
+    TableLog.widenColumnType(spark, t, "id",
+      org.apache.spark.sql.types.LongType)
+    TableLog.append(spark, t, batch(4000, 2000, 2).select(asInt, $"payload"),
+      statsCols = Seq("id"), bloomStatsCols = Seq("id"))
+    TableLog.append(spark, t, batch(6000, 2000, 2),
+      statsCols = Seq("id"), bloomStatsCols = Seq("id"))
+    assert(TableLog.read(spark, t).schema("id").dataType ==
+      org.apache.spark.sql.types.LongType)
+    // one key from the int create, the int append and the long append,
+    // each probed with a long and with an int literal
+    for (v <- Seq(1234L, 4321L, 7654L); probe <- Seq[Any](v, v.toInt)) {
+      val q = scanWhere(t, col("id") === probe)
+      assert(q.collect().map(_.getLong(0)).toSeq == Seq(v),
+        s"point lookup of $v (${probe.getClass.getSimpleName}) lost its row")
+      val rangeKept = dataFilesScanned(t, col("id").between(v, v))
+      val bloomKept = dataFilesScanned(t, col("id") === probe)
+      assert(bloomKept < rangeKept,
+        s"bloom must prune $v: kept $bloomKept of $rangeKept range-kept files")
+    }
   }
 
   test("maintainAgg absorbs a copy-on-write delete as an O(delta) refresh") {
@@ -3170,7 +3214,8 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, t, gen(2), statsCols = Seq("k"),
       counterDelta = Map("docs" -> 1000L))
     val beforeFiles = TableLog.snapshot(t).get.files.size
-    val beforeProbe = TableLog.prunedFiles(t, "k", 100, 150).size
+    val probe = col("k").between(100, 150)
+    val beforeProbe = dataFilesScanned(t, probe)
     val sumBefore = TableLog.read(spark, t).agg(sum($"k")).head.getLong(0)
     val v = TableLog.compactClustered(spark, t, nFiles = 4,
       clusterCol = "k", statsCols = Seq("k"))
@@ -3182,7 +3227,7 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.snapshot(t).get.files.size == 4)
     assert(beforeFiles >= 12)
     assert(beforeProbe >= 3)
-    val afterProbe = TableLog.prunedFiles(t, "k", 100, 150).size
+    val afterProbe = dataFilesScanned(t, probe)
     assert(afterProbe <= 2 && afterProbe < beforeProbe)
     // counters preserved verbatim by the layout-only rewrite
     assert(TableLog.commitStats(t, v).get._2("docs") == 3000L)
@@ -3195,10 +3240,10 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t,
       df.repartitionByRange(8, $"source").sortWithinPartitions("source"),
       strStatsCols = Seq("source"))
-    assert(TableLog.prunedFilesIn(t, "source", Seq("src0")).size <= 2)
+    assert(dataFilesScanned(t, col("source").isin("src0")) <= 2)
     // the byte-targeted compact (not just compactClustered) must forward
     // strStatsCols — a silent drop here would keep reads correct but
-    // degrade every readWhereIn probe to a full-file scan
+    // degrade every categorical probe to a full-file scan
     TableLog.compact(spark, t, targetBytes = 8 * 1024,
       strStatsCols = Seq("source"))
     val files = TableLog.snapshot(t).get.files
@@ -3208,8 +3253,7 @@ class TableLogSpec extends SparkSpec {
     // chunking and is compactClustered's contract, not this one's
     assert(files.forall(_.strStats.exists(_.col == "source")),
       s"string stats dropped by compact(): ${files.map(_.strStats)}")
-    assert(TableLog.readWhereIn(spark, t, "source", Seq("src0"))
-      .count() == 500)
+    assert(scanWhere(t, col("source").isin("src0")).count() == 500)
   }
 
   test("pinned counters: set-semantics, create refuses a non-empty table") {

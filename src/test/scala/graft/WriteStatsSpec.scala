@@ -4,8 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import graft.sinks.TableLog
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.Bridge
 
@@ -84,15 +83,6 @@ class WriteStatsSpec extends SparkSpec {
           bytes = Files.size(Paths.get(t, rel)), rows = rows)
       }.toMap
   }
-
-  /** Parquet files the optimized plan of `df` opens (table-relative). */
-  private def filesScanned(df: DataFrame): Set[String] =
-    df.queryExecution.optimizedPlan.collect {
-      case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation => h.location.inputFiles.toSeq
-        case _ => Nil
-      }
-    }.flatten.map(TableLog.lastTwo).toSet
 
   /** Spark jobs started while `body` runs. */
   private def jobsOf(body: => Unit): Int = {
@@ -200,38 +190,48 @@ class WriteStatsSpec extends SparkSpec {
       "stats, bloom and a CHECK; deleteDv <= 4 and mergeUpsert <= 9; " +
       "bloom point lookups read the files the recomputed blooms admit") {
     val t = tmp("graft_ws_jobs")
+    // `k`: an unclustered long key (every file spans its whole domain)
     def batch(lo: Long, hi: Long) =
       spark.range(lo, hi, 1L, 4).selectExpr(
-        "id", "id % 1000 AS amount", "concat('t', id DIV 100) AS tag")
+        "id", "id % 1000 AS amount", "concat('t', id DIV 100) AS tag",
+        "id * 2654435761 % 8000 AS k")
     val stats = Seq("id", "amount")
     val strStats = Seq("tag")
-    val bloom = Seq("tag")
+    val bloom = Seq("tag", "k")
     assert(jobsOf(TableLog.create(spark, t, batch(0, 4000), stats,
       strStats, bloomStatsCols = bloom)) == 1)
     TableLog.addCheckConstraint(spark, t, "amount_nonneg", "amount >= 0")
     assert(jobsOf(TableLog.append(spark, t, batch(4000, 8000), stats,
       strStatsCols = strStats, bloomStatsCols = bloom)) == 1)
-    // bloom point lookups prune to exactly the files whose blooms, as
-    // the aggregate formula computes them from each file's own rows,
-    // may contain the probe
+    // bloom point lookups, on the string and on the long bloom column,
+    // prune to exactly the files whose blooms, as the aggregate formula
+    // computes them from each file's own rows, may contain the probe;
+    // the probe is hashed on the driver, so a lookup is the read's job
     val snap = TableLog.snapshot(t).get
-    val perFile = spark.read.parquet(snap.files.map(f => s"$t/${f.path}"): _*)
-      .groupBy(input_file_name()).agg(
-        collect_set(bloomPos(col("tag"), 0)),
-        (1 until K).map(i => collect_set(bloomPos(col("tag"), i))): _*)
-      .collect().map(r => TableLog.lastTwo(r.getString(0)) ->
-        (0 until K).flatMap(i => r.getSeq[Int](1 + i)).toSet).toMap
-    Seq("t17", "t55", "t79", "t_absent").foreach { v =>
-      val probe = spark.range(1).select((0 until K).map(i =>
-        bloomPos(lit(v), i)): _*).head()
-      val pos = (0 until K).map(probe.getInt)
-      val want = snap.files.map(f => TableLog.lastTwo(f.path)).filter { f =>
-        perFile(f).size.toDouble / M > TableLog.bloomMaxFill ||
-          pos.forall(perFile(f).contains)
-      }.toSet
-      val q = TableLog.scan(spark, t).where(col("tag") === v)
-      assert(filesScanned(q) == want, s"bloom lookup of $v")
-      assert(q.count() == (if (v == "t_absent") 0L else 100L))
+    for ((c, probes, rows) <- Seq(
+        ("tag", Seq[Any]("t17", "t55", "t79", "t_absent"), 100L),
+        ("k", Seq[Any](42L, 4242L, 7999L, 123456L), 1L))) {
+      val perFile =
+        spark.read.parquet(snap.files.map(f => s"$t/${f.path}"): _*)
+          .groupBy(input_file_name()).agg(
+            collect_set(bloomPos(col(c), 0)),
+            (1 until K).map(i => collect_set(bloomPos(col(c), i))): _*)
+          .collect().map(r => TableLog.lastTwo(r.getString(0)) ->
+            (0 until K).flatMap(i => r.getSeq[Int](1 + i)).toSet).toMap
+      probes.foreach { v =>
+        val probe = spark.range(1).select((0 until K).map(i =>
+          bloomPos(lit(v), i)): _*).head()
+        val pos = (0 until K).map(probe.getInt)
+        val want = snap.files.map(f => TableLog.lastTwo(f.path)).filter { f =>
+          perFile(f).size.toDouble / M > TableLog.bloomMaxFill ||
+            pos.forall(perFile(f).contains)
+        }.toSet
+        def q = TableLog.scan(spark, t).where(col(c) === v)
+        assert(filesOpened(q).toSet == want, s"bloom lookup of $c = $v")
+        assert(jobsOf(q.collect()) == 1, s"bloom lookup of $c = $v")
+        val found = if (v == "t_absent" || v == 123456L) 0L else rows
+        assert(q.count() == found)
+      }
     }
     val deleteJobs = jobsOf(TableLog.deleteDv(spark, t,
       col("id") < 3000 && pmod(col("id"), lit(7L)) === 3,
@@ -240,8 +240,8 @@ class WriteStatsSpec extends SparkSpec {
     assert(deleteJobs <= 4, s"deleteDv ran $deleteJobs jobs")
     // upserts of existing keys and of new ones, one typed partition each
     def upserts(lo: Long, hi: Long) = spark.range(lo, hi, 1L, 1).as[Long]
-      .map(id => (id, id % 1000 + 1, s"t${id / 100}"))
-      .toDF("id", "amount", "tag")
+      .map(id => (id, id % 1000 + 1, s"t${id / 100}", id * 2654435761L % 8000))
+      .toDF("id", "amount", "tag", "k")
     val mergeJobs = jobsOf(TableLog.mergeUpsert(spark, t,
       upserts(7500, 8000).unionByName(upserts(8000, 8500)), Seq("id")))
     // the source's aggregate and CHECK, the deletion vector's collect,
