@@ -3659,9 +3659,10 @@ object SparkEntry {
 
   /** The persistent ANN store's FULL lifecycle under the oracle gate
     * (AnnStoreOps — formerly spec-validated only): train + write the
-    * cell-partitioned store on 90% of the vectors, `append` the held-out
-    * 10% with the STORED codebook (no retrain — the standard IVF
-    * maintenance move), then `probe` the union with partition pruning to
+    * cell-clustered store on 90% of the vectors (a repeated call
+    * replaces it in one new version of each table), `append` the
+    * held-out 10% with the STORED codebook (no retrain — the standard
+    * IVF maintenance move), then `probe` the union with file pruning to
     * the nprobe nearest cells. Every stage is the deterministic
     * exact-integer Lloyd math, so the DuckDB oracle retrains the
     * identical store in SQL: stored base rows carry the first-pass
@@ -4151,36 +4152,38 @@ object SparkEntry {
     * of the table). Base layout: events partitioned by type; incremental:
     * the 'click' partition rewritten with doubled cents. The read-back
     * aggregate proves untouched partitions kept their data. */
-  /** O27: small-file compaction (LayoutOps.compact) driven through the
-    * gate: fragment a documents projection into 64 tiny files, compact to
-    * target-size files with a narrow coalesce, and oracle the read-back
-    * against the original table — layout changed, content bit-identical.
-    * The file-count reduction itself is asserted here (fail loud, not
-    * just fast) and pinned again in ScaleShapeSpec. */
+  /** O27: small-file compaction (TableLog.compact) driven through the
+    * gate: fragment a documents projection into a 64-file table, compact
+    * it to target-size files with a narrow coalesce, and oracle the
+    * read-back against the original table — layout changed, content
+    * bit-identical. The file-count reduction itself is asserted here
+    * from the snapshots (fail loud, not just fast) and pinned again in
+    * ScaleShapeSpec. */
   private val compactReady = scala.collection.mutable.Set[String]()
   private def o27Compact(s: SparkSession, dir: String): DataFrame = {
-    val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
-    val frag = s"$tmpRoot/frag_$key"
-    val comp = s"$tmpRoot/compact_$key"
+    val t = s"$tmpRoot/compact_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     compactReady.synchronized {
-      if (!compactReady.contains(comp)) {
-        T(s, dir, "documents").select("doc_id", "lang", "n_chars")
-          .repartition(64)
-          .write.mode("overwrite").parquet(frag)
-        val (before, after) =
-          operators.LayoutOps.compact(s, frag, comp, targetBytes = 8L * 1024 * 1024)
+      if (!compactReady.contains(t)) {
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
+        graft.sinks.TableLog.create(s, t, T(s, dir, "documents")
+          .select("doc_id", "lang", "n_chars").repartition(64))
+        val before = graft.sinks.TableLog.snapshot(t).get.files.size
+        graft.sinks.TableLog.compact(s, t, targetBytes = 8L * 1024 * 1024)
+        val after = graft.sinks.TableLog.snapshot(t).get.files.size
         require(after < before, s"compaction must reduce files: $before -> $after")
-        compactReady += comp
+        compactReady += t
       }
     }
-    s.read.parquet(comp).orderBy("doc_id")
+    graft.sinks.TableLog.read(s, t).orderBy("doc_id")
   }
 
-  /** O28: z-order clustered write (LayoutOps.zOrderWrite): lineitem laid
+  /** O28: z-order clustered layout (TableLog.zOrder): lineitem laid
     * out by the Morton interleave of (l_partkey, l_suppkey), then a
-    * two-dimensional range predicate aggregated off the clustered copy.
-    * Content equality is the oracle; the data-skipping property (per-file
-    * min/max spans shrink on BOTH dimensions) is pinned in ScaleShapeSpec. */
+    * two-dimensional range predicate aggregated off the clustered copy
+    * through `scan`, whose z-interval stats prune the files the box
+    * misses. Content equality is the oracle; the data-skipping property
+    * (per-file min/max spans shrink on BOTH dimensions) is pinned in
+    * ScaleShapeSpec. */
   private val zorderReady = scala.collection.mutable.Set[String]()
   private def o28ZOrder(s: SparkSession, dir: String): DataFrame = {
     val out = s"$tmpRoot/zorder_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
@@ -4193,14 +4196,16 @@ object SparkEntry {
       (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     zorderReady.synchronized {
       if (!zorderReady.contains(out)) {
-        operators.LayoutOps.zOrderWrite(li, out, nFiles = 16,
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+        graft.sinks.TableLog.create(s, out, li)
+        graft.sinks.TableLog.zOrder(s, out, nFiles = 16,
           "l_partkey", (pLo, pHi), "l_suppkey", (sLo, sHi))
         zorderReady += out
       }
     }
     // 2-d corner predicate: an eighth of each key range — the shape whose
     // file-skipping only a multi-dimensional layout serves
-    s.read.parquet(out)
+    graft.sinks.TableLog.scan(s, out)
       .where(col("l_partkey") < lit(pLo + (pHi - pLo) / 8) &&
         col("l_suppkey") < lit(sLo + (sHi - sLo) / 8))
       .groupBy("l_returnflag")

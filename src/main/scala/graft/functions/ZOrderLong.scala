@@ -118,6 +118,55 @@ object ZOrderLong {
       org.apache.spark.sql.graft.Bridge.expression(b),
       org.apache.spark.sql.graft.Bridge.expression(c)))
 
+  /** `x` min/max-normalized to [0, 65535] as a long (z-order input).
+    * Two exact-integer forms, picked by span at plan-build time: the
+    * multiply-first form `(x-min)*65535/span` overflows Long once
+    * `span ≥ ~2^47` (65535 ≈ 2^16 of headroom), so wide key ranges —
+    * plausible for synthetic 64-bit ids — switch to divide-first
+    * fixed-width bucketing `(x-min)/ceil(span/65536)`, which also lands in
+    * [0, 65535] and never overflows. */
+  def norm16(x: Column, min: Long, max: Long): Column = {
+    import org.apache.spark.sql.functions.{least, lit}
+    val span = (BigInt(max) - BigInt(min)).max(BigInt(1))
+    if (span <= BigInt(1L << 46))
+      ((x - lit(min)) * lit(65535L) / lit(span.toLong)).cast("long")
+    else if (span < BigInt(Long.MaxValue)) {
+      // multiply-first would overflow; (x-min) itself still fits in Long
+      val bucket = (span / 65536 + 1).toLong
+      ((x - lit(min)) / lit(bucket)).cast("long")
+    } else {
+      // span exceeds Long entirely (e.g. full 64-bit id range): bucket in
+      // double space — monotone, and the ~2^48 bucket width dwarfs the
+      // 2^11-ulp double rounding at this magnitude. Rounding can inflate
+      // (x-min) past the true span at the extremes, so clamp to 65535.
+      val bucket = (span / 65536 + 1).toDouble
+      least(lit(65535L),
+        ((x.cast("double") - lit(min.toDouble)) / lit(bucket)).cast("long"))
+    }
+  }
+
+  /** Driver-side scalar TWIN of `norm16` — bit-identical to the Column
+    * form at any value (same three span branches, same double-division
+    * semantics Spark's `/` uses on longs), so a READER normalizing a
+    * query bound lands in exactly the cell the writer's z computation
+    * did. Monotone non-decreasing, which is what the box prune's
+    * cell-range coverage argument needs. `x` must be within
+    * [min, max] (callers clamp query bounds first). */
+  def norm16Scalar(x: Long, min: Long, max: Long): Long = {
+    val span = (BigInt(max) - BigInt(min)).max(BigInt(1))
+    if (span <= BigInt(1L << 46))
+      // Spark: Multiply(long,long)=long, Divide(long,long)=double,
+      // cast("long") truncates — replicated exactly
+      (((x - min) * 65535L).toDouble / span.toLong.toDouble).toLong
+    else if (span < BigInt(Long.MaxValue)) {
+      val bucket = (span / 65536 + 1).toLong
+      ((x - min).toDouble / bucket.toDouble).toLong
+    } else {
+      val bucket = (span / 65536 + 1).toDouble
+      math.min(65535L, ((x.toDouble - min.toDouble) / bucket).toLong)
+    }
+  }
+
   /** Does the z-interval [zlo, zhi] contain the z-value of ANY cell in
     * the box [alo, ahi] × [blo, bhi] (cell space [0, 65535]²)? The
     * file-level decision behind multi-dimensional data skipping: a

@@ -940,17 +940,13 @@ object DedupOps {
     val nlist = graft.operators.SimilarityOps.nlistFor(n, targetCellRows)
     val c1 = graft.operators.SimilarityOps.lloydFit(df, idCol, vecCol,
       nlist, fitSampleTarget = 20L * nlist)
-    import spark.implicits._
     val cbv = graft.sinks.TableLog.create(spark, codebookTable(table),
-      c1.toSeq.map { case (cell, s, c) => (cell, s.toSeq, c) }
-        .toDF("cell", "s", "c").coalesce(1))
+      SimilarityOps.codebookFrame(spark, c1))
     val quant = df.select(col(idCol).as("id"),
       graft.functions.QuantizeVector.quantize(col(vecCol), 1000.0).as("qe"))
-    val assigned = graft.operators.SimilarityOps
+    val assigned = SimilarityOps.clusterByCell(SimilarityOps
       .assignToCells(quant, "id", c1)
-      .withColumn("nrm", sqrt(VF.dotLong(col("qe"), col("qe")).cast("double")))
-      .repartitionByRange(col("cell"))
-      .sortWithinPartitions("cell")
+      .withColumn("nrm", sqrt(VF.dotLong(col("qe"), col("qe")).cast("double"))))
     // `cbv` pins the codebook VERSION this index's cells were assigned
     // with: readers time-travel the codebook table to exactly that
     // version, so a rebalance (new codebook version + index rewrite) can
@@ -969,22 +965,7 @@ object DedupOps {
     if (graft.sinks.TableLog.latestVersion(codebookTable(table)) == 0L)
       sys.error(s"$table has no pinned codebook — build it with " +
         "buildSemanticIndex (a cell index has no meaningful cold start)")
-    val cbv = graft.sinks.TableLog.snapshot(table)
-      .flatMap(_.counters.get("cbv"))
-      .getOrElse(graft.sinks.TableLog.latestVersion(codebookTable(table)))
-    graft.sinks.TableLog.readVersion(spark, codebookTable(table), cbv)
-      .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
-      .sortBy(_._1)
-  }
-
-  /** Cell-balance metric: max cell rows / mean cell rows (1.0 = even).
-    * Driver-bounded — one count per cell. */
-  def semanticCellSkew(spark: org.apache.spark.sql.SparkSession,
-      table: String): Double = {
-    val counts = graft.sinks.TableLog.read(spark, table)
-      .groupBy("cell").count().collect().map(_.getLong(1))
-    counts.max.toDouble * counts.length / counts.sum.toDouble
+    SimilarityOps.pinnedCodebook(spark, table, codebookTable(table))
   }
 
   /** Re-fit the semantic index's quantizer on TODAY'S corpus and rewrite
@@ -995,9 +976,10 @@ object DedupOps {
     * from the current corpus size, re-fits on the stored quantized rows
     * (md5-deterministic sample — the raw floats are gone, same contract
     * as the ANN store's rebalance), commits the new codebook as a NEW
-    * VERSION of the codebook table, then rewrites the index with every
-    * row re-assigned and the `cbv` counter swung to the new version in
-    * the SAME manifest commit. Readers either see (old index, old
+    * VERSION of the codebook table (replacing its content — the old
+    * codebook stays readable at its version), then rewrites the index
+    * with every row re-assigned and the `cbv` counter swung to the new
+    * version in the SAME manifest commit. Readers either see (old index, old
     * codebook) or (new index, new codebook) — never a mix. Returns
     * (skewBefore, skewAfter).
     *
@@ -1007,27 +989,22 @@ object DedupOps {
     * corpus via buildEmbedIndex.) */
   def rebalanceSemanticIndex(spark: org.apache.spark.sql.SparkSession,
       table: String, targetCellRows: Long = 64L): (Double, Double) = {
-    import spark.implicits._
-    val before = semanticCellSkew(spark, table)
+    val before = SimilarityOps.cellSkew(spark, table)
     val quant = graft.sinks.TableLog.read(spark, table)
       .select(col("id"), col("qe"))
     val n = quant.count()
     val nlist = graft.operators.SimilarityOps.nlistFor(n, targetCellRows)
     val c1 = graft.operators.SimilarityOps.lloydFitQuant(quant, "id",
       nlist, fitSampleTarget = 20L * nlist)
-    val cbv = graft.sinks.TableLog.append(spark, codebookTable(table),
-      c1.toSeq.map { case (cell, s, c) => (cell, s.toSeq, c) }
-        .toDF("cell", "s", "c").coalesce(1))
+    val cbv = SimilarityOps.commitCodebook(spark, codebookTable(table), c1)
     graft.sinks.TableLog.rewrite(spark, table, "rebalance",
       statsCols = Seq("cell"), counterSet = Map("cbv" -> cbv)) { old =>
-      graft.operators.SimilarityOps
+      SimilarityOps.clusterByCell(SimilarityOps
         .assignToCells(old.select(col("id"), col("qe")), "id", c1)
         .withColumn("nrm",
-          sqrt(VF.dotLong(col("qe"), col("qe")).cast("double")))
-        .repartitionByRange(col("cell"))
-        .sortWithinPartitions("cell")
+          sqrt(VF.dotLong(col("qe"), col("qe")).cast("double"))))
     }
-    (before, semanticCellSkew(spark, table))
+    (before, SimilarityOps.cellSkew(spark, table))
   }
 
   /** Near-dup dedup of a NEW vector batch against the semantic cell
@@ -1092,11 +1069,9 @@ object DedupOps {
             coalesce(col("__wm"), lit(sentinel)))).as("match_id"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     synchronized { embedPrevCaches = Seq(bk, decisions) }
-    val survivors = bk.join(
+    val survivors = SimilarityOps.clusterByCell(bk.join(
         decisions.where(!col("dup")).select(col(idCol).as("id")),
-        Seq("id"), "left_semi")
-      .repartitionByRange(col("cell"))
-      .sortWithinPartitions("cell")
+        Seq("id"), "left_semi"))
     val newDocs = survivors.select(col("id")).distinct().count()
     val v = graft.sinks.TableLog.append(spark, table, survivors,
       statsCols = Seq("cell"), txnId = txnId,

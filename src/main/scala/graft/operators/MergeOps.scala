@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * the CDC batch is small — Spark picks it from stats/AQE; at 100 TB the
   * CDC batch is always the small side). No driver loops, no per-row RPC.
   * Output columns are exactly the target's, so the result can overwrite the
-  * target in place; pair with dynamic partition overwrite (o24) to rewrite
-  * only the partitions the CDC batch touches — see `touchedPartitions`.
+  * target; `TableLog`'s merge faces (`mergeUpsert`, `mergeCow`) commit
+  * it through the log.
   */
 object MergeOps {
 
@@ -86,71 +86,5 @@ object MergeOps {
     kept.select(outCols.map { c =>
       when(matched || srcOnly, col(s"__s.$c")).otherwise(col(s"__t.$c")).as(c)
     }: _*)
-  }
-
-  /** Distinct values of `partCol` the CDC batch touches — the partition
-    * pruning list for a merge-write: read/rewrite ONLY these partitions
-    * (dynamic overwrite), leave the rest of the table's files untouched.
-    * Collect is bounded by partition count, not data size. */
-  def touchedPartitions(source: DataFrame, partCol: String): Seq[Any] =
-    source.select(col(partCol)).distinct().collect().map(_.get(0)).toSeq
-
-  /** Partition-pruned MERGE against a partitioned parquet table at `path`:
-    * only partitions the CDC batch touches are read, merged, and rewritten
-    * (staged write + audited per-partition swap); untouched partitions
-    * keep their exact files. This is the 100 TB merge: cost scales with
-    * the CDC batch's partition footprint, not table size.
-    *
-    * "Touched" = the source rows' partition values UNION the partitions
-    * currently holding any merged key. The union matters when a CDC row
-    * moves a key to a different `partCol` value: the stale row lives in a
-    * partition the source never mentions, and pruning to source partitions
-    * alone would leave the key duplicated across partitions. Finding those
-    * costs one column-pruned (keys, partCol) scan of the target
-    * semi-joined against the CDC key set (UNHINTED — the planner
-    * broadcasts a small batch's keys and degrades a bulk backfill to a
-    * shuffle join under the AQE size gate, the same in-plan pattern as
-    * the incremental dedup probes) — skippable via
-    * `partitionKeyStable = true` when `partCol` is functionally determined
-    * by the key (then source and target partitions coincide by contract).
-    * Partitions left EMPTY by the merge (all rows moved out or deleted)
-    * are dropped at publish time. */
-  def mergeWritePartitioned(spark: org.apache.spark.sql.SparkSession,
-      path: String, source: DataFrame, keys: Seq[String], partCol: String,
-      deleteWhen: Option[Column] = None,
-      partitionKeyStable: Boolean = false): Unit = {
-    val srcParts = touchedPartitions(source, partCol)
-    val tgtParts =
-      if (partitionKeyStable) Nil
-      else spark.read.parquet(path)
-        .select((keys :+ partCol).map(col): _*)
-        .join(source.select(keys.map(col): _*).distinct(),
-          keys, "left_semi")
-        .select(col(partCol)).distinct().collect().map(_.get(0)).toSeq
-    val touched = (srcParts ++ tgtParts).distinct
-    // partition dirs are addressed via Hive-escaped "$partCol=$value"
-    // names at publish time (StagedCommit.partDirName, matching Spark's
-    // writer); a null value writes to parquet's __HIVE_DEFAULT_PARTITION__ dir
-    // instead and would escape both pruning and cleanup — reject it here
-    // rather than corrupt silently
-    require(!touched.contains(null),
-      s"mergeWritePartitioned: null $partCol values are not supported " +
-        "(null partitions are not addressable for the per-partition swap)")
-    val slice = spark.read.parquet(path)
-      .where(col(partCol).isin(touched: _*))
-    // localCheckpoint materializes the merge ONCE: both the audit's
-    // expected count and the staged write read the checkpoint instead of
-    // re-running the join. Materialized size = the CDC partition footprint.
-    val merged = merge(slice, source, keys, deleteWhen).localCheckpoint(true)
-    val expected = merged.count()
-    // write-audit-publish (graft.sinks.StagedCommit): the staged write
-    // also dissolves the read-overwrite-same-path hazard — the live table
-    // keeps serving until the audited staging dirs swap in per-partition,
-    // and a crash before publish leaves it byte-identical. Partitions the
-    // merge emptied are dropped by publishPartitions.
-    val staged = graft.sinks.StagedCommit.stage(spark, path, expected) { st =>
-      merged.write.partitionBy(partCol).parquet(st)
-    }
-    graft.sinks.StagedCommit.publishPartitions(staged, partCol, touched)
   }
 }

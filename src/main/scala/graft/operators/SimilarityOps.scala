@@ -1,7 +1,8 @@
 package graft.operators
 
 import graft.functions.{VectorFunctions => VF}
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.sinks.TableLog
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** E3 — similarity search over an embedding column (`ArrayType(FloatType)`).
@@ -287,6 +288,61 @@ object SimilarityOps {
   def releaseSemanticCaches(): Unit = synchronized {
     semanticPrevCaches.foreach(_.unpersist(blocking = false))
     semanticPrevCaches = Nil
+  }
+
+  // ── persisted IVF cell stores (AnnStoreOps' store, DedupOps' semantic
+  // index): a TableLog table range-clustered by `cell` with `cell`
+  // stats, whose codebook is a sibling TableLog table the store pins by
+  // version in its `cbv` counter ──
+
+  /** `df` range-clustered by `cell`: each written file covers a tight
+    * cell range, so a `scan(...).where(cell IN (…))` probe opens only
+    * the files of the probed cells. `files` fixes the file count (the
+    * ANN store writes one file per cell range); by default AQE sizes
+    * the partitions. */
+  def clusterByCell(df: DataFrame, files: Option[Int] = None): DataFrame =
+    files.fold(df.repartitionByRange(col("cell")))(
+      df.repartitionByRange(_, col("cell"))).sortWithinPartitions("cell")
+
+  /** A codebook as its one-file table frame (cell, s, c). */
+  private[operators] def codebookFrame(spark: SparkSession,
+      cents: Array[(Long, Array[Long], Long)]): DataFrame = {
+    import spark.implicits._
+    cents.toSeq.map { case (cell, s, c) => (cell, s.toSeq, c) }
+      .toDF("cell", "s", "c").coalesce(1)
+  }
+
+  /** Commit `cents` as the codebook table's whole content — version 1 of
+    * a fresh table, else one rewrite replacing the previous codebook —
+    * and return the committed version: the `cbv` a store pins. Older
+    * versions stay readable for stores still pinning them. */
+  def commitCodebook(spark: SparkSession, codebookTable: String,
+      cents: Array[(Long, Array[Long], Long)]): Long = {
+    val df = codebookFrame(spark, cents)
+    if (TableLog.latestVersion(codebookTable) == 0L)
+      TableLog.create(spark, codebookTable, df)
+    else TableLog.rewrite(spark, codebookTable, "codebook",
+      expectRows = _ => None)(_ => df)
+  }
+
+  /** The codebook `store` pins (its `cbv` counter; the codebook table's
+    * latest version when unpinned), driver-side and sorted by cell. */
+  def pinnedCodebook(spark: SparkSession, store: String,
+      codebookTable: String): Array[(Long, Array[Long], Long)] = {
+    val cbv = TableLog.snapshot(store).flatMap(_.counters.get("cbv"))
+      .getOrElse(TableLog.latestVersion(codebookTable))
+    TableLog.readVersion(spark, codebookTable, cbv)
+      .collect()
+      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getLong(2)))
+      .sortBy(_._1)
+  }
+
+  /** Cell-balance metric of a store: max cell rows / mean cell rows
+    * (1.0 = even). Driver-bounded — one count per cell. */
+  def cellSkew(spark: SparkSession, store: String): Double = {
+    val counts = TableLog.read(spark, store)
+      .groupBy("cell").count().collect().map(_.getLong(1))
+    counts.max.toDouble * counts.length / counts.sum.toDouble
   }
 
   /** Data-driven cell count for Lloyd-blocked operators:

@@ -2,12 +2,14 @@ package graft.sinks
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
+import graft.functions.ZOrderLong.{norm16, norm16Scalar}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
-/** Minimal commit-log table format — the durability layer StagedCommit's
-  * writer lease cannot provide (the lease narrows the multi-writer race
-  * to lock-file create-exclusivity and fails the loser; the LOG lets
-  * every writer succeed, serializably).
+/** Minimal commit-log table format — the engine's one commit protocol.
+  * Every write, rewrite and maintenance pass (append, delete, merge,
+  * compaction, z-order, index rebalance) publishes by a manifest CAS:
+  * writers never lock and never fail each other — concurrent writers
+  * all succeed, serialized by version.
   *
   * Layout:
   * {{{
@@ -44,9 +46,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * files are invisible because reads scan exactly the files the chosen
   * manifest lists.
   *
-  * Crash anywhere leaves only invisible garbage (orphan data dirs, temp
-  * manifests) that `vacuum` reclaims; there is no recover() step and no
-  * swap window — the published table is never renamed, only pointed to.
+  * A refused or failed operation deletes the files it staged before it
+  * throws, so the table stays byte-identical. A crash anywhere leaves
+  * only invisible garbage (orphan data dirs, temp manifests) that
+  * `vacuum` reclaims once it is older than [[StaleWriterMs]]; there is
+  * no recover() step and no swap window — the published table is never
+  * renamed, only pointed to.
   *
   * At 100 TB the protocol costs one small manifest write per commit and
   * a directory listing per snapshot read; data file paths are listed in
@@ -189,6 +194,12 @@ object TableLog {
     * changed files). Delta Lake's default is 10 commits per checkpoint
     * for the same trade. */
   private[graft] val checkpointInterval = 10L
+
+  /** The stale-writer window: an unreferenced data file, temp manifest
+    * or feed stage younger than this may belong to a writer that is
+    * still running, so `vacuum`, `vacuumBefore` and `vacuumFeed` leave
+    * it alone. */
+  val StaleWriterMs: Long = 10 * 60 * 1000L
 
   /** One parsed manifest, pre-resolution: `kind` "full" (complete file
     * list in `files`; legacy manifests with no kind key read as full)
@@ -648,6 +659,20 @@ object TableLog {
       throw e
     }
   }
+
+  /** Delete the set directories of `writeDataFiles` output that no
+    * manifest will reference (a refusal, a lost race, a replayed txn). */
+  private def dropStaged(table: String, files: Seq[FileEntry]): Unit =
+    files.map(f => Paths.get(table, f.path).getParent).distinct
+      .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+
+  /** The post-write audit of every face that stages files before it
+    * commits: when `ok` fails, the `staged` sets are deleted BEFORE the
+    * refusal (thrown as `require` does), so a refused operation leaves
+    * the table byte-identical. Costs nothing when the audit passes. */
+  private def auditStaged(table: String, staged: Seq[FileEntry]*)(
+      ok: Boolean, msg: => String): Unit =
+    if (!ok) { staged.foreach(dropStaged(table, _)); require(ok, msg) }
 
   /** Direct single-pass staged write (guide §1.2/§5, the batch twin of
     * the streaming sink's DataWriters): ONE Spark job in which each task
@@ -2552,7 +2577,7 @@ object TableLog {
     * less). A cutoff before the first retained commit is a no-op
     * (nothing is old enough), not an error. */
   def vacuumBefore(spark: SparkSession, table: String, tsMs: Long,
-      olderThanMs: Long = StagedCommit.staleLeaseDefaultMs): Seq[String] = {
+      olderThanMs: Long = StaleWriterMs): Seq[String] = {
     if (latestVersion(table) == 0) return Nil
     val floor =
       try versionAsOf(table, tsMs)
@@ -2736,7 +2761,7 @@ object TableLog {
   // predicate. The capture is STAGED under `_feed_stage/v<N>/`
   // (exclusive temp+atomic-rename creation; an existing stage is
   // ADOPTED verbatim and retired only by vacuumFeed once marker-done
-  // and lease-stale — stage part names are the idempotence anchor)
+  // and writer-stale — stage part names are the idempotence anchor)
   // and hard-linked into the feed under deterministic names
   // (`v<N>_cdc_<part>`), so a crash anywhere between manifest commit
   // and done-marker is healed by the next publish without ever
@@ -3006,7 +3031,7 @@ object TableLog {
             // re-captures into a FRESH stage if this one vanishes —
             // then links a second, differently-named set (measured:
             // 3 racers → 3× delivery). vacuumFeed retires stages once
-            // they are marker-done AND stale past the lease window.
+            // they are marker-done AND stale past StaleWriterMs.
         }
       }
     }
@@ -3428,14 +3453,14 @@ object TableLog {
     // CDC capture-stage hygiene. A version's stage part names are the
     // publication's idempotence anchor, so publishFeed never removes a
     // stage — retirement happens HERE, and only once the version is
-    // marker-done AND the stage is stale past the lease window: a
+    // marker-done AND the stage is stale past StaleWriterMs: a
     // younger stage may still be in a racing publisher's hands, and
     // sweeping it mid-publish would make that racer re-capture under
     // fresh part names and double-deliver. Crashed exclusive-rename
     // temps (never adopted) are swept under the same staleness rule.
     val stageRoot = Paths.get(table, "_feed_stage")
     val staleCutoff =
-      System.currentTimeMillis() - StagedCommit.staleLeaseDefaultMs
+      System.currentTimeMillis() - StaleWriterMs
     def stale(p: Path): Boolean =
       try Files.getLastModifiedTime(p).toMillis <= staleCutoff
       catch { case _: java.io.IOException => false }
@@ -3522,8 +3547,9 @@ object TableLog {
         else Nil
       val (files, rows) = writeDataFiles(spark, table, out, statsCols,
         strStatsCols, bloomStatsCols, derivedStats, audits)
-      expectRows(base.rows).foreach(exp => require(rows == exp,
-        s"rewrite audit failed for $table: $rows rows != expected $exp — not committing"))
+      expectRows(base.rows).foreach(exp => auditStaged(table, files)(
+        rows == exp, s"rewrite audit failed for $table: $rows rows != " +
+          s"expected $exp — not committing"))
       // a rewrite replaces the whole file list, so its delta (remove
       // all + add all) would cost the same as a checkpoint — commit it
       // as one, which also keeps delta chains short. Counters carry over
@@ -3543,9 +3569,10 @@ object TableLog {
     committed
   }
 
-  /** Small-file compaction through the log: same narrow coalesce as
-    * LayoutOps.compact, published as a manifest commit instead of a
-    * directory swap. */
+  /** Small-file compaction through the log: rewrites the table into
+    * ~`targetBytes`-sized files with a NARROW coalesce (no shuffle —
+    * each output task concatenates whole input splits), sized from the
+    * manifest's byte counts. */
   def compact(spark: SparkSession, table: String, targetBytes: Long,
       statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
       bloomStatsCols: Seq[String] = Nil): Long =
@@ -3609,7 +3636,7 @@ object TableLog {
         morScan(spark, table, base, subset).coalesce(nOut),
         statsCols, strStatsCols, bloomStatsCols)
       val scanRows = liveRowsOf(spark, table, base, subset)
-      require(newRows == scanRows,
+      auditStaged(table, files)(newRows == scanRows,
         s"compactSmall audit failed for $table: packed $newRows rows " +
           s"from $scanRows — not committing")
       val version = base.version + 1
@@ -3841,7 +3868,7 @@ object TableLog {
         else writeDataFiles(spark, table,
           morScan(spark, table, base, affected),
           statsCols, strStatsCols, bloomStatsCols)
-      require(newRows <= base.rows,
+      auditStaged(table, files)(newRows <= base.rows,
         s"morMaintain audit failed for $table: materialized $newRows " +
           s"rows > table rows ${base.rows} — not committing")
       val version = base.version + 1
@@ -4062,8 +4089,10 @@ object TableLog {
     latestVersion(table)
   }
 
-  /** Z-order re-cluster through the log (LayoutOps.zOrderWrite layout,
-    * manifest-committed). Each output file additionally records its
+  /** Z-order re-cluster through the log: range-partition + sort by the
+    * Morton interleave of the two `norm16`-normalized keys, so per-file
+    * min/max stats become selective for predicates on EITHER column.
+    * Each output file additionally records its
     * Z-VALUE interval as a derived manifest stat (name
     * `z2|colA|colB|aLo|aHi|bLo|bHi` — the normalization params ride in
     * the name so a reader reconstructs the same cell mapping), which
@@ -4081,7 +4110,6 @@ object TableLog {
       colA: String, rangeA: (Long, Long), colB: String,
       rangeB: (Long, Long), statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.col
-    import graft.operators.LayoutOps.norm16
     def z = graft.functions.ZOrderLong.zOrder(
       norm16(col(colA), rangeA._1, rangeA._2),
       norm16(col(colB), rangeB._1, rangeB._2))
@@ -4129,7 +4157,6 @@ object TableLog {
       colA: String, rangeA: (Long, Long), colB: String,
       rangeB: (Long, Long), statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.col
-    import graft.operators.LayoutOps.norm16
     def h = graft.functions.HilbertLong.hilbert(
       norm16(col(colA), rangeA._1, rangeA._2),
       norm16(col(colB), rangeB._1, rangeB._2))
@@ -4164,7 +4191,6 @@ object TableLog {
       rangeB: (Long, Long), colC: String, rangeC: (Long, Long),
       statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.col
-    import graft.operators.LayoutOps.norm16
     def z = graft.functions.ZOrderLong.zOrder3(
       norm16(col(colA), rangeA._1, rangeA._2),
       norm16(col(colB), rangeB._1, rangeB._2),
@@ -4201,7 +4227,6 @@ object TableLog {
       rangeB: (Long, Long), colC: String, rangeC: (Long, Long),
       statsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.col
-    import graft.operators.LayoutOps.norm16
     def h = graft.functions.Hilbert3.hilbert3(
       norm16(col(colA), rangeA._1, rangeA._2),
       norm16(col(colB), rangeB._1, rangeB._2),
@@ -4293,7 +4318,6 @@ object TableLog {
             "resolves (renamed away or dropped) — re-run zOrder with " +
             "the current columns")))
       }
-      import graft.operators.LayoutOps.norm16
       def z = {
         val n = logicalNames.zip(zRanges).map { case (c, (lo, hi)) =>
           norm16(col(c), lo, hi) }
@@ -4329,7 +4353,7 @@ object TableLog {
         (statsCols ++ logicalNames).distinct, strStatsCols,
         bloomStatsCols, derivedStats = Seq(newSpec -> z))
       val scanRows = liveRowsOf(spark, table, base, unclustered)
-      require(newRows == scanRows,
+      auditStaged(table, files)(newRows == scanRows,
         s"zOrderMaintain audit failed for $table: clustered $newRows " +
           s"rows from $scanRows — not committing")
       val version = base.version + 1
@@ -4411,7 +4435,6 @@ object TableLog {
             else if (q.exists { case (l, h, _) => l > h })
               false // box ∩ declared range = ∅
             else {
-              import graft.operators.LayoutOps.norm16Scalar
               val n = dims.zip(q).map { case ((_, mn, mx), (l, h, _)) =>
                 (norm16Scalar(l, mn, mx), norm16Scalar(h, mn, mx))
               }
@@ -4545,7 +4568,7 @@ object TableLog {
       val scanRows = liveRowsOf(spark, table, base, affected)
       val (newFiles, newRows) = writeDataFiles(spark, table, keep(scan),
         statsCols, strStatsCols, bloomStatsCols)
-      require(newRows <= scanRows,
+      auditStaged(table, newFiles)(newRows <= scanRows,
         s"delete audit failed for $table: rewrite produced $newRows " +
           s"rows from $scanRows — not committing")
       val rows = base.rows - (scanRows - newRows)
@@ -4612,8 +4635,6 @@ object TableLog {
     // rewrite) are deleted on EVERY non-commit exit — a lost race, the
     // audit throw, a concurrent same-txn commit — instead of sitting
     // unmanifested until a vacuum
-    def dropStaged(fs: Seq[FileEntry]): Unit =
-      fs.foreach(f => WriteStats.deleteStaged(s"$table/${f.path}"))
     // CHECK constraints validate against the set seen at write start
     // (the addCheckConstraint snapshot-isolation contract)
     val checks0 = snapshot(table).map(_.checks).getOrElse(Nil)
@@ -4636,7 +4657,7 @@ object TableLog {
     while (committed < 0) {
       val base = snapshotOrFail(table)
       txnId.flatMap(committedTxnVersion(table, _)).foreach { v =>
-        dropStaged(newFiles); return v
+        dropStaged(table, newFiles); return v
       }
       val affected = prune(base)
       val affectedPaths = affected.map(_.path).toSet
@@ -4654,12 +4675,10 @@ object TableLog {
       // live row count of the affected slice, metadata-side where
       // provable (see liveRowsOf)
       val scanRows = liveRowsOf(spark, table, base, affected)
-      if (keptRows > scanRows) {
-        dropStaged(keptFiles); dropStaged(newFiles)
-        sys.error(s"replaceWhere audit failed for $table: keep-side " +
-          s"rewrite produced $keptRows rows from $scanRows — not " +
-          "committing (staged files removed)")
-      }
+      auditStaged(table, keptFiles, newFiles)(keptRows <= scanRows,
+        s"replaceWhere audit failed for $table: keep-side rewrite " +
+          s"produced $keptRows rows from $scanRows — not committing " +
+          "(staged files removed)")
       val version = base.version + 1
       val stamped = (keptFiles ++ newFiles).map(_.copy(ver = version))
       val rows = base.rows - (scanRows - keptRows) + newRows
@@ -4680,7 +4699,7 @@ object TableLog {
       // lost race: this attempt's keep-side rewrite was planned
       // against a stale base and is re-planned next iteration — the
       // failed manifest never referenced it
-      else dropStaged(keptFiles)
+      else dropStaged(table, keptFiles)
     }
     if (feedEnabled(table)) publishFeed(spark, table)
     committed
@@ -4937,7 +4956,7 @@ object TableLog {
         val (newFiles, newRows) = writeDataFiles(spark, table, updated,
           statsCols, strStatsCols, bloomStatsCols,
           audits = checkAudits(table, base.checks, "updateDv"))
-        require(newRows == cnt,
+        auditStaged(table, newFiles)(newRows == cnt,
           s"updateDv audit failed for $table: wrote $newRows new " +
             s"images for $cnt matched rows — not committing")
         val (delFiles, _) = writeDataFiles(spark, table,
@@ -5535,7 +5554,7 @@ object TableLog {
         val (newFiles, newRows) = writeDataFiles(spark, table, updated,
           statsCols, strStatsCols, bloomStatsCols,
           audits = checkAudits(table, base.checks, "updateMor"))
-        require(newRows == matchedRows,
+        auditStaged(table, newFiles)(newRows == matchedRows,
           s"updateMor audit failed for $table: wrote $newRows new " +
             s"images for $matchedRows matched rows — not committing")
         val (delFiles, _) = writeDataFiles(spark, table, keyDf,
@@ -5632,7 +5651,7 @@ object TableLog {
       statsCols, strStatsCols, bloomStatsCols,
       audits = checkAudits(table,
         snapshot(table).map(_.checks).getOrElse(Nil), what))
-    require(newRows == insRows,
+    auditStaged(table, newFiles)(newRows == insRows,
       s"$what audit failed for $table: wrote $newRows rows from a " +
         s"$insRows-row insert set — not committing")
     val (delFiles, _) = writeDataFiles(spark, table, keys,
@@ -5740,7 +5759,7 @@ object TableLog {
       val (newFiles, newRows) = writeDataFiles(spark, table, updated,
         statsCols, strStatsCols, bloomStatsCols,
         audits = checkAudits(table, base.checks, "updateWhere"))
-      require(newRows == scanRows,
+      auditStaged(table, newFiles)(newRows == scanRows,
         s"update audit failed for $table: rewrite produced $newRows " +
           s"rows from $scanRows — not committing")
       val version = base.version + 1
@@ -6210,7 +6229,7 @@ object TableLog {
             bloomStatsCols, audits = audits)
           (nf, nr, m, sRows)
         }
-      require(newRows == scanRows - matched + insRows,
+      auditStaged(table, newFiles)(newRows == scanRows - matched + insRows,
         s"merge audit failed for $table: rewrite produced $newRows " +
           s"rows from $scanRows affected − $matched matched + $insRows " +
           "inserts — not committing")
@@ -6248,15 +6267,15 @@ object TableLog {
     * but not yet committed the manifest that references them. Deleting
     * those would silently lose the append's data after it commits — so
     * vacuum only reclaims unreferenced files and temp manifests OLDER
-    * than `olderThanMs` (default mirrors StagedCommit's stale-lease
-    * window). Set `olderThanMs = 0` ONLY when no writer can be running
-    * concurrently — with the guard off, a racing writer's pre-commit
-    * data files are fair game again (the writer or its readers then
+    * than `olderThanMs` (default: the stale-writer window,
+    * [[StaleWriterMs]]). Set `olderThanMs = 0` ONLY when no writer can
+    * be running concurrently — with the guard off, a racing writer's
+    * pre-commit data files are fair game again (the writer or its readers then
     * fail loudly on the missing files; a vanished TEMP manifest alone
     * degrades to a clean CAS retry in tryCommit). */
   def vacuum(spark: SparkSession, table: String,
       keepVersions: Int = Int.MaxValue,
-      olderThanMs: Long = StagedCommit.staleLeaseDefaultMs,
+      olderThanMs: Long = StaleWriterMs,
       keepFromVersion: Long = Long.MaxValue): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val latest = latestVersion(table)

@@ -1,12 +1,13 @@
 package graft
 
-import graft.operators.AnnStoreOps
+import graft.operators.{AnnStoreOps, SimilarityOps}
+import graft.sinks.TableLog
 import org.apache.spark.sql.functions._
 
-/** Lifecycle contract of the persistent cell-partitioned ANN store:
+/** Lifecycle contract of the persistent cell-clustered ANN store:
   * build trains + writes store/codebook, append assigns with the STORED
-  * codebook (no retrain), probe reads only the probed cell directories
-  * and sees appended vectors. */
+  * codebook (no retrain), probe opens only the files of the probed
+  * cells and sees appended vectors. */
 class AnnStoreSpec extends SparkSpec {
 
   private def tmp(name: String): String =
@@ -27,10 +28,17 @@ class AnnStoreSpec extends SparkSpec {
     assert(cb.length == 8 && cb.map(_._3).sum == emb.count())
     val q = queryVec(sf("0.001"))
     val top = AnnStoreOps.probe(spark, path, "vec_id", q, k = 10, nprobe = 3)
-    val plan = top.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") &&
-      plan.replaceAll("(?s).*PartitionFilters: \\[([^\\]]*)\\].*", "$1")
-        .contains("cell"), s"expected probed-cell pruning:\n$plan")
+    // the probe opens fewer files than the store holds, and only files
+    // whose `cell` range meets a probed cell
+    val cells = SimilarityOps.nearestCells(cb, q, 3)
+    val files = TableLog.snapshot(s"$path/store").get.files
+    val meets = files.filter(f => f.stats.find(_.col == "cell")
+        .exists(st => cells.exists(c => c >= st.min && c <= st.max)))
+      .map(f => TableLog.lastTwo(f.path)).toSet
+    val opened = filesOpened(top)
+    assert(opened.nonEmpty && opened.size < files.size,
+      s"probe of cells $cells opened ${opened.size} of ${files.size} files")
+    assert(opened.toSet.subsetOf(meets), s"$opened vs $meets")
     val rows = top.collect()
     assert(rows.length == 10)
     // the query vector itself lives in a probed cell → rank 1, cos = 1.0
@@ -46,7 +54,7 @@ class AnnStoreSpec extends SparkSpec {
     val path = tmp("graft_ann_stream")
     val emb = spark.read.parquet(sf("0.001") + "/embeddings.parquet")
     AnnStoreOps.build(spark, path, emb, "vec_id", "embedding", nlist = 8)
-    val before = spark.read.parquet(s"$path/store").count()
+    val before = TableLog.read(spark, s"$path/store").count()
     // two micro-batches: clones of vec 0 under fresh ids
     val v0 = emb.where(col("vec_id") === 0)
       .select(col("embedding")).head.getSeq[Float](0)
@@ -62,7 +70,7 @@ class AnnStoreSpec extends SparkSpec {
     AnnStoreOps.appendStream(spark, path, stream, "vec_id", "embedding", ckpt)
     mem.addData(1000002L)
     AnnStoreOps.appendStream(spark, path, stream, "vec_id", "embedding", ckpt)
-    assert(spark.read.parquet(s"$path/store").count() == before + 2)
+    assert(TableLog.read(spark, s"$path/store").count() == before + 2)
     val q = queryVec(sf("0.001"))
     val top = AnnStoreOps.probe(spark, path, "vec_id", q, k = 3, nprobe = 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -86,14 +94,14 @@ class AnnStoreSpec extends SparkSpec {
           case _ => lit(40.0f)
         }: _*).as("embedding"))
     AnnStoreOps.append(spark, path, drift, "vec_id", "embedding")
-    val total = spark.read.parquet(s"$path/store").count()
+    val total = TableLog.read(spark, s"$path/store").count()
     val (before, after) = AnnStoreOps.rebalance(spark, path)
     assert(before > 3.0, s"drift setup should be badly skewed, got $before")
     assert(after <= before / 2,
       s"rebalance should at least halve skew: $before -> $after")
     // content preserved exactly: same row count, same id set
-    assert(spark.read.parquet(s"$path/store").count() == total)
-    assert(spark.read.parquet(s"$path/store")
+    assert(TableLog.read(spark, s"$path/store").count() == total)
+    assert(TableLog.read(spark, s"$path/store")
       .agg(sum("vec_id")).head.getLong(0) ==
       emb.agg(sum("vec_id")).head.getLong(0) +
         (100000L until 101000L).sum)

@@ -847,6 +847,8 @@ class ExtOpsSpec extends SparkSpec {
     assert(snap.counters("cbv") > cbvBefore)
     assert(graft.sinks.TableLog.latestVersion(s"$t/codebook")
       == snap.counters("cbv"))
+    // the new codebook version REPLACES the old cells (nlistFor(5) = 2)
+    assert(graft.operators.DedupOps.semanticCodebook(spark, t).length == 2)
     assert(snap.counters("docs") == 5L) // accounting survives the rewrite
     assert(graft.sinks.TableLog.read(spark, t)
       .select("id").distinct().collect().map(_.getLong(0)).sorted.toSeq

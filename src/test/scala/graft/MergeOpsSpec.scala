@@ -4,15 +4,11 @@ import graft.operators.MergeOps
 import org.apache.spark.sql.functions._
 
 /** MERGE semantics beyond the oracled upsert query (o30): the SQL
-  * multiple-match error, and partition-pruned merge-writes when a CDC row
-  * migrates a key across partitions (the stale-duplicate trap) or empties
-  * a partition entirely. */
+  * multiple-match error and its survival under column pruning, and null
+  * keys as independent inserts. */
 class MergeOpsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def tmp(name: String): String =
-    java.nio.file.Files.createTempDirectory(name).toString + "/t"
 
   test("duplicate source keys raise like SQL MERGE, not fan out") {
     val target = Seq((1L, "a"), (2L, "b")).toDF("k", "v")
@@ -78,63 +74,5 @@ class MergeOpsSpec extends SparkSpec {
       .collect().map(r => (if (r.isNullAt(0)) -1L else r.getLong(0),
         r.getString(1))).sorted.toSeq
     assert(out == Seq((-1L, "x"), (-1L, "y"), (1L, "a"), (2L, "z")))
-  }
-
-  test("merge-write rejects null partition values instead of corrupting") {
-    val path = tmp("graft_merge_nullpart")
-    Seq((1L, "p1", 10L)).toDF("k", "part", "v")
-      .write.partitionBy("part").parquet(path)
-    val cdc = Seq((2L, Option.empty[String], 20L)).toDF("k", "part", "v")
-    val ex = intercept[IllegalArgumentException] {
-      MergeOps.mergeWritePartitioned(spark, path, cdc, Seq("k"), "part")
-    }
-    assert(ex.getMessage.contains("null part"))
-  }
-
-  test("merge-write follows a key that migrates to another partition") {
-    val path = tmp("graft_merge_migrate")
-    Seq((1L, "p1", 10L), (2L, "p1", 20L), (3L, "p2", 30L), (4L, "p3", 40L))
-      .toDF("k", "part", "v")
-      .write.partitionBy("part").parquet(path)
-    // CDC moves key 3 from p2 to p1; source never mentions p2
-    val cdc = Seq((3L, "p1", 99L)).toDF("k", "part", "v")
-    MergeOps.mergeWritePartitioned(spark, path, cdc, Seq("k"), "part")
-    val back = spark.read.parquet(path)
-      .select("k", "part", "v").orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
-    assert(back.toSeq == Seq(
-      (1L, "p1", 10L), (2L, "p1", 20L), (3L, "p1", 99L), (4L, "p3", 40L)),
-      s"stale p2 copy of key 3 must be gone, got ${back.toSeq}")
-    // p2 held only key 3 → the merge emptied it → directory removed
-    assert(!new java.io.File(s"$path/part=p2").exists(),
-      "emptied partition directory must be deleted")
-    // untouched p3 keeps its exact file
-    assert(new java.io.File(s"$path/part=p3").exists())
-  }
-
-  test("merge-write with delete emptying a partition removes its directory") {
-    val path = tmp("graft_merge_empty")
-    Seq((1L, "p1", 10L), (2L, "p2", 20L)).toDF("k", "part", "v")
-      .write.partitionBy("part").parquet(path)
-    val cdc = Seq((2L, "p2", 0L)).toDF("k", "part", "v")
-      .withColumn("del", lit(1))
-    MergeOps.mergeWritePartitioned(spark, path, cdc, Seq("k"), "part",
-      deleteWhen = Some(col("del") === 1))
-    val back = spark.read.parquet(path).select("k").as[Long].collect()
-    assert(back.toSeq == Seq(1L))
-    assert(!new java.io.File(s"$path/part=p2").exists())
-  }
-
-  test("partitionKeyStable fast path skips the target key scan and stays correct") {
-    val path = tmp("graft_merge_stable")
-    Seq((1L, "p1", 10L), (2L, "p2", 20L)).toDF("k", "part", "v")
-      .write.partitionBy("part").parquet(path)
-    val cdc = Seq((2L, "p2", 99L), (5L, "p2", 50L)).toDF("k", "part", "v")
-    MergeOps.mergeWritePartitioned(spark, path, cdc, Seq("k"), "part",
-      partitionKeyStable = true)
-    val back = spark.read.parquet(path)
-      .select("k", "v").orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(back.toSeq == Seq((1L, 10L), (2L, 99L), (5L, 50L)))
   }
 }

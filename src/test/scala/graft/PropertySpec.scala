@@ -211,7 +211,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("norm16 is monotone and in-range across random span regimes") {
-    import graft.operators.LayoutOps
+    import graft.functions.ZOrderLong
     val gen = for {
       min <- Gen.choose(Long.MinValue / 2, 1L << 40)
       spanPow <- Gen.choose(4, 62)
@@ -223,7 +223,7 @@ class PropertySpec extends SparkSpec {
       val max = if (min > Long.MaxValue - span) Long.MaxValue else min + span
       val xs = fs.map(f => min + (span * f).toLong min max).sorted
       val out = xs.toDF("x")
-        .select(LayoutOps.norm16(col("x"), min, max).as("n"))
+        .select(ZOrderLong.norm16(col("x"), min, max).as("n"))
         .collect().map(_.getLong(0))
       out.forall(n => n >= 0 && n <= 65535) && out.toSeq == out.sorted.toSeq
     })

@@ -5,15 +5,15 @@ package graft
   * <N> [<suiteClass>]` — so a once-observed transient failure gets a
   * reproduction COUNT instead of a shrug. The shared SparkSession is
   * reused across iterations exactly like a parallel full-suite run
-  * reuses it, so lease/recover timing windows see the same contention
-  * shape that produced the original observation. Exit 1 on any
+  * reuses it, so concurrent commits see the same contention shape that
+  * produced the original observation. Exit 1 on any
   * failing iteration, with the failing test names printed.
   */
 object RepeatSuite {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(50)
     val cls = args.drop(1).headOption
-      .getOrElse("graft.StagedCommitSpec")
+      .getOrElse("graft.ConcurrencySpec")
     var failedRuns = 0
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     for (i <- 1 to n) {

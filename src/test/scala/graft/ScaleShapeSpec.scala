@@ -267,25 +267,29 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   test("compaction reduces file count without touching content") {
-    import graft.operators.LayoutOps
-    val tmp = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    import graft.sinks.TableLog
+    val t = java.nio.file.Files.createTempDirectory("graft_compact")
+      .toString + "/t"
     val docs = spark.read.parquet(sf("0.001") + "/documents.parquet")
       .select("doc_id", "lang", "n_chars")
-    docs.repartition(32).write.mode("overwrite").parquet(s"$tmp/frag")
-    val (before, after) =
-      LayoutOps.compact(spark, s"$tmp/frag", s"$tmp/out", 32L * 1024 * 1024)
+    TableLog.create(spark, t, docs.repartition(32))
+    val before = TableLog.snapshot(t).get.files.size
+    // the compaction transform, planned on the same snapshot: the
+    // rewrite is NARROW — no exchange in the compaction plan
+    val plan = TableLog.read(spark, t).coalesce(2)
+      .queryExecution.executedPlan.toString
+    TableLog.compact(spark, t, 32L * 1024 * 1024)
+    val after = TableLog.snapshot(t).get.files.size
     assert(before == 32 && after < 4, s"$before -> $after")
     // content survives byte-for-byte (modulo order)
     val a = docs.collect().map(_.toSeq).toSet
-    val b = spark.read.parquet(s"$tmp/out").collect().map(_.toSeq).toSet
+    val b = TableLog.read(spark, t).collect().map(_.toSeq).toSet
     assert(a == b)
-    // and the rewrite was NARROW — no exchange in the compaction plan
-    val plan = docs.coalesce(2).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
   }
 
   test("z-order layout shrinks per-file spans on BOTH dimensions") {
-    import graft.operators.LayoutOps
+    import graft.sinks.TableLog
     val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString
     val li = spark.read.parquet(sf("0.001") + "/lineitem.parquet")
       .select("l_partkey", "l_suppkey", "l_quantity")
@@ -293,17 +297,26 @@ class ScaleShapeSpec extends SparkSpec {
       org.apache.spark.sql.functions.max("l_partkey"),
       org.apache.spark.sql.functions.min("l_suppkey"),
       org.apache.spark.sql.functions.max("l_suppkey")).head()
-    LayoutOps.zOrderWrite(li, s"$tmp/z", nFiles = 16,
+    val keys = Seq("l_partkey", "l_suppkey")
+    TableLog.create(spark, s"$tmp/z", li)
+    TableLog.zOrder(spark, s"$tmp/z", nFiles = 16,
       "l_partkey", (r.getLong(0), r.getLong(1)),
       "l_suppkey", (r.getLong(2), r.getLong(3)))
     // single-column sort: perfect on its own column, useless on the other
-    li.repartitionByRange(16, col("l_partkey"))
-      .sortWithinPartitions("l_partkey")
-      .write.mode("overwrite").parquet(s"$tmp/single")
-    val zP = LayoutOps.meanFileSpanFraction(spark, s"$tmp/z", "l_partkey")
-    val zS = LayoutOps.meanFileSpanFraction(spark, s"$tmp/z", "l_suppkey")
-    val sP = LayoutOps.meanFileSpanFraction(spark, s"$tmp/single", "l_partkey")
-    val sS = LayoutOps.meanFileSpanFraction(spark, s"$tmp/single", "l_suppkey")
+    TableLog.create(spark, s"$tmp/single",
+      li.repartitionByRange(16, col("l_partkey"))
+        .sortWithinPartitions("l_partkey"), statsCols = keys)
+    // mean per-file min/max span of `c` as a fraction of the global
+    // span, from the manifest stats: 1.0 = no file can be skipped
+    def spanFraction(t: String, c: String): Double = {
+      val st = TableLog.snapshot(t).get.files.map(_.stats.find(_.col == c).get)
+      st.map(x => (x.max - x.min).toDouble).sum / st.size /
+        math.max(1.0, (st.map(_.max).max - st.map(_.min).min).toDouble)
+    }
+    val zP = spanFraction(s"$tmp/z", "l_partkey")
+    val zS = spanFraction(s"$tmp/z", "l_suppkey")
+    val sP = spanFraction(s"$tmp/single", "l_partkey")
+    val sS = spanFraction(s"$tmp/single", "l_suppkey")
     info(f"z: part=$zP%.2f supp=$zS%.2f | single-col: part=$sP%.2f supp=$sS%.2f")
     // z-order: BOTH dims well under the full span (skippable on either);
     // single-column sort: the unsorted dim covers ~the whole range
@@ -410,13 +423,13 @@ class ScaleShapeSpec extends SparkSpec {
   }
 
   test("norm16 stays in [0,65535] for 64-bit key spans (no Long overflow)") {
-    import graft.operators.LayoutOps
+    import graft.functions.ZOrderLong
     // span >= 2^47 used to overflow (x-min)*65535; divide-first path now
     val lo = Long.MinValue + 10L
     val hi = Long.MaxValue - 10L
     val xs = Seq(lo, -1L, 0L, 1L, hi / 2, hi)
     val out = xs.toDF("x")
-      .select(LayoutOps.norm16(col("x"), lo, hi).as("n"))
+      .select(ZOrderLong.norm16(col("x"), lo, hi).as("n"))
       .collect().map(_.getLong(0))
     assert(out.forall(n => n >= 0L && n <= 65535L), out.toSeq.toString)
     assert(out.head == 0L && out.last >= 65534L, out.toSeq.toString)
@@ -424,7 +437,7 @@ class ScaleShapeSpec extends SparkSpec {
     assert(out.toSeq == out.sorted.toSeq, out.toSeq.toString)
     // the narrow-span form is unchanged (exact multiply-first arithmetic)
     val narrow = Seq(0L, 500L, 1000L).toDF("x")
-      .select(LayoutOps.norm16(col("x"), 0L, 1000L).as("n"))
+      .select(ZOrderLong.norm16(col("x"), 0L, 1000L).as("n"))
       .collect().map(_.getLong(0)).toSeq
     assert(narrow == Seq(0L, 32767L, 65535L), narrow.toString)
   }

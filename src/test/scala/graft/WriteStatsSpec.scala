@@ -300,6 +300,12 @@ class WriteStatsSpec extends SparkSpec {
     assert(TableLog.latestVersion(t) == v0)
     assert(listing(t) == before)
     assert(TableLog.read(spark, t).count() == 100L)
+    // refused by a row audit that runs after the write job returned
+    val eRw = intercept[IllegalArgumentException](
+      TableLog.rewrite(spark, t, "bad")(_.limit(10)))
+    assert(eRw.getMessage.contains("rewrite audit failed"))
+    assert(TableLog.latestVersion(t) == v0)
+    assert(listing(t) == before)
     // a write job that fails part-way through a file (no CHECK: the
     // source is evaluated by the write job only)
     val tf = tmp("graft_ws_failed")
