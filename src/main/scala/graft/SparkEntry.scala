@@ -103,8 +103,8 @@ object SparkEntry {
     graft.core.TsvReader.readTsv(s, tsvFile).orderBy("p_partkey")
   }
 
-  /** O2: same TSV with `#` comment lines prepended — the comment-aware MAF
-    * reader must skip them and produce identical rows. */
+  /** O2: same TSV with `#` comment lines prepended — the reader must skip
+    * them and produce identical rows. */
   private def o02CommentSkip(s: SparkSession, dir: String): DataFrame = {
     val tsvDir = s"$tmpRoot/tsv_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     o01TsvRoundtrip(s, dir).count() // ensure the TSV exists/refreshed
@@ -114,7 +114,7 @@ object SparkEntry {
     val body = java.nio.file.Files.readString(java.nio.file.Paths.get(tsvFile))
     java.nio.file.Files.writeString(java.nio.file.Paths.get(commented),
       "#version 2.4\n#build test\n" + body)
-    graft.core.TsvReader.readMaf(s, commented).orderBy("p_partkey")
+    graft.core.TsvReader.readTsv(s, commented).orderBy("p_partkey")
   }
 
   /** O4-adjacent source coverage: JSON-lines round-trip — distributed

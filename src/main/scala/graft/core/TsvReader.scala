@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.io.{BufferedReader, FileInputStream, InputStreamReader}
 import java.nio.charset.StandardCharsets
 
-/** O1/O2/O3 — TSV scan with all-string header-derived schema and optional
+/** O1/O2/O3 — TSV scan with all-string header-derived schema and
   * `#`-comment skipping (reference: cna/reader.go:15-55, mutation/reader.go:15-69).
   *
   * The reference infers a schema by reading the first non-comment line and
@@ -35,23 +35,16 @@ object TsvReader {
     } finally r.close()
   }
 
-  /** O1: chunked TSV scan — header consumed, all columns string. The
+  /** O1/O2: chunked TSV scan — `#`-prefixed comment lines skipped
+    * (mutation/reader.go:66 `csv.WithComment('#')`), so the scan's header
+    * is the line [[headerColumns]] reads, then all columns string. The
     * reference's 100-row Arrow chunking (cna/reader.go:51) is an execution
     * detail; Spark's vectorized CSV reader batches internally. */
   def readTsv(spark: SparkSession, path: String, delimiter: String = "\t"): DataFrame =
     spark.read
       .option("sep", delimiter)
       .option("header", "true")
-      .schema(Schemas.allStringSchema(headerColumns(path, delimiter.head)))
-      .csv(path)
-
-  /** O2: MAF variant — additionally skips `#`-prefixed comment lines
-    * (mutation/reader.go:66 `csv.WithComment('#')`). */
-  def readMaf(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("sep", "\t")
-      .option("header", "true")
       .option("comment", "#")
-      .schema(Schemas.allStringSchema(headerColumns(path)))
+      .schema(Schemas.allStringSchema(headerColumns(path, delimiter.head)))
       .csv(path)
 }

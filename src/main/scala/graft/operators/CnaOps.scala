@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.core.Schemas
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CNA matrix transforms — O8 (wide→gene-centric pack), O9 (ordered sample
@@ -48,19 +49,20 @@ object CnaOps {
   /** O9+O10: `genetic_profile_samples` — a single row whose
     * ORDERED_SAMPLE_LIST is the prefixed sample column *names* in source
     * order (cna/transformer.go:496-508). A metadata-only computation: derived
-    * once from the schema on the driver, never touching data (the reference
+    * once from the header on the driver, never touching data (the reference
     * recomputes it per batch and drops duplicates via a `samplesSent` flag —
     * O10 — which collapses to compute-once here).
     */
   def sampleList(spark: SparkSession, columns: Seq[String], study: String,
-      profile: String): DataFrame = {
-    import spark.implicits._
-    val list = columns.drop(2)
+      profile: String): DataFrame =
+    spark.createDataFrame(java.util.List.of(sampleListRow(columns, study, profile)),
+      Schemas.geneticProfileSamples)
+
+  /** The one row of [[sampleList]]. */
+  def sampleListRow(columns: Seq[String], study: String, profile: String): Row =
+    Row(study, profile, columns.drop(2)
       .map(c => if (study.isEmpty) c else s"${study}_$c")
-      .mkString(",")
-    Seq((study, profile, list))
-      .toDF("CANCER_STUDY", "GENETIC_PROFILE", "ORDERED_SAMPLE_LIST")
-  }
+      .mkString(","))
 
   /** O11: unpivot/melt the wide matrix to the derived long format — one row
     * per (sample, gene): `(SAMPLE_ID, CANCER_STUDY, GENE_SYMBOL,

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import graft.core.{StudyDiscovery, TsvReader}
+import graft.core.{Schemas, StudyDiscovery, TsvReader}
 import graft.operators.{CnaOps, CombineOps, MutationOps}
 import graft.sinks.ParquetSink
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,45 +13,58 @@ import scala.util.{Failure, Success, Try}
   * convert-cna, convert-cna-with-derived, convert-mutations,
   * combine-cna, combine-cna-with-derived, combine-mutations.
   *
-  * Every output table is independent of the others (the only cross-file
+  * Each input is read by ONE scan that feeds every output derived from
+  * it ([[ParquetSink.write]] over the staged-file writer), as the
+  * reference tees each batch to its writers: a CNA matrix is one job
+  * writing `genetic_alterations` (and `derived`), a MAF is one job
+  * writing `mutation_event` and `mutation` from its id-stamped rows, a
+  * combined table is one scan over all its inputs. What the header
+  * alone determines (`genetic_profile_samples`) is written on the
+  * driver, with no job.
+  *
+  * Those writes are independent of each other (the only cross-file
   * state, the `MUTATION_EVENT_ID` offsets, is computed on the driver
-  * before any file is stamped), so each call submits its output writes
-  * concurrently, from `min(outputs, defaultParallelism)` threads the call
-  * creates and joins itself. Spark's scheduler only overlaps jobs that are
-  * submitted concurrently; one driver thread walking the files leaves the
-  * slots idle between its small jobs. The threads are created inside the
-  * call, so they inherit the caller's SparkContext local properties (job
-  * group, scheduler pool, job description, any caller tags). Returned
-  * paths keep discovery order whatever order the writes finish in.
+  * before any file is stamped), so each call submits them concurrently,
+  * from `min(writes, defaultParallelism)` threads the call creates and
+  * joins itself. Spark's scheduler only overlaps jobs that are
+  * submitted concurrently; one driver thread walking the files leaves
+  * the slots idle between its small jobs. The threads are created
+  * inside the call, so they inherit the caller's SparkContext local
+  * properties (job group, scheduler pool, job description, any caller
+  * tags). Returned paths keep discovery order whatever order the writes
+  * finish in.
   */
 object Pipelines {
 
   /** convert-cna[-with-derived] (cmd/cli/main.go:111-151): per discovered CNA
-    * matrix file, write genetic_alteration + genetic_profile_samples
-    * (+ derived), all outputs of all files concurrently. Fails like the
-    * reference (cna/transformer.go:36-38): after the first failure no
-    * further write starts; the call waits for the writes in flight, then
-    * rethrows the first failure in discovery order.
+    * matrix file, write genetic_alteration (+ derived) from one scan and
+    * genetic_profile_samples from the header, all files concurrently.
+    * Fails like the reference (cna/transformer.go:36-38): after the first
+    * failure no further write starts; the call waits for the writes in
+    * flight, then rethrows the first failure in discovery order.
     */
   def convertCna(spark: SparkSession, rootDir: String,
       withDerived: Boolean = false, singleFile: Boolean = true): Seq[String] = {
-    val writes = StudyDiscovery.findCnaFiles(rootDir).flatMap { f =>
-      // header read on first use, inside the pool: an unreadable file
-      // fails its own writes, in discovery order
-      lazy val df = TsvReader.readTsv(spark, f.path)
+    val files = StudyDiscovery.findCnaFiles(rootDir).map { f =>
       val (study, profile) = (f.cancerStudyId, f.geneticProfileId)
-      val tables = Seq[(String, () => DataFrame)](
-        "genetic_alterations" -> (() => CnaOps.packGeneCentric(df, study, profile)),
-        "genetic_profile_samples" ->
-          (() => CnaOps.sampleList(spark, df.columns.toSeq, study, profile))) ++
+      val Seq(alterations, samples, derived) =
+        Seq("genetic_alterations", "genetic_profile_samples", "derived")
+          .map(ParquetSink.derivePath(f.path, _))
+      val tee = Seq[(String, DataFrame => DataFrame)](
+        alterations -> (CnaOps.packGeneCentric(_, study, profile))) ++
         (if (withDerived)
-          Seq("derived" -> (() => CnaOps.unpivotDerived(df, study, profile)))
+          Seq(derived -> (CnaOps.unpivotDerived(_: DataFrame, study, profile)))
         else Nil)
-      tables.map { case (suffix, out) => ParquetSink.derivePath(f.path, suffix) -> out }
+      // the header is read inside the pool: an unreadable file fails its
+      // own writes, in discovery order
+      val writes = Seq[() => Unit](
+        () => ParquetSink.write(TsvReader.readTsv(spark, f.path), tee, singleFile),
+        () => ParquetSink.writeRows(spark, samples, Schemas.geneticProfileSamples,
+          Seq(CnaOps.sampleListRow(TsvReader.headerColumns(f.path), study, profile))))
+      (alterations +: samples +: tee.tail.map(_._1), writes)
     }
-    runAllOrThrow(spark, writes.map { case (path, out) =>
-      () => ParquetSink.write(out(), path, singleFile) })
-    writes.map(_._1)
+    runAllOrThrow(spark, files.flatMap(_._2))
+    files.flatMap(_._1)
   }
 
   /** convert-mutations (cmd/cli/main.go:396-424): per discovered MAF, write
@@ -61,35 +74,34 @@ object Pipelines {
     * process, like the reference (:44-49,60-71).
     *
     * Cross-file contiguity without serializing the files: every MAF is
-    * staged concurrently (persisted, with its row count from the same job),
-    * the per-file offsets are computed on the driver over the files that
-    * staged, and then every file's two outputs are stamped and written
-    * concurrently — restoring the file parallelism the reference gives up
-    * (SURVEY.md §3.2). A file that fails to stage takes no ids.
+    * staged concurrently (its one scan, persisted, with its row count from
+    * the same job), the per-file offsets are computed on the driver over
+    * the files that staged, and then every file's stamped rows are written
+    * to both outputs by one job per file, concurrently — restoring the file
+    * parallelism the reference gives up (SURVEY.md §3.2). A file that fails
+    * to stage takes no ids.
     */
   def convertMutations(spark: SparkSession, rootDir: String,
       singleFile: Boolean = true): Seq[String] = {
     val files = StudyDiscovery.findMutationFiles(rootDir)
     val staged = runConcurrently(spark, failFast = false)(files.map { f =>
-      () => MutationOps.stage(TsvReader.readMaf(spark, f.path))
+      () => MutationOps.stage(TsvReader.readTsv(spark, f.path))
     })
     try {
       val offsets = staged.scanLeft(0L)((off, s) => off + s.fold(_ => 0L, _.rowCount))
-      val writes = files.indices.flatMap { i =>
-        val f = files(i)
-        staged(i).toOption.toSeq.flatMap { s =>
-          val (events, mutations) = MutationOps.transformMaf(
-            s.stamp(offsets(i)), f.cancerStudyId, f.geneticProfileId)
-          Seq("mutation_event" -> events, "mutation" -> mutations).map {
-            case (suffix, df) => (i, ParquetSink.derivePath(f.path, suffix), df)
-          }
-        }
-      }
-      val written = runConcurrently(spark, failFast = false)(writes.map {
-        case (_, path, df) => () => ParquetSink.write(df, path, singleFile)
+      val outs = files.map(f => Seq("mutation_event", "mutation")
+        .map(ParquetSink.derivePath(f.path, _)))
+      val writes = files.indices.filter(staged(_).isSuccess)
+      val written = runConcurrently(spark, failFast = false)(writes.map { i =>
+        val (study, profile) = (files(i).cancerStudyId, files(i).geneticProfileId)
+        val tables = Seq[DataFrame => DataFrame](
+          MutationOps.transformMaf(_, study, profile)._1,
+          MutationOps.transformMaf(_, study, profile)._2)
+        () => ParquetSink.write(staged(i).get.stamp(offsets(i)), outs(i).zip(tables),
+          singleFile)
       })
       val failed = (staged.zipWithIndex.collect { case (Failure(e), i) => i -> e } ++
-        writes.zip(written).collect { case ((i, _, _), Failure(e)) => i -> e })
+        writes.zip(written).collect { case (i, Failure(e)) => i -> e })
         .sortBy(_._1)
       failed.foreach { case (i, e) =>
         System.err.println(s"[convert-mutations] ${files(i).path} failed: ${e.getMessage}")
@@ -99,14 +111,14 @@ object Pipelines {
         throw new RuntimeException(
           s"convert-mutations: ${paths.size} file(s) failed: ${paths.mkString(", ")}")
       }
-      writes.map(_._2)
+      writes.flatMap(outs)
     } finally staged.foreach(_.foreach(_.close()))
   }
 
   /** combine-* (cmd/cli/main.go:153-196,538-559): per table kind, glob the
-    * per-study parquet files and union-all into one combined file, excluding
-    * the output itself from the inputs. The table kinds are combined
-    * concurrently and fail like [[convertCna]]. */
+    * per-study parquet files and union-all them, in one scan, into one
+    * combined file, excluding the output itself from the inputs. The table
+    * kinds are combined concurrently and fail like [[convertCna]]. */
   def combine(spark: SparkSession, dir: String, outputBase: String,
       suffixes: Seq[String], singleFile: Boolean = true): Seq[String] = {
     val outs = suffixes.map(suffix => suffix -> ParquetSink.combinedPath(dir, outputBase, suffix))

@@ -674,50 +674,14 @@ object TableLog {
       ok: Boolean, msg: => String): Unit =
     if (!ok) { staged.foreach(dropStaged(table, _)); require(ok, msg) }
 
-  /** Direct single-pass staged write (guide §1.2/§5, the batch twin of
-    * the streaming sink's DataWriters): ONE Spark job in which each task
-    * writes one parquet file straight into `outDir` through the same
-    * writer stack a batch `df.write` uses (ParquetWrite bridge — bytes
-    * identical), opened LAZILY on the first row so empty tasks leave no
-    * file, and measures `stats` over the rows as it writes them. No
-    * FileOutputCommitter protocol — no `_temporary` staging, no
-    * task/job-commit renames, no `_SUCCESS`, no write-command
-    * re-planning. Atomicity is unchanged because the set dir is
-    * INVISIBLE until the manifest CAS publishes it, and only files
-    * reported by WINNING task attempts are returned (a failed attempt
-    * deletes its partial file; a killed speculative loser's file stays
-    * unmanifested garbage — the same class as a CAS loser's write).
-    * Returns the winners' summaries, sorted by file name. */
+  /** The one-output [[WriteStats.writeStaged]]: `df`'s rows as one
+    * file per task in `outDir`, measured by `stats`, in ONE Spark job.
+    * The set dir is invisible until a manifest CAS publishes it. */
   private def writeStagedFiles(spark: SparkSession, outDir: String,
       df: DataFrame, stats: WriteStats.Spec = WriteStats.Spec())
-      : Seq[WriteStats.FileSummary] = {
-    val pw = org.apache.spark.sql.graft.ParquetWrite.factory(spark, df.schema)
-    val bound = stats.bind(spark, df.schema)
-    Files.createDirectories(Paths.get(outDir))
-    val rdd = df.queryExecution.toRdd
-    // a provably-empty write (0 partitions after AQE finalization, e.g.
-    // an empty-source commit) stages nothing — skip the job dispatch
-    if (rdd.getNumPartitions == 0) return Nil
-    val written = spark.sparkContext.runJob(
-      rdd,
-      (ctx: org.apache.spark.TaskContext,
-          it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) => {
-        // attempt ids make retried/speculative attempts collision-free;
-        // only the winner's summary is returned to the driver
-        val name = f"part-${ctx.partitionId()}%05d-" +
-          s"a${ctx.attemptNumber()}-t${ctx.taskAttemptId()}.parquet"
-        val f = new WriteStats.StagedFile(pw, bound, s"$outDir/$name",
-          name, ctx.partitionId(), ctx.attemptNumber())
-        var ok = false
-        try {
-          while (it.hasNext) f.write(it.next())
-          val s = f.commit()
-          ok = true
-          s
-        } finally if (!ok) f.abort()
-      })
-    written.filter(_ != null).sortBy(_.name).toSeq
-  }
+      : Seq[WriteStats.FileSummary] =
+    WriteStats.writeStaged(spark, df.queryExecution.toRdd,
+      Seq(WriteStats.Output(outDir, WriteStats.identity(df.schema), stats))).head
 
   /** Read the table at its latest version (or a pinned one): a parquet
     * scan of EXACTLY the manifest's files. */
@@ -3186,17 +3150,10 @@ object TableLog {
     if (!Files.exists(stage)) {
       val tmp = stage.getParent.resolve(
         s".tmp-${stage.getFileName}-${java.util.UUID.randomUUID()}")
-      val winners = writeStagedFiles(spark, tmp.toString, captured)
-        .map(_.name)
       // the stage becomes immutable at the rename and the LINK step
-      // lists it, so a non-winning attempt's leftover must go now;
-      // winners only
-      listDir(tmp).map(_.getFileName.toString)
-        .filter(n => n.endsWith(".parquet") && !winners.contains(n))
-        .foreach { n =>
-          Files.deleteIfExists(tmp.resolve(n))
-          Files.deleteIfExists(tmp.resolve(s".$n.crc"))
-        }
+      // lists it, so a non-winning attempt's leftover must go now
+      WriteStats.dropLosers(tmp.toString,
+        writeStagedFiles(spark, tmp.toString, captured))
       try Files.move(tmp, stage, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
         case _: java.nio.file.FileAlreadyExistsException |

@@ -2,12 +2,18 @@ package graft.sinks
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.TaskContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
-  Alias, BindReferences, Expression, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.Project
-import org.apache.spark.sql.graft.{Bridge, ParquetWriteFactory, RowFileWriter}
+  Alias, Attribute, BindReferences, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{
+  Expand, LeafNode, LogicalPlan, Project}
+import org.apache.spark.sql.graft.{
+  Bridge, ParquetWrite, ParquetWriteFactory, RowFileWriter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -65,22 +71,11 @@ private[graft] object WriteStats {
           audits.map(_.bad)
       val exprs =
         if (cols.isEmpty) Nil
-        else {
-          // an RDD-backed leaf the optimizer cannot fold away: the
-          // optimized projection is fully evaluable (runtime-replaceable
-          // functions replaced) and still reads the writer's row layout
-          val leaf = Bridge.fromInternalRows(spark,
-            spark.sparkContext.emptyRDD[InternalRow], schema)
-          leaf.select(cols.zipWithIndex.map { case (c, i) =>
-            c.as(s"_ws$i") }: _*).queryExecution.optimizedPlan match {
-            case Project(list, child) if child.output.size == schema.size =>
-              list.map(e => BindReferences.bindReference(e match {
-                case a: Alias => a.child
-                case other => other
-              }, child.output))
-            case other => throw new IllegalStateException(
-              s"write stats: unexpected projection plan\n$other")
-          }
+        else rowGen(spark, schema)(_.select(cols.zipWithIndex.map {
+          case (c, i) => c.as(s"_ws$i") }: _*)).steps match {
+          case Seq(Seq(list)) => list
+          case other => throw new IllegalStateException(
+            s"write stats: expected one projection, got $other")
         }
       new Bound(exprs, statsCols.size, strStatsCols.size, derived.size,
         bloomCols.size, audits.size)
@@ -239,6 +234,131 @@ private[graft] object WriteStats {
       try w.close() catch { case _: Throwable => () }
       finally deleteStaged(absPath)
     }
+  }
+
+  /** The rows of one output as a narrow plan over the rows a write task
+    * receives, bound on the driver: `steps` run from the input up, each
+    * a list of projections that turns one row into one row per
+    * projection (a Project is one, an Expand — unpivot — several). No
+    * step at all writes the input rows as they come. */
+  final class RowGen private[WriteStats] (val schema: StructType,
+      private[WriteStats] val steps: Seq[Seq[Seq[Expression]]])
+      extends Serializable {
+
+    /** Per task: a function that pushes one input row's output rows
+      * into `out`. The rows are the projections' reused buffers, valid
+      * until `out` returns. */
+    def open(partition: Int, out: InternalRow => Unit): InternalRow => Unit =
+      steps.foldRight(out) { (projections, next) =>
+        val ps = projections.map { e =>
+          val p = UnsafeProjection.create(e)
+          p.initialize(partition)
+          p
+        }.toArray
+        (r: InternalRow) => {
+          var i = 0
+          while (i < ps.length) { next(ps(i)(r)); i += 1 }
+        }
+      }
+  }
+
+  /** The input rows unchanged. */
+  def identity(schema: StructType): RowGen = new RowGen(schema, Nil)
+
+  /** Bind `f`, a narrow plan over rows of `schema`, to a [[RowGen]]: the
+    * plan is built over an RDD-backed leaf the optimizer cannot fold
+    * away, so its optimized form is fully evaluable (runtime-replaceable
+    * functions replaced) and still reads the writer's row layout. The
+    * same DataFrame code that defines an output as a query defines it
+    * inside a write task. Refuses anything but projections and
+    * expansions. */
+  def rowGen(spark: SparkSession, schema: StructType)(
+      f: DataFrame => DataFrame): RowGen = {
+    val leaf = Bridge.fromInternalRows(spark,
+      spark.sparkContext.emptyRDD[InternalRow], schema)
+    def bind(list: Seq[Expression], input: Seq[Attribute]) =
+      list.map(e => BindReferences.bindReference(e match {
+        case a: Alias => a.child
+        case other => other
+      }, input))
+    def steps(plan: LogicalPlan): Seq[Seq[Seq[Expression]]] = plan match {
+      case Project(list, child) => steps(child) :+ Seq(bind(list, child.output))
+      case Expand(projections, _, child) =>
+        steps(child) :+ projections.map(bind(_, child.output))
+      case l: LeafNode if l.output.size == schema.size => Nil
+      case other => throw new IllegalStateException(
+        s"staged write: not a narrow plan over the written rows\n$other")
+    }
+    val plan = f(leaf).queryExecution.optimizedPlan
+    new RowGen(plan.schema, steps(plan))
+  }
+
+  /** One output of [[writeStaged]]: the directory its files go to, its
+    * rows and what to measure over them. */
+  final case class Output(dir: String, rows: RowGen, stats: Spec = Spec())
+
+  /** The staged write (the batch twin of the streaming sink's
+    * DataWriters): ONE Spark job over `rdd` in which each task writes,
+    * per output, one parquet file straight into that output's `dir`
+    * through the writer stack a batch `df.write` uses (ParquetWrite
+    * bridge — bytes identical), and measures the output's `stats` over
+    * the rows as it writes them. Every output is fed from the same pass
+    * over the task's input rows, so one scan serves them all. Files are
+    * opened lazily on the first row, so an empty task leaves none. No
+    * FileOutputCommitter protocol — no `_temporary` staging, no
+    * task/job-commit renames, no `_SUCCESS`, no write-command
+    * re-planning: each `dir` is a staging directory the caller makes
+    * visible (a manifest CAS, a rename) only after this returns. Only
+    * files reported by WINNING task attempts are returned (a failed
+    * attempt deletes its partial files; a killed speculative loser's
+    * file stays behind, see [[dropLosers]]). Returns per output the
+    * winners' summaries, sorted by file name. */
+  def writeStaged(spark: SparkSession, rdd: => RDD[InternalRow],
+      outs: Seq[Output]): Seq[Seq[FileSummary]] = {
+    val pws = outs.map(o => ParquetWrite.factory(spark, o.rows.schema)).toArray
+    val bounds = outs.map(o => o.stats.bind(spark, o.rows.schema)).toArray
+    val gens = outs.map(_.rows).toArray
+    val dirs = outs.map(_.dir).toArray
+    dirs.foreach(d => Files.createDirectories(Paths.get(d)))
+    val input = rdd
+    // a provably-empty write (0 partitions after AQE finalization, e.g.
+    // an empty-source commit) stages nothing — skip the job dispatch
+    if (input.getNumPartitions == 0) return outs.map(_ => Nil)
+    val written = spark.sparkContext.runJob(input,
+      (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        // attempt ids make retried/speculative attempts collision-free;
+        // only the winner's summaries are returned to the driver
+        val name = f"part-${ctx.partitionId()}%05d-" +
+          s"a${ctx.attemptNumber()}-t${ctx.taskAttemptId()}.parquet"
+        val files = dirs.indices.map(i => new StagedFile(pws(i), bounds(i),
+          s"${dirs(i)}/$name", name, ctx.partitionId(), ctx.attemptNumber()))
+        val feeds = files.indices
+          .map(i => gens(i).open(ctx.partitionId(), files(i).write)).toArray
+        var ok = false
+        try {
+          while (it.hasNext) {
+            val r = it.next()
+            var i = 0
+            while (i < feeds.length) { feeds(i)(r); i += 1 }
+          }
+          val s = files.map(_.commit())
+          ok = true
+          s
+        } finally if (!ok) files.foreach(_.abort())
+      })
+    outs.indices.map(i =>
+      written.map(_(i)).filter(_ != null).sortBy(_.name).toSeq)
+  }
+
+  /** Delete the staged parquet files in `dir` that no winning attempt
+    * reported — before a caller publishes `dir` whole. */
+  def dropLosers(dir: String, winners: Seq[FileSummary]): Unit = {
+    val keep = winners.map(_.name).toSet
+    val ls = Files.list(Paths.get(dir))
+    try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.endsWith(".parquet") && !keep(n)).toList
+      .foreach(n => deleteStaged(s"$dir/$n"))
+    finally ls.close()
   }
 
   /** Delete one staged parquet file and its checksum sidecar. */

@@ -58,4 +58,27 @@ object ParquetRead {
       hadoopConf = spark.sessionState.newHadoopConf())
     new ParquetReadFactory(rdr)
   }
+
+  /** The Spark schema of the parquet data at `path` (a file, or the first
+    * data file of a directory), from its footer, read on the DRIVER — no
+    * job, unlike the inference of a schema-less `spark.read.parquet`. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val file =
+      if (!fs.getFileStatus(root).isDirectory) root
+      else fs.listStatus(root).map(_.getPath)
+        .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
+        .sortBy(_.getName).headOption
+        .getOrElse(throw new IllegalArgumentException(s"$path: no parquet file"))
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+    val footer = try r.getFooter finally r.close()
+    ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
 }

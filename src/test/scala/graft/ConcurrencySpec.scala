@@ -46,7 +46,9 @@ class ConcurrencySpec extends SparkSpec {
       sc.setLocalProperty("graft.test.tag", null)
     }
     val props = jobs.asScala.toSeq
-    assert(props.size >= 11, s"${props.size} jobs") // one per output at least
+    // one per scan at least: the matrix, each MAF's staging and its
+    // write, each combined table
+    assert(props.size >= 10, s"${props.size} jobs")
     props.foreach { p =>
       assert(p.getProperty("spark.jobGroup.id") == "graft-import")
       assert(p.getProperty("graft.test.tag") == "caller")

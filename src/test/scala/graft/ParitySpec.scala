@@ -40,7 +40,7 @@ class ParitySpec extends SparkSpec {
   }
 
   test("O2: MAF read skips # comments") {
-    val df = TsvReader.readMaf(spark, s"$studies/study_a/data_mutations.txt")
+    val df = TsvReader.readTsv(spark, s"$studies/study_a/data_mutations.txt")
     assert(df.count() == 3)
     assert(df.columns.contains("HGVSp_Short"))
   }
@@ -80,7 +80,7 @@ class ParitySpec extends SparkSpec {
   }
 
   test("O13/O14/O15/O16: MAF transform — schemas, mapping, drift fill, ids") {
-    val df = TsvReader.readMaf(spark, s"$studies/study_a/data_mutations.txt")
+    val df = TsvReader.readTsv(spark, s"$studies/study_a/data_mutations.txt")
     val (stamped, staged) = MutationOps.withContiguousId(df)
     val (ev, mu) = MutationOps.transformMaf(stamped, "study_a", "study_a_mutations")
     assert(ev.columns.toSeq == Schemas.mutationEvent.fieldNames.toSeq)
@@ -164,7 +164,7 @@ class ParitySpec extends SparkSpec {
     val tmp = Files.createTempDirectory("graft_nohdr").toString
     for ((name, text) <- Seq("empty.txt" -> "", "comments.txt" -> "#a\n#b\n")) {
       writeUtf8(s"$tmp/$name", text)
-      val e = intercept[IllegalArgumentException](TsvReader.readMaf(spark, s"$tmp/$name"))
+      val e = intercept[IllegalArgumentException](TsvReader.readTsv(spark, s"$tmp/$name"))
       assert(e.getMessage.contains(s"$tmp/$name"))
     }
   }
@@ -198,5 +198,48 @@ class ParitySpec extends SparkSpec {
     assert(ids == (0L until 5L)) // 3 rows study_a + 2 rows study_c
     assert(!Files.exists(Paths.get(
       ParquetSink.derivePath(s"$tmp/study_b/data_mutations.txt", "mutation_event"))))
+  }
+
+  test("combine: a directory given with a trailing slash still self-excludes the earlier output") {
+    val tmp = Files.createTempDirectory("graft_slash").toString
+    Files.createDirectories(Paths.get(s"$tmp/study_a"))
+    for (n <- Seq("meta_cna.txt", "data_cna.txt"))
+      Files.copy(Paths.get(s"$studies/study_a/$n"), Paths.get(s"$tmp/study_a/$n"))
+    Pipelines.convertCna(spark, tmp, withDerived = true)
+    def counts() = Pipelines.combine(spark, s"$tmp/study_a/", "combined",
+      Pipelines.cnaDerivedSuffixes).map(spark.read.parquet(_).count())
+    assert(counts() == Seq(2L, 1L, 6L))
+    assert(counts() == Seq(2L, 1L, 6L)) // the first run's outputs are not inputs
+  }
+
+  test("O1/O2: a CNA matrix with a leading # line converts to exactly its gene rows") {
+    val tmp = Files.createTempDirectory("graft_hash").toString
+    val cna = Files.readString(Paths.get(s"$studies/study_a/data_cna.txt"))
+    writeUtf8(s"$tmp/study_h/meta_cna.txt", meta("study_h", "gistic", "data_cna.txt"))
+    writeUtf8(s"$tmp/study_h/data_cna.txt", "#version 2\n" + cna)
+    val Seq(ga, gps, derived) = Pipelines.convertCna(spark, tmp, withDerived = true)
+    assert(spark.read.parquet(ga).select("GENE_SYMBOL").collect().map(_.getString(0))
+      .sorted.toSeq == Seq("BRCA1", "TP53"))
+    assert(spark.read.parquet(gps).select("ORDERED_SAMPLE_LIST").head().getString(0) ==
+      "study_h_TCGA-S1,study_h_TCGA-S2,study_h_TCGA-S3")
+    assert(spark.read.parquet(derived).count() == 6)
+    // the comment changes nothing the reader returns
+    assert(TsvReader.readTsv(spark, s"$tmp/study_h/data_cna.txt").collect().toSeq ==
+      TsvReader.readTsv(spark, s"$studies/study_a/data_cna.txt").collect().toSeq)
+  }
+
+  test("combine refuses inputs whose column names differ, naming the odd file, and writes nothing") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_mismatch").toString
+    val rows = Seq(("study_a", "p", "BRCA1", "0,1"))
+    ParquetSink.write(rows.toDF("CANCER_STUDY", "GENETIC_PROFILE", "GENE_SYMBOL", "VALUES"),
+      s"$tmp/a_genetic_alterations.parquet", singleFile = true)
+    ParquetSink.write(rows.toDF("CANCER_STUDY", "GENETIC_PROFILE", "GENE", "VALUES"),
+      s"$tmp/b_genetic_alterations.parquet", singleFile = true)
+    val e = intercept[IllegalArgumentException](
+      Pipelines.combine(spark, tmp, "combined", Seq("genetic_alterations")))
+    assert(e.getMessage.contains(s"$tmp/b_genetic_alterations.parquet"))
+    assert(Files.list(Paths.get(tmp)).toArray.map(_.toString).sorted.toSeq ==
+      Seq(s"$tmp/a_genetic_alterations.parquet", s"$tmp/b_genetic_alterations.parquet"))
   }
 }
