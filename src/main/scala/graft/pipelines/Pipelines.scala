@@ -17,10 +17,10 @@ import scala.util.{Failure, Success, Try}
   * it ([[ParquetSink.write]] over the staged-file writer), as the
   * reference tees each batch to its writers: a CNA matrix is one job
   * writing `genetic_alterations` (and `derived`), a MAF is one job
-  * writing `mutation_event` and `mutation` from its id-stamped rows, a
-  * combined table is one scan over all its inputs. What the header
-  * alone determines (`genetic_profile_samples`) is written on the
-  * driver, with no job.
+  * writing `mutation_event` and `mutation` from its id-stamped rows.
+  * What the header alone determines (`genetic_profile_samples`) is
+  * written on the driver, with no job, and so is a combined table: its
+  * inputs' column chunks are copied into one file, never decoded.
   *
   * Those writes are independent of each other (the only cross-file
   * state, the `MUTATION_EVENT_ID` offsets, is computed on the driver
@@ -116,15 +116,16 @@ object Pipelines {
   }
 
   /** combine-* (cmd/cli/main.go:153-196,538-559): per table kind, glob the
-    * per-study parquet files and union-all them, in one scan, into one
-    * combined file, excluding the output itself from the inputs. The table
+    * per-study parquet files and union-all them into one combined file,
+    * excluding the output itself from the inputs: column chunks are copied
+    * on the driver ([[CombineOps.concat]]), so no Spark job runs. The table
     * kinds are combined concurrently and fail like [[convertCna]]. */
   def combine(spark: SparkSession, dir: String, outputBase: String,
-      suffixes: Seq[String], singleFile: Boolean = true): Seq[String] = {
+      suffixes: Seq[String]): Seq[String] = {
     val outs = suffixes.map(suffix => suffix -> ParquetSink.combinedPath(dir, outputBase, suffix))
     runAllOrThrow(spark, outs.map { case (suffix, out) => () =>
-      ParquetSink.write(
-        CombineOps.combineGlob(spark, s"$dir/*_$suffix.parquet", out), out, singleFile)
+      val inputs = CombineOps.inputs(s"$dir/*_$suffix.parquet", out)
+      ParquetSink.writeOneFile(out)(CombineOps.concat(spark, inputs, _))
     })
     outs.map(_._2)
   }

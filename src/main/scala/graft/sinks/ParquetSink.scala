@@ -14,7 +14,7 @@ import java.util.UUID
   * (reference: cna/writer.go:14-58; cna/transformer.go:266-297;
   * cmd/cli/main.go:198-237,561-579).
   *
-  * Every table is written by the staged-file writer
+  * A table read from data is written by the staged-file writer
   * ([[WriteStats.writeStaged]]), the one TableLog commits through: ONE
   * Spark job writes all the tables [[write]] is handed from one pass
   * over the source's rows — the reference tees each read batch to 2–3
@@ -24,7 +24,9 @@ import java.util.UUID
   * does each staging directory replace its output (overwrite), so a
   * failed write leaves neither a partial output nor a staging
   * directory. There is no `_SUCCESS` marker. An output with no rows
-  * still gets one empty file, so its schema stays readable.
+  * still gets one empty file, so its schema stays readable. A one-file
+  * table the driver writes itself ([[writeRows]], a combined table) is
+  * published through the same staging directory ([[writeOneFile]]).
   *
   * Snappy like the reference (cna/writer.go:27). `singleFile=true`
   * reproduces the reference's one-file-per-table layout — correct for
@@ -48,7 +50,7 @@ object ParquetSink {
       }, staged.map { case (_, dir, gen) => WriteStats.Output(dir, gen) })
       staged.zip(written).foreach { case ((path, dir, gen), files) =>
         WriteStats.dropLosers(dir, files)
-        if (files.isEmpty) writeFile(spark, dir, gen.schema, Nil)
+        if (files.isEmpty) writeFile(spark, s"$dir/$partFile", gen.schema, Nil)
         publish(dir, path)
       }
     } finally staged.foreach { case (_, dir, _) => FileUtils.deleteQuietly(new File(dir)) }
@@ -62,18 +64,29 @@ object ParquetSink {
     * driver — no Spark job (a table known before any data is read). */
   def writeRows(spark: SparkSession, path: String, schema: StructType,
       rows: Seq[Row]): Unit = {
+    val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+    writeOneFile(path)(writeFile(spark, _, schema,
+      rows.map(toRow(_).asInstanceOf[InternalRow])))
+  }
+
+  /** Publish the one-file table at `path` that `writeTo` writes, from the
+    * driver, into the file it is handed: the file sits in a hidden staging
+    * directory that replaces `path` only once `writeTo` has returned, so a
+    * failure leaves neither a partial output nor a staging directory. */
+  def writeOneFile(path: String)(writeTo: String => Unit): Unit = {
     val dir = stagingDir(path)
     try {
       Files.createDirectories(Paths.get(dir))
-      val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
-      writeFile(spark, dir, schema, rows.map(toRow(_).asInstanceOf[InternalRow]))
+      writeTo(s"$dir/$partFile")
       publish(dir, path)
     } finally FileUtils.deleteQuietly(new File(dir))
   }
 
-  private def writeFile(spark: SparkSession, dir: String, schema: StructType,
+  private val partFile = "part-00000.parquet"
+
+  private def writeFile(spark: SparkSession, file: String, schema: StructType,
       rows: Seq[InternalRow]): Unit = {
-    val w = ParquetWrite.factory(spark, schema).open(s"$dir/part-00000.parquet", 0, 0)
+    val w = ParquetWrite.factory(spark, schema).open(file, 0, 0)
     try rows.foreach(w.write) finally w.close()
   }
 

@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.PartitionedFile
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetReadSupport, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
@@ -59,26 +62,18 @@ object ParquetRead {
     new ParquetReadFactory(rdr)
   }
 
-  /** The Spark schema of the parquet data at `path` (a file, or the first
-    * data file of a directory), from its footer, read on the DRIVER — no
-    * job, unlike the inference of a schema-less `spark.read.parquet`. */
-  def footerSchema(spark: SparkSession, path: String): StructType = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(path)
-    val fs = root.getFileSystem(conf)
-    val file =
-      if (!fs.getFileStatus(root).isDirectory) root
-      else fs.listStatus(root).map(_.getPath)
-        .filterNot(f => f.getName.startsWith(".") || f.getName.startsWith("_"))
-        .sortBy(_.getName).headOption
-        .getOrElse(throw new IllegalArgumentException(s"$path: no parquet file"))
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
-    val footer = try r.getFooter finally r.close()
+  /** The Spark schema of the parquet file `file` from its `footer`, read
+    * on the DRIVER — no job, unlike the inference of a schema-less
+    * `spark.read.parquet`: Spark's row-metadata schema when the writer
+    * left one, else the converted Parquet schema. */
+  def footerSchema(spark: SparkSession, file: Path, footer: ParquetMetadata)
+      : StructType =
     ParquetFileFormat.readSchemaFromFooter(new Footer(file, footer),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-  }
+
+  /** Spark's row-metadata footer entry for a file of `schema` as a Spark
+    * scan of it reads (and a Spark write of that scan would record) it:
+    * every field nullable. */
+  def rowMetadata(schema: StructType): (String, String) =
+    ParquetReadSupport.SPARK_METADATA_KEY -> schema.asNullable.json
 }

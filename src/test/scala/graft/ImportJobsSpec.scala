@@ -12,8 +12,8 @@ import scala.jdk.CollectionConverters._
 
 /** The importer's Spark job budget over the fixture studies: every input
   * file is scanned once, by one job, for all the outputs it feeds; a
-  * combined table is one scan over all its inputs; and a write that fails
-  * leaves nothing behind. */
+  * combined table is copied on the driver, with no job; and a write that
+  * fails leaves nothing behind. */
 class ImportJobsSpec extends SparkSpec {
 
   val studies = "src/test/resources/studies"
@@ -55,7 +55,7 @@ class ImportJobsSpec extends SparkSpec {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("each CNA matrix and each MAF is scanned once, by one job, for all its outputs; combine is one job per table") {
+  test("each CNA matrix and each MAF is scanned once, by one job, for all its outputs; combine runs no job") {
     val root = hub()
     val cnaFiles = Seq("study_a", "study_b").map(st => root.resolve(s"$st/data_cna.txt"))
     val mafFiles = Seq("study_a", "study_b").map(st => root.resolve(s"$st/data_mutations.txt"))
@@ -78,10 +78,10 @@ class ImportJobsSpec extends SparkSpec {
     }
     val (cnaCombined, cnaCombineJobs, _) = measured(Pipelines.combine(
       spark, gathered.toString, "combined", Pipelines.cnaDerivedSuffixes))
-    assert(cnaCombineJobs <= 3, s"combine: $cnaCombineJobs jobs for 3 tables")
+    assert(cnaCombineJobs == 0, s"combine: $cnaCombineJobs jobs for 3 tables")
     val (mutCombined, mutCombineJobs, _) = measured(Pipelines.combine(
       spark, gathered.toString, "combined", Pipelines.mutationSuffixes))
-    assert(mutCombineJobs <= 2, s"combine: $mutCombineJobs jobs for 2 tables")
+    assert(mutCombineJobs == 0, s"combine: $mutCombineJobs jobs for 2 tables")
     assert((cnaCombined ++ mutCombined).map(spark.read.parquet(_).count()) ==
       Seq(4L, 2L, 12L, 5L, 5L))
   }
@@ -100,5 +100,25 @@ class ImportJobsSpec extends SparkSpec {
     intercept[Exception](ParquetSink.write(src, outs.head, singleFile = true))
     assert(Files.list(dir).iterator().asScala.map(_.toString).toSeq == Seq(outs.head))
     assert(spark.read.parquet(outs.head).count() == 3)
+
+    // a combine whose second input is cut short or is not Parquet at all
+    // fails, and the earlier combined output stays as it was
+    val hub = Files.createTempDirectory("graft_fail_combine")
+    Seq("a", "b").foreach(n => ParquetSink.write(spark.range(5).toDF("id"),
+      hub.resolve(s"${n}_t.parquet").toString, singleFile = true))
+    val Seq(combined) = Pipelines.combine(spark, hub.toString, "combined", Seq("t"))
+    def snapshot() = Files.list(Paths.get(combined)).iterator().asScala.toSeq.sorted
+      .map(f => f.getFileName.toString -> Files.readAllBytes(f).toSeq)
+    val before = snapshot()
+    val Seq(second) = Files.list(hub.resolve("b_t.parquet")).iterator().asScala.toSeq
+      .filterNot(_.getFileName.toString.startsWith("."))
+    val whole = Files.readAllBytes(second)
+    for (broken <- Seq(whole.take(whole.length / 2), "not parquet".getBytes)) {
+      Files.write(second, broken)
+      val e = intercept[Exception](Pipelines.combine(spark, hub.toString, "combined", Seq("t")))
+      assert(e.getMessage.contains(second.toString), e.getMessage)
+      assert(snapshot() == before)
+      assert(!Files.list(hub).iterator().asScala.exists(_.getFileName.toString.contains("staging")))
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.{Schemas, StudyDiscovery, TsvReader}
-import graft.operators.{CnaOps, CombineOps, MutationOps}
+import graft.operators.{CnaOps, MutationOps}
 import graft.pipelines.Pipelines
 import graft.sinks.ParquetSink
 
@@ -113,8 +113,8 @@ class ParitySpec extends SparkSpec {
     }
     val written = Pipelines.convertMutations(spark, tmp)
     assert(written.size == 4)
-    val allEvents = CombineOps.combine(spark,
-      written.filter(_.endsWith("_mutation_event.parquet")))
+    val allEvents = spark.read.parquet(
+      written.filter(_.endsWith("_mutation_event.parquet")): _*)
     val ids = allEvents.select("MUTATION_EVENT_ID")
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(ids == (0L until 5L)) // 3 rows study_a + 2 rows study_b, contiguous
@@ -132,10 +132,11 @@ class ParitySpec extends SparkSpec {
     assert(combined.size == 3)
     val ga = spark.read.parquet(combined.head)
     assert(ga.count() == 2)
+    assert(ga.schema == spark.read.parquet(written.head).schema)
     // self-exclusion: recombining the same dir must not double-count
-    val again = CombineOps.combineGlob(spark,
-      s"$tmp/study_a/*_genetic_alterations.parquet", combined.head)
-    assert(again.count() == 2)
+    val again = Pipelines.combine(spark, s"$tmp/study_a", "combined",
+      Seq("genetic_alterations"))
+    assert(spark.read.parquet(again.head).count() == 2)
   }
 
   private def writeUtf8(path: String, text: String): Unit = {
@@ -241,5 +242,57 @@ class ParitySpec extends SparkSpec {
     assert(e.getMessage.contains(s"$tmp/b_genetic_alterations.parquet"))
     assert(Files.list(Paths.get(tmp)).toArray.map(_.toString).sorted.toSeq ==
       Seq(s"$tmp/a_genetic_alterations.parquet", s"$tmp/b_genetic_alterations.parquet"))
+  }
+
+  test("combine: rows come in sorted input-path order, whatever the file sizes and column orders") {
+    val tmp = Files.createTempDirectory("graft_order").toString
+    ParquetSink.write(spark.range(0, 3).selectExpr("id", "-id AS v"),
+      s"$tmp/a_t.parquet", singleFile = true)
+    ParquetSink.write(spark.range(100, 5100).selectExpr("-id AS v", "id"),
+      s"$tmp/b_t.parquet", singleFile = true)
+    val Seq(out) = Pipelines.combine(spark, tmp, "combined", Seq("t"))
+    val combined = spark.read.parquet(out)
+    assert(combined.columns.toSeq == Seq("id", "v"))
+    assert(combined.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      ((0L until 3L) ++ (100L until 5100L)).map(i => (i, -i)))
+  }
+
+  private def listing(dir: String): Seq[String] =
+    org.apache.commons.io.FileUtils.listFiles(new java.io.File(dir), null, true)
+      .toArray.map(_.toString).sorted.toSeq
+
+  test("combine checks every data file of an input directory, naming the odd part file, and writes nothing") {
+    import spark.implicits._
+    // two one-row tables written apart, their part files then moved into
+    // one table directory as part-00000 and part-00001
+    val tmp = Files.createTempDirectory("graft_parts").toString
+    val table = Files.createDirectories(Paths.get(s"$tmp/a_t.parquet"))
+    for ((df, i) <- Seq(Seq(("BRCA1", 1)).toDF("GENE", "N"),
+        Seq(("TP53", 3)).toDF("GENE_SYMBOL", "N")).zipWithIndex) {
+      val one = new java.io.File(s"$tmp/one$i.parquet")
+      ParquetSink.write(df, one.toString, singleFile = true)
+      val Seq(data) = one.listFiles().toSeq.filterNot(_.getName.startsWith("."))
+      Files.move(data.toPath, table.resolve(f"part-$i%05d.parquet"))
+      org.apache.commons.io.FileUtils.deleteDirectory(one)
+    }
+    val before = listing(tmp)
+    val e = intercept[IllegalArgumentException](
+      Pipelines.combine(spark, tmp, "combined", Seq("t")))
+    assert(e.getMessage.contains(s"$tmp/a_t.parquet/part-00001.parquet"))
+    assert(listing(tmp) == before)
+  }
+
+  test("combine refuses a column stored with another Parquet repetition, naming the file, the column and both types") {
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_physical").toString
+    ParquetSink.write(spark.range(3).toDF("id"), s"$tmp/a_t.parquet", singleFile = true)
+    ParquetSink.write(Seq(Option(5L)).toDF("id"), s"$tmp/b_t.parquet", singleFile = true)
+    val before = listing(tmp)
+    val e = intercept[IllegalArgumentException](
+      Pipelines.combine(spark, tmp, "combined", Seq("t")))
+    for (part <- Seq(s"$tmp/b_t.parquet/part-", "column id",
+        "required int64 id", "optional int64 id"))
+      assert(e.getMessage.contains(part), e.getMessage)
+    assert(listing(tmp) == before)
   }
 }
