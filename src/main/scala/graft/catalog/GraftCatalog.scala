@@ -19,7 +19,7 @@ import org.apache.spark.sql.connector.write.{
   LogicalWriteInfo, SupportsOverwrite, SupportsTruncate, V1Write,
   Write, WriteBuilder}
 import org.apache.spark.sql.sources.{BaseRelation, InsertableRelation, TableScan}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** A DataSource-V2 `TableCatalog` over a warehouse directory of
@@ -674,12 +674,7 @@ final case class GraftTable(path: String, snapshot: TableLog.Snapshot,
 
   override def name(): String = nameStr
 
-  override def schema(): StructType =
-    snapshot.schemaJson.map(j =>
-      DataType.fromJson(j).asInstanceOf[StructType]).getOrElse(
-      sys.error(s"$nameStr: the commit log at $path records no schema " +
-        "(legacy table) — read it once with TableLog.scan and rewrite " +
-        "to record one"))
+  override def schema(): StructType = snapshot.schema.struct
 
   override def version(): String = snapshot.version.toString
 
@@ -1127,7 +1122,7 @@ final class GraftStagedTable(path: String, nameStr: String,
       // declared-schema table, empty
       (Seq.empty[TableLog.FileEntry], 0L, declared))
     GraftCatalog.writeProps(path, props)
-    TableLog.commitStaged(path, files, rows, written.json, replace)
+    TableLog.commitStaged(path, files, rows, written, replace)
   }
 
   override def abortStagedChanges(): Unit = {
@@ -1185,8 +1180,8 @@ final class GraftWriteBuilder(t: GraftTable, info: LogicalWriteInfo)
       // files rewrite at all (conservative: untranslated leaves keep)
       val cond = filters.map(GraftTable.filterColumn(t.name, _))
         .reduce(_ && _)
-      val prune = (s: TableLog.Snapshot) => filters.foldLeft(s.files)(
-        (fs, f) => GraftRowLevelScan.pruneBy(s, fs, f))
+      val prune = (s: TableLog.Snapshot) =>
+        GraftRowLevelScan.keptFiles(s, filters.toSeq)
       replaceCond = Some((cond, prune))
     }
     this

@@ -202,7 +202,7 @@ final class GraftMicroBatchStream(path: String, tableName: String,
       if (v == d.version - 1) { // still contiguous (not capped out)
         val fs = streamedFiles(d)
         val add = fs.size
-        val addBytes = fs.map(f => TableLog.fileBytes(path, f)).sum
+        val addBytes = fs.map(_.bytes).sum
         // always admit at least one version so the stream progresses
         if (n == 0 || (n + add <= fileCap && bytes + addBytes <= byteCap)) {
           v = d.version; n += add; bytes += addBytes
@@ -232,7 +232,7 @@ final class GraftMicroBatchStream(path: String, tableName: String,
       else {
         val proj = projFor(d.version)
         fs.map(f => GraftFilePartition(
-          s"$path/${f.path}", TableLog.fileBytes(path, f), d.version,
+          s"$path/${f.path}", f.bytes, d.version,
           f.path, proj))
       }
     }.toArray

@@ -3,6 +3,7 @@ package graft.catalog
 import graft.sinks.{TableLog, WriteStats}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{expressions => cx}
 import org.apache.spark.sql.connector.expressions.{
   Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -19,7 +20,7 @@ import org.apache.spark.sql.connector.write.{
 import org.apache.spark.sql.graft.{
   ParquetRead, ParquetWrite, ParquetWriteFactory}
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** GROUP-BASED row-level DELETE/UPDATE/MERGE through Spark's OWN
@@ -96,7 +97,7 @@ abstract class GraftRlOpBase(private[catalog] val t: GraftTable,
         val spark = SparkSession.active
         val fencedBytes = base.files.filter(f =>
           base.dels.exists(d => TableLog.sidecarFences(base, f, d)))
-          .map(f => TableLog.fileBytes(t.path, f)).sum
+          .map(_.bytes).sum
         val gate = spark.conf
           .getOption("spark.graft.rowLevel.maxAutoMaintainBytes")
           .map(_.toLong).getOrElse(1L << 30)
@@ -243,8 +244,9 @@ final class GraftRowLevelScanBuilder(op: GraftRlOpBase)
     required = requiredSchema
 
   /** Filters narrow the candidate FILE set through the manifest
-    * stats; rows are still filtered by Spark (every filter returns as
-    * residual), so partial translation is always sound. */
+    * stats ([[GraftRowLevelScan.keptFiles]]); rows are still filtered
+    * by Spark (every filter returns as residual), so partial
+    * translation is always sound. */
   override def pushFilters(
       filters: Array[sources.Filter]): Array[sources.Filter] = {
     pushed = filters
@@ -258,13 +260,9 @@ final class GraftRowLevelScanBuilder(op: GraftRlOpBase)
     // KEY-sidecar self-heal commit from a read-only plan. The pushed
     // filters are captured and the prune happens when the scan first
     // needs its file set (planInputPartitions / runtime filtering).
-    val pushedNow = pushed
-    val scan = new GraftRowLevelScan(op, required, () => {
-      val s = op.snap
-      pushedNow.foldLeft(s.files) { (fs, f) =>
-        GraftRowLevelScan.pruneBy(s, fs, f)
-      }
-    })
+    val pushedNow = pushed.toSeq
+    val scan = new GraftRowLevelScan(op, required, () =>
+      GraftRowLevelScan.keptFiles(op.snap, pushedNow))
     op.builtScans.add(scan)
     scan
   }
@@ -360,13 +358,13 @@ final class GraftRowLevelScan(op: GraftRlOpBase,
         case Some((c, vals)) =>
           // a dynamic-pruning IN-set on a data column (the MERGE
           // source's join keys, PartitionPruning over the delta
-          // route): manifest-stat prune, same arithmetic as the
-          // pushed-filter path — files without a stat on c are kept,
-          // so partial coverage is always sound. No version guard:
-          // the values come from the SOURCE side of the join, not a
-          // table snapshot, so they bound matched rows in EVERY file.
-          narrow(fs => GraftRowLevelScan.pruneBy(op.snap, fs,
-            sources.In(c, vals)))
+          // route): manifest-stat prune through the same pruner as the
+          // pushed filters — files without a stat on c are kept, so
+          // partial coverage is always sound. No version guard: the
+          // values come from the SOURCE side of the join, not a table
+          // snapshot, so they bound matched rows in EVERY file.
+          narrow(fs => GraftRowLevelScan.keptFiles(
+            op.snap.copy(files = fs), Seq(sources.In(c, vals))))
         case None => ()
       }
     }
@@ -382,7 +380,7 @@ final class GraftRowLevelScan(op: GraftRlOpBase,
     plannedSet = files
     RowLevelDiag.add(s"planned:${files.size}:${t.path}")
     files.map(f => GraftFilePartition(s"${t.path}/${f.path}",
-      TableLog.fileBytes(t.path, f), f.ver, f.path,
+      f.bytes, f.ver, f.path,
       proj.projFor(f.ver))).toArray
   }
 
@@ -416,59 +414,55 @@ private[graft] object RowLevelDiag {
 
 object GraftRowLevelScan {
 
-  /** Manifest-stat pruning for the pushed source filters — the same
-    * [min,max]/IN arithmetic as the declarative face, over whatever
-    * leaves translate; untranslated leaves prune nothing. */
-  private[catalog] def pruneBy(s: TableLog.Snapshot,
-      fs: Seq[TableLog.FileEntry],
-      f: sources.Filter): Seq[TableLog.FileEntry] = {
-    def longOf(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case sh: Short => Some(sh.toLong)
+  /** The files of `s` that can hold a row matching every one of the
+    * source `filters`. The filters translate to ONE resolved Catalyst
+    * predicate over the snapshot's recorded schema (plus the
+    * `_version` metadata column unless a data column claims the name),
+    * which the declarative face's tree pruner evaluates
+    * ([[graft.plans.PruneLogScan.keptFilesOf]]: long ranges, IN-lists,
+    * equality by range and bloom, `_version`, OR, z-boxes). The
+    * translation only ever widens: an untranslatable leaf prunes
+    * nothing, `And` keeps whichever side translates, and `Or` prunes
+    * only when both sides do. */
+  private[catalog] def keptFiles(s: TableLog.Snapshot,
+      filters: Seq[sources.Filter]): Seq[TableLog.FileEntry] = {
+    val attrs = (StructField("_version", LongType) +: s.schema.struct.fields)
+      .map(f => f.name -> cx.AttributeReference(f.name, f.dataType)())
+      .toMap
+    def lit(a: cx.AttributeReference, v: Any): Option[cx.Literal] =
+      scala.util.Try(cx.Literal(v)).toOption.filter(_.dataType == a.dataType)
+    def cmp(c: String, v: Any)(
+        op: (cx.Expression, cx.Expression) => cx.Expression) =
+      for (a <- attrs.get(c); l <- lit(a, v)) yield op(a, l)
+    def tr(f: sources.Filter): Option[cx.Expression] = f match {
+      case sources.EqualTo(c, v) => cmp(c, v)(cx.EqualTo(_, _))
+      case sources.GreaterThan(c, v) => cmp(c, v)(cx.GreaterThan(_, _))
+      case sources.GreaterThanOrEqual(c, v) =>
+        cmp(c, v)(cx.GreaterThanOrEqual(_, _))
+      case sources.LessThan(c, v) => cmp(c, v)(cx.LessThan(_, _))
+      case sources.LessThanOrEqual(c, v) =>
+        cmp(c, v)(cx.LessThanOrEqual(_, _))
+      case sources.In(c, vs) if vs.nonEmpty =>
+        attrs.get(c).flatMap { a =>
+          val ls = vs.toSeq.flatMap(lit(a, _))
+          if (ls.size == vs.length) Some(cx.In(a, ls)) else None
+        }
+      case sources.And(l, r) => (tr(l), tr(r)) match {
+        case (Some(x), Some(y)) => Some(cx.And(x, y))
+        case (x, y) => x.orElse(y)
+      }
+      case sources.Or(l, r) => for (x <- tr(l); y <- tr(r)) yield cx.Or(x, y)
       case _ => None
     }
-    def range(c: String, lo: Long, hi: Long) = {
-      val kept = TableLog.prunedFilesOf(s, c, lo, hi).map(_.path).toSet
-      fs.filter(e => kept(e.path))
-    }
-    f match {
-      case sources.EqualTo(c, v) if longOf(v).isDefined =>
-        range(c, longOf(v).get, longOf(v).get)
-      case sources.GreaterThan(c, v) if longOf(v).isDefined &&
-          longOf(v).get < Long.MaxValue =>
-        range(c, longOf(v).get + 1, Long.MaxValue)
-      case sources.GreaterThanOrEqual(c, v) if longOf(v).isDefined =>
-        range(c, longOf(v).get, Long.MaxValue)
-      case sources.LessThan(c, v) if longOf(v).isDefined &&
-          longOf(v).get > Long.MinValue =>
-        range(c, Long.MinValue, longOf(v).get - 1)
-      case sources.LessThanOrEqual(c, v) if longOf(v).isDefined =>
-        range(c, Long.MinValue, longOf(v).get)
-      case sources.In(c, vs) if vs.nonEmpty &&
-          vs.forall(longOf(_).isDefined) =>
-        val kept = TableLog.prunedFilesInLongOf(s, c,
-          vs.flatMap(longOf).toSeq).map(_.path).toSet
-        fs.filter(e => kept(e.path))
-      case sources.EqualTo(c, v: String) =>
-        val kept = TableLog.prunedFilesInOf(s, c, Seq(v))
-          .map(_.path).toSet
-        fs.filter(e => kept(e.path))
-      case sources.In(c, vs) if vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[String]) =>
-        val kept = TableLog.prunedFilesInOf(s, c,
-          vs.toSeq.map(_.asInstanceOf[String])).map(_.path).toSet
-        fs.filter(e => kept(e.path))
-      case sources.And(l, r) => pruneBy(s, pruneBy(s, fs, l), r)
-      case _ => fs
-    }
+    filters.flatMap(tr).reduceOption(cx.And(_, _))
+      .fold(s.files)(graft.plans.PruneLogScan.keptFilesOf(s, _))
   }
 
   /** Parse a runtime `IN` predicate on ONE top-level column into
     * `(column, values)` — the shape both runtime-filter producers
     * emit (the group filter on `_file`, join DPP on a data column).
-    * UTF8String literals convert to String so the stat arithmetic in
-    * [[pruneBy]] sees JVM values. Any other shape → None (ignored:
+    * UTF8String literals convert to String so [[keptFiles]] sees the
+    * JVM values a source filter carries. Any other shape → None (ignored:
     * strictly more files scanned, never fewer). */
   private[catalog] def inSetOn(p: Predicate): Option[(String, Array[Any])] = {
     if (p.name() != "IN") return None

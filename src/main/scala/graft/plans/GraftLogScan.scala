@@ -38,10 +38,9 @@ final case class GraftLogRelation(table: String, snapshot: TableLog.Snapshot,
   /** Real bytes from the MANIFEST's write-time sizes — so anything
     * consulting logical stats before expansion (join-size heuristics,
     * the dynamic-prune gate) sees the table's actual footprint with
-    * ZERO filesystem calls at planning (legacy pre-bytes entries fall
-    * back to one counted stat each — `TableLog.fileBytes`). */
+    * ZERO filesystem calls at planning. */
   override def computeStats(): Statistics = Statistics(sizeInBytes =
-    BigInt(snapshot.files.map(TableLog.fileBytes(table, _)).sum).max(1))
+    BigInt(snapshot.files.map(_.bytes).sum).max(1))
 
   override def simpleString(maxFields: Int): String =
     s"GraftLogRelation $table v${snapshot.version} " +
@@ -244,19 +243,12 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** `_version` is the catalog metadata column unless a DATA column
-    * claims the name (Spark's conflict rule shadows the metadata one).
-    * Its per-row value IS the manifest entry's `ver`, so both pruning
-    * and extremes over it are EXACT manifest arithmetic, no stats.
-    * A RECORDED schema is REQUIRED to claim the metadata column: a
-    * legacy (schema-less) manifest can't prove its parquet data lacks
-    * a real `_version` column — and if one exists it shadows the
-    * metadata column at scan, so manifest arithmetic here would
-    * silently disagree with what the scan returns. Legacy tables fall
-    * back to the stats path / no fast-path. */
+    * in the recorded schema claims the name (Spark's conflict rule
+    * shadows the metadata one). Its per-row value IS the manifest
+    * entry's `ver`, so both pruning and extremes over it are EXACT
+    * manifest arithmetic, no stats. */
   private def versionMeta(s: TableLog.Snapshot, c: String): Boolean =
-    c == "_version" && s.schemaJson.exists(j =>
-      !org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType].fieldNames.contains("_version"))
+    c == "_version" && !s.schema.struct.fieldNames.contains("_version")
 
   /** min/max of `_version`: exact over the live files' commit versions
     * — every manifest entry has ≥1 row (a writer task opens its file

@@ -187,22 +187,19 @@ object GraftSqlDml {
           // missing columns / type drift loudly) — the catalog face
           // gets this from TableOutputResolver; text-alone must not
           // silently write a reordered or mistyped frame
-          val aligned = TableLog.tableSchemaOf(reg.table) match {
-            case Some(sch) =>
-              sch.fields.foreach { f =>
-                val g = src.schema.fields.find(_.name == f.name)
-                  .getOrElse(unsupported(
-                    s"CALL replace_where('$view', …)",
-                    s"source is missing table column ${f.name}"))
-                if (g.dataType != f.dataType) unsupported(
-                  s"CALL replace_where('$view', …)",
-                  s"source column ${f.name} is ${g.dataType
-                    .simpleString}, table has ${f.dataType.simpleString}")
-              }
-              src.select(sch.fieldNames.map(
-                org.apache.spark.sql.functions.col(_)).toIndexedSeq: _*)
-            case None => src
+          val sch = TableLog.tableSchemaOf(reg.table)
+          sch.fields.foreach { f =>
+            val g = src.schema.fields.find(_.name == f.name)
+              .getOrElse(unsupported(
+                s"CALL replace_where('$view', …)",
+                s"source is missing table column ${f.name}"))
+            if (g.dataType != f.dataType) unsupported(
+              s"CALL replace_where('$view', …)",
+              s"source column ${f.name} is ${g.dataType
+                .simpleString}, table has ${f.dataType.simpleString}")
           }
+          val aligned = src.select(sch.fieldNames.map(
+            org.apache.spark.sql.functions.col(_)).toIndexedSeq: _*)
           // resolve + refuse (unknown columns, nondeterminism) BEFORE
           // the new slice is written; the same call is the per-CAS
           // manifest prune
@@ -554,9 +551,7 @@ object GraftSqlDml {
     import org.apache.spark.sql.functions.col
     if (i.partitionSpec.nonEmpty) unsupported(s"INSERT INTO $view",
       "PARTITION clauses do not apply to log tables")
-    val schema = TableLog.tableSchemaOf(reg.table).getOrElse(unsupported(
-      s"INSERT INTO $view", "the table has no recorded schema to " +
-        "align against — use TableLog.append directly"))
+    val schema = TableLog.tableSchemaOf(reg.table)
     val lowerTarget = schema.fieldNames.map(
       _.toLowerCase(java.util.Locale.ROOT)).toSeq
     val explicitCols = i.userSpecifiedCols.map(
@@ -723,28 +718,18 @@ object GraftSqlDml {
 
   /** The range faces evaluate `cast(col AS long) BETWEEN lo AND hi`,
     * which on a fractional column is NOT SQL equality — `price = 100`
-    * would silently delete every row with price in [100.0, 101.0)
-    * (truncating cast). So a range-translated predicate is only
-    * claimed when the column resolves to an INTEGRAL type in the
-    * registered table's schema; anything else fails loudly like the
-    * other untranslatable shapes. Legacy tables without a recorded
-    * schema can't be checked and keep the historical behavior. */
-  /** The range faces evaluate `cast(col AS long) BETWEEN lo AND hi`,
-    * which on a fractional column is NOT SQL equality — `price = 100`
     * would delete every row with price in [100.0, 101.0) (truncating
     * cast). A range-translated predicate is only CLAIMED for the
     * range faces when the column resolves to an INTEGRAL type in the
     * recorded schema; anything else (unknown column, fractional,
     * temporal) routes to the POSITIONAL faces, where Spark evaluates
-    * the predicate itself — exact by construction. Legacy tables
-    * without a recorded schema keep the historical range behavior. */
+    * the predicate itself — exact by construction. */
   private def integralRangeOk(reg: Reg, col: String): Boolean =
-    TableLog.tableSchemaOf(reg.table).forall { st =>
-      st.fields.find(_.name.equalsIgnoreCase(col)).exists(_.dataType match {
+    TableLog.tableSchemaOf(reg.table).fields
+      .find(_.name.equalsIgnoreCase(col)).exists(_.dataType match {
         case ByteType | ShortType | IntegerType | LongType => true
         case _ => false
       })
-    }
 
   /** A statement whose translated range is EMPTY (endpoint-exclusive
     * bounds, `BETWEEN 5 AND 1`, contradictory conjunctions) matches
@@ -826,21 +811,15 @@ object GraftSqlDml {
     // not be refused for the literal parsing as INT, nor silently
     // drift the manifest schema); unknown columns refuse here, with
     // the schema, not downstream
-    val schemaOpt = TableLog.tableSchemaOf(reg.table)
+    val schema = TableLog.tableSchemaOf(reg.table)
     val set = assigns.map { case Assignment(k, v) =>
       val name = attrOf(k).getOrElse(unsupported(s"UPDATE $view",
         s"assignment target ${k.sql} is not a plain column"))
-      val col = org.apache.spark.sql.graft.Bridge.column(v)
-      val typed = schemaOpt match {
-        case Some(schema) =>
-          val f = schema.fields.find(_.name.equalsIgnoreCase(name))
-            .getOrElse(unsupported(s"UPDATE $view",
-              s"SET names column '$name' which is not in the table " +
-                s"schema (${schema.fieldNames.mkString(", ")})"))
-          col.cast(f.dataType)
-        case None => col // legacy table without a recorded schema
-      }
-      name -> typed
+      val f = schema.fields.find(_.name.equalsIgnoreCase(name))
+        .getOrElse(unsupported(s"UPDATE $view",
+          s"SET names column '$name' which is not in the table " +
+            s"schema (${schema.fieldNames.mkString(", ")})"))
+      name -> org.apache.spark.sql.graft.Bridge.column(v).cast(f.dataType)
     }.toMap
     rangeOf(cond) match {
       case Some((c, lo, hi)) if integralRangeOk(reg, c) =>

@@ -69,12 +69,12 @@ object TableLog {
     * any file whose range overlaps (or that has no stat for the column)
     * and still applies the residual filter.
     *
-    * `nulls`: the column's NULL count in this file (−1 on legacy
-    * entries = unknown). Ranges alone can only prove a file has NO
-    * matching row (disjointness); proving EVERY row matches — the
-    * metadata-only DELETE's requirement — additionally needs "no
-    * nulls" (SQL predicates are not-satisfied on NULL, so one
-    * uncounted null row would be wrongly dropped with its file). */
+    * `nulls`: the column's NULL count in this file (−1 = not
+    * counted: derived stats carry none). Ranges alone can only prove a
+    * file has NO matching row (disjointness); proving EVERY row
+    * matches — the metadata-only DELETE's requirement — additionally
+    * needs "no nulls" (SQL predicates are not-satisfied on NULL, so
+    * one uncounted null row would be wrongly dropped with its file). */
   final case class FileStat(col: String, min: Long, max: Long,
       nulls: Long = -1L)
   /** Per-file STRING range, for categorical skipping (partition-style
@@ -83,53 +83,40 @@ object TableLog {
     * range). Values are URL-encoded in the manifest, so any string —
     * including ';'/':' — round-trips. */
   final case class FileStrStat(col: String, min: String, max: String)
-  /** `ver`: the version this file was ADDED at (0 on legacy entries) —
-    * the fence that scopes merge-on-read deletes: a delete entry
-    * committed at version D applies to a file iff `ver < D` (the file
-    * existed when the delete landed); rows appended later under the
-    * same key are NOT deleted. Carried inline in the manifest entry,
-    * so resolution preserves it through checkpoints and deltas.
+  /** `ver`: the version this file was ADDED at — the fence that scopes
+    * merge-on-read deletes: a delete entry committed at version D
+    * applies to a file iff `ver < D` (the file existed when the delete
+    * landed); rows appended later under the same key are NOT deleted.
+    * Carried inline in the manifest entry, so resolution preserves it
+    * through checkpoints and deltas.
     *
-    * `bytes`: the file's on-disk size, recorded at WRITE time (−1 on
-    * legacy entries). Everything that needs table footprint — the
-    * declarative relation's `computeStats` (which gates the dynamic
-    * join prune), `detail`, `compact`/`compactSmall` sizing — sums
-    * this from the manifest instead of stat-ing every data file on
-    * the driver: at 100 TB a per-plan O(files) stat storm is millions
-    * of object-store metadata RPCs before a single task launches.
-    * Legacy entries fall back to a counted filesystem stat
-    * (`fileBytes`).
+    * `bytes`: the file's on-disk size, recorded at WRITE time.
+    * Everything that needs table footprint — the declarative
+    * relation's `computeStats` (which gates the dynamic join prune),
+    * `detail`, `compact`/`compactSmall` sizing — sums this from the
+    * manifest instead of stat-ing every data file on the driver: at
+    * 100 TB a per-plan O(files) stat storm is millions of object-store
+    * metadata RPCs before a single task launches.
     *
-    * `rows`: the file's row count, recorded at WRITE time (−1 on
-    * legacy entries) — the metadata-only DELETE's accounting source
-    * (dropping a whole file must adjust the manifest's exact `rows`
-    * without reading the file) and, at 100 TB, the difference between
-    * a manifest lookup and a footer RPC per file for any row-count
-    * question. */
+    * `rows`: the file's row count, recorded at WRITE time — the
+    * metadata-only DELETE's accounting source (dropping a whole file
+    * must adjust the manifest's exact `rows` without reading the file)
+    * and, at 100 TB, the difference between a manifest lookup and a
+    * footer RPC per file for any row-count question.
+    *
+    * Both are required: every entry is built from its writer's
+    * measurement ([[WriteStats.Spec.entry]]), and the manifest reader
+    * refuses an entry without them. */
   final case class FileEntry(path: String, stats: Seq[FileStat],
       strStats: Seq[FileStrStat] = Nil, ver: Long = 0L,
-      bytes: Long = -1L, rows: Long = -1L)
+      bytes: Long, rows: Long)
 
-  /** Manifest-first file size: the write-time `bytes` when carried,
-    * else one counted stat (legacy pre-bytes entries; a vanished path
-    * reads 0). `statFallbacks` makes "zero filesystem calls at
-    * planning" spec-pinnable. */
-  private[graft] val statFallbacks =
-    new java.util.concurrent.atomic.AtomicLong
-
-  /** Planned MOR-scan file reads (test observability, same role as
-    * `statFallbacks`): every data file handed to `morScan` counts once
-    * at PLAN time, so "this write face reads each affected file's
-    * data exactly ONCE" is spec-pinnable as a counter delta. */
+  /** Planned MOR-scan file reads (test observability): every data
+    * file handed to `morScan` counts once at PLAN time, so "this write
+    * face reads each affected file's data exactly ONCE" is
+    * spec-pinnable as a counter delta. */
   private[graft] val morFilesPlanned =
     new java.util.concurrent.atomic.AtomicLong
-  private[graft] def fileBytes(table: String, f: FileEntry): Long =
-    if (f.bytes >= 0) f.bytes
-    else {
-      statFallbacks.incrementAndGet()
-      try Files.size(Paths.get(table, f.path))
-      catch { case _: java.io.IOException => 0L }
-    }
 
   /** A merge-on-read DELETE sidecar: a small parquet of deleted keys
     * (single column named `keyCol`), committed at version `ver` with
@@ -159,14 +146,13 @@ object TableLog {
   /** `txn`: writer-supplied transaction id recorded in the manifest —
     * the idempotence token for streaming ingest (a replayed micro-batch
     * finds its id already committed and skips). */
-  /** `schemaJson`: the table schema AT THIS VERSION (compact Spark
-    * StructType json), recorded in the manifest so readers apply it
-    * without crawling file footers — at 100 TB, "what is the schema"
-    * must be a manifest lookup, not a million-footer merge. Appends
-    * may EVOLVE it (add nullable columns / omit existing ones — see
-    * `mergeEvolved`); each historical version keeps its own schema, so
-    * time travel reads old data under the old schema. Absent on
-    * legacy manifests → reads fall back to footer inference. */
+  /** `schema`: the table schema AT THIS VERSION, recorded in every
+    * manifest so readers apply it without crawling file footers — at
+    * 100 TB, "what is the schema" must be a manifest lookup, not a
+    * million-footer merge. Appends may EVOLVE it (add nullable columns
+    * / omit existing ones — see `mergeEvolved`); each historical
+    * version keeps its own schema, so time travel reads old data under
+    * the old schema. */
   /** `counters`: application-defined CUMULATIVE counters, carried in every
     * manifest like `rows` (e.g. the dedup index's distinct-doc count).
     * Appends add a delta inside the commit CAS loop, so the accounting is
@@ -182,8 +168,8 @@ object TableLog {
     * SQL semantics: a row violates only when the expression evaluates
     * to FALSE — NULL passes, exactly like SQL CHECK. */
   final case class Snapshot(version: Long, baseVersion: Long, action: String,
-      rows: Long, files: Seq[FileEntry], txn: Option[String] = None,
-      schemaJson: Option[String] = None,
+      rows: Long, files: Seq[FileEntry], txn: Option[String],
+      schema: RecordedSchema,
       counters: Map[String, Long] = Map.empty,
       dels: Seq[DeleteEntry] = Nil,
       schemaOps: Seq[SchemaOp] = Nil,
@@ -201,20 +187,34 @@ object TableLog {
     * it alone. */
   val StaleWriterMs: Long = 10 * 60 * 1000L
 
+  /** A manifest's recorded table schema: the compact Spark StructType
+    * JSON it carries, parsed on first use — once per resolved record,
+    * shared by every copy of a snapshot built from it. */
+  final case class RecordedSchema(json: String) {
+    lazy val struct: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(json)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
+  object RecordedSchema {
+    def of(s: org.apache.spark.sql.types.StructType): RecordedSchema =
+      RecordedSchema(s.json)
+  }
+
   /** One parsed manifest, pre-resolution: `kind` "full" (complete file
-    * list in `files`; legacy manifests with no kind key read as full)
-    * or "delta" (`adds` entries + `removes` paths vs version−1). */
-  /** `txnHw`/`txnComplete`: the txn high-water index — per STREAM (the
-    * prefix of a structured `<stream>#<n>` / `mv@<n>` txn id), the
-    * highest committed sequence and its version, carried DENORMALIZED
-    * in every manifest like `rows`, so `committedTxnVersion` is one
-    * manifest read instead of an O(versions) reverse scan (on the
-    * 100k-commit ingest history the log advertises, that was ~200k
-    * manifest parses per micro-batch — per APPEND, since the append
-    * path checks twice). Bounded by distinct streams, not versions.
-    * `txnComplete` marks an unbroken stamped chain back to v1: only
-    * then is the map authoritative for "not committed" — a table with
-    * pre-index commits falls back to the scan, never misreports. */
+    * list in `files`) or "delta" (`adds` entries + `removes` paths vs
+    * version−1). */
+  /** `txnHw`: the txn high-water index — per STREAM (the prefix of a
+    * structured `<stream>#<n>` / `mv@<n>` txn id), the highest
+    * committed sequence and its version, carried DENORMALIZED in every
+    * manifest like `rows`, so `committedTxnVersion` is one manifest
+    * read instead of an O(versions) reverse scan (on the 100k-commit
+    * ingest history the log advertises, that was ~200k manifest parses
+    * per micro-batch — per APPEND, since the append path checks
+    * twice). Bounded by distinct streams, not versions. Every chain is
+    * indexed from its first commit (v1, or a clone's fork commit —
+    * `tryCommit` folds each commit into its predecessor's map and
+    * retries rather than commit above a missing predecessor), so the
+    * map is authoritative for "not committed". */
   /** `dels`/`delAdds`: merge-on-read delete sidecars — full manifests
     * carry the COMPLETE delete set at their version (possibly empty =
     * materialized), deltas carry only this commit's additions. NO
@@ -225,11 +225,11 @@ object TableLog {
       action: String, rows: Long, kind: String, files: Seq[FileEntry],
       adds: Seq[FileEntry], removes: Seq[String],
       dels: Seq[DeleteEntry], delAdds: Seq[DeleteEntry],
-      txn: Option[String], schemaJson: Option[String],
+      txn: Option[String], schema: RecordedSchema,
       counters: Map[String, Long] = Map.empty,
+      // stamped by `tryCommit`, the one commit gate
       tsMs: Long = 0L,
       txnHw: Map[String, (Long, Long)] = Map.empty,
-      txnComplete: Boolean = false,
       schemaOps: Seq[SchemaOp] = Nil,
       // CHECK constraints: ckAdd/ckDrop are THIS commit's delta; the
       // gate folds them into `checks`, the complete current set
@@ -269,26 +269,24 @@ object TableLog {
   // `;<col>:<min>:<max>[:<nulls>]` (long stat, optional null count) or
   // `;~<enc col>:<enc min>:<enc max>` (string stat, URL-encoded) —
   // paths are uuid-dir/part-file names, which never contain ';' or ':'.
-  // Absence of a segment reads as the legacy default (ver 0, bytes −1,
-  // rows −1, nulls −1) — OLD manifests parse under NEW readers. The
-  // converse is NOT true: a reader that predates a segment CRASHES on
-  // it (an unknown `;x` prefix lands in the long-stat arm; a 4th stat
-  // field breaks a 3-way split), so every segment addition must bump
-  // `ManifestFormat` below and readers refuse manifests stamped newer
-  // than they understand instead of misparsing them.
+  // `;#` and `;$` are REQUIRED: the reader refuses an entry without
+  // them. A reader that predates a segment CRASHES on it (an unknown
+  // `;x` prefix lands in the long-stat arm; a 4th stat field breaks a
+  // 3-way split), so every segment addition must bump `ManifestFormat`
+  // below, and readers refuse manifests stamped newer than they
+  // understand instead of misparsing them.
   private def renderEntry(f: FileEntry): String = {
     def enc(v: String) = java.net.URLEncoder.encode(v, "UTF-8")
     f.path +
       (if (f.ver > 0) s";@${f.ver}" else "") +
-      (if (f.bytes >= 0) s";#${f.bytes}" else "") +
-      (if (f.rows >= 0) s";$$${f.rows}" else "") +
+      s";#${f.bytes};$$${f.rows}" +
       f.stats.map(st => s";${st.col}:${st.min}:${st.max}" +
         (if (st.nulls >= 0) s":${st.nulls}" else "")).mkString +
       f.strStats.map(st =>
         s";~${enc(st.col)}:${enc(st.min)}:${enc(st.max)}").mkString
   }
 
-  private def parseEntry(s: String): FileEntry = {
+  private def parseEntry(s: String, refuse: String => Nothing): FileEntry = {
     def dec(v: String) = java.net.URLDecoder.decode(v, "UTF-8")
     val parts = s.split(";")
     val segs = parts.tail.toSeq
@@ -296,6 +294,9 @@ object TableLog {
     val (byteSegs, rest1) = rest0.partition(_.startsWith("#"))
     val (rowSegs, statSegs) = rest1.partition(_.startsWith("$"))
     val (strSegs, longSegs) = statSegs.partition(_.startsWith("~"))
+    def required(seg: Seq[String], what: String): Long =
+      seg.headOption.map(_.drop(1).toLong).getOrElse(
+        refuse(s"has entry ${parts.head} without its $what segment"))
     FileEntry(parts.head,
       longSegs.map { st =>
         val a = st.split(":")
@@ -307,8 +308,8 @@ object TableLog {
         FileStrStat(dec(c), dec(mn), dec(mx))
       },
       ver = verSegs.headOption.map(_.drop(1).toLong).getOrElse(0L),
-      bytes = byteSegs.headOption.map(_.drop(1).toLong).getOrElse(-1L),
-      rows = rowSegs.headOption.map(_.drop(1).toLong).getOrElse(-1L))
+      bytes = required(byteSegs, ";#<bytes>"),
+      rows = required(rowSegs, ";$<rows>"))
   }
 
   // delete-sidecar codec: `del=` (full manifests: complete set) and
@@ -319,27 +320,32 @@ object TableLog {
     s"${d.ver};${java.net.URLEncoder.encode(d.keyCol, "UTF-8")};" +
       renderEntry(d.file)
 
-  private def parseDel(s: String): DeleteEntry = {
+  private def parseDel(s: String, refuse: String => Nothing): DeleteEntry = {
     val Array(ver, keyCol, entry) = s.split(";", 3)
-    DeleteEntry(parseEntry(entry),
+    DeleteEntry(parseEntry(entry, refuse),
       java.net.URLDecoder.decode(keyCol, "UTF-8"), ver.toLong)
   }
 
   /** The manifest dialect this build reads and writes, stamped as
-    * `format=` in every manifest. Bump it whenever a change would
+    * `format=` in every manifest, and the only one it opens: readers
+    * refuse an unstamped manifest, one stamped older or newer, and one
+    * missing a field this dialect always writes (`kind=`, `ts=`,
+    * `schema=`, an entry's `;#`/`;$` segment), naming the table, the
+    * version and what is missing. Bump it whenever a change would
     * MISPARSE under the previous reader (a new entry-codec segment, a
     * new stat field) — additions an old reader safely ignores (new
-    * `key=` lines) don't need one. Readers refuse manifests stamped
-    * newer than this, loudly: the alternative is an AIOOBE deep in the
-    * entry codec, or worse a silently wrong parse. Unstamped manifests
-    * predate the stamp and always parse (dialect 1). */
+    * `key=` lines) don't need one. */
   private[graft] val ManifestFormat = 2
 
-  /** Parse a manifest; the `end=true` terminator is written last, so a
-    * manifest missing it (impossible via the link protocol, possible if
-    * someone hand-copies a partial file) is rejected. */
-  private def parseRec(p: Path): Option[ManifestRec] = {
+  /** Parse version `v`'s manifest; None when it does not exist (never
+    * committed, or vacuumed). The `end=true` terminator is written
+    * last, so a manifest missing it (impossible via the link protocol,
+    * possible if someone hand-copies a partial file) is rejected as
+    * None too. A manifest below the format floor refuses loudly (see
+    * [[ManifestFormat]]). */
+  private def parseRec(table: String, v: Long): Option[ManifestRec] = {
     import scala.jdk.CollectionConverters._
+    val p = manifestPath(table, v)
     if (!Files.exists(p)) return None
     val lines =
       try Files.readAllLines(p, UTF_8).asScala
@@ -350,36 +356,47 @@ object TableLog {
         l.startsWith("schemaop=") || l.startsWith("check="))
       .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
     if (!kv.get("end").contains("true")) return None
-    kv.get("format").map(_.toLong).filter(_ > ManifestFormat).foreach(f =>
-      sys.error(s"manifest $p is format $f, newer than this reader's " +
-        s"$ManifestFormat — upgrade the reader before opening tables " +
-        "written by newer writers (refusing rather than misparsing)"))
+    def refuse(what: String): Nothing = sys.error(
+      s"manifest v$v of $table $what — this reader opens format " +
+        s"$ManifestFormat manifests only; recreate the table from its " +
+        "data (refusing rather than guessing a legacy default)")
+    kv.get("format").map(_.toLong) match {
+      case None => refuse("is unstamped (no format= line)")
+      case Some(f) if f < ManifestFormat =>
+        refuse(s"is format $f, older than this reader's $ManifestFormat")
+      case Some(f) if f > ManifestFormat => sys.error(
+        s"manifest v$v of $table is format $f, newer than this " +
+          s"reader's $ManifestFormat — upgrade the reader before opening " +
+          "tables written by newer writers (refusing rather than " +
+          "misparsing)")
+      case _ => ()
+    }
+    def req(k: String): String = kv.getOrElse(k, refuse(s"lacks its $k= line"))
     Some(ManifestRec(
       version = kv("version").toLong,
       baseVersion = kv("base").toLong,
       action = kv("action"),
       rows = kv("rows").toLong,
-      kind = kv.getOrElse("kind", "full"),
+      kind = req("kind"),
       files = lines.filter(_.startsWith("file="))
-        .map(l => parseEntry(l.drop(5))).toSeq,
+        .map(l => parseEntry(l.drop(5), refuse)).toSeq,
       adds = lines.filter(_.startsWith("add="))
-        .map(l => parseEntry(l.drop(4))).toSeq,
+        .map(l => parseEntry(l.drop(4), refuse)).toSeq,
       removes = lines.filter(_.startsWith("remove="))
         .map(_.drop(7)).toSeq,
       dels = lines.filter(_.startsWith("del="))
-        .map(l => parseDel(l.drop(4))).toSeq,
+        .map(l => parseDel(l.drop(4), refuse)).toSeq,
       delAdds = lines.filter(_.startsWith("deladd="))
-        .map(l => parseDel(l.drop(7))).toSeq,
+        .map(l => parseDel(l.drop(7), refuse)).toSeq,
       txn = kv.get("txn"),
-      schemaJson = kv.get("schema"),
+      schema = RecordedSchema(req("schema")),
       counters = kv.collect { case (k, v) if k.startsWith("counter.") =>
         java.net.URLDecoder.decode(k.drop(8), "UTF-8") -> v.toLong },
-      tsMs = kv.get("ts").map(_.toLong).getOrElse(0L),
+      tsMs = req("ts").toLong,
       txnHw = kv.collect { case (k, v) if k.startsWith("txnhw.") =>
         val Array(n, ver) = v.split(":", 2)
         java.net.URLDecoder.decode(k.drop(6), "UTF-8") ->
           (n.toLong, ver.toLong) },
-      txnComplete = kv.get("txncomplete").contains("true"),
       schemaOps = lines.filter(_.startsWith("schemaop="))
         .map { l =>
           val Array(ver, kind, c, to) = l.drop(9).split(";", 4)
@@ -403,12 +420,11 @@ object TableLog {
     sb ++= s"action=${r.action}\n"
     sb ++= s"rows=${r.rows}\n"
     sb ++= s"kind=${r.kind}\n"
-    if (r.tsMs > 0) sb ++= s"ts=${r.tsMs}\n"
+    sb ++= s"ts=${r.tsMs}\n"
     r.txn.foreach(t => sb ++= s"txn=$t\n")
-    if (r.txnComplete) sb ++= "txncomplete=true\n"
     r.txnHw.toSeq.sortBy(_._1).foreach { case (s, (n, v)) =>
       sb ++= s"txnhw.${java.net.URLEncoder.encode(s, "UTF-8")}=$n:$v\n" }
-    r.schemaJson.foreach(j => sb ++= s"schema=$j\n")
+    sb ++= s"schema=${r.schema.json}\n"
     r.counters.toSeq.sortBy(_._1).foreach { case (k, v) =>
       sb ++= s"counter.${java.net.URLEncoder.encode(k, "UTF-8")}=$v\n" }
     r.files.foreach(f => sb ++= s"file=${renderEntry(f)}\n")
@@ -434,10 +450,10 @@ object TableLog {
     * `checkpointInterval` — vacuum retention never drops a checkpoint
     * a retained delta still needs). */
   private def resolveRec(table: String, v: Long): Option[Snapshot] =
-    parseRec(manifestPath(table, v)).flatMap { r =>
+    parseRec(table, v).flatMap { r =>
       if (r.kind == "full")
         Some(Snapshot(r.version, r.baseVersion, r.action, r.rows, r.files,
-          r.txn, r.schemaJson, r.counters, r.dels, r.schemaOps, r.checks))
+          r.txn, r.schema, r.counters, r.dels, r.schemaOps, r.checks))
       else
         // a missing/unparseable base usually means a concurrent vacuum
         // dropped this version's chain while we resolved it — surface
@@ -448,21 +464,29 @@ object TableLog {
           val rm = r.removes.toSet
           Snapshot(r.version, r.baseVersion, r.action, r.rows,
             base.files.filterNot(f => rm(f.path)) ++ r.adds,
-            r.txn, r.schemaJson, r.counters, base.dels ++ r.delAdds,
+            r.txn, r.schema, r.counters, base.dels ++ r.delAdds,
             r.schemaOps, r.checks)
         }
     }
 
-  /** Latest committed version, or 0 for an empty/new table. */
-  def latestVersion(table: String): Long = {
+  private val manifestName =
+    java.util.regex.Pattern.compile("v\\d{8}\\.manifest")
+
+  /** The retained manifest versions, ascending: one listing of the log
+    * directory (empty for a new table). Vacuum drops prefixes, so the
+    * head is the earliest version time travel can still reach. */
+  private def retainedVersions(table: String): Seq[Long] = {
     val dir = logDir(table)
-    if (!Files.exists(dir)) return 0L
-    listDir(dir)
-      .map(_.getFileName.toString)
-      .collect { case n if n.matches("v\\d{8}\\.manifest") =>
-        n.stripPrefix("v").stripSuffix(".manifest").toLong }
-      .maxOption.getOrElse(0L)
+    if (!Files.exists(dir)) return Nil
+    listDir(dir).map(_.getFileName.toString)
+      .collect { case n if manifestName.matcher(n).matches() =>
+        n.substring(1, 9).toLong }
+      .sorted
   }
+
+  /** Latest committed version, or 0 for an empty/new table. */
+  def latestVersion(table: String): Long =
+    retainedVersions(table).lastOption.getOrElse(0L)
 
   def snapshot(table: String): Option[Snapshot] = {
     val v = latestVersion(table)
@@ -507,6 +531,14 @@ object TableLog {
     * a crash — the loop rewrites a fresh temp and tries again. */
   private def tryCommit(table: String, r: ManifestRec): Boolean = {
     Files.createDirectories(logDir(table))
+    // every chain starts at v1 or at a clone's fork commit, and each
+    // later commit folds its predecessor's txn index, schema-op history
+    // and CHECK set — a predecessor that cannot be read (vacuumed
+    // because the caller's base is stale) would commit a partial index,
+    // so retry against a fresh base as a CAS conflict does
+    val chainStart = r.version <= 1 || r.action == "clone"
+    val prev = if (chainStart) None else parseRec(table, r.version - 1)
+    if (!chainStart && prev.isEmpty) return false
     // commit timestamp, stamped at the single commit gate so every
     // write path carries one, and STRICTLY MONOTONIC vs the previous
     // version (max(now, prev+1) — one extra small-file read): a clock
@@ -514,25 +546,20 @@ object TableLog {
     // ts → version resolution ambiguous, and `readAsOf`'s binary
     // search relies on ts ordering matching version ordering (Delta
     // applies the same in-commit adjustment for its timestamp travel)
-    val prev =
-      if (r.version <= 1) None
-      else parseRec(manifestPath(table, r.version - 1))
     val prevTs = prev.map(_.tsMs).getOrElse(0L)
     // txn high-water index: fold this commit's structured txn id into
     // the previous version's map (max-sequence wins, so an
-    // out-of-order replay never regresses the frontier); completeness
-    // propagates from v1 so a legacy chain is never misread as indexed
-    val hwBase = prev.map(_.txnHw).getOrElse(Map.empty[String, (Long, Long)])
+    // out-of-order replay never regresses the frontier); a CLONE
+    // carries its source's map
+    val hwBase =
+      if (r.action == "clone") r.txnHw
+      else prev.map(_.txnHw).getOrElse(Map.empty[String, (Long, Long)])
     val hw = r.txn.flatMap(parseTxnSeq) match {
       case Some((stream, n))
           if !hwBase.get(stream).exists(_._1 >= n) =>
         hwBase + (stream -> (n, r.version))
       case _ => hwBase
     }
-    // a CLONE's first manifest starts a fresh txn history by
-    // construction (no prior writers in dst), so the index is complete
-    val complete = r.version == 1 || r.action == "clone" ||
-      prev.exists(_.txnComplete)
     // schema-op history is carried COMPLETE in every manifest (same
     // denormalization as the txn index): this commit's additions, if
     // any, append to the previous version's full list
@@ -552,7 +579,7 @@ object TableLog {
       schemaOps = ops,
       checks = cks,
       tsMs = math.max(System.currentTimeMillis, prevTs + 1),
-      txnHw = hw, txnComplete = complete,
+      txnHw = hw,
       // defensive backstop for the MOR-delete fence: a delta's adds
       // are NEW files by definition, so an unstamped (ver=0) add is
       // stamped here — otherwise an older delete sidecar would wrongly
@@ -698,9 +725,7 @@ object TableLog {
     * stats, string equalities and IN-lists by the string stats, any
     * equality by the per-file blooms too, and z/hilbert boxes for
     * conjunctions. Snapshot-resolved once, like every read face;
-    * results are identical to `read` + the same filters. Legacy tables
-    * without a recorded schema fall back to the eager scan (nothing to
-    * resolve a leaf schema from). */
+    * results are identical to `read` + the same filters. */
   def scan(spark: SparkSession, table: String): DataFrame =
     mkScan(spark, table, snapshotOrFail(table))
 
@@ -754,14 +779,11 @@ object TableLog {
     had
   }
 
-  /** The table schema at the latest version, parsed from the
-    * manifest's recorded JSON (None for legacy tables without one) —
-    * the DML face's type oracle. */
+  /** The table schema at the latest version, as its manifest records
+    * it — the DML face's type oracle. */
   private[graft] def tableSchemaOf(table: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    snapshot(table).flatMap(_.schemaJson).map(j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      : org.apache.spark.sql.types.StructType =
+    snapshotOrFail(table).schema.struct
 
   /** Run one SQL statement with the DML face active on any LIVE
     * session (the builder-time path is `GraftExtensions`' injected
@@ -788,19 +810,14 @@ object TableLog {
     scanVersion(spark, table, versionAsOf(table, tsMs))
 
   private def mkScan(spark: SparkSession, table: String,
-      s: Snapshot): DataFrame =
-    s.schemaJson match {
-      case None => readSnapshot(spark, table, s)
-      case Some(j) =>
-        graft.plans.PruneLogScan.install(spark)
-        val schema = org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val out = schema.fields.toIndexedSeq.map(f =>
-          org.apache.spark.sql.catalyst.expressions.AttributeReference(
-            f.name, f.dataType, f.nullable)())
-        org.apache.spark.sql.graft.Bridge.ofRows(spark,
-          graft.plans.GraftLogRelation(table, s, out))
-    }
+      s: Snapshot): DataFrame = {
+    graft.plans.PruneLogScan.install(spark)
+    val out = s.schema.struct.fields.toIndexedSeq.map(f =>
+      org.apache.spark.sql.catalyst.expressions.AttributeReference(
+        f.name, f.dataType, f.nullable)())
+    org.apache.spark.sql.graft.Bridge.ofRows(spark,
+      graft.plans.GraftLogRelation(table, s, out))
+  }
 
   def readVersion(spark: SparkSession, table: String, version: Long): DataFrame =
     readSnapshot(spark, table, snapshotAt(table, version).getOrElse(
@@ -866,7 +883,7 @@ object TableLog {
     }
     def raw(fs: Seq[FileEntry]) = {
       val wp = needPos(fs) && fs.nonEmpty
-      finish(scanFiles(spark, s.schemaJson,
+      finish(scanFiles(spark, s.schema.struct,
         fs.map(f => s"$table/${f.path}"), wp), fs, wp)
     }
     if ((s.dels.isEmpty && s.schemaOps.isEmpty) || files.isEmpty)
@@ -910,7 +927,7 @@ object TableLog {
           case (df, (k, des)) =>
             val keys = readSidecars(spark,
               des.map(d => s"$table/${d.file.path}"),
-              sidecarHint(s.schemaJson, k))
+              sidecarHint(s.schema.struct, k))
             // NO .distinct() on the key side: left_anti semantics are
             // unchanged by duplicate build keys (each sidecar is
             // already deduped at write — deleteMor/mergeMor distinct
@@ -1002,11 +1019,8 @@ object TableLog {
       withPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     val paths = fs.map(f => s"$table/${f.path}")
-    if (ops.isEmpty || s.schemaJson.isEmpty)
-      return scanFiles(spark, s.schemaJson, paths, withPos)
-    val logical = org.apache.spark.sql.types.DataType
-      .fromJson(s.schemaJson.get)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val logical = s.schema.struct
+    if (ops.isEmpty) return scanFiles(spark, logical, paths, withPos)
     val resolved = logical.fields.map(f =>
       f -> resolvePhysical(f.name, ops))
     val physSchema = org.apache.spark.sql.types.StructType(
@@ -1037,20 +1051,14 @@ object TableLog {
       col("_metadata.row_index").as(GraftPosCol))
   }
 
-  /** Scan `paths` under the manifest-recorded schema when present:
-    * columns match BY NAME, files written before a column existed read
-    * it as null — schema evolution without a footer merge. Legacy
-    * manifests (no schema) fall back to footer inference. */
-  private def scanFiles(spark: SparkSession, schemaJson: Option[String],
+  /** Scan `paths` under the manifest-recorded schema: columns match BY
+    * NAME, files written before a column existed read it as null —
+    * schema evolution without a footer merge. */
+  private def scanFiles(spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
       paths: Seq[String], withPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val base = schemaJson match {
-      case Some(j) => spark.read.schema(
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-        .parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
-    }
+    val base = spark.read.schema(schema).parquet(paths: _*)
     if (!withPos) base
     else base.select(col("*") +: posCols(withPos): _*)
   }
@@ -1171,7 +1179,7 @@ object TableLog {
     // shape every incremental-maintenance tick hits)
     if (vTo > vFrom) {
       val recs = ((vFrom + 1) to vTo)
-        .map(v => parseRec(manifestPath(table, v)))
+        .map(v => parseRec(table, v))
       if (recs.forall(_.exists(r => r.kind == "delta" &&
           r.removes.isEmpty && r.delAdds.isEmpty)))
         return (recs.flatMap(_.get.adds), Nil)
@@ -1216,7 +1224,7 @@ object TableLog {
   private[graft] def commitDeltas(table: String, vFrom: Long,
       vTo: Long): Seq[CommitDelta] =
     (math.max(vFrom, 1L) to vTo).map { v =>
-      val r = parseRec(manifestPath(table, v)).getOrElse(sys.error(
+      val r = parseRec(table, v).getOrElse(sys.error(
         s"commitDeltas($table): manifest $v not found — the version " +
           "was vacuumed past this stream's offset; restart the " +
           "stream from a fresh checkpoint"))
@@ -1258,7 +1266,6 @@ object TableLog {
     // renamed columns as null and resurrect dropped incarnations)
     val sTo = snapshotAt(table, vTo).getOrElse(
       sys.error(s"readChanges($table): version $vTo not found"))
-    val schemaJson = sTo.schemaJson
     def empty() = readVersion(spark, table, vTo)
       .where(org.apache.spark.sql.functions.lit(false))
     val addedDf =
@@ -1272,8 +1279,7 @@ object TableLog {
       if (removed.isEmpty) empty()
       else {
         val dels = snapshotAt(table, vFrom).map(_.dels).getOrElse(Nil)
-        morScan(spark, table,
-          sTo.copy(schemaJson = schemaJson, dels = dels), removed)
+        morScan(spark, table, sTo.copy(dels = dels), removed)
       }
     (addedDf, removedDf)
   }
@@ -1299,21 +1305,13 @@ object TableLog {
     require(srcV > 0, s"maintainAgg: no committed version in $src")
     // the refresh frontier rides the txn high-water index ("mv@" is a
     // structured stream prefix): one manifest read, not a reverse scan
-    // over the mv's whole history; a legacy (pre-index) mv chain keeps
-    // the authoritative scan
-    val lastRefreshed = {
-      val mvLatest = latestVersion(mv)
+    // over the mv's whole history
+    val mvLatest = latestVersion(mv)
+    val lastRefreshed =
       if (mvLatest == 0) 0L
-      else parseRec(manifestPath(mv, mvLatest)) match {
-        case Some(r) if r.txnComplete =>
-          r.txnHw.get("mv@").map(_._1).getOrElse(0L)
-        case _ => (1L to mvLatest).reverse.iterator
-          .flatMap(v => parseRec(manifestPath(mv, v)))
-          .flatMap(_.txn)
-          .collectFirst { case t if t.startsWith("mv@") => t.drop(3).toLong }
-          .getOrElse(0L)
-      }
-    }
+      else parseRec(mv, mvLatest).getOrElse(sys.error(
+        s"maintainAgg: latest version v$mvLatest of $mv unreadable"))
+        .txnHw.get("mv@").map(_._1).getOrElse(0L)
     if (srcV == lastRefreshed) return latestVersion(mv)
     def aggOf(df: DataFrame, pre: String): DataFrame =
       df.groupBy(keyCols.map(col): _*)
@@ -1448,38 +1446,7 @@ object TableLog {
       val base = snapshot(table)
       // a racing writer may have committed the same txn while we wrote
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      // evolve the recorded schema; a legacy table (no recorded schema)
-      // stays legacy — recording only the append's schema would claim
-      // columns the old files were never checked against
-      val evolved = base.flatMap(_.schemaJson) match {
-        case Some(j) => Some(mergeEvolved(
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType],
-          df.schema).json)
-        case None if base.isEmpty => Some(df.schema.json)
-        case None => None
-      }
-      // on FEED tables, refuse re-adding a name a schema op freed
-      // (rename-from or drop): already-published links physically
-      // carry the old incarnation under that name, and the feed's
-      // by-name declared-schema read has no per-file version fence —
-      // the dead values would resurrect for any consumer reading
-      // after the re-add. Table reads fence per cohort; feed links
-      // cannot. (Fresh names are fine — old links read them as null.)
-      if (feedEnabled(table)) base.foreach { b =>
-        val baseNames = b.schemaJson.map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSet).getOrElse(Set.empty[String])
-        val freed = b.schemaOps.map(_.col).toSet
-        val readd = df.schema.fieldNames.filterNot(baseNames)
-          .filter(freed)
-        require(readd.isEmpty,
-          s"append to feed-enabled $table: column(s) ${readd.mkString(", ")} " +
-            "re-add a name a schema op freed — published feed links " +
-            "still carry the old incarnation under that name and would " +
-            "resurrect its values by name; use a fresh column name")
-      }
+      val evolved = appendSchema(table, base, df.schema, "append")
       val version = base.map(_.version).getOrElse(0L) + 1
       val rows = base.map(_.rows).getOrElse(0L) + newRows
       // cumulative counters: merged INSIDE the CAS loop so a racing
@@ -1517,36 +1484,62 @@ object TableLog {
     committed
   }
 
+  /** The schema an append of `incoming` records on `base`: the
+    * incoming schema on a new table, else the evolved one
+    * (`mergeEvolved`). On FEED tables, refuse re-adding a name a
+    * schema op freed (rename-from or drop): already-published links
+    * physically carry the old incarnation under that name, and the
+    * feed's by-name declared-schema read has no per-file version fence
+    * — the dead values would resurrect for any consumer reading after
+    * the re-add. Table reads fence per cohort; feed links cannot.
+    * (Fresh names are fine — old links read them as null.) */
+  private def appendSchema(table: String, base: Option[Snapshot],
+      incoming: org.apache.spark.sql.types.StructType,
+      what: String): RecordedSchema = base match {
+    case None => RecordedSchema.of(incoming)
+    case Some(b) =>
+      if (feedEnabled(table)) {
+        val baseNames = b.schema.struct.fieldNames.toSet
+        val freed = b.schemaOps.map(_.col).toSet
+        val readd = incoming.fieldNames.filterNot(baseNames).filter(freed)
+        require(readd.isEmpty,
+          s"$what to feed-enabled $table: column(s) " +
+            s"${readd.mkString(", ")} re-add a name a schema op freed — " +
+            "published feed links still carry the old incarnation under " +
+            "that name and would resurrect its values by name; use a " +
+            "fresh column name")
+      }
+      RecordedSchema.of(mergeEvolved(b.schema.struct, incoming))
+  }
+
   /** The version that committed `txnId`, if any. O(1) on the hot path:
     * the LATEST manifest's txn high-water map answers structured ids
     * (`<stream>#<n>` / `<stream>@<n>`) in one small-file read —
     * n == high-water hits exactly, n above it is provably uncommitted
     * (the index never regresses), n below it means "committed at some
     * older version" and pays the reverse scan only on that rare
-    * stale-replay shape. Opaque ids and legacy (pre-index) chains
-    * keep the authoritative O(versions) scan. The append path calls
+    * stale-replay shape. Opaque ids keep the authoritative
+    * O(versions) scan. The append path calls
     * this twice per commit — at 100k retained versions the scan was
     * ~200k manifest parses per micro-batch; the indexed path is 1. */
   def committedTxnVersion(table: String, txnId: String): Option[Long] = {
     val latest = latestVersion(table)
     if (latest == 0) return None
     def scan(hi: Long): Option[Long] = (1L to hi).reverse.iterator
-      .flatMap(v => parseRec(manifestPath(table, v)))
+      .flatMap(v => parseRec(table, v))
       .find(_.txn.contains(txnId)).map(_.version)
-    parseRec(manifestPath(table, latest)) match {
-      case Some(r) if r.txnComplete =>
-        if (r.txn.contains(txnId)) Some(latest)
-        else parseTxnSeq(txnId) match {
-          case Some((stream, n)) => r.txnHw.get(stream) match {
-            case Some((hn, hv)) =>
-              if (n == hn) Some(hv)
-              else if (n > hn) None
-              else scan(latest - 1) // older than the frontier: rare
-            case None => None // indexed chain, stream never committed
-          }
-          case None => scan(latest - 1) // opaque id: unindexed
-        }
-      case _ => scan(latest) // legacy chain: only the scan is authoritative
+    val r = parseRec(table, latest).getOrElse(sys.error(
+      s"$table: latest version v$latest unreadable"))
+    if (r.txn.contains(txnId)) Some(latest)
+    else parseTxnSeq(txnId) match {
+      case Some((stream, n)) => r.txnHw.get(stream) match {
+        case Some((hn, hv)) =>
+          if (n == hn) Some(hv)
+          else if (n > hn) None
+          else scan(latest - 1) // older than the frontier: rare
+        case None => None // the stream never committed
+      }
+      case None => scan(latest - 1) // opaque id: unindexed
     }
   }
 
@@ -1577,7 +1570,7 @@ object TableLog {
     * record). The scale-correct way to answer "how big is the table /
     * what has been ingested" after a commit. */
   def commitStats(table: String, version: Long): Option[(Long, Map[String, Long])] =
-    parseRec(manifestPath(table, version)).map(r => (r.rows, r.counters))
+    parseRec(table, version).map(r => (r.rows, r.counters))
 
   /** Metadata-only commit: a new version with NO data-file changes —
     * rows, schema, and counters carry over verbatim. Exists so log
@@ -1593,18 +1586,18 @@ object TableLog {
     while (committed < 0) {
       val latest = latestVersion(table)
       require(latest > 0, s"commitMetadataOnly: no committed version in $table")
-      val prev = parseRec(manifestPath(table, latest)).getOrElse(
+      val prev = parseRec(table, latest).getOrElse(
         sys.error(s"$table: v$latest unreadable"))
       val version = latest + 1
       val r =
         if (version % checkpointInterval == 0) {
           val s = snapshotOrFail(table)
           ManifestRec(version, latest, "noop", prev.rows, "full",
-            s.files, Nil, Nil, s.dels, Nil, txnId, prev.schemaJson,
+            s.files, Nil, Nil, s.dels, Nil, txnId, prev.schema,
             prev.counters)
         } else
           ManifestRec(version, latest, "noop", prev.rows, "delta", Nil,
-            Nil, Nil, Nil, Nil, txnId, prev.schemaJson, prev.counters)
+            Nil, Nil, Nil, Nil, txnId, prev.schema, prev.counters)
       if (tryCommit(table, r)) committed = version
     }
     committed
@@ -1701,18 +1694,15 @@ object TableLog {
       // nothing to scan, but an unresolvable predicate still refuses
       // at ADD instead of at the first write
       val existing =
-        if (base.files.nonEmpty || base.schemaJson.isEmpty)
-          readSnapshot(spark, table, base)
+        if (base.files.nonEmpty) readSnapshot(spark, table, base)
         else spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.DataType
-            .fromJson(base.schemaJson.get)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
+          base.schema.struct)
       enforceChecks(spark, table, Seq(name -> check),
         existing, "addCheckConstraint: existing data")
       val version = base.version + 1
       val r = ManifestRec(version, base.version, "check_add", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, base.schemaJson,
+        "delta", Nil, Nil, Nil, Nil, Nil, None, base.schema,
         base.counters, ckAdd = Some(name -> check))
       if (tryCommit(table, r)) committed = version
     }
@@ -1728,7 +1718,7 @@ object TableLog {
         s"dropCheckConstraint($table): no constraint '$name'")
       val version = base.version + 1
       val r = ManifestRec(version, base.version, "check_drop", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, base.schemaJson,
+        "delta", Nil, Nil, Nil, Nil, Nil, None, base.schema,
         base.counters, ckDrop = Some(name))
       if (tryCommit(table, r)) committed = version
     }
@@ -1755,12 +1745,7 @@ object TableLog {
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
-      require(base.schemaJson.nonEmpty,
-        s"addColumn on $table: legacy table without a recorded " +
-          "schema — rewrite it once to record one")
-      val logical = org.apache.spark.sql.types.DataType
-        .fromJson(base.schemaJson.get)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val logical = base.schema.struct
       require(!logical.fieldNames.contains(name),
         s"addColumn($table): column '$name' already exists")
       val evolved = org.apache.spark.sql.types.StructType(
@@ -1768,7 +1753,7 @@ object TableLog {
           name, dataType, nullable = true))
       val version = base.version + 1
       val r = ManifestRec(version, base.version, "schema", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, Some(evolved.json),
+        "delta", Nil, Nil, Nil, Nil, Nil, None, RecordedSchema.of(evolved),
         base.counters)
       if (tryCommit(table, r)) committed = version
     }
@@ -1792,12 +1777,7 @@ object TableLog {
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
-      require(base.schemaJson.nonEmpty,
-        s"widenColumnType on $table: legacy table without a recorded " +
-          "schema — rewrite it once to record one")
-      val logical = org.apache.spark.sql.types.DataType
-        .fromJson(base.schemaJson.get)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val logical = base.schema.struct
       val idx = logical.fieldNames.indexOf(name)
       require(idx >= 0, s"widenColumnType($table): no column '$name'")
       val cur = logical.fields(idx).dataType
@@ -1817,7 +1797,7 @@ object TableLog {
           logical.fields(idx).copy(dataType = to)))
       val version = base.version + 1
       val r = ManifestRec(version, base.version, "schema", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, Some(evolved.json),
+        "delta", Nil, Nil, Nil, Nil, Nil, None, RecordedSchema.of(evolved),
         base.counters)
       if (tryCommit(table, r)) committed = version
     }
@@ -1835,9 +1815,6 @@ object TableLog {
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
-      require(base.schemaJson.nonEmpty,
-        s"$kind on $table: legacy table without a recorded schema — " +
-          "rewrite it once to record one")
       base.dels.find(_.keyCol == colName).foreach(d => sys.error(
         s"$kind($table, $colName): a pending merge-on-read delete " +
           s"sidecar (v${d.ver}) keys on this column — compact() to " +
@@ -1854,15 +1831,12 @@ object TableLog {
           s"$kind($table, $colName): CHECK constraint '$n' ($e) " +
             "references this column — drop the constraint first")
       }
-      val logical = org.apache.spark.sql.types.DataType
-        .fromJson(base.schemaJson.get)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val evolved = evolve(logical)
+      val evolved = evolve(base.schema.struct)
       val version = base.version + 1
       // metadata-only commit: delta with no file changes; the gate
       // folds the op into the carried history
       val r = ManifestRec(version, base.version, "schema", base.rows,
-        "delta", Nil, Nil, Nil, Nil, Nil, None, Some(evolved.json),
+        "delta", Nil, Nil, Nil, Nil, Nil, None, RecordedSchema.of(evolved),
         base.counters, schemaOps = Seq(SchemaOp(version, kind, colName, to)))
       if (tryCommit(table, r)) committed = version
     }
@@ -1870,10 +1844,10 @@ object TableLog {
   }
 
   /** Wall-clock commit timestamp (epoch millis) recorded in version
-    * `v`'s manifest — one small-file read. 0 on pre-timestamp legacy
-    * manifests. */
+    * `v`'s manifest — one small-file read; None when `v` is not
+    * retained. */
   def commitTimestamp(table: String, version: Long): Option[Long] =
-    parseRec(manifestPath(table, version)).map(_.tsMs)
+    parseRec(table, version).map(_.tsMs)
 
   /** The newest committed version whose commit timestamp is at or
     * before `tsMs` — "the table as of yesterday 09:00" resolved to a
@@ -1884,22 +1858,15 @@ object TableLog {
     * on a 100k-commit ingest history that is ~17 small-file reads.
     * Fails descriptively when `tsMs` predates the earliest RETAINED
     * version (vacuum dropped the history that would answer it) and
-    * when it predates version 1 of a never-vacuumed table. Legacy
-    * pre-timestamp manifests (ts=0) sort before every stamped commit:
-    * a query inside the legacy range resolves to the newest legacy
-    * version only if no stamped version qualifies. */
+    * when it predates version 1 of a never-vacuumed table. */
   def versionAsOf(table: String, tsMs: Long): Long = {
-    val latest = latestVersion(table)
-    require(latest > 0, s"versionAsOf: no committed version in $table")
+    val vs = retainedVersions(table)
+    require(vs.nonEmpty, s"versionAsOf: no committed version in $table")
     // earliest RETAINED manifest bounds the searchable range (vacuum
-    // drops prefixes; the listing exists — latestVersion just read it)
-    val earliest = listDir(logDir(table))
-      .map(_.getFileName.toString)
-      .collect { case n if n.matches("v\\d{8}\\.manifest") =>
-        n.stripPrefix("v").stripSuffix(".manifest").toLong }
-      .min
+    // drops prefixes)
+    val (earliest, latest) = (vs.head, vs.last)
     def ts(v: Long): Long =
-      parseRec(manifestPath(table, v)).map(_.tsMs).getOrElse(
+      parseRec(table, v).map(_.tsMs).getOrElse(
         sys.error(s"versionAsOf: manifest v$v of $table unreadable"))
     require(ts(earliest) <= tsMs, {
       val e = ts(earliest)
@@ -1935,15 +1902,11 @@ object TableLog {
     * skip their changes — the same loud-over-partial posture as the
     * feed floor fence. On a never-vacuumed table it resolves to 1. */
   private[graft] def versionAtOrAfter(table: String, tsMs: Long): Long = {
-    val latest = latestVersion(table)
-    require(latest > 0, s"versionAtOrAfter: no committed version in $table")
-    val earliest = listDir(logDir(table))
-      .map(_.getFileName.toString)
-      .collect { case n if n.matches("v\\d{8}\\.manifest") =>
-        n.stripPrefix("v").stripSuffix(".manifest").toLong }
-      .min
+    val vs = retainedVersions(table)
+    require(vs.nonEmpty, s"versionAtOrAfter: no committed version in $table")
+    val (earliest, latest) = (vs.head, vs.last)
     def ts(v: Long): Long =
-      parseRec(manifestPath(table, v)).map(_.tsMs).getOrElse(
+      parseRec(table, v).map(_.tsMs).getOrElse(
         sys.error(s"versionAtOrAfter: manifest v$v of $table unreadable"))
     if (tsMs > ts(latest)) return latest + 1
     if (tsMs <= ts(earliest)) {
@@ -2046,7 +2009,9 @@ object TableLog {
   /** ZERO-COPY table clone: hard-links every data file and MOR sidecar
     * of `src`'s current snapshot into `dst` and commits dst's FIRST
     * manifest as a full snapshot carrying src's schema, schema-op
-    * history, sidecars, CHECK constraints, and counters — O(files)
+    * history, sidecars, CHECK constraints, counters and txn index (so
+    * a stream replaying into src after a `publishBranch` still finds
+    * its committed batches) — O(files)
     * metadata and directory entries, zero bytes copied (the same inode
     * trick as the change feed, at table scale: links pin inodes, so
     * either side's vacuum deletes only its own directory entries and
@@ -2080,9 +2045,10 @@ object TableLog {
         }
     }
     Files.createDirectories(logDir(dst))
+    val hw = parseRec(src, s.version).map(_.txnHw).getOrElse(Map.empty)
     val r = ManifestRec(s.version, s.version - 1, "clone", s.rows, "full",
-      s.files, Nil, Nil, s.dels, Nil, None, s.schemaJson, s.counters,
-      schemaOps = s.schemaOps, checks = s.checks)
+      s.files, Nil, Nil, s.dels, Nil, None, s.schema, s.counters,
+      txnHw = hw, schemaOps = s.schemaOps, checks = s.checks)
     require(tryCommit(dst, r),
       s"cloneTable: a concurrent clone already committed $dst")
     s.version
@@ -2118,13 +2084,9 @@ object TableLog {
     require(!feedEnabled(src),
       s"publishBranch($src): feed tables cannot fast-forward a burst " +
         "of history — stream into them instead")
-    val bLatest = latestVersion(branch)
-    require(bLatest > 0, s"publishBranch: $branch has no commit log")
-    val fork = listDir(logDir(branch))
-      .map(_.getFileName.toString)
-      .collect { case n if n.matches("v\\d{8}\\.manifest") =>
-        n.stripPrefix("v").stripSuffix(".manifest").toLong }
-      .min
+    val bvs = retainedVersions(branch)
+    require(bvs.nonEmpty, s"publishBranch: $branch has no commit log")
+    val (fork, bLatest) = (bvs.head, bvs.last)
     val sLatest = latestVersion(src)
     require(sLatest == fork,
       s"publishBranch: $src advanced to v$sLatest since the branch " +
@@ -2136,7 +2098,7 @@ object TableLog {
     // impossible); files first, so no published manifest ever
     // references a missing path
     (fork + 1 to bLatest).foreach { v =>
-      val r = parseRec(manifestPath(branch, v)).getOrElse(sys.error(
+      val r = parseRec(branch, v).getOrElse(sys.error(
         s"publishBranch: branch manifest v$v unreadable — aborting " +
           "before any commit"))
       ((r.files ++ r.adds).map(_.path) ++
@@ -2204,13 +2166,9 @@ object TableLog {
     require(!feedEnabled(src),
       s"mergeBranch($src): feed tables cannot absorb a burst of " +
         "history — stream into them instead")
-    val bLatest = latestVersion(branch)
-    require(bLatest > 0, s"mergeBranch: $branch has no commit log")
-    val fork = listDir(logDir(branch))
-      .map(_.getFileName.toString)
-      .collect { case n if n.matches("v\\d{8}\\.manifest") =>
-        n.stripPrefix("v").stripSuffix(".manifest").toLong }
-      .min
+    val bvs = retainedVersions(branch)
+    require(bvs.nonEmpty, s"mergeBranch: $branch has no commit log")
+    val fork = bvs.head
     val bSnap = snapshotOrFail(branch)
     val base = snapshotAt(src, fork).getOrElse(sys.error(
       s"mergeBranch: src's v$fork (the fork point) is no longer " +
@@ -2218,7 +2176,7 @@ object TableLog {
         "re-apply"))
     // the branch must BE a branch of src: its earliest manifest is the
     // clone commit and carries exactly src's fork file list
-    val forkRec = parseRec(manifestPath(branch, fork)).getOrElse(
+    val forkRec = parseRec(branch, fork).getOrElse(
       sys.error(s"mergeBranch: $branch v$fork unreadable"))
     require(forkRec.kind == "full" &&
         forkRec.files.map(_.path).toSet == base.files.map(_.path).toSet,
@@ -2227,12 +2185,10 @@ object TableLog {
     // (name, type) shape — NULLABILITY-insensitive: rewrites re-derive
     // the recorded schema from DataFrames and a parquet round-trip
     // flips nullable, which is not a schema change
-    def shape(j: Option[String]): Option[Seq[(String,
-        org.apache.spark.sql.types.DataType)]] =
-      j.map(x => org.apache.spark.sql.types.DataType.fromJson(x)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .fields.toSeq.map(f => (f.name, f.dataType)))
-    require(shape(bSnap.schemaJson) == shape(base.schemaJson) &&
+    def shape(s: RecordedSchema): Seq[(String,
+        org.apache.spark.sql.types.DataType)] =
+      s.struct.fields.toSeq.map(f => (f.name, f.dataType))
+    require(shape(bSnap.schema) == shape(base.schema) &&
         bSnap.schemaOps == base.schemaOps && bSnap.checks == base.checks,
       s"mergeBranch: $branch changed schema, schema ops, or CHECK " +
         "constraints since the fork — publish those with a " +
@@ -2256,15 +2212,12 @@ object TableLog {
           "against them; re-clone and re-apply")
       // src schema may have ADDED columns (branch files read null
       // there); anything else refuses
-      (shape(base.schemaJson), shape(srcSnap.schemaJson)) match {
-        case (Some(b), Some(s)) if b != s =>
-          val sf = s.toMap
-          require(b.forall { case (n, t) => sf.get(n).contains(t) },
-            s"mergeBranch: $src changed existing columns since the " +
-              "fork (only ADDITIVE evolution merges); re-clone and " +
-              "re-apply")
-        case _ => ()
-      }
+      val sf = shape(srcSnap.schema).toMap
+      require(shape(base.schema).forall { case (n, t) =>
+          sf.get(n).contains(t) },
+        s"mergeBranch: $src changed existing columns since the " +
+          "fork (only ADDITIVE evolution merges); re-clone and " +
+          "re-apply")
       require(srcSnap.dels == base.dels,
         s"mergeBranch: $src has pending MOR sidecar changes since the " +
           "fork — run morMaintain(src) first")
@@ -2326,7 +2279,7 @@ object TableLog {
       // duplicate every pre-fork op
       val r = ManifestRec(version, srcSnap.version, "merge_branch",
         rows, "full", files, Nil, Nil, srcSnap.dels, Nil, None,
-        srcSnap.schemaJson, counters)
+        srcSnap.schema, counters)
       if (tryCommit(src, r)) committed = version
     }
     committed
@@ -2371,7 +2324,7 @@ object TableLog {
         readSnapshot(spark, table, target), "restore")
       val v = base.version + 1
       val r = ManifestRec(v, base.version, "restore", target.rows, "full",
-        target.files, Nil, Nil, target.dels, Nil, None, target.schemaJson,
+        target.files, Nil, Nil, target.dels, Nil, None, target.schema,
         base.counters, schemaOps = target.schemaOps)
       if (tryCommit(table, r)) committed = v
     }
@@ -2382,16 +2335,15 @@ object TableLog {
     * version, row count, live file count and bytes, pending MOR
     * sidecars, schema-op and CHECK-constraint counts, and the commit
     * timestamp. Pure manifest metadata — sizes come from the
-    * write-time `bytes` field (stat fallback only for legacy
-    * entries). */
+    * write-time `bytes` field. */
   def detail(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val s = snapshotOrFail(table)
-    val bytes = s.files.map(fileBytes(table, _)).sum
+    val bytes = s.files.map(_.bytes).sum
     Seq((s.version, s.rows, s.files.size.toLong, bytes,
       s.dels.size.toLong, s.schemaOps.size.toLong, s.checks.size.toLong,
       commitTimestamp(table, s.version).getOrElse(0L),
-      s.dels.map(d => fileBytes(table, d.file)).sum))
+      s.dels.map(_.file.bytes).sum))
       .toDF("version", "rows", "n_files", "bytes", "pending_sidecars",
         "schema_ops", "checks", "ts_ms", "sidecar_bytes")
   }
@@ -2412,11 +2364,10 @@ object TableLog {
   private def floorAtFullManifest(table: String, requested: Long,
       latest: Long): Long =
     (requested to 1L by -1L).find(v =>
-      parseRec(manifestPath(table, v)).exists(_.kind == "full"))
+      parseRec(table, v).exists(_.kind == "full"))
       .getOrElse {
-        val earliest = (1L to latest).find(v =>
-          Files.exists(manifestPath(table, v))).getOrElse(latest)
-        require(parseRec(manifestPath(table, earliest))
+        val earliest = retainedVersions(table).headOption.getOrElse(latest)
+        require(parseRec(table, earliest)
             .exists(_.kind == "full"),
           s"vacuum floor of $table: earliest retained manifest " +
             s"v$earliest is not a full checkpoint — log unreplayable")
@@ -2457,7 +2408,7 @@ object TableLog {
     var cur: Seq[FileEntry] = Nil
     var curDels: Seq[DeleteEntry] = Nil
     (vLo to vHi).foreach { v =>
-      val r = parseRec(manifestPath(table, v)).getOrElse(sys.error(
+      val r = parseRec(table, v).getOrElse(sys.error(
         s"$caller of $table: retained manifest v$v unreadable — " +
           "aborting before files it may reference are deemed garbage"))
       cur =
@@ -2528,7 +2479,7 @@ object TableLog {
     import spark.implicits._
     val latest = latestVersion(table)
     val rows = (1L to latest).flatMap(v =>
-      parseRec(manifestPath(table, v)).map(r =>
+      parseRec(table, v).map(r =>
         (r.version, r.tsMs, r.action, r.kind, r.rows, r.txn)))
     rows.toDF("version", "ts_ms", "action", "kind", "rows", "txn")
   }
@@ -2587,27 +2538,8 @@ object TableLog {
     while (committed < 0) {
       val base = snapshot(table)
       committedTxnVersion(table, txnId).foreach(return _)
-      val evolved = base.flatMap(_.schemaJson) match {
-        case Some(j) => Some(mergeEvolved(
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType],
-          writeSchema).json)
-        case None if base.isEmpty => Some(writeSchema.json)
-        case None => None
-      }
-      if (feedEnabled(table)) base.foreach { b =>
-        val baseNames = b.schemaJson.map(j =>
-          org.apache.spark.sql.types.DataType.fromJson(j)
-            .asInstanceOf[org.apache.spark.sql.types.StructType]
-            .fieldNames.toSet).getOrElse(Set.empty[String])
-        val freed = b.schemaOps.map(_.col).toSet
-        val readd = writeSchema.fieldNames.filterNot(baseNames)
-          .filter(freed)
-        require(readd.isEmpty,
-          s"streaming append to feed-enabled $table: column(s) " +
-            s"${readd.mkString(", ")} re-add a name a schema op freed " +
-            "— use a fresh column name")
-      }
+      val evolved = appendSchema(table, base, writeSchema,
+        "streaming append")
       val version = base.map(_.version).getOrElse(0L) + 1
       val rows = base.map(_.rows).getOrElse(0L) + newRows
       val counters = base.map(_.counters).getOrElse(Map.empty[String, Long])
@@ -2902,7 +2834,7 @@ object TableLog {
     val out = Seq.newBuilder[String]
     (publishFrontier(table, latest) to latest).foreach { v =>
       if (!Files.exists(feedMarker(table, v))) {
-        parseRec(manifestPath(table, v)) match {
+        parseRec(table, v) match {
           case None => // vacuumed before publication: nothing deliverable
             writeFeedMarker(table, v)
           case Some(r) =>
@@ -2941,7 +2873,7 @@ object TableLog {
                   // multiset), so its insert-side difference is provably
                   // empty — skip that scan; merge/update capture both
                   out ++= publishCdcChanges(spark, table, v, rmP, addP,
-                    r.schemaJson, captureInserts = act != "delete",
+                    r.schema, captureInserts = act != "delete",
                     prevSnap)
                 case act @ ("delete_mor" | "update_mor" | "merge_mor" |
                     "apply_cdc_mor" | "delete_dv" | "update_dv" |
@@ -2964,7 +2896,7 @@ object TableLog {
                     prevSnap.getOrElse(sys.error(
                       s"publishFeed($table): v${v - 1} unresolvable " +
                         s"while capturing v$v's $act")),
-                    newDels, r.schemaJson)
+                    newDels, r.schema)
                   // update/merge MOR also ADD new-image files: link
                   // them raw as inserts (absent `_change_type` reads
                   // 'insert'), zero data rewrite — applyCdc's per-key
@@ -3016,7 +2948,7 @@ object TableLog {
     * inside a crash-heal window). */
   private def publishCdcChanges(spark: SparkSession, table: String, v: Long,
       removedPaths: Seq[String], addedPaths: Seq[String],
-      schemaJson: Option[String], captureInserts: Boolean,
+      schema: RecordedSchema, captureInserts: Boolean,
       prevSnap: Option[Snapshot]): Seq[String] = {
     import org.apache.spark.sql.functions.lit
     if (removedPaths.isEmpty && !captureInserts) return Nil
@@ -3036,14 +2968,14 @@ object TableLog {
       val removed = prevSnap match {
         case Some(ps) =>
           val rm = removedPaths.toSet
-          morScan(spark, table, ps.copy(schemaJson = schemaJson),
+          morScan(spark, table, ps.copy(schema = schema),
             ps.files.filter(f => rm(f.path)))
-        case None => scanFiles(spark, schemaJson,
+        case None => scanFiles(spark, schema.struct,
           removedPaths.map(p => s"$table/$p"))
       }
       val added =
         if (addedPaths.isEmpty) None
-        else Some(scanFiles(spark, schemaJson,
+        else Some(scanFiles(spark, schema.struct,
           addedPaths.map(p => s"$table/$p")))
       val deletes =
         added.fold(removed)(removed.exceptAll)
@@ -3065,7 +2997,7 @@ object TableLog {
     * column. Staged and linked like every CDC capture. */
   private def publishCdcMorDelete(spark: SparkSession, table: String,
       v: Long, prevSnap: Snapshot, newDels: Seq[DeleteEntry],
-      schemaJson: Option[String]): Seq[String] = {
+      schema: RecordedSchema): Seq[String] = {
     import org.apache.spark.sql.functions.{col, lit}
     if (newDels.isEmpty) return Nil
     stageAndLinkCdc(spark, table, v) {
@@ -3084,7 +3016,7 @@ object TableLog {
               org.apache.spark.sql.graft.Bridge.expression(
                 col(GraftPosCol)),
               loadDv(spark, table, des)))
-          morScan(spark, table, prevSnap.copy(schemaJson = schemaJson),
+          morScan(spark, table, prevSnap.copy(schema = schema),
             cand, pos = true)
             .where(org.apache.spark.sql.functions.coalesce(c,
               lit(false)))
@@ -3119,8 +3051,8 @@ object TableLog {
         // manifest: no per-capture schema-inference job
         val keys = readSidecars(spark,
           des.map(d => s"$table/${d.file.path}"),
-          sidecarHint(schemaJson, k))
-        morScan(spark, table, prevSnap.copy(schemaJson = schemaJson), cand)
+          sidecarHint(schema.struct, k))
+        morScan(spark, table, prevSnap.copy(schema = schema), cand)
           .join(keys.select(col(k)), Seq(k), "left_semi")
       }.reduce(_ unionByName _)
         .withColumn(changeTypeCol, lit("delete"))
@@ -3364,12 +3296,7 @@ object TableLog {
 
   private def feedSchema(spark: SparkSession,
       table: String): org.apache.spark.sql.types.StructType =
-    snapshot(table).flatMap(_.schemaJson) match {
-      case Some(j) => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      case None => // legacy table: infer from the feed's own files
-        spark.read.parquet(feedDir(table).toString).schema
-    }
+    snapshotOrFail(table).schema.struct
 
   /** Retire feed links for versions below `latest − keepVersions + 1`.
     * Markers are kept (healing must not re-link retired versions);
@@ -3519,7 +3446,7 @@ object TableLog {
       // sidecar, so the sidecars are spent and vacuum may reclaim them
       val r = ManifestRec(base.version + 1, base.version, action, rows,
         "full", files.map(_.copy(ver = base.version + 1)), Nil, Nil,
-        Nil, Nil, txnId, Some(out.schema.json),
+        Nil, Nil, txnId, RecordedSchema.of(out.schema),
         base.counters ++ counterSet)
       if (tryCommit(table, r)) committed = r.version
     }
@@ -3537,7 +3464,7 @@ object TableLog {
         strStatsCols = strStatsCols,
         bloomStatsCols = bloomStatsCols) { df =>
       val bytes = snapshot(table).get.files
-        .map(fileBytes(table, _)).sum
+        .map(_.bytes).sum
       df.coalesce(math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt))
     }
 
@@ -3568,15 +3495,9 @@ object TableLog {
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
-      val sized = base.files.map { f =>
-        // manifest-carried size first (the streaming auto-OPTIMIZE
-        // tick must not stat O(table) files per run); legacy entries
-        // stat once, and a concurrently-vacuumed legacy path reads as
-        // not-small — not ours to pack
-        f -> (if (f.bytes >= 0) f.bytes
-              else try Files.size(Paths.get(table, f.path))
-              catch { case _: java.io.IOException => Long.MaxValue })
-      }
+      // manifest-carried sizes: the streaming auto-OPTIMIZE tick
+      // must not stat O(table) files per run
+      val sized = base.files.map(f => f -> f.bytes)
       // LAYOUT-PRESERVING: a file carrying a z-interval stat is
       // clustering-intentional — blind bin-packing would strip the
       // stat and silently decay box pruning (and then zOrderMaintain
@@ -3609,10 +3530,10 @@ object TableLog {
             liveDels.size < base.dels.size)
           ManifestRec(version, base.version, "compact", base.rows, "full",
             survivors, Nil, Nil,
-            liveDels, Nil, None, base.schemaJson, base.counters)
+            liveDels, Nil, None, base.schema, base.counters)
         else
           ManifestRec(version, base.version, "compact", base.rows, "delta",
-            Nil, stamped, removed, Nil, Nil, None, base.schemaJson,
+            Nil, stamped, removed, Nil, Nil, None, base.schema,
             base.counters)
       if (tryCommit(table, r)) committed = version
       // CAS loss: re-read the base and re-pack; the orphaned file set
@@ -3713,19 +3634,15 @@ object TableLog {
   }
 
   /** Manifest-derived schema of a KEY sidecar set: one column `k`
-    * typed as the snapshot's recorded table schema types it. None on
-    * legacy tables (no recorded schema) — the caller falls back to
-    * footer inference. */
-  private def sidecarHint(schemaJson: Option[String], k: String)
-      : Option[org.apache.spark.sql.types.StructType] =
-    schemaJson.flatMap { j =>
-      org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-        .fields.find(_.name == k)
-        .map(f => org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(k, f.dataType,
-            nullable = true))))
-    }
+    * typed as the snapshot's recorded table schema types it (None when
+    * the schema no longer has `k` — the caller reads the sidecar's own
+    * footer). */
+  private def sidecarHint(schema: org.apache.spark.sql.types.StructType,
+      k: String): Option[org.apache.spark.sql.types.StructType] =
+    schema.fields.find(_.name == k)
+      .map(f => org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(k, f.dataType,
+          nullable = true))))
 
   private[graft] def loadDv(spark: SparkSession, table: String,
       dvs: Seq[DeleteEntry]): graft.functions.DvSet = {
@@ -3815,7 +3732,7 @@ object TableLog {
     while (committed < 0) {
       val base = snapshotOrFail(table)
       if (base.dels.size <= maxSidecars &&
-          base.dels.map(d => fileBytes(table, d.file)).sum <=
+          base.dels.map(d => d.file.bytes).sum <=
             maxSidecarBytes)
         return base.version
       val affected = base.files.filter(f =>
@@ -3836,7 +3753,7 @@ object TableLog {
         base.rows, "full",
         base.files.filterNot(f => rm(f.path)) ++
           files.map(_.copy(ver = version)),
-        Nil, Nil, Nil, Nil, None, base.schemaJson, base.counters)
+        Nil, Nil, Nil, Nil, None, base.schema, base.counters)
       if (tryCommit(table, r)) committed = version
     }
     committed
@@ -3862,14 +3779,15 @@ object TableLog {
     * would DROP the table and erase its history instead). CAS-retries
     * like every commit; a racing create loses loudly. */
   private[graft] def commitStaged(table: String, files: Seq[FileEntry],
-      rows: Long, schemaJson: String, replace: Boolean): Long = {
+      rows: Long, schema: org.apache.spark.sql.types.StructType,
+      replace: Boolean): Long = {
     var committed = -1L
     while (committed < 0) {
       snapshot(table) match {
         case None =>
           val r = ManifestRec(1, 0, "create", rows, "full",
             files.map(_.copy(ver = 1)), Nil, Nil, Nil, Nil, None,
-            Some(schemaJson), Map.empty)
+            RecordedSchema.of(schema), Map.empty)
           if (tryCommit(table, r)) committed = 1
         case Some(b) =>
           require(replace, s"commitStaged($table): table already has " +
@@ -3881,7 +3799,7 @@ object TableLog {
           val version = b.version + 1
           val r = ManifestRec(version, b.version, "overwrite", rows,
             "full", files.map(_.copy(ver = version)), Nil, Nil, Nil,
-            Nil, None, Some(schemaJson), b.counters)
+            Nil, None, RecordedSchema.of(schema), b.counters)
           if (tryCommit(table, r)) committed = version
       }
     }
@@ -3960,7 +3878,7 @@ object TableLog {
           val vMax = g.map(_.ver).max
           val keys = readSidecars(spark,
             g.map(d => s"$table/${d.file.path}"),
-            sidecarHint(base.schemaJson, k))
+            sidecarHint(base.schema.struct, k))
             .select(col(k)).distinct().coalesce(1)
           val isString = keys.schema(k).dataType ==
             org.apache.spark.sql.types.StringType
@@ -3986,7 +3904,7 @@ object TableLog {
       // commit's delta — passing the base lists would duplicate them
       val r = ManifestRec(version, base.version, "mor_fold",
         base.rows, "full", base.files, Nil, Nil, folded, Nil, None,
-        base.schemaJson, base.counters)
+        base.schema, base.counters)
       if (tryCommit(table, r)) committed = version
     }
     committed
@@ -4250,7 +4168,7 @@ object TableLog {
       val unclustered = base.files.filterNot(_.stats.exists(st =>
         isZ(st.col))) ++
         (if (smallBytes <= 0) Nil
-         else clustered.filter(f => fileBytes(table, f) < smallBytes))
+         else clustered.filter(f => f.bytes < smallBytes))
       if (unclustered.size < minFiles) return base.version
       val parts = spec.split('|')
       val (physCols, zRanges) =
@@ -4267,8 +4185,7 @@ object TableLog {
       // re-resolve each against the current schema so a rename since
       // then clusters (and stamps) under today's logical names
       val logicalNames: Seq[String] = {
-        val cols = tableSchemaOf(table).map(_.fieldNames.toSeq)
-          .getOrElse(physCols)
+        val cols = base.schema.struct.fieldNames
         physCols.map(p => cols.find(l =>
           statNameFor(base, l)(refFile).contains(p)).getOrElse(sys.error(
           s"zOrderMaintain($table): clustered column '$p' no longer " +
@@ -4298,7 +4215,7 @@ object TableLog {
         else
           z3StatName(logicalNames(0), logicalNames(1), logicalNames(2),
             zRanges(0), zRanges(1), zRanges(2))
-      val bytes = unclustered.map(fileBytes(table, _)).sum
+      val bytes = unclustered.map(_.bytes).sum
       val nOut = math.max(1,
         math.ceil(bytes.toDouble / targetBytes).toInt)
       val (files, newRows) = writeDataFiles(spark, table,
@@ -4321,11 +4238,11 @@ object TableLog {
           val rm = removed.toSet
           ManifestRec(version, base.version, "zorder", base.rows, "full",
             base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, None, base.schemaJson, base.counters)
+            base.dels, Nil, None, base.schema, base.counters)
         } else
           ManifestRec(version, base.version, "zorder", base.rows,
             "delta", Nil, stamped, removed, Nil, Nil, None,
-            base.schemaJson, base.counters)
+            base.schema, base.counters)
       if (tryCommit(table, r)) committed = version
     }
     committed
@@ -4439,9 +4356,8 @@ object TableLog {
     * and the group-rewrite faces (delete/update/replace) used to pay a
     * full `morScan().count()` per CAS attempt just to AUDIT a number
     * the metadata already proves. KEY sidecars remove a DATA-dependent
-    * row count (anti-join), so a key-fenced affected file — or a
-    * legacy entry without a recorded count — falls back to the
-    * counting scan; `spark.graft.mutation.auditScan=true` (or the
+    * row count (anti-join), so a key-fenced affected file falls back
+    * to the counting scan; `spark.graft.mutation.auditScan=true` (or the
     * legacy `spark.graft.replaceWhere.auditScan`) keeps the two-scan
     * cross-check for audit runs. */
   private def liveRowsOf(spark: SparkSession, table: String,
@@ -4450,8 +4366,7 @@ object TableLog {
     val keyFenced = affected.exists(f =>
       base.dels.exists(d => d.keyCol != DvKeyCol &&
         sidecarFences(base, f, d)))
-    if (keyFenced || affected.exists(_.rows < 0L))
-      return morScan(spark, table, base, affected).count()
+    if (keyFenced) return morScan(spark, table, base, affected).count()
     val dvs = base.dels.filter(d => d.keyCol == DvKeyCol &&
       affected.exists(f => sidecarFences(base, f, d)))
     val vectored =
@@ -4543,10 +4458,10 @@ object TableLog {
             liveDels.size < base.dels.size)
           ManifestRec(version, base.version, "delete", rows, "full",
             survivors, Nil, Nil,
-            liveDels, Nil, txnId, base.schemaJson, base.counters)
+            liveDels, Nil, txnId, base.schema, base.counters)
         else
           ManifestRec(version, base.version, "delete", rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schemaJson,
+            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schema,
             base.counters)
       if (tryCommit(table, r)) committed = version
     }
@@ -4646,12 +4561,12 @@ object TableLog {
         if (version % checkpointInterval == 0 ||
             liveDels.size < base.dels.size)
           ManifestRec(version, base.version, "replace", rows, "full",
-            survivors, Nil, Nil, liveDels, Nil, txnId, base.schemaJson,
+            survivors, Nil, Nil, liveDels, Nil, txnId, base.schema,
             base.counters)
         else
           ManifestRec(version, base.version, "replace", rows, "delta",
             Nil, stamped, affectedPaths.toSeq.sorted, Nil, Nil, txnId,
-            base.schemaJson, base.counters)
+            base.schema, base.counters)
       if (tryCommit(table, r)) committed = version
       // lost race: this attempt's keep-side rewrite was planned
       // against a stale base and is re-planned next iteration — the
@@ -4725,10 +4640,10 @@ object TableLog {
           if (version % checkpointInterval == 0)
             ManifestRec(version, base.version, "delete_mor", rows, "full",
               base.files, Nil, Nil, base.dels ++ newDels, Nil, txnId,
-              base.schemaJson, base.counters)
+              base.schema, base.counters)
           else
             ManifestRec(version, base.version, "delete_mor", rows, "delta",
-              Nil, Nil, Nil, Nil, newDels, txnId, base.schemaJson,
+              Nil, Nil, Nil, Nil, newDels, txnId, base.schema,
               base.counters)
         if (tryCommit(table, r)) committed = version
       }
@@ -4837,10 +4752,10 @@ object TableLog {
           if (version % checkpointInterval == 0)
             ManifestRec(version, base.version, "delete_dv", rows, "full",
               base.files, Nil, Nil, base.dels ++ newDels, Nil, txnId,
-              base.schemaJson, base.counters)
+              base.schema, base.counters)
           else
             ManifestRec(version, base.version, "delete_dv", rows, "delta",
-              Nil, Nil, Nil, Nil, newDels, txnId, base.schemaJson,
+              Nil, Nil, Nil, Nil, newDels, txnId, base.schema,
               base.counters)
         if (tryCommit(table, r)) committed = version
         // CAS loss: positions were computed against a stale snapshot —
@@ -4928,12 +4843,12 @@ object TableLog {
           if (version % checkpointInterval == 0)
             ManifestRec(version, base.version, "update_dv", base.rows,
               "full", base.files ++ stamped, Nil, Nil,
-              base.dels ++ newDels, Nil, txnId, base.schemaJson,
+              base.dels ++ newDels, Nil, txnId, base.schema,
               base.counters)
           else
             ManifestRec(version, base.version, "update_dv", base.rows,
               "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-              base.schemaJson, base.counters)
+              base.schema, base.counters)
         if (tryCommit(table, r)) committed = version
       } finally { matched.unpersist(); () }
     }
@@ -4950,8 +4865,7 @@ object TableLog {
     * `added` (the rewritten groups Spark's own ReplaceData wrote,
     * each measured by its writer task under `stats`) in ONE delta
     * manifest; `rows` stays exact (new counts from the writer tasks,
-    * removed counts from the manifest, or a counting scan for legacy
-    * entries without one). Concurrency: the CAS loop
+    * removed counts from the manifest). Concurrency: the CAS loop
     * re-validates that every removed path is STILL LIVE and that no
     * MOR sidecar landed since the scan planned (either means the
     * scanned groups no longer represent the table) — fails with a
@@ -4982,18 +4896,13 @@ object TableLog {
     val removedRows =
       if (removedPaths.isEmpty) 0L
       else {
-        // raw footer counts come from the manifest when every removed
-        // path carries one (write-time recorded; data files are
-        // immutable, so any snapshot listing the path is authoritative)
-        // — a legacy entry without a count pays the counting scan
-        val byPath = snapshot(table).map(_.files
-          .map(f => f.path -> f.rows).toMap)
-          .getOrElse(Map.empty[String, Long])
-        val raw =
-          if (removedPaths.forall(p => byPath.getOrElse(p, -1L) >= 0L))
-            removedPaths.map(byPath).sum
-          else spark.read.parquet(
-            removedPaths.map(p => s"$table/$p"): _*).count()
+        // raw footer counts come from the manifest (write-time
+        // recorded; data files are immutable, so any snapshot listing
+        // the path is authoritative — a path no longer listed fails
+        // the liveness check below)
+        val byPath = snapshotOrFail(table).files
+          .map(f => f.path -> f.rows).toMap
+        val raw = removedPaths.flatMap(byPath.get).sum
         val vectored =
           if (pendingDv.isEmpty) 0L
           else {
@@ -5045,10 +4954,10 @@ object TableLog {
             liveDels.size < base.dels.size)
           ManifestRec(version, base.version, action, rows, "full",
             survivors, Nil, Nil,
-            liveDels, Nil, None, base.schemaJson, base.counters)
+            liveDels, Nil, None, base.schema, base.counters)
         else
           ManifestRec(version, base.version, action, rows, "delta",
-            Nil, stamped, removedPaths, Nil, Nil, None, base.schemaJson,
+            Nil, stamped, removedPaths, Nil, Nil, None, base.schema,
             base.counters)
       if (tryCommit(table, r)) committed = version
     }
@@ -5143,17 +5052,15 @@ object TableLog {
   }
 
   /** The exact-coverage plan: Some(files to drop) iff EVERY live file
-    * is provably ALL or NONE, every ALL file carries a write-time row
-    * count, and no KEY sidecar is pending (deletion vectors compose —
-    * their positions subtract from the dropped files' live counts). */
+    * is provably ALL or NONE and no KEY sidecar is pending (deletion
+    * vectors compose — their positions subtract from the dropped
+    * files' live counts). */
   private def mdDeletePlan(s: Snapshot,
       p: MdPred): Option[Seq[FileEntry]] = {
     if (s.dels.exists(_.keyCol != DvKeyCol)) return None
     val covs = s.files.map(f => f -> mdCoverage(s, f, p))
     if (covs.exists(_._2 < 0)) return None
-    val drop = covs.collect { case (f, 1) => f }
-    if (drop.exists(_.rows < 0)) return None
-    Some(drop)
+    Some(covs.collect { case (f, 1) => f })
   }
 
   private[graft] def canMetadataDelete(table: String,
@@ -5178,7 +5085,7 @@ object TableLog {
     * itself). */
   /** Spec-pinnable counter: commits that went metadata-only (the COW
     * rewrite of a whole file leaves an identical manifest diff, so
-    * tests distinguish the PATH here, like `statFallbacks`). */
+    * tests distinguish the PATH here). */
   private[graft] val metadataDeletes =
     new java.util.concurrent.atomic.AtomicLong
 
@@ -5193,8 +5100,8 @@ object TableLog {
       val base = snapshotOrFail(table)
       val drop = mdDeletePlan(base, p).getOrElse(sys.error(
         s"metadata-only DELETE on $table: exact file coverage is no " +
-          "longer provable (a concurrent commit, a legacy entry " +
-          "without row counts, or a pending key sidecar) — retry the " +
+          "longer provable (a concurrent commit or a pending key " +
+          "sidecar) — retry the " +
           "statement, or compact() to refresh the manifest metadata"))
       if (drop.isEmpty) return base.version
       val dvs = base.dels.filter(_.keyCol == DvKeyCol)
@@ -5219,10 +5126,10 @@ object TableLog {
             liveDels.size < base.dels.size)
           ManifestRec(version, base.version, "delete", rows, "full",
             survivors, Nil, Nil, liveDels,
-            Nil, None, base.schemaJson, base.counters)
+            Nil, None, base.schema, base.counters)
         else
           ManifestRec(version, base.version, "delete", rows, "delta",
-            Nil, Nil, rmPaths, Nil, Nil, None, base.schemaJson,
+            Nil, Nil, rmPaths, Nil, Nil, None, base.schema,
             base.counters)
       if (tryCommit(table, r)) { committed = version
         metadataDeletes.incrementAndGet(); () }
@@ -5279,12 +5186,8 @@ object TableLog {
     val foldGate = spark.conf
       .getOption("spark.graft.rowLevel.foldDvShardBytes")
       .map(_.toLong).getOrElse(32L << 20)
-    // unknown sizes (bytes < 0) count as OVER-gate, not zero — an
-    // arbitrarily large unsized shard set must not ride the
-    // driver-side coalesce(1)
     val dvCommit =
-      if (dvEntries.size > 1 && dvEntries.forall(_.bytes >= 0L) &&
-          dvEntries.map(_.bytes).sum <= foldGate) {
+      if (dvEntries.size > 1 && dvEntries.map(_.bytes).sum <= foldGate) {
         import org.apache.spark.sql.functions.col
         val pairs = spark.read.schema(dvPairSchema).parquet(
           dvEntries.map(e => s"$table/${e.path}"): _*)
@@ -5322,10 +5225,10 @@ object TableLog {
         if (version % checkpointInterval == 0)
           ManifestRec(version, base.version, action, rows, "full",
             base.files ++ stamped, Nil, Nil, base.dels ++ newDels, Nil,
-            None, base.schemaJson, base.counters)
+            None, base.schema, base.counters)
         else
           ManifestRec(version, base.version, action, rows, "delta",
-            Nil, stamped, Nil, Nil, newDels, None, base.schemaJson,
+            Nil, stamped, Nil, Nil, newDels, None, base.schema,
             base.counters)
       if (tryCommit(table, r)) committed = version
     }
@@ -5359,8 +5262,8 @@ object TableLog {
     * to the driver and ships it with the plan (`loadDv` +
     * `addReferenceObj`), and nothing but a full rewrite shrinks it —
     * so repeated positional DML would otherwise grow every read plan
-    * without bound. Manifest-first arithmetic (`fileBytes`), zero
-    * filesystem calls on modern entries; past the bound, ONE
+    * without bound. Manifest arithmetic (each entry's write-time
+    * `bytes`), zero filesystem calls; past the bound, ONE
     * `morMaintain(maxSidecars = 0)` materializes all pending sidecars
     * and the table returns to a zero-overhead read. */
   private def maintainDvIfHeavy(spark: SparkSession, table: String,
@@ -5368,7 +5271,7 @@ object TableLog {
       bloomStatsCols: Seq[String], maxCount: Int = 64): Unit = {
     val s = snapshot(table).getOrElse(return)
     val dvs = s.dels.filter(_.keyCol == DvKeyCol)
-    val pend = dvs.map(d => fileBytes(table, d.file)).sum
+    val pend = dvs.map(d => d.file.bytes).sum
     // TWO-TIER guard (round 19). The BYTES bound is the real read-side
     // limit — every DV-bearing read ships the union of pending vectors
     // with the plan — and crossing it takes the full materializing
@@ -5525,12 +5428,12 @@ object TableLog {
           if (version % checkpointInterval == 0)
             ManifestRec(version, base.version, "update_mor", base.rows,
               "full", base.files ++ stamped, Nil, Nil,
-              base.dels ++ newDels, Nil, txnId, base.schemaJson,
+              base.dels ++ newDels, Nil, txnId, base.schema,
               base.counters)
           else
             ManifestRec(version, base.version, "update_mor", base.rows,
               "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-              base.schemaJson, base.counters)
+              base.schema, base.counters)
         if (tryCommit(table, r)) committed = version
         // CAS loss: re-read the base and redo; orphaned files are
         // invisible garbage until vacuum
@@ -5634,12 +5537,12 @@ object TableLog {
         if (version % checkpointInterval == 0)
           ManifestRec(version, base.version, action, rows,
             "full", base.files ++ stamped, Nil, Nil,
-            base.dels ++ newDels, Nil, txnId, base.schemaJson,
+            base.dels ++ newDels, Nil, txnId, base.schema,
             base.counters)
         else
           ManifestRec(version, base.version, action, rows,
             "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-            base.schemaJson, base.counters)
+            base.schema, base.counters)
       if (tryCommit(table, r)) committed = version
     }
     if (feedEnabled(table)) publishFeed(spark, table)
@@ -5700,7 +5603,7 @@ object TableLog {
           .getOrElse(col(k)).as(k)): _*)
       // schema audit: when/otherwise type coercion can silently widen
       // a column (long + lit(0.5) → double) — the data files would
-      // then disagree with the manifest's unchanged schemaJson and
+      // then disagree with the manifest's unchanged schema and
       // fail only at a LATER read. Refuse before writing, not cast:
       // an implicit cast back (0.5 as long = 0) corrupts silently.
       scan.schema.fields.zip(updated.schema.fields).foreach {
@@ -5727,10 +5630,10 @@ object TableLog {
           val rm = affectedPaths.toSet
           ManifestRec(version, base.version, "update", base.rows, "full",
             base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, txnId, base.schemaJson, base.counters)
+            base.dels, Nil, txnId, base.schema, base.counters)
         } else
           ManifestRec(version, base.version, "update", base.rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schemaJson,
+            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schema,
             base.counters)
       if (tryCommit(table, r)) committed = version
     }
@@ -6199,10 +6102,10 @@ object TableLog {
           val rm = affectedPaths.toSet
           ManifestRec(version, base.version, "merge", rows, "full",
             base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, txnId, base.schemaJson, base.counters)
+            base.dels, Nil, txnId, base.schema, base.counters)
         } else
           ManifestRec(version, base.version, "merge", rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schemaJson,
+            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schema,
             base.counters)
       if (tryCommit(table, r)) committed = version
     }

@@ -515,11 +515,8 @@ class LogScanSpec extends SparkSpec {
     val rel = TableLog.scan(spark, t).queryExecution.analyzed.collectFirst {
       case r: graft.plans.GraftLogRelation => r
     }.get
-    TableLog.statFallbacks.set(0)
     val fromManifest = rel.computeStats().sizeInBytes
     assert(fromManifest > 1, "stats must reflect the real footprint")
-    assert(TableLog.statFallbacks.get() == 0,
-      "computeStats must not stat data files on a bytes-carrying manifest")
     // the manifest sizes are the TRUE sizes
     val real = TableLog.snapshot(t).get.files.map(f =>
       java.nio.file.Files.size(java.nio.file.Paths.get(t, f.path))).sum
@@ -530,24 +527,18 @@ class LogScanSpec extends SparkSpec {
     TableLog.create(spark, dimT, spark.range(3)
       .select(($"id" + 100).as("k"), lit("d").as("name")).coalesce(1),
       statsCols = Seq("k"))
-    TableLog.statFallbacks.set(0)
     val j = TableLog.scan(spark, t).join(TableLog.scan(spark, dimT), Seq("k"))
     assert(filesScanned(j) >= 1)
-    assert(TableLog.statFallbacks.get() == 0,
-      "dyn-prune size gate must read manifest bytes, not stat files")
     assert(j.count() == 3)
-    // LEGACY manifest (pre-bytes entries): strip the `;#` segments —
-    // stats still answer, via the counted stat fallback
+    // an entry without its `;#` size is below the format floor: the
+    // scan refuses, naming the table, the version and the missing
+    // segment, instead of stat-ing files
     val mf = java.nio.file.Paths.get(t, "_log", "v00000001.manifest")
     val txt = java.nio.file.Files.readString(mf)
     java.nio.file.Files.writeString(mf, txt.replaceAll(";#[0-9]+", ""))
-    val rel2 = TableLog.scan(spark, t).queryExecution.analyzed.collectFirst {
-      case r: graft.plans.GraftLogRelation => r
-    }.get
-    TableLog.statFallbacks.set(0)
-    assert(rel2.computeStats().sizeInBytes == BigInt(real))
-    assert(TableLog.statFallbacks.get() == 8,
-      "legacy entries fall back to one stat each")
+    val e = intercept[RuntimeException](TableLog.scan(spark, t))
+    assert(e.getMessage.contains(s"manifest v1 of $t") &&
+      e.getMessage.contains(";#<bytes>"), e.getMessage)
   }
 
   test("scanVersion/scanAsOf: declarative time travel keeps pruning and each version's own schema") {
@@ -576,10 +567,9 @@ class LogScanSpec extends SparkSpec {
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
 
-  test("legacy (schema-less) manifests never claim the _version " +
-      "metadata fast path — a DATA column named _version keeps data " +
-      "semantics") {
-    val t = tmp("graft_log_legacy")
+  test("a DATA column named _version keeps data semantics over the " +
+      "metadata fast path") {
+    val t = tmp("graft_log_dataversion")
     // a DATA column literally named `_version`, values DISJOINT from
     // the commit versions (1, 2) so any manifest-arithmetic answer is
     // provably wrong
@@ -591,30 +581,11 @@ class LogScanSpec extends SparkSpec {
       spark.range(100L, 200L, 1L, 2)
         .select($"id".as("k"), lit(99L).as("_version")),
       statsCols = Seq("k", "_version"))
-    // strip the recorded schema from every manifest — the legacy
-    // (pre-schema) log format, where the engine cannot prove the
-    // parquet data lacks a real `_version` column
-    val logDir = java.nio.file.Paths.get(t, "_log")
-    import scala.jdk.CollectionConverters._
-    val ms = java.nio.file.Files.list(logDir).iterator().asScala.toList
-    for (p <- ms if p.toString.endsWith(".manifest")) {
-      val kept = java.nio.file.Files.readAllLines(p).asScala
-        .filterNot(_.startsWith("schema=")).asJava
-      java.nio.file.Files.write(p, kept)
-      ()
-    }
-    val s = TableLog.snapshot(t).get
-    assert(s.schemaJson.isEmpty, "strip failed — table is not legacy")
-    // the catalog-read shape: a GraftLogRelation whose output is the
-    // footer-inferred schema (which CONTAINS the data `_version`)
-    graft.plans.PruneLogScan.install(spark)
-    val inferred = TableLog.read(spark, t).schema
-    assert(inferred.fieldNames.contains("_version"))
-    val out = inferred.fields.toIndexedSeq.map(f =>
-      org.apache.spark.sql.catalyst.expressions.AttributeReference(
-        f.name, f.dataType, f.nullable)())
-    def df = org.apache.spark.sql.graft.Bridge.ofRows(spark,
-      graft.plans.GraftLogRelation(t, s, out))
+    // the recorded schema claims the name, so the scan reads the data
+    // column and the pruner must not treat it as the commit version
+    assert(TableLog.snapshot(t).get.schema.struct.fieldNames
+      .contains("_version"))
+    def df = TableLog.scan(spark, t)
     // extremes: data values (77/99), never the commit versions (1/2)
     val mx = df.agg(max("_version").as("mx"), min("_version").as("mn")).head
     assert(mx.getLong(0) == 99L && mx.getLong(1) == 77L)

@@ -274,4 +274,83 @@ class PlanPropertiesSpec extends SparkSpec {
     assert(after.dels.count(_.keyCol == "__pos__") == 1,
       "MOR delete must land exactly one folded DV sidecar")
   }
+
+  /** Row-level and predicate-overwrite pruning run through the
+    * declarative face's tree pruner: an OR of equalities, an equality
+    * on a bloom-only column and an OR overwrite filter each plan only
+    * the files whose stats can match. The delta route gets no runtime
+    * group filter, so the [[graft.catalog.RowLevelDiag]] tap's
+    * `planned:` count is exactly what the pushed filters pruned; the
+    * overwrite's is the files it replaced. The table ends equal to a
+    * plain-collection model of the three statements. */
+  test("row-level DELETE/UPDATE and a predicate overwrite prune by OR " +
+      "and bloom through the tree pruner") {
+    import graft.catalog.RowLevelDiag
+    import graft.sinks.TableLog
+    import spark.implicits._
+    val wh = java.nio.file.Files
+      .createTempDirectory("graft_plan_rlprune").toString
+    val cat = "graft_rlprune"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.catalog.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.ns")
+    spark.sql(s"CREATE TABLE $cat.ns.t (k BIGINT, tag STRING, v BIGINT) " +
+      "TBLPROPERTIES ('statsCols' = 'k', 'bloomStatsCols' = 'tag', " +
+      "'rowLevelMode' = 'mor')")
+    val path = s"$wh/ns/t"
+    TableLog.append(spark, path, spark.range(8000).select($"id".as("k"),
+        concat(lit("g"), $"id".cast("string")).as("tag"),
+        ($"id" % 7).as("v")).repartitionByRange(8, $"k"),
+      statsCols = Seq("k"), bloomStatsCols = Seq("tag"))
+    val total = TableLog.snapshot(path).get.files.size
+    assert(total == 8)
+    var model = (0L until 8000L).map(k => (k, s"g$k", k % 7))
+    def filesHolding(ks: Long*): Int =
+      TableLog.snapshot(path).get.files.count(f =>
+        f.stats.find(_.col == "k").exists(st =>
+          ks.exists(k => st.min <= k && k <= st.max)))
+    def planned(stmt: String): Int = {
+      RowLevelDiag.drain()
+      spark.sql(stmt)
+      val ev = RowLevelDiag.drain()
+        .filter(e => e.split(":", 3).lift(2).contains(path))
+      val ns = ev.filter(_.startsWith("planned:"))
+        .map(_.split(":", 3)(1).toInt)
+      assert(ns.nonEmpty, s"no row-level scan planned: $stmt; events: $ev")
+      ns.max
+    }
+    def sameAsModel(): Unit =
+      assert(spark.sql(s"SELECT k, tag, v FROM $cat.ns.t")
+        .as[(Long, String, Long)].collect().sorted.toSeq == model.sorted)
+    // an OR of equalities prunes like the IN-list it is
+    val orFiles = filesHolding(1L, 7000L)
+    assert(orFiles < total)
+    val nDel = planned(s"DELETE FROM $cat.ns.t WHERE k = 1 OR k = 7000")
+    assert(nDel == orFiles, s"DELETE planned $nDel files, " +
+      s"$orFiles can hold k = 1 or k = 7000 (of $total)")
+    model = model.filterNot(r => r._1 == 1L || r._1 == 7000L)
+    sameAsModel()
+    // an equality on a column with blooms but no range stats
+    val tagFiles = filesHolding(4321L)
+    val nUpd = planned(s"UPDATE $cat.ns.t SET v = -1 WHERE tag = 'g4321'")
+    assert(nUpd >= tagFiles && nUpd < total,
+      s"UPDATE planned $nUpd of $total files for one tag")
+    model = model.map(r => if (r._2 == "g4321") (r._1, r._2, -1L) else r)
+    sameAsModel()
+    // a predicate overwrite whose filter is an OR replaces only the
+    // files it can touch
+    val before = TableLog.snapshot(path).get.files.map(_.path).toSet
+    val owFiles = filesHolding(2L, 6500L)
+    assert(owFiles < before.size)
+    val fresh = Seq((2L, "n2", 20L), (6500L, "n6500", 65L))
+    fresh.toDF("k", "tag", "v").writeTo(s"$cat.ns.t")
+      .overwrite($"k" === 2L || $"k" === 6500L)
+    val after = TableLog.snapshot(path).get.files.map(_.path).toSet
+    assert((before -- after).size == owFiles,
+      s"overwrite replaced ${(before -- after).size} files, $owFiles " +
+        s"can hold k = 2 or k = 6500 (of ${before.size})")
+    model = model.filterNot(r => r._1 == 2L || r._1 == 6500L) ++ fresh
+    sameAsModel()
+  }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.operators.{CnaOps, MutationOps}
+import graft.pipelines.Pipelines
+import graft.sinks.ParquetSink
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -230,11 +232,28 @@ class PropertySpec extends SparkSpec {
   }
 
   test("union-all additivity: combine preserves row counts") {
-    check("union", Prop.forAllNoShrink(
-      Gen.choose(0, 50), Gen.choose(0, 50)) { (a, b) =>
-      val d1 = (0 until a).map(i => (i.toLong, s"a$i")).toDF("id", "v")
-      val d2 = (0 until b).map(i => (i.toLong, s"b$i")).toDF("id", "v")
-      d1.unionByName(d2).count() == a.toLong + b
+    // 1–4 per-study inputs of 0–50 rows each, at least one of them
+    // empty, written by the importer's own sink; the study named last
+    // is written first, so input-path order is not write order
+    val sizesGen = for {
+      n <- Gen.choose(1, 4)
+      sizes <- Gen.listOfN(n, Gen.choose(0, 50))
+      empty <- Gen.choose(0, n - 1)
+    } yield sizes.updated(empty, 0)
+    check("union", Prop.forAllNoShrink(sizesGen) { sizes =>
+      val dir = java.nio.file.Files.createTempDirectory("graft_prop_union")
+        .toString
+      val inputs = sizes.zipWithIndex.map { case (rows, i) =>
+        val path = s"$dir/s${sizes.size - i}_t.parquet"
+        ParquetSink.write(spark.range(rows)
+          .select(lit(i.toLong).as("study"), col("id")), path,
+          singleFile = true)
+        path -> (0L until rows.toLong).map(r => (i.toLong, r))
+      }
+      val Seq(out) = Pipelines.combine(spark, dir, "combined", Seq("t"))
+      val got = spark.read.parquet(out).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      got.size == sizes.sum && got == inputs.sortBy(_._1).flatMap(_._2)
     })
   }
 

@@ -1377,6 +1377,29 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.publishBranch(spark, src, br3) == f3)
   }
 
+  test("a clone carries its source's txn index: after publishBranch a " +
+      "replayed pre-fork batch still skips") {
+    val src = tmp("graft_log_wap_txn_src")
+    val br = tmp("graft_log_wap_txn_br")
+    TableLog.append(spark, src, spark.range(10).toDF("k"),
+      txnId = Some("ingest#1"))                                   // v1
+    TableLog.append(spark, src, spark.range(10, 20).toDF("k"),
+      txnId = Some("ingest#2"))                                   // v2
+    TableLog.cloneTable(spark, src, br)
+    TableLog.append(spark, br, spark.range(20, 30).toDF("k"))     // v3
+    assert(TableLog.publishBranch(spark, src, br) == 3)
+    // the stream replays both pre-fork batches: each finds its commit
+    assert(TableLog.append(spark, src, spark.range(10).toDF("k"),
+      txnId = Some("ingest#1")) == 1)
+    assert(TableLog.append(spark, src, spark.range(10, 20).toDF("k"),
+      txnId = Some("ingest#2")) == 2)
+    assert(TableLog.read(spark, src).count() == 30)
+    // its next batch is new
+    assert(TableLog.append(spark, src, spark.range(30, 40).toDF("k"),
+      txnId = Some("ingest#3")) == 4)
+    assert(TableLog.read(spark, src).count() == 40)
+  }
+
   test("mergeBranch: three-way merge folds branch changes into an advanced src; conflicts refuse") {
     import java.nio.file.{Files, Paths}
     val src = tmp("graft_log_m3_src")
@@ -2253,11 +2276,10 @@ class TableLogSpec extends SparkSpec {
     val bigSize = java.nio.file.Files.size(
       java.nio.file.Paths.get(t, bigPath))
     val sumBefore = TableLog.read(spark, t).agg(sum("v")).head.getLong(0)
-    TableLog.statFallbacks.set(0)
+    // auto-OPTIMIZE sizes from the manifest's write-time bytes
+    assert(before.files.find(_.path == bigPath).get.bytes == bigSize)
     val v = TableLog.compactSmall(spark, t, smallBytes = bigSize / 2,
       statsCols = Seq("k"))
-    assert(TableLog.statFallbacks.get() == 0,
-      "auto-OPTIMIZE sizing must read manifest bytes, not stat O(table)")
     val after = TableLog.snapshot(t).get
     val afterPaths = after.files.map(_.path).toSet
     assert(afterPaths.contains(bigPath), "big file must carry by reference")
@@ -2567,10 +2589,7 @@ class TableLogSpec extends SparkSpec {
     snap.files.foreach(f => assert(f.bytes ==
       java.nio.file.Files.size(java.nio.file.Paths.get(t, f.path)),
       s"manifest bytes must match disk for ${f.path}"))
-    TableLog.statFallbacks.set(0)
     val d = TableLog.detail(spark, t).head
-    assert(TableLog.statFallbacks.get() == 0,
-      "detail must not stat data files on a bytes-carrying manifest")
     assert(d.getLong(0) == 5 && d.getLong(1) == 149)
     assert(d.getLong(3) == snap.files.map(_.bytes).sum, "bytes")
     assert(d.getLong(4) == 1 && d.getLong(6) == 1)
@@ -3296,30 +3315,62 @@ class TableLogSpec extends SparkSpec {
       Map("docs" -> 15L, "bits" -> 9L))
   }
 
-  test("manifest format gate: a manifest stamped newer than this " +
-      "reader refuses loudly; unstamped (legacy) manifests parse") {
+  test("manifest format gate: newer, older, unstamped or stat-less " +
+      "manifests refuse") {
     val t = tmp("graft_log_format")
     TableLog.create(spark, t, spark.range(10).toDF("k"))
+    TableLog.append(spark, t, spark.range(10, 20).toDF("k"))
     val logDir = java.nio.file.Paths.get(t, "_log")
-    val v1 = logDir.resolve("v00000001.manifest")
+    val v2 = logDir.resolve("v00000002.manifest")
     // every manifest this build writes is stamped with the current
-    // dialect
-    val body = new String(java.nio.file.Files.readAllBytes(v1),
+    // dialect and carries every field the reader requires
+    val body = new String(java.nio.file.Files.readAllBytes(v2),
       java.nio.charset.StandardCharsets.UTF_8)
     assert(body.startsWith(s"format=${TableLog.ManifestFormat}\n"))
+    Seq("kind=", "ts=", "schema=", ";#", ";$").foreach(k =>
+      assert(body.contains(k), s"v2 lacks $k:\n$body"))
+    def tree(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(t)
+      val w = java.nio.file.Files.walk(root)
+      try w.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally w.close()
+    }
+    // each variant refuses on read AND on write, naming the table, the
+    // version and what is missing, and leaves every file as it was
+    def refuses(variant: String, missing: String): Unit = {
+      java.nio.file.Files.write(v2,
+        variant.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      val before = tree()
+      val reads = intercept[RuntimeException](TableLog.snapshot(t))
+      val writes = intercept[RuntimeException](
+        TableLog.append(spark, t, spark.range(20, 30).toDF("k")))
+      Seq(reads, writes).foreach { e =>
+        assert(e.getMessage.contains(s"manifest v2 of $t"), e.getMessage)
+        assert(e.getMessage.contains(missing), e.getMessage)
+      }
+      assert(tree() == before, s"a refused read or write changed $t")
+    }
     // a future-dialect manifest refuses instead of misparsing (the
     // entry codec is NOT forward-compatible: an unknown segment is an
     // AIOOBE at best, a wrong value at worst)
-    java.nio.file.Files.write(v1,
-      body.replaceFirst("format=\\d+", "format=9999")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val e = intercept[RuntimeException](TableLog.snapshot(t))
-    assert(e.getMessage.contains("format 9999"), e.getMessage)
-    // an UNSTAMPED manifest (pre-gate legacy) still parses
-    java.nio.file.Files.write(v1,
-      body.replaceFirst("format=\\d+\n", "")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    assert(TableLog.snapshot(t).get.rows == 10L)
+    refuses(body.replaceFirst("format=\\d+", "format=9999"),
+      "is format 9999, newer")
+    // below the floor: an unstamped manifest, one stamped format 1, and
+    // ones missing a field this dialect always writes
+    refuses(body.replaceFirst("format=\\d+\n", ""), "is unstamped")
+    refuses(body.replaceFirst("format=\\d+", "format=1"),
+      "is format 1, older")
+    refuses(body.replaceFirst("schema=[^\n]*\n", ""), "schema=")
+    refuses(body.replaceFirst("ts=[^\n]*\n", ""), "ts=")
+    refuses(body.replaceAll(";#[0-9]+", ""), ";#<bytes>")
+    refuses(body.replaceAll(";\\$[0-9]+", ""), ";$<rows>")
+    // the untouched manifest reads again: nothing was lost
+    java.nio.file.Files.write(v2,
+      body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    assert(TableLog.read(spark, t).count() == 20L)
   }
 
   test("racing replaceWhere × 2 (disjoint slices) + append: every " +
