@@ -327,12 +327,10 @@ object SparkEntry {
     tl.create(s, t, li.where(col("l_orderkey") % 30 < 15).coalesce(1),
       statsCols = Seq("l_orderkey"))
     (15 to 18).foreach(i => tl.append(s, t,
-      li.where(col("l_orderkey") % 30 === i).coalesce(1),
-      statsCols = Seq("l_orderkey")))
+      li.where(col("l_orderkey") % 30 === i).coalesce(1)))
     val big = java.nio.file.Files.size(java.nio.file.Paths.get(t,
       tl.snapshot(t).get.files.minBy(_.ver).path))
-    tl.compactSmall(s, t, smallBytes = math.max(2L, big / 2),
-      statsCols = Seq("l_orderkey"))
+    tl.compactSmall(s, t, smallBytes = math.max(2L, big / 2))
     tl.read(s, t).groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"))
@@ -435,7 +433,7 @@ object SparkEntry {
     val tl = graft.sinks.TableLog
     tl.create(s, t, base.repartitionByRange(8, col("o_orderkey")),
       statsCols = Seq("o_orderkey"))
-    tl.registerSqlTable(s, "lake65", t, statsCols = Seq("o_orderkey"))
+    tl.registerSqlTable(s, "lake65", t)
     val maxKey = base.agg(max(col("o_orderkey"))).head.getLong(0) + 1L
     val upd = base.where(col("o_orderkey") % 7 === 2)
       .select(col("o_orderkey"), (col("price_c") + 500).as("price_c"),
@@ -476,9 +474,8 @@ object SparkEntry {
         col("o_orderpriority").as("priority"))
     val tl = graft.sinks.TableLog
     tl.create(s, t, base.repartition(8, col("priority")),
-      statsCols = Seq("o_orderkey"))
-    tl.registerSqlTable(s, "lake68", t, statsCols = Seq("o_orderkey"),
-      morKey = Some("o_orderkey"))
+      statsCols = Seq("o_orderkey"), morKey = Some("o_orderkey"))
+    tl.registerSqlTable(s, "lake68", t)
     val maxKey = base.agg(max(col("o_orderkey"))).head.getLong(0) + 1L
     val upd = base.where(col("o_orderkey") % 7 === 2)
       .select(col("o_orderkey"), (col("price_c") + 500).as("price_c"),
@@ -521,7 +518,7 @@ object SparkEntry {
     val tl = graft.sinks.TableLog
     tl.create(s, t, base.repartitionByRange(8, col("o_orderkey")),
       statsCols = Seq("o_orderkey"))
-    tl.registerSqlTable(s, "lake69", t, statsCols = Seq("o_orderkey"))
+    tl.registerSqlTable(s, "lake69", t)
     tl.sql(s, "INSERT INTO lake69 VALUES " +
       "(9000001, 111, 'V'), (9000002, 222, 'V')")
     tl.sql(s, "INSERT INTO lake69 (priority, price_c, o_orderkey) " +
@@ -566,8 +563,7 @@ object SparkEntry {
       ((col("event_id") * lit(2654435761L)) % 256).as("b"),
       col("event_type"))
     tl.create(s, t, base)
-    tl.zOrder(s, t, 5, "a", (0L, 255L), "b", (0L, 255L),
-      statsCols = Seq("a", "b"))
+    tl.zOrder(s, t, 5, "a", (0L, 255L), "b", (0L, 255L))
     val snap = tl.snapshot(t).get
     val corners = Seq((0L, 40L, 64L, 100L), (64L, 100L, 0L, 40L),
       (200L, 250L, 10L, 60L), (10L, 60L, 200L, 250L))
@@ -592,7 +588,7 @@ object SparkEntry {
 
   /** HILBERT clustering under the oracle — `o70`'s curve-swapped twin:
     * a FULL-RESOLUTION 65536² derived grid laid out by
-    * `TableLog.hilbertOrder` (the unit-step curve `tools.CurveStats`
+    * `TableLog.hilbertOrder` (the unit-step curve DEVNOTES round 15
     * measured at 10–22% fewer files per box than Morton at realistic
     * non-power-of-4 file counts — per-box winners vary at tiny file
     * counts, so the advantage is pinned by that measurement, not
@@ -614,8 +610,7 @@ object SparkEntry {
       ((col("event_id") * lit(2654435761L)) % 65536).as("b"),
       col("event_type"))
     tl.create(s, t, base)
-    tl.hilbertOrder(s, t, 7, "a", (0L, 65535L), "b", (0L, 65535L),
-      statsCols = Seq("a", "b"))
+    tl.hilbertOrder(s, t, 7, "a", (0L, 65535L), "b", (0L, 65535L))
     val snap = tl.snapshot(t).get
     val boxes = Seq((0L, 199L, 0L, 199L), (65300L, 65500L, 100L, 300L),
       (200L, 399L, 65200L, 65400L), (30000L, 30199L, 30000L, 30199L),
@@ -670,8 +665,7 @@ object SparkEntry {
       ((col("event_id") * lit(2246822519L)) % 64).as("c"),
       col("event_type"))
     tl.create(s, t, base)
-    tl.zOrder3(s, t, 7, "a", (0L, 63L), "b", (0L, 63L), "c", (0L, 63L),
-      statsCols = Seq("a", "b", "c"))
+    tl.zOrder3(s, t, 7, "a", (0L, 63L), "b", (0L, 63L), "c", (0L, 63L))
     val snap = tl.snapshot(t).get
     def perCol(al: Long, ah: Long, bl: Long, bh: Long, cl: Long,
         ch: Long) =
@@ -700,7 +694,7 @@ object SparkEntry {
   }
 
   /** HILBERT-3 layout under the oracle — the adjudicated 3-D
-    * clustering verb (tools.CurveStats3: 11–21% fewer files opened
+    * clustering verb (DEVNOTES round 16: 11–21% fewer files opened
     * than Morton-3 on selective boxes at non-power-of-8 file counts).
     * Cluster the derived 64³ grid into THREE files (each run spans
     * ~2.67 octants, so some bounding box covers a corner octant its
@@ -720,7 +714,7 @@ object SparkEntry {
       col("event_type"))
     tl.create(s, t, base)
     tl.hilbertOrder3(s, t, 3, "a", (0L, 63L), "b", (0L, 63L),
-      "c", (0L, 63L), statsCols = Seq("a", "b", "c"))
+      "c", (0L, 63L))
     val snap = tl.snapshot(t).get
     assert(snap.files.forall(_.stats.exists(_.col.startsWith("h3|"))),
       "o83_h3: every clustered file must carry the h3 spec")
@@ -769,20 +763,16 @@ object SparkEntry {
       .select((col("event_id") % 256).as("a"),
         ((col("event_id") * lit(2654435761L)) % 256).as("b"),
         col("event_type"))
-    tl.create(s, t, grid(0))
-    tl.zOrder(s, t, 5, "a", (0L, 255L), "b", (0L, 255L),
-      statsCols = Seq("a", "b"))
+    tl.create(s, t, grid(0), statsCols = Seq("a", "b"))
+    tl.zOrder(s, t, 5, "a", (0L, 255L), "b", (0L, 255L))
     val clusteredPaths = tl.snapshot(t).get.files.map(_.path).toSet
-    tl.append(s, t, grid(1).where(col("a") < 128),
-      statsCols = Seq("a", "b"))
-    tl.append(s, t, grid(1).where(col("a") >= 128),
-      statsCols = Seq("a", "b"))
+    tl.append(s, t, grid(1).where(col("a") < 128))
+    tl.append(s, t, grid(1).where(col("a") >= 128))
     val pre = tl.snapshot(t).get
     assert(pre.files.count(f =>
       !f.stats.exists(_.col.startsWith("z2|"))) >= 2,
       "o72: appends must land unclustered")
-    tl.zOrderMaintain(s, t, targetBytes = 64 << 10,
-      statsCols = Seq("a", "b"))
+    tl.zOrderMaintain(s, t, targetBytes = 64 << 10)
     val post = tl.snapshot(t).get
     assert(post.files.forall(_.stats.exists(_.col.startsWith("z2|"))),
       "o72: every file must carry the spec after maintenance")
@@ -814,13 +804,12 @@ object SparkEntry {
     tl.create(s, t, base.repartitionByRange(6, col("o_orderkey")),
       statsCols = Seq("o_orderkey"))                              // v1
     tl.tagVersion(t, "baseline", 1)
-    tl.registerSqlTable(s, "lake73", t, statsCols = Seq("o_orderkey"))
+    tl.registerSqlTable(s, "lake73", t)
     tl.sql(s, "DELETE FROM lake73 WHERE o_orderkey BETWEEN 3000 AND 12000")
-    tl.compact(s, t, targetBytes = 1L << 30,
-      statsCols = Seq("o_orderkey"))
+    tl.compact(s, t, targetBytes = 1L << 30)
     tl.vacuum(s, t, keepVersions = 1, olderThanMs = 0)
     // the view pinned a pre-compact snapshot; re-register post-vacuum
-    tl.registerSqlTable(s, "lake73", t, statsCols = Seq("o_orderkey"))
+    tl.registerSqlTable(s, "lake73", t)
     tl.sql(s, """
       SELECT 'live' AS state, CAST(count(*) AS BIGINT) AS n_rows,
         CAST(sum(price_c) AS BIGINT) AS sum_price_c
@@ -1107,8 +1096,7 @@ object SparkEntry {
         col("o_orderpriority").as("priority"))
     // keys ≡ 7 (mod 30) are all odd — split the slice on mod 60
     // (7 vs 37) so BOTH waves are non-empty
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 7),
-      statsCols = Seq("o_orderkey"))
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 7))
     def run(): Unit = {
       val q = s.readStream.table(s"$cat.sr.bronze")
         .writeStream.option("checkpointLocation", ckpt)
@@ -1116,8 +1104,7 @@ object SparkEntry {
       try q.processAllAvailable() finally q.stop()
     }
     run() // wave 1: the pre-stream rows (startingVersion=earliest)
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 37),
-      statsCols = Seq("o_orderkey"))
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 37))
     run() // RESTART from the checkpoint: exactly the unseen commit
     assert(tl.latestVersion(silver) == 3,
       "o82: create + exactly one epoch commit per run — a replayed " +
@@ -1169,8 +1156,7 @@ object SparkEntry {
     val base = T(s, dir, "orders").where(col("o_orderkey") % 30 === 8)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 8),
-      statsCols = Seq("o_orderkey"))
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 8))
     def drain(): Unit = {
       val q = s.readStream.table(s"$cat.ch.bronze__changes")
         .writeStream.option("checkpointLocation", ckpt)
@@ -1180,10 +1166,8 @@ object SparkEntry {
     }
     drain() // wave 1
     // typed-captured COW delete + the second insert wave
-    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000,
-      statsCols = Seq("o_orderkey"))
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 38),
-      statsCols = Seq("o_orderkey"))
+    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000)
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 38))
     drain() // RESTART: exactly the unseen feed versions
     s.sql(s"""
       SELECT _change_type, priority,
@@ -1223,7 +1207,7 @@ object SparkEntry {
     val base = T(s, dir, "orders").where(col("o_orderkey") % 30 === 29)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
-    tl.append(s, path, base, statsCols = Seq("o_orderkey"))    // v2
+    tl.append(s, path, base)    // v2
     val v2 = tl.latestVersion(path)
     base.where(col("o_orderkey").between(5000, 15000))
       .withColumn("price_c", col("price_c") + 100)
@@ -1284,8 +1268,7 @@ object SparkEntry {
     val base = T(s, dir, "orders")
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
-    tl.append(s, path, base.where(col("o_orderkey") % 30 === 24),
-      statsCols = Seq("o_orderkey"))                              // v2
+    tl.append(s, path, base.where(col("o_orderkey") % 30 === 24))  // v2
     val v2 = tl.latestVersion(path)
     base.where(col("o_orderkey") % 60 === 24 ||
         col("o_orderkey") % 30 === 26)
@@ -1341,16 +1324,12 @@ object SparkEntry {
     val base = T(s, dir, "orders").where(col("o_orderkey") % 30 === 19)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 19),
-      statsCols = Seq("o_orderkey"))                              // v2
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 19))  // v2
     tl.tagVersion(bronze, "wave1", 2L)
-    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000,
-      statsCols = Seq("o_orderkey"))                              // v3
+    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000)           // v3
     tl.updateMor(s, bronze, "o_orderkey", "o_orderkey", 10000, 20000,
-      Map("price_c" -> (col("price_c") + 77)),
-      statsCols = Seq("o_orderkey"))                              // v4
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 49),
-      statsCols = Seq("o_orderkey"))                              // v5
+      Map("price_c" -> (col("price_c") + 77)))                    // v4
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 49))  // v5
     def window(face: String, opts: (String, String)*): DataFrame = {
       var r = s.read
       opts.foreach { case (k, v) => r = r.option(k, v) }
@@ -1418,8 +1397,7 @@ object SparkEntry {
     val base = T(s, dir, "orders").where(col("o_orderkey") % 30 === 9)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 9),
-      statsCols = Seq("o_orderkey"))                              // v2
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 9))  // v2
     def drain(): Unit = {
       val q = s.readStream.option("readChangeFeed", "true")
         .table(s"$cat.rcf.bronze")
@@ -1429,13 +1407,10 @@ object SparkEntry {
       assert(q.awaitTermination(180000), "o87: drain must terminate")
     }
     drain() // run 1: wave 1 as typed inserts
-    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000,
-      statsCols = Seq("o_orderkey"))                              // v3
+    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000)           // v3
     tl.updateMor(s, bronze, "o_orderkey", "o_orderkey", 10000, 20000,
-      Map("price_c" -> (col("price_c") + 55)),
-      statsCols = Seq("o_orderkey"))                              // v4
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 39),
-      statsCols = Seq("o_orderkey"))                              // v5
+      Map("price_c" -> (col("price_c") + 55)))                    // v4
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 39))  // v5
     drain() // RESTART: exactly the unseen commits
     val n2 = s.sql(s"SELECT count(*) FROM $cat.rcf.sink")
       .head.getLong(0)
@@ -1445,7 +1420,7 @@ object SparkEntry {
       "o87: a drain with no new commits must deliver nothing")
     // the typed log feeds the existing keyed apply machinery
     tl.applyCdc(s, silver, s.sql(s"SELECT * FROM $cat.rcf.sink"),
-      "o_orderkey", statsCols = Seq("o_orderkey"))
+      "o_orderkey")
     s.sql(s"SELECT * FROM $cat.rcf.sink")
       .groupBy(lit("log").as("face"),
         col("_change_type").as("grp"))
@@ -1492,8 +1467,7 @@ object SparkEntry {
     val base = T(s, dir, "orders").where(col("o_orderkey") % 30 === 21)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 21),
-      statsCols = Seq("o_orderkey"))                              // v2
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 21))  // v2
     def drain(): Unit = {
       val q = s.readStream.option("readChangeFeed", "true")
         .table(s"$cat.rcf.bronze")
@@ -1506,10 +1480,8 @@ object SparkEntry {
       assert(q.awaitTermination(180000), "o91: drain must terminate")
     }
     drain() // run 1: wave 1 as typed inserts
-    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000,
-      statsCols = Seq("o_orderkey"))                              // v3
-    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 51),
-      statsCols = Seq("o_orderkey"))                              // v4
+    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000)           // v3
+    tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 51))  // v4
     drain() // RESTART from the same checkpoint: only unseen versions
     val n2 = s.read.parquet(out).count()
     drain() // nothing new
@@ -1548,12 +1520,9 @@ object SparkEntry {
     val base = T(s0, dir, "orders").where(col("o_orderkey") % 30 === 27)
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
-    tl.append(s0, bronze, base.where(col("o_orderkey") % 60 === 27),
-      statsCols = Seq("o_orderkey"))                              // v2
-    tl.deleteWhere(s0, bronze, "o_orderkey", 3000, 12000,
-      statsCols = Seq("o_orderkey"))                              // v3
-    tl.append(s0, bronze, base.where(col("o_orderkey") % 60 === 57),
-      statsCols = Seq("o_orderkey"))                              // v4
+    tl.append(s0, bronze, base.where(col("o_orderkey") % 60 === 27))  // v2
+    tl.deleteWhere(s0, bronze, "o_orderkey", 3000, 12000)         // v3
+    tl.append(s0, bronze, base.where(col("o_orderkey") % 60 === 57))  // v4
     // …and read the feed on a FRESH session with no installed rules
     val s = s0.newSession()
     assert(s.experimental.extraOptimizations.isEmpty,
@@ -1610,8 +1579,7 @@ object SparkEntry {
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
     // 8 k-disjoint files: the layout where a key-band IN-set prunes
-    tl.append(s, path, base.repartitionByRange(8, col("o_orderkey")),
-      statsCols = Seq("o_orderkey"))
+    tl.append(s, path, base.repartitionByRange(8, col("o_orderkey")))
     val before = tl.snapshot(path).get
     // the deleted band = the bottom third of the key domain, derived
     // from the data so every SF prunes (the top range files sit
@@ -1744,8 +1712,7 @@ object SparkEntry {
         (col("o_orderkey") % 90).as("bucket"))
     // one file per bucket: min = max = bucket, the exactness witness
     Seq(22, 52, 82).foreach(b => tl.append(s, path,
-      base.where(col("bucket") === b).coalesce(1),
-      statsCols = Seq("o_orderkey", "bucket")))
+      base.where(col("bucket") === b).coalesce(1)))
     val before = tl.snapshot(path).get.files.map(_.path).toSet
     assert(before.size == 3, s"o86: three bucket files, got $before")
     val md0 = tl.metadataDeletes.get()
@@ -1792,16 +1759,13 @@ object SparkEntry {
     // SRC ADVANCES (ff publish is now impossible)…
     tl.append(s, src, base.where(col("o_orderkey") % 97 === 3)
       .select((col("o_orderkey") + 60000000L).as("o_orderkey"),
-        col("price_c"), lit("S").as("priority")),
-      statsCols = Seq("o_orderkey"))
+        col("price_c"), lit("S").as("priority")))
     // …while the branch deletes a range and appends derived rows
-    tl.deleteWhere(s, br, "o_orderkey", 3000, 9000,
-      statsCols = Seq("o_orderkey"))
+    tl.deleteWhere(s, br, "o_orderkey", 3000, 9000)
     tl.append(s, br, base.where(col("o_orderkey") % 97 === 5)
       .select((col("o_orderkey") + 70000000L).as("o_orderkey"),
-        col("price_c"), lit("B").as("priority")),
-      statsCols = Seq("o_orderkey"))
-    tl.registerSqlTable(s, "lake77", src, statsCols = Seq("o_orderkey"))
+        col("price_c"), lit("B").as("priority")))
+    tl.registerSqlTable(s, "lake77", src)
     tl.sql(s, s"CALL merge_branch('lake77', '$br', 'o_orderkey')")
     val live = tl.scan(s, src)
     val asOf = tl.scanVersion(s, src, fork)
@@ -1836,12 +1800,10 @@ object SparkEntry {
       statsCols = Seq("o_orderkey"))                              // v1
     val fork = tl.cloneTable(s, src, br)
     val srcRows = tl.snapshot(src).get.rows
-    tl.deleteWhere(s, br, "o_orderkey", 4000, 10000,
-      statsCols = Seq("o_orderkey"))
+    tl.deleteWhere(s, br, "o_orderkey", 4000, 10000)
     tl.append(s, br, base.where(col("o_orderkey") % 97 === 1)
       .select((col("o_orderkey") + 50000000L).as("o_orderkey"),
-        col("price_c"), lit("W").as("priority")),
-      statsCols = Seq("o_orderkey"))
+        col("price_c"), lit("W").as("priority")))
     assert(tl.snapshot(src).get.rows == srcRows &&
       tl.latestVersion(src) == fork,
       "o75: src must be untouched while the branch diverges")
@@ -1876,11 +1838,11 @@ object SparkEntry {
     tl.create(s, src, o.where(col("o_orderkey") % 20 === 6)
       .repartitionByRange(4, col("o_orderkey")), statsCols = Seq("o_orderkey"))
     tl.append(s, src, o.where(col("o_orderkey") % 20 === 7)
-      .repartitionByRange(4, col("o_orderkey")), statsCols = Seq("o_orderkey"))
+      .repartitionByRange(4, col("o_orderkey")))
     tl.cloneTable(s, src, dst)
     tl.deleteWhere(s, src, "o_orderkey", 1L, 3000L)
     tl.append(s, dst, o.where(col("o_orderkey") % 20 === 8)
-      .repartitionByRange(4, col("o_orderkey")), statsCols = Seq("o_orderkey"))
+      .repartitionByRange(4, col("o_orderkey")))
     def agg(t: String, side: String) =
       tl.read(s, t).groupBy(lit(side).as("side"))
         .agg(count(lit(1)).as("n_rows"), sum("price_c").as("sum_c"),
@@ -1904,14 +1866,14 @@ object SparkEntry {
     tl.create(s, t, li.where(col("l_orderkey") % 20 === 3)
       .repartitionByRange(4, col("l_orderkey")), statsCols = Seq("l_orderkey"))
     tl.append(s, t, li.where(col("l_orderkey") % 20 === 4)
-      .repartitionByRange(4, col("l_orderkey")), statsCols = Seq("l_orderkey"))
+      .repartitionByRange(4, col("l_orderkey")))
     tl.deleteWhere(s, t, "l_orderkey", 1L, 20000L)
     // the restore runs through the SQL-TEXT face (CALL restore) —
     // same commit as tl.restore(s, t, 2), exercised from text alone
-    tl.registerSqlTable(s, "o61_rst", t, statsCols = Seq("l_orderkey"))
+    tl.registerSqlTable(s, "o61_rst", t)
     tl.sql(s, "CALL restore('o61_rst', 2)")
     tl.append(s, t, li.where(col("l_orderkey") % 20 === 5)
-      .repartitionByRange(4, col("l_orderkey")), statsCols = Seq("l_orderkey"))
+      .repartitionByRange(4, col("l_orderkey")))
     tl.read(s, t).groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"))
@@ -2087,7 +2049,7 @@ object SparkEntry {
     DedupOps.buildSemanticIndex(s, t, emb.where(col("vec_id") % 4 =!= 0),
       "vec_id", "embedding")
     graft.sinks.TableLog.compactClustered(s, t, nFiles = 4,
-      clusterCol = "cell", statsCols = Seq("cell"))
+      clusterCol = "cell")
     DedupOps.incrementalSemanticDedup(s, t,
       emb.where(col("vec_id") % 4 === 0),
       "vec_id", "embedding", thresholdMicro = 400000)
@@ -2111,10 +2073,8 @@ object SparkEntry {
         .repartitionByRange(8, col("l_orderkey")),
       statsCols = Seq("l_orderkey"))
     tl.append(s, t, li.where(col("l_orderkey") % 30 === 14)
-        .repartitionByRange(8, col("l_orderkey")),
-      statsCols = Seq("l_orderkey"))
-    tl.deleteWhere(s, t, "l_orderkey", 2000, 3500,
-      statsCols = Seq("l_orderkey"))
+        .repartitionByRange(8, col("l_orderkey")))
+    tl.deleteWhere(s, t, "l_orderkey", 2000, 3500)
     tl.read(s, t).groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"))
@@ -2134,8 +2094,7 @@ object SparkEntry {
     tl.create(s, t, docs.repartitionByRange(8, col("source"))
         .sortWithinPartitions("source"),
       strStatsCols = Seq("source"))
-    tl.deleteWhereIn(s, t, "source", Seq("src3", "src7"),
-      strStatsCols = Seq("source"))
+    tl.deleteWhereIn(s, t, "source", Seq("src3", "src7"))
     tl.read(s, t).groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("text_len").as("sum_len"),
         countDistinct(col("source")).as("n_sources"))
@@ -2191,10 +2150,8 @@ object SparkEntry {
         .repartitionByRange(8, col("l_orderkey")),
       statsCols = Seq("l_orderkey"))
     tl.append(s, t, li.where(col("l_orderkey") % 30 === 17)
-        .repartitionByRange(8, col("l_orderkey")),
-      statsCols = Seq("l_orderkey"))
-    tl.deleteWhere(s, t, "l_orderkey", 2000, 3500,
-      statsCols = Seq("l_orderkey"))
+        .repartitionByRange(8, col("l_orderkey")))
+    tl.deleteWhere(s, t, "l_orderkey", 2000, 3500)
     val feed = tl.readFeed(s, t)
     val ct = col(tl.changeTypeCol)
     val ins = feed.where(ct === "insert").drop(tl.changeTypeCol)
@@ -2230,8 +2187,7 @@ object SparkEntry {
     val ins = base.where(col("o_orderkey") % 97 === 0)
       .select((col("o_orderkey") + maxKey).as("o_orderkey"),
         lit("I").as("status"), col("price_c"))
-    tl.mergeCow(s, t, upd.unionByName(ins), "o_orderkey",
-      statsCols = Seq("o_orderkey"))
+    tl.mergeCow(s, t, upd.unionByName(ins), "o_orderkey")
     tl.read(s, t).orderBy("o_orderkey")
   }
 
@@ -2255,8 +2211,7 @@ object SparkEntry {
     tl.create(s, t, base.repartition(8, col("qty")),
       statsCols = Seq("l_orderkey"))
     tl.updateMor(s, t, "l_orderkey", "l_orderkey", 2000, 20000,
-      Map("qty" -> (col("qty") + 100), "l_returnflag" -> lit("X")),
-      statsCols = Seq("l_orderkey"))
+      Map("qty" -> (col("qty") + 100), "l_returnflag" -> lit("X")))
     tl.read(s, t).groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"))
@@ -2286,8 +2241,7 @@ object SparkEntry {
     val ins = base.where(col("o_orderkey") % 97 === 0)
       .select((col("o_orderkey") + maxKey).as("o_orderkey"),
         lit("I").as("status"), col("price_c"))
-    tl.mergeMor(s, t, upd.unionByName(ins), "o_orderkey",
-      statsCols = Seq("o_orderkey"))
+    tl.mergeMor(s, t, upd.unionByName(ins), "o_orderkey")
     tl.read(s, t).groupBy("status")
       .agg(count(lit(1)).as("n_rows"), sum("price_c").as("sum_price_c"),
         min("o_orderkey").as("min_ok"), max("o_orderkey").as("max_ok"))
@@ -2376,8 +2330,7 @@ object SparkEntry {
       .select(concat(lit("new-"),
           lpad(col("doc_id").cast("string"), 8, "0")).as("key"),
         col("lang"), col("source"), col("n_chars"))
-    tl.mergeCow(s, t, upd.unionByName(ins), "key",
-      strStatsCols = Seq("key"))
+    tl.mergeCow(s, t, upd.unionByName(ins), "key")
     tl.read(s, t).groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
         min("key").as("min_key"), max("key").as("max_key"))
@@ -2409,12 +2362,10 @@ object SparkEntry {
     tl.create(s, t, base.repartitionByRange(8, col("o_orderkey")),
       statsCols = Seq("o_orderkey"))                               // v1
     tl.append(s, t, base.withColumn("price_c", col("price_c") + 1000)
-        .repartitionByRange(8, col("o_orderkey")),
-      statsCols = Seq("o_orderkey"))                               // v2: same keys
-    tl.deleteWhere(s, t, "o_orderkey", 2000, 3500,
-      statsCols = Seq("o_orderkey"))                               // v3
+        .repartitionByRange(8, col("o_orderkey")))  // v2: same keys
+    tl.deleteWhere(s, t, "o_orderkey", 2000, 3500)                // v3
     tl.applyCdc(s, sv, tl.readFeed(s, t, withVersion = true),
-      "o_orderkey", statsCols = Seq("o_orderkey"))
+      "o_orderkey")
     tl.read(s, sv).groupBy("priority")
       .agg(count(lit(1)).as("n_rows"), sum("price_c").as("sum_price_c"),
         min("o_orderkey").as("min_ok"), max("o_orderkey").as("max_ok"))
@@ -2444,15 +2395,13 @@ object SparkEntry {
     tl.create(s, t, base.repartitionByRange(8, col("o_orderkey")),
       statsCols = Seq("o_orderkey"))                               // v1
     tl.append(s, t, base.withColumn("price_c", col("price_c") + 1000)
-        .repartitionByRange(8, col("o_orderkey")),
-      statsCols = Seq("o_orderkey"))                               // v2: same keys
-    tl.deleteWhere(s, t, "o_orderkey", 2000, 3500,
-      statsCols = Seq("o_orderkey"))                               // v3
+        .repartitionByRange(8, col("o_orderkey")))  // v2: same keys
+    tl.deleteWhere(s, t, "o_orderkey", 2000, 3500)                // v3
     val feed = tl.readFeed(s, t, withVersion = true)
     tl.applyCdcMor(s, sv, feed.where(col("_change_version") === 1),
-      "o_orderkey", statsCols = Seq("o_orderkey"))     // bootstrap
+      "o_orderkey")     // bootstrap
     tl.applyCdcMor(s, sv, feed.where(col("_change_version") >= 2),
-      "o_orderkey", statsCols = Seq("o_orderkey"))     // MOR batch
+      "o_orderkey")     // MOR batch
     tl.read(s, sv).groupBy("priority")
       .agg(count(lit(1)).as("n_rows"), sum("price_c").as("sum_price_c"),
         min("o_orderkey").as("min_ok"), max("o_orderkey").as("max_ok"))
@@ -2489,15 +2438,12 @@ object SparkEntry {
     val ins = base.where(col("o_orderkey") % 97 === 0)
       .select((col("o_orderkey") + maxKey).as("o_orderkey"),
         col("price_c"), lit("I").as("priority"))
-    tl.mergeCow(s, t, upd.unionByName(ins), "o_orderkey",
-      statsCols = Seq("o_orderkey"))                               // v2
+    tl.mergeCow(s, t, upd.unionByName(ins), "o_orderkey")         // v2
     tl.updateWhere(s, t, "o_orderkey", 1000, 4000,
-      Map("price_c" -> (col("price_c") + 777)),
-      statsCols = Seq("o_orderkey"))                               // v3
-    tl.deleteWhere(s, t, "o_orderkey", 5000, 9000,
-      statsCols = Seq("o_orderkey"))                               // v4
+      Map("price_c" -> (col("price_c") + 777)))                   // v3
+    tl.deleteWhere(s, t, "o_orderkey", 5000, 9000)                // v4
     tl.applyCdc(s, sv, tl.readFeed(s, t, withVersion = true),
-      "o_orderkey", statsCols = Seq("o_orderkey"))
+      "o_orderkey")
     tl.read(s, sv).groupBy("priority")
       .agg(count(lit(1)).as("n_rows"), sum("price_c").as("sum_price_c"),
         min("o_orderkey").as("min_ok"), max("o_orderkey").as("max_ok"))
@@ -2521,8 +2467,7 @@ object SparkEntry {
     tl.create(s, t, base.repartitionByRange(8, col("l_orderkey")),
       statsCols = Seq("l_orderkey"))
     tl.updateWhere(s, t, "l_orderkey", 2000, 20000,
-      Map("qty" -> (col("qty") + 100), "l_returnflag" -> lit("X")),
-      statsCols = Seq("l_orderkey"))
+      Map("qty" -> (col("qty") + 100), "l_returnflag" -> lit("X")))
     tl.read(s, t).groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"))
@@ -2548,8 +2493,7 @@ object SparkEntry {
       statsCols = Seq("l_orderkey"))
     val t1 = tl.commitTimestamp(t, 1L).get
     tl.append(s, t, li.where(col("l_orderkey") % 30 === 17)
-        .repartitionByRange(4, col("l_orderkey")),
-      statsCols = Seq("l_orderkey"))
+        .repartitionByRange(4, col("l_orderkey")))
     val t2 = tl.commitTimestamp(t, 2L).get
     def agg(df: org.apache.spark.sql.DataFrame, snap: String) =
       df.groupBy(lit(snap).as("snap"), col("l_returnflag"))
@@ -2574,7 +2518,7 @@ object SparkEntry {
     tl.create(s, t, o.where(col("o_orderkey") % 10 === 1)
       .repartitionByRange(4, col("o_orderkey")), statsCols = Seq("o_orderkey"))
     tl.append(s, t, o.where(col("o_orderkey") % 10 === 2)
-      .repartitionByRange(4, col("o_orderkey")), statsCols = Seq("o_orderkey"))
+      .repartitionByRange(4, col("o_orderkey")))
     tl.deleteWhere(s, t, "o_orderkey", 1L, 6000L)
     tl.history(s, t)
       .select(col("version"), col("action"), col("kind"),
@@ -3420,7 +3364,7 @@ object SparkEntry {
     * and CANDIDATE MASS tracks true-dup mass, not n² (measured sf1:
     * 6784 → 1122 candidates for 1049 verified pairs — and the xor
     * family finds MORE true pairs than the linear h1+b·h2 bands, whose
-    * lower-envelope correlation loses recall; see CandStats / DEVNOTES
+    * lower-envelope correlation loses recall; see DEVNOTES round 8
     * for the per-SF table). */
   private def e2Jaccard(s: SparkSession, dir: String): DataFrame =
     DedupOps.jaccardVerifiedPairs(T(s, dir, "documents"), "doc_id", "text",
@@ -3432,7 +3376,7 @@ object SparkEntry {
     * picks (bands, rows) — rows steps +1 per decade of corpus growth,
     * bands keeps the S-curve midpoint at ~0.41 — so candidate mass
     * stays ~linear in n where the fixed committed family grew
-    * 15.8×/10× (CandStats). The oracle re-derives the identical
+    * 15.8×/10× (DEVNOTES round 8). The oracle re-derives the identical
     * (bands, rows) from count(*) in SQL (integer digit arithmetic) and
     * filters the shared 144-seed literal list to bands·rows, so a
     * derivation drift between engines fails the hash. */

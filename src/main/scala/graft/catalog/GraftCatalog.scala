@@ -5,7 +5,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import graft.sinks.{TableLog, WriteStats}
+import graft.sinks.TableLog
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.analysis.{
@@ -55,11 +55,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - WRITES: `INSERT INTO` appends one manifest commit;
   *     `INSERT OVERWRITE` is the whole-table replace through
   *     `TableLog.rewrite` (history keeps the prior version readable).
-  *     Stat columns are declared once as TABLE PROPERTIES
-  *     (`statsCols`/`strStatsCols`/`bloomStatsCols`/`morKey`, the same
-  *     names as the `USING graft` DDL OPTIONS) and re-derived on every
-  *     write — the catalog is what makes the stat config DECLARATIVE
-  *     instead of a per-call argument.
+  *     The table's WRITE SPEC is declared once as TABLE PROPERTIES
+  *     (`statsCols`/`strStatsCols`/`bloomStatsCols`/`morKey`/
+  *     `maxDvPositions`, the same names as the `USING graft` DDL
+  *     OPTIONS): CREATE records it in the table's version-1 manifest,
+  *     `ALTER TABLE … SET/UNSET TBLPROPERTIES` on those keys commits
+  *     `TableLog.setWriteSpec`, and every write measures what the
+  *     snapshot's spec declares. Other properties (`rowLevelMode`)
+  *     live in an unversioned `_catalog.properties` sidecar.
   *   - DDL: CREATE/DROP/RENAME TABLE, namespaces. Tables are MANAGED:
   *     they live under the warehouse and DROP deletes their bytes
   *     (the registered-view face keeps its EXTERNAL semantics for
@@ -209,43 +212,22 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    if (partitions.nonEmpty) throw new UnsupportedOperationException(
-      s"${identName(ident)}: PARTITIONED BY does not apply to log " +
-        "tables — cluster with zOrder/zOrder3 maintenance after load")
-    val props = properties.asScala.toMap
-    props.keys.find(_.equalsIgnoreCase(TableCatalog.PROP_LOCATION))
-      .foreach(_ => throw new UnsupportedOperationException(
-        s"${identName(ident)}: LOCATION is not supported — catalog " +
-          "tables are MANAGED under the warehouse; for an external " +
-          "path use TableLog.registerSqlTable / CREATE TABLE <name> " +
-          "USING graft LOCATION …"))
-    // stat-column properties must name real columns — fail at CREATE,
-    // not at the first INSERT that silently derives no stats
-    val fields = schema.fieldNames.map(
-      _.toLowerCase(java.util.Locale.ROOT)).toSet
-    GraftCatalog.statColKeys.foreach { k =>
-      GraftCatalog.colsProp(props, k).filterNot(c =>
-          fields(c.toLowerCase(java.util.Locale.ROOT)))
-        .foreach(c => throw new IllegalArgumentException(
-          s"${identName(ident)}: $k names column '$c' which is not in " +
-            s"the table schema (${schema.fieldNames.mkString(", ")})"))
-    }
-    GraftTable.rowLevelMode(props, identName(ident))
+    val (props, spec) = validate(ident, schema, partitions, properties)
     val path = tablePath(ident)
     if (isTableDir(Paths.get(path)))
       throw new TableAlreadyExistsException(ident)
     val spark = SparkSession.active
     Files.createDirectories(Paths.get(path))
     GraftCatalog.writeProps(path, props)
-    // version 1 carries the schema and zero files — the same manifest
-    // an empty append commits, so every later face (scan, DML, detail)
-    // sees an ordinary log table
-    TableLog.append(spark, path,
+    // version 1 carries the schema, the write spec and zero files — the
+    // same manifest an empty create commits, so every later face (scan,
+    // DML, detail) sees an ordinary log table
+    TableLog.create(spark, path,
       spark.createDataFrame(new util.ArrayList[Row](), schema),
-      statsCols = GraftCatalog.colsProp(props, "statsCols"),
-      strStatsCols = GraftCatalog.colsProp(props, "strStatsCols"),
-      bloomStatsCols = GraftCatalog.colsProp(props, "bloomStatsCols"))
-    GraftTable(path, TableLog.snapshot(path).get, props, identName(ident))
+      statsCols = spec.longCols, strStatsCols = spec.strCols,
+      bloomStatsCols = spec.bloomCols, morKey = spec.morKey,
+      maxDvPositions = spec.maxDvPositions)
+    loadTable(ident)
   }
 
   // ── StagingTableCatalog: ATOMIC CTAS / RTAS ─────────────────────
@@ -259,9 +241,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   // the view-face REPLACE TABLE). Abort deletes the staged files and,
   // for a fresh CREATE, the table directory.
 
-  private def validateStage(ident: Identifier, schema: StructType,
-      partitions: Array[Transform],
-      properties: util.Map[String, String]): Map[String, String] = {
+  /** CREATE's refusals, shared by the plain and the staged paths:
+    * PARTITIONED BY, LOCATION, a bad `rowLevelMode`, and a write spec
+    * naming a column the schema lacks (at CREATE, not at the first
+    * INSERT that would silently derive no stats). */
+  private def validate(ident: Identifier, schema: StructType,
+      partitions: Array[Transform], properties: util.Map[String, String])
+      : (Map[String, String], TableLog.WriteSpec) = {
     if (partitions.nonEmpty) throw new UnsupportedOperationException(
       s"${identName(ident)}: PARTITIONED BY does not apply to log " +
         "tables — cluster with zOrder/zOrder3/hilbertOrder after load")
@@ -269,18 +255,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     props.keys.find(_.equalsIgnoreCase(TableCatalog.PROP_LOCATION))
       .foreach(_ => throw new UnsupportedOperationException(
         s"${identName(ident)}: LOCATION is not supported — catalog " +
-          "tables are MANAGED under the warehouse"))
-    val fields = schema.fieldNames.map(
-      _.toLowerCase(java.util.Locale.ROOT)).toSet
-    GraftCatalog.statColKeys.foreach { k =>
-      GraftCatalog.colsProp(props, k).filterNot(c =>
-          fields(c.toLowerCase(java.util.Locale.ROOT)))
-        .foreach(c => throw new IllegalArgumentException(
-          s"${identName(ident)}: $k names column '$c' which is not in " +
-            s"the table schema (${schema.fieldNames.mkString(", ")})"))
-    }
+          "tables are MANAGED under the warehouse; for an external " +
+          "path use TableLog.registerSqlTable / CREATE TABLE <name> " +
+          "USING graft LOCATION …"))
     GraftTable.rowLevelMode(props, identName(ident))
-    props
+    (props, TableLog.checkedSpec(identName(ident), schema,
+      GraftCatalog.specOf(props, identName(ident))))
   }
 
   // constraints on CTAS/RTAS would need the staged commit to validate
@@ -316,7 +296,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def stageCreate(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       properties: util.Map[String, String]): StagedTable = {
-    val props = validateStage(ident, schema, partitions, properties)
+    val props = validate(ident, schema, partitions, properties)._1
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     new GraftStagedTable(tablePath(ident), identName(ident), schema,
       props, replace = false)
@@ -325,7 +305,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def stageReplace(ident: Identifier, schema: StructType,
       partitions: Array[Transform],
       properties: util.Map[String, String]): StagedTable = {
-    val props = validateStage(ident, schema, partitions, properties)
+    val props = validate(ident, schema, partitions, properties)._1
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     new GraftStagedTable(tablePath(ident), identName(ident), schema,
       props, replace = true)
@@ -334,7 +314,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def stageCreateOrReplace(ident: Identifier,
       schema: StructType, partitions: Array[Transform],
       properties: util.Map[String, String]): StagedTable = {
-    val props = validateStage(ident, schema, partitions, properties)
+    val props = validate(ident, schema, partitions, properties)._1
     new GraftStagedTable(tablePath(ident), identName(ident), schema,
       props, replace = true)
   }
@@ -344,7 +324,20 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val path = tablePath(ident)
     if (!isTableDir(Paths.get(path))) throw new NoSuchTableException(ident)
     var props = GraftCatalog.readProps(path)
+    // write-spec keys collect here and commit as ONE setWriteSpec after
+    // the other changes; the rest go to the sidecar
+    var specProps = Option.empty[Map[String, String]]
+    def specKeys = specProps.getOrElse(
+      GraftCatalog.specProps(TableLog.writeSpec(path)))
     changes.foreach {
+      case set: TableChange.SetProperty
+          if GraftCatalog.isSpecKey(set.property) =>
+        specProps = Some(specKeys.filterNot(_._1.equalsIgnoreCase(
+          set.property)) + (set.property -> set.value))
+      case rm: TableChange.RemoveProperty
+          if GraftCatalog.isSpecKey(rm.property) =>
+        specProps = Some(specKeys.filterNot(
+          _._1.equalsIgnoreCase(rm.property)))
       case set: TableChange.SetProperty =>
         props = props.filterNot(
           _._1.equalsIgnoreCase(set.property)) + (set.property -> set.value)
@@ -392,6 +385,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           "ADD COLUMNS, DROP COLUMN, ALTER COLUMN TYPE (lossless " +
           "widening), ADD/DROP CONSTRAINT (CHECK)")
     }
+    GraftTable.rowLevelMode(props, identName(ident))
+    specProps.foreach(p => TableLog.setWriteSpec(path,
+      GraftCatalog.specOf(p, identName(ident))))
     GraftCatalog.writeProps(path, props)
     loadTable(ident)
   }
@@ -521,13 +517,44 @@ object GraftCatalog {
   }
 
   private val SIDECAR = "_catalog.properties"
-  private[graft] val statColKeys =
-    Seq("statsCols", "strStatsCols", "bloomStatsCols")
 
-  /** The table's declared properties — the stat-column configuration
-    * every catalog write re-derives. Plain `key=value` lines at the
-    * table root (OUTSIDE `_log`, so the manifest codec and vacuum
-    * never see it; vacuum sweeps only `data/`). */
+  /** The property keys that declare the table's write spec — the same
+    * names as the `USING graft` DDL OPTIONS. */
+  private val specKeys = Seq("statsCols", "strStatsCols", "bloomStatsCols",
+    "morKey", "maxDvPositions")
+
+  private[graft] def isSpecKey(k: String): Boolean =
+    specKeys.exists(_.equalsIgnoreCase(k))
+
+  /** The write spec `props` declare (keys case-insensitive; column
+    * lists comma-separated). */
+  private[graft] def specOf(props: Map[String, String],
+      name: String): TableLog.WriteSpec = {
+    def prop(k: String) = props.find(_._1.equalsIgnoreCase(k)).map(_._2.trim)
+    def cols(k: String): Seq[String] = prop(k).toSeq
+      .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
+    TableLog.WriteSpec(cols("statsCols"), cols("strStatsCols"),
+      cols("bloomStatsCols"), prop("morKey").filter(_.nonEmpty),
+      prop("maxDvPositions").map(v => v.toLongOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"$name: maxDvPositions must be a long (got '$v')")))
+        .getOrElse(TableLog.DefaultMaxDvPositions))
+  }
+
+  /** `spec` as the table properties that declare it. */
+  private[graft] def specProps(spec: TableLog.WriteSpec): Map[String, String] =
+    Seq("statsCols" -> spec.longCols.mkString(","),
+      "strStatsCols" -> spec.strCols.mkString(","),
+      "bloomStatsCols" -> spec.bloomCols.mkString(","),
+      "morKey" -> spec.morKey.getOrElse("")).filter(_._2.nonEmpty).toMap ++
+      (if (spec.maxDvPositions == TableLog.DefaultMaxDvPositions) Map.empty
+       else Map("maxDvPositions" -> spec.maxDvPositions.toString))
+
+  /** The table's other declared properties (`rowLevelMode`, user keys):
+    * plain `key=value` lines at the table root (OUTSIDE `_log`, so the
+    * manifest codec and vacuum never see it; vacuum sweeps only
+    * `data/`). The write-spec keys are versioned in the manifest
+    * instead, and never stored here. */
   private[graft] def readProps(table: String): Map[String, String] = {
     val p = Paths.get(table, SIDECAR)
     if (!Files.exists(p)) return Map.empty
@@ -540,7 +567,8 @@ object GraftCatalog {
   }
 
   private[graft] def writeProps(table: String,
-      props: Map[String, String]): Unit = {
+      allProps: Map[String, String]): Unit = {
+    val props = allProps.filterNot(p => isSpecKey(p._1))
     props.keys.foreach(k => require(
       !k.contains("=") && !k.contains("\n") && k.nonEmpty,
       s"table property key '$k' must be non-empty and contain no " +
@@ -552,22 +580,6 @@ object GraftCatalog {
     Files.write(Paths.get(table, SIDECAR),
       body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
-
-  /** A comma-separated column-list property, key case-insensitive —
-    * the same names (`statsCols`, `strStatsCols`, `bloomStatsCols`,
-    * `morKey`) as the `USING graft` DDL OPTIONS. */
-  private[graft] def colsProp(props: Map[String, String],
-      key: String): Seq[String] =
-    props.find(_._1.equalsIgnoreCase(key)).toSeq
-      .flatMap(_._2.split(",")).map(_.trim).filter(_.nonEmpty)
-
-  /** The write-time stats a table's properties declare (`statsCols`,
-    * `strStatsCols`, `bloomStatsCols`), plus the write's `audits`. */
-  private[graft] def writeSpec(props: Map[String, String],
-      audits: Seq[TableLog.StagedAudit] = Nil): WriteStats.Spec =
-    WriteStats.Spec(colsProp(props, "statsCols"),
-      colsProp(props, "strStatsCols"), colsProp(props, "bloomStatsCols"),
-      audits = audits)
 
   /** The configured `GraftCatalog` named `name` on this session, if
     * any — the DML face uses this to claim `catalog.ns.table`
@@ -582,9 +594,9 @@ object GraftCatalog {
       .collect { case g: GraftCatalog => g }
 
   /** Resolve a multipart identifier (`Seq("graft", "ns", "t")`)
-    * through a configured GraftCatalog to the table path plus its
-    * property-declared stat registration — how the SQL DML face
-    * claims catalog identifiers without a temp-view registration. */
+    * through a configured GraftCatalog to the table path and its DML
+    * registration — how the SQL DML face claims catalog identifiers
+    * without a temp-view registration. */
   private[graft] def resolveIdent(spark: SparkSession,
       parts: Seq[String]): Option[(String, graft.plans.GraftSqlDml.Reg)] = {
     if (parts.size < 2) return None
@@ -594,14 +606,7 @@ object GraftCatalog {
         case _: IllegalArgumentException => return None
       }
       if (TableLog.latestVersion(path) == 0) None
-      else {
-        val props = readProps(path)
-        Some((path, graft.plans.GraftSqlDml.Reg(path,
-          colsProp(props, "statsCols"), colsProp(props, "strStatsCols"),
-          colsProp(props, "bloomStatsCols"),
-          props.find(_._1.equalsIgnoreCase("morKey")).map(_._2.trim)
-            .filter(_.nonEmpty))))
-      }
+      else Some((path, graft.plans.GraftSqlDml.Reg(path)))
     }
   }
 }
@@ -678,9 +683,12 @@ final case class GraftTable(path: String, snapshot: TableLog.Snapshot,
 
   override def version(): String = snapshot.version.toString
 
+  /** The sidecar's properties plus the write spec of THIS snapshot
+    * (so `VERSION AS OF` shows that version's spec). */
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
-    props.foreach { case (k, v) => m.put(k, v) }
+    (props ++ GraftCatalog.specProps(snapshot.spec))
+      .foreach { case (k, v) => m.put(k, v) }
     m.put(TableCatalog.PROP_PROVIDER, "graft")
     m.put("version", snapshot.version.toString)
     m.put("rows", snapshot.rows.toString)
@@ -1105,10 +1113,7 @@ final class GraftStagedTable(path: String, nameStr: String,
               java.nio.file.Files.createDirectories(
                 java.nio.file.Paths.get(path))
               staged = Some(TableLog.stageDataFiles(data.sparkSession,
-                path, data,
-                GraftCatalog.colsProp(props, "statsCols"),
-                GraftCatalog.colsProp(props, "strStatsCols"),
-                GraftCatalog.colsProp(props, "bloomStatsCols")) match {
+                path, data, GraftCatalog.specOf(props, nameStr)) match {
                 case (fs, n) => (fs, n, data.schema)
               })
             }
@@ -1122,7 +1127,8 @@ final class GraftStagedTable(path: String, nameStr: String,
       // declared-schema table, empty
       (Seq.empty[TableLog.FileEntry], 0L, declared))
     GraftCatalog.writeProps(path, props)
-    TableLog.commitStaged(path, files, rows, written, replace)
+    TableLog.commitStaged(path, files, rows, written, replace,
+      GraftCatalog.specOf(props, nameStr))
   }
 
   override def abortStagedChanges(): Unit = {
@@ -1155,8 +1161,8 @@ final class GraftStagedTable(path: String, nameStr: String,
   * overwrite (`df.writeTo(t).overwrite(cond)` — Delta's replaceWhere)
   * → ONE atomic `TableLog.replaceWhere` commit: affected files prune
   * by manifest stats from the same pushed filters, the condition
-  * translates EXACTLY or refuses, and new rows must satisfy it. Stat
-  * columns come from the table's declared properties — Spark has
+  * translates EXACTLY or refuses, and new rows must satisfy it. Every
+  * write measures the stats of the table's write spec — Spark has
   * already aligned and cast the incoming frame to the table schema
   * (`TableOutputResolver`), so the append sees exactly the declared
   * column set. */
@@ -1196,29 +1202,21 @@ final class GraftWriteBuilder(t: GraftTable, info: LogicalWriteInfo)
         s"${t.name}: streaming Complete mode (truncate per epoch) is " +
           "not supported on a commit-log table — use Append mode, or " +
           "aggregate into a batch face")
-      new GraftStreamingWrite(t.path, t.props, info.schema(),
-        info.queryId())
+      new GraftStreamingWrite(t.path, info.schema(), info.queryId())
     }
 
     override def toInsertableRelation: InsertableRelation =
       new InsertableRelation {
         override def insert(data: DataFrame, ignored: Boolean): Unit = {
           val spark = data.sparkSession
-          val st = GraftCatalog.colsProp(t.props, "statsCols")
-          val sst = GraftCatalog.colsProp(t.props, "strStatsCols")
-          val bst = GraftCatalog.colsProp(t.props, "bloomStatsCols")
           if (overwriteAll)
             TableLog.rewrite(spark, t.path, "overwrite",
-              expectRows = _ => None, statsCols = st, strStatsCols = sst,
-              bloomStatsCols = bst)(_ => data)
+              expectRows = _ => None)(_ => data)
           else replaceCond match {
             case Some((cond, prune)) =>
               TableLog.replaceWhere(spark, t.path, cond, data,
-                statsCols = st, strStatsCols = sst,
-                bloomStatsCols = bst, prune = prune)
-            case None =>
-              TableLog.append(spark, t.path, data, st,
-                strStatsCols = sst, bloomStatsCols = bst)
+                prune = prune)
+            case None => TableLog.append(spark, t.path, data)
           }
         }
       }

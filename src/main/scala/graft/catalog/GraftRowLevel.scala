@@ -107,10 +107,7 @@ abstract class GraftRlOpBase(private[catalog] val t: GraftTable,
             s"above the auto-materialization gate ($gate); run " +
             "morMaintain/compact first, use the graft SQL DML face, or " +
             "raise spark.graft.rowLevel.maxAutoMaintainBytes")
-        TableLog.morMaintain(spark, t.path, maxSidecars = 0,
-          statsCols = GraftCatalog.colsProp(t.props, "statsCols"),
-          strStatsCols = GraftCatalog.colsProp(t.props, "strStatsCols"),
-          bloomStatsCols = GraftCatalog.colsProp(t.props, "bloomStatsCols"))
+        TableLog.morMaintain(spark, t.path, maxSidecars = 0)
         TableLog.snapshotOrFail(t.path)
       }
     require(healed.dels.forall(_.keyCol == TableLog.DvKeyCol),
@@ -319,12 +316,15 @@ final class GraftRowLevelScan(op: GraftRlOpBase,
     * filter. The group-based scan does NOT expose them: the group
     * filter builds ONE multi-key subquery over ALL filterAttributes,
     * and a `(_file, k)` struct-IN is a shape [[filter]] would ignore
-    * — strictly worse than the live single-key `_file` prune. */
+    * — strictly worse than the live single-key `_file` prune. Only
+    * stat columns this scan reads qualify: a MERGE whose actions need
+    * no target column but the key scans `(k, _file, _pos)`, and a
+    * filter attribute outside the scan output fails analysis. */
   override def filterAttributes(): Array[NamedReference] = {
     val statCols = op match {
       case _: GraftDeltaOperation =>
-        GraftCatalog.colsProp(t.props, "statsCols") ++
-          GraftCatalog.colsProp(t.props, "strStatsCols")
+        (t.snapshot.spec.longCols ++ t.snapshot.spec.strCols)
+          .filter(required.fieldNames.contains)
       case _ => Nil
     }
     ("_file" +: statCols).map(Expressions.column).toArray
@@ -511,7 +511,7 @@ final class GraftReplaceDataWrite(op: GraftRowLevelOperation,
       // constraints are audited by the writer tasks (a DELETE's output
       // is survivors a prior commit already certified — skipped); a
       // violation throws from commit() into Spark's abort()
-      stats = GraftCatalog.writeSpec(t.props,
+      stats = op.snap.spec.writeStats(info.schema(), audits =
         if (op.command() != RowLevelOperation.Command.DELETE)
           TableLog.checkAudits(t.path, op.snap.checks,
             s"row-level $command")
@@ -565,7 +565,7 @@ final class GraftDeltaWrite(op: GraftDeltaOperation, t: GraftTable,
       // gets an empty row schema.
       stats =
         if (info.schema().isEmpty) WriteStats.Spec()
-        else GraftCatalog.writeSpec(t.props,
+        else op.snap.spec.writeStats(info.schema(), audits =
           TableLog.checkAudits(t.path, op.snap.checks, s"delta $command"))
       new GraftDeltaWriterFactory(t.path, s"data/rld-$setId",
         ParquetWrite.factory(spark, info.schema()),
@@ -607,8 +607,7 @@ object GraftDeltaWrite {
 
   /** The sidecar's stats — the same position range and file-key range
     * `TableLog.deleteDv` records, which file-identity fencing reads. */
-  private[catalog] val dvStats = WriteStats.Spec(
-    Seq(TableLog.DvPosField), Seq(TableLog.DvFileField))
+  private[catalog] val dvStats = TableLog.dvSpec.writeStats(dvSchema)
 }
 
 /** One delta task's staged output: the data-file shard (inserts) and

@@ -14,9 +14,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Each executor-side [[DataWriter]] writes ONE parquet file directly
   * (Spark's own writer stack via the bridge), opened LAZILY on the
-  * first row so empty tasks leave no file, and measures the table's
-  * property-declared stats and its CHECK constraints (the set as of
-  * the epoch's start) while writing ([[WriteStats]]); the epoch commit
+  * first row so empty tasks leave no file, and measures the stats of
+  * the table's write spec and its CHECK constraints (both as of the
+  * epoch's start) while writing ([[WriteStats]]); the epoch commit
   * ([[TableLog.commitStreamEpoch]]) manifests ONLY message-listed
   * files — a zombie or retried task's orphan can never land — and
   * commits ONE append stamped `<queryId>#<epochId>`. Micro-batch
@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.StructType
   * semantics this sink deliberately refuses (a streaming whole-table
   * replace per trigger is a history-churn anti-pattern on a commit-log
   * table; aggregate into a batch face instead). */
-final class GraftStreamingWrite(path: String, props: Map[String, String],
-    schema: StructType, queryId: String) extends StreamingWrite {
+final class GraftStreamingWrite(path: String, schema: StructType,
+    queryId: String) extends StreamingWrite {
 
   /** One fresh id per StreamingWrite instance (= per query RUN): a
     * crash-restart replaying an already-committed epoch gets a new
@@ -49,9 +49,9 @@ final class GraftStreamingWrite(path: String, props: Map[String, String],
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
     val spark = SparkSession.active
-    stats = GraftCatalog.writeSpec(props, TableLog.checkAudits(path,
-      TableLog.snapshot(path).map(_.checks).getOrElse(Nil),
-      "streaming append"))
+    val snap = TableLog.snapshotOrFail(path)
+    stats = snap.spec.writeStats(schema, audits = TableLog.checkAudits(path,
+      snap.checks, "streaming append"))
     new GraftStreamWriterFactory(path, queryId, runId,
       ParquetWrite.factory(spark, schema), stats.bind(spark, schema))
   }

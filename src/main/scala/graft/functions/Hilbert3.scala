@@ -42,7 +42,7 @@ case class Hilbert3Long(first: Expression, second: Expression,
 /** 3-D Hilbert curve over 16-bit-per-dimension cell space — the
   * candidate THIRD-dimension twin of [[HilbertLong]], built for the
   * files-opened adjudication against `zOrder3`'s 48-bit Morton-3 key
-  * (`tools.CurveStats3`; shipped as a layout verb only if it wins).
+  * (DEVNOTES round 16; shipped as a layout verb only if it wins).
   *
   * Encode/decode use Skilling's transposed-coordinate formulation
   * (J. Skilling, "Programming the Hilbert curve", AIP Conf. Proc.

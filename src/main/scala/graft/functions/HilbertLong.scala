@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * rotation makes this a short loop rather than Morton's branch-free
   * bit-spread — ~3 ns vs ~1 ns per row, both noise next to parquet IO;
   * the difference that matters is files opened per query box, measured
-  * in `tools.CurveStats` and pinned in DEVNOTES.
+  * and pinned in DEVNOTES (round 15, "Hilbert layout").
   *
   * The encode is the classic reflect-and-rotate walk (public-domain
   * formulation, e.g. Wikipedia "Hilbert curve: Applications and

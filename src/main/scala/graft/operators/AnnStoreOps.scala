@@ -49,7 +49,7 @@ object AnnStoreOps {
       TableLog.create(spark, store, clustered, statsCols = Seq("cell"),
         counterPin = Map("cbv" -> cbv))
     else TableLog.rewrite(spark, store, "overwrite", expectRows = _ => None,
-      statsCols = Seq("cell"), counterSet = Map("cbv" -> cbv))(_ => clustered)
+      counterSet = Map("cbv" -> cbv))(_ => clustered)
   }
 
   /** The codebook the store pins, driver-side (nlist rows). */
@@ -65,8 +65,7 @@ object AnnStoreOps {
       QuantizeVector.quantize(col(vecCol), 1000.0).as("qe"))
     val cents = codebook(spark, path)
     TableLog.append(spark, storeTable(path), SimilarityOps.clusterByCell(
-        SimilarityOps.assignToCells(quant, idCol, cents), Some(cents.length)),
-      statsCols = Seq("cell"))
+        SimilarityOps.assignToCells(quant, idCol, cents), Some(cents.length)))
   }
 
   /** Streaming ingestion into the store: every micro-batch of vectors is
@@ -123,7 +122,7 @@ object AnnStoreOps {
       require(c2.nonEmpty && c2.length <= nlist,
         s"rebalance audit: ${c2.length} codebook cells, expected (0, $nlist]")
       val cbv = SimilarityOps.commitCodebook(spark, codebookTable(path), c2)
-      TableLog.rewrite(spark, store, "rebalance", statsCols = Seq("cell"),
+      TableLog.rewrite(spark, store, "rebalance",
         counterSet = Map("cbv" -> cbv))(
         _ => SimilarityOps.clusterByCell(assigned, Some(c2.length)))
     } finally quant.unpersist(blocking = false)

@@ -309,7 +309,7 @@ object DedupOps {
     * background pair's collision probability by
     * bands(r+1)/bands(r) · s_bg ≈ 2.4·s_bg ≪ 1 — the per-decade step
     * that keeps CANDIDATE MASS tracking n instead of the measured
-    * 15.8×-per-10× growth of a fixed family (CandStats / DEVNOTES).
+    * 15.8×-per-10× growth of a fixed family (DEVNOTES round 8).
     * rows caps at 4 (144 minima columns, the sane aggregate width);
     * past ~5M docs candidates resume the fixed-(36,4) curve and the
     * next lever is shingle width, not more bands. Integer arithmetic
@@ -998,7 +998,7 @@ object DedupOps {
       nlist, fitSampleTarget = 20L * nlist)
     val cbv = SimilarityOps.commitCodebook(spark, codebookTable(table), c1)
     graft.sinks.TableLog.rewrite(spark, table, "rebalance",
-      statsCols = Seq("cell"), counterSet = Map("cbv" -> cbv)) { old =>
+      counterSet = Map("cbv" -> cbv)) { old =>
       SimilarityOps.clusterByCell(SimilarityOps
         .assignToCells(old.select(col("id"), col("qe")), "id", c1)
         .withColumn("nrm",

@@ -49,32 +49,31 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * CATALOG identifiers: UPDATE / DELETE / MERGE, the CALL procedures,
   * and the TVFs also claim `catalog.ns.table` names resolved through a
-  * configured [[graft.catalog.GraftCatalog]] — stat columns and morKey
-  * come from the table's declared PROPERTIES instead of a
-  * registration, and there is no view to refresh (every catalog query
-  * re-pins its snapshot via `loadTable`). SELECT, time travel, INSERT,
-  * and CREATE/DROP on catalog names stay on Spark's NATIVE DSv2 path
+  * configured [[graft.catalog.GraftCatalog]] — there is no view to
+  * refresh (every catalog query re-pins its snapshot via `loadTable`).
+  * SELECT, time travel, INSERT, and CREATE/DROP on catalog names stay
+  * on Spark's NATIVE DSv2 path
   * (the catalog + `ResolveGraftCatalogReads` handle them); the rewrite
   * only claims the row-level verbs V2 tables cannot express without
   * SupportsRowLevelOperations. */
 object GraftSqlDml {
 
   /** The DML registry entry `TableLog.registerSqlTable` records: the
-    * table path plus the stat columns every rewriting commit should
-    * re-derive (mirrors the Scala faces' parameters). `morKey` opts
-    * the table's SQL mutations into the MERGE-ON-READ faces keyed on
-    * that column — UPDATE → `updateMor`, MERGE → `mergeMor`, and a
-    * DELETE whose predicate is `morKey IN (long list)` / `= n` →
-    * `deleteMor` — the zero-rewrite path an UNCLUSTERED table wants
-    * (range DELETEs stay copy-on-write: a range is exactly what the
-    * stat prune rewrites tightly). `maxDvPositions` caps each
-    * positional (deletion-vector) commit — past it a DELETE
-    * auto-falls-back to copy-on-write and an UPDATE refuses with
-    * guidance (the TableLog faces' own contract). */
-  final case class Reg(table: String, statsCols: Seq[String],
-      strStatsCols: Seq[String], bloomStatsCols: Seq[String],
-      morKey: Option[String] = None,
-      maxDvPositions: Long = 2000000L)
+    * table path alone. Everything else is the table's own write spec,
+    * read at each statement: the stats every commit measures, and
+    * `morKey`, which opts the table's SQL mutations into the
+    * MERGE-ON-READ faces keyed on that column — UPDATE → `updateMor`,
+    * MERGE → `mergeMor`, and a DELETE whose predicate is
+    * `morKey IN (long list)` / `= n` → `deleteMor` — the zero-rewrite
+    * path an UNCLUSTERED table wants (range DELETEs stay
+    * copy-on-write: a range is exactly what the stat prune rewrites
+    * tightly). The spec's `maxDvPositions` caps each positional
+    * (deletion-vector) commit — past it a DELETE auto-falls-back to
+    * copy-on-write and an UPDATE refuses with guidance (the TableLog
+    * faces' own contract). */
+  final case class Reg(table: String) {
+    def spec: TableLog.WriteSpec = TableLog.writeSpec(table)
+  }
 
   def rewrite(spark: SparkSession, plan: LogicalPlan)
       : Option[LogicalPlan] = plan match {
@@ -124,8 +123,8 @@ object GraftSqlDml {
     *     `TableLog.replaceWhere`.
     * Claimed only when the procedure name is one of these AND its
     * first argument is a registered view; everything else passes
-    * through (Spark reports its own unresolved-procedure error). The
-    * registration's stat columns flow into every rewriting tick. */
+    * through (Spark reports its own unresolved-procedure error). Every
+    * rewriting tick measures the table's declared stats. */
   private val callProcs = Set("compact_small", "mor_maintain",
     "mor_fold", "zorder_maintain", "vacuum_keep", "vacuum_feed",
     "tag", "delete_tag", "replace_where", "restore", "clone",
@@ -153,20 +152,13 @@ object GraftSqlDml {
           s"argument ${i + 1} must be a string literal"))
       GraftDmlCommand(proc, view, reg.table, s => proc match {
         case "compact_small" =>
-          TableLog.compactSmall(s, reg.table, longArg(1),
-            statsCols = reg.statsCols, strStatsCols = reg.strStatsCols,
-            bloomStatsCols = reg.bloomStatsCols)
+          TableLog.compactSmall(s, reg.table, longArg(1))
         case "mor_maintain" =>
-          TableLog.morMaintain(s, reg.table,
-            maxSidecars = longArg(1).toInt,
-            statsCols = reg.statsCols, strStatsCols = reg.strStatsCols,
-            bloomStatsCols = reg.bloomStatsCols)
+          TableLog.morMaintain(s, reg.table, maxSidecars = longArg(1).toInt)
         case "mor_fold" =>
           TableLog.morFold(s, reg.table)
         case "zorder_maintain" =>
           TableLog.zOrderMaintain(s, reg.table, targetBytes = longArg(1),
-            statsCols = reg.statsCols, strStatsCols = reg.strStatsCols,
-            bloomStatsCols = reg.bloomStatsCols,
             smallBytes =
               if (c.args.size > 2) longArg(2) else 0L)
         case "vacuum_keep" =>
@@ -207,9 +199,7 @@ object GraftSqlDml {
             TableLog.dvPrune(s, reg.table, b, cond,
               face = s"CALL replace_where('$view', …)")
           TableLog.snapshot(reg.table).foreach(pruned)
-          TableLog.replaceWhere(s, reg.table, cond, aligned,
-            statsCols = reg.statsCols, strStatsCols = reg.strStatsCols,
-            bloomStatsCols = reg.bloomStatsCols, prune = pruned)
+          TableLog.replaceWhere(s, reg.table, cond, aligned, prune = pruned)
         // the acting half of time travel from SQL text: rewind the
         // table to a VERSION (integer) or a TAG (string) — one full-
         // manifest commit, history intact, same refusals as the Scala
@@ -242,25 +232,21 @@ object GraftSqlDml {
         case "zorder" =>
           TableLog.zOrder(s, reg.table, longArg(1).toInt,
             strArg(2), (longArg(3), longArg(4)),
-            strArg(5), (longArg(6), longArg(7)),
-            statsCols = reg.statsCols)
+            strArg(5), (longArg(6), longArg(7)))
         case "hilbert_order" =>
           TableLog.hilbertOrder(s, reg.table, longArg(1).toInt,
             strArg(2), (longArg(3), longArg(4)),
-            strArg(5), (longArg(6), longArg(7)),
-            statsCols = reg.statsCols)
+            strArg(5), (longArg(6), longArg(7)))
         case "zorder3" =>
           TableLog.zOrder3(s, reg.table, longArg(1).toInt,
             strArg(2), (longArg(3), longArg(4)),
             strArg(5), (longArg(6), longArg(7)),
-            strArg(8), (longArg(9), longArg(10)),
-            statsCols = reg.statsCols)
+            strArg(8), (longArg(9), longArg(10)))
         case "hilbert_order3" =>
           TableLog.hilbertOrder3(s, reg.table, longArg(1).toInt,
             strArg(2), (longArg(3), longArg(4)),
             strArg(5), (longArg(6), longArg(7)),
-            strArg(8), (longArg(9), longArg(10)),
-            statsCols = reg.statsCols)
+            strArg(8), (longArg(9), longArg(10)))
       })
     }
   }
@@ -275,18 +261,13 @@ object GraftSqlDml {
     * untouched. LOCATION is required (the commit log lives there);
     * `PARTITIONED BY` refuses (cluster with zOrder/zOrder3 after
     * load); `IF NOT EXISTS` on an existing log is a no-op that still
-    * registers the view. The stat-column OPTIONS become the
-    * registration every later DML re-derives. */
-  /** The shared CTAS/RTAS spec: name, LOCATION, OPTIONS-declared stat
-    * columns, and the (possibly time-traveling) source plan. */
+    * registers the view — and refuses when its OPTIONS declare a
+    * different write spec than the log records. The OPTIONS are the
+    * table's write spec, recorded in version 1. */
+  /** The shared CTAS/RTAS spec: name, LOCATION, the OPTIONS-declared
+    * write spec, and the (possibly time-traveling) source plan. */
   private final case class DdlSpec(name: String, loc: String,
-      st: Seq[String], sst: Seq[String], bst: Seq[String],
-      morKey: Option[String], mdp: Long, srcPlan: LogicalPlan) {
-    def register(s: SparkSession): Unit =
-      TableLog.registerSqlTable(s, name, loc, statsCols = st,
-        strStatsCols = sst, bloomStatsCols = bst, morKey = morKey,
-        maxDvPositions = mdp)
-  }
+      spec: TableLog.WriteSpec, srcPlan: LogicalPlan)
 
   private def ddlSpecOf(spark: SparkSession, verb: String,
       nm: LogicalPlan, ts0: TableSpecBase,
@@ -324,22 +305,12 @@ object GraftSqlDml {
                 s"$verb $name USING graft",
                 s"OPTION '$k' must be a string literal"))
           }.toMap
-        def cols(k: String): Seq[String] = opts.get(k).toSeq
-          .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
-        val known = Set("statscols", "strstatscols", "bloomstatscols",
-          "morkey", "maxdvpositions")
-        opts.keys.filterNot(known).foreach(k => unsupported(
-          s"$verb $name USING graft",
-          s"unknown OPTION '$k' — supported: statsCols, strStatsCols, " +
-            "bloomStatsCols, morKey, maxDvPositions"))
-        val mdp = opts.get("maxdvpositions").map(v =>
-          try v.trim.toLong catch { case _: NumberFormatException =>
-            unsupported(s"$verb $name USING graft",
-              s"OPTION 'maxDvPositions' must be a long (got '$v')")
-          }).getOrElse(2000000L)
-        Some(DdlSpec(name, loc, cols("statscols"), cols("strstatscols"),
-          cols("bloomstatscols"),
-          opts.get("morkey").map(_.trim).filter(_.nonEmpty), mdp,
+        opts.keys.filterNot(graft.catalog.GraftCatalog.isSpecKey)
+          .foreach(k => unsupported(s"$verb $name USING graft",
+            s"unknown OPTION '$k' — supported: statsCols, strStatsCols, " +
+              "bloomStatsCols, morKey, maxDvPositions"))
+        Some(DdlSpec(name, loc,
+          graft.catalog.GraftCatalog.specOf(opts, s"$verb $name"),
           timeTravel(spark, query).getOrElse(query)))
       case _ => None
     }
@@ -351,13 +322,18 @@ object GraftSqlDml {
       val ifNotExists = c.ignoreIfExists
       GraftDmlCommand("create", d.name, d.loc, s => {
         val v =
-          if (ifNotExists && TableLog.latestVersion(d.loc) > 0)
+          if (ifNotExists && TableLog.latestVersion(d.loc) > 0) {
+            val have = TableLog.writeSpec(d.loc)
+            val asked = TableLog.checkedSpec(d.loc,
+              TableLog.tableSchemaOf(d.loc), d.spec)
+            if (d.spec != TableLog.WriteSpec() && asked != have) unsupported(
+              s"CREATE TABLE IF NOT EXISTS ${d.name}",
+              s"the log at ${d.loc} records $have, the OPTIONS declare " +
+                s"$asked — drop the OPTIONS, or change the spec with " +
+                "TableLog.setWriteSpec")
             TableLog.latestVersion(d.loc)
-          else TableLog.create(s, d.loc,
-            org.apache.spark.sql.graft.Bridge.ofRows(s, d.srcPlan),
-            statsCols = d.st, strStatsCols = d.sst,
-            bloomStatsCols = d.bst)
-        d.register(s)
+          } else createAs(s, d)
+        TableLog.registerSqlTable(s, d.name, d.loc)
         v
       })
     }
@@ -379,21 +355,23 @@ object GraftSqlDml {
         val v =
           if (exists)
             TableLog.rewrite(s, d.loc, "overwrite",
-              expectRows = _ => None, statsCols = d.st,
-              strStatsCols = d.sst, bloomStatsCols = d.bst)(_ =>
+              expectRows = _ => None, respec = Some(d.spec))(_ =>
               org.apache.spark.sql.graft.Bridge.ofRows(s, d.srcPlan))
-          else if (orCreate)
-            TableLog.create(s, d.loc,
-              org.apache.spark.sql.graft.Bridge.ofRows(s, d.srcPlan),
-              statsCols = d.st, strStatsCols = d.sst,
-              bloomStatsCols = d.bst)
+          else if (orCreate) createAs(s, d)
           else sys.error(s"REPLACE TABLE ${d.name}: no committed " +
             s"version at ${d.loc} — use CREATE TABLE, or CREATE OR " +
             "REPLACE")
-        d.register(s)
+        TableLog.registerSqlTable(s, d.name, d.loc)
         v
       })
     }
+
+  private def createAs(s: SparkSession, d: DdlSpec): Long =
+    TableLog.create(s, d.loc,
+      org.apache.spark.sql.graft.Bridge.ofRows(s, d.srcPlan),
+      statsCols = d.spec.longCols, strStatsCols = d.spec.strCols,
+      bloomStatsCols = d.spec.bloomCols, morKey = d.spec.morKey,
+      maxDvPositions = d.spec.maxDvPositions)
 
   /** `DROP TABLE <registered view>` — EXTERNAL-table semantics:
     * unregisters the view and the DML registration, leaving the
@@ -535,12 +513,12 @@ object GraftSqlDml {
   }
 
   /** `INSERT INTO <registered view>` (VALUES or SELECT source) →
-    * `TableLog.append` with the registration's stat columns — the
-    * most common DML verb, completing the SQL mutation story. Source
-    * columns align POSITIONALLY (standard SQL); an explicit column
-    * list (or BY NAME) must cover every table column — log tables
-    * have no column defaults, so a partial insert is refused rather
-    * than null-filled. Values cast to the table's recorded types.
+    * `TableLog.append` — the most common DML verb, completing the SQL
+    * mutation story. Source columns align POSITIONALLY (standard
+    * SQL); an explicit column list (or BY NAME) must cover every table
+    * column — log tables have no column defaults, so a partial insert
+    * is refused rather than null-filled. Values cast to the table's
+    * recorded types.
     * `INSERT OVERWRITE` is the whole-table REPLACE (standard Spark
     * semantics for an unpartitioned target) — one full-rewrite commit
     * through `TableLog.rewrite`, so history keeps the pre-overwrite
@@ -590,13 +568,8 @@ object GraftSqlDml {
       }: _*)
       if (i.overwrite)
         TableLog.rewrite(s, reg.table, "overwrite",
-          expectRows = _ => None, statsCols = reg.statsCols,
-          strStatsCols = reg.strStatsCols,
-          bloomStatsCols = reg.bloomStatsCols)(_ => aligned)
-      else
-        TableLog.append(s, reg.table, aligned, reg.statsCols,
-          strStatsCols = reg.strStatsCols,
-          bloomStatsCols = reg.bloomStatsCols)
+          expectRows = _ => None)(_ => aligned)
+      else TableLog.append(s, reg.table, aligned)
     })
   }
 
@@ -609,12 +582,11 @@ object GraftSqlDml {
 
   /** A DML-claimable TARGET: a registered view (single-part name) or a
     * `catalog.ns.table` identifier through a configured
-    * [[graft.catalog.GraftCatalog]] (stat columns and morKey come from
-    * the table's declared properties instead of a registration). The
-    * returned display name is what error messages and the command's
-    * view-refresh use — catalog names have no temp view, so
-    * `GraftDmlCommand` skips the refresh for them (each catalog query
-    * re-resolves its snapshot through `loadTable` anyway). */
+    * [[graft.catalog.GraftCatalog]]. The returned display name is what
+    * error messages and the command's view-refresh use — catalog names
+    * have no temp view, so `GraftDmlCommand` skips the refresh for them
+    * (each catalog query re-resolves its snapshot through `loadTable`
+    * anyway). */
   private def targetReg(spark: SparkSession,
       p: LogicalPlan): Option[(String, Reg)] = p match {
     case u: UnresolvedRelation if u.multipartIdentifier.size == 1 =>
@@ -753,7 +725,8 @@ object GraftSqlDml {
     }
     // a key IN-list / key equality on a MOR-keyed table: the
     // scattered-key shape deleteMor exists for — zero rewrites
-    val morKeys: Option[Seq[Long]] = reg.morKey.flatMap(mk => cond match {
+    val spec = reg.spec
+    val morKeys: Option[Seq[Long]] = spec.morKey.flatMap(mk => cond match {
       case In(a, vs) if attrOf(a).contains(mk) && vs.nonEmpty &&
           vs.forall(longOf(_).isDefined) => Some(vs.flatMap(longOf))
       case EqualTo(a, l) if attrOf(a).contains(mk) &&
@@ -767,20 +740,17 @@ object GraftSqlDml {
         s => {
           import s.implicits._
           TableLog.deleteMor(s, reg.table,
-            reg.morKey.get, keys.toDF(reg.morKey.get))
+            spec.morKey.get, keys.toDF(spec.morKey.get))
         })
       case (_, Some((c, vals))) =>
         GraftDmlCommand("delete", view, reg.table,
-          s => TableLog.deleteWhereIn(s, reg.table, c, vals, reg.statsCols,
-            reg.strStatsCols, bloomStatsCols = reg.bloomStatsCols))
+          s => TableLog.deleteWhereIn(s, reg.table, c, vals))
       case _ =>
         rangeOf(cond) match {
           case Some((c, lo, hi)) if integralRangeOk(reg, c) =>
             if (lo > hi) noOp("delete", view, reg)
             else GraftDmlCommand("delete", view, reg.table,
-              s => TableLog.deleteWhere(s, reg.table, c, lo, hi,
-                reg.statsCols, reg.strStatsCols,
-                bloomStatsCols = reg.bloomStatsCols))
+              s => TableLog.deleteWhere(s, reg.table, c, lo, hi))
           case _ =>
             // POSITIONAL fallback — the completion of the SQL DELETE
             // story: any other deterministic predicate (modulo,
@@ -794,9 +764,7 @@ object GraftSqlDml {
             GraftDmlCommand("delete", view, reg.table,
               s => TableLog.deleteDv(s, reg.table,
                 org.apache.spark.sql.graft.Bridge.column(cond),
-                maxPositions = reg.maxDvPositions,
-                statsCols = reg.statsCols, strStatsCols = reg.strStatsCols,
-                bloomStatsCols = reg.bloomStatsCols))
+                maxPositions = spec.maxDvPositions))
         }
     }
   }
@@ -825,13 +793,10 @@ object GraftSqlDml {
       case Some((c, lo, hi)) if integralRangeOk(reg, c) =>
         if (lo > hi) noOp("update", view, reg)
         else GraftDmlCommand("update", view, reg.table,
-          s => reg.morKey match {
-            case Some(mk) => TableLog.updateMor(s, reg.table, mk, c, lo,
-              hi, set, reg.statsCols, reg.strStatsCols,
-              bloomStatsCols = reg.bloomStatsCols)
-            case None => TableLog.updateWhere(s, reg.table, c, lo, hi,
-              set, reg.statsCols, reg.strStatsCols,
-              bloomStatsCols = reg.bloomStatsCols)
+          s => reg.spec.morKey match {
+            case Some(mk) =>
+              TableLog.updateMor(s, reg.table, mk, c, lo, hi, set)
+            case None => TableLog.updateWhere(s, reg.table, c, lo, hi, set)
           })
       case _ =>
         // POSITIONAL fallback: any other deterministic predicate
@@ -840,9 +805,7 @@ object GraftSqlDml {
         GraftDmlCommand("update", view, reg.table,
           s => TableLog.updateDv(s, reg.table,
             org.apache.spark.sql.graft.Bridge.column(cond), set,
-            reg.statsCols, reg.strStatsCols,
-            bloomStatsCols = reg.bloomStatsCols,
-            maxPositions = reg.maxDvPositions))
+            maxPositions = reg.spec.maxDvPositions))
     }
   }
 
@@ -878,12 +841,9 @@ object GraftSqlDml {
     val source = timeTravel(spark, m.sourceTable).getOrElse(m.sourceTable)
     GraftDmlCommand("merge", view, reg.table, s => {
       val src = org.apache.spark.sql.graft.Bridge.ofRows(s, source)
-      if (reg.morKey.isDefined)
-        TableLog.mergeMor(s, reg.table, src, key, reg.statsCols,
-          reg.strStatsCols, bloomStatsCols = reg.bloomStatsCols)
-      else
-        TableLog.mergeCow(s, reg.table, src, key, reg.statsCols,
-          reg.strStatsCols, bloomStatsCols = reg.bloomStatsCols)
+      if (reg.spec.morKey.isDefined)
+        TableLog.mergeMor(s, reg.table, src, key)
+      else TableLog.mergeCow(s, reg.table, src, key)
     })
   }
 }

@@ -173,7 +173,71 @@ object TableLog {
       counters: Map[String, Long] = Map.empty,
       dels: Seq[DeleteEntry] = Nil,
       schemaOps: Seq[SchemaOp] = Nil,
-      checks: Seq[(String, String)] = Nil)
+      checks: Seq[(String, String)] = Nil,
+      spec: WriteSpec = WriteSpec())
+
+  /** The default `maxDvPositions` of a [[WriteSpec]]: ~16 MB of
+    * positions shipped with each read plan. */
+  val DefaultMaxDvPositions: Long = 2000000L
+
+  /** The table's WRITE SPEC, declared once by the table: the columns
+    * every write measures long ranges, string ranges and blooms of,
+    * plus the SQL mutation route (`morKey`) and the per-commit
+    * deletion-vector cap. `create` records it in version 1 and
+    * `setWriteSpec` changes it; like the CHECK set it rides complete in
+    * every manifest, so every write reads it from its base snapshot. A
+    * file written under an older spec lacks the newer stats and is
+    * kept by the pruner (stats prune IO, never semantics). */
+  final case class WriteSpec(longCols: Seq[String] = Nil,
+      strCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
+      morKey: Option[String] = None,
+      maxDvPositions: Long = DefaultMaxDvPositions) {
+    /** The statistics a write of a frame with `schema` records: the
+      * declared columns the frame carries (an append may omit a
+      * column; a key sidecar carries only its key), plus a layout
+      * rewrite's `extraLong` cluster columns and `derived` curve stat,
+      * and the write's `audits`. */
+    private[graft] def writeStats(
+        schema: org.apache.spark.sql.types.StructType,
+        extraLong: Seq[String] = Nil,
+        derived: Seq[(String, Column)] = Nil,
+        audits: Seq[StagedAudit] = Nil): WriteStats.Spec = {
+      val has = schema.fieldNames.toSet
+      WriteStats.Spec((longCols ++ extraLong).distinct.filter(has),
+        strCols.filter(has), bloomCols.filter(has), derived, audits)
+    }
+
+    /** This spec after a column rename (`from` → `to`) or, with
+      * `to = None`, a column drop. */
+    private[graft] def renamed(from: String, to: Option[String]): WriteSpec = {
+      def m(cs: Seq[String]) = cs.flatMap(c => if (c == from) to else Some(c))
+      copy(m(longCols), m(strCols), m(bloomCols),
+        morKey.flatMap(k => if (k == from) to else Some(k)))
+    }
+
+    override def toString: String =
+      s"WriteSpec(stats=[${longCols.mkString(",")}], " +
+        s"str=[${strCols.mkString(",")}], " +
+        s"bloom=[${bloomCols.mkString(",")}], " +
+        s"morKey=${morKey.getOrElse("")}, maxDv=$maxDvPositions)"
+  }
+
+  /** Resolve `spec` against `schema` (names match case-insensitively
+    * and are recorded under the schema's own spelling), refusing a
+    * column the table lacks — named with the table and the column. */
+  private[graft] def checkedSpec(table: String,
+      schema: org.apache.spark.sql.types.StructType,
+      spec: WriteSpec): WriteSpec = {
+    def res(c: String): String = schema.fieldNames.find(_.equalsIgnoreCase(c))
+      .getOrElse(throw new IllegalArgumentException(
+        s"write spec of $table names column '$c', which is not in the " +
+          s"table schema (${schema.fieldNames.mkString(", ")})"))
+    require(spec.maxDvPositions > 0,
+      s"write spec of $table: maxDvPositions must be positive")
+    WriteSpec(spec.longCols.map(res).distinct, spec.strCols.map(res).distinct,
+      spec.bloomCols.map(res).distinct, spec.morKey.map(res),
+      spec.maxDvPositions)
+  }
 
   /** Full checkpoint every Nth append: snapshot resolution replays at
     * most N−1 deltas; commit cost is amortized O(table files / N +
@@ -235,7 +299,12 @@ object TableLog {
       // gate folds them into `checks`, the complete current set
       ckAdd: Option[(String, String)] = None,
       ckDrop: Option[String] = None,
-      checks: Seq[(String, String)] = Nil)
+      checks: Seq[(String, String)] = Nil,
+      // write spec: specSet is THIS commit's declaration (create,
+      // setWriteSpec, a rename/drop); the gate folds it into `spec`,
+      // the complete current spec
+      specSet: Option[WriteSpec] = None,
+      spec: WriteSpec = WriteSpec())
 
   /** Split a structured txn id into (stream prefix, sequence):
     * `ingest#42` → ("ingest#", 42), `mv@17` → ("mv@", 17). Opaque ids
@@ -409,8 +478,29 @@ object TableLog {
           val Array(n, e) = l.drop(6).split(";", 2)
           java.net.URLDecoder.decode(n, "UTF-8") ->
             java.net.URLDecoder.decode(e, "UTF-8")
-        }.toSeq))
+        }.toSeq,
+      spec = parseSpec(kv)))
   }
+
+  // write-spec codec: `spec.stats=`/`spec.str=`/`spec.bloom=`/
+  // `spec.morKey=` (comma-joined URL-encoded names) and `spec.maxDv=`,
+  // each only when non-empty/non-default — plain `key=` lines, so no
+  // format bump
+  private def parseSpec(kv: Map[String, String]): WriteSpec = {
+    def cols(k: String): Seq[String] = kv.get(s"spec.$k").toSeq
+      .flatMap(_.split(",")).map(java.net.URLDecoder.decode(_, "UTF-8"))
+    WriteSpec(cols("stats"), cols("str"), cols("bloom"),
+      cols("morKey").headOption,
+      kv.get("spec.maxDv").map(_.toLong).getOrElse(DefaultMaxDvPositions))
+  }
+
+  private def renderSpec(sp: WriteSpec): String =
+    Seq("stats" -> sp.longCols, "str" -> sp.strCols, "bloom" -> sp.bloomCols,
+      "morKey" -> sp.morKey.toSeq).collect { case (k, cs) if cs.nonEmpty =>
+        cs.map(java.net.URLEncoder.encode(_, "UTF-8"))
+          .mkString(s"spec.$k=", ",", "\n") }.mkString +
+      (if (sp.maxDvPositions == DefaultMaxDvPositions) ""
+       else s"spec.maxDv=${sp.maxDvPositions}\n")
 
   private def renderManifest(r: ManifestRec): String = {
     val sb = new StringBuilder
@@ -441,6 +531,7 @@ object TableLog {
       sb ++= s"check=${java.net.URLEncoder.encode(n, "UTF-8")};" +
         s"${java.net.URLEncoder.encode(e, "UTF-8")}\n"
     }
+    sb ++= renderSpec(r.spec)
     sb ++= "end=true\n"
     sb.toString
   }
@@ -453,7 +544,8 @@ object TableLog {
     parseRec(table, v).flatMap { r =>
       if (r.kind == "full")
         Some(Snapshot(r.version, r.baseVersion, r.action, r.rows, r.files,
-          r.txn, r.schema, r.counters, r.dels, r.schemaOps, r.checks))
+          r.txn, r.schema, r.counters, r.dels, r.schemaOps, r.checks,
+          r.spec))
       else
         // a missing/unparseable base usually means a concurrent vacuum
         // dropped this version's chain while we resolved it — surface
@@ -465,7 +557,7 @@ object TableLog {
           Snapshot(r.version, r.baseVersion, r.action, r.rows,
             base.files.filterNot(f => rm(f.path)) ++ r.adds,
             r.txn, r.schema, r.counters, base.dels ++ r.delAdds,
-            r.schemaOps, r.checks)
+            r.schemaOps, r.checks, r.spec)
         }
     }
 
@@ -575,9 +667,13 @@ object TableLog {
       if (r.action == "clone") r.checks
       else prev.map(_.checks).getOrElse(Nil)
         .filterNot(c => r.ckDrop.contains(c._1)) ++ r.ckAdd.toSeq
+    // write spec: this commit's declaration, else the previous one
+    // (a CLONE declares its source's spec)
+    val spec = r.specSet.orElse(prev.map(_.spec)).getOrElse(WriteSpec())
     val stamped = r.copy(
       schemaOps = ops,
       checks = cks,
+      spec = spec,
       tsMs = math.max(System.currentTimeMillis, prevTs + 1),
       txnHw = hw,
       // defensive backstop for the MOR-delete fence: a delta's adds
@@ -661,21 +757,22 @@ object TableLog {
     * `<table>/data/<setId>/`, returning its manifest entries and row
     * count. Never visible until a manifest referencing it commits.
     * Every entry's rows, bytes, range, null-count and bloom stats come
-    * from the write job itself ([[WriteStats]]), and the `audits` are
-    * counted over exactly the rows written; a violation refuses the
-    * write. On ANY failure — a failed write job or a refusal — the
-    * whole set directory is deleted before the rethrow, so a refused
-    * write leaves the table byte-identical. */
+    * from the write job itself ([[WriteStats]]) as the write spec
+    * `ws` declares them — the table's, from the base snapshot, or a
+    * key sidecar's own — plus a layout rewrite's cluster columns and
+    * curve stat; the `audits` are counted over exactly the rows
+    * written, and a violation refuses the write. On ANY failure — a
+    * failed write job or a refusal — the whole set directory is
+    * deleted before the rethrow, so a refused write leaves the table
+    * byte-identical. */
   private def writeDataFiles(spark: SparkSession, table: String,
-      df: DataFrame, statsCols: Seq[String],
-      strStatsCols: Seq[String] = Nil,
-      bloomCols: Seq[String] = Nil,
+      ws: WriteSpec, df: DataFrame,
+      clusterCols: Seq[String] = Nil,
       derivedStats: Seq[(String, Column)] = Nil,
       audits: Seq[StagedAudit] = Nil): (Seq[FileEntry], Long) = {
     val setId = java.util.UUID.randomUUID().toString
     val outDir = Paths.get(table, "data", setId)
-    val spec = WriteStats.Spec(statsCols, strStatsCols, bloomCols,
-      derivedStats, audits)
+    val spec = ws.writeStats(df.schema, clusterCols, derivedStats, audits)
     try {
       val files = writeStagedFiles(spark, outDir.toString, df, spec)
       spec.enforce(files)
@@ -700,6 +797,16 @@ object TableLog {
   private def auditStaged(table: String, staged: Seq[FileEntry]*)(
       ok: Boolean, msg: => String): Unit =
     if (!ok) { staged.foreach(dropStaged(table, _)); require(ok, msg) }
+
+  /** The write spec of a delete-key sidecar on `keyCol`: its own key
+    * range, long or string. */
+  private def keySpec(keyCol: String, isString: Boolean): WriteSpec =
+    if (isString) WriteSpec(strCols = Seq(keyCol))
+    else WriteSpec(Seq(keyCol))
+
+  /** The write spec of a deletion-vector sidecar: position range and
+    * target-file range. */
+  private[graft] lazy val dvSpec = WriteSpec(Seq(DvPosField), Seq(DvFileField))
 
   /** The one-output [[WriteStats.writeStaged]]: `df`'s rows as one
     * file per task in `outDir`, measured by `stats`, in ONE Spark job.
@@ -744,24 +851,21 @@ object TableLog {
 
   /** Register a log table for the SQL face: the declarative `scan`
     * becomes temp view `name` (SELECT), and UPDATE / DELETE / MERGE
-    * text naming the view routes to the TableLog mutation faces with
-    * the given stat columns re-derived on every rewriting commit —
+    * text naming the view routes to the TableLog mutation faces —
     * through `TableLog.sql` on any session, or plain `spark.sql` when
-    * the session was built with `GraftExtensions`. DML commits
-    * re-register the view, so subsequent SELECTs see the new
-    * version. */
-  def registerSqlTable(spark: SparkSession, name: String, table: String,
-      statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil,
-      morKey: Option[String] = None,
-      maxDvPositions: Long = 2000000L): Unit = {
+    * the session was built with `GraftExtensions`. The registration
+    * holds only the table path: every commit measures the stats the
+    * table's write spec declares, and `morKey`/`maxDvPositions` route
+    * from the same spec. DML commits re-register the view, so
+    * subsequent SELECTs see the new version. */
+  def registerSqlTable(spark: SparkSession, name: String,
+      table: String): Unit = {
     scan(spark, table).createOrReplaceTempView(name)
     sqlDmlRegs.synchronized {
       sqlDmlRegs.computeIfAbsent(spark, _ =>
         new java.util.concurrent.ConcurrentHashMap())
     }.put(name.toLowerCase(java.util.Locale.ROOT),
-      graft.plans.GraftSqlDml.Reg(table, statsCols, strStatsCols,
-        bloomStatsCols, morKey, maxDvPositions))
+      graft.plans.GraftSqlDml.Reg(table))
   }
 
   private[graft] def sqlDmlReg(spark: SparkSession, name: String)
@@ -898,7 +1002,7 @@ object TableLog {
     // (same applicable-suffix key as ever) — NOT per-file fence sets,
     // which would explode one cohort into one-per-touched-file and
     // trade a single K-sidecar anti-join for K unions (measured 16×
-    // worse at 32 scattered sidecars, tools.MorMaintStats). Each
+    // worse at 32 scattered sidecars, DEVNOTES round 15). Each
     // cohort additionally drops sidecars stat-disjoint from ALL its
     // files, shrinking the key-union without changing cohort count.
     // O(files × dels) stat comparisons at planning — dels are
@@ -1099,7 +1203,7 @@ object TableLog {
   }
 
   /** The LOSSLESS widening lattice, probed against this Spark build's
-    * vectorized parquet reader (tools/WidenProbe — every pair here
+    * vectorized parquet reader (DEVNOTES round 11 — every pair here
     * prints OK; long->double prints FAIL and is excluded as lossy
     * beyond 2^53). Returns the wider of `a`/`b` when the pair is a
     * safe widening in either direction, else None. */
@@ -1117,7 +1221,7 @@ object TableLog {
       // arrays of the SAME element type unify on containsNull (a
       // nullability flip is not a type change); element WIDENING inside
       // arrays stays refused — the vectorized reader's nested upcast is
-      // unprobed (WidenProbe covers scalars only)
+      // unprobed (the probe covered scalars only)
       case (ArrayType(xa, n1), ArrayType(xb, n2)) if xa == xb =>
         Some(ArrayType(xa, n1 || n2))
       case (FloatType, DoubleType) | (DoubleType, FloatType) =>
@@ -1410,13 +1514,44 @@ object TableLog {
   /** Append `df`: new data files + the base snapshot's file list. The
     * CAS retry re-reads the file list only — the written files are
     * immutable and reusable across retries, so concurrent appends all
-    * succeed, serialized by version. Returns the committed version. */
+    * succeed, serialized by version. Returns the committed version.
+    *
+    * The files carry the stats of the table's write spec. On a table
+    * with no version an append IS `create` and its stat lists declare
+    * the spec; otherwise they only check it (`checkDeclared`), refusing
+    * before anything is written. */
   def append(spark: SparkSession, table: String, df: DataFrame,
       statsCols: Seq[String] = Nil, txnId: Option[String] = None,
       strStatsCols: Seq[String] = Nil,
       counterDelta: Map[String, Long] = Map.empty,
       bloomStatsCols: Seq[String] = Nil,
       counterPin: Map[String, Long] = Map.empty): Long = {
+    val asked = WriteSpec(statsCols, strStatsCols, bloomStatsCols)
+    val start = snapshot(table)
+    start.foreach(b => checkDeclared(table, b.spec, asked, "append"))
+    appendImpl(spark, table, df, txnId, counterDelta, counterPin, start,
+      if (start.isEmpty) Some(checkedSpec(table, df.schema, asked)) else None)
+  }
+
+  /** The stat lists `append` and `deleteDv` still accept only CHECK
+    * the recorded spec: each non-empty list must equal its, as a set. */
+  private def checkDeclared(table: String, recorded: WriteSpec,
+      asked: WriteSpec, face: String): Unit = {
+    def same(a: Seq[String], b: Seq[String]) = a.isEmpty ||
+      a.map(_.toLowerCase(java.util.Locale.ROOT)).toSet ==
+        b.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
+    require(same(asked.longCols, recorded.longCols) &&
+        same(asked.strCols, recorded.strCols) &&
+        same(asked.bloomCols, recorded.bloomCols),
+      s"$face to $table: the passed stat lists ($asked) differ from the " +
+        s"table's write spec ($recorded) — writes measure the declared " +
+        "spec; change it with setWriteSpec, or pass no lists")
+  }
+
+  private def appendImpl(spark: SparkSession, table: String, df: DataFrame,
+      txnId: Option[String], counterDelta: Map[String, Long],
+      counterPin: Map[String, Long], start: Option[Snapshot],
+      declare: Option[WriteSpec]): Long = {
     // `counterPin`: SET-semantics counters for structural constants (an
     // index's sign-bit width, its pinned codebook version) — set when
     // absent, ASSERTED equal when present. Summing a pin like an
@@ -1436,17 +1571,33 @@ object TableLog {
     // CHECK constraints are audited over the rows the write job writes
     // (snapshot-isolated: the set as of the append's start); a
     // violation drops the staged set before any manifest sees it
-    val audits = snapshot(table).map(b =>
+    val audits = start.map(b =>
       checkAudits(table, b.checks, "append")).getOrElse(Nil)
-    val (newFiles, newRows) =
-      writeDataFiles(spark, table, df, statsCols, strStatsCols,
-        bloomStatsCols, audits = audits)
+    val (newFiles, _) = writeDataFiles(spark, table,
+      declare.orElse(start.map(_.spec)).getOrElse(WriteSpec()), df,
+      audits = audits)
+    commitAppend(spark, table, newFiles, txnId, df.schema, "append",
+      counterDelta, counterPin, declare)
+  }
+
+  /** The commit half of an append, shared by `append` and the streaming
+    * sink's epochs (`commitStreamEpoch`): add the written `newFiles` to
+    * the base snapshot's file list under the evolved schema, CAS-retry
+    * against racing writers (re-reading the base only — the files are
+    * immutable and reused), and publish the feed. */
+  private def commitAppend(spark: SparkSession, table: String,
+      newFiles: Seq[FileEntry], txnId: Option[String],
+      writeSchema: org.apache.spark.sql.types.StructType, what: String,
+      counterDelta: Map[String, Long] = Map.empty,
+      counterPin: Map[String, Long] = Map.empty,
+      declare: Option[WriteSpec] = None): Long = {
+    val newRows = newFiles.map(_.rows).sum
     var committed = -1L
     while (committed < 0) {
       val base = snapshot(table)
       // a racing writer may have committed the same txn while we wrote
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      val evolved = appendSchema(table, base, df.schema, "append")
+      val evolved = appendSchema(table, base, writeSchema, what)
       val version = base.map(_.version).getOrElse(0L) + 1
       val rows = base.map(_.rows).getOrElse(0L) + newRows
       // cumulative counters: merged INSIDE the CAS loop so a racing
@@ -1471,7 +1622,8 @@ object TableLog {
           ManifestRec(version, version - 1, action, rows, "full",
             base.map(_.files).getOrElse(Nil) ++ stamped, Nil, Nil,
             base.map(_.dels).getOrElse(Nil), Nil,
-            txnId, evolved, counters)
+            txnId, evolved, counters,
+            specSet = if (base.isEmpty) declare else None)
         else
           ManifestRec(version, version - 1, action, rows, "delta",
             Nil, stamped, Nil, Nil, Nil, txnId, evolved, counters)
@@ -1536,7 +1688,11 @@ object TableLog {
         case Some((hn, hv)) =>
           if (n == hn) Some(hv)
           else if (n > hn) None
-          else scan(latest - 1) // older than the frontier: rare
+          // older than the frontier: rare. The index says committed;
+          // a clone's log starts at its fork and a vacuum drops a
+          // prefix, so a scan that finds no manifest naming the id
+          // answers with the oldest retained version
+          else scan(latest - 1).orElse(retainedVersions(table).headOption)
         case None => None // the stream never committed
       }
       case None => scan(latest - 1) // opaque id: unindexed
@@ -1549,19 +1705,47 @@ object TableLog {
     * existing totals (docs doubled, pins corrupted) instead of starting
     * the accounting — refuse loudly. (The check is a fast-path guard;
     * a writer racing between check and commit is still caught by the
-    * CAS loop's pin assert.) */
+    * CAS loop's pin assert.) The stat lists, `morKey` and
+    * `maxDvPositions` DECLARE the table's [[WriteSpec]], recorded in
+    * version 1 (a column `df` lacks is refused); every later write
+    * reads it from there. */
   def create(spark: SparkSession, table: String, df: DataFrame,
       statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
       counterDelta: Map[String, Long] = Map.empty,
       bloomStatsCols: Seq[String] = Nil,
-      counterPin: Map[String, Long] = Map.empty): Long = {
+      counterPin: Map[String, Long] = Map.empty,
+      morKey: Option[String] = None,
+      maxDvPositions: Long = DefaultMaxDvPositions): Long = {
     require(latestVersion(table) == 0L,
       s"create($table): table already has ${latestVersion(table)} committed " +
         "version(s) — create commits version 1 only; use append, or point " +
         "the build at a fresh table")
-    append(spark, table, df, statsCols, strStatsCols = strStatsCols,
-      counterDelta = counterDelta, bloomStatsCols = bloomStatsCols,
-      counterPin = counterPin)
+    appendImpl(spark, table, df, None, counterDelta, counterPin, None,
+      Some(checkedSpec(table, df.schema, WriteSpec(statsCols, strStatsCols,
+        bloomStatsCols, morKey, maxDvPositions))))
+  }
+
+  /** The write spec at the table's latest version. */
+  def writeSpec(table: String): WriteSpec = snapshotOrFail(table).spec
+
+  /** CHANGE the table's write spec — one metadata-only commit; no data
+    * file is rewritten. A column the schema lacks is refused. Like
+    * CHECK constraints, a write that began before this commit uses the
+    * spec it saw. The catalog's `ALTER TABLE … SET/UNSET TBLPROPERTIES`
+    * on the spec keys lands here. */
+  def setWriteSpec(table: String, spec: WriteSpec): Long = {
+    var committed = -1L
+    while (committed < 0) {
+      val base = snapshotOrFail(table)
+      val checked = checkedSpec(table, base.schema.struct, spec)
+      if (checked == base.spec) return base.version
+      val version = base.version + 1
+      val r = ManifestRec(version, base.version, "write_spec", base.rows,
+        "delta", Nil, Nil, Nil, Nil, Nil, None, base.schema,
+        base.counters, specSet = Some(checked))
+      if (tryCommit(table, r)) committed = version
+    }
+    committed
   }
 
   /** The row count and cumulative counters recorded in version `v`'s
@@ -1575,7 +1759,7 @@ object TableLog {
   /** Metadata-only commit: a new version with NO data-file changes —
     * rows, schema, and counters carry over verbatim. Exists so log
     * machinery can be exercised/measured at commit-history scale
-    * (LogStats grows a 10k-version chain in seconds) without paying a
+    * (a 10k-version chain grows in seconds; DEVNOTES round 10) without paying a
     * Spark write per version; checkpoints still land on cadence so
     * resolution stays bounded. Goes through the same CAS gate as every
     * commit (ts + txn index stamped there). */
@@ -1616,9 +1800,10 @@ object TableLog {
     * feed-enabled tables (already-linked feed files carry the old
     * physical name and would read as null downstream) and while a
     * pending MOR delete sidecar keys on the column (compact first).
-    * Range/bloom stats recorded under the old name no longer match the
-    * new — affected files simply stop pruning (stats prune IO, never
-    * semantics); fresh writes record stats under the new name. */
+    * The write spec renames the column in the same commit, so fresh
+    * writes record its stats under the new name; files written before
+    * resolve their stats through the rename op (stats prune IO, never
+    * semantics). */
   def renameColumn(spark: SparkSession, table: String, from: String,
       to: String): Long =
     schemaOpCommit(spark, table, "rename", from, to) { logical =>
@@ -1636,7 +1821,8 @@ object TableLog {
     * keeps the dead incarnation's values out (they read as null) —
     * the resurrection hazard of by-name parquet reads. Allowed on
     * feed tables (narrowing reads drop the column on old links too);
-    * refused while a pending MOR sidecar keys on the column. */
+    * refused while a pending MOR sidecar keys on the column. The
+    * column leaves the write spec in the same commit. */
   def dropColumn(spark: SparkSession, table: String, c: String): Long =
     schemaOpCommit(spark, table, "drop", c, "") { logical =>
       require(logical.fieldNames.contains(c),
@@ -1766,7 +1952,7 @@ object TableLog {
     * frame first arrives wider): one delta manifest with the field's
     * type replaced; zero data files change, and reads apply the
     * widened schema over the old files' narrower physical types (the
-    * probed vectorized-reader upcast — `tools/WidenProbe`, oracled by
+    * probed vectorized-reader upcast — DEVNOTES round 11, oracled by
     * `o41_type_widening`). Anything outside the lattice — narrowing,
     * cross-family changes — refuses with guidance: those need a full
     * rewrite. Refused while a pending MOR delete sidecar keys on the
@@ -1835,9 +2021,13 @@ object TableLog {
       val version = base.version + 1
       // metadata-only commit: delta with no file changes; the gate
       // folds the op into the carried history
+      // the write spec follows the column: renamed, or dropped from it
+      val spec = base.spec.renamed(colName,
+        Some(to).filter(_ => kind == "rename"))
       val r = ManifestRec(version, base.version, "schema", base.rows,
         "delta", Nil, Nil, Nil, Nil, Nil, None, RecordedSchema.of(evolved),
-        base.counters, schemaOps = Seq(SchemaOp(version, kind, colName, to)))
+        base.counters, schemaOps = Seq(SchemaOp(version, kind, colName, to)),
+        specSet = Some(spec).filter(_ != base.spec))
       if (tryCommit(table, r)) committed = version
     }
     committed
@@ -2048,7 +2238,8 @@ object TableLog {
     val hw = parseRec(src, s.version).map(_.txnHw).getOrElse(Map.empty)
     val r = ManifestRec(s.version, s.version - 1, "clone", s.rows, "full",
       s.files, Nil, Nil, s.dels, Nil, None, s.schema, s.counters,
-      txnHw = hw, schemaOps = s.schemaOps, checks = s.checks)
+      txnHw = hw, schemaOps = s.schemaOps, checks = s.checks,
+      specSet = Some(s.spec))
     require(tryCommit(dst, r),
       s"cloneTable: a concurrent clone already committed $dst")
     s.version
@@ -2235,8 +2426,8 @@ object TableLog {
         def range(f: FileEntry): (Long, Long) =
           f.stats.find(_.col == k).map(st => (st.min, st.max)).getOrElse(
             sys.error(s"mergeBranch: added file ${f.path} carries no " +
-              s"'$k' stat — key-disjointness is unprovable; write with " +
-              s"statsCols = Seq(\"$k\"), or merge without keyCol"))
+              s"'$k' stat — key-disjointness is unprovable; declare " +
+              s"'$k' in the write spec, or merge without keyCol"))
         val clashes = for {
           a <- addedS; b <- addedB
           (alo, ahi) = range(a); (blo, bhi) = range(b)
@@ -2343,9 +2534,9 @@ object TableLog {
     Seq((s.version, s.rows, s.files.size.toLong, bytes,
       s.dels.size.toLong, s.schemaOps.size.toLong, s.checks.size.toLong,
       commitTimestamp(table, s.version).getOrElse(0L),
-      s.dels.map(_.file.bytes).sum))
+      s.dels.map(_.file.bytes).sum, s.spec.toString))
       .toDF("version", "rows", "n_files", "bytes", "pending_sidecars",
-        "schema_ops", "checks", "ts_ms", "sidecar_bytes")
+        "schema_ops", "checks", "ts_ms", "sidecar_bytes", "write_spec")
   }
 
   /** The retention floor shared by `vacuum` and `vacuumPreview`:
@@ -2532,32 +2723,8 @@ object TableLog {
     // a violation throws out of the sink's commit(), whose abort()
     // deletes the epoch's files
     stats.enforce(files)
-    val entries = files.map(s => stats.entry(s.name, s))
-    val newRows = entries.map(_.rows).sum
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshot(table)
-      committedTxnVersion(table, txnId).foreach(return _)
-      val evolved = appendSchema(table, base, writeSchema,
-        "streaming append")
-      val version = base.map(_.version).getOrElse(0L) + 1
-      val rows = base.map(_.rows).getOrElse(0L) + newRows
-      val counters = base.map(_.counters).getOrElse(Map.empty[String, Long])
-      val action = if (base.isEmpty) "create" else "append"
-      val stamped = entries.map(_.copy(ver = version))
-      val r =
-        if (base.isEmpty || version % checkpointInterval == 0)
-          ManifestRec(version, version - 1, action, rows, "full",
-            base.map(_.files).getOrElse(Nil) ++ stamped, Nil, Nil,
-            base.map(_.dels).getOrElse(Nil), Nil,
-            Some(txnId), evolved, counters)
-        else
-          ManifestRec(version, version - 1, action, rows, "delta",
-            Nil, stamped, Nil, Nil, Nil, Some(txnId), evolved, counters)
-      if (tryCommit(table, r)) committed = version
-    }
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
+    commitAppend(spark, table, files.map(s => stats.entry(s.name, s)),
+      Some(txnId), writeSchema, "streaming append")
   }
 
   /** EXACTLY-ONCE streaming ingest: each micro-batch appends through
@@ -2569,14 +2736,12 @@ object TableLog {
     * document around. Drains currently available input. */
   def appendStream(spark: SparkSession, table: String, stream: DataFrame,
       streamId: String, checkpoint: Option[String] = None,
-      statsCols: Seq[String] = Nil,
       autoCompactBytes: Option[Long] = None,
       autoZOrderBytes: Option[Long] = None): Unit =
     graft.streaming.StreamingOps.runForeachBatch(stream,
       org.apache.spark.sql.streaming.OutputMode.Append(), checkpoint) {
       (batch, batchId) =>
-        append(spark, table, batch, statsCols,
-          txnId = Some(s"$streamId#$batchId"))
+        append(spark, table, batch, txnId = Some(s"$streamId#$batchId"))
         // auto-OPTIMIZE tick: streaming ingest is what CREATES the
         // small-file problem, so the ingest loop owns the fix —
         // `compactSmall` is O(files under the threshold), carries
@@ -2586,8 +2751,7 @@ object TableLog {
         // may still compact, which is a harmless (and welcome)
         // layout-only maintenance pass; feed tables publish nothing
         // for "compact" commits, so consumers are undisturbed.
-        autoCompactBytes.foreach(b =>
-          compactSmall(spark, table, b, statsCols = statsCols))
+        autoCompactBytes.foreach(b => compactSmall(spark, table, b))
         // clustering twin: once the table HAS a z layout (a one-time
         // zOrder/zOrder3 by the operator), each batch's unclustered
         // tail re-clusters incrementally — O(new data) — so box
@@ -2599,7 +2763,6 @@ object TableLog {
             _.stats.exists(st => isLayoutStat(st.col))))
           if (hasLayout)
             zOrderMaintain(spark, table, targetBytes = b,
-              statsCols = statsCols,
               smallBytes = autoCompactBytes.getOrElse(0L))
         }
         ()
@@ -3254,7 +3417,7 @@ object TableLog {
   private[graft] def feedLinksBetween(table: String, vFrom: Long,
       vTo: Long): Seq[(Long, java.nio.file.Path)] = {
     // O(feed dir) per call by design — the retention floor
-    // (vacuumFeed) is what bounds the directory, and tools.FeedStats
+    // (vacuumFeed) is what bounds the directory, and DEVNOTES round 18
     // puts the flat-layout cost at ~10 ms per bounded window at 10k
     // retained links (~100 ms at an unvacuumed 100k). Version parse
     // and range check run per NAME with no regex and no allocation;
@@ -3374,12 +3537,9 @@ object TableLog {
     * verbatim, and the row-count audit holds, so index semantics are
     * untouched while probe file counts drop by the generation count. */
   def compactClustered(spark: SparkSession, table: String, nFiles: Int,
-      clusterCol: String, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      clusterCol: String): Long = {
     import org.apache.spark.sql.functions.col
-    rewrite(spark, table, "compact", statsCols = statsCols,
-        strStatsCols = strStatsCols, bloomStatsCols = bloomStatsCols) { df =>
+    rewrite(spark, table, "compact") { df =>
       df.repartitionByRange(math.max(1, nFiles), col(clusterCol))
         .sortWithinPartitions(clusterCol)
     }
@@ -3392,14 +3552,27 @@ object TableLog {
     * of the lost round stays invisible; `vacuum` reclaims it) — this is
     * what makes concurrent rewrite+append serializable instead of
     * lost-update-prone. `expectRows(baseRows)` audits the rewrite
-    * before commit (None skips, for row-changing rewrites like merge). */
+    * before commit (None skips, for row-changing rewrites like merge).
+    * The output files carry the stats of the base snapshot's write
+    * spec; `respec` (REPLACE TABLE) declares a new spec in the same
+    * commit and writes under it. A spec column the output no longer
+    * carries leaves the spec. */
   def rewrite(spark: SparkSession, table: String, action: String,
       expectRows: Long => Option[Long] = n => Some(n),
-      statsCols: Seq[String] = Nil, txnId: Option[String] = None,
-      strStatsCols: Seq[String] = Nil,
+      txnId: Option[String] = None,
       counterSet: Map[String, Long] = Map.empty,
-      bloomStatsCols: Seq[String] = Nil,
-      derivedStats: Seq[(String, Column)] = Nil)(
+      respec: Option[WriteSpec] = None)(
+      fn: DataFrame => DataFrame): Long =
+    rewriteImpl(spark, table, action, expectRows, txnId, counterSet,
+      respec, Nil, Nil)(fn)
+
+  /** [[rewrite]] plus a layout rewrite's `clusterCols` range stats and
+    * `derivedStats` curve stat, recorded on top of the spec's. */
+  private[graft] def rewriteImpl(spark: SparkSession, table: String,
+      action: String, expectRows: Long => Option[Long],
+      txnId: Option[String], counterSet: Map[String, Long],
+      respec: Option[WriteSpec], clusterCols: Seq[String],
+      derivedStats: Seq[(String, Column)])(
       fn: DataFrame => DataFrame): Long = {
     // the change feed is append-only by construction: refuse the
     // data-changing rewrites it cannot represent (layout-only
@@ -3429,8 +3602,14 @@ object TableLog {
         if (action == "overwrite")
           checkAudits(table, base.checks, "overwrite")
         else Nil
-      val (files, rows) = writeDataFiles(spark, table, out, statsCols,
-        strStatsCols, bloomStatsCols, derivedStats, audits)
+      val names = out.schema.fieldNames.toSet
+      val spec0 = respec.map(checkedSpec(table, out.schema, _))
+        .getOrElse(base.spec)
+      val spec = spec0.copy(spec0.longCols.filter(names),
+        spec0.strCols.filter(names), spec0.bloomCols.filter(names),
+        spec0.morKey.filter(names))
+      val (files, rows) = writeDataFiles(spark, table, spec, out,
+        clusterCols, derivedStats, audits)
       expectRows(base.rows).foreach(exp => auditStaged(table, files)(
         rows == exp, s"rewrite audit failed for $table: $rows rows != " +
           s"expected $exp — not committing"))
@@ -3447,7 +3626,8 @@ object TableLog {
       val r = ManifestRec(base.version + 1, base.version, action, rows,
         "full", files.map(_.copy(ver = base.version + 1)), Nil, Nil,
         Nil, Nil, txnId, RecordedSchema.of(out.schema),
-        base.counters ++ counterSet)
+        base.counters ++ counterSet,
+        specSet = Some(spec).filter(_ != base.spec))
       if (tryCommit(table, r)) committed = r.version
     }
     committed
@@ -3457,12 +3637,9 @@ object TableLog {
     * ~`targetBytes`-sized files with a NARROW coalesce (no shuffle —
     * each output task concatenates whole input splits), sized from the
     * manifest's byte counts. */
-  def compact(spark: SparkSession, table: String, targetBytes: Long,
-      statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil): Long =
-    rewrite(spark, table, "compact", statsCols = statsCols,
-        strStatsCols = strStatsCols,
-        bloomStatsCols = bloomStatsCols) { df =>
+  def compact(spark: SparkSession, table: String,
+      targetBytes: Long): Long =
+    rewrite(spark, table, "compact") { df =>
       val bytes = snapshot(table).get.files
         .map(_.bytes).sum
       df.coalesce(math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt))
@@ -3486,9 +3663,7 @@ object TableLog {
     * Returns the committed version — or the CURRENT version, without
     * a commit, when fewer than `minFiles` files qualify. */
   def compactSmall(spark: SparkSession, table: String, smallBytes: Long,
-      minFiles: Int = 2, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      minFiles: Int = 2): Long = {
     // layout-only, so legal on feed tables (same class as compact/
     // zorder: these rows were already delivered; publishFeed's
     // "compact" case publishes nothing)
@@ -3510,31 +3685,18 @@ object TableLog {
       val nOut = math.max(1,
         math.ceil(small.map(_._2).sum.toDouble / smallBytes).toInt)
       val subset = small.map(_._1)
-      val (files, newRows) = writeDataFiles(spark, table,
-        morScan(spark, table, base, subset).coalesce(nOut),
-        statsCols, strStatsCols, bloomStatsCols)
+      val (files, newRows) = writeDataFiles(spark, table, base.spec,
+        morScan(spark, table, base, subset).coalesce(nOut))
       val scanRows = liveRowsOf(spark, table, base, subset)
       auditStaged(table, files)(newRows == scanRows,
         s"compactSmall audit failed for $table: packed $newRows rows " +
           s"from $scanRows — not committing")
       val version = base.version + 1
       val stamped = files.map(_.copy(ver = version))
-      val removed = subset.map(_.path)
       // sidecars whose every fenced file was packed away (morScan
-      // applied them) prune here too — full manifest when pruned
-      val rm = removed.toSet
-      val survivors = base.files.filterNot(f => rm(f.path)) ++ stamped
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, "compact", base.rows, "full",
-            survivors, Nil, Nil,
-            liveDels, Nil, None, base.schema, base.counters)
-        else
-          ManifestRec(version, base.version, "compact", base.rows, "delta",
-            Nil, stamped, removed, Nil, Nil, None, base.schema,
-            base.counters)
+      // applied them) prune here too
+      val r = nextRec(base, "compact", base.rows, stamped,
+        subset.map(_.path), Nil, None, pruneDels = true)
       if (tryCommit(table, r)) committed = version
       // CAS loss: re-read the base and re-pack; the orphaned file set
       // is invisible garbage until vacuum
@@ -3676,6 +3838,31 @@ object TableLog {
     else base.dels.filter(d =>
       survivors.exists(f => sidecarFences(base, f, d)))
 
+  /** The manifest of a commit on `base` that adds data files `adds`
+    * (stamped at the new version), removes the files `removes` and adds
+    * delete sidecars `delAdds`: a delta, except every
+    * `checkpointInterval`-th version and — with `pruneDels`, for the
+    * faces whose rewrite applied the sidecars of the files it replaced
+    * — whenever `liveDelsAfter` drops an entry; both state the full
+    * file and delete lists (a delta cannot remove a delete entry). */
+  private def nextRec(base: Snapshot, action: String, rows: Long,
+      adds: Seq[FileEntry], removes: Seq[String], delAdds: Seq[DeleteEntry],
+      txnId: Option[String], pruneDels: Boolean = false): ManifestRec = {
+    val version = base.version + 1
+    val rm = removes.toSet
+    val files = base.files.filterNot(f => rm(f.path)) ++ adds
+    val dels =
+      if (pruneDels) liveDelsAfter(base, files) ++ delAdds
+      else base.dels ++ delAdds
+    if (version % checkpointInterval == 0 ||
+        dels.size < base.dels.size + delAdds.size)
+      ManifestRec(version, base.version, action, rows, "full", files, Nil,
+        Nil, dels, Nil, txnId, base.schema, base.counters)
+    else
+      ManifestRec(version, base.version, action, rows, "delta", Nil, adds,
+        removes, Nil, delAdds, txnId, base.schema, base.counters)
+  }
+
   private[graft] def sidecarFences(s: Snapshot, f: FileEntry,
       d: DeleteEntry): Boolean = {
     if (d.keyCol == DvKeyCol)
@@ -3725,9 +3912,8 @@ object TableLog {
     * sidecar versions — see DEVNOTES for the measured read-cost curve
     * that set the default. */
   def morMaintain(spark: SparkSession, table: String,
-      maxSidecars: Int = 8, maxSidecarBytes: Long = Long.MaxValue,
-      statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      maxSidecars: Int = 8,
+      maxSidecarBytes: Long = Long.MaxValue): Long = {
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
@@ -3739,9 +3925,8 @@ object TableLog {
         base.dels.exists(d => sidecarFences(base, f, d)))
       val (files, newRows) =
         if (affected.isEmpty) (Nil, 0L)
-        else writeDataFiles(spark, table,
-          morScan(spark, table, base, affected),
-          statsCols, strStatsCols, bloomStatsCols)
+        else writeDataFiles(spark, table, base.spec,
+          morScan(spark, table, base, affected))
       auditStaged(table, files)(newRows <= base.rows,
         s"morMaintain audit failed for $table: materialized $newRows " +
           s"rows > table rows ${base.rows} — not committing")
@@ -3763,14 +3948,12 @@ object TableLog {
     * the staging half of the catalog's ATOMIC CTAS/RTAS
     * (`GraftStagedTable`): the files land under `data/<uuid>/`
     * invisible to every reader until `commitStaged` publishes them in
-    * ONE manifest, and an abort just deletes them. Same stat
-    * derivation as every committed write. */
+    * ONE manifest, and an abort just deletes them. The files carry the
+    * stats of `spec`, the spec the DDL declares (checked against the
+    * frame) and `commitStaged` records. */
   private[graft] def stageDataFiles(spark: SparkSession, table: String,
-      df: DataFrame, statsCols: Seq[String],
-      strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil): (Seq[FileEntry], Long) =
-    writeDataFiles(spark, table, df, statsCols, strStatsCols,
-      bloomStatsCols)
+      df: DataFrame, spec: WriteSpec): (Seq[FileEntry], Long) =
+    writeDataFiles(spark, table, checkedSpec(table, df.schema, spec), df)
 
   /** Publish staged files as ONE commit: version 1 (`create`) on a
     * fresh table, or — `replace` — the whole-table overwrite on an
@@ -3780,14 +3963,15 @@ object TableLog {
     * like every commit; a racing create loses loudly. */
   private[graft] def commitStaged(table: String, files: Seq[FileEntry],
       rows: Long, schema: org.apache.spark.sql.types.StructType,
-      replace: Boolean): Long = {
+      replace: Boolean, spec: WriteSpec): Long = {
+    val declared = Some(checkedSpec(table, schema, spec))
     var committed = -1L
     while (committed < 0) {
       snapshot(table) match {
         case None =>
           val r = ManifestRec(1, 0, "create", rows, "full",
             files.map(_.copy(ver = 1)), Nil, Nil, Nil, Nil, None,
-            RecordedSchema.of(schema), Map.empty)
+            RecordedSchema.of(schema), Map.empty, specSet = declared)
           if (tryCommit(table, r)) committed = 1
         case Some(b) =>
           require(replace, s"commitStaged($table): table already has " +
@@ -3799,7 +3983,8 @@ object TableLog {
           val version = b.version + 1
           val r = ManifestRec(version, b.version, "overwrite", rows,
             "full", files.map(_.copy(ver = version)), Nil, Nil, Nil,
-            Nil, None, RecordedSchema.of(schema), b.counters)
+            Nil, None, RecordedSchema.of(schema), b.counters,
+            specSet = declared)
           if (tryCommit(table, r)) committed = version
       }
     }
@@ -3882,9 +4067,8 @@ object TableLog {
             .select(col(k)).distinct().coalesce(1)
           val isString = keys.schema(k).dataType ==
             org.apache.spark.sql.types.StringType
-          val (fs, _) = writeDataFiles(spark, table, keys,
-            if (isString) Nil else Seq(k),
-            if (isString) Seq(k) else Nil, Nil)
+          val (fs, _) = writeDataFiles(spark, table, keySpec(k, isString),
+            keys)
           fs.map(f => DeleteEntry(f.copy(ver = vMax), k, vMax))
         }
       } ++ (if (dvD.size < 2) dvD
@@ -3894,8 +4078,7 @@ object TableLog {
             dvD.map(d => s"$table/${d.file.path}"): _*)
             .select(col(DvFileField), col(DvPosField)).distinct()
             .coalesce(1)
-          val (fs, _) = writeDataFiles(spark, table, pairs,
-            Seq(DvPosField), Seq(DvFileField), Nil)
+          val (fs, _) = writeDataFiles(spark, table, dvSpec, pairs)
           fs.map(f => DeleteEntry(f.copy(ver = vMax), DvKeyCol, vMax))
         })
       val version = base.version + 1
@@ -3938,27 +4121,19 @@ object TableLog {
     * (earlier ticks retire references). Returns the table's version
     * after maintenance. */
   def maintain(spark: SparkSession, table: String,
-      policy: MaintainPolicy, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      policy: MaintainPolicy): Long = {
     if (policy.maxSidecars.isDefined || policy.maxSidecarBytes.isDefined)
       morMaintain(spark, table,
         maxSidecars = policy.maxSidecars.getOrElse(Int.MaxValue),
-        maxSidecarBytes = policy.maxSidecarBytes.getOrElse(Long.MaxValue),
-        statsCols = statsCols, strStatsCols = strStatsCols,
-        bloomStatsCols = bloomStatsCols)
+        maxSidecarBytes = policy.maxSidecarBytes.getOrElse(Long.MaxValue))
     policy.clusterTailBytes.foreach { b =>
       val hasLayout = snapshot(table).exists(_.files.exists(
         _.stats.exists(st => isLayoutStat(st.col))))
       if (hasLayout)
         zOrderMaintain(spark, table, targetBytes = b,
-          statsCols = statsCols, strStatsCols = strStatsCols,
-          bloomStatsCols = bloomStatsCols,
           smallBytes = policy.smallFileBytes.getOrElse(0L))
     }
-    policy.smallFileBytes.foreach(b =>
-      compactSmall(spark, table, b, statsCols = statsCols,
-        strStatsCols = strStatsCols, bloomStatsCols = bloomStatsCols))
+    policy.smallFileBytes.foreach(b => compactSmall(spark, table, b))
     policy.vacuumKeepVersions.foreach(n =>
       vacuum(spark, table, keepVersions = n))
     latestVersion(table)
@@ -3983,15 +4158,14 @@ object TableLog {
     * reader proves that per file. */
   def zOrder(spark: SparkSession, table: String, nFiles: Int,
       colA: String, rangeA: (Long, Long), colB: String,
-      rangeB: (Long, Long), statsCols: Seq[String] = Nil): Long = {
+      rangeB: (Long, Long)): Long = {
     import org.apache.spark.sql.functions.col
     def z = graft.functions.ZOrderLong.zOrder(
       norm16(col(colA), rangeA._1, rangeA._2),
       norm16(col(colB), rangeB._1, rangeB._2))
-    rewrite(spark, table, "zorder",
-        statsCols = (statsCols ++ Seq(colA, colB)).distinct,
-        derivedStats = Seq(
-          z2StatName(colA, colB, rangeA, rangeB) -> z)) { df =>
+    rewriteImpl(spark, table, "zorder", n => Some(n), None, Map.empty,
+        None, Seq(colA, colB),
+        Seq(z2StatName(colA, colB, rangeA, rangeB) -> z)) { df =>
       df.withColumn("__z", z)
         .repartitionByRange(nFiles, col("__z"))
         .sortWithinPartitions("__z")
@@ -4021,7 +4195,7 @@ object TableLog {
     * the stat name and re-clusters under the same curve) — but sorted
     * by the Hilbert index, whose unit-step continuity keeps each
     * file's curve run inside a tighter spatial region than Morton's
-    * quadrant jumps. Measured (`tools.CurveStats`, non-power-of-4 file
+    * quadrant jumps. Measured (DEVNOTES round 15, non-power-of-4 file
     * counts where files straddle quadrant boundaries — real layouts):
     * 10–22% fewer files opened per query box at 1024-to-16384-cell box
     * sizes and on 16:1 skewed boxes, ties on boxes smaller than a
@@ -4030,15 +4204,14 @@ object TableLog {
     * coarser than quadrants) and for existing z tables. */
   def hilbertOrder(spark: SparkSession, table: String, nFiles: Int,
       colA: String, rangeA: (Long, Long), colB: String,
-      rangeB: (Long, Long), statsCols: Seq[String] = Nil): Long = {
+      rangeB: (Long, Long)): Long = {
     import org.apache.spark.sql.functions.col
     def h = graft.functions.HilbertLong.hilbert(
       norm16(col(colA), rangeA._1, rangeA._2),
       norm16(col(colB), rangeB._1, rangeB._2))
-    rewrite(spark, table, "zorder",
-        statsCols = (statsCols ++ Seq(colA, colB)).distinct,
-        derivedStats = Seq(
-          h2StatName(colA, colB, rangeA, rangeB) -> h)) { df =>
+    rewriteImpl(spark, table, "zorder", n => Some(n), None, Map.empty,
+        None, Seq(colA, colB),
+        Seq(h2StatName(colA, colB, rangeA, rangeB) -> h)) { df =>
       df.withColumn("__h", h)
         .repartitionByRange(nFiles, col("__h"))
         .sortWithinPartitions("__h")
@@ -4063,17 +4236,16 @@ object TableLog {
     * ranges. */
   def zOrder3(spark: SparkSession, table: String, nFiles: Int,
       colA: String, rangeA: (Long, Long), colB: String,
-      rangeB: (Long, Long), colC: String, rangeC: (Long, Long),
-      statsCols: Seq[String] = Nil): Long = {
+      rangeB: (Long, Long), colC: String,
+      rangeC: (Long, Long)): Long = {
     import org.apache.spark.sql.functions.col
     def z = graft.functions.ZOrderLong.zOrder3(
       norm16(col(colA), rangeA._1, rangeA._2),
       norm16(col(colB), rangeB._1, rangeB._2),
       norm16(col(colC), rangeC._1, rangeC._2))
-    rewrite(spark, table, "zorder",
-        statsCols = (statsCols ++ Seq(colA, colB, colC)).distinct,
-        derivedStats = Seq(
-          z3StatName(colA, colB, colC, rangeA, rangeB, rangeC) -> z)) {
+    rewriteImpl(spark, table, "zorder", n => Some(n), None, Map.empty,
+        None, Seq(colA, colB, colC),
+        Seq(z3StatName(colA, colB, colC, rangeA, rangeB, rangeC) -> z)) {
       df =>
         df.withColumn("__z", z)
           .repartitionByRange(nFiles, col("__z"))
@@ -4088,8 +4260,8 @@ object TableLog {
     s"z3|$colA|$colB|$colC|${rangeA._1}|${rangeA._2}|" +
       s"${rangeB._1}|${rangeB._2}|${rangeC._1}|${rangeC._2}"
 
-  /** HILBERT-3 twin of [[zOrder3]] — the adjudicated (tools.
-    * CurveStats3, non-power-of-8 file counts) 3-D clustering verb:
+  /** HILBERT-3 twin of [[zOrder3]] — the adjudicated (DEVNOTES round
+    * 16, non-power-of-8 file counts) 3-D clustering verb:
     * 11–21% fewer files opened per selective query box than Morton-3
     * (cube-8192 ×0.87–0.90, 32:1 slab ×0.81, 32:1:1 rod ×0.79–0.84
     * at 300/1500/6000 files), ties only on boxes smaller than a
@@ -4099,17 +4271,16 @@ object TableLog {
     * ([[graft.functions.Hilbert3.h3BoxIntersects]]). */
   def hilbertOrder3(spark: SparkSession, table: String, nFiles: Int,
       colA: String, rangeA: (Long, Long), colB: String,
-      rangeB: (Long, Long), colC: String, rangeC: (Long, Long),
-      statsCols: Seq[String] = Nil): Long = {
+      rangeB: (Long, Long), colC: String,
+      rangeC: (Long, Long)): Long = {
     import org.apache.spark.sql.functions.col
     def h = graft.functions.Hilbert3.hilbert3(
       norm16(col(colA), rangeA._1, rangeA._2),
       norm16(col(colB), rangeB._1, rangeB._2),
       norm16(col(colC), rangeC._1, rangeC._2))
-    rewrite(spark, table, "zorder",
-        statsCols = (statsCols ++ Seq(colA, colB, colC)).distinct,
-        derivedStats = Seq(
-          h3StatName(colA, colB, colC, rangeA, rangeB, rangeC) -> h)) {
+    rewriteImpl(spark, table, "zorder", n => Some(n), None, Map.empty,
+        None, Seq(colA, colB, colC),
+        Seq(h3StatName(colA, colB, colC, rangeA, rangeB, rangeC) -> h)) {
       df =>
         df.withColumn("__h", h)
           .repartitionByRange(nFiles, col("__h"))
@@ -4146,8 +4317,7 @@ object TableLog {
     * than `minFiles` files are unclustered. */
   def zOrderMaintain(spark: SparkSession, table: String,
       targetBytes: Long = 128L << 20, minFiles: Int = 2,
-      statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil, smallBytes: Long = 0L): Long = {
+      smallBytes: Long = 0L): Long = {
     import org.apache.spark.sql.functions.col
     var committed = -1L
     while (committed < 0) {
@@ -4218,31 +4388,21 @@ object TableLog {
       val bytes = unclustered.map(_.bytes).sum
       val nOut = math.max(1,
         math.ceil(bytes.toDouble / targetBytes).toInt)
-      val (files, newRows) = writeDataFiles(spark, table,
+      val (files, newRows) = writeDataFiles(spark, table, base.spec,
         morScan(spark, table, base, unclustered)
           .withColumn("__z", z)
           .repartitionByRange(nOut, col("__z"))
           .sortWithinPartitions("__z")
           .drop("__z"),
-        (statsCols ++ logicalNames).distinct, strStatsCols,
-        bloomStatsCols, derivedStats = Seq(newSpec -> z))
+        logicalNames, derivedStats = Seq(newSpec -> z))
       val scanRows = liveRowsOf(spark, table, base, unclustered)
       auditStaged(table, files)(newRows == scanRows,
         s"zOrderMaintain audit failed for $table: clustered $newRows " +
           s"rows from $scanRows — not committing")
       val version = base.version + 1
       val stamped = files.map(_.copy(ver = version))
-      val removed = unclustered.map(_.path)
-      val r =
-        if (version % checkpointInterval == 0) {
-          val rm = removed.toSet
-          ManifestRec(version, base.version, "zorder", base.rows, "full",
-            base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, None, base.schema, base.counters)
-        } else
-          ManifestRec(version, base.version, "zorder", base.rows,
-            "delta", Nil, stamped, removed, Nil, Nil, None,
-            base.schema, base.counters)
+      val r = nextRec(base, "zorder", base.rows, stamped,
+        unclustered.map(_.path), Nil, None)
       if (tryCommit(table, r)) committed = version
     }
     committed
@@ -4390,15 +4550,13 @@ object TableLog {
   }
 
   def deleteWhere(spark: SparkSession, table: String, c: String,
-      lo: Long, hi: Long, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil, txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      lo: Long, hi: Long, txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     deleteImpl(spark, table, prunedFilesOf(_, c, lo, hi),
       // NULL is not in any range: keep it (a bare !between would turn
       // NULL comparisons into silent deletions)
       _.where(coalesce(!col(c).cast("long").between(lo, hi), lit(true))),
-      statsCols, strStatsCols, txnId, bloomStatsCols)
+      txnId)
   }
 
   /** Categorical twin of `deleteWhere`: remove the rows where string
@@ -4407,20 +4565,15 @@ object TableLog {
     * shape. Same by-reference carry, audit, NULL-keep, no-op and
     * feed-refusal contract. */
   def deleteWhereIn(spark: SparkSession, table: String, c: String,
-      values: Seq[String], statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil, txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      values: Seq[String], txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     deleteImpl(spark, table, prunedFilesInOf(_, c, values),
-      _.where(coalesce(!col(c).isin(values: _*), lit(true))),
-      statsCols, strStatsCols, txnId, bloomStatsCols)
+      _.where(coalesce(!col(c).isin(values: _*), lit(true))), txnId)
   }
 
   private def deleteImpl(spark: SparkSession, table: String,
       affectedOf: Snapshot => Seq[FileEntry],
-      keep: DataFrame => DataFrame, statsCols: Seq[String],
-      strStatsCols: Seq[String], txnId: Option[String],
-      bloomStatsCols: Seq[String]): Long = {
+      keep: DataFrame => DataFrame, txnId: Option[String]): Long = {
     require(!feedEnabled(table) || cdcFeedEnabled(table),
       s"delete on feed-enabled table $table: the append-only change " +
         s"feed cannot represent a delete — enableCdcFeed($table) to " +
@@ -4438,31 +4591,18 @@ object TableLog {
       // rewrite can never resurrect a merge-on-read-deleted row
       val scan = morScan(spark, table, base, affected)
       val scanRows = liveRowsOf(spark, table, base, affected)
-      val (newFiles, newRows) = writeDataFiles(spark, table, keep(scan),
-        statsCols, strStatsCols, bloomStatsCols)
+      val (newFiles, newRows) =
+        writeDataFiles(spark, table, base.spec, keep(scan))
       auditStaged(table, newFiles)(newRows <= scanRows,
         s"delete audit failed for $table: rewrite produced $newRows " +
           s"rows from $scanRows — not committing")
       val rows = base.rows - (scanRows - newRows)
       val version = base.version + 1
       val stamped = newFiles.map(_.copy(ver = version))
-      // mirror append's checkpoint cadence so delta chains stay
-      // bounded; sidecars whose every fenced file this rewrite
-      // replaced (morScan applied them) are pruned — full manifest
-      // when anything pruned (liveDelsAfter)
-      val rm = affectedPaths.toSet
-      val survivors = base.files.filterNot(f => rm(f.path)) ++ stamped
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, "delete", rows, "full",
-            survivors, Nil, Nil,
-            liveDels, Nil, txnId, base.schema, base.counters)
-        else
-          ManifestRec(version, base.version, "delete", rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schema,
-            base.counters)
+      // sidecars whose every fenced file this rewrite replaced (morScan
+      // applied them) are pruned
+      val r = nextRec(base, "delete", rows, stamped, affectedPaths, Nil,
+        txnId, pruneDels = true)
       if (tryCommit(table, r)) committed = version
     }
     // typed-feed capture of the deleted rows; crash before the marker
@@ -4491,10 +4631,7 @@ object TableLog {
     * file-diff identity (kept rows cancel in the multiset
     * difference). Returns the committed version. */
   def replaceWhere(spark: SparkSession, table: String, cond: Column,
-      df: DataFrame, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil,
-      txnId: Option[String] = None,
+      df: DataFrame, txnId: Option[String] = None,
       prune: Snapshot => Seq[FileEntry] = _.files): Long = {
     import org.apache.spark.sql.functions.coalesce
     require(!feedEnabled(table) || cdcFeedEnabled(table),
@@ -4509,7 +4646,7 @@ object TableLog {
     // unmanifested until a vacuum
     // CHECK constraints validate against the set seen at write start
     // (the addCheckConstraint snapshot-isolation contract)
-    val checks0 = snapshot(table).map(_.checks).getOrElse(Nil)
+    val start = snapshotOrFail(table)
     // the NEW slice is written once, outside the CAS loop (append's
     // contract); a lost race re-plans only the keep-side rewrite.
     // Slice-ownership (every new row satisfies the replace predicate
@@ -4522,9 +4659,9 @@ object TableLog {
         "satisfy the replace predicate — they would be invisible " +
         "to the predicate that owns this slice (and to the next " +
         "replace of it); fix the predicate or the data") +:
-      checkAudits(table, checks0, "replaceWhere")
-    val (newFiles, newRows) = writeDataFiles(spark, table, df,
-      statsCols, strStatsCols, bloomStatsCols, audits = audits)
+      checkAudits(table, start.checks, "replaceWhere")
+    val (newFiles, newRows) = writeDataFiles(spark, table, start.spec, df,
+      audits = audits)
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
@@ -4539,10 +4676,9 @@ object TableLog {
         if (affected.isEmpty) (Nil, 0L)
         else {
           val scan = morScan(spark, table, base, affected)
-          writeDataFiles(spark, table,
+          writeDataFiles(spark, table, base.spec,
             scan.where(coalesce(!cond,
-              org.apache.spark.sql.functions.lit(true))),
-            statsCols, strStatsCols, bloomStatsCols)
+              org.apache.spark.sql.functions.lit(true))))
         }
       // live row count of the affected slice, metadata-side where
       // provable (see liveRowsOf)
@@ -4554,19 +4690,8 @@ object TableLog {
       val version = base.version + 1
       val stamped = (keptFiles ++ newFiles).map(_.copy(ver = version))
       val rows = base.rows - (scanRows - keptRows) + newRows
-      val survivors =
-        base.files.filterNot(f => affectedPaths(f.path)) ++ stamped
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, "replace", rows, "full",
-            survivors, Nil, Nil, liveDels, Nil, txnId, base.schema,
-            base.counters)
-        else
-          ManifestRec(version, base.version, "replace", rows, "delta",
-            Nil, stamped, affectedPaths.toSeq.sorted, Nil, Nil, txnId,
-            base.schema, base.counters)
+      val r = nextRec(base, "replace", rows, stamped,
+        affectedPaths.toSeq.sorted, Nil, txnId, pruneDels = true)
       if (tryCommit(table, r)) committed = version
       // lost race: this attempt's keep-side rewrite was planned
       // against a stale base and is re-planned next iteration — the
@@ -4615,9 +4740,8 @@ object TableLog {
       if (keyDf.isEmpty) return latestVersion(table)
       // the sidecar carries its own key stats, so the publish-side CDC
       // capture (and any future reader) can range-prune against it
-      val (delFiles, _) = writeDataFiles(spark, table, keyDf,
-        if (isString) Nil else Seq(keyCol),
-        if (isString) Seq(keyCol) else Nil, Nil)
+      val (delFiles, _) =
+        writeDataFiles(spark, table, keySpec(keyCol, isString), keyDf)
       val affectedOf = keyPruneOf(spark, keyDf, keyCol, isString)
       var committed = -1L
       while (committed < 0) {
@@ -4636,15 +4760,8 @@ object TableLog {
         val newDels = delFiles.map(f =>
           DeleteEntry(f.copy(ver = version), keyCol, version))
         val rows = base.rows - matched
-        val r =
-          if (version % checkpointInterval == 0)
-            ManifestRec(version, base.version, "delete_mor", rows, "full",
-              base.files, Nil, Nil, base.dels ++ newDels, Nil, txnId,
-              base.schema, base.counters)
-          else
-            ManifestRec(version, base.version, "delete_mor", rows, "delta",
-              Nil, Nil, Nil, Nil, newDels, txnId, base.schema,
-              base.counters)
+        val r = nextRec(base, "delete_mor", rows, Nil, Nil, newDels,
+          txnId)
         if (tryCommit(table, r)) committed = version
       }
       // typed-feed capture of the deleted rows (CDC tables only)
@@ -4696,11 +4813,15 @@ object TableLog {
     * (`morMaintain(maxSidecars = 0)`) before committing its own.
     * Both paths announce themselves in the log. */
   def deleteDv(spark: SparkSession, table: String, cond: Column,
-      txnId: Option[String] = None, maxPositions: Long = 2000000L,
+      txnId: Option[String] = None,
+      maxPositions: Long = DefaultMaxDvPositions,
       statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
       bloomStatsCols: Seq[String] = Nil, cowFallback: Boolean = true,
       maxPendingDvBytes: Long = 64L << 20): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    // the stat lists are a CHECK against the table's spec only
+    checkDeclared(table, snapshotOrFail(table).spec,
+      WriteSpec(statsCols, strStatsCols, bloomStatsCols), "deleteDv")
     require(!feedEnabled(table) || cdcFeedEnabled(table),
       s"deleteDv on feed-enabled table $table: the append-only change " +
         s"feed cannot represent a delete — enableCdcFeed($table) to " +
@@ -4709,8 +4830,7 @@ object TableLog {
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
     var committed = -1L
     while (committed < 0) {
-      maintainDvIfHeavy(spark, table, maxPendingDvBytes, statsCols,
-        strStatsCols, bloomStatsCols)
+      maintainDvIfHeavy(spark, table, maxPendingDvBytes)
       val base = snapshotOrFail(table)
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
       if (base.files.isEmpty) return base.version
@@ -4739,24 +4859,16 @@ object TableLog {
             "copy-on-write rewrite (deleteWhere path)")
           return deleteImpl(spark, table,
             b => dvPrune(spark, table, b, cond),
-            df => df.where(not(coalesce(cond, lit(false)))),
-            statsCols, strStatsCols, txnId, bloomStatsCols)
+            df => df.where(not(coalesce(cond, lit(false)))), txnId)
         }
-        val (delFiles, _) = writeDataFiles(spark, table,
-          matched.coalesce(1), Seq(DvPosField), Seq(DvFileField), Nil)
+        val (delFiles, _) =
+          writeDataFiles(spark, table, dvSpec, matched.coalesce(1))
         val version = base.version + 1
         val newDels = delFiles.map(f =>
           DeleteEntry(f.copy(ver = version), DvKeyCol, version))
         val rows = base.rows - cnt
-        val r =
-          if (version % checkpointInterval == 0)
-            ManifestRec(version, base.version, "delete_dv", rows, "full",
-              base.files, Nil, Nil, base.dels ++ newDels, Nil, txnId,
-              base.schema, base.counters)
-          else
-            ManifestRec(version, base.version, "delete_dv", rows, "delta",
-              Nil, Nil, Nil, Nil, newDels, txnId, base.schema,
-              base.counters)
+        val r = nextRec(base, "delete_dv", rows, Nil, Nil, newDels,
+          txnId)
         if (tryCommit(table, r)) committed = version
         // CAS loss: positions were computed against a stale snapshot —
         // recompute everything; the orphaned sidecar is vacuumed
@@ -4778,10 +4890,8 @@ object TableLog {
     * inserts. Returns the committed version (unchanged when nothing
     * matches). */
   def updateDv(spark: SparkSession, table: String, cond: Column,
-      set: Map[String, Column], statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil, txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil,
-      maxPositions: Long = 2000000L,
+      set: Map[String, Column], txnId: Option[String] = None,
+      maxPositions: Long = DefaultMaxDvPositions,
       maxPendingDvBytes: Long = 64L << 20): Long = {
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "updateDv: empty set clause")
@@ -4793,8 +4903,7 @@ object TableLog {
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
     var committed = -1L
     while (committed < 0) {
-      maintainDvIfHeavy(spark, table, maxPendingDvBytes, statsCols,
-        strStatsCols, bloomStatsCols)
+      maintainDvIfHeavy(spark, table, maxPendingDvBytes)
       val base = snapshotOrFail(table)
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
       if (base.files.isEmpty) return base.version
@@ -4825,30 +4934,20 @@ object TableLog {
                 s"${o.dataType.simpleString} — cast the expression " +
                 "explicitly (the manifest schema is not changed by update)")
           }
-        val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-          statsCols, strStatsCols, bloomStatsCols,
-          audits = checkAudits(table, base.checks, "updateDv"))
+        val (newFiles, newRows) = writeDataFiles(spark, table, base.spec,
+          updated, audits = checkAudits(table, base.checks, "updateDv"))
         auditStaged(table, newFiles)(newRows == cnt,
           s"updateDv audit failed for $table: wrote $newRows new " +
             s"images for $cnt matched rows — not committing")
-        val (delFiles, _) = writeDataFiles(spark, table,
+        val (delFiles, _) = writeDataFiles(spark, table, dvSpec,
           matched.select(col(GraftFileCol).as(DvFileField),
-            col(GraftPosCol).as(DvPosField)).coalesce(1),
-          Seq(DvPosField), Seq(DvFileField), Nil)
+            col(GraftPosCol).as(DvPosField)).coalesce(1))
         val version = base.version + 1
         val stamped = newFiles.map(_.copy(ver = version))
         val newDels = delFiles.map(f =>
           DeleteEntry(f.copy(ver = version), DvKeyCol, version))
-        val r =
-          if (version % checkpointInterval == 0)
-            ManifestRec(version, base.version, "update_dv", base.rows,
-              "full", base.files ++ stamped, Nil, Nil,
-              base.dels ++ newDels, Nil, txnId, base.schema,
-              base.counters)
-          else
-            ManifestRec(version, base.version, "update_dv", base.rows,
-              "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-              base.schema, base.counters)
+        val r = nextRec(base, "update_dv", base.rows, stamped, Nil, newDels,
+          txnId)
         if (tryCommit(table, r)) committed = version
       } finally { matched.unpersist(); () }
     }
@@ -4938,27 +5037,15 @@ object TableLog {
       val version = base.version + 1
       val stamped = entries.map(_.copy(ver = version))
       val rows = base.rows - removedRows + newRows
-      val rm = removedPaths.toSet
-      val survivors = base.files.filterNot(f => rm(f.path)) ++ stamped
       // same orphan rule as metadataDelete: a sidecar whose every
       // fenced file was just replaced (its keys/positions applied in
-      // the rewrite) must not be carried forever — prune it, forcing a
-      // FULL manifest when anything pruned (deltas can't remove dels).
-      // The stamped new files are in `survivors` deliberately: a new
+      // the rewrite) must not be carried forever — prune it. The
+      // stamped new files count as survivors deliberately: a new
       // basename that lexically falls inside a vector's file-key range
       // keeps it (conservative — exact membership resolves at scan
       // time through the loaded vector, a map miss keeps the row).
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, action, rows, "full",
-            survivors, Nil, Nil,
-            liveDels, Nil, None, base.schema, base.counters)
-        else
-          ManifestRec(version, base.version, action, rows, "delta",
-            Nil, stamped, removedPaths, Nil, Nil, None, base.schema,
-            base.counters)
+      val r = nextRec(base, action, rows, stamped, removedPaths, Nil,
+        None, pruneDels = true)
       if (tryCommit(table, r)) committed = version
     }
     if (feedEnabled(table)) publishFeed(spark, table)
@@ -5114,23 +5201,11 @@ object TableLog {
       val rmPaths = drop.map(_.path)
       val version = base.version + 1
       val rows = base.rows - removedLive
-      val rm = rmPaths.toSet
-      val survivors = base.files.filterNot(f => rm(f.path))
-      // prune deletion vectors orphaned by the drop (liveDelsAfter;
-      // forcing a FULL manifest when anything pruned — rare: only when
-      // a DV's whole fenced range fell inside the dropped files).
+      // prune deletion vectors orphaned by the drop (rare: only when a
+      // DV's whole fenced range fell inside the dropped files).
       // mdDeletePlan refused KEY sidecars, so every entry is a DV.
-      val liveDels = liveDelsAfter(base, survivors)
-      val r =
-        if (version % checkpointInterval == 0 ||
-            liveDels.size < base.dels.size)
-          ManifestRec(version, base.version, "delete", rows, "full",
-            survivors, Nil, Nil, liveDels,
-            Nil, None, base.schema, base.counters)
-        else
-          ManifestRec(version, base.version, "delete", rows, "delta",
-            Nil, Nil, rmPaths, Nil, Nil, None, base.schema,
-            base.counters)
+      val r = nextRec(base, "delete", rows, Nil, rmPaths, Nil,
+        None, pruneDels = true)
       if (tryCommit(table, r)) { committed = version
         metadataDeletes.incrementAndGet(); () }
     }
@@ -5192,8 +5267,7 @@ object TableLog {
         val pairs = spark.read.schema(dvPairSchema).parquet(
           dvEntries.map(e => s"$table/${e.path}"): _*)
           .select(col(DvFileField), col(DvPosField)).coalesce(1)
-        val (fs, _) = writeDataFiles(spark, table, pairs,
-          Seq(DvPosField), Seq(DvFileField), Nil)
+        val (fs, _) = writeDataFiles(spark, table, dvSpec, pairs)
         // the shards are superseded before any manifest saw them —
         // drop them now (Spark's abort() re-deletes idempotently)
         dvEntries.foreach(e => WriteStats.deleteStaged(s"$table/${e.path}"))
@@ -5221,15 +5295,8 @@ object TableLog {
       val newDels = dvCommit.map(f =>
         DeleteEntry(f.copy(ver = version), DvKeyCol, version))
       val rows = base.rows - deleted + newRows
-      val r =
-        if (version % checkpointInterval == 0)
-          ManifestRec(version, base.version, action, rows, "full",
-            base.files ++ stamped, Nil, Nil, base.dels ++ newDels, Nil,
-            None, base.schema, base.counters)
-        else
-          ManifestRec(version, base.version, action, rows, "delta",
-            Nil, stamped, Nil, Nil, newDels, None, base.schema,
-            base.counters)
+      val r = nextRec(base, action, rows, stamped, Nil, newDels,
+        None)
       if (tryCommit(table, r)) committed = version
     }
     } catch { case e: Throwable =>
@@ -5251,7 +5318,6 @@ object TableLog {
     maintainDvIfHeavy(spark, table,
       spark.conf.getOption("spark.graft.rowLevel.maxPendingDvBytes")
         .map(_.toLong).getOrElse(64L << 20),
-      stats.statsCols, stats.strStatsCols, stats.bloomCols,
       spark.conf.getOption("spark.graft.rowLevel.maxPendingDvSidecars")
         .map(_.toInt).getOrElse(64))
     committed
@@ -5267,8 +5333,7 @@ object TableLog {
     * `morMaintain(maxSidecars = 0)` materializes all pending sidecars
     * and the table returns to a zero-overhead read. */
   private def maintainDvIfHeavy(spark: SparkSession, table: String,
-      bound: Long, statsCols: Seq[String], strStatsCols: Seq[String],
-      bloomStatsCols: Seq[String], maxCount: Int = 64): Unit = {
+      bound: Long, maxCount: Int = 64): Unit = {
     val s = snapshot(table).getOrElse(return)
     val dvs = s.dels.filter(_.keyCol == DvKeyCol)
     val pend = dvs.map(d => d.file.bytes).sum
@@ -5285,8 +5350,7 @@ object TableLog {
       logger.warn(s"positional DML on $table: $pend pending " +
         s"deletion-vector bytes exceed the $bound bound — " +
         "materializing all pending MOR sidecars (morMaintain)")
-      morMaintain(spark, table, maxSidecars = 0, statsCols = statsCols,
-        strStatsCols = strStatsCols, bloomStatsCols = bloomStatsCols)
+      morMaintain(spark, table, maxSidecars = 0)
       ()
     } else if (dvs.length > maxCount) {
       logger.warn(s"positional DML on $table: ${dvs.length} pending " +
@@ -5347,9 +5411,7 @@ object TableLog {
     * committed version (unchanged if nothing matches). */
   def updateMor(spark: SparkSession, table: String, keyCol: String,
       c: String, lo: Long, hi: Long, set: Map[String, Column],
-      statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "updateMor: empty set clause")
     require(!feedEnabled(table) || cdcFeedEnabled(table),
@@ -5411,29 +5473,19 @@ object TableLog {
               s"${o.dataType.simpleString} — cast the expression " +
               "explicitly (the manifest schema is not changed by update)")
         }
-        val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-          statsCols, strStatsCols, bloomStatsCols,
-          audits = checkAudits(table, base.checks, "updateMor"))
+        val (newFiles, newRows) = writeDataFiles(spark, table, base.spec,
+          updated, audits = checkAudits(table, base.checks, "updateMor"))
         auditStaged(table, newFiles)(newRows == matchedRows,
           s"updateMor audit failed for $table: wrote $newRows new " +
             s"images for $matchedRows matched rows — not committing")
-        val (delFiles, _) = writeDataFiles(spark, table, keyDf,
-          if (isString) Nil else Seq(keyCol),
-          if (isString) Seq(keyCol) else Nil, Nil)
+        val (delFiles, _) =
+          writeDataFiles(spark, table, keySpec(keyCol, isString), keyDf)
         val version = base.version + 1
         val stamped = newFiles.map(_.copy(ver = version))
         val newDels = delFiles.map(f =>
           DeleteEntry(f.copy(ver = version), keyCol, version))
-        val r =
-          if (version % checkpointInterval == 0)
-            ManifestRec(version, base.version, "update_mor", base.rows,
-              "full", base.files ++ stamped, Nil, Nil,
-              base.dels ++ newDels, Nil, txnId, base.schema,
-              base.counters)
-          else
-            ManifestRec(version, base.version, "update_mor", base.rows,
-              "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-              base.schema, base.counters)
+        val r = nextRec(base, "update_mor", base.rows, stamped, Nil, newDels,
+          txnId)
         if (tryCommit(table, r)) committed = version
         // CAS loss: re-read the base and redo; orphaned files are
         // invisible garbage until vacuum
@@ -5463,9 +5515,7 @@ object TableLog {
     * images as deletes + source rows as inserts. Returns the
     * committed version. */
   def mergeMor(spark: SparkSession, table: String, source: DataFrame,
-      keyCol: String, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil, txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      keyCol: String, txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, count => cnt, countDistinct, lit}
     require(!feedEnabled(table) || cdcFeedEnabled(table),
       s"mergeMor on feed-enabled table $table: the append-only change " +
@@ -5486,8 +5536,7 @@ object TableLog {
       val isString = src.schema(keyCol).dataType ==
         org.apache.spark.sql.types.StringType
       morUpsertCore(spark, table, src, srcRows, src.select(col(keyCol)),
-        keyCol, isString, "merge_mor", "mergeMor", statsCols,
-        strStatsCols, txnId, bloomStatsCols)
+        keyCol, isString, "merge_mor", "mergeMor", txnId)
     } finally { src.unpersist(); () }
   }
 
@@ -5501,22 +5550,19 @@ object TableLog {
   private def morUpsertCore(spark: SparkSession, table: String,
       ins: DataFrame, insRows: Long, touchedKeys: DataFrame,
       keyCol: String, isString: Boolean, action: String, what: String,
-      statsCols: Seq[String], strStatsCols: Seq[String],
-      txnId: Option[String], bloomStatsCols: Seq[String]): Long = {
+      txnId: Option[String]): Long = {
     import org.apache.spark.sql.functions.col
     val keys = touchedKeys.select(col(keyCol)).distinct()
     // CHECK constraints as of the write's start, audited over the
     // written inserts (the append contract)
-    val (newFiles, newRows) = writeDataFiles(spark, table, ins,
-      statsCols, strStatsCols, bloomStatsCols,
-      audits = checkAudits(table,
-        snapshot(table).map(_.checks).getOrElse(Nil), what))
+    val start = snapshotOrFail(table)
+    val (newFiles, newRows) = writeDataFiles(spark, table, start.spec, ins,
+      audits = checkAudits(table, start.checks, what))
     auditStaged(table, newFiles)(newRows == insRows,
       s"$what audit failed for $table: wrote $newRows rows from a " +
         s"$insRows-row insert set — not committing")
-    val (delFiles, _) = writeDataFiles(spark, table, keys,
-      if (isString) Nil else Seq(keyCol),
-      if (isString) Seq(keyCol) else Nil, Nil)
+    val (delFiles, _) =
+      writeDataFiles(spark, table, keySpec(keyCol, isString), keys)
     val affectedOf = keyPruneOf(spark, keys, keyCol, isString)
     var committed = -1L
     while (committed < 0) {
@@ -5533,16 +5579,8 @@ object TableLog {
       val newDels = delFiles.map(f =>
         DeleteEntry(f.copy(ver = version), keyCol, version))
       val rows = base.rows - matched + insRows
-      val r =
-        if (version % checkpointInterval == 0)
-          ManifestRec(version, base.version, action, rows,
-            "full", base.files ++ stamped, Nil, Nil,
-            base.dels ++ newDels, Nil, txnId, base.schema,
-            base.counters)
-        else
-          ManifestRec(version, base.version, action, rows,
-            "delta", Nil, stamped, Nil, Nil, newDels, txnId,
-            base.schema, base.counters)
+      val r = nextRec(base, action, rows, stamped, Nil, newDels,
+        txnId)
       if (tryCommit(table, r)) committed = version
     }
     if (feedEnabled(table)) publishFeed(spark, table)
@@ -5571,9 +5609,7 @@ object TableLog {
     * file can contain a match). */
   def updateWhere(spark: SparkSession, table: String, c: String,
       lo: Long, hi: Long, set: Map[String, Column],
-      statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     require(set.nonEmpty, "updateWhere: empty set clause")
     require(!feedEnabled(table) || cdcFeedEnabled(table),
@@ -5616,25 +5652,16 @@ object TableLog {
       // the write job audits every row it writes: the updated images,
       // and the untouched rows of the affected files (validated when
       // they were written, so they pass)
-      val (newFiles, newRows) = writeDataFiles(spark, table, updated,
-        statsCols, strStatsCols, bloomStatsCols,
-        audits = checkAudits(table, base.checks, "updateWhere"))
+      val (newFiles, newRows) = writeDataFiles(spark, table, base.spec,
+        updated, audits = checkAudits(table, base.checks, "updateWhere"))
       auditStaged(table, newFiles)(newRows == scanRows,
         s"update audit failed for $table: rewrite produced $newRows " +
           s"rows from $scanRows — not committing")
       val version = base.version + 1
       val stamped = newFiles.map(_.copy(ver = version))
       // mirror delete's checkpoint cadence so delta chains stay bounded
-      val r =
-        if (version % checkpointInterval == 0) {
-          val rm = affectedPaths.toSet
-          ManifestRec(version, base.version, "update", base.rows, "full",
-            base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, txnId, base.schema, base.counters)
-        } else
-          ManifestRec(version, base.version, "update", base.rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schema,
-            base.counters)
+      val r = nextRec(base, "update", base.rows, stamped, affectedPaths, Nil,
+        txnId)
       if (tryCommit(table, r)) committed = version
     }
     // typed-feed capture of the update's old/new images
@@ -5683,8 +5710,9 @@ object TableLog {
     * generalized the way `deleteWhere` generalizes a full rewrite:
     * latest-wins merge of `source` on key `keyCol` (LONG-castable keys
     * prune via the long range stats; STRING keys via the string stats
-    * in UTF-8 binary order — pass `strStatsCols` on writes so document
-    * tables keyed on string ids prune too), rewriting ONLY
+    * in UTF-8 binary order — declare the key in the write spec's
+    * `strCols` so document tables keyed on string ids prune too),
+    * rewriting ONLY
     * the files whose manifest stat range can contain a source key —
     * every other file provably holds no matched row and carries over BY
     * REFERENCE (same path, never read, never copied) in a delta
@@ -5710,9 +5738,7 @@ object TableLog {
     * source keys are refused — a NULL key matches no row and would
     * silently land as an unmatchable insert. */
   def mergeCow(spark: SparkSession, table: String, source: DataFrame,
-      keyCol: String, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil, txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      keyCol: String, txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit,
       max, min}
     require(!feedEnabled(table) || cdcFeedEnabled(table),
@@ -5732,12 +5758,8 @@ object TableLog {
         s"mergeCow: NULL keys in source ($keyCol)")
       require(st.getLong(2) == srcRows,
         s"mergeCow: duplicate keys in source ($keyCol)")
-      val apply =
-        if (src.schema(keyCol).dataType ==
-            org.apache.spark.sql.types.StringType) cowApplyStr _
-        else cowApply _
-      apply(spark, table, src, srcRows, src.select(col(keyCol)),
-        keyCol, statsCols, strStatsCols, txnId, bloomStatsCols)
+      cowApply(spark, table, src, srcRows, src.select(col(keyCol)),
+        keyCol, txnId)
     } finally src.unpersist()
   }
 
@@ -5760,9 +5782,7 @@ object TableLog {
     * exactly-once under streaming replay. An empty/absent silver table
     * bootstraps from the batch's winning inserts. */
   def applyCdc(spark: SparkSession, table: String, changes: DataFrame,
-      keyCol: String, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil, txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      keyCol: String, txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, count, lit, max}
     require(!feedEnabled(table) || cdcFeedEnabled(table),
       s"applyCdc on feed-enabled table $table: an upsert is a " +
@@ -5777,14 +5797,8 @@ object TableLog {
         case Some((ins, insRows, touched)) =>
           if (latestVersion(table) == 0L)
             // streaming bootstrap: first batch creates the silver table
-            return append(spark, table, ins, statsCols, txnId,
-              strStatsCols, bloomStatsCols = bloomStatsCols)
-          val apply =
-            if (ch.schema(keyCol).dataType ==
-                org.apache.spark.sql.types.StringType) cowApplyStr _
-            else cowApply _
-          apply(spark, table, ins, insRows, touched, keyCol, statsCols,
-            strStatsCols, txnId, bloomStatsCols)
+            return append(spark, table, ins, txnId = txnId)
+          cowApply(spark, table, ins, insRows, touched, keyCol, txnId)
       }
     } finally { ch.unpersist(); () }
   }
@@ -5845,9 +5859,7 @@ object TableLog {
     * pattern. Bootstraps an empty table from the batch's winning
     * inserts. */
   def applyCdcMor(spark: SparkSession, table: String, changes: DataFrame,
-      keyCol: String, statsCols: Seq[String] = Nil,
-      strStatsCols: Seq[String] = Nil, txnId: Option[String] = None,
-      bloomStatsCols: Seq[String] = Nil): Long = {
+      keyCol: String, txnId: Option[String] = None): Long = {
     require(!feedEnabled(table) || cdcFeedEnabled(table),
       s"applyCdcMor on feed-enabled table $table: an upsert is a " +
         "delete+insert a PLAIN feed cannot represent — " +
@@ -5860,13 +5872,11 @@ object TableLog {
         case None => latestVersion(table)
         case Some((ins, insRows, touched)) =>
           if (latestVersion(table) == 0L)
-            return append(spark, table, ins, statsCols, txnId,
-              strStatsCols, bloomStatsCols = bloomStatsCols)
+            return append(spark, table, ins, txnId = txnId)
           morUpsertCore(spark, table, ins, insRows, touched, keyCol,
             ch.schema(keyCol).dataType ==
               org.apache.spark.sql.types.StringType,
-            "apply_cdc_mor", "applyCdcMor", statsCols, strStatsCols,
-            txnId, bloomStatsCols)
+            "apply_cdc_mor", "applyCdcMor", txnId)
       }
     } finally { ch.unpersist(); () }
   }
@@ -5881,23 +5891,21 @@ object TableLog {
     * `compactSmall`/`compact` maintenance tick). */
   def cdcApplyStream(spark: SparkSession, bronze: String, silver: String,
       keyCol: String, streamId: String, checkpoint: Option[String] = None,
-      statsCols: Seq[String] = Nil, mor: Boolean = false,
+      mor: Boolean = false,
       autoMorSidecars: Option[Int] = None): Unit =
     graft.streaming.StreamingOps.runForeachBatch(
       changeFeedStream(spark, bronze, withVersion = true),
       org.apache.spark.sql.streaming.OutputMode.Append(), checkpoint) {
       (batch, batchId) =>
         val apply = if (mor) applyCdcMor _ else applyCdc _
-        apply(spark, silver, batch, keyCol, statsCols, Nil,
-          Some(s"$streamId#$batchId"), Nil)
+        apply(spark, silver, batch, keyCol, Some(s"$streamId#$batchId"))
         // MOR maintenance tick: a merge-on-read apply stream is what
         // ACCUMULATES sidecars, so the ingest loop owns retiring them
         // — same ownership argument as appendStream's compactSmall
         // tick, and like it deliberately outside the txn envelope
         // (layout-only; feed tables publish nothing for it)
         autoMorSidecars.foreach(n =>
-          morMaintain(spark, silver, maxSidecars = n,
-            statsCols = statsCols))
+          morMaintain(spark, silver, maxSidecars = n))
         ()
     }
 
@@ -5970,29 +5978,16 @@ object TableLog {
     * domain, the daily-corrections shape — keeps pruning tightly where
     * a [min,max] span would cover the whole table; only past the cap
     * does the prune degrade to the span (at which width the merge
-    * plausibly touches most of a clustered table anyway). Audits
+    * plausibly touches most of a clustered table anyway). String keys
+    * prune by the string file stats in UTF-8 binary order. Audits
     * new = affected − matched + inserts with an independent semi-join
     * count over only the affected files. */
   private def cowApply(spark: SparkSession, table: String,
       inserts: DataFrame, insRows: Long, touchedKeys: DataFrame,
-      keyCol: String, statsCols: Seq[String], strStatsCols: Seq[String],
-      txnId: Option[String], bloomStatsCols: Seq[String]): Long =
+      keyCol: String, txnId: Option[String]): Long =
     cowApplyCore(spark, table, inserts, insRows, touchedKeys, keyCol,
-      keyPruneOf(spark, touchedKeys, keyCol, isString = false),
-      statsCols, strStatsCols, txnId, bloomStatsCols)
-
-  /** STRING-KEY twin of `cowApply`: same shared CAS core, pruning via
-    * the string file stats in UTF-8 binary order (see `keyPruneOf`).
-    * Document/content tables key on strings — this is the same
-    * O(affected files + source + manifest) merge, on the
-    * `strStatsCols` machinery `deleteWhereIn` already uses. */
-  private def cowApplyStr(spark: SparkSession, table: String,
-      inserts: DataFrame, insRows: Long, touchedKeys: DataFrame,
-      keyCol: String, statsCols: Seq[String], strStatsCols: Seq[String],
-      txnId: Option[String], bloomStatsCols: Seq[String]): Long =
-    cowApplyCore(spark, table, inserts, insRows, touchedKeys, keyCol,
-      keyPruneOf(spark, touchedKeys, keyCol, isString = true),
-      statsCols, strStatsCols, txnId, bloomStatsCols)
+      keyPruneOf(spark, touchedKeys, keyCol, touchedKeys.schema(keyCol)
+        .dataType == org.apache.spark.sql.types.StringType), txnId)
 
   /** The candidate-file prune shared by the COW merges and `deleteMor`:
     * exact sorted key set up to 100k distinct keys (binary-search
@@ -6054,15 +6049,14 @@ object TableLog {
     }
   }
 
-  /** The shared COW-upsert CAS loop behind `cowApply`/`cowApplyStr`:
+  /** The shared COW-upsert CAS loop behind `cowApply`:
     * key-type-specific pruning comes in as `affectedOf`, everything
     * else (scan, semi/anti join, audit, delta manifest, CAS retry,
     * feed capture) is identical. */
   private def cowApplyCore(spark: SparkSession, table: String,
       inserts: DataFrame, insRows: Long, touchedKeys: DataFrame,
       keyCol: String, affectedOf: Snapshot => Seq[FileEntry],
-      statsCols: Seq[String], strStatsCols: Seq[String],
-      txnId: Option[String], bloomStatsCols: Seq[String]): Long = {
+      txnId: Option[String]): Long = {
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
@@ -6076,17 +6070,16 @@ object TableLog {
       val (newFiles, newRows, matched, scanRows) =
         if (affected.isEmpty) {
           // every file's stats exclude every touched key: pure insert
-          val (nf, nr) = writeDataFiles(spark, table, inserts, statsCols,
-            strStatsCols, bloomStatsCols, audits = audits)
+          val (nf, nr) = writeDataFiles(spark, table, base.spec, inserts,
+            audits = audits)
           (nf, nr, 0L, 0L)
         } else {
           val scan = morScan(spark, table, base, affected)
           val sRows = liveRowsOf(spark, table, base, affected)
           val m = scan.join(touchedKeys, Seq(keyCol), "left_semi").count()
           val remainder = scan.join(touchedKeys, Seq(keyCol), "left_anti")
-          val (nf, nr) = writeDataFiles(spark, table,
-            remainder.unionByName(inserts), statsCols, strStatsCols,
-            bloomStatsCols, audits = audits)
+          val (nf, nr) = writeDataFiles(spark, table, base.spec,
+            remainder.unionByName(inserts), audits = audits)
           (nf, nr, m, sRows)
         }
       auditStaged(table, newFiles)(newRows == scanRows - matched + insRows,
@@ -6097,16 +6090,8 @@ object TableLog {
       val version = base.version + 1
       val stamped = newFiles.map(_.copy(ver = version))
       // mirror delete's checkpoint cadence so delta chains stay bounded
-      val r =
-        if (version % checkpointInterval == 0) {
-          val rm = affectedPaths.toSet
-          ManifestRec(version, base.version, "merge", rows, "full",
-            base.files.filterNot(f => rm(f.path)) ++ stamped, Nil, Nil,
-            base.dels, Nil, txnId, base.schema, base.counters)
-        } else
-          ManifestRec(version, base.version, "merge", rows, "delta",
-            Nil, stamped, affectedPaths, Nil, Nil, txnId, base.schema,
-            base.counters)
+      val r = nextRec(base, "merge", rows, stamped, affectedPaths, Nil,
+        txnId)
       if (tryCommit(table, r)) committed = version
     }
     // typed-feed capture of the upsert's delete/insert halves (CDC

@@ -54,8 +54,7 @@ object DeltaShardStats {
     val n = files * rowsPerFile
     TableLog.append(spark, path,
       spark.range(n).select($"id".as("k"), ($"id" % 97).as("v"))
-        .repartitionByRange(files, $"k"),
-      statsCols = Seq("k"))
+        .repartitionByRange(files, $"k"))
 
     def readSec(): Double = timed(
       spark.sql(s"SELECT count(*) AS c, sum(v) AS s FROM $cat.ds.t")

@@ -104,7 +104,7 @@ object IncStats {
     val decBefore = dec()
     val before = probeSec()
     graft.sinks.TableLog.compactClustered(spark, t, nFiles = 4,
-      clusterCol = "cell", statsCols = Seq("cell"))
+      clusterCol = "cell")
     val filesAfter = graft.sinks.TableLog.snapshot(t).get.files.size
     val decAfter = dec()
     val after = probeSec()

@@ -216,8 +216,7 @@ object OptAudit {
       val n = files * rowsPerFile
       TableLog.append(spark, s"$tmp/wh/oa/$name",
         spark.range(n).select($"id".as("k"), ($"id" % 97).as("v"))
-          .repartitionByRange(files, $"k"),
-        statsCols = Seq("k"))
+          .repartitionByRange(files, $"k"))
       // source touches every file: scattered updates + a few inserts
       spark.range(10000)
         .select(($"id" * (n / 10000) + 1).as("k"), lit(-1L).as("v"))
@@ -261,8 +260,7 @@ object OptAudit {
             .repartitionByRange(16, $"id")
         else df0.select($"id".as("k"), ($"id" % 16).as("v"))
           .repartition(16, ($"id" % 16).cast("int"))
-      TableLog.append(spark, s"$tmp/wh/oa/$name", df,
-        statsCols = Seq("k"))
+      TableLog.append(spark, s"$tmp/wh/oa/$name", df)
       spark.range(100)
         .select(($"id" + 70000L).as("k"), ($"id" % 50).as("tag"))
         .write.mode("overwrite").parquet(s"$tmp/rl_src_$name")
@@ -335,8 +333,7 @@ object OptAudit {
           when($"id" % 10 < 7, lit(42L)).otherwise($"id").as("k"),
           xxhash64($"id").as("v"),
           ($"id" / (n / 16)).cast("long").as("m"))
-          .repartitionByRange(16, $"id"),
-        statsCols = Seq("k"))
+          .repartitionByRange(16, $"id"))
       // pending KEY sidecar whose keys hit rows and stat-confine to
       // the TOP TWO range files (ids in [6n/8, n) with id%10>=7 keep
       // k=id). TWO files matter: AQE splits a skewed reduce partition
@@ -472,8 +469,7 @@ object OptAudit {
     (0 until 10).foreach { i =>
       TableLog.append(spark, rcfPath,
         spark.range(i * 10000L, (i + 1) * 10000L)
-          .select($"id".as("k"), ($"id" % 97).as("v")),
-        statsCols = Seq("k"))
+          .select($"id".as("k"), ($"id" % 97).as("v")))
     }
     val frontier = TableLog.latestVersion(rcfPath)
     val eFull = recordsReadDuring {
@@ -502,7 +498,7 @@ object OptAudit {
     val eStreamFull = recordsReadDuring(drainOnce())
     TableLog.append(spark, rcfPath,
       spark.range(100000L, 101000L).select($"id".as("k"),
-        ($"id" % 97).as("v")), statsCols = Seq("k"))
+        ($"id" % 97).as("v")))
     val eStreamInc = recordsReadDuring(drainOnce())
 
     println(s"""{"tool":"OptAudit"""" +

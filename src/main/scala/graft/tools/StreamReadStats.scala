@@ -50,13 +50,12 @@ object StreamReadStats {
 
     def mkTable(name: String): String = {
       spark.sql(s"CREATE TABLE $cat.b.$name (k BIGINT, v BIGINT, " +
-        "s STRING)")
+        "s STRING) TBLPROPERTIES ('statsCols' = 'k')")
       val path = s"$root/b/$name"
       TableLog.append(spark, path,
         spark.range(n).select(col("id").as("k"), (col("id") % 97).as("v"),
           concat(lit("payload-"), col("id") % 1000).as("s"))
-          .repartition(files),
-        statsCols = Seq("k"))
+          .repartition(files))
       path
     }
 
@@ -99,8 +98,7 @@ object StreamReadStats {
     // share; the data STREAM never sees vectors — it refuses
     // row-changing commits). Timed as two counted morScans, min.
     val tDv = mkTable("dvt")
-    TableLog.deleteDv(spark, tDv, col("k") % 100 === 0,
-      statsCols = Seq("k"))
+    TableLog.deleteDv(spark, tDv, col("k") % 100 === 0)
     val dvLive = n - (n + 99) / 100
     val secDv = (1 to 2).map { _ =>
       val t0 = System.nanoTime()
@@ -112,14 +110,14 @@ object StreamReadStats {
     // changes-feed stream: the __changes face's reader splices
     // _change_type/_change_version per row (GenericInternalRow copy —
     // the typed-CDC cost); n insert links drained via AvailableNow
-    spark.sql(s"CREATE TABLE $cat.b.ch (k BIGINT, v BIGINT, s STRING)")
+    spark.sql(s"CREATE TABLE $cat.b.ch (k BIGINT, v BIGINT, s STRING) " +
+      "TBLPROPERTIES ('statsCols' = 'k')")
     val chPath = s"$root/b/ch"
     TableLog.enableCdcFeed(chPath)
     TableLog.append(spark, chPath,
       spark.range(n).select(col("id").as("k"), (col("id") % 97).as("v"),
         concat(lit("payload-"), col("id") % 1000).as("s"))
-        .repartition(files),
-      statsCols = Seq("k"))
+        .repartition(files))
     val secCh = best("ch__changes", n)
 
     // vanilla-session readChangeFeed on the table ITSELF (round 19):

@@ -151,7 +151,7 @@ class CatalogSpec extends SparkSpec {
     Thread.sleep(20)
     // zero-rewrite MOR update through the Scala face on the SAME table
     TableLog.updateMor(spark, path, "k", "k", 10, 19,
-      Map("v" -> lit(-1L)), statsCols = Seq("k"))
+      Map("v" -> lit(-1L)))
     val got = spark.sql(
       s"SELECT count(*) AS n FROM $CAT.mor.t WHERE v = -1").as[Long].head()
     assert(got == 10, "catalog read must resolve MOR sidecars")
@@ -470,14 +470,14 @@ class CatalogSpec extends SparkSpec {
         "a restart must deliver exactly the unseen versions")
     } finally q2.stop()
     // LAYOUT commit (compaction) is skipped — no re-delivery
-    TableLog.compact(spark, bronze, 1L << 30, statsCols = Seq("k"))
+    TableLog.compact(spark, bronze, 1L << 30)
     val q3 = mkQuery()
     try {
       q3.processAllAvailable()
       assert(silverCount() == 5, "compaction must not re-deliver rows")
     } finally q3.stop()
     // ROW-CHANGING commit refuses with guidance...
-    TableLog.deleteWhere(spark, bronze, "k", 1, 1, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, bronze, "k", 1, 1)
     spark.sql(s"INSERT INTO $CAT.sread.bronze VALUES (6, 60)")
     val q4 = mkQuery()
     val e = intercept[Exception] {
@@ -593,15 +593,14 @@ class CatalogSpec extends SparkSpec {
       "stable below deletion vectors — the (_file,_pos) row identity") {
     val wh = warehouse
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $CAT.posm")
-    spark.sql(s"CREATE TABLE $CAT.posm.t (k BIGINT, v BIGINT)")
+    spark.sql(s"CREATE TABLE $CAT.posm.t (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('statsCols' = 'k')")
     val path = s"$wh/posm/t"
     TableLog.append(spark, path,
       spark.range(100).select($"id".as("k"), ($"id" % 9).as("v"))
-        .repartitionByRange(2, $"k"),
-      statsCols = Seq("k"))
+        .repartitionByRange(2, $"k"))
     TableLog.append(spark, path,
-      spark.range(100, 150).select($"id".as("k"), ($"id" % 9).as("v")),
-      statsCols = Seq("k"))
+      spark.range(100, 150).select($"id".as("k"), ($"id" % 9).as("v")))
     // dense per-file indexing: min 0, max n-1 in every file
     val perFile = spark.sql(s"SELECT _file, count(*) AS n, " +
       s"CAST(min(_pos) AS BIGINT) AS mn, CAST(max(_pos) AS BIGINT) " +
@@ -711,8 +710,7 @@ class CatalogSpec extends SparkSpec {
     assert(got == want, "delta DML replay must match the relational " +
       "specification exactly")
     // materialization retires the vectors; results unchanged
-    TableLog.morMaintain(spark, path, maxSidecars = 0,
-      statsCols = Seq("k"))
+    TableLog.morMaintain(spark, path, maxSidecars = 0)
     assert(TableLog.snapshot(path).get.dels.isEmpty)
     assert(spark.sql(s"SELECT k, v FROM $CAT.rld.t ORDER BY k")
       .collect().toSeq == want,
@@ -1795,6 +1793,55 @@ class CatalogSpec extends SparkSpec {
         s"mid-stream rename must refuse with guidance, got ${msgs(e)}")
     } finally q.stop()
     spark.sql(s"DROP TABLE $CAT.sread2.b")
+  }
+
+  test("the write spec is visible: SHOW TBLPROPERTIES and detail read " +
+      "it from the manifest, VERSION AS OF shows that version's spec, " +
+      "and the sidecar keeps only the other keys") {
+    val wh = warehouse
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $CAT.spec")
+    spark.sql(s"CREATE TABLE $CAT.spec.t (k BIGINT, tag STRING) " +
+      "TBLPROPERTIES ('statsCols' = 'k', 'bloomStatsCols' = 'tag', " +
+      "'rowLevelMode' = 'mor')")
+    val path = s"$wh/spec/t"
+    def props(sql: String): Map[String, String] = spark.sql(sql)
+      .as[(String, String)].collect().toMap
+    val p1 = props(s"SHOW TBLPROPERTIES $CAT.spec.t")
+    assert(p1.get("statsCols").contains("k") &&
+      p1.get("bloomStatsCols").contains("tag") &&
+      p1.get("rowLevelMode").contains("mor") && !p1.contains("morKey"))
+    // the stat keys live in the version-1 manifest, not the sidecar
+    val side = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "_catalog.properties")))
+    assert(side.contains("rowLevelMode") && !side.contains("statsCols"),
+      side)
+    assert(TableLog.latestVersion(path) == 1 &&
+      TableLog.snapshot(path).get.spec.longCols == Seq("k"))
+    // ALTER on the stat keys is ONE setWriteSpec commit
+    spark.sql(s"ALTER TABLE $CAT.spec.t SET TBLPROPERTIES " +
+      "('strStatsCols' = 'tag', 'morKey' = 'k')")
+    spark.sql(s"ALTER TABLE $CAT.spec.t UNSET TBLPROPERTIES ('bloomStatsCols')")
+    assert(TableLog.latestVersion(path) == 3)
+    val p3 = props(s"SHOW TBLPROPERTIES $CAT.spec.t")
+    assert(p3.get("strStatsCols").contains("tag") &&
+      p3.get("morKey").contains("k") && !p3.contains("bloomStatsCols"))
+    val d = TableLog.detail(spark, path).select("write_spec").as[String]
+      .head()
+    assert(d.contains("str=[tag]") && d.contains("morKey=k") &&
+      d.contains("bloom=[]"), d)
+    // VERSION AS OF loads that version's spec
+    val cat = GraftCatalog.catalogOf(spark, CAT).get
+    val ident = org.apache.spark.sql.connector.catalog.Identifier
+      .of(Array("spec"), "t")
+    val v1 = cat.loadTable(ident, "1").properties()
+    assert(v1.get("bloomStatsCols") == "tag" && v1.get("morKey") == null &&
+      v1.get("rowLevelMode") == "mor")
+    assert(cat.loadTable(ident, "3").properties().get("morKey") == "k")
+    // a stat key naming a missing column is refused, the spec untouched
+    intercept[Exception](spark.sql(s"ALTER TABLE $CAT.spec.t SET " +
+      "TBLPROPERTIES ('statsCols' = 'nope')"))
+    assert(TableLog.latestVersion(path) == 3)
+    spark.sql(s"DROP TABLE $CAT.spec.t")
   }
 
   test("ALTER TABLE properties and RENAME COLUMN route to the log") {

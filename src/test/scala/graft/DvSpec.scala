@@ -57,7 +57,7 @@ class DvSpec extends SparkSpec {
     assert(TableLog.read(spark, t).where($"k" === 5000).count() == 1)
     // a full rewrite MATERIALIZES the vectors away, byte-identically
     val rowsBefore = TableLog.read(spark, t).orderBy("k").collect().toSeq
-    TableLog.compact(spark, t, 1L << 30, statsCols = Seq("k"))
+    TableLog.compact(spark, t, 1L << 30)
     assert(TableLog.snapshot(t).get.dels.isEmpty)
     assert(TableLog.read(spark, t).orderBy("k").collect().toSeq == rowsBefore)
   }
@@ -103,7 +103,7 @@ class DvSpec extends SparkSpec {
     mkTable(t)
     // 300 matched rows > cap 10 → the COW rewrite path, same predicate
     val v = TableLog.deleteDv(spark, t, col("v").isin(1, 4, 7),
-      maxPositions = 10, statsCols = Seq("k"))
+      maxPositions = 10)
     assert(v == 2)
     val s = TableLog.snapshot(t).get
     // COW: no pending sidecar, exact SQL delete semantics
@@ -128,7 +128,7 @@ class DvSpec extends SparkSpec {
     // commit first materializes (one morMaintain commit), THEN adds
     // its own fresh vector — two versions ahead, one sidecar pending
     val v2 = TableLog.deleteDv(spark, t, col("v") === 2,
-      maxPendingDvBytes = 1L, statsCols = Seq("k"))
+      maxPendingDvBytes = 1L)
     assert(v2 == v1 + 2)
     val s = TableLog.snapshot(t).get
     assert(s.dels.size == 1 && s.dels.forall(_.ver == v2),
@@ -150,7 +150,7 @@ class DvSpec extends SparkSpec {
     // address rows exactly, so updateDv just works
     val v = TableLog.updateDv(spark, t,
       col("k").between(100, 199) && col("v") === 7,
-      Map("who" -> lit("redacted")), statsCols = Seq("k"))
+      Map("who" -> lit("redacted")))
     assert(v == 2)
     val after = TableLog.snapshot(t).get
     assert(before.files.map(_.path).toSet.subsetOf(
@@ -165,7 +165,7 @@ class DvSpec extends SparkSpec {
     assert(got.count() == 1000)
     // set expressions read the PRE-update row
     TableLog.updateDv(spark, t, col("k") === 7,
-      Map("v" -> (col("v") + 100L)), statsCols = Seq("k"))
+      Map("v" -> (col("v") + 100L)))
     assert(TableLog.read(spark, t).where($"k" === 7)
       .select("v").as[Long].head() == 107)
   }
@@ -208,7 +208,7 @@ class DvSpec extends SparkSpec {
       got.count() - (0 until 50).count(i => i % 10 == 5))
     // morMaintain materializes everything away, results identical
     val rowsBefore = TableLog.read(spark, t).orderBy("k").collect().toSeq
-    TableLog.morMaintain(spark, t, maxSidecars = 0, statsCols = Seq("k"))
+    TableLog.morMaintain(spark, t, maxSidecars = 0)
     assert(TableLog.snapshot(t).get.dels.isEmpty)
     assert(TableLog.read(spark, t).orderBy("k").collect().toSeq ==
       rowsBefore)
@@ -254,7 +254,7 @@ class DvSpec extends SparkSpec {
     assert(dels.select("k").as[Long].collect().toSet ==
       (0 until 100).filter(_ % 10 == 9).map(_.toLong).toSet)
     TableLog.updateDv(spark, t, col("k") === 42,
-      Map("who" -> lit("x")), statsCols = Seq("k"))
+      Map("who" -> lit("x")))
     val feed2 = TableLog.readFeed(spark, t)
     assert(feed2.where($"_change_type" === "delete" && $"k" === 42)
       .count() == 1)

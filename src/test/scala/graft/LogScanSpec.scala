@@ -449,10 +449,10 @@ class LogScanSpec extends SparkSpec {
     // streaming-style appends land WITHOUT the z stat
     TableLog.append(spark, t, spark.range(2000)
       .select(($"id" % 256).as("a"), (($"id" * 7) % 256).as("b"),
-        lit(1L).as("v")), statsCols = Seq("a", "b"))
+        lit(1L).as("v")))
     TableLog.append(spark, t, spark.range(2000, 4000)
       .select(($"id" % 256).as("a"), (($"id" * 11) % 256).as("b"),
-        lit(2L).as("v")), statsCols = Seq("a", "b"))
+        lit(2L).as("v")))
     val snap1 = TableLog.snapshot(t).get
     assert(snap1.files.count(f =>
       !f.stats.exists(_.col.startsWith("z2|"))) >= 2,
@@ -463,8 +463,7 @@ class LogScanSpec extends SparkSpec {
       .where($"a".between(0, 40) && $"b".between(64, 100))
     val beforeCount = boxQ().count()
     // maintain: tiny target so the tail splits into several z files
-    val v = TableLog.zOrderMaintain(spark, t, targetBytes = 8192,
-      statsCols = Seq("a", "b"))
+    val v = TableLog.zOrderMaintain(spark, t, targetBytes = 8192)
     assert(v == snap1.version + 1)
     val snap2 = TableLog.snapshot(t).get
     // every already-clustered file carried by reference — the tick is
@@ -487,8 +486,7 @@ class LogScanSpec extends SparkSpec {
     assert(TableLog.read(spark, t).count() == total)
     assert(TableLog.read(spark, t).agg(sum($"v")).head.getLong(0) == sumV)
     // a clean table is a no-op; a table never clustered refuses
-    assert(TableLog.zOrderMaintain(spark, t,
-      statsCols = Seq("a", "b")) == v)
+    assert(TableLog.zOrderMaintain(spark, t) == v)
     val t2 = tmp("graft_log_zmaint_flat")
     TableLog.create(spark, t2, spark.range(10).toDF("k"))
     intercept[RuntimeException](TableLog.zOrderMaintain(spark, t2))
@@ -496,13 +494,13 @@ class LogScanSpec extends SparkSpec {
     // files (packing would strip the z stat and the next maintenance
     // tick would re-cluster what it just destroyed)…
     val nAfter = TableLog.snapshot(t).get.files.size
-    assert(TableLog.compactSmall(spark, t, smallBytes = 1L << 30,
-      statsCols = Seq("a", "b")) == v, "compactSmall must be a no-op " +
+    assert(TableLog.compactSmall(spark, t, smallBytes = 1L << 30) == v,
+      "compactSmall must be a no-op " +
       "on a fully-clustered table, whatever the threshold")
     // …and z-AWARE re-packing of small clustered fragments lives in
     // zOrderMaintain(smallBytes): fewer files, spec retained
     val v2 = TableLog.zOrderMaintain(spark, t, targetBytes = 1L << 30,
-      statsCols = Seq("a", "b"), smallBytes = 1L << 30)
+      smallBytes = 1L << 30)
     val packed = TableLog.snapshot(t).get
     assert(packed.files.size < nAfter, "small z fragments must pack")
     assert(packed.files.forall(_.stats.exists(_.col.startsWith("z2|"))))

@@ -481,8 +481,7 @@ class ScaleShapeSpec extends SparkSpec {
       Seq(10L, n / 2, n - 10).foreach(key =>
         TableLog.deleteMor(spark, t, "k", Seq(key).toDF("k")))
       val before = TableLog.snapshot(t).get.files.map(_.path).toSet
-      TableLog.morMaintain(spark, t, maxSidecars = 0,
-        statsCols = Seq("k"))
+      TableLog.morMaintain(spark, t, maxSidecars = 0)
       val after = TableLog.snapshot(t).get.files.map(_.path).toSet
       (before -- after).size
     }
@@ -501,15 +500,13 @@ class ScaleShapeSpec extends SparkSpec {
       TableLog.create(spark, t, spark.range(files * 4096L)
         .select(($"id" % 256).as("a"),
           (($"id" * 7) % 256).as("b")))
-      TableLog.zOrder(spark, t, files, "a", (0L, 255L), "b", (0L, 255L),
-        statsCols = Seq("a", "b"))
+      TableLog.zOrder(spark, t, files, "a", (0L, 255L), "b", (0L, 255L))
       // identical unclustered tail on both tables
       TableLog.append(spark, t, spark.range(1000)
         .select(($"id" % 256).as("a"), (($"id" * 11) % 256).as("b"))
-        .coalesce(1), statsCols = Seq("a", "b"))
+        .coalesce(1))
       val before = TableLog.snapshot(t).get.files.map(_.path).toSet
-      TableLog.zOrderMaintain(spark, t, targetBytes = 1L << 30,
-        statsCols = Seq("a", "b"), minFiles = 1)
+      TableLog.zOrderMaintain(spark, t, targetBytes = 1L << 30, minFiles = 1)
       val after = TableLog.snapshot(t).get.files.map(_.path).toSet
       ((before -- after).size, after.size)
     }

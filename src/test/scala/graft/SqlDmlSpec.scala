@@ -23,8 +23,7 @@ class SqlDmlSpec extends SparkSpec {
         concat(lit("c"), ($"id" % 3)).as("tag"))
       .repartitionByRange(8, $"k").sortWithinPartitions("k"),
       statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "dml_lake", t,
-      statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "dml_lake", t)
     val before = TableLog.snapshot(t).get
 
     // UPDATE: narrow range on the k-clustered table — the commit must
@@ -101,9 +100,8 @@ class SqlDmlSpec extends SparkSpec {
     // UNCLUSTERED in k: COW would rewrite everything, MOR must not
     TableLog.create(spark, t, spark.range(2000)
       .select($"id".as("k"), ($"id" % 7).as("v"))
-      .repartition(6, $"v"), statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "dml_mor", t,
-      statsCols = Seq("k"), morKey = Some("k"))
+      .repartition(6, $"v"), statsCols = Seq("k"), morKey = Some("k"))
+    TableLog.registerSqlTable(spark, "dml_mor", t)
     val before = TableLog.snapshot(t).get
 
     TableLog.sql(spark,
@@ -140,8 +138,7 @@ class SqlDmlSpec extends SparkSpec {
     TableLog.create(spark, t, spark.range(65536)
       .select(($"id" / 256).cast("long").as("a"), ($"id" % 256).as("b"),
         ($"id" % 7).as("v")))
-    TableLog.registerSqlTable(spark, "layout_t", t,
-      statsCols = Seq("a", "b"))
+    TableLog.registerSqlTable(spark, "layout_t", t)
     TableLog.sql(spark,
       "CALL hilbert_order('layout_t', 5, 'a', 0, 255, 'b', 0, 255)")
     val snap = TableLog.snapshot(t).get
@@ -156,8 +153,7 @@ class SqlDmlSpec extends SparkSpec {
     val tz = tmp("graft_sqldml_layoutz")
     TableLog.create(spark, tz, spark.range(4096)
       .select(($"id" / 64).cast("long").as("a"), ($"id" % 64).as("b")))
-    TableLog.registerSqlTable(spark, "layout_tz", tz,
-      statsCols = Seq("a", "b"))
+    TableLog.registerSqlTable(spark, "layout_tz", tz)
     TableLog.sql(spark,
       "CALL zorder('layout_tz', 3, 'a', 0, 63, 'b', 0, 63)")
     assert(TableLog.snapshot(tz).get.files.forall(
@@ -169,8 +165,7 @@ class SqlDmlSpec extends SparkSpec {
     TableLog.create(spark, t, spark.range(100)
       .select($"id".as("k"), ($"id" % 5).as("v")),
       statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "dml_lake_p", t,
-      statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "dml_lake_p", t)
     val parser = new GraftSqlParser(spark,
       org.apache.spark.sql.graft.Bridge.sqlParser(spark))
     val plan = parser.parsePlan(
@@ -219,7 +214,7 @@ class SqlDmlSpec extends SparkSpec {
     TableLog.create(spark, t, spark.range(10)
       .select($"id".as("k"), ($"id" * 2).as("v")),
       statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "dml_ins", t, statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "dml_ins", t)
     val v0 = TableLog.latestVersion(t)
     // VALUES source, positional alignment + cast to the table's types
     val r1 = TableLog.sql(spark,
@@ -281,7 +276,7 @@ class SqlDmlSpec extends SparkSpec {
     TableLog.create(spark, t, spark.range(100)
       .select($"id".as("k"), ($"id" * 2).as("v")),
       statsCols = Seq("k"))                                   // v1
-    TableLog.registerSqlTable(spark, "dml_tvf", t, statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "dml_tvf", t)
     TableLog.sql(spark, "INSERT INTO dml_tvf VALUES (200, 1), (201, 2)") // v2
     TableLog.sql(spark, "DELETE FROM dml_tvf WHERE k BETWEEN 0 AND 9")   // v3
     // the v1→v3 multiset delta from text alone: inserts tagged
@@ -428,7 +423,7 @@ class SqlDmlSpec extends SparkSpec {
     TableLog.create(spark, t, spark.range(2000)
       .select($"id".as("k")).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "call_t", t, statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "call_t", t)
     // accumulate debt: MOR sidecars + small appends
     TableLog.deleteMor(spark, t, "k", Seq(10L).toDF("k"))
     TableLog.deleteMor(spark, t, "k", Seq(20L).toDF("k"))
@@ -480,7 +475,7 @@ class SqlDmlSpec extends SparkSpec {
     TableLog.create(spark, t, spark.range(2000)
       .select($"id".as("k"), ($"id" % 7).as("v"))
       .repartitionByRange(4, $"k"), statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "subq_t", t, statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "subq_t", t)
     Seq(3L, 700L, 1500L, 99999L).toDF("k")
       .createOrReplaceTempView("subq_src")
     val before = TableLog.snapshot(t).get
@@ -503,7 +498,7 @@ class SqlDmlSpec extends SparkSpec {
     val t = tmp("graft_sqldml_restore")
     TableLog.create(spark, t, spark.range(100).select($"id".as("k")),
       statsCols = Seq("k"))                                       // v1
-    TableLog.registerSqlTable(spark, "rst_t", t, statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "rst_t", t)
     def count(): Long = TableLog.sql(spark,
       "SELECT count(*) AS n FROM rst_t").head.getLong(0)
     TableLog.sql(spark, "INSERT INTO rst_t VALUES (1000)")        // v2
@@ -545,10 +540,8 @@ class SqlDmlSpec extends SparkSpec {
     // the SAME view name registered to DIFFERENT tables in two
     // sessions — a global registry would let the later registration
     // hijack the earlier session's DML onto the wrong table
-    TableLog.registerSqlTable(spark, "dml_shared", tA,
-      statsCols = Seq("k"))
-    TableLog.registerSqlTable(sessionB, "dml_shared", tB,
-      statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "dml_shared", tA)
+    TableLog.registerSqlTable(sessionB, "dml_shared", tB)
     TableLog.sql(spark, "DELETE FROM dml_shared WHERE k BETWEEN 0 AND 49")
     assert(TableLog.read(spark, tA).count() == 50,
       "session A's delete must hit A's table")
@@ -574,8 +567,7 @@ class SqlDmlSpec extends SparkSpec {
     TableLog.create(spark, t, spark.range(100)
       .select($"id".as("k"), ($"id" + 0.5).as("price")),
       statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "dml_typed", t,
-      statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "dml_typed", t)
     // price = 50 under cast-to-long range semantics would have deleted
     // every row in [50.0, 51.0) — i.e. id 50 (price 50.5). Positional
     // routing evaluates SQL equality: NO row has price exactly 50, so
@@ -607,8 +599,7 @@ class SqlDmlSpec extends SparkSpec {
     val t = tmp("graft_sqldml_wrap")
     TableLog.create(spark, t, spark.range(100).toDF("k"),
       statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "dml_wrap", t,
-      statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "dml_wrap", t)
     val v0 = TableLog.latestVersion(t)
     // k > Long.MaxValue matches nothing; the naive lo = max+1 WRAPS to
     // Long.MinValue and would delete every row
@@ -634,10 +625,9 @@ class SqlDmlSpec extends SparkSpec {
     val t = tmp("graft_sqldml_bulkdv")
     TableLog.create(spark, t, spark.range(1000)
       .select($"id".as("k"), ($"id" % 10).as("v")),
-      statsCols = Seq("k"))
-    // a tiny per-commit vector cap, declared at registration
-    TableLog.registerSqlTable(spark, "dml_bulk", t,
       statsCols = Seq("k"), maxDvPositions = 10)
+    // a tiny per-commit vector cap, declared in the write spec
+    TableLog.registerSqlTable(spark, "dml_bulk", t)
     // non-range predicate → positional route; 100 matched > 10 → COW
     val v = TableLog.sql(spark,
       "DELETE FROM dml_bulk WHERE v % 3 = 1").head.getLong(0)
@@ -683,7 +673,7 @@ class SqlDmlSpec extends SparkSpec {
       .select($"id".as("k"), ($"id" % 7).as("v"))
       .repartitionByRange(8, $"k").sortWithinPartitions("k"),
       statsCols = Seq("k"))
-    TableLog.registerSqlTable(spark, "dml_rw", t, statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "dml_rw", t)
     val before = TableLog.snapshot(t).get
 
     // happy path: recompute the [1200,1800) slice from a SELECT source

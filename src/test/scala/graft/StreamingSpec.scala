@@ -792,7 +792,7 @@ class StreamingSpec extends SparkSpec {
       spark.range(a, b).select($"id", ($"id" % 7).as("v"))
     TableLog.create(spark, bronze,
       rows(0, 50).repartitionByRange(2, $"id"), statsCols = Seq("id"))
-    TableLog.deleteWhere(spark, bronze, "id", 10, 20, statsCols = Seq("id"))
+    TableLog.deleteWhere(spark, bronze, "id", 10, 20)
     // the typed feed streamed into a silver commit-log table: the
     // FileStreamSource's checkpoint is the exactly-once ledger for the
     // read side, the txn id for the write side
@@ -809,7 +809,7 @@ class StreamingSpec extends SparkSpec {
     // new bronze activity — an append AND a delete — flows incrementally
     TableLog.append(spark, bronze,
       rows(50, 60).repartitionByRange(1, $"id"), statsCols = Seq("id"))
-    TableLog.deleteWhere(spark, bronze, "id", 55, 57, statsCols = Seq("id"))
+    TableLog.deleteWhere(spark, bronze, "id", 55, 57)
     drain()
     assert(silverCounts() == Map("insert" -> 60L, "delete" -> 14L))
     // the state derived from silver's typed rows equals live bronze
@@ -836,9 +836,9 @@ class StreamingSpec extends SparkSpec {
     TableLog.create(spark, bronze,
       rows(0 until 20, identity).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, bronze, "k", 3, 5, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, bronze, "k", 3, 5)
     def drain(): Unit = TableLog.cdcApplyStream(spark, bronze, silver,
-      "k", "capply", ckpt, statsCols = Seq("k"))
+      "k", "capply", ckpt)
     drain()
     def silverMap() = TableLog.read(spark, silver).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -854,7 +854,7 @@ class StreamingSpec extends SparkSpec {
     TableLog.append(spark, bronze,
       rows(10 until 25, _ * 10).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, bronze, "k", 0, 1, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, bronze, "k", 0, 1)
     drain()
     val s2 = ((2L until 10L).filterNot(k => k >= 3 && k <= 5)
       .map(k => k -> k) ++ (10L until 25L).map(k => k -> k * 10)).toMap
@@ -867,11 +867,9 @@ class StreamingSpec extends SparkSpec {
     // a captured UPDATE (mergeCow old/new images at one version) flows
     // through the stream as an upsert — delete+insert pair, insert wins
     TableLog.mergeCow(spark, bronze,
-      Seq((12L, -12L), (40L, -40L)).toDF("k", "v"), "k",
-      statsCols = Seq("k"))
+      Seq((12L, -12L), (40L, -40L)).toDF("k", "v"), "k")
     TableLog.updateWhere(spark, bronze, "k", 20, 22,
-      Map("v" -> (org.apache.spark.sql.functions.col("v") + 7L)),
-      statsCols = Seq("k"))
+      Map("v" -> (org.apache.spark.sql.functions.col("v") + 7L)))
     drain()
     val s3 = s2 + (12L -> -12L) + (40L -> -40L) +
       (20L -> 207L) + (21L -> 217L) + (22L -> 227L)
@@ -898,13 +896,13 @@ class StreamingSpec extends SparkSpec {
       rows(0 until 20, identity).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
     def drain(): Unit = TableLog.cdcApplyStream(spark, bronze, silver,
-      "k", "capplym", ckpt, statsCols = Seq("k"), mor = true)
+      "k", "capplym", ckpt, mor = true)
     drain() // bootstrap batch
     val boot = TableLog.snapshot(silver).get
     TableLog.append(spark, bronze,
       rows(10 until 25, _ * 10).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, bronze, "k", 0, 1, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, bronze, "k", 0, 1)
     drain() // MOR batches: updates + deletes land as sidecar commits
     val after = TableLog.snapshot(silver).get
     assert(boot.files.map(_.path).toSet
@@ -922,9 +920,9 @@ class StreamingSpec extends SparkSpec {
     // maintenance tick: more bronze activity flows in, and the
     // autoMorSidecars bound retires the accumulated sidecars in the
     // same drain — reads unchanged, zero pending read amplification
-    TableLog.deleteWhere(spark, bronze, "k", 24, 24, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, bronze, "k", 24, 24)
     TableLog.cdcApplyStream(spark, bronze, silver, "k", "capplym", ckpt,
-      statsCols = Seq("k"), mor = true, autoMorSidecars = Some(0))
+      mor = true, autoMorSidecars = Some(0))
     assert(TableLog.snapshot(silver).get.dels.isEmpty,
       "the maintenance tick must retire sidecars")
     assert(TableLog.read(spark, silver).collect()

@@ -344,7 +344,7 @@ class TableLogSpec extends SparkSpec {
     assert(dataFilesScanned(t, slice) > kept)
     assert(scanWhere(t, slice).count() == 1100)
     // compact with stats re-establishes skipping over the merged layout
-    TableLog.compact(spark, t, 1L << 18, statsCols = Seq("id"))
+    TableLog.compact(spark, t, 1L << 18)
     assert(TableLog.snapshot(t).get.files.forall(_.stats.nonEmpty))
     assert(scanWhere(t, slice).count() == 1100)
   }
@@ -617,6 +617,24 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.read(spark, t).count() == dataBefore)
   }
 
+  test("a txn committed before a clone's fork, replayed into the clone, " +
+      "is not appended again") {
+    val src = tmp("graft_log_creplay_src")
+    def batch(lo: Long) = spark.range(lo, lo + 10).select($"id".as("k"))
+    TableLog.append(spark, src, batch(0), txnId = Some("ingest#1"))   // v1
+    TableLog.append(spark, src, batch(10), txnId = Some("ingest#2"))  // v2
+    val br = tmp("graft_log_creplay_br")
+    assert(TableLog.cloneTable(spark, src, br) == 2)
+    // the clone's log starts at v2: no retained manifest names
+    // ingest#1, but the carried txn index puts it below the frontier
+    assert(TableLog.append(spark, br, batch(0),
+      txnId = Some("ingest#1")) <= 2)
+    assert(TableLog.append(spark, br, batch(10),
+      txnId = Some("ingest#2")) == 2)
+    assert(TableLog.latestVersion(br) == 2)
+    assert(TableLog.read(spark, br).count() == 20)
+  }
+
   test("vacuum floors at the earliest EXISTING manifest: clones and re-widened windows") {
     val src = tmp("graft_log_cvac_src")
     TableLog.create(spark, src, spark.range(100).select($"id".as("k"))
@@ -675,7 +693,7 @@ class TableLogSpec extends SparkSpec {
       statsCols = Seq("k"))
     val before = TableLog.snapshot(t).get
     TableLog.updateMor(spark, t, "k", "k", 100, 899,
-      Map("v" -> ($"v" + 100), "tag" -> lit("u")), statsCols = Seq("k"))
+      Map("v" -> ($"v" + 100), "tag" -> lit("u")))
     val after = TableLog.snapshot(t).get
     assert(before.files.map(_.path).toSet
       .subsetOf(after.files.map(_.path).toSet),
@@ -694,7 +712,7 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.readVersion(spark, t, 1)
       .where($"tag" === "u").count() == 0)
     // compact() materializes the sidecar away, content unchanged
-    TableLog.compact(spark, t, 1L << 26, statsCols = Seq("k"))
+    TableLog.compact(spark, t, 1L << 26)
     assert(TableLog.snapshot(t).get.dels.isEmpty)
     assert(TableLog.read(spark, t).where($"tag" === "u").count() == 800)
     // GUARDS. straddling keys: rows sharing a matched key that do NOT
@@ -731,7 +749,7 @@ class TableLogSpec extends SparkSpec {
     // bimodal source: an update band inside the domain + inserts past it
     val src = spark.range(500, 1500).select($"id".as("k"),
       lit(999L).as("v"))
-    TableLog.mergeMor(spark, t, src, "k", statsCols = Seq("k"))
+    TableLog.mergeMor(spark, t, src, "k")
     val after = TableLog.snapshot(t).get
     assert(before.files.map(_.path).toSet
       .subsetOf(after.files.map(_.path).toSet),
@@ -751,11 +769,10 @@ class TableLogSpec extends SparkSpec {
     // second merge stacks (two sidecar cohorts), then compaction
     // materializes both away
     TableLog.mergeMor(spark, t, spark.range(700, 720)
-      .select($"id".as("k"), lit(111L).as("v")), "k",
-      statsCols = Seq("k"))
+      .select($"id".as("k"), lit(111L).as("v")), "k")
     assert(TableLog.read(spark, t).where($"v" === 111).count() == 20)
     assert(TableLog.read(spark, t).count() == 1500)
-    TableLog.compact(spark, t, 1L << 26, statsCols = Seq("k"))
+    TableLog.compact(spark, t, 1L << 26)
     assert(TableLog.snapshot(t).get.dels.isEmpty)
     assert(TableLog.read(spark, t).count() == 1500)
     assert(TableLog.read(spark, t).where($"v" === 111).count() == 20)
@@ -772,17 +789,16 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, t, spark.range(500)
       .select($"id".as("k"), ($"id" % 5 + 100).as("v"))
       .repartitionByRange(4, $"k"), statsCols = Seq("k"))          // v2
-    TableLog.deleteWhere(spark, t, "k", 100, 199,
-      statsCols = Seq("k"))                                        // v3
+    TableLog.deleteWhere(spark, t, "k", 100, 199)                 // v3
     val feed = TableLog.readFeed(spark, t, withVersion = true)
     // COW reference: whole feed in one apply
-    TableLog.applyCdc(spark, svCow, feed, "k", statsCols = Seq("k"))
+    TableLog.applyCdc(spark, svCow, feed, "k")
     // MOR: bootstrap batch, then the mutation batch as a sidecar commit
     TableLog.applyCdcMor(spark, svMor,
-      feed.where($"_change_version" === 1), "k", statsCols = Seq("k"))
+      feed.where($"_change_version" === 1), "k")
     val before = TableLog.snapshot(svMor).get
     TableLog.applyCdcMor(spark, svMor,
-      feed.where($"_change_version" >= 2), "k", statsCols = Seq("k"),
+      feed.where($"_change_version" >= 2), "k",
       txnId = Some("acm#2"))
     val after = TableLog.snapshot(svMor).get
     assert(before.files.map(_.path).toSet
@@ -796,11 +812,11 @@ class TableLogSpec extends SparkSpec {
     assert(cow.exceptAll(mor).isEmpty && mor.exceptAll(cow).isEmpty)
     // exactly-once: replaying the batch under the same txn is a no-op
     assert(TableLog.applyCdcMor(spark, svMor,
-      feed.where($"_change_version" >= 2), "k", statsCols = Seq("k"),
+      feed.where($"_change_version" >= 2), "k",
       txnId = Some("acm#2")) == after.version)
     assert(TableLog.snapshot(svMor).get.version == after.version)
     // compaction materializes the sidecar; content unchanged
-    TableLog.compact(spark, svMor, 1L << 26, statsCols = Seq("k"))
+    TableLog.compact(spark, svMor, 1L << 26)
     assert(TableLog.snapshot(svMor).get.dels.isEmpty)
     assert(TableLog.read(spark, svMor).exceptAll(cow).isEmpty)
   }
@@ -813,13 +829,11 @@ class TableLogSpec extends SparkSpec {
       .select($"id".as("k"), ($"id" % 5).as("v")).coalesce(2),
       statsCols = Seq("k"))                                        // v1
     TableLog.updateMor(spark, t, "k", "k", 10, 59,
-      Map("v" -> ($"v" + 100)), statsCols = Seq("k"))              // v2
+      Map("v" -> ($"v" + 100)))              // v2
     TableLog.mergeMor(spark, t, spark.range(90, 120)
-      .select($"id".as("k"), lit(777L).as("v")), "k",
-      statsCols = Seq("k"))                                        // v3
+      .select($"id".as("k"), lit(777L).as("v")), "k")             // v3
     TableLog.applyCdc(spark, sv,
-      TableLog.readFeed(spark, t, withVersion = true), "k",
-      statsCols = Seq("k"))
+      TableLog.readFeed(spark, t, withVersion = true), "k")
     val b = TableLog.read(spark, t)
     val s = TableLog.read(spark, sv)
     assert(s.count() == 120)
@@ -985,7 +999,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, t,
       rows(100, 150).repartitionByRange(2, $"id"), statsCols = Seq("id"))
     // the CDC feed is what legalizes this delete on a feed-enabled table
-    TableLog.deleteWhere(spark, t, "id", 40, 120, statsCols = Seq("id"))
+    TableLog.deleteWhere(spark, t, "id", 40, 120)
     val feed = TableLog.readFeed(spark, t)
     assert(feed.where($"_change_type" === "insert").count() == 150)
     assert(feed.where($"_change_type" === "delete").count() == 81)
@@ -1044,8 +1058,7 @@ class TableLogSpec extends SparkSpec {
     val untouchedBefore = before.files.filterNot(f =>
       f.stats.exists(s => s.col == "k" && s.max >= 2000 && s.min <= 2999))
     assert(untouchedBefore.size >= 5, "fixture: most files must not overlap")
-    val v = TableLog.deleteWhere(spark, t, "k", 2000, 2999,
-      statsCols = Seq("k"))
+    val v = TableLog.deleteWhere(spark, t, "k", 2000, 2999)
     val after = TableLog.snapshot(t).get
     // semantics: exactly the range is gone
     assert(after.rows == 7000)
@@ -1063,8 +1076,7 @@ class TableLogSpec extends SparkSpec {
     // time travel: the pre-delete version still reads complete
     assert(TableLog.readVersion(spark, t, v - 1).count() == 8000)
     // no-op delete (no file can contain a match): no commit at all
-    assert(TableLog.deleteWhere(spark, t, "k", 90000, 99000,
-      statsCols = Seq("k")) == v)
+    assert(TableLog.deleteWhere(spark, t, "k", 90000, 99000) == v)
     assert(TableLog.latestVersion(t) == v)
   }
 
@@ -1089,8 +1101,7 @@ class TableLogSpec extends SparkSpec {
     }.get
     val st = f1.stats.find(_.col == "k").get
     assert(st.min > 0 && st.max < 3999, "fixture: interior file")
-    val v = TableLog.deleteWhere(spark, t, "k", st.min, st.max,
-      statsCols = Seq("k"))
+    val v = TableLog.deleteWhere(spark, t, "k", st.min, st.max)
     val after = TableLog.snapshot(t).get
     assert(v == before.version + 1)
     // the fully-deleted file is gone and NOTHING replaced it — zero-row
@@ -1117,8 +1128,7 @@ class TableLogSpec extends SparkSpec {
       expected.sum)
     // the no-op contract SURVIVES the all-deleted rewrite: a
     // disjoint-range delete finds no candidate file and commits nothing
-    assert(TableLog.deleteWhere(spark, t, "k", 1000000, 2000000,
-      statsCols = Seq("k")) == v)
+    assert(TableLog.deleteWhere(spark, t, "k", 1000000, 2000000) == v)
     assert(TableLog.latestVersion(t) == v)
   }
 
@@ -1146,8 +1156,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, tR, spark.range(5000).selectExpr(
       "id AS k", "CAST(id % 9 AS int) AS v")
       .repartitionByRange(4, $"k"), statsCols = Seq("k", "v"))
-    TableLog.deleteWhere(spark, tR, "k", 0, 2999,
-      statsCols = Seq("k", "v"))
+    TableLog.deleteWhere(spark, tR, "k", 0, 2999)
     assert(TableLog.read(spark, tR).count() == 2000L)
     assert(TableLog.snapshot(tR).get.files.forall(_.rows > 0L))
     // no unmanifested garbage beyond CAS-loser class: every on-disk
@@ -1194,13 +1203,12 @@ class TableLogSpec extends SparkSpec {
     assert(d0.getLong(4) == 3 && d0.getLong(8) > 0,
       "detail must report pending sidecar count and bytes")
     // within bounds: no commit
-    assert(TableLog.morMaintain(spark, t, maxSidecars = 3,
-      statsCols = Seq("k")) == snapBefore.version)
+    assert(TableLog.morMaintain(spark, t, maxSidecars = 3) ==
+      snapBefore.version)
     // past the bound: materialize — ONLY the three fenced-and-
     // overlapping files rewrite (keys 10/2010/4010 live in three of
     // the eight range-clustered files); the rest carry by reference
-    val v = TableLog.morMaintain(spark, t, maxSidecars = 2,
-      statsCols = Seq("k"))
+    val v = TableLog.morMaintain(spark, t, maxSidecars = 2)
     assert(v == snapBefore.version + 1)
     val after = TableLog.snapshot(t).get
     assert(after.dels.isEmpty, "sidecars must be retired")
@@ -1218,8 +1226,7 @@ class TableLogSpec extends SparkSpec {
     val d1 = TableLog.detail(spark, t).head
     assert(d1.getLong(4) == 0 && d1.getLong(8) == 0)
     // maintenance after maintenance: a clean table is always a no-op
-    assert(TableLog.morMaintain(spark, t, maxSidecars = 0,
-      statsCols = Seq("k")) == v)
+    assert(TableLog.morMaintain(spark, t, maxSidecars = 0) == v)
     // time travel still reads the pre-maintenance version complete
     assert(TableLog.readVersion(spark, t, snapBefore.version)
       .count() == 7997)
@@ -1241,8 +1248,7 @@ class TableLogSpec extends SparkSpec {
     assert(snapBefore.dels.nonEmpty)
     val before = TableLog.read(spark, t).orderBy("name").collect().toSeq
     assert(before.size == 3998)
-    val v = TableLog.morMaintain(spark, t, maxSidecars = 0,
-      strStatsCols = Seq("name"))
+    val v = TableLog.morMaintain(spark, t, maxSidecars = 0)
     val after = TableLog.snapshot(t).get
     assert(after.dels.isEmpty)
     // both deleted keys live in the first string-range file; the
@@ -1254,8 +1260,7 @@ class TableLogSpec extends SparkSpec {
       s"string-stat pruning must carry 3 of 4 files, got ${carried.size}")
     assert(TableLog.read(spark, t).orderBy("name").collect().toSeq ==
       before)
-    assert(TableLog.morMaintain(spark, t, maxSidecars = 0,
-      strStatsCols = Seq("name")) == v)
+    assert(TableLog.morMaintain(spark, t, maxSidecars = 0) == v)
   }
 
   test("morMaintain after mixed MOR mutation stacks: reads identical before/after, history intact") {
@@ -1271,15 +1276,14 @@ class TableLogSpec extends SparkSpec {
       TableLog.deleteMor(spark, t, "k", delKeys.toDF("k"))
       val lo = rnd.nextLong(5000).abs
       TableLog.updateMor(spark, t, "k", "k", lo, lo + 50,
-        Map("v" -> lit(100L + i)), statsCols = Seq("k"))
+        Map("v" -> lit(100L + i)))
     }
     val snapBefore = TableLog.snapshot(t).get
     assert(snapBefore.dels.size >= 6,
       s"fixture: mutations must stack sidecars, got ${snapBefore.dels.size}")
     val before = TableLog.read(spark, t).orderBy("k").collect().toSeq
     val agg = TableLog.read(spark, t).agg(sum($"v"), count(lit(1))).head
-    val v = TableLog.morMaintain(spark, t, maxSidecars = 2,
-      statsCols = Seq("k"))
+    val v = TableLog.morMaintain(spark, t, maxSidecars = 2)
     val after = TableLog.snapshot(t).get
     assert(after.dels.isEmpty)
     assert(after.rows == snapBefore.rows)
@@ -1312,7 +1316,7 @@ class TableLogSpec extends SparkSpec {
     val v = TableLog.maintain(spark, t, TableLog.MaintainPolicy(
       smallFileBytes = Some(64L << 10),
       maxSidecars = Some(0),
-      vacuumKeepVersions = Some(1)), statsCols = Seq("k"))
+      vacuumKeepVersions = Some(1)))
     val after = TableLog.snapshot(t).get
     assert(after.dels.isEmpty, "sidecars materialized")
     assert(after.files.size < pre.files.size + 3,
@@ -1338,8 +1342,7 @@ class TableLogSpec extends SparkSpec {
     // WRITE on the branch: every face is available; src is untouched
     TableLog.append(spark, br, spark.range(2000, 2200).toDF("k"),
       statsCols = Seq("k"))                                       // v3
-    TableLog.deleteWhere(spark, br, "k", 0, 99,
-      statsCols = Seq("k"))                                       // v4
+    TableLog.deleteWhere(spark, br, "k", 0, 99)                   // v4
     assert(TableLog.read(spark, src).count() == 1500)
     assert(TableLog.latestVersion(src) == fork)
     // AUDIT on the branch before anything is visible
@@ -1412,7 +1415,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, src, spark.range(10000, 10100).toDF("k"),
       statsCols = Seq("k"))
     // …while the branch deletes a range (rewrites file 0) and appends
-    TableLog.deleteWhere(spark, br, "k", 0, 49, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, br, "k", 0, 49)
     TableLog.append(spark, br, spark.range(20000, 20200).toDF("k"),
       statsCols = Seq("k"))
     intercept[IllegalArgumentException](
@@ -1442,8 +1445,8 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, src2,
       spark.range(0L, 1000L, 1L, 4).toDF("k"), statsCols = Seq("k"))
     TableLog.cloneTable(spark, src2, br2)
-    TableLog.deleteWhere(spark, src2, "k", 0, 9, statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, br2, "k", 40, 49, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, src2, "k", 0, 9)
+    TableLog.deleteWhere(spark, br2, "k", 40, 49)
     val c = intercept[Exception](TableLog.mergeBranch(spark, src2, br2))
     assert(c.getMessage.contains("CONFLICT"))
 
@@ -1508,14 +1511,12 @@ class TableLogSpec extends SparkSpec {
       statsCols = Seq("k"), counterDelta = Map("ing" -> 100L))
     // a pending MOR sidecar on the branch refuses with the maintain hint
     TableLog.updateMor(spark, br, "k", "k", 10, 19,
-      Map("v" -> org.apache.spark.sql.functions.lit(-1L)),
-      statsCols = Seq("k"))
+      Map("v" -> org.apache.spark.sql.functions.lit(-1L)))
     val e = intercept[IllegalArgumentException](
       TableLog.mergeBranch(spark, src, br))
     assert(e.getMessage.contains("morMaintain"))
     // materializing converts it into file rewrites the merge audits
-    TableLog.morMaintain(spark, br, maxSidecars = 0,
-      statsCols = Seq("k"))
+    TableLog.morMaintain(spark, br, maxSidecars = 0)
     TableLog.append(spark, br,
       spark.range(2000, 2050).select($"id".as("k"), $"id".as("v")),
       statsCols = Seq("k"), counterDelta = Map("ing" -> 50L))
@@ -1591,8 +1592,7 @@ class TableLogSpec extends SparkSpec {
       statsCols = Seq("k"))                                        // v3
     // a full rewrite: the latest window no longer references v1-v3's
     // data files — only the tag keeps them alive below the floor
-    TableLog.compact(spark, t, targetBytes = 1L << 30,
-      statsCols = Seq("k"))                                        // v4
+    TableLog.compact(spark, t, targetBytes = 1L << 30)            // v4
     TableLog.append(spark, t, spark.range(300, 400).toDF("k"),
       statsCols = Seq("k"))                                        // v5
     // reads at the tag
@@ -1609,8 +1609,7 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.resolveTag(t, "rc") == 2)
     TableLog.deleteTag(t, "rc")
     // SQL face: VERSION AS OF '<tag>' on a registered view
-    TableLog.registerSqlTable(spark, "tagged_t", t,
-      statsCols = Seq("k"))
+    TableLog.registerSqlTable(spark, "tagged_t", t)
     assert(TableLog.sql(spark,
       "SELECT count(*) AS n FROM tagged_t VERSION AS OF 'baseline'")
       .head.getLong(0) == 200)
@@ -1650,7 +1649,7 @@ class TableLogSpec extends SparkSpec {
       f.stats.exists(s => s.col == "k" &&
         hot.exists(k => s.min <= k && k <= s.max)))
     assert(untouchedBefore.size >= 6, "fixture: most files must not overlap")
-    val v = TableLog.mergeCow(spark, t, src, "k", statsCols = Seq("k"))
+    val v = TableLog.mergeCow(spark, t, src, "k")
     val after = TableLog.snapshot(t).get
     // semantics: latest-wins upsert
     assert(after.rows == 8010)
@@ -1674,7 +1673,7 @@ class TableLogSpec extends SparkSpec {
     // span prune and still merges correctly
     TableLog.mergeCow(spark, t,
       spark.range(0, 1500).select($"id".as("k"), lit(7L).as("v")),
-      "k", statsCols = Seq("k"))
+      "k")
     assert(TableLog.read(spark, t).where($"v" === 7L).count() == 1500)
     assert(TableLog.read(spark, t).count() == 8010)
     // contract guards: duplicate / NULL source keys, empty source no-op
@@ -1701,7 +1700,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t,
       spark.range(2000).select($"id".as("k"), ($"id" * 2).as("v"))
         .repartitionByRange(4, $"k"), statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, t, "k", 100, 399, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, t, "k", 100, 399)
     // simulate a crash after the delete's commit but before publication:
     // drop the marker, the capture links, and the (already cleaned)
     // stage, then HEAL from several publishers at once — stage creation
@@ -1766,12 +1765,11 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, bronze,
       rows(5 until 15, _ * 100).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))                                   // v2: upd 5-9, ins 10-14
-    TableLog.deleteWhere(spark, bronze, "k", 8, 12,
-      statsCols = Seq("k"))                                   // v3
+    TableLog.deleteWhere(spark, bronze, "k", 8, 12)               // v3
     // one typed batch = the whole feed; silver bootstraps from it
     TableLog.applyCdc(spark, silver,
       TableLog.readFeed(spark, bronze, withVersion = true), "k",
-      statsCols = Seq("k"), txnId = Some("b0"))
+      txnId = Some("b0"))
     def silverMap() = TableLog.read(spark, silver).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val expect = (0L to 4L).map(k => k -> k).toMap ++
@@ -1782,20 +1780,22 @@ class TableLogSpec extends SparkSpec {
     val vNow = TableLog.latestVersion(silver)
     TableLog.applyCdc(spark, silver,
       TableLog.readFeed(spark, bronze, withVersion = true), "k",
-      statsCols = Seq("k"), txnId = Some("b0"))
+      txnId = Some("b0"))
     assert(TableLog.latestVersion(silver) == vNow)
     assert(silverMap() == expect)
     // in-batch ordering resolves by VERSION, not row order: delete@5
     // then re-insert@6 revives; insert@5 then delete@6 erases; and the
     // COW commit only rewrites silver files whose stats hold a touched key
-    TableLog.rewrite(spark, silver, "compact", statsCols = Seq("k")) { df =>
+    // (the bootstrap declared no stats: declare k before the re-layout)
+    TableLog.setWriteSpec(silver, TableLog.WriteSpec(Seq("k")))
+    TableLog.rewrite(spark, silver, "compact") { df =>
       df.repartitionByRange(4, $"k").sortWithinPartitions("k") }
     val before = TableLog.snapshot(silver).get
     val batch2 = Seq(
       (0L, 0L, "delete", 5L), (0L, -7L, "insert", 6L),   // revive k=0
       (1L, -9L, "insert", 5L), (1L, 0L, "delete", 6L)    // erase k=1
     ).toDF("k", "v", "_change_type", "_change_version")
-    TableLog.applyCdc(spark, silver, batch2, "k", statsCols = Seq("k"))
+    TableLog.applyCdc(spark, silver, batch2, "k")
     assert(silverMap() == (expect - 1L) + (0L -> -7L))
     val untouched = before.files.filterNot(f =>
       f.stats.exists(s => s.col == "k" && s.min <= 1 && s.max >= 0))
@@ -1847,7 +1847,7 @@ class TableLogSpec extends SparkSpec {
       .unionByName(Seq((500L, 1000L)).toDF("k", "v")) // no-op: v == k*2
       .unionByName(spark.range(2000, 2010)
         .select($"id".as("k"), lit(-2L).as("v")))
-    val vMerge = TableLog.mergeCow(spark, t, src, "k", statsCols = Seq("k"))
+    val vMerge = TableLog.mergeCow(spark, t, src, "k")
     tracks()
     assert(typedAt(vMerge, "delete") == 50,
       "pre-images of the updated band only — the no-op row cancels")
@@ -1870,19 +1870,19 @@ class TableLogSpec extends SparkSpec {
     tracks()
     // in-place update: old/new images both captured
     val vUpd = TableLog.updateWhere(spark, t, "k", 200, 249,
-      Map("v" -> ($"v" + 1000000L)), statsCols = Seq("k"))
+      Map("v" -> ($"v" + 1000000L)))
     tracks()
     assert(typedAt(vUpd, "delete") == 50 && typedAt(vUpd, "insert") == 50)
     // an update whose expressions change nothing publishes nothing
     val vNoop = TableLog.updateWhere(spark, t, "k", 300, 349,
-      Map("v" -> $"v"), statsCols = Seq("k"))
+      Map("v" -> $"v"))
     assert(typedAt(vNoop, "delete") == 0 && typedAt(vNoop, "insert") == 0)
     tracks()
     // a PURE-INSERT merge (no file overlaps any key) takes the cheap
     // path: raw data-file links, no staged capture
     val vIns = TableLog.mergeCow(spark, t,
       spark.range(3000, 3020).select($"id".as("k"), lit(-3L).as("v")),
-      "k", statsCols = Seq("k"))
+      "k")
     tracks()
     val insLinks = java.nio.file.Files.list(java.nio.file.Paths.get(t, "_feed"))
       .iterator().asScala.map(_.getFileName.toString)
@@ -1894,14 +1894,12 @@ class TableLogSpec extends SparkSpec {
     // silver, itself CDC-enabled, chains onward to gold
     TableLog.enableCdcFeed(silver)
     TableLog.applyCdc(spark, silver,
-      TableLog.readFeed(spark, t, withVersion = true), "k",
-      statsCols = Seq("k"))
+      TableLog.readFeed(spark, t, withVersion = true), "k")
     val live = TableLog.read(spark, t)
     val sLive = TableLog.read(spark, silver)
     assert(sLive.exceptAll(live).isEmpty && live.exceptAll(sLive).isEmpty)
     TableLog.applyCdc(spark, gold,
-      TableLog.readFeed(spark, silver, withVersion = true), "k",
-      statsCols = Seq("k"))
+      TableLog.readFeed(spark, silver, withVersion = true), "k")
     val gLive = TableLog.read(spark, gold)
     assert(gLive.exceptAll(live).isEmpty && live.exceptAll(gLive).isEmpty)
     // full-snapshot rewrites stay refused even on a CDC feed — their
@@ -1921,7 +1919,7 @@ class TableLogSpec extends SparkSpec {
       f.stats.exists(s => s.col == "k" && s.max >= 2000 && s.min <= 2999))
     assert(untouchedBefore.size >= 5, "fixture: most files must not overlap")
     val v = TableLog.updateWhere(spark, t, "k", 2000, 2999,
-      Map("v" -> ($"v" * -1), "tag" -> lit("upd")), statsCols = Seq("k"))
+      Map("v" -> ($"v" * -1), "tag" -> lit("upd")))
     val back = TableLog.read(spark, t)
     assert(back.count() == 8000, "update never changes the row count")
     assert(TableLog.snapshot(t).get.rows == 8000)
@@ -1940,7 +1938,7 @@ class TableLogSpec extends SparkSpec {
       .where($"tag" === "upd").count() == 0)
     // no-op (no file can contain a match): no commit
     assert(TableLog.updateWhere(spark, t, "k", 90000, 91000,
-      Map("v" -> lit(0L)), statsCols = Seq("k")) == v)
+      Map("v" -> lit(0L))) == v)
     assert(TableLog.latestVersion(t) == v)
     // unknown set column / empty set refused
     intercept[IllegalArgumentException](TableLog.updateWhere(spark, t,
@@ -1949,17 +1947,16 @@ class TableLogSpec extends SparkSpec {
       "k", 0, 1, Map.empty[String, org.apache.spark.sql.Column]))
     // txn idempotence: a replayed update is a no-op
     val v2 = TableLog.updateWhere(spark, t, "k", 0, 10,
-      Map("v" -> lit(5L)), statsCols = Seq("k"), txnId = Some("u1"))
+      Map("v" -> lit(5L)), txnId = Some("u1"))
     assert(TableLog.updateWhere(spark, t, "k", 0, 10,
-      Map("v" -> lit(5L)), statsCols = Seq("k"), txnId = Some("u1")) == v2)
+      Map("v" -> lit(5L)), txnId = Some("u1")) == v2)
     assert(TableLog.latestVersion(t) == v2)
     // NULL keys never match a range update
     val tn = tmp("graft_log_updw_null")
     TableLog.create(spark, tn,
       Seq[(java.lang.Long, String)]((1L, "a"), (2500L, "b"), (null, "c"))
         .toDF("k", "v"), statsCols = Seq("k"))
-    TableLog.updateWhere(spark, tn, "k", 0, 9000, Map("v" -> lit("X")),
-      statsCols = Seq("k"))
+    TableLog.updateWhere(spark, tn, "k", 0, 9000, Map("v" -> lit("X")))
     assert(TableLog.read(spark, tn)
       .where($"k".isNull).head.getString(1) == "c")
     // plain feed refuses; the CDC capture path is pinned above
@@ -1979,7 +1976,7 @@ class TableLogSpec extends SparkSpec {
       statsCols = Seq("k"))
     // the classic swap: both RHS must read the pre-update image
     TableLog.updateWhere(spark, t, "k", 0, 49,
-      Map("a" -> $"b", "b" -> $"a"), statsCols = Seq("k"))
+      Map("a" -> $"b", "b" -> $"a"))
     val r = TableLog.read(spark, t).where($"k" === 7L).head()
     assert(r.getLong(1) == 2007L && r.getLong(2) == 1007L,
       "a/b swap must exchange, not duplicate")
@@ -1991,7 +1988,7 @@ class TableLogSpec extends SparkSpec {
     // value regardless of Map order
     TableLog.updateWhere(spark, t, "k", 10, 19,
       Map("a" -> $"e", "b" -> $"a", "c2" -> $"b", "d" -> $"c2",
-        "e" -> $"d"), statsCols = Seq("k"))
+        "e" -> $"d"))
     val r2 = TableLog.read(spark, t).where($"k" === 13L).head()
     // pre-image at k=13 (post-swap): a=2013 b=1013 c2=3013 d=4013 e=5013
     assert(r2.getLong(1) == 5013L, "a <- old e")
@@ -2002,12 +1999,12 @@ class TableLogSpec extends SparkSpec {
     // schema audit: a set expression that widens the column type is
     // refused BEFORE any write (the manifest schema never changes)
     val e1 = intercept[IllegalArgumentException](TableLog.updateWhere(
-      spark, t, "k", 0, 5, Map("a" -> lit(0.5)), statsCols = Seq("k")))
+      spark, t, "k", 0, 5, Map("a" -> lit(0.5))))
     assert(e1.getMessage.contains("cast the expression"))
     // predicate column in the set: cond is evaluated against the OLD
     // key, so moving the key out of the range still updates the row
     TableLog.updateWhere(spark, t, "k", 90, 94,
-      Map("k" -> ($"k" + 1000L), "a" -> lit(-1L)), statsCols = Seq("k"))
+      Map("k" -> ($"k" + 1000L), "a" -> lit(-1L)))
     assert(TableLog.read(spark, t).where($"k" >= 1090L && $"a" === -1L)
       .count() == 5)
   }
@@ -2084,7 +2081,7 @@ class TableLogSpec extends SparkSpec {
     // so later sidecars must NOT fold across it (its images carry
     // re-inserted values an over-folded fence would re-delete)
     TableLog.updateMor(spark, t, "k", "k", 2500, 2500,
-      Map("v" -> lit(-1L)), statsCols = Seq("k"))
+      Map("v" -> lit(-1L)))
     TableLog.deleteMor(spark, t, "k", Seq(4500L).toDF("k"))
     TableLog.deleteMor(spark, t, "k", Seq(5500L).toDF("k"))
     val preFold = TableLog.read(spark, t).orderBy("k").collect().toSeq
@@ -2147,7 +2144,7 @@ class TableLogSpec extends SparkSpec {
     // COW interop: an updateWhere over a range containing deleted keys
     // neither resurrects them nor loses the update
     TableLog.updateWhere(spark, t, "k", 200, 299,
-      Map("v" -> lit(-1L)), statsCols = Seq("k"))
+      Map("v" -> lit(-1L)))
     val afterUpd = TableLog.read(spark, t)
     assert(afterUpd.where($"k" === 207L).count() == 0,
       "COW rewrite must not resurrect a MOR-deleted row")
@@ -2278,8 +2275,7 @@ class TableLogSpec extends SparkSpec {
     val sumBefore = TableLog.read(spark, t).agg(sum("v")).head.getLong(0)
     // auto-OPTIMIZE sizes from the manifest's write-time bytes
     assert(before.files.find(_.path == bigPath).get.bytes == bigSize)
-    val v = TableLog.compactSmall(spark, t, smallBytes = bigSize / 2,
-      statsCols = Seq("k"))
+    val v = TableLog.compactSmall(spark, t, smallBytes = bigSize / 2)
     val after = TableLog.snapshot(t).get
     val afterPaths = after.files.map(_.path).toSet
     assert(afterPaths.contains(bigPath), "big file must carry by reference")
@@ -2324,8 +2320,7 @@ class TableLogSpec extends SparkSpec {
     val t = tmp("graft_log_autoz")
     TableLog.create(spark, t, spark.range(4096)
       .select(($"id" / 64).cast("long").as("a"), ($"id" % 64).as("b")))
-    TableLog.zOrder(spark, t, 3, "a", (0L, 63L), "b", (0L, 63L),
-      statsCols = Seq("a", "b"))
+    TableLog.zOrder(spark, t, 3, "a", (0L, 63L), "b", (0L, 63L))
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sc = spark.sqlContext
     val mem = MemoryStream[Long]
@@ -2336,7 +2331,7 @@ class TableLogSpec extends SparkSpec {
       TableLog.appendStream(spark, t,
         mem.toDF().select((col("value") % 64).as("a"),
           ((col("value") / 64).cast("long") % 64).as("b")).coalesce(1),
-        "az", ckpt, statsCols = Seq("a", "b"),
+        "az", ckpt,
         autoCompactBytes = Some(1L << 20),
         autoZOrderBytes = Some(1L << 20))
     }
@@ -2474,14 +2469,13 @@ class TableLogSpec extends SparkSpec {
     }
     // overwrite rewrite: the CHECK and the stats come from the write
     assert(stagedScans(TableLog.rewrite(spark, t, "overwrite",
-      expectRows = _ => None, statsCols = Seq("k"))(
+      expectRows = _ => None)(
       _ => spark.range(50).select($"id".as("k"), ($"id" % 50).as("v"))))
       .isEmpty, "constrained overwrite read back a file it wrote")
     // replaceWhere: slice predicate + CHECK + stats over the new slice,
     // stats of the keep-side rewrite — none reads a staged file
     assert(stagedScans(TableLog.replaceWhere(spark, t,
-      $"k" >= 0 && $"k" < 10, Seq((3L, 49L)).toDF("k", "v"),
-      statsCols = Seq("k"))).isEmpty,
+      $"k" >= 0 && $"k" < 10, Seq((3L, 49L)).toDF("k", "v"))).isEmpty,
       "constrained replaceWhere read back a file it wrote")
     assert(TableLog.read(spark, t).count() == 41)
   }
@@ -2507,7 +2501,7 @@ class TableLogSpec extends SparkSpec {
     // staged files dropped
     val e2 = intercept[IllegalArgumentException](
       TableLog.replaceWhere(spark, t, $"k" >= 0 && $"k" < 10,
-        Seq((3L, 99L)).toDF("k", "v"), statsCols = Seq("k")))
+        Seq((3L, 99L)).toDF("k", "v")))
     assert(e2.getMessage.contains("v_range"))
     assert(TableLog.read(spark, t).count() == 100)
     assert(java.nio.file.Files.list(
@@ -2515,7 +2509,7 @@ class TableLogSpec extends SparkSpec {
       "the refused slice must leave no staging dir behind")
     // the passing twins land
     TableLog.replaceWhere(spark, t, $"k" >= 0 && $"k" < 10,
-      Seq((3L, 49L)).toDF("k", "v"), statsCols = Seq("k"))
+      Seq((3L, 49L)).toDF("k", "v"))
     assert(TableLog.read(spark, t).count() == 91)
     TableLog.rewrite(spark, t, "overwrite", expectRows = _ => None)(
       _ => Seq((1L, 9L)).toDF("k", "v"))
@@ -2798,8 +2792,10 @@ class TableLogSpec extends SparkSpec {
     // be consulted — those files are provably all-null for the new
     // column, so they prune outright
     TableLog.dropColumn(spark, t, "key")
+    // (the drop took `key` out of the write spec: the re-added
+    // column's file carries no stat and is kept, the dead ones prune)
     TableLog.append(spark, t, spark.range(1).select(lit(5000L).as("key"),
-      lit(0L).as("v")).coalesce(1), statsCols = Seq("key"))
+      lit(0L).as("v")).coalesce(1))
     assert(dataFilesScanned(t, col("key").between(0, 10000)) == 1,
       "dead-incarnation files must prune outright for the re-added column")
     assert(scanWhere(t, col("key").between(0, 10000)).count() == 1)
@@ -2871,8 +2867,7 @@ class TableLogSpec extends SparkSpec {
     assert(dels.where($"k" % 50 =!= 1).count() == 0)
     // silver derived from the FEED ALONE equals bronze live
     TableLog.applyCdc(spark, sv,
-      TableLog.readFeed(spark, t, withVersion = true), "k",
-      statsCols = Seq("k"))
+      TableLog.readFeed(spark, t, withVersion = true), "k")
     val liveT = TableLog.read(spark, t)
     val liveS = TableLog.read(spark, sv)
     assert(liveS.exceptAll(liveT).isEmpty && liveT.exceptAll(liveS).isEmpty)
@@ -2904,8 +2899,7 @@ class TableLogSpec extends SparkSpec {
       .unionByName(spark.range(10).select(
         concat(lit("zz-"), lpad($"id".cast("string"), 6, "0")).as("key"),
         lit(7L).as("v"), lit("ins").as("tag")))
-    val ver = TableLog.mergeCow(spark, t, src, "key",
-      strStatsCols = Seq("key"))
+    val ver = TableLog.mergeCow(spark, t, src, "key")
     // rewrite minimality: every non-overlapping file survives BY PATH
     val after = TableLog.snapshotAt(t, ver).get
     val afterPaths = after.files.map(_.path).toSet
@@ -2924,7 +2918,7 @@ class TableLogSpec extends SparkSpec {
       concat(lit("k-"), lpad($"id".cast("string"), 6, "0")).as("key"),
       $"id".as("v"), lit("c").as("tag"), lit("insert").as("_change_type"),
       lit(1L).as("_change_version"))
-    TableLog.applyCdc(spark, sv, ch, "key", strStatsCols = Seq("key"))
+    TableLog.applyCdc(spark, sv, ch, "key")
     assert(TableLog.read(spark, sv).count() == 5)
   }
 
@@ -3005,7 +2999,7 @@ class TableLogSpec extends SparkSpec {
       Seq[(java.lang.Long, String)]((1L, "a"), (2500L, "b"), (null, "c"))
         .toDF("k", "v"),
       statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, t, "k", 2000, 2999, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, t, "k", 2000, 2999)
     val back = TableLog.read(spark, t).select("v").orderBy("v")
       .collect().map(_.getString(0)).toSeq
     // the NULL-k row is kept: NULL is in no range
@@ -3056,8 +3050,7 @@ class TableLogSpec extends SparkSpec {
       f.strStats.exists(s => s.col == "src" &&
         TableLog.utf8Leq(s.min, "src_b") && TableLog.utf8Leq("src_b", s.max)))
     assert(untouched.size >= 2, "fixture: some files must not overlap")
-    TableLog.deleteWhereIn(spark, t, "src", Seq("src_b"),
-      strStatsCols = Seq("src"))
+    TableLog.deleteWhereIn(spark, t, "src", Seq("src_b"))
     val after = TableLog.snapshot(t).get
     assert(after.rows == 700)
     assert(TableLog.read(spark, t).where($"src" === "src_b").count() == 0)
@@ -3091,15 +3084,14 @@ class TableLogSpec extends SparkSpec {
       .collect().map(_.getLong(1)).toSeq == Seq(-1L))
     // maintenance that asks for them keeps blooms alive: post-compaction
     // point probes still prune and still find every row
-    TableLog.compact(spark, t, targetBytes = 64L << 10,
-      bloomStatsCols = Seq("k"))
+    TableLog.compact(spark, t, targetBytes = 64L << 10)
     val afterCompact = TableLog.snapshot(t).get
     assert(afterCompact.files.forall(_.strStats.exists(_.col == "bloom:k")))
     assert(dataFilesScanned(t, col("k") === 42L) < afterCompact.files.size)
     assert(scanWhere(t, col("k") === 42L)
       .collect().map(_.getLong(0)).toSeq == Seq(42L))
     // ...and a copy-on-write delete rebuilds them for its rewritten files
-    TableLog.deleteWhere(spark, t, "k", 42, 42, bloomStatsCols = Seq("k"))
+    TableLog.deleteWhere(spark, t, "k", 42, 42)
     assert(scanWhere(t, col("k") === 42L).count() == 0)
     assert(TableLog.snapshot(t).get.files
       .forall(_.strStats.exists(_.col == "bloom:k")))
@@ -3158,7 +3150,7 @@ class TableLogSpec extends SparkSpec {
     // the delete's delta is (removes = affected files, adds = their
     // remainders); the maintained aggregate must absorb it without a
     // rescan, exactly like an append or merge delta
-    TableLog.deleteWhere(spark, src, "k", 1000, 1999, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, src, "k", 1000, 1999)
     TableLog.maintainAgg(spark, src, mv, Seq("g"), Seq("x"))
     val got = TableLog.read(spark, mv).orderBy("g")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -3175,7 +3167,7 @@ class TableLogSpec extends SparkSpec {
         .repartitionByRange(2, $"k"), statsCols = Seq("k"))
     // the range touches only PRE-evolution files: their rewrite must run
     // under the manifest schema (tag = null), not their physical one
-    TableLog.deleteWhere(spark, t, "k", 0, 49, statsCols = Seq("k"))
+    TableLog.deleteWhere(spark, t, "k", 0, 49)
     val back = TableLog.read(spark, t)
     assert(back.columns.toSeq == Seq("k", "tag"))
     assert(back.count() == 150)
@@ -3237,7 +3229,7 @@ class TableLogSpec extends SparkSpec {
     val beforeProbe = dataFilesScanned(t, probe)
     val sumBefore = TableLog.read(spark, t).agg(sum($"k")).head.getLong(0)
     val v = TableLog.compactClustered(spark, t, nFiles = 4,
-      clusterCol = "k", statsCols = Seq("k"))
+      clusterCol = "k")
     // content identical (the rewrite row-audit also enforces this)
     assert(TableLog.read(spark, t).count() == 3000)
     assert(TableLog.read(spark, t).agg(sum($"k")).head.getLong(0) == sumBefore)
@@ -3263,8 +3255,7 @@ class TableLogSpec extends SparkSpec {
     // the byte-targeted compact (not just compactClustered) must forward
     // strStatsCols — a silent drop here would keep reads correct but
     // degrade every categorical probe to a full-file scan
-    TableLog.compact(spark, t, targetBytes = 8 * 1024,
-      strStatsCols = Seq("source"))
+    TableLog.compact(spark, t, targetBytes = 8 * 1024)
     val files = TableLog.snapshot(t).get.files
     // the passthrough proof: every rewritten file carries the stat
     // (before the fix, compact passed strStatsCols = Nil to rewrite and
@@ -3397,13 +3388,11 @@ class TableLogSpec extends SparkSpec {
       // replace [1000,2000) with 400 rows of v=41
       th(TableLog.replaceWhere(spark, t, $"k" >= 1000 && $"k" < 2000,
         spark.range(1000L, 1400L).select($"id".as("k"),
-          lit(41L).as("v")).coalesce(1),
-        statsCols = Seq("k"), prune = slice(1000, 2000))),
+          lit(41L).as("v")).coalesce(1), prune = slice(1000, 2000))),
       // replace [5000,6000) with 250 rows of v=42
       th(TableLog.replaceWhere(spark, t, $"k" >= 5000 && $"k" < 6000,
         spark.range(5000L, 5250L).select($"id".as("k"),
-          lit(42L).as("v")).coalesce(1),
-        statsCols = Seq("k"), prune = slice(5000, 6000))),
+          lit(42L).as("v")).coalesce(1), prune = slice(5000, 6000))),
       // and an unrelated concurrent append of 300 rows
       th(TableLog.append(spark, t,
         spark.range(9000L, 9300L).select($"id".as("k"),
@@ -3451,8 +3440,7 @@ class TableLogSpec extends SparkSpec {
     // range-partition boundaries are sample-approximate, so a slice
     // touching a boundary could overlap two files and flake the
     // planned-read pins below.
-    TableLog.deleteDv(spark, t, $"k" >= 1250 && $"k" < 1350,
-      statsCols = Seq("k"))
+    TableLog.deleteDv(spark, t, $"k" >= 1250 && $"k" < 1350)
     assert(TableLog.snapshot(t).get.dels.nonEmpty, "DV must be pending")
     def pruneRange(lo: Long, hi: Long) = (s: TableLog.Snapshot) =>
       s.files.filter(f => f.stats.find(_.col == "k").forall(st =>
@@ -3462,8 +3450,7 @@ class TableLogSpec extends SparkSpec {
       val planned0 = TableLog.morFilesPlanned.get()
       TableLog.replaceWhere(spark, t, $"k" >= 1200 && $"k" < 1800,
         spark.range(1200L, 1500L).select($"id".as("k"),
-          lit(40L).as("v")).coalesce(1),
-        statsCols = Seq("k"), prune = pruneRange(1200, 1800))
+          lit(40L).as("v")).coalesce(1), prune = pruneRange(1200, 1800))
       // audit mode scans TWICE on purpose (rewrite + cross-check);
       // the require inside pinned derived == counted
       assert(TableLog.morFilesPlanned.get() - planned0 == 2)
@@ -3476,8 +3463,7 @@ class TableLogSpec extends SparkSpec {
     val planned1 = TableLog.morFilesPlanned.get()
     TableLog.replaceWhere(spark, t, $"k" >= 3200 && $"k" < 3800,
       spark.range(3200L, 3300L).select($"id".as("k"),
-        lit(50L).as("v")).coalesce(1),
-      statsCols = Seq("k"), prune = pruneRange(3200, 3800))
+        lit(50L).as("v")).coalesce(1), prune = pruneRange(3200, 3800))
     assert(TableLog.morFilesPlanned.get() - planned1 == 1)
     assert(TableLog.read(spark, t).count() == 3700 - 600 + 100)
     // KEY sidecar pending on the slice → data-dependent removal →
@@ -3487,8 +3473,7 @@ class TableLogSpec extends SparkSpec {
     val planned2 = TableLog.morFilesPlanned.get()
     TableLog.replaceWhere(spark, t, $"k" >= 3200 && $"k" < 3800,
       spark.range(3200L, 3210L).select($"id".as("k"),
-        lit(60L).as("v")).coalesce(1),
-      statsCols = Seq("k"), prune = pruneRange(3200, 3800))
+        lit(60L).as("v")).coalesce(1), prune = pruneRange(3200, 3800))
     assert(TableLog.morFilesPlanned.get() - planned2 >= 2,
       "KEY-fenced slices must fall back to the counting scan")
     assert(TableLog.read(spark, t).count() == 3150 - 50 + 10)
@@ -3517,38 +3502,32 @@ class TableLogSpec extends SparkSpec {
       }
       // plain table, every face in sequence
       val t = mk("graft_auditscan_plain")
-      TableLog.deleteWhere(spark, t, "id", 100, 300,
-        statsCols = Seq("id"))                        // −201
+      TableLog.deleteWhere(spark, t, "id", 100, 300)              // −201
       TableLog.updateWhere(spark, t, "id", 500, 700,
-        Map("v" -> ($"v" + 100L)), statsCols = Seq("id"))
+        Map("v" -> ($"v" + 100L)))
       TableLog.mergeCow(spark, t,
         spark.range(900L, 1100L).select($"id", ($"id" % 5).as("v")),
-        "id", statsCols = Seq("id"))                  // all matched
+        "id")                  // all matched
       TableLog.replaceWhere(spark, t, $"id".between(1500, 1600),
         spark.range(1500L, 1601L).select($"id", lit(0L).as("v"))
-          .coalesce(1), statsCols = Seq("id"))        // −101 +101
-      TableLog.compactSmall(spark, t, smallBytes = 1L << 20,
-        statsCols = Seq("id"))
-      TableLog.zOrder(spark, t, 4, "id", (0L, 4000L), "v", (0L, 110L),
-        statsCols = Seq("id"))
-      TableLog.zOrderMaintain(spark, t, statsCols = Seq("id"))
+          .coalesce(1))        // −101 +101
+      TableLog.compactSmall(spark, t, smallBytes = 1L << 20)
+      TableLog.zOrder(spark, t, 4, "id", (0L, 4000L), "v", (0L, 110L))
+      TableLog.zOrderMaintain(spark, t)
       assert(TableLog.read(spark, t).count() == 4000 - 201)
       assert(TableLog.read(spark, t)
         .where($"id".between(500, 700) && $"v" >= 100L).count() == 201)
       // DV-fenced: the derivation must subtract the vectored positions
       val t2 = mk("graft_auditscan_dv")
-      TableLog.deleteDv(spark, t2, $"id".between(50, 60),
-        statsCols = Seq("id"))                        // −11, pending DV
+      TableLog.deleteDv(spark, t2, $"id".between(50, 60))  // −11, pending DV
       assert(TableLog.snapshot(t2).get.dels.nonEmpty, "DV must be pending")
-      TableLog.deleteWhere(spark, t2, "id", 0, 200,
-        statsCols = Seq("id"))                        // −190 live
+      TableLog.deleteWhere(spark, t2, "id", 0, 200)               // −190 live
       assert(TableLog.read(spark, t2).count() == 4000 - 201)
       // key-fenced: falls back to the counting scan, still exact
       val t3 = mk("graft_auditscan_key")
       TableLog.deleteMor(spark, t3, "id",
         spark.range(10L, 20L).toDF("id"))             // −10, key sidecar
-      TableLog.deleteWhere(spark, t3, "id", 0, 100,
-        statsCols = Seq("id"))                        // −91 live
+      TableLog.deleteWhere(spark, t3, "id", 0, 100)               // −91 live
       assert(TableLog.read(spark, t3).count() == 4000 - 101)
     } finally spark.conf.unset("spark.graft.mutation.auditScan")
   }

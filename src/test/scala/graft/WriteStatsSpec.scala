@@ -177,9 +177,8 @@ class WriteStatsSpec extends SparkSpec {
     // a derived stat rides the same write job
     val derived = Seq("kz" -> (col("k") * 2 + col("vi")),
       "dd" -> unix_date(col("d")))
-    TableLog.rewrite(spark, t, "compact", statsCols = statsCols,
-      strStatsCols = strCols, bloomStatsCols = bloomCols,
-      derivedStats = derived)(_.repartition(3, col("k")))
+    TableLog.rewriteImpl(spark, t, "compact", n => Some(n), None, Map.empty,
+      None, Nil, derived)(_.repartition(3, col("k")))
     val s3 = TableLog.snapshot(t).get
     assert(s3.files.nonEmpty && s3.files.forall(_.stats.exists(_.col == "kz")))
     check(s3.files, derived)
