@@ -460,8 +460,9 @@ object SparkEntry {
     * statement sequence on its own slice, against a table registered
     * with `morKey` and an UNCLUSTERED layout — the UPDATE commits
     * through `updateMor` (new images + key sidecar) and the MERGE
-    * through `mergeMor` (source files + key sidecar), ZERO base-file
-    * rewrites either way (spec-pinned in SqlDmlSpec); the range
+    * through `mergeUpsert`'s key-sidecar commit (source files + key
+    * sidecar), ZERO base-file rewrites either way (spec-pinned in
+    * SqlDmlSpec); the range
     * DELETE stays copy-on-write by design (a range is what the stat
     * prune rewrites tightly). The oracle replays the same three
     * mutations — which commit strategy each statement took must be
@@ -2187,7 +2188,7 @@ object SparkEntry {
     val ins = base.where(col("o_orderkey") % 97 === 0)
       .select((col("o_orderkey") + maxKey).as("o_orderkey"),
         lit("I").as("status"), col("price_c"))
-    tl.mergeCow(s, t, upd.unionByName(ins), "o_orderkey")
+    tl.mergeUpsert(s, t, upd.unionByName(ins), Seq("o_orderkey"))
     tl.read(s, t).orderBy("o_orderkey")
   }
 
@@ -2220,11 +2221,11 @@ object SparkEntry {
 
   /** MERGE-ON-READ upsert under the oracle: `o48_merge_cow`'s exact
     * latest-wins algebra (update band + past-domain inserts on the
-    * orders key) through `mergeMor` on an unclustered layout — the
-    * commit is the source files + a key sidecar, zero base-file
-    * rewrites (spec-pinned); the oracle replays the merge as a full
-    * outer join, so a fence error (old image surviving, late row
-    * swallowed) changes the hash. */
+    * orders key) through `mergeUpsert` on an unclustered layout whose
+    * table declares `morKey` — the commit is the source files + a key
+    * sidecar, zero base-file rewrites (spec-pinned); the oracle
+    * replays the merge as a full outer join, so a fence error (old
+    * image surviving, late row swallowed) changes the hash. */
   private def o66MergeMor(s: SparkSession, dir: String): DataFrame = {
     val t = s"$tmpRoot/mmor_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
@@ -2233,7 +2234,7 @@ object SparkEntry {
         cents(col("o_totalprice")).as("price_c"))
     val tl = graft.sinks.TableLog
     tl.create(s, t, base.repartition(8, col("status")),
-      statsCols = Seq("o_orderkey"))
+      statsCols = Seq("o_orderkey"), morKey = Some("o_orderkey"))
     val upd = base.where(col("o_orderkey") % 7 === 3)
       .select(col("o_orderkey"), lit("U").as("status"),
         (col("price_c") + 500).as("price_c"))
@@ -2241,7 +2242,7 @@ object SparkEntry {
     val ins = base.where(col("o_orderkey") % 97 === 0)
       .select((col("o_orderkey") + maxKey).as("o_orderkey"),
         lit("I").as("status"), col("price_c"))
-    tl.mergeMor(s, t, upd.unionByName(ins), "o_orderkey")
+    tl.mergeUpsert(s, t, upd.unionByName(ins), Seq("o_orderkey"))
     tl.read(s, t).groupBy("status")
       .agg(count(lit(1)).as("n_rows"), sum("price_c").as("sum_price_c"),
         min("o_orderkey").as("min_ok"), max("o_orderkey").as("max_ok"))
@@ -2307,7 +2308,7 @@ object SparkEntry {
   /** STRING-KEY copy-on-write merge: the documents table keyed on a
     * zero-padded string doc key, range-clustered with string file
     * stats — an update band inside the key domain plus inserts past
-    * it, merged via the string-stat prune (`cowApplyStr`'s exact
+    * it, merged via the string-stat prune (`keyPruneOf`'s exact
     * sorted-key-set overlap in UTF-8 binary order). The oracle replays
     * the latest-wins merge relationally; rewrite-minimality (untouched
     * files carrying by reference) is spec-pinned in TableLogSpec. */
@@ -2330,7 +2331,7 @@ object SparkEntry {
       .select(concat(lit("new-"),
           lpad(col("doc_id").cast("string"), 8, "0")).as("key"),
         col("lang"), col("source"), col("n_chars"))
-    tl.mergeCow(s, t, upd.unionByName(ins), "key")
+    tl.mergeUpsert(s, t, upd.unionByName(ins), Seq("key"))
     tl.read(s, t).groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("n_chars").as("sum_chars"),
         min("key").as("min_key"), max("key").as("max_key"))
@@ -2375,12 +2376,13 @@ object SparkEntry {
   /** MERGE-ON-READ "apply changes into" under the oracle: the same
     * bronze lifecycle as `o49_cdc_apply` (create → re-insert every
     * key → range delete) on a different slice, materialized to silver
-    * through `applyCdcMor` in TWO batches — the first bootstraps the
-    * table, the second commits the v2 updates + v3 deletes as winning
-    * inserts' files + a touched-key sidecar with ZERO silver-file
-    * rewrites (mechanics spec-pinned in TableLogSpec; the oracle pins
-    * the same final keyed state as the COW apply — which commit
-    * strategy the apply took must be invisible to the reader). */
+    * through `applyCdc` in TWO batches — the first bootstraps the
+    * table, which then declares `morKey`, so the second commits the v2
+    * updates + v3 deletes as winning inserts' files + a touched-key
+    * sidecar with ZERO silver-file rewrites (mechanics spec-pinned in
+    * TableLogSpec; the oracle pins the same final keyed state as the
+    * COW apply — which commit strategy the apply took must be
+    * invisible to the reader). */
   private def o67CdcApplyMor(s: SparkSession, dir: String): DataFrame = {
     val sfx = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val t = s"$tmpRoot/cdcapm_$sfx"
@@ -2398,9 +2400,10 @@ object SparkEntry {
         .repartitionByRange(8, col("o_orderkey")))  // v2: same keys
     tl.deleteWhere(s, t, "o_orderkey", 2000, 3500)                // v3
     val feed = tl.readFeed(s, t, withVersion = true)
-    tl.applyCdcMor(s, sv, feed.where(col("_change_version") === 1),
+    tl.applyCdc(s, sv, feed.where(col("_change_version") === 1),
       "o_orderkey")     // bootstrap
-    tl.applyCdcMor(s, sv, feed.where(col("_change_version") >= 2),
+    tl.setWriteSpec(sv, tl.writeSpec(sv).copy(morKey = Some("o_orderkey")))
+    tl.applyCdc(s, sv, feed.where(col("_change_version") >= 2),
       "o_orderkey")     // MOR batch
     tl.read(s, sv).groupBy("priority")
       .agg(count(lit(1)).as("n_rows"), sum("price_c").as("sum_price_c"),
@@ -2438,7 +2441,7 @@ object SparkEntry {
     val ins = base.where(col("o_orderkey") % 97 === 0)
       .select((col("o_orderkey") + maxKey).as("o_orderkey"),
         col("price_c"), lit("I").as("priority"))
-    tl.mergeCow(s, t, upd.unionByName(ins), "o_orderkey")         // v2
+    tl.mergeUpsert(s, t, upd.unionByName(ins), Seq("o_orderkey"))  // v2
     tl.updateWhere(s, t, "o_orderkey", 1000, 4000,
       Map("price_c" -> (col("price_c") + 777)))                   // v3
     tl.deleteWhere(s, t, "o_orderkey", 5000, 9000)                // v4

@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
   * the CDC batch is small — Spark picks it from stats/AQE; at 100 TB the
   * CDC batch is always the small side). No driver loops, no per-row RPC.
   * Output columns are exactly the target's, so the result can overwrite the
-  * target; `TableLog`'s merge faces (`mergeUpsert`, `mergeCow`) commit
-  * it through the log.
+  * target; `TableLog.mergeUpsert` commits it through the log.
   */
 object MergeOps {
 

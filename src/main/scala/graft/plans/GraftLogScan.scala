@@ -109,7 +109,7 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
     * dynamic partition pruning: when a log relation joins a PROVABLY
     * SMALL other side on a long equi-key, execute the other side's key
     * projection at planning time (bounded by `maxKeys` distinct keys —
-    * the same driver budget `mergeCow` already spends), and open only
+    * the same driver budget the upsert key prune spends), and open only
     * the fact files whose key stats can contain one of them. Safe
     * exactly when the relation sits on a NON-PRESERVED side — its
     * rows without a join partner are dropped anyway: inner and

@@ -62,15 +62,15 @@ object GraftSqlDml {
     * table path alone. Everything else is the table's own write spec,
     * read at each statement: the stats every commit measures, and
     * `morKey`, which opts the table's SQL mutations into the
-    * MERGE-ON-READ faces keyed on that column — UPDATE → `updateMor`,
-    * MERGE → `mergeMor`, and a DELETE whose predicate is
-    * `morKey IN (long list)` / `= n` → `deleteMor` — the zero-rewrite
-    * path an UNCLUSTERED table wants (range DELETEs stay
-    * copy-on-write: a range is exactly what the stat prune rewrites
-    * tightly). The spec's `maxDvPositions` caps each positional
-    * (deletion-vector) commit — past it a DELETE auto-falls-back to
-    * copy-on-write and an UPDATE refuses with guidance (the TableLog
-    * faces' own contract). */
+    * MERGE-ON-READ commits — UPDATE → `updateMor`, a DELETE whose
+    * predicate is `morKey IN (long list)` / `= n` → `deleteMor`, and
+    * MERGE, whose one `mergeUpsert` call takes the key-sidecar commit
+    * by the same spec — the zero-rewrite path an UNCLUSTERED table
+    * wants (range DELETEs stay copy-on-write: a range is exactly what
+    * the stat prune rewrites tightly). The spec's `maxDvPositions`
+    * caps each positional (deletion-vector) commit — past it a DELETE
+    * auto-falls-back to copy-on-write and an UPDATE refuses with
+    * guidance (the TableLog faces' own contract). */
   final case class Reg(table: String) {
     def spec: TableLog.WriteSpec = TableLog.writeSpec(table)
   }
@@ -763,8 +763,7 @@ object GraftSqlDml {
             // loudly, from analysis and deleteDv's own guard.
             GraftDmlCommand("delete", view, reg.table,
               s => TableLog.deleteDv(s, reg.table,
-                org.apache.spark.sql.graft.Bridge.column(cond),
-                maxPositions = spec.maxDvPositions))
+                org.apache.spark.sql.graft.Bridge.column(cond)))
         }
     }
   }
@@ -804,8 +803,7 @@ object GraftSqlDml {
         // exact SQL semantics — see delete's twin comment
         GraftDmlCommand("update", view, reg.table,
           s => TableLog.updateDv(s, reg.table,
-            org.apache.spark.sql.graft.Bridge.column(cond), set,
-            maxPositions = reg.spec.maxDvPositions))
+            org.apache.spark.sql.graft.Bridge.column(cond), set))
     }
   }
 
@@ -822,7 +820,7 @@ object GraftSqlDml {
     if (!canonical) unsupported(s"MERGE INTO $view",
       "supported form on a REGISTERED VIEW is WHEN MATCHED THEN " +
         "UPDATE SET * WHEN NOT MATCHED THEN INSERT * (the latest-wins " +
-        "upsert mergeCow implements); the full clause matrix — " +
+        "upsert mergeUpsert implements); the full clause matrix — " +
         "conditional actions, WHEN NOT MATCHED BY SOURCE — is " +
         "supported on CATALOG tables (MERGE INTO graft.ns.t, through " +
         "Spark's own row-level framework)")
@@ -839,12 +837,9 @@ object GraftSqlDml {
     }
     // the MERGE source may time-travel a registered view
     val source = timeTravel(spark, m.sourceTable).getOrElse(m.sourceTable)
-    GraftDmlCommand("merge", view, reg.table, s => {
-      val src = org.apache.spark.sql.graft.Bridge.ofRows(s, source)
-      if (reg.spec.morKey.isDefined)
-        TableLog.mergeMor(s, reg.table, src, key)
-      else TableLog.mergeCow(s, reg.table, src, key)
-    })
+    GraftDmlCommand("merge", view, reg.table, s =>
+      TableLog.mergeUpsert(s, reg.table,
+        org.apache.spark.sql.graft.Bridge.ofRows(s, source), Seq(key)))
   }
 }
 

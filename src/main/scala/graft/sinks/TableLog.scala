@@ -1034,8 +1034,8 @@ object TableLog {
               sidecarHint(s.schema.struct, k))
             // NO .distinct() on the key side: left_anti semantics are
             // unchanged by duplicate build keys (each sidecar is
-            // already deduped at write — deleteMor/mergeMor distinct
-            // their key set; only cross-sidecar repeats remain), and
+            // already deduped at write — deleteMor and the upserts
+            // distinct their key set; only cross-sidecar repeats remain), and
             // the distinct's final HashAggregate would sit between the
             // anti-join's Sort and its shuffle stage — the exact shape
             // that stops Spark's OptimizeSkewedJoin from EVER matching
@@ -1837,9 +1837,9 @@ object TableLog {
     * constraint (violation = expression FALSE; NULL passes — SQL CHECK
     * semantics); any violation refuses with the constraint's name and
     * count. Only for rows that are NOT the rows being written — the
-    * existing data at ADD CONSTRAINT, a restore target, mergeUpsert's
-    * source; a face that writes its frame audits it in the write job
-    * instead ([[checkAudits]]). */
+    * existing data at ADD CONSTRAINT, a restore target; a face that
+    * writes its frame audits it in the write job instead
+    * ([[checkAudits]]). */
   private def enforceChecks(spark: SparkSession, table: String,
       checks: Seq[(String, String)], df: DataFrame, what: String): Unit = {
     if (checks.isEmpty) return
@@ -1855,8 +1855,8 @@ object TableLog {
   }
 
   /** Register a named CHECK constraint — a boolean SQL expression every
-    * row of every future row-adding commit (append/appendStream, COW
-    * merge/update, mergeUpsert, INSERT OVERWRITE, replaceWhere, the
+    * row of every future row-adding commit (append/appendStream,
+    * mergeUpsert, updateWhere, INSERT OVERWRITE, replaceWhere, the
     * vanilla-session row-level UPDATE/MERGE) must satisfy, counted by
     * the write job over the rows it writes, before any manifest
     * references the batch. EXISTING rows are validated first (one table scan — the
@@ -2379,11 +2379,14 @@ object TableLog {
     def shape(s: RecordedSchema): Seq[(String,
         org.apache.spark.sql.types.DataType)] =
       s.struct.fields.toSeq.map(f => (f.name, f.dataType))
+    // the merge commit carries src's write spec, so a branch's
+    // setWriteSpec would be silently lost
     require(shape(bSnap.schema) == shape(base.schema) &&
-        bSnap.schemaOps == base.schemaOps && bSnap.checks == base.checks,
-      s"mergeBranch: $branch changed schema, schema ops, or CHECK " +
-        "constraints since the fork — publish those with a " +
-        "fast-forward (publishBranch), or re-clone")
+        bSnap.schemaOps == base.schemaOps && bSnap.checks == base.checks &&
+        bSnap.spec == base.spec,
+      s"mergeBranch: $branch changed schema, schema ops, CHECK " +
+        "constraints or write spec since the fork — publish those with " +
+        "a fast-forward (publishBranch), or re-clone")
     require(bSnap.dels == base.dels,
       s"mergeBranch: $branch has pending MOR sidecar changes since " +
         "the fork — run morMaintain(branch) to materialize them into " +
@@ -2830,7 +2833,7 @@ object TableLog {
   // reads null) and coalesce null to 'insert', so publication stays
   // O(added files) metadata with zero data rewrite.
   //
-  // UPDATES (the stats-pruned `mergeCow`/`applyCdc`/`updateWhere`
+  // UPDATES (the stats-pruned `mergeUpsert`/`applyCdc`/`updateWhere`
   // commits) are captured on CDC feeds by the same manifest-derived
   // machinery, via the multiset SYMMETRIC difference: the rewritten
   // files mix untouched remainder rows with the new/updated rows, but
@@ -2849,15 +2852,15 @@ object TableLog {
   // (state = inserts ⊖ deletes, what `readFeed` documents) is exact
   // unconditionally; the KEYED reading (`applyCdc`) is exact when the
   // touched keys are unique in the base table — which applyCdc-written
-  // tables are by construction and mergeCow's own dup-collapse makes
+  // tables are by construction and mergeUpsert's own dup-collapse makes
   // true from the first merge on. (A dup-keyed base was never
   // faithfully representable as a keyed state to begin with; this is
   // why the capture stays with two change types instead of Delta-CDF's
   // update_pre/postimage pairing — cancellation makes the pairing
   // non-total, and the multiset identity needs no pairing.)
-  // Full-snapshot rewrites (`mergeUpsert`, `maintainAgg`'s refresh)
-  // stay refused on ALL feed tables: their capture would scan the
-  // whole old+new table — use the pruned COW faces on a feed.
+  // Full-snapshot rewrites (`maintainAgg`'s refresh) stay refused on
+  // ALL feed tables: their capture would scan the whole old+new table
+  // — use the pruned COW faces on a feed.
 
   private def feedDir(table: String): Path = Paths.get(table, "_feed")
   private def feedMarker(table: String, v: Long): Path =
@@ -3552,7 +3555,7 @@ object TableLog {
     * of the lost round stays invisible; `vacuum` reclaims it) — this is
     * what makes concurrent rewrite+append serializable instead of
     * lost-update-prone. `expectRows(baseRows)` audits the rewrite
-    * before commit (None skips, for row-changing rewrites like merge).
+    * before commit (None skips, for row-changing rewrites).
     * The output files carry the stats of the base snapshot's write
     * spec; `respec` (REPLACE TABLE) declares a new spec in the same
     * commit and writes under it. A spec column the output no longer
@@ -3595,9 +3598,8 @@ object TableLog {
       // CHECK constraints are audited by the write job (a violation
       // throws before any manifest references the batch and
       // writeDataFiles drops the staging). Other rewrite actions carry
-      // rows a prior
-      // commit already certified: compact/zorder re-layout, "merge"
-      // enforced its source at the caller, "delete" keeps survivors.
+      // rows a prior commit already certified: compact/zorder
+      // re-layout, "delete" keeps survivors.
       val audits =
         if (action == "overwrite")
           checkAudits(table, base.checks, "overwrite")
@@ -3891,8 +3893,9 @@ object TableLog {
   }
 
   /** MOR sidecar MAINTENANCE — the read-amplification bound the
-    * merge-on-read faces need at scale. Every `updateMor`/`mergeMor`/
-    * `deleteMor`/`applyCdcMor` commit adds a delete sidecar, and
+    * merge-on-read faces need at scale. Every `updateMor`/`deleteMor`
+    * commit and every upsert on a `morKey` table adds a delete
+    * sidecar, and
     * `morScan` pays one anti-join per (cohort × key column) per read;
     * nothing retires sidecars except a full rewrite the user must
     * remember to run. This face IS the policy: a no-op while the
@@ -4517,9 +4520,8 @@ object TableLog {
     * full `morScan().count()` per CAS attempt just to AUDIT a number
     * the metadata already proves. KEY sidecars remove a DATA-dependent
     * row count (anti-join), so a key-fenced affected file falls back
-    * to the counting scan; `spark.graft.mutation.auditScan=true` (or the
-    * legacy `spark.graft.replaceWhere.auditScan`) keeps the two-scan
-    * cross-check for audit runs. */
+    * to the counting scan; `spark.graft.mutation.auditScan=true` keeps
+    * the two-scan cross-check for audit runs. */
   private def liveRowsOf(spark: SparkSession, table: String,
       base: Snapshot, affected: Seq[FileEntry]): Long = {
     if (affected.isEmpty) return 0L
@@ -4536,10 +4538,7 @@ object TableLog {
         affected.map(f => dv.positionsFor(lastTwo(f.path))).sum
       }
     val derived = affected.map(_.rows).sum - vectored
-    val audit =
-      spark.conf.get("spark.graft.mutation.auditScan", "false").toBoolean ||
-      spark.conf.get("spark.graft.replaceWhere.auditScan", "false").toBoolean
-    if (audit) {
+    if (spark.conf.get("spark.graft.mutation.auditScan", "false").toBoolean) {
       val counted = morScan(spark, table, base, affected).count()
       require(counted == derived,
         s"liveRowsOf audit scan on $table: manifest-derived " +
@@ -4786,10 +4785,9 @@ object TableLog {
     * and NULL keep. The predicate drives MANIFEST pruning through the
     * same machinery as the declarative face (resolved ranges,
     * IN-lists, bloom, z-box), so a clustered positional delete scans
-    * only overlapping files. `maxPositions` bounds the vector (it
-    * ships with read plans like a broadcast scalar — default 2M
-    * positions ≈ 16 MB); a wider delete should be COW
-    * (`deleteWhere`) or keyed (`deleteMor`), and the refusal says so.
+    * only overlapping files. The write spec's `maxDvPositions` bounds
+    * the vector (it ships with read plans like a broadcast scalar —
+    * default 2M positions ≈ 16 MB).
     * Positions are recorded off `_metadata.row_index` AT THE SCAN,
     * below any pending sidecar's anti-join, so they are exact
     * whatever join strategy the MOR resolution picks. Matched rows
@@ -4800,24 +4798,23 @@ object TableLog {
     * (unchanged when nothing matches).
     *
     * Two scale guards beyond the per-commit cap: (1) a delete whose
-    * matched count exceeds `maxPositions` AUTO-FALLS-BACK to the
+    * matched count exceeds `maxDvPositions` AUTO-FALLS-BACK to the
     * copy-on-write rewrite (`deleteImpl` with the same predicate —
     * sound because `dvPrune` already refused nondeterminism, so the
-    * rewrite's re-evaluation matches the counted set exactly); set
-    * `cowFallback = false` to get the old refusal. (2) the AGGREGATE
-    * pending deletion-vector weight is bounded: every DV-bearing read
-    * ships the union of all pending sidecars with the plan, and
-    * nothing else shrinks it across commits — so when the pending DV
-    * sidecar bytes exceed `maxPendingDvBytes` (default 64 MB ≈ 4
-    * max-width vectors) this face materializes them away
-    * (`morMaintain(maxSidecars = 0)`) before committing its own.
-    * Both paths announce themselves in the log. */
+    * rewrite's re-evaluation matches the counted set exactly). (2)
+    * the AGGREGATE pending deletion-vector weight is bounded: every
+    * DV-bearing read ships the union of all pending sidecars with the
+    * plan, and nothing else shrinks it across commits — so when the
+    * pending DV sidecar bytes exceed
+    * `spark.graft.rowLevel.maxPendingDvBytes` (default 64 MB ≈ 4
+    * max-width vectors; the bound the row-level path applies) this
+    * face materializes them away (`morMaintain(maxSidecars = 0)`)
+    * before committing its own. Both paths announce themselves in the
+    * log. */
   def deleteDv(spark: SparkSession, table: String, cond: Column,
       txnId: Option[String] = None,
-      maxPositions: Long = DefaultMaxDvPositions,
       statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil, cowFallback: Boolean = true,
-      maxPendingDvBytes: Long = 64L << 20): Long = {
+      bloomStatsCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, not}
     // the stat lists are a CHECK against the table's spec only
     checkDeclared(table, snapshotOrFail(table).spec,
@@ -4830,7 +4827,7 @@ object TableLog {
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
     var committed = -1L
     while (committed < 0) {
-      maintainDvIfHeavy(spark, table, maxPendingDvBytes)
+      maintainDvIfHeavy(spark, table)
       val base = snapshotOrFail(table)
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
       if (base.files.isEmpty) return base.version
@@ -4843,13 +4840,8 @@ object TableLog {
       try {
         val cnt = matched.count()
         if (cnt == 0) return base.version
+        val maxPositions = base.spec.maxDvPositions
         if (cnt > maxPositions) {
-          require(cowFallback,
-            s"deleteDv on $table: $cnt matched rows exceed maxPositions " +
-              s"($maxPositions) — a deletion vector this wide would " +
-              "weigh down every read plan; use deleteWhere " +
-              "(copy-on-write) or deleteMor (key sidecar) for bulk " +
-              "deletes, or raise the bound")
           // over-cap bulk delete: step over the wall the planner can
           // see past — run the SAME predicate as a copy-on-write
           // rewrite of the pruned files. NULL predicate keeps, like
@@ -4890,9 +4882,7 @@ object TableLog {
     * inserts. Returns the committed version (unchanged when nothing
     * matches). */
   def updateDv(spark: SparkSession, table: String, cond: Column,
-      set: Map[String, Column], txnId: Option[String] = None,
-      maxPositions: Long = DefaultMaxDvPositions,
-      maxPendingDvBytes: Long = 64L << 20): Long = {
+      set: Map[String, Column], txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "updateDv: empty set clause")
     require(!feedEnabled(table) || cdcFeedEnabled(table),
@@ -4903,7 +4893,7 @@ object TableLog {
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
     var committed = -1L
     while (committed < 0) {
-      maintainDvIfHeavy(spark, table, maxPendingDvBytes)
+      maintainDvIfHeavy(spark, table)
       val base = snapshotOrFail(table)
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
       if (base.files.isEmpty) return base.version
@@ -4918,6 +4908,7 @@ object TableLog {
       try {
         val cnt = matched.count()
         if (cnt == 0) return base.version
+        val maxPositions = base.spec.maxDvPositions
         require(cnt <= maxPositions,
           s"updateDv on $table: $cnt matched rows exceed maxPositions " +
             s"($maxPositions) — use updateWhere (copy-on-write) or " +
@@ -5315,11 +5306,7 @@ object TableLog {
     // commit lands: the NEXT statement starts from a maintained table.
     // Count gate matters doubly for this face — each statement lands
     // one sidecar shard per task.
-    maintainDvIfHeavy(spark, table,
-      spark.conf.getOption("spark.graft.rowLevel.maxPendingDvBytes")
-        .map(_.toLong).getOrElse(64L << 20),
-      spark.conf.getOption("spark.graft.rowLevel.maxPendingDvSidecars")
-        .map(_.toInt).getOrElse(64))
+    maintainDvIfHeavy(spark, table)
     committed
   }
 
@@ -5331,9 +5318,16 @@ object TableLog {
     * without bound. Manifest arithmetic (each entry's write-time
     * `bytes`), zero filesystem calls; past the bound, ONE
     * `morMaintain(maxSidecars = 0)` materializes all pending sidecars
-    * and the table returns to a zero-overhead read. */
-  private def maintainDvIfHeavy(spark: SparkSession, table: String,
-      bound: Long, maxCount: Int = 64): Unit = {
+    * and the table returns to a zero-overhead read. The bounds are
+    * `spark.graft.rowLevel.maxPendingDvBytes` (default 64 MB) and
+    * `spark.graft.rowLevel.maxPendingDvSidecars` (default 64), the same
+    * for every positional face. */
+  private def maintainDvIfHeavy(spark: SparkSession, table: String): Unit = {
+    val bound = spark.conf.getOption("spark.graft.rowLevel.maxPendingDvBytes")
+      .map(_.toLong).getOrElse(64L << 20)
+    val maxCount = spark.conf
+      .getOption("spark.graft.rowLevel.maxPendingDvSidecars")
+      .map(_.toInt).getOrElse(64)
     val s = snapshot(table).getOrElse(return)
     val dvs = s.dels.filter(_.keyCol == DvKeyCol)
     val pend = dvs.map(d => d.file.bytes).sum
@@ -5496,74 +5490,39 @@ object TableLog {
     committed
   }
 
-  /** MERGE-ON-READ upsert — `mergeCow` semantics (latest-wins on
-    * `keyCol`, NULL/duplicate source keys refused) with ZERO data-file
-    * rewrites: the commit writes the SOURCE rows as ordinary data
-    * files plus a delete-key sidecar of the source keys; matched
+  /** The MERGE-ON-READ upsert commit, taken by a `morKey` table
+    * (`upsert`): ZERO data-file rewrites — `ins` commits as ordinary
+    * data files plus a delete-key sidecar of `touchedKeys`, written
+    * ONCE (base-independent, like deleteMor's sidecar); matched
     * snapshot rows vanish behind the version fence, unmatched keys'
     * sidecar entries are harmless no-ops, and every base file carries
     * over by reference. Write cost is O(source), independent of table
-    * size — the scattered-key complement to `mergeCow`, whose COW
-    * rewrite on an unclustered table touches nearly every stat-
+    * size — the scattered-key complement to the copy-on-write commit,
+    * which on an unclustered table rewrites nearly every stat-
     * overlapping file. The read-side cost (one anti-join per sidecar
-    * cohort) accrues until `compact()`/any full rewrite materializes;
-    * a merge-heavy table alternates mergeMor batches with periodic
-    * compaction, exactly like Delta/Iceberg MOR maintenance. Row
-    * count audited as base − matched + source (matched counted by a
-    * key-only semi join over key-pruned candidates); CHECK
-    * constraints validate the source; CDC feeds capture matched old
-    * images as deletes + source rows as inserts. Returns the
-    * committed version. */
-  def mergeMor(spark: SparkSession, table: String, source: DataFrame,
-      keyCol: String, txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, count => cnt, countDistinct, lit}
-    require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"mergeMor on feed-enabled table $table: the append-only change " +
-        s"feed cannot represent an upsert — enableCdcFeed($table) to " +
-        "capture it as typed delete+insert rows, or remove " +
-        s"${feedDir(table)} to disable the feed")
-    txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    val src = source.cache()
-    try {
-      val st = src.agg(cnt(lit(1)), cnt(col(keyCol)),
-        countDistinct(col(keyCol))).head()
-      val srcRows = st.getLong(0)
-      if (srcRows == 0) return latestVersion(table)
-      require(st.getLong(1) == srcRows,
-        s"mergeMor: NULL keys in source ($keyCol)")
-      require(st.getLong(2) == srcRows,
-        s"mergeMor: duplicate keys in source ($keyCol)")
-      val isString = src.schema(keyCol).dataType ==
-        org.apache.spark.sql.types.StringType
-      morUpsertCore(spark, table, src, srcRows, src.select(col(keyCol)),
-        keyCol, isString, "merge_mor", "mergeMor", txnId)
-    } finally { src.unpersist(); () }
-  }
-
-  /** The shared MOR-upsert commit under `mergeMor` and `applyCdcMor`:
-    * write `ins` as data files + `touchedKeys` as a delete-key
-    * sidecar ONCE (base-independent, like deleteMor's sidecar), then
-    * CAS-commit one delta — adds stamped V, sidecar fencing ver < V —
-    * with rows audited base − matched + inserts. `touchedKeys` may be
-    * a SUPERSET of the inserts' keys (applyCdc: a winning delete
+    * cohort) accrues until `compact()`/any full rewrite materializes.
+    * One delta commits adds stamped V and the sidecar fencing ver < V,
+    * rows audited base − matched + inserts (matched counted by a
+    * key-only semi join over key-pruned candidates). `touchedKeys` may
+    * be a SUPERSET of the inserts' keys (applyCdc: a winning delete
     * fences its key with no replacement row). */
   private def morUpsertCore(spark: SparkSession, table: String,
-      ins: DataFrame, insRows: Long, touchedKeys: DataFrame,
-      keyCol: String, isString: Boolean, action: String, what: String,
+      start: Snapshot, ins: DataFrame, insRows: Long,
+      touchedKeys: DataFrame, keyCol: String, what: String,
       txnId: Option[String]): Long = {
     import org.apache.spark.sql.functions.col
     val keys = touchedKeys.select(col(keyCol)).distinct()
     // CHECK constraints as of the write's start, audited over the
     // written inserts (the append contract)
-    val start = snapshotOrFail(table)
     val (newFiles, newRows) = writeDataFiles(spark, table, start.spec, ins,
       audits = checkAudits(table, start.checks, what))
     auditStaged(table, newFiles)(newRows == insRows,
       s"$what audit failed for $table: wrote $newRows rows from a " +
         s"$insRows-row insert set — not committing")
-    val (delFiles, _) =
-      writeDataFiles(spark, table, keySpec(keyCol, isString), keys)
-    val affectedOf = keyPruneOf(spark, keys, keyCol, isString)
+    val (delFiles, _) = writeDataFiles(spark, table, keySpec(keyCol,
+      keys.schema.head.dataType == org.apache.spark.sql.types.StringType),
+      keys)
+    val affectedOf = keyPrune(spark, start.spec, keys, Seq(keyCol))
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
@@ -5579,7 +5538,7 @@ object TableLog {
       val newDels = delFiles.map(f =>
         DeleteEntry(f.copy(ver = version), keyCol, version))
       val rows = base.rows - matched + insRows
-      val r = nextRec(base, action, rows, stamped, Nil, newDels,
+      val r = nextRec(base, "merge_mor", rows, stamped, Nil, newDels,
         txnId)
       if (tryCommit(table, r)) committed = version
     }
@@ -5669,121 +5628,94 @@ object TableLog {
     committed
   }
 
-  /** Latest-wins upsert through the log: snapshot rows whose key
-    * matches a source row are replaced, new keys appended — one
-    * left-anti join + union, committed as a rewrite. The row count is
-    * audited as base − matched + source: `matched` is counted against
-    * the SAME base snapshot the rewrite transform reads (the transform
-    * runs before the audit inside each CAS attempt, so the expectation
-    * is exact even when a conflict re-runs the merge against a newer
-    * base), and a merge that drops or fabricates rows fails the audit
-    * instead of committing. */
+  /** Latest-wins upsert through the log on the key tuple `keyCols`:
+    * snapshot rows whose key matches a source row are replaced, new
+    * keys appended, in ONE commit the table's write spec picks
+    * (`upsert`): the key-sidecar MERGE-ON-READ commit on a `morKey`
+    * table with a one-column key, else the stats-pruned COPY-ON-WRITE
+    * commit, which rewrites only the files whose stats can hold a
+    * source key and carries every other file BY REFERENCE (same path,
+    * never read, never copied) in a delta manifest. Merge cost is
+    * O(affected files + source + manifest), not O(table). The source
+    * is audited in ONE aggregate: an empty source commits nothing and
+    * returns the latest version; NULL keys (in any key column — a NULL
+    * key matches no row and would land as an unmatchable insert) and
+    * duplicate key tuples are refused. Rows are audited independently
+    * (new = affected − matched + source); CHECK constraints are
+    * audited by the write job; counters carry over verbatim; `txnId`
+    * makes the merge exactly-once. On a TYPED (CDC) feed table the
+    * merge is captured as typed rows — deletes = old matched rows,
+    * inserts = new/updated rows (see the feed section comment); a
+    * PLAIN feed refuses (an upsert is a delete+insert an add-only feed
+    * cannot represent). Returns the committed version. */
   def mergeUpsert(spark: SparkSession, table: String, source: DataFrame,
-      keyCols: Seq[String]): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, sum}
-    val src = source.cache()
-    try {
-      // ONE aggregate over the keyed groups yields the source count AND
-      // the duplicate check (sum of group counts = count(*), including
-      // null-key groups; max > 1 = a duplicate) — was two jobs
-      val st = src.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n"))
-        .agg(sum(col("__n")), max(col("__n"))).head()
-      val srcRows = if (st.isNullAt(0)) 0L else st.getLong(0)
-      require(st.isNullAt(1) || st.getLong(1) <= 1L,
-        s"mergeUpsert: duplicate keys in source")
-      snapshot(table).foreach(b =>
-        enforceChecks(spark, table, b.checks, src, "mergeUpsert"))
-      val srcKeys = src.select(keyCols.map(col): _*)
-      // set per attempt inside the transform; read by the audit, which
-      // rewrite() evaluates after the transform has run
-      var matched = 0L
-      rewrite(spark, table, "merge",
-          expectRows = base => Some(base - matched + srcRows)) { df =>
-        matched = df.join(srcKeys, keyCols, "left_semi").count()
-        df.join(srcKeys, keyCols, "left_anti").unionByName(src)
-      }
-    } finally src.unpersist()
-  }
-
-  /** Stats-pruned COPY-ON-WRITE upsert through the log — `mergeUpsert`
-    * generalized the way `deleteWhere` generalizes a full rewrite:
-    * latest-wins merge of `source` on key `keyCol` (LONG-castable keys
-    * prune via the long range stats; STRING keys via the string stats
-    * in UTF-8 binary order — declare the key in the write spec's
-    * `strCols` so document tables keyed on string ids prune too),
-    * rewriting ONLY
-    * the files whose manifest stat range can contain a source key —
-    * every other file provably holds no matched row and carries over BY
-    * REFERENCE (same path, never read, never copied) in a delta
-    * manifest (removes = affected paths, adds = their rewritten
-    * remainders + the source's rows). Merge cost is therefore
-    * O(affected files + source + manifest), not O(table): on a
-    * range-clustered 100 TB table an upsert touching a day's key span
-    * reads and rewrites a handful of files where `mergeUpsert`'s
-    * full-snapshot rewrite streams the whole table through the cluster.
-    * The source's key summary picks the prune: the exact sorted key set
-    * (per-file overlap by binary search, tightest) up to 100k distinct
-    * keys, the [min,max] span past that — both driver-bounded. Rows are
-    * audited independently (new = affected − matched + source, with
-    * `matched` counted by a semi join over ONLY the affected files);
-    * duplicate source keys are refused; counters carry over verbatim;
-    * commits CAS-retry against racing writers like every other path.
-    * On a TYPED (CDC) feed table the merge is captured as typed rows —
-    * deletes = old matched rows, inserts = new/updated rows, by the
-    * multiset symmetric difference of the commit's own file diff (see
-    * the feed section comment) — so downstreams derive the post-merge
-    * state from the feed alone; a PLAIN feed still refuses (an upsert
-    * is a delete+insert an add-only feed cannot represent). NULL
-    * source keys are refused — a NULL key matches no row and would
-    * silently land as an unmatchable insert. */
-  def mergeCow(spark: SparkSession, table: String, source: DataFrame,
-      keyCol: String, txnId: Option[String] = None): Long = {
+      keyCols: Seq[String], txnId: Option[String] = None): Long = {
     import org.apache.spark.sql.functions.{col, count, countDistinct, lit,
-      max, min}
+      when}
+    require(keyCols.nonEmpty, s"mergeUpsert on $table: no key columns")
     require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"mergeCow on feed-enabled table $table: the append-only change " +
+      s"mergeUpsert on feed-enabled table $table: the append-only change " +
         s"feed cannot represent an upsert — enableCdcFeed($table) to " +
         "capture it as typed delete+insert rows, or remove " +
         s"${feedDir(table)} to disable the feed")
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
+    val keys = keyCols.map(col)
     val src = source.cache()
     try {
-      import org.apache.spark.sql.functions.{count => cnt}
-      val st = src.agg(cnt(lit(1)), cnt(col(keyCol)),
-        countDistinct(col(keyCol))).head()
+      val st = src.agg(count(lit(1)),
+        count(when(keys.map(_.isNotNull).reduce(_ && _), lit(1))),
+        countDistinct(keys.head, keys.tail: _*)).head()
       val srcRows = st.getLong(0)
       if (srcRows == 0) return latestVersion(table)
       require(st.getLong(1) == srcRows,
-        s"mergeCow: NULL keys in source ($keyCol)")
+        s"mergeUpsert: NULL keys in source (${keyCols.mkString(", ")})")
       require(st.getLong(2) == srcRows,
-        s"mergeCow: duplicate keys in source ($keyCol)")
-      cowApply(spark, table, src, srcRows, src.select(col(keyCol)),
-        keyCol, txnId)
-    } finally src.unpersist()
+        s"mergeUpsert: duplicate keys in source (${keyCols.mkString(", ")})")
+      upsert(spark, table, src, srcRows, src.select(keys: _*), keyCols,
+        "mergeUpsert", txnId)
+    } finally { src.unpersist(); () }
+  }
+
+  /** The upsert commit the table's write spec picks: the key-sidecar
+    * commit (`morUpsertCore`) when the spec declares `morKey` and the
+    * upsert has exactly one key column, the copy-on-write commit
+    * (`cowApplyCore`) otherwise. */
+  private def upsert(spark: SparkSession, table: String,
+      inserts: DataFrame, insRows: Long, touchedKeys: DataFrame,
+      keyCols: Seq[String], what: String, txnId: Option[String]): Long = {
+    val start = snapshotOrFail(table)
+    if (start.spec.morKey.isDefined && keyCols.size == 1)
+      morUpsertCore(spark, table, start, inserts, insRows, touchedKeys,
+        keyCols.head, what, txnId)
+    else cowApplyCore(spark, table, start, inserts, insRows, touchedKeys,
+      keyCols, what, txnId)
   }
 
   /** Apply a batch of TYPED changes (the CDC feed's shape: table
     * columns + `_change_type` + `_change_version`) onto a KEYED table
-    * in ONE copy-on-write commit — the "apply changes into" half of the
-    * medallion pattern, turning a bronze CDC feed into a keyed silver
-    * table. Per key the HIGHEST `_change_version` wins (the feed's link
-    * names carry the bronze commit order, so cross-batch reorderings
-    * inside one trigger resolve exactly as the log serialized them): a
+    * in ONE commit — the "apply changes into" half of the medallion
+    * pattern, turning a bronze CDC feed into a keyed silver table. Per
+    * key the HIGHEST `_change_version` wins (the feed's link names
+    * carry the bronze commit order, so cross-batch reorderings inside
+    * one trigger resolve exactly as the log serialized them): a
     * winning insert upserts the row, a winning delete with no tied
     * insert removes the key. A version may carry a delete+insert PAIR
     * for one key — a captured UPDATE's pre- and post-image — and the
     * insert wins, which is the update's meaning. Tied INSERT rows for
     * one key are refused (ambiguous upsert — bronze appended/merged the
     * same key twice in one commit), tied deletes are fine (every
-    * deleted copy was captured).
-    * Stats-pruned like `mergeCow` (only files whose key stats can hold
-    * a TOUCHED key are rewritten); single commit per batch + txn id =
-    * exactly-once under streaming replay. An empty/absent silver table
-    * bootstraps from the batch's winning inserts. */
+    * deleted copy was captured). The commit is `mergeUpsert`'s, picked
+    * the same way by the table's write spec: a `morKey` silver table
+    * commits the winning inserts plus a sidecar of ALL touched keys,
+    * zero silver rewrites (pair it with a periodic
+    * `compactSmall`/`compact` maintenance tick); any other rewrites
+    * only the files whose key stats can hold a TOUCHED key. Single
+    * commit per batch + txn id = exactly-once under streaming replay.
+    * An absent silver table bootstraps from the batch's winning
+    * inserts, declaring the key's long or string range stat (by its
+    * type) in the same version-1 commit, so later applies prune. */
   def applyCdc(spark: SparkSession, table: String, changes: DataFrame,
       keyCol: String, txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{col, count, lit, max}
     require(!feedEnabled(table) || cdcFeedEnabled(table),
       s"applyCdc on feed-enabled table $table: an upsert is a " +
         "delete+insert a PLAIN feed cannot represent — " +
@@ -5792,29 +5724,40 @@ object TableLog {
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
     val ch = changes.cache()
     try {
-      resolveCdcBatch(ch, keyCol, "applyCdc") match {
+      resolveCdcBatch(ch, keyCol) match {
         case None => latestVersion(table)
         case Some((ins, insRows, touched)) =>
-          if (latestVersion(table) == 0L)
+          if (latestVersion(table) == 0L) {
             // streaming bootstrap: first batch creates the silver table
-            return append(spark, table, ins, txnId = txnId)
-          cowApply(spark, table, ins, insRows, touched, keyCol, txnId)
+            import org.apache.spark.sql.types._
+            val key = ins.select(keyCol).schema.head
+            val spec = key.dataType match {
+              case StringType => keySpec(key.name, isString = true)
+              case ByteType | ShortType | IntegerType | LongType =>
+                keySpec(key.name, isString = false)
+              case _ => WriteSpec()
+            }
+            appendImpl(spark, table, ins, txnId, Map.empty, Map.empty, None,
+              Some(spec))
+          } else
+            upsert(spark, table, ins, insRows, touched, Seq(keyCol),
+              "applyCdc", txnId)
       }
     } finally { ch.unpersist(); () }
   }
 
-  /** The latest-wins resolution shared by `applyCdc` and
-    * `applyCdcMor`: per key the highest `_change_version` wins, a
-    * tied delete+insert pair resolves to the insert (a captured
-    * UPDATE's meaning), tied inserts are refused. None = empty batch.
-    * Returns (winning inserts, their count, ALL touched keys — a
-    * winning delete's key must still prune/anti-join). */
-  private def resolveCdcBatch(ch: DataFrame, keyCol: String,
-      what: String): Option[(DataFrame, Long, DataFrame)] = {
-    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max}
+  /** `applyCdc`'s latest-wins resolution: per key the highest
+    * `_change_version` wins, a tied delete+insert pair resolves to the
+    * insert (a captured UPDATE's meaning), tied inserts are refused.
+    * None = empty batch. Returns (winning inserts, their count, ALL
+    * touched keys — a winning delete's key must still prune/anti-join). */
+  private def resolveCdcBatch(ch: DataFrame, keyCol: String)
+      : Option[(DataFrame, Long, DataFrame)] = {
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max,
+      when}
     require(ch.columns.contains(changeTypeCol) &&
       ch.columns.contains(changeVersionCol),
-      s"$what: changes must carry $changeTypeCol and $changeVersionCol " +
+      s"applyCdc: changes must carry $changeTypeCol and $changeVersionCol " +
         "— read the feed with withVersion = true")
     // ONE audit job for the whole batch — per-batch latency is
     // job-count-bound at high trigger rates. The per-key winning
@@ -5828,77 +5771,35 @@ object TableLog {
       max(col(changeVersionCol)).over(w))
     val winIns = col(changeVersionCol) === col("__vmax") &&
       col(changeTypeCol) === "insert"
-    import org.apache.spark.sql.functions.{countDistinct, when}
     val st = topped.agg(count(lit(1)), count(col(keyCol)),
       count(when(winIns, lit(1))),
       countDistinct(when(winIns, col(keyCol)))).head()
     if (st.getLong(0) == 0) return None
     require(st.getLong(1) == st.getLong(0),
-      s"$what: NULL keys in changes ($keyCol)")
+      s"applyCdc: NULL keys in changes ($keyCol)")
     val insRows = st.getLong(2)
     require(st.getLong(3) == insRows,
-      s"$what: a key has multiple surviving insert rows at its " +
+      "applyCdc: a key has multiple surviving insert rows at its " +
         "winning version — ambiguous upsert")
     val ins = topped.where(winIns)
       .drop(changeTypeCol, changeVersionCol, "__vmax")
     Some((ins, insRows, ch.select(col(keyCol)).distinct()))
   }
 
-  /** MERGE-ON-READ "apply changes into" — `applyCdc` semantics (same
-    * latest-wins resolution, same guards, same exactly-once txn ids)
-    * with ZERO data-file rewrites: the batch commits as the winning
-    * inserts' files + a delete-key sidecar of ALL touched keys (a
-    * winning delete fences its key with no replacement; a winning
-    * insert's old image vanishes behind the fence while the new row
-    * rides in the adds). This is the silver-table shape for a
-    * SCATTERED-KEY CDC stream on an unclustered table, where the COW
-    * apply would rewrite nearly every stat-overlapping file per
-    * trigger: per-batch write cost becomes O(batch), and the accrued
-    * sidecar cohorts compact away on the normal maintenance tick
-    * (`compactSmall`/`compact`) — the Delta/Iceberg MOR streaming
-    * pattern. Bootstraps an empty table from the batch's winning
-    * inserts. */
-  def applyCdcMor(spark: SparkSession, table: String, changes: DataFrame,
-      keyCol: String, txnId: Option[String] = None): Long = {
-    require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"applyCdcMor on feed-enabled table $table: an upsert is a " +
-        "delete+insert a PLAIN feed cannot represent — " +
-        s"enableCdcFeed($table) to capture it (chaining silver→gold), " +
-        "or disable the feed")
-    txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    val ch = changes.cache()
-    try {
-      resolveCdcBatch(ch, keyCol, "applyCdcMor") match {
-        case None => latestVersion(table)
-        case Some((ins, insRows, touched)) =>
-          if (latestVersion(table) == 0L)
-            return append(spark, table, ins, txnId = txnId)
-          morUpsertCore(spark, table, ins, insRows, touched, keyCol,
-            ch.schema(keyCol).dataType ==
-              org.apache.spark.sql.types.StringType,
-            "apply_cdc_mor", "applyCdcMor", txnId)
-      }
-    } finally { ch.unpersist(); () }
-  }
-
   /** The bronze→keyed-silver CDC pipeline in one line: stream the typed
     * feed (with versions) and apply each micro-batch under txn id
     * `<streamId>#<batchId>` — exactly-once across crash-replays, one
-    * stats-pruned commit per batch. `mor = true` routes each batch
-    * through `applyCdcMor` (winning inserts + touched-key sidecar,
-    * zero silver rewrites — the per-trigger cost an unclustered
-    * scattered-key stream wants; pair with a periodic
-    * `compactSmall`/`compact` maintenance tick). */
+    * commit per batch, picked by the silver table's write spec
+    * (`applyCdc`). `autoMorSidecars` retires the key sidecars a
+    * `morKey` silver table accumulates, once per batch. */
   def cdcApplyStream(spark: SparkSession, bronze: String, silver: String,
       keyCol: String, streamId: String, checkpoint: Option[String] = None,
-      mor: Boolean = false,
       autoMorSidecars: Option[Int] = None): Unit =
     graft.streaming.StreamingOps.runForeachBatch(
       changeFeedStream(spark, bronze, withVersion = true),
       org.apache.spark.sql.streaming.OutputMode.Append(), checkpoint) {
       (batch, batchId) =>
-        val apply = if (mor) applyCdcMor _ else applyCdc _
-        apply(spark, silver, batch, keyCol, Some(s"$streamId#$batchId"))
+        applyCdc(spark, silver, batch, keyCol, Some(s"$streamId#$batchId"))
         // MOR maintenance tick: a merge-on-read apply stream is what
         // ACCUMULATES sidecars, so the ingest loop owns retiring them
         // — same ownership argument as appendStream's compactSmall
@@ -5969,94 +5870,75 @@ object TableLog {
     lo < sorted.length && utf8Leq(sorted(lo), max)
   }
 
-  /** Shared copy-on-write upsert commit: replace the rows whose key is
-    * in `touchedKeys` with `inserts`, rewriting only stat-overlapping
-    * files, carrying the rest by reference in a delta manifest. The
-    * prune uses the EXACT sorted key set up to 100k distinct keys
-    * (~800 KB driver memory; per-file overlap by binary search), so a
-    * bimodal source — a narrow update band plus inserts past the key
-    * domain, the daily-corrections shape — keeps pruning tightly where
-    * a [min,max] span would cover the whole table; only past the cap
-    * does the prune degrade to the span (at which width the merge
-    * plausibly touches most of a clustered table anyway). String keys
-    * prune by the string file stats in UTF-8 binary order. Audits
-    * new = affected − matched + inserts with an independent semi-join
-    * count over only the affected files. */
-  private def cowApply(spark: SparkSession, table: String,
-      inserts: DataFrame, insRows: Long, touchedKeys: DataFrame,
-      keyCol: String, txnId: Option[String]): Long =
-    cowApplyCore(spark, table, inserts, insRows, touchedKeys, keyCol,
-      keyPruneOf(spark, touchedKeys, keyCol, touchedKeys.schema(keyCol)
-        .dataType == org.apache.spark.sql.types.StringType), txnId)
-
-  /** The candidate-file prune shared by the COW merges and `deleteMor`:
-    * exact sorted key set up to 100k distinct keys (binary-search
-    * overlap per file), [min,max] span past the cap — long keys
-    * against the long range stats, string keys against the string
-    * stats in UTF-8 binary order. */
+  /** The candidate-file prune on one key column, shared by the upsert
+    * commits (`keyPrune`), `deleteMor` and `updateMor`: the EXACT
+    * sorted key set up to 100k distinct keys (~800 KB driver memory;
+    * per-file overlap by binary search), so a bimodal source — a
+    * narrow update band plus inserts past the key domain, the
+    * daily-corrections shape — keeps pruning tightly where a [min,max]
+    * span would cover the whole table; only past the cap does the
+    * prune degrade to the span. Long keys against the long range
+    * stats, string keys against the string stats in UTF-8 binary
+    * order. */
   private def keyPruneOf(spark: SparkSession, touchedKeys: DataFrame,
       keyCol: String, isString: Boolean): Snapshot => Seq[FileEntry] = {
     import org.apache.spark.sql.functions.{col, max, min}
     val cap = 100000
-    if (isString) {
-      val capped = touchedKeys.select(col(keyCol).cast("string")).distinct()
-        .limit(cap + 1).collect().map(_.getString(0))
-      val utf8Lt = (a: String, b: String) => a != b && utf8Leq(a, b)
-      val keyList: Option[Array[String]] =
-        if (capped.length <= cap) Some(capped.sortWith(utf8Lt)) else None
-      val (lo, hi) = keyList match {
-        case Some(s) if s.nonEmpty => (s.head, s.last)
-        case _ =>
-          val r = touchedKeys.agg(min(col(keyCol).cast("string")),
-            max(col(keyCol).cast("string"))).head()
-          (r.getString(0), r.getString(1))
+    val key = col(keyCol).cast(if (isString) "string" else "long")
+    val capped = touchedKeys.select(key).distinct().limit(cap + 1).collect()
+    if (capped.length <= cap) {
+      if (isString) {
+        val sorted = utf8SortKeys(capped.map(_.getString(0)))
+        prunedFilesByKeysStr(_, keyCol, sorted)
+      } else {
+        val sorted = capped.map(_.getLong(0)).sorted
+        prunedFilesByKeys(_, keyCol, sorted)
       }
-      base => {
-        // stats live under each file's PHYSICAL name (a rename must
-        // not turn the merge prune into a full rewrite); a dead
-        // incarnation (None) is all-null keys — provably unaffected
-        val phys = statNameFor(base, keyCol)
-        keyList match {
-          case Some(sorted) => base.files.filter(f => phys(f).exists(p =>
-            f.strStats.find(_.col == p).forall(st =>
-              sortedOverlapsStr(sorted, st.min, st.max))))
-          case None => base.files.filter(f => phys(f).exists(p =>
+    } else {
+      val r = touchedKeys.agg(min(key), max(key)).head()
+      if (isString) {
+        val (lo, hi) = (r.getString(0), r.getString(1))
+        base => {
+          // stats live under each file's PHYSICAL name; a dead
+          // incarnation (None) is all-null keys — provably unaffected
+          val phys = statNameFor(base, keyCol)
+          base.files.filter(f => phys(f).exists(p =>
             f.strStats.find(_.col == p).forall(st =>
               utf8Leq(st.min, hi) && utf8Leq(lo, st.max))))
         }
-      }
-    } else {
-      val capped = touchedKeys.select(col(keyCol).cast("long")).distinct()
-        .limit(cap + 1).collect().map(_.getLong(0))
-      val keyList: Option[Array[Long]] =
-        if (capped.length <= cap) Some(capped.sorted) else None
-      val (lo, hi) = keyList match {
-        case Some(s) if s.nonEmpty => (s.head, s.last)
-        case _ =>
-          val r = touchedKeys.agg(min(col(keyCol).cast("long")),
-            max(col(keyCol).cast("long"))).head()
-          (r.getLong(0), r.getLong(1))
-      }
-      base => {
-        val phys = statNameFor(base, keyCol)
-        keyList match {
-          case Some(sorted) => base.files.filter(f => phys(f).exists(p =>
-            f.stats.find(_.col == p).forall(st =>
-              sortedOverlaps(sorted, st.min, st.max))))
-          case None => prunedFilesOf(base, keyCol, lo, hi)
-        }
-      }
+      } else prunedFilesOf(_, keyCol, r.getLong(0), r.getLong(1))
     }
   }
 
-  /** The shared COW-upsert CAS loop behind `cowApply`:
-    * key-type-specific pruning comes in as `affectedOf`, everything
-    * else (scan, semi/anti join, audit, delta manifest, CAS retry,
-    * feed capture) is identical. */
+  /** The candidate-file prune of an upsert on `keyCols`: a file is kept
+    * only if, for every key column the write `spec` measures (long or
+    * string stats), its stats can hold a touched key (`keyPruneOf` per
+    * column, intersected). A column the spec does not measure prunes
+    * nothing and collects no keys. */
+  private def keyPrune(spark: SparkSession, spec: WriteSpec,
+      touchedKeys: DataFrame, keyCols: Seq[String])
+      : Snapshot => Seq[FileEntry] = {
+    val prunes = keyCols.flatMap(k =>
+      spec.longCols.find(_.equalsIgnoreCase(k))
+        .map(keyPruneOf(spark, touchedKeys, _, isString = false)) ++
+      spec.strCols.find(_.equalsIgnoreCase(k))
+        .map(keyPruneOf(spark, touchedKeys, _, isString = true)))
+    base => prunes.foldLeft(base.files) { (files, prune) =>
+      val kept = prune(base).map(_.path).toSet
+      files.filter(f => kept(f.path))
+    }
+  }
+
+  /** The COPY-ON-WRITE upsert commit (`upsert`): replace the rows whose
+    * key tuple is in `touchedKeys` with `inserts`, rewriting only the
+    * files `keyPrune` keeps and carrying the rest by reference in a
+    * delta manifest. Audits new = affected − matched + inserts with an
+    * independent semi-join count over only the affected files. */
   private def cowApplyCore(spark: SparkSession, table: String,
-      inserts: DataFrame, insRows: Long, touchedKeys: DataFrame,
-      keyCol: String, affectedOf: Snapshot => Seq[FileEntry],
+      start: Snapshot, inserts: DataFrame, insRows: Long,
+      touchedKeys: DataFrame, keyCols: Seq[String], what: String,
       txnId: Option[String]): Long = {
+    val affectedOf = keyPrune(spark, start.spec, touchedKeys, keyCols)
     var committed = -1L
     while (committed < 0) {
       val base = snapshotOrFail(table)
@@ -6064,7 +5946,7 @@ object TableLog {
       // `inserts` is the complete source relation (updates + new
       // keys); the write job audits it together with the carried
       // remainder, which was validated when written and passes
-      val audits = checkAudits(table, base.checks, "merge")
+      val audits = checkAudits(table, base.checks, what)
       val affected = affectedOf(base)
       val affectedPaths = affected.map(_.path)
       val (newFiles, newRows, matched, scanRows) =
@@ -6076,8 +5958,8 @@ object TableLog {
         } else {
           val scan = morScan(spark, table, base, affected)
           val sRows = liveRowsOf(spark, table, base, affected)
-          val m = scan.join(touchedKeys, Seq(keyCol), "left_semi").count()
-          val remainder = scan.join(touchedKeys, Seq(keyCol), "left_anti")
+          val m = scan.join(touchedKeys, keyCols, "left_semi").count()
+          val remainder = scan.join(touchedKeys, keyCols, "left_anti")
           val (nf, nr) = writeDataFiles(spark, table, base.spec,
             remainder.unionByName(inserts), audits = audits)
           (nf, nr, m, sRows)

@@ -88,12 +88,15 @@ class DvSpec extends SparkSpec {
     val nd = intercept[Exception](
       TableLog.deleteDv(spark, t, rand() < 0.5))
     assert(nd.getMessage.contains("deterministic"))
+    // a vector wider than the spec's maxDvPositions: the positional
+    // update refuses (a delete falls back to copy-on-write, below)
+    TableLog.setWriteSpec(t,
+      TableLog.writeSpec(t).copy(maxDvPositions = 10))
     val wide = intercept[Exception](
-      TableLog.deleteDv(spark, t, col("v") >= 0, maxPositions = 10,
-        cowFallback = false))
+      TableLog.updateDv(spark, t, col("v") >= 0, Map("v" -> lit(0L))))
     assert(wide.getMessage.contains("maxPositions"))
-    // neither refusal committed anything
-    assert(TableLog.latestVersion(t) == 1)
+    // neither refusal committed data
+    assert(TableLog.latestVersion(t) == 2)
     assert(TableLog.read(spark, t).count() == 1000)
   }
 
@@ -102,9 +105,10 @@ class DvSpec extends SparkSpec {
     val t = tmp("graft_dv_cow")
     mkTable(t)
     // 300 matched rows > cap 10 → the COW rewrite path, same predicate
-    val v = TableLog.deleteDv(spark, t, col("v").isin(1, 4, 7),
-      maxPositions = 10)
-    assert(v == 2)
+    TableLog.setWriteSpec(t,
+      TableLog.writeSpec(t).copy(maxDvPositions = 10))
+    val v = TableLog.deleteDv(spark, t, col("v").isin(1, 4, 7))
+    assert(v == 3)
     val s = TableLog.snapshot(t).get
     // COW: no pending sidecar, exact SQL delete semantics
     assert(s.dels.isEmpty, "COW fallback must not leave a sidecar")
@@ -127,8 +131,10 @@ class DvSpec extends SparkSpec {
     // bound of 1 byte: the pending vector from v1 is over it, so this
     // commit first materializes (one morMaintain commit), THEN adds
     // its own fresh vector — two versions ahead, one sidecar pending
-    val v2 = TableLog.deleteDv(spark, t, col("v") === 2,
-      maxPendingDvBytes = 1L)
+    spark.conf.set("spark.graft.rowLevel.maxPendingDvBytes", "1")
+    val v2 =
+      try TableLog.deleteDv(spark, t, col("v") === 2)
+      finally spark.conf.unset("spark.graft.rowLevel.maxPendingDvBytes")
     assert(v2 == v1 + 2)
     val s = TableLog.snapshot(t).get
     assert(s.dels.size == 1 && s.dels.forall(_.ver == v2),

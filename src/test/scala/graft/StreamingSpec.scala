@@ -864,10 +864,10 @@ class StreamingSpec extends SparkSpec {
     val latestBronze = TableLog.read(spark, bronze)
       .groupBy("k").agg(org.apache.spark.sql.functions.max($"v").as("v"))
     assert(latestBronze.exceptAll(TableLog.read(spark, silver)).isEmpty)
-    // a captured UPDATE (mergeCow old/new images at one version) flows
+    // a captured UPDATE (merge old/new images at one version) flows
     // through the stream as an upsert — delete+insert pair, insert wins
-    TableLog.mergeCow(spark, bronze,
-      Seq((12L, -12L), (40L, -40L)).toDF("k", "v"), "k")
+    TableLog.mergeUpsert(spark, bronze,
+      Seq((12L, -12L), (40L, -40L)).toDF("k", "v"), Seq("k"))
     TableLog.updateWhere(spark, bronze, "k", 20, 22,
       Map("v" -> (org.apache.spark.sql.functions.col("v") + 7L)))
     drain()
@@ -896,8 +896,11 @@ class StreamingSpec extends SparkSpec {
       rows(0 until 20, identity).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
     def drain(): Unit = TableLog.cdcApplyStream(spark, bronze, silver,
-      "k", "capplym", ckpt, mor = true)
+      "k", "capplym", ckpt)
     drain() // bootstrap batch
+    // the silver table declares morKey: later batches commit sidecars
+    TableLog.setWriteSpec(silver,
+      TableLog.writeSpec(silver).copy(morKey = Some("k")))
     val boot = TableLog.snapshot(silver).get
     TableLog.append(spark, bronze,
       rows(10 until 25, _ * 10).repartitionByRange(2, $"k"),
@@ -922,7 +925,7 @@ class StreamingSpec extends SparkSpec {
     // same drain — reads unchanged, zero pending read amplification
     TableLog.deleteWhere(spark, bronze, "k", 24, 24)
     TableLog.cdcApplyStream(spark, bronze, silver, "k", "capplym", ckpt,
-      mor = true, autoMorSidecars = Some(0))
+      autoMorSidecars = Some(0))
     assert(TableLog.snapshot(silver).get.dels.isEmpty,
       "the maintenance tick must retire sidecars")
     assert(TableLog.read(spark, silver).collect()

@@ -744,13 +744,14 @@ class TableLogSpec extends SparkSpec {
     val t = tmp("graft_log_mmor")
     val base = spark.range(1000).select($"id".as("k"), ($"id" % 7).as("v"))
     TableLog.create(spark, t, base.repartition(4, $"v"),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), morKey = Some("k"))
     val before = TableLog.snapshot(t).get
     // bimodal source: an update band inside the domain + inserts past it
     val src = spark.range(500, 1500).select($"id".as("k"),
       lit(999L).as("v"))
-    TableLog.mergeMor(spark, t, src, "k")
+    TableLog.mergeUpsert(spark, t, src, Seq("k"))
     val after = TableLog.snapshot(t).get
+    assert(after.action == "merge_mor")
     assert(before.files.map(_.path).toSet
       .subsetOf(after.files.map(_.path).toSet),
       "every base file must carry by reference — zero rewrites")
@@ -763,13 +764,13 @@ class TableLogSpec extends SparkSpec {
     // guards: duplicate and NULL source keys refused (latest-wins
     // would be ambiguous / unaddressable)
     intercept[IllegalArgumentException](
-      TableLog.mergeMor(spark, t, src.unionAll(src), "k"))
-    intercept[IllegalArgumentException](TableLog.mergeMor(spark, t,
-      Seq((Option.empty[Long], 1L)).toDF("k", "v"), "k"))
+      TableLog.mergeUpsert(spark, t, src.unionAll(src), Seq("k")))
+    intercept[IllegalArgumentException](TableLog.mergeUpsert(spark, t,
+      Seq((Option.empty[Long], 1L)).toDF("k", "v"), Seq("k")))
     // second merge stacks (two sidecar cohorts), then compaction
     // materializes both away
-    TableLog.mergeMor(spark, t, spark.range(700, 720)
-      .select($"id".as("k"), lit(111L).as("v")), "k")
+    TableLog.mergeUpsert(spark, t, spark.range(700, 720)
+      .select($"id".as("k"), lit(111L).as("v")), Seq("k"))
     assert(TableLog.read(spark, t).where($"v" === 111).count() == 20)
     assert(TableLog.read(spark, t).count() == 1500)
     TableLog.compact(spark, t, 1L << 26)
@@ -793,11 +794,14 @@ class TableLogSpec extends SparkSpec {
     val feed = TableLog.readFeed(spark, t, withVersion = true)
     // COW reference: whole feed in one apply
     TableLog.applyCdc(spark, svCow, feed, "k")
-    // MOR: bootstrap batch, then the mutation batch as a sidecar commit
-    TableLog.applyCdcMor(spark, svMor,
+    // MOR: bootstrap batch, the silver table declares morKey, then the
+    // mutation batch commits as a sidecar
+    TableLog.applyCdc(spark, svMor,
       feed.where($"_change_version" === 1), "k")
+    TableLog.setWriteSpec(svMor,
+      TableLog.writeSpec(svMor).copy(morKey = Some("k")))
     val before = TableLog.snapshot(svMor).get
-    TableLog.applyCdcMor(spark, svMor,
+    TableLog.applyCdc(spark, svMor,
       feed.where($"_change_version" >= 2), "k",
       txnId = Some("acm#2"))
     val after = TableLog.snapshot(svMor).get
@@ -811,7 +815,7 @@ class TableLogSpec extends SparkSpec {
     assert(mor.count() == 400) // 500 − deleted range
     assert(cow.exceptAll(mor).isEmpty && mor.exceptAll(cow).isEmpty)
     // exactly-once: replaying the batch under the same txn is a no-op
-    assert(TableLog.applyCdcMor(spark, svMor,
+    assert(TableLog.applyCdc(spark, svMor,
       feed.where($"_change_version" >= 2), "k",
       txnId = Some("acm#2")) == after.version)
     assert(TableLog.snapshot(svMor).get.version == after.version)
@@ -827,11 +831,11 @@ class TableLogSpec extends SparkSpec {
     TableLog.enableCdcFeed(t)
     TableLog.create(spark, t, spark.range(100)
       .select($"id".as("k"), ($"id" % 5).as("v")).coalesce(2),
-      statsCols = Seq("k"))                                        // v1
+      statsCols = Seq("k"), morKey = Some("k"))                    // v1
     TableLog.updateMor(spark, t, "k", "k", 10, 59,
       Map("v" -> ($"v" + 100)))              // v2
-    TableLog.mergeMor(spark, t, spark.range(90, 120)
-      .select($"id".as("k"), lit(777L).as("v")), "k")             // v3
+    TableLog.mergeUpsert(spark, t, spark.range(90, 120)
+      .select($"id".as("k"), lit(777L).as("v")), Seq("k"))        // v3
     TableLog.applyCdc(spark, sv,
       TableLog.readFeed(spark, t, withVersion = true), "k")
     val b = TableLog.read(spark, t)
@@ -1649,7 +1653,7 @@ class TableLogSpec extends SparkSpec {
       f.stats.exists(s => s.col == "k" &&
         hot.exists(k => s.min <= k && k <= s.max)))
     assert(untouchedBefore.size >= 6, "fixture: most files must not overlap")
-    val v = TableLog.mergeCow(spark, t, src, "k")
+    val v = TableLog.mergeUpsert(spark, t, src, Seq("k"))
     val after = TableLog.snapshot(t).get
     // semantics: latest-wins upsert
     assert(after.rows == 8010)
@@ -1671,27 +1675,129 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.readVersion(spark, t, v - 1).count() == 8000)
     // a WIDE source (> 1024 distinct keys) degrades to the [min,max]
     // span prune and still merges correctly
-    TableLog.mergeCow(spark, t,
+    TableLog.mergeUpsert(spark, t,
       spark.range(0, 1500).select($"id".as("k"), lit(7L).as("v")),
-      "k")
+      Seq("k"))
     assert(TableLog.read(spark, t).where($"v" === 7L).count() == 1500)
     assert(TableLog.read(spark, t).count() == 8010)
     // contract guards: duplicate / NULL source keys, empty source no-op
-    intercept[IllegalArgumentException](TableLog.mergeCow(spark, t,
-      Seq((1L, 0L), (1L, 1L)).toDF("k", "v"), "k"))
-    intercept[IllegalArgumentException](TableLog.mergeCow(spark, t,
-      Seq[(java.lang.Long, java.lang.Long)]((null, 0L)).toDF("k", "v"), "k"))
+    intercept[IllegalArgumentException](TableLog.mergeUpsert(spark, t,
+      Seq((1L, 0L), (1L, 1L)).toDF("k", "v"), Seq("k")))
+    intercept[IllegalArgumentException](TableLog.mergeUpsert(spark, t,
+      Seq[(java.lang.Long, java.lang.Long)]((null, 0L)).toDF("k", "v"),
+      Seq("k")))
     val vNow = TableLog.latestVersion(t)
-    assert(TableLog.mergeCow(spark, t,
-      Seq.empty[(Long, Long)].toDF("k", "v"), "k") == vNow)
+    assert(TableLog.mergeUpsert(spark, t,
+      Seq.empty[(Long, Long)].toDF("k", "v"), Seq("k")) == vNow)
     // PLAIN feed tables refuse (an upsert is a delete+insert an
     // add-only feed cannot represent); CDC feeds capture it — pinned
     // in the "CDC update capture" test
     val f = tmp("graft_log_mcow_feed")
     TableLog.enableFeed(f)
     TableLog.create(spark, f, Seq((1L, 0L)).toDF("k", "v"))
-    intercept[IllegalArgumentException](TableLog.mergeCow(spark, f,
-      Seq((1L, 9L)).toDF("k", "v"), "k"))
+    intercept[IllegalArgumentException](TableLog.mergeUpsert(spark, f,
+      Seq((1L, 9L)).toDF("k", "v"), Seq("k")))
+  }
+
+  test("mergeUpsert reads and rewrites only the key-overlapping files, on one key column or two") {
+    val t = tmp("graft_log_mup_prune")
+    // 8 range-clustered files over [0, 8000); stats on k only
+    TableLog.create(spark, t,
+      spark.range(8000).select($"id".as("k"), ($"id" % 3).as("j"),
+        ($"id" * 10).as("v")).repartitionByRange(8, $"k"),
+      statsCols = Seq("k"))
+    // the merge must plan reads of exactly the files whose k range
+    // meets a source key, and every other file must keep its path
+    def mergeOpensOnly(src: org.apache.spark.sql.DataFrame,
+        keys: Seq[String], lo: Long, hi: Long): Unit = {
+      val before = TableLog.snapshot(t).get
+      val hot = before.files.filter(f => f.stats.exists(st =>
+        st.col == "k" && st.min <= hi && lo <= st.max)).map(_.path).toSet
+      assert(hot.nonEmpty && hot.size <= 2, s"fixture: $hot")
+      val planned0 = TableLog.morFilesPlanned.get()
+      TableLog.mergeUpsert(spark, t, src, keys)
+      assert(TableLog.morFilesPlanned.get() - planned0 == hot.size,
+        s"the merge on $keys must open only the ${hot.size} " +
+          "key-overlapping file(s)")
+      val after = TableLog.snapshot(t).get.files.map(_.path).toSet
+      assert(before.files.map(_.path).toSet -- after == hot,
+        "only the key-overlapping files may be rewritten")
+    }
+    mergeOpensOnly(spark.range(2000, 2100).select($"id".as("k"),
+      ($"id" % 3).as("j"), lit(-1L).as("v")), Seq("k"), 2000, 2099)
+    // a two-column key prunes on its measured column; j carries no
+    // stats, prunes nothing and collects nothing
+    mergeOpensOnly(spark.range(5000, 5050).select($"id".as("k"),
+      ($"id" % 3).as("j"), lit(-2L).as("v")), Seq("k", "j"), 5000, 5049)
+    val back = TableLog.read(spark, t)
+    assert(back.count() == 8000 && TableLog.snapshot(t).get.rows == 8000)
+    assert(back.where($"v" === -1L).count() == 100)
+    assert(back.where($"v" === -2L).count() == 50)
+  }
+
+  test("mergeUpsert refuses a NULL in any key column; nothing commits") {
+    val t = tmp("graft_log_mup_null")
+    TableLog.create(spark, t, Seq((1L, "a", 1L), (2L, "b", 2L))
+      .toDF("k", "j", "v"))
+    val e = intercept[IllegalArgumentException](TableLog.mergeUpsert(spark,
+      t, Seq[(java.lang.Long, String, Long)]((3L, null, 3L))
+        .toDF("k", "j", "v"), Seq("k", "j")))
+    assert(e.getMessage.contains("NULL keys"))
+    assert(TableLog.latestVersion(t) == 1)
+    assert(TableLog.read(spark, t).count() == 2)
+  }
+
+  test("applyCdc bootstrap declares the key's stats: later batches open only key-overlapping files") {
+    val sv = tmp("graft_cdc_boot_sv")
+    def batch(lo: Long, hi: Long, v: Long) = spark.range(lo, hi)
+      .select($"id".as("k"), lit(v).as("v"), lit("insert").as("_change_type"),
+        lit(1L).as("_change_version"))
+    TableLog.applyCdc(spark, sv, batch(0, 1000, 0L), "k")          // v1
+    assert(TableLog.writeSpec(sv).longCols == Seq("k"))
+    // keys past the silver domain: no file can hold one, none is opened
+    val planned0 = TableLog.morFilesPlanned.get()
+    TableLog.applyCdc(spark, sv, batch(5000, 5100, 1L), "k")       // v2
+    assert(TableLog.morFilesPlanned.get() - planned0 == 0,
+      "a batch of new keys must open no silver file")
+    // an update of v2's keys opens only files whose k range meets them
+    val before = TableLog.snapshot(sv).get
+    val hot = before.files.filter(f => f.stats.exists(st =>
+      st.col == "k" && st.min <= 5009 && 5000 <= st.max))
+    assert(hot.nonEmpty && hot.size < before.files.size)
+    val planned1 = TableLog.morFilesPlanned.get()
+    TableLog.applyCdc(spark, sv, batch(5000, 5010, 2L), "k")       // v3
+    assert(TableLog.morFilesPlanned.get() - planned1 == hot.size)
+    val back = TableLog.read(spark, sv)
+    assert(back.count() == 1100 && back.where($"v" === 2L).count() == 10)
+  }
+
+  test("mergeBranch refuses a branch that changed its write spec; src stays byte-identical") {
+    val src = tmp("graft_log_mbspec_src")
+    val br = tmp("graft_log_mbspec_br")
+    TableLog.create(spark, src,
+      spark.range(0L, 400L, 1L, 2).select($"id".as("k"), $"id".as("v")),
+      statsCols = Seq("k"))
+    TableLog.cloneTable(spark, src, br)
+    TableLog.append(spark, src,
+      spark.range(1000, 1100).select($"id".as("k"), $"id".as("v")))
+    TableLog.setWriteSpec(br,
+      TableLog.writeSpec(br).copy(longCols = Seq("k", "v")))
+    TableLog.append(spark, br,
+      spark.range(2000, 2050).select($"id".as("k"), $"id".as("v")))
+    def tree(): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val root = java.nio.file.Paths.get(src)
+      java.nio.file.Files.walk(root).iterator().asScala
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString ->
+          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+    }
+    val before = tree()
+    val e = intercept[IllegalArgumentException](
+      TableLog.mergeBranch(spark, src, br))
+    assert(e.getMessage.contains("write spec") &&
+      e.getMessage.contains("publishBranch"))
+    assert(tree() == before, "a refused merge must leave src untouched")
   }
 
   test("CDC capture: racing publishers never double-deliver; vacuumFeed sweeps stages") {
@@ -1786,8 +1892,8 @@ class TableLogSpec extends SparkSpec {
     // in-batch ordering resolves by VERSION, not row order: delete@5
     // then re-insert@6 revives; insert@5 then delete@6 erases; and the
     // COW commit only rewrites silver files whose stats hold a touched key
-    // (the bootstrap declared no stats: declare k before the re-layout)
-    TableLog.setWriteSpec(silver, TableLog.WriteSpec(Seq("k")))
+    // (the bootstrap declared k's stats)
+    assert(TableLog.writeSpec(silver).longCols == Seq("k"))
     TableLog.rewrite(spark, silver, "compact") { df =>
       df.repartitionByRange(4, $"k").sortWithinPartitions("k") }
     val before = TableLog.snapshot(silver).get
@@ -1847,7 +1953,7 @@ class TableLogSpec extends SparkSpec {
       .unionByName(Seq((500L, 1000L)).toDF("k", "v")) // no-op: v == k*2
       .unionByName(spark.range(2000, 2010)
         .select($"id".as("k"), lit(-2L).as("v")))
-    val vMerge = TableLog.mergeCow(spark, t, src, "k")
+    val vMerge = TableLog.mergeUpsert(spark, t, src, Seq("k"))
     tracks()
     assert(typedAt(vMerge, "delete") == 50,
       "pre-images of the updated band only — the no-op row cancels")
@@ -1880,9 +1986,9 @@ class TableLogSpec extends SparkSpec {
     tracks()
     // a PURE-INSERT merge (no file overlaps any key) takes the cheap
     // path: raw data-file links, no staged capture
-    val vIns = TableLog.mergeCow(spark, t,
+    val vIns = TableLog.mergeUpsert(spark, t,
       spark.range(3000, 3020).select($"id".as("k"), lit(-3L).as("v")),
-      "k")
+      Seq("k"))
     tracks()
     val insLinks = java.nio.file.Files.list(java.nio.file.Paths.get(t, "_feed"))
       .iterator().asScala.map(_.getFileName.toString)
@@ -1902,10 +2008,11 @@ class TableLogSpec extends SparkSpec {
       TableLog.readFeed(spark, silver, withVersion = true), "k")
     val gLive = TableLog.read(spark, gold)
     assert(gLive.exceptAll(live).isEmpty && live.exceptAll(gLive).isEmpty)
-    // full-snapshot rewrites stay refused even on a CDC feed — their
-    // capture would scan the whole table; the pruned faces are the API
-    intercept[IllegalArgumentException](TableLog.mergeUpsert(spark, t,
-      Seq((1L, 9L)).toDF("k", "v"), Seq("k")))
+    // a one-row upsert captures its one old and one new image
+    val vOne = TableLog.mergeUpsert(spark, t,
+      Seq((1L, 9L)).toDF("k", "v"), Seq("k"))
+    tracks()
+    assert(typedAt(vOne, "delete") == 1 && typedAt(vOne, "insert") == 1)
   }
 
   test("updateWhere: rewrites only overlapping files; set-exprs hit only matched rows; NULLs pass") {
@@ -2401,9 +2508,9 @@ class TableLogSpec extends SparkSpec {
     assert(e2.getMessage.contains("v_range"))
     TableLog.updateWhere(spark, t, "k", 0, 10, Map("v" -> lit(7L)))
     // COW merge: violating source refused, passing source lands
-    intercept[IllegalArgumentException](TableLog.mergeCow(spark, t,
-      Seq((5L, -1L)).toDF("k", "v"), "k"))
-    TableLog.mergeCow(spark, t, Seq((5L, 49L)).toDF("k", "v"), "k")
+    intercept[IllegalArgumentException](TableLog.mergeUpsert(spark, t,
+      Seq((5L, -1L)).toDF("k", "v"), Seq("k")))
+    TableLog.mergeUpsert(spark, t, Seq((5L, 49L)).toDF("k", "v"), Seq("k"))
     assert(TableLog.read(spark, t).where($"k" === 5L).head.getLong(1) == 49L)
     // rename/drop of a referenced column is refused until the drop
     assert(TableLog.snapshot(t).get.checks.nonEmpty, "checks lost in fold")
@@ -2899,7 +3006,7 @@ class TableLogSpec extends SparkSpec {
       .unionByName(spark.range(10).select(
         concat(lit("zz-"), lpad($"id".cast("string"), 6, "0")).as("key"),
         lit(7L).as("v"), lit("ins").as("tag")))
-    val ver = TableLog.mergeCow(spark, t, src, "key")
+    val ver = TableLog.mergeUpsert(spark, t, src, Seq("key"))
     // rewrite minimality: every non-overlapping file survives BY PATH
     val after = TableLog.snapshotAt(t, ver).get
     val afterPaths = after.files.map(_.path).toSet
@@ -2920,6 +3027,7 @@ class TableLogSpec extends SparkSpec {
       lit(1L).as("_change_version"))
     TableLog.applyCdc(spark, sv, ch, "key")
     assert(TableLog.read(spark, sv).count() == 5)
+    assert(TableLog.writeSpec(sv).strCols == Seq("key"))
   }
 
   test("committedTxnVersion: O(1) via the manifest txn high-water index; stale replays and opaque ids still correct") {
@@ -3445,7 +3553,7 @@ class TableLogSpec extends SparkSpec {
     def pruneRange(lo: Long, hi: Long) = (s: TableLog.Snapshot) =>
       s.files.filter(f => f.stats.find(_.col == "k").forall(st =>
         st.min < hi && lo <= st.max))
-    spark.conf.set("spark.graft.replaceWhere.auditScan", "true")
+    spark.conf.set("spark.graft.mutation.auditScan", "true")
     try {
       val planned0 = TableLog.morFilesPlanned.get()
       TableLog.replaceWhere(spark, t, $"k" >= 1200 && $"k" < 1800,
@@ -3458,7 +3566,7 @@ class TableLogSpec extends SparkSpec {
       // 500 (live slice rest) + 300 new
       assert(TableLog.snapshot(t).get.rows == 4000L - 600 + 300)
       assert(TableLog.read(spark, t).count() == 3700)
-    } finally spark.conf.unset("spark.graft.replaceWhere.auditScan")
+    } finally spark.conf.unset("spark.graft.mutation.auditScan")
     // default mode: ONE planned read of the (single) affected file
     val planned1 = TableLog.morFilesPlanned.get()
     TableLog.replaceWhere(spark, t, $"k" >= 3200 && $"k" < 3800,
@@ -3505,9 +3613,9 @@ class TableLogSpec extends SparkSpec {
       TableLog.deleteWhere(spark, t, "id", 100, 300)              // −201
       TableLog.updateWhere(spark, t, "id", 500, 700,
         Map("v" -> ($"v" + 100L)))
-      TableLog.mergeCow(spark, t,
+      TableLog.mergeUpsert(spark, t,
         spark.range(900L, 1100L).select($"id", ($"id" % 5).as("v")),
-        "id")                  // all matched
+        Seq("id"))             // all matched
       TableLog.replaceWhere(spark, t, $"id".between(1500, 1600),
         spark.range(1500L, 1601L).select($"id", lit(0L).as("v"))
           .coalesce(1))        // −101 +101

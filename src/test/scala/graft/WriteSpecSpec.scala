@@ -84,18 +84,20 @@ class WriteSpecSpec extends SparkSpec {
     face("updateWhere")(TableLog.updateWhere(spark, t, "k", 200L, 220L,
       Map("v" -> lit(-3L))))
     face("morMaintain")(TableLog.morMaintain(spark, t, maxSidecars = 0))
-    face("mergeUpsert")(TableLog.mergeUpsert(spark, t, rows(300, 320, 1)
-      .withColumn("v", lit(-4L)), Seq("k")))
-    face("mergeCow")(TableLog.mergeCow(spark, t, rows(320, 340, 1)
-      .withColumn("v", lit(-5L)), "k"))
-    face("mergeMor")(TableLog.mergeMor(spark, t, rows(340, 360, 1)
-      .withColumn("v", lit(-6L)), "k"))
     def changes(lo: Long, hi: Long) = rows(lo, hi, 1)
       .withColumn(TableLog.changeTypeCol, lit("insert"))
       .withColumn(TableLog.changeVersionCol, lit(1L))
-    face("applyCdc")(TableLog.applyCdc(spark, t, changes(360, 380), "k"))
-    face("applyCdcMor")(TableLog.applyCdcMor(spark, t, changes(380, 400),
-      "k"))
+    // the upserts on a copy-on-write table, then on a morKey table
+    face("mergeUpsert")(TableLog.mergeUpsert(spark, t, rows(300, 320, 1)
+      .withColumn("v", lit(-4L)), Seq("k")))
+    face("applyCdc")(TableLog.applyCdc(spark, t, changes(320, 340), "k"))
+    val cowSpec = TableLog.writeSpec(t)
+    TableLog.setWriteSpec(t, cowSpec.copy(morKey = Some("k")))
+    face("mergeUpsert (morKey)")(TableLog.mergeUpsert(spark, t,
+      rows(340, 360, 1).withColumn("v", lit(-6L)), Seq("k")))
+    face("applyCdc (morKey)")(TableLog.applyCdc(spark, t,
+      changes(360, 380), "k"))
+    TableLog.setWriteSpec(t, cowSpec)
     face("replaceWhere")(TableLog.replaceWhere(spark, t,
       $"k".between(400L, 450L), rows(400, 451, 1)))
     face("appendStream") {
