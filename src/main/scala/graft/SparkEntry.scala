@@ -457,14 +457,12 @@ object SparkEntry {
   }
 
   /** The SQL DML face routed MERGE-ON-READ: `o65_sql_dml`'s exact
-    * statement sequence on its own slice, against a table registered
-    * with `morKey` and an UNCLUSTERED layout — the UPDATE commits
-    * through `updateMor` (new images + key sidecar) and the MERGE
-    * through `mergeUpsert`'s key-sidecar commit (source files + key
-    * sidecar), ZERO base-file rewrites either way (spec-pinned in
-    * SqlDmlSpec); the range
-    * DELETE stays copy-on-write by design (a range is what the stat
-    * prune rewrites tightly). The oracle replays the same three
+    * statement sequence on its own slice, against a table declared
+    * `rowLevelMode = mor` with an UNCLUSTERED layout — the UPDATE and
+    * the range DELETE commit deletion vectors (plus the UPDATE's new
+    * images) and the MERGE commits `mergeUpsert`'s key sidecar (source
+    * files + key sidecar), ZERO base-file rewrites either way
+    * (spec-pinned in SqlDmlSpec). The oracle replays the same three
     * mutations — which commit strategy each statement took must be
     * invisible to the reader. */
   private def o68SqlDmlMor(s: SparkSession, dir: String): DataFrame = {
@@ -475,7 +473,7 @@ object SparkEntry {
         col("o_orderpriority").as("priority"))
     val tl = graft.sinks.TableLog
     tl.create(s, t, base.repartition(8, col("priority")),
-      statsCols = Seq("o_orderkey"), morKey = Some("o_orderkey"))
+      statsCols = Seq("o_orderkey"), rowLevelMode = tl.Mor)
     tl.registerSqlTable(s, "lake68", t)
     val maxKey = base.agg(max(col("o_orderkey"))).head.getLong(0) + 1L
     val upd = base.where(col("o_orderkey") % 7 === 2)
@@ -946,7 +944,7 @@ object SparkEntry {
     s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.audit")
     s.sql(s"CREATE TABLE $cat.audit.lake " +
       "TBLPROPERTIES ('statsCols' = 'o_orderkey', " +
-      "'morKey' = 'o_orderkey') AS " +
+      "'rowLevelMode' = 'mor') AS " +
       "SELECT /*+ REPARTITION(4) */ o_orderkey, " +
       "CAST(round(o_totalprice * 100) AS BIGINT) AS price_c, " +
       "o_orderpriority AS priority " +
@@ -982,7 +980,7 @@ object SparkEntry {
     val tl = graft.sinks.TableLog
     T(s, dir, "orders").createOrReplaceTempView("orders_src80")
     tl.sql(s, s"CREATE TABLE lake80 USING graft LOCATION '$t' " +
-      "OPTIONS (statsCols 'o_orderkey') AS " +
+      "OPTIONS (statsCols 'o_orderkey', rowLevelMode 'mor') AS " +
       "SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) " +
       "AS price_c, o_orderpriority AS priority " +
       "FROM orders_src80 WHERE o_orderkey % 30 = 20")
@@ -1167,7 +1165,7 @@ object SparkEntry {
     }
     drain() // wave 1
     // typed-captured COW delete + the second insert wave
-    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000)
+    tl.delete(s, bronze, col("o_orderkey").between(2000, 9000))
     tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 38))
     drain() // RESTART: exactly the unseen feed versions
     s.sql(s"""
@@ -1327,8 +1325,8 @@ object SparkEntry {
         col("o_orderpriority").as("priority"))
     tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 19))  // v2
     tl.tagVersion(bronze, "wave1", 2L)
-    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000)           // v3
-    tl.updateMor(s, bronze, "o_orderkey", "o_orderkey", 10000, 20000,
+    tl.delete(s, bronze, col("o_orderkey").between(2000, 9000))           // v3
+    tl.update(s, bronze, col("o_orderkey").between(10000, 20000),
       Map("price_c" -> (col("price_c") + 77)))                    // v4
     tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 49))  // v5
     def window(face: String, opts: (String, String)*): DataFrame = {
@@ -1408,8 +1406,8 @@ object SparkEntry {
       assert(q.awaitTermination(180000), "o87: drain must terminate")
     }
     drain() // run 1: wave 1 as typed inserts
-    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000)           // v3
-    tl.updateMor(s, bronze, "o_orderkey", "o_orderkey", 10000, 20000,
+    tl.delete(s, bronze, col("o_orderkey").between(2000, 9000))           // v3
+    tl.update(s, bronze, col("o_orderkey").between(10000, 20000),
       Map("price_c" -> (col("price_c") + 55)))                    // v4
     tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 39))  // v5
     drain() // RESTART: exactly the unseen commits
@@ -1481,7 +1479,7 @@ object SparkEntry {
       assert(q.awaitTermination(180000), "o91: drain must terminate")
     }
     drain() // run 1: wave 1 as typed inserts
-    tl.deleteWhere(s, bronze, "o_orderkey", 2000, 9000)           // v3
+    tl.delete(s, bronze, col("o_orderkey").between(2000, 9000))           // v3
     tl.append(s, bronze, base.where(col("o_orderkey") % 60 === 51))  // v4
     drain() // RESTART from the same checkpoint: only unseen versions
     val n2 = s.read.parquet(out).count()
@@ -1522,7 +1520,7 @@ object SparkEntry {
       .select(col("o_orderkey"), cents(col("o_totalprice")).as("price_c"),
         col("o_orderpriority").as("priority"))
     tl.append(s0, bronze, base.where(col("o_orderkey") % 60 === 27))  // v2
-    tl.deleteWhere(s0, bronze, "o_orderkey", 3000, 12000)         // v3
+    tl.delete(s0, bronze, col("o_orderkey").between(3000, 12000))         // v3
     tl.append(s0, bronze, base.where(col("o_orderkey") % 60 === 57))  // v4
     // …and read the feed on a FRESH session with no installed rules
     val s = s0.newSession()
@@ -1762,7 +1760,7 @@ object SparkEntry {
       .select((col("o_orderkey") + 60000000L).as("o_orderkey"),
         col("price_c"), lit("S").as("priority")))
     // …while the branch deletes a range and appends derived rows
-    tl.deleteWhere(s, br, "o_orderkey", 3000, 9000)
+    tl.delete(s, br, col("o_orderkey").between(3000, 9000))
     tl.append(s, br, base.where(col("o_orderkey") % 97 === 5)
       .select((col("o_orderkey") + 70000000L).as("o_orderkey"),
         col("price_c"), lit("B").as("priority")))
@@ -1801,7 +1799,7 @@ object SparkEntry {
       statsCols = Seq("o_orderkey"))                              // v1
     val fork = tl.cloneTable(s, src, br)
     val srcRows = tl.snapshot(src).get.rows
-    tl.deleteWhere(s, br, "o_orderkey", 4000, 10000)
+    tl.delete(s, br, col("o_orderkey").between(4000, 10000))
     tl.append(s, br, base.where(col("o_orderkey") % 97 === 1)
       .select((col("o_orderkey") + 50000000L).as("o_orderkey"),
         col("price_c"), lit("W").as("priority")))
@@ -1841,7 +1839,7 @@ object SparkEntry {
     tl.append(s, src, o.where(col("o_orderkey") % 20 === 7)
       .repartitionByRange(4, col("o_orderkey")))
     tl.cloneTable(s, src, dst)
-    tl.deleteWhere(s, src, "o_orderkey", 1L, 3000L)
+    tl.delete(s, src, col("o_orderkey").between(1L, 3000L))
     tl.append(s, dst, o.where(col("o_orderkey") % 20 === 8)
       .repartitionByRange(4, col("o_orderkey")))
     def agg(t: String, side: String) =
@@ -1868,7 +1866,7 @@ object SparkEntry {
       .repartitionByRange(4, col("l_orderkey")), statsCols = Seq("l_orderkey"))
     tl.append(s, t, li.where(col("l_orderkey") % 20 === 4)
       .repartitionByRange(4, col("l_orderkey")))
-    tl.deleteWhere(s, t, "l_orderkey", 1L, 20000L)
+    tl.delete(s, t, col("l_orderkey").between(1L, 20000L))
     // the restore runs through the SQL-TEXT face (CALL restore) —
     // same commit as tl.restore(s, t, 2), exercised from text alone
     tl.registerSqlTable(s, "o61_rst", t)
@@ -2075,7 +2073,7 @@ object SparkEntry {
       statsCols = Seq("l_orderkey"))
     tl.append(s, t, li.where(col("l_orderkey") % 30 === 14)
         .repartitionByRange(8, col("l_orderkey")))
-    tl.deleteWhere(s, t, "l_orderkey", 2000, 3500)
+    tl.delete(s, t, col("l_orderkey").between(2000, 3500))
     tl.read(s, t).groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"))
@@ -2095,7 +2093,7 @@ object SparkEntry {
     tl.create(s, t, docs.repartitionByRange(8, col("source"))
         .sortWithinPartitions("source"),
       strStatsCols = Seq("source"))
-    tl.deleteWhereIn(s, t, "source", Seq("src3", "src7"))
+    tl.delete(s, t, col("source").isin("src3", "src7"))
     tl.read(s, t).groupBy("lang")
       .agg(count(lit(1)).as("n_docs"), sum("text_len").as("sum_len"),
         countDistinct(col("source")).as("n_sources"))
@@ -2152,7 +2150,7 @@ object SparkEntry {
       statsCols = Seq("l_orderkey"))
     tl.append(s, t, li.where(col("l_orderkey") % 30 === 17)
         .repartitionByRange(8, col("l_orderkey")))
-    tl.deleteWhere(s, t, "l_orderkey", 2000, 3500)
+    tl.delete(s, t, col("l_orderkey").between(2000, 3500))
     val feed = tl.readFeed(s, t)
     val ct = col(tl.changeTypeCol)
     val ins = feed.where(ct === "insert").drop(tl.changeTypeCol)
@@ -2194,13 +2192,12 @@ object SparkEntry {
 
   /** MERGE-ON-READ update under the oracle: `o51_update_where`'s exact
     * semantics (same slice, predicate, and set clauses) through
-    * `updateMor` on a DELIBERATELY UNCLUSTERED layout — every file
-    * spans the whole key range, so the COW path would rewrite the lot
-    * while the MOR commit writes only the matched new images + a key
-    * sidecar and carries every base file by reference (zero-rewrite
-    * mechanics spec-pinned in TableLogSpec; the oracle pins the
-    * replace-on-read result relationally, including the l_orderkey
-    * key grouping — all lines of an order match together). */
+    * `update` on a `mor` table with a DELIBERATELY UNCLUSTERED layout —
+    * every file spans the whole key range, so the COW path would
+    * rewrite the lot while the MOR commit writes only the matched new
+    * images + a deletion vector and carries every base file by
+    * reference (zero-rewrite mechanics spec-pinned in TableLogSpec;
+    * the oracle pins the replace-on-read result relationally). */
   private def o63UpdateMor(s: SparkSession, dir: String): DataFrame = {
     val t = s"$tmpRoot/umor_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
@@ -2210,8 +2207,8 @@ object SparkEntry {
         col("l_returnflag"))
     val tl = graft.sinks.TableLog
     tl.create(s, t, base.repartition(8, col("qty")),
-      statsCols = Seq("l_orderkey"))
-    tl.updateMor(s, t, "l_orderkey", "l_orderkey", 2000, 20000,
+      statsCols = Seq("l_orderkey"), rowLevelMode = tl.Mor)
+    tl.update(s, t, col("l_orderkey").between(2000, 20000),
       Map("qty" -> (col("qty") + 100), "l_returnflag" -> lit("X")))
     tl.read(s, t).groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
@@ -2222,7 +2219,7 @@ object SparkEntry {
   /** MERGE-ON-READ upsert under the oracle: `o48_merge_cow`'s exact
     * latest-wins algebra (update band + past-domain inserts on the
     * orders key) through `mergeUpsert` on an unclustered layout whose
-    * table declares `morKey` — the commit is the source files + a key
+    * table declares `rowLevelMode = mor` — the commit is the source files + a key
     * sidecar, zero base-file rewrites (spec-pinned); the oracle
     * replays the merge as a full outer join, so a fence error (old
     * image surviving, late row swallowed) changes the hash. */
@@ -2234,7 +2231,7 @@ object SparkEntry {
         cents(col("o_totalprice")).as("price_c"))
     val tl = graft.sinks.TableLog
     tl.create(s, t, base.repartition(8, col("status")),
-      statsCols = Seq("o_orderkey"), morKey = Some("o_orderkey"))
+      statsCols = Seq("o_orderkey"), rowLevelMode = tl.Mor)
     val upd = base.where(col("o_orderkey") % 7 === 3)
       .select(col("o_orderkey"), lit("U").as("status"),
         (col("price_c") + 500).as("price_c"))
@@ -2282,11 +2279,11 @@ object SparkEntry {
   /** MERGE-ON-READ delete: the table is deliberately UNCLUSTERED in
     * the delete key (hash-partitioned on l_linenumber, so every file's
     * l_orderkey range spans the domain — the shape where copy-on-write
-    * rewrites the whole table), and the scattered-key delete commits
-    * only a key sidecar applied at read as an anti-join. The oracle
-    * recomputes the survivors relationally; zero-rewrite mechanics,
-    * version fencing, CDC capture, and compaction materialization are
-    * spec-pinned in TableLogSpec. */
+    * rewrites the whole table), and on a `mor` table the scattered-key
+    * delete commits only a deletion vector, filtered at read. The
+    * oracle recomputes the survivors relationally; zero-rewrite
+    * mechanics, CDC capture, and compaction materialization are
+    * spec-pinned in DvSpec and TableLogSpec. */
   private def o52DeleteMor(s: SparkSession, dir: String): DataFrame = {
     val t = s"$tmpRoot/delmor_${dir.replaceAll("[^a-zA-Z0-9]", "_")}"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(t))
@@ -2296,9 +2293,8 @@ object SparkEntry {
         col("l_returnflag"))
     val tl = graft.sinks.TableLog
     tl.create(s, t, li.repartition(8, col("l_linenumber")),
-      statsCols = Seq("l_orderkey"))
-    tl.deleteMor(s, t, "l_orderkey",
-      li.where(col("l_orderkey") % 7 === 3).select(col("l_orderkey")))
+      statsCols = Seq("l_orderkey"), rowLevelMode = tl.Mor)
+    tl.delete(s, t, col("l_orderkey") % 7 === 3)
     tl.read(s, t).groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
         min("l_orderkey").as("min_ok"), max("l_orderkey").as("max_ok"))
@@ -2364,7 +2360,7 @@ object SparkEntry {
       statsCols = Seq("o_orderkey"))                               // v1
     tl.append(s, t, base.withColumn("price_c", col("price_c") + 1000)
         .repartitionByRange(8, col("o_orderkey")))  // v2: same keys
-    tl.deleteWhere(s, t, "o_orderkey", 2000, 3500)                // v3
+    tl.delete(s, t, col("o_orderkey").between(2000, 3500))                // v3
     tl.applyCdc(s, sv, tl.readFeed(s, t, withVersion = true),
       "o_orderkey")
     tl.read(s, sv).groupBy("priority")
@@ -2377,7 +2373,7 @@ object SparkEntry {
     * bronze lifecycle as `o49_cdc_apply` (create → re-insert every
     * key → range delete) on a different slice, materialized to silver
     * through `applyCdc` in TWO batches — the first bootstraps the
-    * table, which then declares `morKey`, so the second commits the v2
+    * table, which then declares `rowLevelMode = mor`, so the second commits the v2
     * updates + v3 deletes as winning inserts' files + a touched-key
     * sidecar with ZERO silver-file rewrites (mechanics spec-pinned in
     * TableLogSpec; the oracle pins the same final keyed state as the
@@ -2398,11 +2394,11 @@ object SparkEntry {
       statsCols = Seq("o_orderkey"))                               // v1
     tl.append(s, t, base.withColumn("price_c", col("price_c") + 1000)
         .repartitionByRange(8, col("o_orderkey")))  // v2: same keys
-    tl.deleteWhere(s, t, "o_orderkey", 2000, 3500)                // v3
+    tl.delete(s, t, col("o_orderkey").between(2000, 3500))                // v3
     val feed = tl.readFeed(s, t, withVersion = true)
     tl.applyCdc(s, sv, feed.where(col("_change_version") === 1),
       "o_orderkey")     // bootstrap
-    tl.setWriteSpec(sv, tl.writeSpec(sv).copy(morKey = Some("o_orderkey")))
+    tl.setWriteSpec(sv, tl.writeSpec(sv).copy(rowLevelMode = tl.Mor))
     tl.applyCdc(s, sv, feed.where(col("_change_version") >= 2),
       "o_orderkey")     // MOR batch
     tl.read(s, sv).groupBy("priority")
@@ -2413,7 +2409,7 @@ object SparkEntry {
 
   /** CDC UPDATE capture end-to-end: a CDC-feed bronze table runs the
     * full mutation surface — copy-on-write MERGE (update band + no-file
-    * inserts), in-place `updateWhere`, range `deleteWhere` — and SILVER
+    * inserts), in-place range `update`, range `delete` — and SILVER
     * is materialized from the FEED ALONE via `applyCdc`, with no bronze
     * access and no knowledge of any predicate or source. The merge and
     * update publish typed old/new images by the multiset
@@ -2442,9 +2438,9 @@ object SparkEntry {
       .select((col("o_orderkey") + maxKey).as("o_orderkey"),
         col("price_c"), lit("I").as("priority"))
     tl.mergeUpsert(s, t, upd.unionByName(ins), Seq("o_orderkey"))  // v2
-    tl.updateWhere(s, t, "o_orderkey", 1000, 4000,
+    tl.update(s, t, col("o_orderkey").between(1000, 4000),
       Map("price_c" -> (col("price_c") + 777)))                   // v3
-    tl.deleteWhere(s, t, "o_orderkey", 5000, 9000)                // v4
+    tl.delete(s, t, col("o_orderkey").between(5000, 9000))                // v4
     tl.applyCdc(s, sv, tl.readFeed(s, t, withVersion = true),
       "o_orderkey")
     tl.read(s, sv).groupBy("priority")
@@ -2469,7 +2465,7 @@ object SparkEntry {
     val tl = graft.sinks.TableLog
     tl.create(s, t, base.repartitionByRange(8, col("l_orderkey")),
       statsCols = Seq("l_orderkey"))
-    tl.updateWhere(s, t, "l_orderkey", 2000, 20000,
+    tl.update(s, t, col("l_orderkey").between(2000, 20000),
       Map("qty" -> (col("qty") + 100), "l_returnflag" -> lit("X")))
     tl.read(s, t).groupBy("l_returnflag")
       .agg(count(lit(1)).as("n_rows"), sum("qty").as("sum_qty"),
@@ -2522,7 +2518,7 @@ object SparkEntry {
       .repartitionByRange(4, col("o_orderkey")), statsCols = Seq("o_orderkey"))
     tl.append(s, t, o.where(col("o_orderkey") % 10 === 2)
       .repartitionByRange(4, col("o_orderkey")))
-    tl.deleteWhere(s, t, "o_orderkey", 1L, 6000L)
+    tl.delete(s, t, col("o_orderkey").between(1L, 6000L))
     tl.history(s, t)
       .select(col("version"), col("action"), col("kind"),
         col("rows").as("n_rows"))

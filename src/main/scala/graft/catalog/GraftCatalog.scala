@@ -56,13 +56,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     `INSERT OVERWRITE` is the whole-table replace through
   *     `TableLog.rewrite` (history keeps the prior version readable).
   *     The table's WRITE SPEC is declared once as TABLE PROPERTIES
-  *     (`statsCols`/`strStatsCols`/`bloomStatsCols`/`morKey`/
+  *     (`statsCols`/`strStatsCols`/`bloomStatsCols`/`rowLevelMode`/
   *     `maxDvPositions`, the same names as the `USING graft` DDL
   *     OPTIONS): CREATE records it in the table's version-1 manifest,
   *     `ALTER TABLE … SET/UNSET TBLPROPERTIES` on those keys commits
-  *     `TableLog.setWriteSpec`, and every write measures what the
-  *     snapshot's spec declares. Other properties (`rowLevelMode`)
-  *     live in an unversioned `_catalog.properties` sidecar.
+  *     ONE `TableLog.setWriteSpec`, every write measures what the
+  *     snapshot's spec declares, and its `rowLevelMode` picks Spark's
+  *     row-level plan: `cow` → group-based ReplaceData, `mor` →
+  *     delta-based WriteDelta. Other (user) properties live in an
+  *     unversioned `_catalog.properties` sidecar.
   *   - DDL: CREATE/DROP/RENAME TABLE, namespaces. Tables are MANAGED:
   *     they live under the warehouse and DROP deletes their bytes
   *     (the registered-view face keeps its EXTERNAL semantics for
@@ -225,7 +227,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     TableLog.create(spark, path,
       spark.createDataFrame(new util.ArrayList[Row](), schema),
       statsCols = spec.longCols, strStatsCols = spec.strCols,
-      bloomStatsCols = spec.bloomCols, morKey = spec.morKey,
+      bloomStatsCols = spec.bloomCols, rowLevelMode = spec.rowLevelMode,
       maxDvPositions = spec.maxDvPositions)
     loadTable(ident)
   }
@@ -258,7 +260,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           "tables are MANAGED under the warehouse; for an external " +
           "path use TableLog.registerSqlTable / CREATE TABLE <name> " +
           "USING graft LOCATION …"))
-    GraftTable.rowLevelMode(props, identName(ident))
     (props, TableLog.checkedSpec(identName(ident), schema,
       GraftCatalog.specOf(props, identName(ident))))
   }
@@ -324,6 +325,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val path = tablePath(ident)
     if (!isTableDir(Paths.get(path))) throw new NoSuchTableException(ident)
     var props = GraftCatalog.readProps(path)
+    GraftCatalog.refuseMorKey(changes.collect {
+      case set: TableChange.SetProperty => set.property }, identName(ident))
     // write-spec keys collect here and commit as ONE setWriteSpec after
     // the other changes; the rest go to the sidecar
     var specProps = Option.empty[Map[String, String]]
@@ -385,7 +388,6 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           "ADD COLUMNS, DROP COLUMN, ALTER COLUMN TYPE (lossless " +
           "widening), ADD/DROP CONSTRAINT (CHECK)")
     }
-    GraftTable.rowLevelMode(props, identName(ident))
     specProps.foreach(p => TableLog.setWriteSpec(path,
       GraftCatalog.specOf(p, identName(ident))))
     GraftCatalog.writeProps(path, props)
@@ -521,20 +523,30 @@ object GraftCatalog {
   /** The property keys that declare the table's write spec — the same
     * names as the `USING graft` DDL OPTIONS. */
   private val specKeys = Seq("statsCols", "strStatsCols", "bloomStatsCols",
-    "morKey", "maxDvPositions")
+    "rowLevelMode", "maxDvPositions")
 
   private[graft] def isSpecKey(k: String): Boolean =
     specKeys.exists(_.equalsIgnoreCase(k))
+
+  /** `morKey`, the retired merge-on-read declaration, is refused by
+    * name rather than kept as a user key that would declare nothing. */
+  private[graft] def refuseMorKey(keys: Iterable[String],
+      name: String): Unit =
+    keys.find(_.equalsIgnoreCase("morKey")).foreach(k =>
+      throw new IllegalArgumentException(s"$name: '$k' is not a table " +
+        "property — declare rowLevelMode = 'mor' for merge-on-read " +
+        "deletes, updates and one-key upserts"))
 
   /** The write spec `props` declare (keys case-insensitive; column
     * lists comma-separated). */
   private[graft] def specOf(props: Map[String, String],
       name: String): TableLog.WriteSpec = {
+    refuseMorKey(props.keys, name)
     def prop(k: String) = props.find(_._1.equalsIgnoreCase(k)).map(_._2.trim)
     def cols(k: String): Seq[String] = prop(k).toSeq
       .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     TableLog.WriteSpec(cols("statsCols"), cols("strStatsCols"),
-      cols("bloomStatsCols"), prop("morKey").filter(_.nonEmpty),
+      cols("bloomStatsCols"), prop("rowLevelMode").getOrElse(TableLog.Cow),
       prop("maxDvPositions").map(v => v.toLongOption.getOrElse(
         throw new IllegalArgumentException(
           s"$name: maxDvPositions must be a long (got '$v')")))
@@ -546,11 +558,11 @@ object GraftCatalog {
     Seq("statsCols" -> spec.longCols.mkString(","),
       "strStatsCols" -> spec.strCols.mkString(","),
       "bloomStatsCols" -> spec.bloomCols.mkString(","),
-      "morKey" -> spec.morKey.getOrElse("")).filter(_._2.nonEmpty).toMap ++
+      "rowLevelMode" -> spec.rowLevelMode).filter(_._2.nonEmpty).toMap ++
       (if (spec.maxDvPositions == TableLog.DefaultMaxDvPositions) Map.empty
        else Map("maxDvPositions" -> spec.maxDvPositions.toString))
 
-  /** The table's other declared properties (`rowLevelMode`, user keys):
+  /** The table's other declared properties (user keys):
     * plain `key=value` lines at the table root (OUTSIDE `_log`, so the
     * manifest codec and vacuum never see it; vacuum sweeps only
     * `data/`). The write-spec keys are versioned in the manifest
@@ -671,7 +683,7 @@ final case class GraftTable(path: String, snapshot: TableLog.Snapshot,
     new org.apache.spark.sql.connector.write.RowLevelOperationBuilder {
       override def build()
           : org.apache.spark.sql.connector.write.RowLevelOperation =
-        if (GraftTable.rowLevelMode(props, nameStr) == "mor")
+        if (snapshot.spec.mor)
           new GraftDeltaOperation(GraftTable.this, info)
         else
           new GraftRowLevelOperation(GraftTable.this, info)
@@ -1059,25 +1071,6 @@ object GraftTable {
           "translation — rewrite the condition with comparisons, " +
           "IN, NULL tests, string prefix/suffix/contains, AND/OR/NOT")
     }
-  }
-
-  /** The `rowLevelMode` table property: how Spark's OWN row-level
-    * framework (DELETE/UPDATE/MERGE on a vanilla session) executes.
-    * `cow` (default) = group-based copy-on-write (ReplaceData:
-    * matched groups rewritten, untouched files carried by reference);
-    * `mor` = delta-based merge-on-read (WriteDelta: matched rows'
-    * positions committed as a deletion-vector sidecar, new images as
-    * ordinary files — zero data-file rewrites). */
-  private[catalog] def rowLevelMode(props: Map[String, String],
-      name: String): String = {
-    val v = props.find(_._1.equalsIgnoreCase("rowLevelMode"))
-      .map(_._2.trim.toLowerCase(java.util.Locale.ROOT))
-      .getOrElse("cow")
-    if (v != "cow" && v != "mor")
-      throw new IllegalArgumentException(
-        s"$name: rowLevelMode must be 'cow' (group-based " +
-          s"copy-on-write) or 'mor' (delta-based merge-on-read), got '$v'")
-    v
   }
 }
 

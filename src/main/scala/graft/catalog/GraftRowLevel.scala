@@ -35,8 +35,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * the surviving/updated rows, and the WRITE half lands them as new
   * data files and commits ONE delta manifest replacing the scanned
   * groups ([[TableLog.replaceFilesCommit]] — copy-on-write with
-  * by-reference carry of every untouched file, the `deleteWhere`
-  * shape driven by Spark's planner instead of ours).
+  * by-reference carry of every untouched file, the copy-on-write
+  * `TableLog.delete` shape driven by Spark's planner instead of ours).
   *
   * The runtime group-filter subquery scans the ORIGINAL table
   * through a regular batch scan (NOT this builder), so its `_file`
@@ -189,14 +189,14 @@ final class GraftRowLevelOperation(t0: GraftTable,
   * (ReplaceData), this one commits the matched rows' POSITIONS as a
   * deletion-vector sidecar and new images as ordinary data files
   * (WriteDelta) — zero data-file rewrites, write cost O(changed
-  * rows), the vanilla-session twin of [[TableLog.deleteDv]] /
-  * [[TableLog.updateDv]]. The row id is `(_file, _pos)` — the scan's
+  * rows), the vanilla-session twin of `TableLog.delete` /
+  * `TableLog.update` on a `mor` table. The row id is `(_file, _pos)` — the scan's
   * physical address space, captured below any pending deletion-vector
   * filter so positions stay exact. Updates arrive as delete+insert
   * pairs (`representUpdateAsDeleteAndInsert`), so the writer needs
   * only the two primitives. Positions are collected DISTRIBUTED (each
   * task writes its own sidecar shard), so no driver-side bound like
-  * `deleteDv`'s `maxPositions` applies at the statement level; the
+  * the spec's `maxDvPositions` applies at the statement level; the
   * aggregate pending-vector weight is still bounded by
   * `morMaintain`'s policy face.
   *
@@ -597,8 +597,8 @@ final class GraftDeltaWrite(op: GraftDeltaOperation, t: GraftTable,
 
 object GraftDeltaWrite {
   /** The deletion-vector sidecar schema — identical to the one
-    * `TableLog.deleteDv` writes, so read-side fencing, folding, and
-    * maintenance treat both indistinguishably. */
+    * `TableLog.delete` writes on a `mor` table, so read-side fencing,
+    * folding, and maintenance treat both indistinguishably. */
   private[catalog] val dvSchema = StructType(Seq(
     StructField(TableLog.DvFileField,
       org.apache.spark.sql.types.StringType, nullable = false),
@@ -606,7 +606,7 @@ object GraftDeltaWrite {
       org.apache.spark.sql.types.LongType, nullable = false)))
 
   /** The sidecar's stats — the same position range and file-key range
-    * `TableLog.deleteDv` records, which file-identity fencing reads. */
+    * `TableLog.delete` records, which file-identity fencing reads. */
   private[catalog] val dvStats = TableLog.dvSpec.writeStats(dvSchema)
 }
 

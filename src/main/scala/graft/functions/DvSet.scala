@@ -13,8 +13,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * lookup + one binary search per row, inside whole-stage codegen via
   * `ctx.addReferenceObj` (the BloomMightContain pattern); the vector
   * ships with the serialized plan like a broadcast scalar — positional
-  * deletes are size-gated at commit time (`TableLog.deleteDv
-  * maxPositions`) precisely so this stays plan-sized. */
+  * deletes are size-gated at commit time (the write spec's
+  * `maxDvPositions`) precisely so this stays plan-sized. */
 final class DvSet(
     entries: java.util.HashMap[String, Array[Long]]) extends Serializable {
 

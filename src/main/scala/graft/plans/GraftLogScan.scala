@@ -331,7 +331,10 @@ object PruneLogScan extends Rule[LogicalPlan] with PredicateHelper {
         c -> vs.map(v => (v._2, v._3)).reduce((x, y) =>
           (math.max(x._1, y._1), math.min(x._2, y._2)))
       }
-    if (ranges.size < 2) kept
+    // contradictory conjuncts on one column (`k > 50 AND k < 40`,
+    // `BETWEEN 5 AND 1`) match no row in any file
+    if (ranges.exists { case (_, (lo, hi)) => lo > hi }) Nil
+    else if (ranges.size < 2) kept
     else TableLog.prunedFilesByBox(s.copy(files = kept), ranges)
   }
 

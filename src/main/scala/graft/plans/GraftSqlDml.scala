@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * speaks SQL gets the whole lake from text alone:
   *   - DML: UPDATE / DELETE / MERGE / INSERT / INSERT OVERWRITE over
   *     a registered view route to the `TableLog` faces (COW or MOR
-  *     per the registration) — same stats-pruned commits, same
+  *     per the table's write spec) — same stats-pruned commits, same
   *     audits, same CDC capture as the Scala API;
   *   - DDL: `CREATE [OR REPLACE] TABLE … USING graft LOCATION … AS
   *     SELECT`, `REPLACE TABLE`, and `DROP TABLE` (external
@@ -38,9 +38,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Translation is deliberately CONSERVATIVE: Spark's own parser
   * produces the DML plans (full SQL grammar — no hand parsing), and
   * the rewrite only claims statements whose target is a REGISTERED
-  * view and whose shape maps exactly onto a face — single-column long
-  * range / equality predicates (the stats-prunable shapes), string
-  * equality / IN lists for DELETE, and the canonical
+  * view and whose shape maps exactly onto a face — any deterministic
+  * DELETE / UPDATE predicate (Spark evaluates it; `TableLog.delete` /
+  * `TableLog.update` prune the manifest by it), and the canonical
   * `WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`
   * upsert for MERGE. A registered target with an untranslatable shape
   * FAILS LOUDLY with what to use instead — falling through to Spark
@@ -60,17 +60,11 @@ object GraftSqlDml {
 
   /** The DML registry entry `TableLog.registerSqlTable` records: the
     * table path alone. Everything else is the table's own write spec,
-    * read at each statement: the stats every commit measures, and
-    * `morKey`, which opts the table's SQL mutations into the
-    * MERGE-ON-READ commits — UPDATE → `updateMor`, a DELETE whose
-    * predicate is `morKey IN (long list)` / `= n` → `deleteMor`, and
-    * MERGE, whose one `mergeUpsert` call takes the key-sidecar commit
-    * by the same spec — the zero-rewrite path an UNCLUSTERED table
-    * wants (range DELETEs stay copy-on-write: a range is exactly what
-    * the stat prune rewrites tightly). The spec's `maxDvPositions`
-    * caps each positional (deletion-vector) commit — past it a DELETE
-    * auto-falls-back to copy-on-write and an UPDATE refuses with
-    * guidance (the TableLog faces' own contract). */
+    * read by each commit from its base snapshot: the stats every
+    * commit measures, and the `rowLevelMode` that picks the commit of
+    * DELETE (`TableLog.delete`), UPDATE (`TableLog.update`) and MERGE
+    * (`TableLog.mergeUpsert`) — copy-on-write of the pruned files, or
+    * the zero-rewrite deletion-vector / key-sidecar commits. */
   final case class Reg(table: String) {
     def spec: TableLog.WriteSpec = TableLog.writeSpec(table)
   }
@@ -253,7 +247,7 @@ object GraftSqlDml {
 
   /** `CREATE TABLE <name> USING graft LOCATION '<path>' [OPTIONS
     * (statsCols 'a,b', strStatsCols 'c', bloomStatsCols 'd',
-    * morKey 'k')] AS SELECT …` — the DDL verb: commits version 1 of
+    * rowLevelMode 'mor')] AS SELECT …` — the DDL verb: commits version 1 of
     * a NEW commit-log table at the LOCATION and registers `<name>`
     * for the whole SQL face (SELECT through the declarative scan,
     * UPDATE/DELETE/MERGE/INSERT, AS OF, the TVFs). Claimed only for
@@ -305,10 +299,11 @@ object GraftSqlDml {
                 s"$verb $name USING graft",
                 s"OPTION '$k' must be a string literal"))
           }.toMap
+        graft.catalog.GraftCatalog.refuseMorKey(opts.keys, s"$verb $name")
         opts.keys.filterNot(graft.catalog.GraftCatalog.isSpecKey)
           .foreach(k => unsupported(s"$verb $name USING graft",
             s"unknown OPTION '$k' — supported: statsCols, strStatsCols, " +
-              "bloomStatsCols, morKey, maxDvPositions"))
+              "bloomStatsCols, rowLevelMode, maxDvPositions"))
         Some(DdlSpec(name, loc,
           graft.catalog.GraftCatalog.specOf(opts, s"$verb $name"),
           timeTravel(spark, query).getOrElse(query)))
@@ -370,7 +365,7 @@ object GraftSqlDml {
     TableLog.create(s, d.loc,
       org.apache.spark.sql.graft.Bridge.ofRows(s, d.srcPlan),
       statsCols = d.spec.longCols, strStatsCols = d.spec.strCols,
-      bloomStatsCols = d.spec.bloomCols, morKey = d.spec.morKey,
+      bloomStatsCols = d.spec.bloomCols, rowLevelMode = d.spec.rowLevelMode,
       maxDvPositions = d.spec.maxDvPositions)
 
   /** `DROP TABLE <registered view>` — EXTERNAL-table semantics:
@@ -629,144 +624,10 @@ object GraftSqlDml {
     case _ => None
   }
 
-  /** Predicate → (column, lo, hi) for the range faces: BETWEEN (the
-    * parser expands it to >= AND <=), =, >=, >, <=, <, literal on
-    * either side, and conjunctions over ONE column (intersected). */
-  private[graft] def rangeOf(cond: Expression)
-      : Option[(String, Long, Long)] = cond match {
-    // the parser keeps BETWEEN unresolved: 'between(col, lo, hi)
-    case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-        if f.nameParts.map(_.toLowerCase(java.util.Locale.ROOT)) ==
-          Seq("between") && f.arguments.size == 3 =>
-      for { c <- attrOf(f.arguments(0)); lo <- longOf(f.arguments(1));
-            hi <- longOf(f.arguments(2)) } yield (c, lo, hi)
-    // …or already replaced to the Between node (DataFrame-built text)
-    case b: Between =>
-      for { c <- attrOf(b.input); lo <- longOf(b.lower);
-            hi <- longOf(b.upper) } yield (c, lo, hi)
-    case And(l, r) =>
-      for { a <- rangeOf(l); b <- rangeOf(r); if a._1 == b._1 }
-        yield (a._1, math.max(a._2, b._2), math.min(a._3, b._3))
-    case EqualTo(a, l) if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some((attrOf(a).get, longOf(l).get, longOf(l).get))
-    case EqualTo(l, a) if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some((attrOf(a).get, longOf(l).get, longOf(l).get))
-    case GreaterThanOrEqual(a, l)
-        if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some((attrOf(a).get, longOf(l).get, Long.MaxValue))
-    case GreaterThan(a, l)
-        if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some(aboveExclusive(attrOf(a).get, longOf(l).get))
-    case LessThanOrEqual(a, l)
-        if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some((attrOf(a).get, Long.MinValue, longOf(l).get))
-    case LessThan(a, l) if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some(belowExclusive(attrOf(a).get, longOf(l).get))
-    case GreaterThanOrEqual(l, a)
-        if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some((attrOf(a).get, Long.MinValue, longOf(l).get))
-    case GreaterThan(l, a)
-        if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some(belowExclusive(attrOf(a).get, longOf(l).get))
-    case LessThanOrEqual(l, a)
-        if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some((attrOf(a).get, longOf(l).get, Long.MaxValue))
-    case LessThan(l, a) if attrOf(a).isDefined && longOf(l).isDefined =>
-      Some(aboveExclusive(attrOf(a).get, longOf(l).get))
-    case _ => None
-  }
-
-  /** `col > v` / `col < v` with the literal at the domain endpoint
-    * matches NOTHING — the naive `v + 1` / `v - 1` bound WRAPS (lo
-    * becomes Long.MinValue), turning a match-nothing DELETE into a
-    * delete-everything. Here (unlike leafRange's pruning, where a
-    * residual filter makes the wrap harmless) the range IS the DML
-    * semantics, so the endpoint translates to the canonical empty
-    * range `(1, 0)` — which `delete`/`update` turn into a no-op. */
-  private def aboveExclusive(c: String, v: Long): (String, Long, Long) =
-    if (v == Long.MaxValue) (c, 1L, 0L) else (c, v + 1, Long.MaxValue)
-  private def belowExclusive(c: String, v: Long): (String, Long, Long) =
-    if (v == Long.MinValue) (c, 1L, 0L) else (c, Long.MinValue, v - 1)
-
-  /** The range faces evaluate `cast(col AS long) BETWEEN lo AND hi`,
-    * which on a fractional column is NOT SQL equality — `price = 100`
-    * would delete every row with price in [100.0, 101.0) (truncating
-    * cast). A range-translated predicate is only CLAIMED for the
-    * range faces when the column resolves to an INTEGRAL type in the
-    * recorded schema; anything else (unknown column, fractional,
-    * temporal) routes to the POSITIONAL faces, where Spark evaluates
-    * the predicate itself — exact by construction. */
-  private def integralRangeOk(reg: Reg, col: String): Boolean =
-    TableLog.tableSchemaOf(reg.table).fields
-      .find(_.name.equalsIgnoreCase(col)).exists(_.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      })
-
-  /** A statement whose translated range is EMPTY (endpoint-exclusive
-    * bounds, `BETWEEN 5 AND 1`, contradictory conjunctions) matches
-    * nothing: commit nothing, report the current version — the same
-    * outcome the faces produce when no file can contain a match. */
-  private def noOp(kind: String, view: String, reg: Reg): LogicalPlan =
-    GraftDmlCommand(kind, view, reg.table,
-      _ => TableLog.latestVersion(reg.table))
-
   private def delete(view: String, reg: Reg,
-      cond: Expression): LogicalPlan = {
-    val strIn: Option[(String, Seq[String])] = cond match {
-      case In(a, vs) if attrOf(a).isDefined && vs.nonEmpty &&
-          vs.forall(strOf(_).isDefined) =>
-        Some((attrOf(a).get, vs.flatMap(strOf)))
-      case EqualTo(a, v) if attrOf(a).isDefined && strOf(v).isDefined =>
-        Some((attrOf(a).get, Seq(strOf(v).get)))
-      case EqualTo(v, a) if attrOf(a).isDefined && strOf(v).isDefined =>
-        Some((attrOf(a).get, Seq(strOf(v).get)))
-      case _ => None
-    }
-    // a key IN-list / key equality on a MOR-keyed table: the
-    // scattered-key shape deleteMor exists for — zero rewrites
-    val spec = reg.spec
-    val morKeys: Option[Seq[Long]] = spec.morKey.flatMap(mk => cond match {
-      case In(a, vs) if attrOf(a).contains(mk) && vs.nonEmpty &&
-          vs.forall(longOf(_).isDefined) => Some(vs.flatMap(longOf))
-      case EqualTo(a, l) if attrOf(a).contains(mk) &&
-          longOf(l).isDefined => Some(Seq(longOf(l).get))
-      case EqualTo(l, a) if attrOf(a).contains(mk) &&
-          longOf(l).isDefined => Some(Seq(longOf(l).get))
-      case _ => None
-    })
-    (morKeys, strIn) match {
-      case (Some(keys), _) => GraftDmlCommand("delete", view, reg.table,
-        s => {
-          import s.implicits._
-          TableLog.deleteMor(s, reg.table,
-            spec.morKey.get, keys.toDF(spec.morKey.get))
-        })
-      case (_, Some((c, vals))) =>
-        GraftDmlCommand("delete", view, reg.table,
-          s => TableLog.deleteWhereIn(s, reg.table, c, vals))
-      case _ =>
-        rangeOf(cond) match {
-          case Some((c, lo, hi)) if integralRangeOk(reg, c) =>
-            if (lo > hi) noOp("delete", view, reg)
-            else GraftDmlCommand("delete", view, reg.table,
-              s => TableLog.deleteWhere(s, reg.table, c, lo, hi))
-          case _ =>
-            // POSITIONAL fallback — the completion of the SQL DELETE
-            // story: any other deterministic predicate (modulo,
-            // multi-column conjunctions, fractional/temporal equality
-            // — where the long-range faces' truncating cast would be
-            // WRONG, Spark's own evaluation of the predicate is
-            // definitionally right) executes as a zero-rewrite
-            // deletion-vector commit with exact SQL semantics.
-            // Unresolvable columns and nondeterminism still fail
-            // loudly, from analysis and deleteDv's own guard.
-            GraftDmlCommand("delete", view, reg.table,
-              s => TableLog.deleteDv(s, reg.table,
-                org.apache.spark.sql.graft.Bridge.column(cond)))
-        }
-    }
-  }
+      cond: Expression): LogicalPlan =
+    GraftDmlCommand("delete", view, reg.table, s => TableLog.delete(s,
+      reg.table, org.apache.spark.sql.graft.Bridge.column(cond)))
 
   private def update(view: String, reg: Reg, assigns: Seq[Assignment],
       condOpt: Option[Expression]): LogicalPlan = {
@@ -788,23 +649,8 @@ object GraftSqlDml {
             s"schema (${schema.fieldNames.mkString(", ")})"))
       name -> org.apache.spark.sql.graft.Bridge.column(v).cast(f.dataType)
     }.toMap
-    rangeOf(cond) match {
-      case Some((c, lo, hi)) if integralRangeOk(reg, c) =>
-        if (lo > hi) noOp("update", view, reg)
-        else GraftDmlCommand("update", view, reg.table,
-          s => reg.spec.morKey match {
-            case Some(mk) =>
-              TableLog.updateMor(s, reg.table, mk, c, lo, hi, set)
-            case None => TableLog.updateWhere(s, reg.table, c, lo, hi, set)
-          })
-      case _ =>
-        // POSITIONAL fallback: any other deterministic predicate
-        // updates as new images + a deletion-vector, zero rewrites,
-        // exact SQL semantics — see delete's twin comment
-        GraftDmlCommand("update", view, reg.table,
-          s => TableLog.updateDv(s, reg.table,
-            org.apache.spark.sql.graft.Bridge.column(cond), set))
-    }
+    GraftDmlCommand("update", view, reg.table, s => TableLog.update(s,
+      reg.table, org.apache.spark.sql.graft.Bridge.column(cond), set))
   }
 
   private def merge(spark: SparkSession, view: String, reg: Reg,

@@ -180,18 +180,29 @@ object TableLog {
     * positions shipped with each read plan. */
   val DefaultMaxDvPositions: Long = 2000000L
 
+  /** The two `rowLevelMode`s of a [[WriteSpec]]. */
+  val Cow = "cow"
+  val Mor = "mor"
+
   /** The table's WRITE SPEC, declared once by the table: the columns
     * every write measures long ranges, string ranges and blooms of,
-    * plus the SQL mutation route (`morKey`) and the per-commit
-    * deletion-vector cap. `create` records it in version 1 and
-    * `setWriteSpec` changes it; like the CHECK set it rides complete in
-    * every manifest, so every write reads it from its base snapshot. A
-    * file written under an older spec lacks the newer stats and is
-    * kept by the pruner (stats prune IO, never semantics). */
+    * the ROW-LEVEL MODE and the per-commit deletion-vector cap.
+    * `rowLevelMode` picks every row-level commit on every face (Scala,
+    * view SQL, catalog SQL): `cow` (the default) rewrites the pruned
+    * files a delete, update or upsert touches; `mor` commits a deletion
+    * vector (delete, update — past `maxDvPositions` the copy-on-write
+    * commit instead) or a key sidecar (a one-column-key upsert), with
+    * zero data-file rewrites. `create` records the spec in version 1
+    * and `setWriteSpec` changes it; like the CHECK set it rides
+    * complete in every manifest, so every write reads it from its base
+    * snapshot. A file written under an older spec lacks the newer stats
+    * and is kept by the pruner (stats prune IO, never semantics). */
   final case class WriteSpec(longCols: Seq[String] = Nil,
       strCols: Seq[String] = Nil, bloomCols: Seq[String] = Nil,
-      morKey: Option[String] = None,
+      rowLevelMode: String = Cow,
       maxDvPositions: Long = DefaultMaxDvPositions) {
+    private[graft] def mor: Boolean = rowLevelMode == Mor
+
     /** The statistics a write of a frame with `schema` records: the
       * declared columns the frame carries (an append may omit a
       * column; a key sidecar carries only its key), plus a layout
@@ -211,15 +222,14 @@ object TableLog {
       * `to = None`, a column drop. */
     private[graft] def renamed(from: String, to: Option[String]): WriteSpec = {
       def m(cs: Seq[String]) = cs.flatMap(c => if (c == from) to else Some(c))
-      copy(m(longCols), m(strCols), m(bloomCols),
-        morKey.flatMap(k => if (k == from) to else Some(k)))
+      copy(m(longCols), m(strCols), m(bloomCols))
     }
 
     override def toString: String =
       s"WriteSpec(stats=[${longCols.mkString(",")}], " +
         s"str=[${strCols.mkString(",")}], " +
         s"bloom=[${bloomCols.mkString(",")}], " +
-        s"morKey=${morKey.getOrElse("")}, maxDv=$maxDvPositions)"
+        s"rowLevelMode=$rowLevelMode, maxDv=$maxDvPositions)"
   }
 
   /** Resolve `spec` against `schema` (names match case-insensitively
@@ -234,9 +244,12 @@ object TableLog {
           s"table schema (${schema.fieldNames.mkString(", ")})"))
     require(spec.maxDvPositions > 0,
       s"write spec of $table: maxDvPositions must be positive")
+    val mode = spec.rowLevelMode.trim.toLowerCase(java.util.Locale.ROOT)
+    require(mode == Cow || mode == Mor,
+      s"write spec of $table: rowLevelMode must be '$Cow' (copy-on-write) " +
+        s"or '$Mor' (merge-on-read), got '${spec.rowLevelMode}'")
     WriteSpec(spec.longCols.map(res).distinct, spec.strCols.map(res).distinct,
-      spec.bloomCols.map(res).distinct, spec.morKey.map(res),
-      spec.maxDvPositions)
+      spec.bloomCols.map(res).distinct, mode, spec.maxDvPositions)
   }
 
   /** Full checkpoint every Nth append: snapshot resolution replays at
@@ -482,23 +495,24 @@ object TableLog {
       spec = parseSpec(kv)))
   }
 
-  // write-spec codec: `spec.stats=`/`spec.str=`/`spec.bloom=`/
-  // `spec.morKey=` (comma-joined URL-encoded names) and `spec.maxDv=`,
+  // write-spec codec: `spec.stats=`/`spec.str=`/`spec.bloom=`
+  // (comma-joined URL-encoded names), `spec.mode=` and `spec.maxDv=`,
   // each only when non-empty/non-default — plain `key=` lines, so no
   // format bump
   private def parseSpec(kv: Map[String, String]): WriteSpec = {
     def cols(k: String): Seq[String] = kv.get(s"spec.$k").toSeq
       .flatMap(_.split(",")).map(java.net.URLDecoder.decode(_, "UTF-8"))
     WriteSpec(cols("stats"), cols("str"), cols("bloom"),
-      cols("morKey").headOption,
+      kv.getOrElse("spec.mode", Cow),
       kv.get("spec.maxDv").map(_.toLong).getOrElse(DefaultMaxDvPositions))
   }
 
   private def renderSpec(sp: WriteSpec): String =
-    Seq("stats" -> sp.longCols, "str" -> sp.strCols, "bloom" -> sp.bloomCols,
-      "morKey" -> sp.morKey.toSeq).collect { case (k, cs) if cs.nonEmpty =>
+    Seq("stats" -> sp.longCols, "str" -> sp.strCols, "bloom" -> sp.bloomCols)
+      .collect { case (k, cs) if cs.nonEmpty =>
         cs.map(java.net.URLEncoder.encode(_, "UTF-8"))
           .mkString(s"spec.$k=", ",", "\n") }.mkString +
+      (if (sp.mor) s"spec.mode=$Mor\n" else "") +
       (if (sp.maxDvPositions == DefaultMaxDvPositions) ""
        else s"spec.maxDv=${sp.maxDvPositions}\n")
 
@@ -855,8 +869,8 @@ object TableLog {
     * through `TableLog.sql` on any session, or plain `spark.sql` when
     * the session was built with `GraftExtensions`. The registration
     * holds only the table path: every commit measures the stats the
-    * table's write spec declares, and `morKey`/`maxDvPositions` route
-    * from the same spec. DML commits re-register the view, so
+    * table's write spec declares, and its `rowLevelMode` picks every
+    * row-level commit. DML commits re-register the view, so
     * subsequent SELECTs see the new version. */
   def registerSqlTable(spark: SparkSession, name: String,
       table: String): Unit = {
@@ -1034,8 +1048,8 @@ object TableLog {
               sidecarHint(s.schema.struct, k))
             // NO .distinct() on the key side: left_anti semantics are
             // unchanged by duplicate build keys (each sidecar is
-            // already deduped at write — deleteMor and the upserts
-            // distinct their key set; only cross-sidecar repeats remain), and
+            // already deduped at write — the upserts distinct their
+            // key set; only cross-sidecar repeats remain), and
             // the distinct's final HashAggregate would sit between the
             // anti-join's Sort and its shuffle stage — the exact shape
             // that stops Spark's OptimizeSkewedJoin from EVER matching
@@ -1705,7 +1719,7 @@ object TableLog {
     * existing totals (docs doubled, pins corrupted) instead of starting
     * the accounting — refuse loudly. (The check is a fast-path guard;
     * a writer racing between check and commit is still caught by the
-    * CAS loop's pin assert.) The stat lists, `morKey` and
+    * CAS loop's pin assert.) The stat lists, `rowLevelMode` and
     * `maxDvPositions` DECLARE the table's [[WriteSpec]], recorded in
     * version 1 (a column `df` lacks is refused); every later write
     * reads it from there. */
@@ -1714,7 +1728,7 @@ object TableLog {
       counterDelta: Map[String, Long] = Map.empty,
       bloomStatsCols: Seq[String] = Nil,
       counterPin: Map[String, Long] = Map.empty,
-      morKey: Option[String] = None,
+      rowLevelMode: String = Cow,
       maxDvPositions: Long = DefaultMaxDvPositions): Long = {
     require(latestVersion(table) == 0L,
       s"create($table): table already has ${latestVersion(table)} committed " +
@@ -1722,7 +1736,7 @@ object TableLog {
         "the build at a fresh table")
     appendImpl(spark, table, df, None, counterDelta, counterPin, None,
       Some(checkedSpec(table, df.schema, WriteSpec(statsCols, strStatsCols,
-        bloomStatsCols, morKey, maxDvPositions))))
+        bloomStatsCols, rowLevelMode, maxDvPositions))))
   }
 
   /** The write spec at the table's latest version. */
@@ -1856,7 +1870,7 @@ object TableLog {
 
   /** Register a named CHECK constraint — a boolean SQL expression every
     * row of every future row-adding commit (append/appendStream,
-    * mergeUpsert, updateWhere, INSERT OVERWRITE, replaceWhere, the
+    * mergeUpsert, update, INSERT OVERWRITE, replaceWhere, the
     * vanilla-session row-level UPDATE/MERGE) must satisfy, counted by
     * the write job over the rows it writes, before any manifest
     * references the batch. EXISTING rows are validated first (one table scan — the
@@ -2812,7 +2826,7 @@ object TableLog {
   // The TYPED (CDC) feed lifts exactly the delete half of that
   // restriction: `enableCdcFeed` adds a `_cdc` marker, reads gain a
   // `_change_type` column ('insert' | 'delete'), and the stats-pruned
-  // copy-on-write deletes (`deleteWhere`/`deleteWhereIn`) become legal
+  // row-level deletes (`delete`, copy-on-write or vector) become legal
   // on the table — their DELETED ROWS are captured into the feed as
   // typed rows, so a downstream derives the surviving state as
   // inserts ⊖ deletes (multiset exceptAll) instead of re-running the
@@ -2833,7 +2847,7 @@ object TableLog {
   // reads null) and coalesce null to 'insert', so publication stays
   // O(added files) metadata with zero data rewrite.
   //
-  // UPDATES (the stats-pruned `mergeUpsert`/`applyCdc`/`updateWhere`
+  // UPDATES (the stats-pruned `mergeUpsert`/`applyCdc`/`update`
   // commits) are captured on CDC feeds by the same manifest-derived
   // machinery, via the multiset SYMMETRIC difference: the rewritten
   // files mix untouched remainder rows with the new/updated rows, but
@@ -3608,8 +3622,7 @@ object TableLog {
       val spec0 = respec.map(checkedSpec(table, out.schema, _))
         .getOrElse(base.spec)
       val spec = spec0.copy(spec0.longCols.filter(names),
-        spec0.strCols.filter(names), spec0.bloomCols.filter(names),
-        spec0.morKey.filter(names))
+        spec0.strCols.filter(names), spec0.bloomCols.filter(names))
       val (files, rows) = writeDataFiles(spark, table, spec, out,
         clusterCols, derivedStats, audits)
       expectRows(base.rows).foreach(exp => auditStaged(table, files)(
@@ -3893,9 +3906,8 @@ object TableLog {
   }
 
   /** MOR sidecar MAINTENANCE — the read-amplification bound the
-    * merge-on-read faces need at scale. Every `updateMor`/`deleteMor`
-    * commit and every upsert on a `morKey` table adds a delete
-    * sidecar, and
+    * merge-on-read faces need at scale. Every upsert on a `mor` table
+    * adds a delete sidecar, and
     * `morScan` pays one anti-join per (cohort × key column) per read;
     * nothing retires sidecars except a full rewrite the user must
     * remember to run. This face IS the policy: a no-op while the
@@ -3997,8 +4009,8 @@ object TableLog {
   /** FOLD pending MOR delete sidecars — the cheap maintenance step
     * between `morMaintain` materializations: many small sidecar key
     * files become few, with ZERO data-file rewrites, so a
-    * delete-burst table (GDPR sweeps, retention ticks — deleteMor
-    * once per key batch) stops paying one file-open per sidecar per
+    * delete-burst table (GDPR sweeps, retention ticks — a CDC
+    * apply of deletes once per key batch) stops paying one file-open per sidecar per
     * read. Soundness is all about the VERSION FENCE: a sidecar at
     * version v deletes only from files with ver < v, so two sidecars
     * d₁@v₁ < d₂@v₂ of the same key column may merge — stamped at the
@@ -4496,21 +4508,6 @@ object TableLog {
     }
   }
 
-  /** Stats-pruned COPY-ON-WRITE delete: remove the rows where `c` (cast
-    * to long) falls in `[lo, hi]`, rewriting ONLY the files whose
-    * manifest stat range overlaps the predicate — every other file
-    * carries over BY REFERENCE (same path, never read, never copied),
-    * and the commit is a delta manifest (removes = affected paths,
-    * adds = their rewritten remainders). Delete cost is therefore
-    * O(affected files + manifest), not O(table): on a range-clustered
-    * 100 TB table a narrow delete (GDPR erasure, bad-ingest rollback)
-    * touches a handful of files while a full-snapshot rewrite would
-    * stream the whole table through the cluster. NULL values of `c`
-    * never match the range and are kept. Rows are audited
-    * (new = affectedScan − matched, total = base − matched); commits
-    * CAS-retry against racing appends like every other writer. Returns
-    * the committed version (the CURRENT version unchanged if no file
-    * can contain a match — a no-op makes no commit). */
   /** Live (post-sidecar) row count of `affected` under snapshot
     * `base`, METADATA-SIDE when provable: the manifest carries each
     * file's write-time footer count, and a deletion vector's removals
@@ -4548,73 +4545,216 @@ object TableLog {
     derived
   }
 
-  def deleteWhere(spark: SparkSession, table: String, c: String,
-      lo: Long, hi: Long, txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    deleteImpl(spark, table, prunedFilesOf(_, c, lo, hi),
-      // NULL is not in any range: keep it (a bare !between would turn
-      // NULL comparisons into silent deletions)
-      _.where(coalesce(!col(c).cast("long").between(lo, hi), lit(true))),
-      txnId)
+  /** ROW-LEVEL DELETE: remove the rows where `cond` is TRUE — FALSE and
+    * NULL keep, exact SQL DELETE semantics — in ONE commit the base
+    * snapshot's `rowLevelMode` picks (`rowLevel`). Returns the
+    * committed version (the current version unchanged when nothing
+    * matches — a no-op makes no commit). */
+  def delete(spark: SparkSession, table: String, cond: Column,
+      txnId: Option[String] = None): Long =
+    rowLevel(spark, table, "delete", cond, None, txnId)
+
+  /** ROW-LEVEL UPDATE: for every row where `cond` is TRUE, replace the
+    * columns named in `set` with their expressions — every RHS
+    * evaluated against the OLD row (standard SQL UPDATE semantics: all
+    * set clauses see the pre-update image, so `"a" -> col("b"), "b" ->
+    * col("a")` swaps, and the predicate column itself may appear in
+    * `set` without re-evaluating the condition). FALSE and NULL rows
+    * pass through unchanged. A set column the table lacks, or an
+    * expression whose type differs from its column's, is refused
+    * before anything is written. The row count is invariant and
+    * audited, and CHECK constraints are audited over the new images by
+    * the write job. ONE commit the base snapshot's `rowLevelMode`
+    * picks (`rowLevel`); returns the committed version (the current
+    * version unchanged when nothing matches). */
+  def update(spark: SparkSession, table: String, cond: Column,
+      set: Map[String, Column], txnId: Option[String] = None): Long = {
+    require(set.nonEmpty, s"update on $table: empty set clause")
+    rowLevel(spark, table, "update", cond, Some(set), txnId)
   }
 
-  /** Categorical twin of `deleteWhere`: remove the rows where string
-    * column `c` is one of `values`, pruning by the manifest's STRING
-    * file stats — the "erase everything from a revoked source / user"
-    * shape. Same by-reference carry, audit, NULL-keep, no-op and
-    * feed-refusal contract. */
-  def deleteWhereIn(spark: SparkSession, table: String, c: String,
-      values: Seq[String], txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    deleteImpl(spark, table, prunedFilesInOf(_, c, values),
-      _.where(coalesce(!col(c).isin(values: _*), lit(true))), txnId)
+  /** `delete` under the benchmark's call shape: the stat lists are
+    * only a CHECK against the table's recorded spec. */
+  def deleteDv(spark: SparkSession, table: String, cond: Column,
+      txnId: Option[String] = None,
+      statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
+      bloomStatsCols: Seq[String] = Nil): Long = {
+    checkDeclared(table, snapshotOrFail(table).spec,
+      WriteSpec(statsCols, strStatsCols, bloomStatsCols), "deleteDv")
+    delete(spark, table, cond, txnId)
   }
 
-  private def deleteImpl(spark: SparkSession, table: String,
-      affectedOf: Snapshot => Seq[FileEntry],
-      keep: DataFrame => DataFrame, txnId: Option[String]): Long = {
+  /** The ONE route under `delete` and `update` (`set` = None is a
+    * delete). The predicate is resolved once against the snapshot,
+    * nondeterminism is refused, and the manifest is pruned with the
+    * declarative face's tree pruner (`dvPrune`: ranges, IN-lists,
+    * bloom, z-box), so a clustered predicate touches only overlapping
+    * files. The base snapshot's `rowLevelMode` then picks the commit:
+    * `mor` → a deletion vector over the matched positions (`dvCommit`;
+    * past the spec's `maxDvPositions` the copy-on-write commit), `cow`
+    * → a rewrite of the kept files (`cowCommit`). Both scan before they
+    * write, so neither needs a key column. A PLAIN feed refuses (it
+    * cannot represent a delete), a CDC feed captures the old and new
+    * images as typed rows, and `txnId` makes the commit exactly-once.
+    * A lost CAS re-plans everything against the new base. */
+  private def rowLevel(spark: SparkSession, table: String, verb: String,
+      cond: Column, set: Option[Map[String, Column]],
+      txnId: Option[String]): Long = {
     require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"delete on feed-enabled table $table: the append-only change " +
-        s"feed cannot represent a delete — enableCdcFeed($table) to " +
-        "capture deletes as typed rows, or remove " +
-        s"${feedDir(table)} to disable the feed")
+      s"$verb on feed-enabled table $table: the append-only change " +
+        s"feed cannot represent it — enableCdcFeed($table) to capture " +
+        s"typed rows, or remove ${feedDir(table)} to disable the feed")
     txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
     var committed = -1L
     while (committed < 0) {
+      if (snapshotOrFail(table).spec.mor) maintainDvIfHeavy(spark, table)
       val base = snapshotOrFail(table)
       txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      val affected = affectedOf(base)
-      if (affected.isEmpty) return base.version
-      val affectedPaths = affected.map(_.path)
-      // MOR-aware: pending delete sidecars apply to the scan, so a
-      // rewrite can never resurrect a merge-on-read-deleted row
-      val scan = morScan(spark, table, base, affected)
-      val scanRows = liveRowsOf(spark, table, base, affected)
-      val (newFiles, newRows) =
-        writeDataFiles(spark, table, base.spec, keep(scan))
-      auditStaged(table, newFiles)(newRows <= scanRows,
-        s"delete audit failed for $table: rewrite produced $newRows " +
-          s"rows from $scanRows — not committing")
-      val rows = base.rows - (scanRows - newRows)
-      val version = base.version + 1
-      val stamped = newFiles.map(_.copy(ver = version))
-      // sidecars whose every fenced file this rewrite replaced (morScan
-      // applied them) are pruned
-      val r = nextRec(base, "delete", rows, stamped, affectedPaths, Nil,
-        txnId, pruneDels = true)
-      if (tryCommit(table, r)) committed = version
+      val cols = base.schema.struct.fieldNames
+      set.foreach(_.keys.foreach(k => require(cols.contains(k),
+        s"$verb on $table: set column $k not in the table's schema " +
+          s"(${cols.mkString(", ")})")))
+      val kept =
+        if (base.files.isEmpty) Nil else dvPrune(spark, table, base, cond, verb)
+      if (kept.isEmpty) return base.version
+      val v =
+        if (base.spec.mor) dvCommit(spark, table, base, kept, verb, cond, set,
+          txnId)
+        else cowCommit(spark, table, base, kept, verb, cond, set, txnId)
+      if (v == base.version) return v
+      committed = v
     }
-    // typed-feed capture of the deleted rows; crash before the marker
-    // is healed by the next publish (same window as append's)
     if (feedEnabled(table)) publishFeed(spark, table)
     committed
+  }
+
+  /** `rowLevel`'s copy-on-write commit: rewrite the `kept` files with
+    * the matched rows dropped (delete) or replaced by their new images
+    * (update); every other file carries over BY REFERENCE (same path,
+    * never read, never copied) in a delta manifest, so the cost is
+    * O(affected files + manifest), not O(table). MOR-aware (`morScan`):
+    * pending sidecars apply to the rewrite, so it never resurrects a
+    * deleted row, and a sidecar whose every fenced file was replaced is
+    * pruned. Rows are audited against the metadata-derived live count
+    * (delete: written ≤ live; update: written = live). Returns the
+    * committed version, or −1 when the CAS lost (the rewrite is
+    * dropped). */
+  private def cowCommit(spark: SparkSession, table: String, base: Snapshot,
+      kept: Seq[FileEntry], verb: String, cond: Column,
+      set: Option[Map[String, Column]], txnId: Option[String]): Long = {
+    import org.apache.spark.sql.functions.{coalesce, lit, not}
+    val scan = morScan(spark, table, base, kept)
+    val hit = coalesce(cond, lit(false))
+    val out = set.fold(scan.where(not(hit)))(s =>
+      setImages(table, scan, scan.columns.toSeq, s, Some(hit)))
+    val scanRows = liveRowsOf(spark, table, base, kept)
+    // an update's write job audits every row it writes: the new images,
+    // and the untouched rows of the affected files (validated when they
+    // were written, so they pass)
+    val (newFiles, newRows) = writeDataFiles(spark, table, base.spec, out,
+      audits = set.fold(Seq.empty[StagedAudit])(_ =>
+        checkAudits(table, base.checks, verb)))
+    auditStaged(table, newFiles)(
+      if (set.isEmpty) newRows <= scanRows else newRows == scanRows,
+      s"$verb audit failed for $table: rewrite produced $newRows rows " +
+        s"from $scanRows — not committing")
+    // a delete that matched no row commits nothing
+    if (set.isEmpty && newRows == scanRows) {
+      dropStaged(table, newFiles); return base.version
+    }
+    val version = base.version + 1
+    val r = nextRec(base, verb, base.rows - (scanRows - newRows),
+      newFiles.map(_.copy(ver = version)), kept.map(_.path), Nil, txnId,
+      pruneDels = true)
+    if (tryCommit(table, r)) version
+    else { dropStaged(table, newFiles); -1L }
+  }
+
+  /** `rowLevel`'s merge-on-read commit, ZERO data-file rewrites: one
+    * DELETION-VECTOR sidecar of the matched rows' `(file, row_index)`
+    * pairs plus, for an update, their new images as ordinary data
+    * files; every base file carries over by reference, and reads drop
+    * the vectored positions with a codegen'd scan filter
+    * ([[graft.functions.DvContains]]). Positions are recorded off
+    * `_metadata.row_index` AT THE SCAN, below any pending sidecar's
+    * anti-join, so they address exactly the matched rows — rows that
+    * share any value update independently. The spec's
+    * `maxDvPositions` bounds the vector (it ships with read plans like
+    * a broadcast scalar); a match past it takes `cowCommit` with the
+    * same predicate — sound because `dvPrune` refused nondeterminism,
+    * so the rewrite re-evaluates exactly the counted set. Returns the
+    * committed version, the base version when nothing matches, or −1
+    * when the CAS lost (the orphaned sidecar is vacuumed). */
+  private def dvCommit(spark: SparkSession, table: String, base: Snapshot,
+      kept: Seq[FileEntry], verb: String, cond: Column,
+      set: Option[Map[String, Column]], txnId: Option[String]): Long = {
+    import org.apache.spark.sql.functions.col
+    val scan = morScan(spark, table, base, kept, pos = true)
+    val matched = scan.where(cond).cache()
+    try {
+      val cnt = matched.count()
+      if (cnt == 0) return base.version
+      val maxPositions = base.spec.maxDvPositions
+      if (cnt > maxPositions) {
+        logger.warn(s"$verb on $table: $cnt matched rows exceed " +
+          s"maxDvPositions ($maxPositions) — taking the copy-on-write " +
+          "commit")
+        return cowCommit(spark, table, base, kept, verb, cond, set, txnId)
+      }
+      val images = set.fold(Seq.empty[FileEntry]) { s =>
+        val dataCols = scan.columns.toSeq
+          .filterNot(c => c == GraftFileCol || c == GraftPosCol)
+        val (files, rows) = writeDataFiles(spark, table, base.spec,
+          setImages(table, matched, dataCols, s, None),
+          audits = checkAudits(table, base.checks, verb))
+        auditStaged(table, files)(rows == cnt,
+          s"$verb audit failed for $table: wrote $rows new images for " +
+            s"$cnt matched rows — not committing")
+        files
+      }
+      val (delFiles, _) = writeDataFiles(spark, table, dvSpec,
+        matched.select(col(GraftFileCol).as(DvFileField),
+          col(GraftPosCol).as(DvPosField)).coalesce(1))
+      val version = base.version + 1
+      val newDels = delFiles.map(f =>
+        DeleteEntry(f.copy(ver = version), DvKeyCol, version))
+      val rows = if (set.isEmpty) base.rows - cnt else base.rows
+      val r = nextRec(base, s"${verb}_dv", rows,
+        images.map(_.copy(ver = version)), Nil, newDels, txnId)
+      if (tryCommit(table, r)) version else -1L
+    } finally { matched.unpersist(); () }
+  }
+
+  /** An update's new images of `rows` under `set`, in ONE projection:
+    * every RHS reads the pre-update row (a chain of withColumn would
+    * feed a later expression an earlier one's output — the a/b swap
+    * bug). With `guard`, only the rows where it holds take the new
+    * values. A type change is refused before anything is written:
+    * when/otherwise coercion can silently widen a column (long + 0.5 →
+    * double), and the files would then disagree with the manifest's
+    * unchanged schema; an implicit cast back (0.5 as long = 0) would
+    * corrupt silently. */
+  private def setImages(table: String, rows: DataFrame,
+      dataCols: Seq[String], set: Map[String, Column],
+      guard: Option[Column]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, when}
+    val out = rows.select(dataCols.map(k => set.get(k)
+      .map(e => guard.fold(e)(g => when(g, e).otherwise(col(k))))
+      .getOrElse(col(k)).as(k)): _*)
+    rows.select(dataCols.map(col): _*).schema.fields.zip(out.schema.fields)
+      .foreach { case (o, n) => require(o.dataType == n.dataType,
+        s"update on $table: set expression for ${o.name} has type " +
+          s"${n.dataType.simpleString}, column is " +
+          s"${o.dataType.simpleString} — cast the expression explicitly " +
+          "(the manifest schema is not changed by update)") }
+    out
   }
 
   /** PREDICATE OVERWRITE (Delta's `replaceWhere` / Spark's
     * `df.writeTo(t).overwrite(cond)`): atomically DELETE every row
     * matching `cond` and INSERT `df`, in ONE commit — the recompute-
     * a-slice backfill shape ("replace day X with its corrected rows")
-    * that a deleteWhere + append pair can only approximate with a
+    * that a delete + append pair can only approximate with a
     * window where readers see neither-or-half. New rows are REQUIRED
     * to satisfy `cond` (checked against the already-written files,
     * one columnar scan of the new files only): without that, rows the
@@ -4697,252 +4837,6 @@ object TableLog {
       // failed manifest never referenced it
       else dropStaged(table, keptFiles)
     }
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
-  }
-
-  /** MERGE-ON-READ delete: remove every row whose `keyCol` equals a
-    * key in `keys`, with ZERO data-file rewrites — the commit writes
-    * only a small delete-key SIDECAR (parquet of the distinct keys)
-    * and a delta manifest referencing it; every data file carries over
-    * by reference, and reads apply the sidecar as an anti-join
-    * (`morScan`), version-fenced so rows appended AFTER the delete
-    * under the same key are untouched. This is the scattered-key
-    * complement to `deleteWhere`/`deleteWhereIn`'s copy-on-write: on
-    * an UNCLUSTERED 100 TB table a scattered-key COW delete overlaps
-    * nearly every file's [min,max] and rewrites the lot — here the
-    * write cost is O(deleted keys), independent of table size, and the
-    * read cost is one broadcast anti-join until a `compact()`/rewrite
-    * materializes the sidecar away. The commit still pays ONE
-    * key-column-only scan over stat-surviving files to count matched
-    * rows (the manifest's `rows` stays exact and audited) — columnar,
-    * no rewrite. Long and string keys prune alike (`keyPruneOf`).
-    * NULL keys never match; keys matching no row commit nothing (the
-    * orphan sidecar is vacuumed). On a TYPED (CDC) feed the deleted
-    * rows are captured as full typed rows (the capture reads them via
-    * the pre-delete snapshot); a PLAIN feed refuses. Returns the
-    * committed version. */
-  def deleteMor(spark: SparkSession, table: String, keyCol: String,
-      keys: DataFrame, txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.col
-    require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"deleteMor on feed-enabled table $table: the append-only change " +
-        s"feed cannot represent a delete — enableCdcFeed($table) to " +
-        "capture deletes as typed rows, or remove " +
-        s"${feedDir(table)} to disable the feed")
-    txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    val isString = keys.schema(keyCol).dataType ==
-      org.apache.spark.sql.types.StringType
-    val keyDf = keys.select(col(keyCol)).where(col(keyCol).isNotNull)
-      .distinct().cache()
-    try {
-      if (keyDf.isEmpty) return latestVersion(table)
-      // the sidecar carries its own key stats, so the publish-side CDC
-      // capture (and any future reader) can range-prune against it
-      val (delFiles, _) =
-        writeDataFiles(spark, table, keySpec(keyCol, isString), keyDf)
-      val affectedOf = keyPruneOf(spark, keyDf, keyCol, isString)
-      var committed = -1L
-      while (committed < 0) {
-        val base = snapshotOrFail(table)
-        txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-        val candidates = affectedOf(base)
-        // matched-row count: key column only (columnar), MOR-aware so
-        // an already-deleted key is not double-counted
-        val matched =
-          if (candidates.isEmpty) 0L
-          else morScan(spark, table, base, candidates)
-            .select(col(keyCol))
-            .join(keyDf, Seq(keyCol), "left_semi").count()
-        if (matched == 0) return base.version
-        val version = base.version + 1
-        val newDels = delFiles.map(f =>
-          DeleteEntry(f.copy(ver = version), keyCol, version))
-        val rows = base.rows - matched
-        val r = nextRec(base, "delete_mor", rows, Nil, Nil, newDels,
-          txnId)
-        if (tryCommit(table, r)) committed = version
-      }
-      // typed-feed capture of the deleted rows (CDC tables only)
-      if (feedEnabled(table)) publishFeed(spark, table)
-      committed
-    } finally { keyDf.unpersist(); () }
-  }
-
-  /** POSITIONAL merge-on-read delete — ANY deterministic predicate,
-    * ZERO data-file rewrites, NO key column required: the commit
-    * writes one DELETION-VECTOR sidecar of `(file, row_index)` pairs
-    * for the matched rows and a delta manifest referencing it; every
-    * data file carries over by reference, and reads drop the vectored
-    * positions with a codegen'd scan FILTER
-    * ([[graft.functions.DvContains]]) — no anti-join, no broadcast
-    * build, no cohort split. This completes the delete triangle:
-    * `deleteWhere`/`deleteWhereIn` (clustered predicates, COW),
-    * `deleteMor` (scattered KEYS, anti-join MOR), `deleteDv`
-    * (ARBITRARY predicates — `v % 2 = 0`, fractional equality,
-    * multi-column conjunctions — positional MOR). Exact SQL DELETE
-    * semantics: rows where the predicate is TRUE are deleted; FALSE
-    * and NULL keep. The predicate drives MANIFEST pruning through the
-    * same machinery as the declarative face (resolved ranges,
-    * IN-lists, bloom, z-box), so a clustered positional delete scans
-    * only overlapping files. The write spec's `maxDvPositions` bounds
-    * the vector (it ships with read plans like a broadcast scalar —
-    * default 2M positions ≈ 16 MB).
-    * Positions are recorded off `_metadata.row_index` AT THE SCAN,
-    * below any pending sidecar's anti-join, so they are exact
-    * whatever join strategy the MOR resolution picks. Matched rows
-    * are counted MOR-aware (already-deleted rows never recount), the
-    * manifest `rows` stays exact, CDC feeds capture the deleted rows
-    * as typed rows, and any full rewrite (`compact`/`morMaintain`)
-    * materializes the vector away. Returns the committed version
-    * (unchanged when nothing matches).
-    *
-    * Two scale guards beyond the per-commit cap: (1) a delete whose
-    * matched count exceeds `maxDvPositions` AUTO-FALLS-BACK to the
-    * copy-on-write rewrite (`deleteImpl` with the same predicate —
-    * sound because `dvPrune` already refused nondeterminism, so the
-    * rewrite's re-evaluation matches the counted set exactly). (2)
-    * the AGGREGATE pending deletion-vector weight is bounded: every
-    * DV-bearing read ships the union of all pending sidecars with the
-    * plan, and nothing else shrinks it across commits — so when the
-    * pending DV sidecar bytes exceed
-    * `spark.graft.rowLevel.maxPendingDvBytes` (default 64 MB ≈ 4
-    * max-width vectors; the bound the row-level path applies) this
-    * face materializes them away (`morMaintain(maxSidecars = 0)`)
-    * before committing its own. Both paths announce themselves in the
-    * log. */
-  def deleteDv(spark: SparkSession, table: String, cond: Column,
-      txnId: Option[String] = None,
-      statsCols: Seq[String] = Nil, strStatsCols: Seq[String] = Nil,
-      bloomStatsCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    // the stat lists are a CHECK against the table's spec only
-    checkDeclared(table, snapshotOrFail(table).spec,
-      WriteSpec(statsCols, strStatsCols, bloomStatsCols), "deleteDv")
-    require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"deleteDv on feed-enabled table $table: the append-only change " +
-        s"feed cannot represent a delete — enableCdcFeed($table) to " +
-        "capture deletes as typed rows, or remove " +
-        s"${feedDir(table)} to disable the feed")
-    txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    var committed = -1L
-    while (committed < 0) {
-      maintainDvIfHeavy(spark, table)
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      if (base.files.isEmpty) return base.version
-      val kept = dvPrune(spark, table, base, cond)
-      if (kept.isEmpty) return base.version
-      val matched = morScan(spark, table, base, kept, pos = true)
-        .where(cond)
-        .select(col(GraftFileCol).as(DvFileField),
-          col(GraftPosCol).as(DvPosField)).cache()
-      try {
-        val cnt = matched.count()
-        if (cnt == 0) return base.version
-        val maxPositions = base.spec.maxDvPositions
-        if (cnt > maxPositions) {
-          // over-cap bulk delete: step over the wall the planner can
-          // see past — run the SAME predicate as a copy-on-write
-          // rewrite of the pruned files. NULL predicate keeps, like
-          // SQL DELETE.
-          logger.warn(s"deleteDv on $table: $cnt matched rows exceed " +
-            s"maxPositions ($maxPositions) — falling back to the " +
-            "copy-on-write rewrite (deleteWhere path)")
-          return deleteImpl(spark, table,
-            b => dvPrune(spark, table, b, cond),
-            df => df.where(not(coalesce(cond, lit(false)))), txnId)
-        }
-        val (delFiles, _) =
-          writeDataFiles(spark, table, dvSpec, matched.coalesce(1))
-        val version = base.version + 1
-        val newDels = delFiles.map(f =>
-          DeleteEntry(f.copy(ver = version), DvKeyCol, version))
-        val rows = base.rows - cnt
-        val r = nextRec(base, "delete_dv", rows, Nil, Nil, newDels,
-          txnId)
-        if (tryCommit(table, r)) committed = version
-        // CAS loss: positions were computed against a stale snapshot —
-        // recompute everything; the orphaned sidecar is vacuumed
-      } finally { matched.unpersist(); () }
-    }
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
-  }
-
-  /** POSITIONAL merge-on-read update — `updateWhere`'s set-clause
-    * contract under ANY deterministic predicate, ZERO rewrites, NO
-    * key column: matched rows' NEW IMAGES commit as ordinary data
-    * files and their old positions as a deletion-vector sidecar.
-    * Because positions address rows EXACTLY, the key-based faces'
-    * constraints vanish: no NULL-key refusal, no straddled-shared-key
-    * audit — rows sharing any value update independently. Row count
-    * is invariant and audited; CHECK constraints re-validate the new
-    * images; CDC feeds capture old images as deletes + new images as
-    * inserts. Returns the committed version (unchanged when nothing
-    * matches). */
-  def updateDv(spark: SparkSession, table: String, cond: Column,
-      set: Map[String, Column], txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.col
-    require(set.nonEmpty, "updateDv: empty set clause")
-    require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"updateDv on feed-enabled table $table: the append-only " +
-        "change feed cannot represent an update — " +
-        s"enableCdcFeed($table) to capture it as typed rows, or remove " +
-        s"${feedDir(table)} to disable the feed")
-    txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    var committed = -1L
-    while (committed < 0) {
-      maintainDvIfHeavy(spark, table)
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      if (base.files.isEmpty) return base.version
-      val kept = dvPrune(spark, table, base, cond)
-      if (kept.isEmpty) return base.version
-      val scan = morScan(spark, table, base, kept, pos = true)
-      val dataCols = scan.columns.toSeq
-        .filterNot(c => c == GraftFileCol || c == GraftPosCol)
-      set.keys.foreach(k => require(dataCols.contains(k),
-        s"updateDv: set column $k not in $table's schema"))
-      val matched = scan.where(cond).cache()
-      try {
-        val cnt = matched.count()
-        if (cnt == 0) return base.version
-        val maxPositions = base.spec.maxDvPositions
-        require(cnt <= maxPositions,
-          s"updateDv on $table: $cnt matched rows exceed maxPositions " +
-            s"($maxPositions) — use updateWhere (copy-on-write) or " +
-            "updateMor (key sidecar) for bulk updates, or raise the bound")
-        // new images: ONE projection off the matched scan — every set
-        // RHS reads the pre-update row (the updateWhere contract)
-        val updated = matched.select(dataCols.map(k =>
-          set.get(k).map(_.as(k)).getOrElse(col(k))): _*)
-        scan.select(dataCols.map(col): _*).schema.fields
-          .zip(updated.schema.fields).foreach {
-            case (o, n) => require(o.dataType == n.dataType,
-              s"updateDv: set expression for ${o.name} has type " +
-                s"${n.dataType.simpleString}, column is " +
-                s"${o.dataType.simpleString} — cast the expression " +
-                "explicitly (the manifest schema is not changed by update)")
-          }
-        val (newFiles, newRows) = writeDataFiles(spark, table, base.spec,
-          updated, audits = checkAudits(table, base.checks, "updateDv"))
-        auditStaged(table, newFiles)(newRows == cnt,
-          s"updateDv audit failed for $table: wrote $newRows new " +
-            s"images for $cnt matched rows — not committing")
-        val (delFiles, _) = writeDataFiles(spark, table, dvSpec,
-          matched.select(col(GraftFileCol).as(DvFileField),
-            col(GraftPosCol).as(DvPosField)).coalesce(1))
-        val version = base.version + 1
-        val stamped = newFiles.map(_.copy(ver = version))
-        val newDels = delFiles.map(f =>
-          DeleteEntry(f.copy(ver = version), DvKeyCol, version))
-        val r = nextRec(base, "update_dv", base.rows, stamped, Nil, newDels,
-          txnId)
-        if (tryCommit(table, r)) committed = version
-      } finally { matched.unpersist(); () }
-    }
-    // typed-feed capture: old images as deletes + new images as inserts
     if (feedEnabled(table)) publishFeed(spark, table)
     committed
   }
@@ -5249,11 +5143,9 @@ object TableLog {
     // Byte-gated: position lists are small by construction (the
     // positional faces cap positions), so past the gate keep the
     // shards and let the weight policy decide.
-    val foldGate = spark.conf
-      .getOption("spark.graft.rowLevel.foldDvShardBytes")
-      .map(_.toLong).getOrElse(32L << 20)
     val dvCommit =
-      if (dvEntries.size > 1 && dvEntries.map(_.bytes).sum <= foldGate) {
+      if (dvEntries.size > 1 &&
+          dvEntries.map(_.bytes).sum <= FoldDvShardBytes) {
         import org.apache.spark.sql.functions.col
         val pairs = spark.read.schema(dvPairSchema).parquet(
           dvEntries.map(e => s"$table/${e.path}"): _*)
@@ -5310,6 +5202,10 @@ object TableLog {
     committed
   }
 
+  /** `writeDeltaCommit`'s fold gate: the per-task shards of one
+    * statement fold into one sidecar up to this many bytes. */
+  private val FoldDvShardBytes = 32L << 20
+
   /** The positional faces' aggregate-weight guard: every DV-bearing
     * read collects the UNION of all pending deletion-vector sidecars
     * to the driver and ships it with the plan (`loadDv` +
@@ -5356,14 +5252,14 @@ object TableLog {
     }
   }
 
-  /** The positional faces' shared front half: resolve the user
-    * predicate once against the snapshot scan, refuse nondeterminism
-    * (the matched set must be the set the read-side filter hides), and
-    * manifest-prune with the SAME machinery the declarative face uses
-    * — a clustered positional delete touches only overlapping files. */
+  /** The row-level route's front half (and CALL replace_where's
+    * prune): resolve the user predicate once against the snapshot scan,
+    * refuse nondeterminism (the matched set must be the set the commit
+    * removes), and manifest-prune with the SAME machinery the
+    * declarative face uses — a clustered predicate touches only
+    * overlapping files. */
   private[graft] def dvPrune(spark: SparkSession, table: String,
-      base: Snapshot, cond: Column,
-      face: String = "positional DML"): Seq[FileEntry] = {
+      base: Snapshot, cond: Column, face: String): Seq[FileEntry] = {
     val probe = morScan(spark, table, base, base.files, pos = true)
       .where(cond)
     val resolved = probe.queryExecution.analyzed.collectFirst {
@@ -5375,125 +5271,29 @@ object TableLog {
         "— a nondeterministic predicate would delete different rows " +
         "than it matched"))
     resolved match {
-      case Some(c) => graft.plans.PruneLogScan.keptFilesOf(base, c)
+      case Some(c) => graft.plans.PruneLogScan.keptFilesOf(base, prunable(c))
       case None => base.files
     }
   }
 
-  /** MERGE-ON-READ update — `updateWhere` semantics (same predicate,
-    * same one-projection set-clause contract) with ZERO data-file
-    * rewrites: the commit writes only the matched rows' NEW IMAGES as
-    * ordinary data files plus a delete-key SIDECAR of their `keyCol`
-    * values; every base file carries over by reference. The sidecar
-    * (version V) fences only files with ver < V, and the new images
-    * are stamped V — so reads see old images vanish and new images
-    * appear atomically, and rows appended later under the same key
-    * are untouched. This is the scattered-update complement to
-    * `updateWhere`'s copy-on-write: on an UNCLUSTERED 100 TB table a
-    * scattered predicate overlaps nearly every file's [min,max] and
-    * COW rewrites the lot — here the write cost is O(matched rows),
-    * independent of table size, and `compact()`/any full rewrite
-    * materializes the sidecar away. Unlike the COW faces, key-sharing
-    * rows must match the predicate TOGETHER (audited: a key whose
-    * rows straddle the predicate boundary would lose its non-matching
-    * rows to the sidecar — refused before committing). `set` may
-    * rewrite `keyCol` itself (old key deleted, new image inserted
-    * under the new key — an upsert-style move). Row count is
-    * invariant and audited; CHECK constraints re-validate the new
-    * images; CDC feeds capture old images as deletes + new images as
-    * inserts (same per-key resolution as a COW update). Returns the
-    * committed version (unchanged if nothing matches). */
-  def updateMor(spark: SparkSession, table: String, keyCol: String,
-      c: String, lo: Long, hi: Long, set: Map[String, Column],
-      txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    require(set.nonEmpty, "updateMor: empty set clause")
-    require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"updateMor on feed-enabled table $table: the append-only " +
-        "change feed cannot represent an update — " +
-        s"enableCdcFeed($table) to capture it as typed rows, or remove " +
-        s"${feedDir(table)} to disable the feed")
-    txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    val cond = coalesce(col(c).cast("long").between(lo, hi), lit(false))
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      val affected = prunedFilesOf(base, c, lo, hi)
-      if (affected.isEmpty) return base.version
-      val scan = morScan(spark, table, base, affected)
-      set.keys.foreach(k => require(scan.columns.contains(k),
-        s"updateMor: set column $k not in $table's schema"))
-      require(scan.columns.contains(keyCol),
-        s"updateMor: key column $keyCol not in $table's schema")
-      val matched = scan.where(cond).cache()
-      try {
-        val mst = matched.agg(
-          org.apache.spark.sql.functions.count(lit(1)),
-          org.apache.spark.sql.functions.count(col(keyCol))).head()
-        val matchedRows = mst.getLong(0)
-        if (matchedRows == 0) return base.version
-        // a NULL key is unaddressable by the sidecar anti-join: its
-        // old image would never vanish while its new image appears
-        require(mst.getLong(1) == matchedRows,
-          s"updateMor on $table: ${matchedRows - mst.getLong(1)} " +
-            s"matched row(s) have a NULL $keyCol — a MOR update " +
-            "cannot address them; use updateWhere")
-        val isString = scan.schema(keyCol).dataType ==
-          org.apache.spark.sql.types.StringType
-        val keyDf = matched.select(col(keyCol)).distinct()
-        // COVERAGE audit: the sidecar deletes EVERY row carrying a
-        // matched key from every fenced file — if any key-sharing row
-        // does NOT match the predicate, committing would silently
-        // lose it. One key-column-only scan over the key-pruned
-        // candidates, same cost class as deleteMor's audit.
-        val candidates = keyPruneOf(spark, keyDf, keyCol, isString)(base)
-        val withKeys = morScan(spark, table, base, candidates)
-          .select(col(keyCol))
-          .join(keyDf, Seq(keyCol), "left_semi").count()
-        require(withKeys == matchedRows,
-          s"updateMor on $table: ${withKeys - matchedRows} row(s) " +
-            s"share a matched $keyCol but do not match the predicate " +
-            "— a MOR update would lose them; widen the predicate or " +
-            "use updateWhere")
-        // new images: ONE projection off the matched scan — every set
-        // RHS reads the pre-update row (the updateWhere contract)
-        val updated = matched.select(scan.columns.map(k =>
-          set.get(k).map(_.as(k)).getOrElse(col(k))): _*)
-        scan.schema.fields.zip(updated.schema.fields).foreach {
-          case (o, n) => require(o.dataType == n.dataType,
-            s"updateMor: set expression for ${o.name} has type " +
-              s"${n.dataType.simpleString}, column is " +
-              s"${o.dataType.simpleString} — cast the expression " +
-              "explicitly (the manifest schema is not changed by update)")
-        }
-        val (newFiles, newRows) = writeDataFiles(spark, table, base.spec,
-          updated, audits = checkAudits(table, base.checks, "updateMor"))
-        auditStaged(table, newFiles)(newRows == matchedRows,
-          s"updateMor audit failed for $table: wrote $newRows new " +
-            s"images for $matchedRows matched rows — not committing")
-        val (delFiles, _) =
-          writeDataFiles(spark, table, keySpec(keyCol, isString), keyDf)
-        val version = base.version + 1
-        val stamped = newFiles.map(_.copy(ver = version))
-        val newDels = delFiles.map(f =>
-          DeleteEntry(f.copy(ver = version), keyCol, version))
-        val r = nextRec(base, "update_mor", base.rows, stamped, Nil, newDels,
-          txnId)
-        if (tryCommit(table, r)) committed = version
-        // CAS loss: re-read the base and redo; orphaned files are
-        // invisible garbage until vacuum
-      } finally { matched.unpersist(); () }
+  /** An analyzed predicate in the forms the pruner reads, as the
+    * optimizer would leave them: runtime-replaceable shapes (`BETWEEN`)
+    * as their replacements, common-expression `With` blocks inlined. */
+  private def prunable(c: org.apache.spark.sql.catalyst.expressions.Expression)
+      : org.apache.spark.sql.catalyst.expressions.Expression = {
+    import org.apache.spark.sql.catalyst.expressions._
+    c.transformDown {
+      case r: RuntimeReplaceable => prunable(r.replacement)
+      case w: With =>
+        val defs = w.defs.map(d => d.id -> d.child).toMap
+        prunable(w.child.transform { case r: CommonExpressionRef => defs(r.id) })
     }
-    // typed-feed capture: old images as deletes + new images as inserts
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
   }
 
-  /** The MERGE-ON-READ upsert commit, taken by a `morKey` table
+  /** The MERGE-ON-READ upsert commit, taken by a `mor` table
     * (`upsert`): ZERO data-file rewrites — `ins` commits as ordinary
     * data files plus a delete-key sidecar of `touchedKeys`, written
-    * ONCE (base-independent, like deleteMor's sidecar); matched
+    * ONCE (base-independent); matched
     * snapshot rows vanish behind the version fence, unmatched keys'
     * sidecar entries are harmless no-ops, and every base file carries
     * over by reference. Write cost is O(source), independent of table
@@ -5546,92 +5346,10 @@ object TableLog {
     committed
   }
 
-  /** Stats-pruned COPY-ON-WRITE update: for every row where `c` (cast
-    * to long) falls in `[lo, hi]`, replace the columns named in `set`
-    * with their expressions — every RHS evaluated against the OLD row
-    * (standard SQL UPDATE semantics: all set clauses see the
-    * pre-update image, so `"a" -> col("b"), "b" -> col("a")` swaps,
-    * and the predicate column itself may appear in `set` without
-    * re-evaluating the condition against its new value; the whole
-    * update is ONE projection over the scan, never a chain) —
-    * rewriting ONLY the files whose manifest stat range
-    * overlaps the predicate; every other file carries over BY
-    * REFERENCE in a delta manifest, exactly like `deleteWhere`. Rows
-    * with NULL `c` never match and pass through unchanged. The row
-    * count is invariant and audited both per-rewrite (out = in) and in
-    * total. Update cost is O(affected files + manifest), not O(table).
-    * On a TYPED (CDC) feed the update is captured as typed rows (old
-    * image deletes + new image inserts, via the symmetric-difference
-    * capture — an update whose expressions leave a matched row
-    * bit-identical publishes nothing for it); a PLAIN feed refuses.
-    * Returns the committed version (unchanged current version if no
-    * file can contain a match). */
-  def updateWhere(spark: SparkSession, table: String, c: String,
-      lo: Long, hi: Long, set: Map[String, Column],
-      txnId: Option[String] = None): Long = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
-    require(set.nonEmpty, "updateWhere: empty set clause")
-    require(!feedEnabled(table) || cdcFeedEnabled(table),
-      s"updateWhere on feed-enabled table $table: the append-only " +
-        "change feed cannot represent an update — " +
-        s"enableCdcFeed($table) to capture it as typed rows, or remove " +
-        s"${feedDir(table)} to disable the feed")
-    txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-    val cond = coalesce(col(c).cast("long").between(lo, hi), lit(false))
-    var committed = -1L
-    while (committed < 0) {
-      val base = snapshotOrFail(table)
-      txnId.flatMap(committedTxnVersion(table, _)).foreach(return _)
-      val affected = prunedFilesOf(base, c, lo, hi)
-      if (affected.isEmpty) return base.version
-      val affectedPaths = affected.map(_.path)
-      val scan = morScan(spark, table, base, affected)
-      set.keys.foreach(k => require(scan.columns.contains(k),
-        s"updateWhere: set column $k not in $table's schema"))
-      val scanRows = liveRowsOf(spark, table, base, affected)
-      // ONE projection off the unmodified scan: every set RHS reads the
-      // pre-update row (a foldLeft of withColumn would feed each later
-      // expression the PREVIOUS expression's output — the a/b swap
-      // bug, Map-iteration-order nondeterministic past 4 entries)
-      val updated = scan.select(scan.columns.map(k =>
-        set.get(k).map(e => when(cond, e).otherwise(col(k)))
-          .getOrElse(col(k)).as(k)): _*)
-      // schema audit: when/otherwise type coercion can silently widen
-      // a column (long + lit(0.5) → double) — the data files would
-      // then disagree with the manifest's unchanged schema and
-      // fail only at a LATER read. Refuse before writing, not cast:
-      // an implicit cast back (0.5 as long = 0) corrupts silently.
-      scan.schema.fields.zip(updated.schema.fields).foreach {
-        case (o, n) => require(o.dataType == n.dataType,
-          s"updateWhere: set expression for ${o.name} has type " +
-            s"${n.dataType.simpleString}, column is " +
-            s"${o.dataType.simpleString} — cast the expression " +
-            "explicitly (the manifest schema is not changed by update)")
-      }
-      // the write job audits every row it writes: the updated images,
-      // and the untouched rows of the affected files (validated when
-      // they were written, so they pass)
-      val (newFiles, newRows) = writeDataFiles(spark, table, base.spec,
-        updated, audits = checkAudits(table, base.checks, "updateWhere"))
-      auditStaged(table, newFiles)(newRows == scanRows,
-        s"update audit failed for $table: rewrite produced $newRows " +
-          s"rows from $scanRows — not committing")
-      val version = base.version + 1
-      val stamped = newFiles.map(_.copy(ver = version))
-      // mirror delete's checkpoint cadence so delta chains stay bounded
-      val r = nextRec(base, "update", base.rows, stamped, affectedPaths, Nil,
-        txnId)
-      if (tryCommit(table, r)) committed = version
-    }
-    // typed-feed capture of the update's old/new images
-    if (feedEnabled(table)) publishFeed(spark, table)
-    committed
-  }
-
   /** Latest-wins upsert through the log on the key tuple `keyCols`:
     * snapshot rows whose key matches a source row are replaced, new
     * keys appended, in ONE commit the table's write spec picks
-    * (`upsert`): the key-sidecar MERGE-ON-READ commit on a `morKey`
+    * (`upsert`): the key-sidecar MERGE-ON-READ commit on a `mor`
     * table with a one-column key, else the stats-pruned COPY-ON-WRITE
     * commit, which rewrites only the files whose stats can hold a
     * source key and carries every other file BY REFERENCE (same path,
@@ -5677,14 +5395,14 @@ object TableLog {
   }
 
   /** The upsert commit the table's write spec picks: the key-sidecar
-    * commit (`morUpsertCore`) when the spec declares `morKey` and the
-    * upsert has exactly one key column, the copy-on-write commit
+    * commit (`morUpsertCore`) when the spec's `rowLevelMode` is `mor`
+    * and the upsert has exactly one key column, the copy-on-write commit
     * (`cowApplyCore`) otherwise. */
   private def upsert(spark: SparkSession, table: String,
       inserts: DataFrame, insRows: Long, touchedKeys: DataFrame,
       keyCols: Seq[String], what: String, txnId: Option[String]): Long = {
     val start = snapshotOrFail(table)
-    if (start.spec.morKey.isDefined && keyCols.size == 1)
+    if (start.spec.mor && keyCols.size == 1)
       morUpsertCore(spark, table, start, inserts, insRows, touchedKeys,
         keyCols.head, what, txnId)
     else cowApplyCore(spark, table, start, inserts, insRows, touchedKeys,
@@ -5705,7 +5423,7 @@ object TableLog {
     * one key are refused (ambiguous upsert — bronze appended/merged the
     * same key twice in one commit), tied deletes are fine (every
     * deleted copy was captured). The commit is `mergeUpsert`'s, picked
-    * the same way by the table's write spec: a `morKey` silver table
+    * the same way by the table's write spec: a `mor` silver table
     * commits the winning inserts plus a sidecar of ALL touched keys,
     * zero silver rewrites (pair it with a periodic
     * `compactSmall`/`compact` maintenance tick); any other rewrites
@@ -5791,7 +5509,7 @@ object TableLog {
     * `<streamId>#<batchId>` — exactly-once across crash-replays, one
     * commit per batch, picked by the silver table's write spec
     * (`applyCdc`). `autoMorSidecars` retires the key sidecars a
-    * `morKey` silver table accumulates, once per batch. */
+    * `mor` silver table accumulates, once per batch. */
   def cdcApplyStream(spark: SparkSession, bronze: String, silver: String,
       keyCol: String, streamId: String, checkpoint: Option[String] = None,
       autoMorSidecars: Option[Int] = None): Unit =
@@ -5871,7 +5589,7 @@ object TableLog {
   }
 
   /** The candidate-file prune on one key column, shared by the upsert
-    * commits (`keyPrune`), `deleteMor` and `updateMor`: the EXACT
+    * commits (`keyPrune`): the EXACT
     * sorted key set up to 100k distinct keys (~800 KB driver memory;
     * per-file overlap by binary search), so a bimodal source — a
     * narrow update band plus inserts past the key domain, the

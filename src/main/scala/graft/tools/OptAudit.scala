@@ -100,6 +100,12 @@ object OptAudit {
         case (k, None) => s.conf.unset(k)
       }
     }
+    // a pending KEY sidecar, built the way production builds one: a
+    // CDC batch of deletes applied onto a `mor` table
+    def keyDelete(t: String, keys: DataFrame): Long =
+      TableLog.applyCdc(spark, t, keys
+        .withColumn(TableLog.changeTypeCol, lit("delete"))
+        .withColumn(TableLog.changeVersionCol, lit(1L)), "k")
     val bloomConfs = Seq(
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
@@ -146,14 +152,13 @@ object OptAudit {
         when($"id" % 10 < 7, lit(42L)).otherwise($"id").as("k"),
         xxhash64($"id").as("v")).repartition(16,
         ($"id" % 16).cast("int")),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     // keys ≡ 7 (mod 10) EXIST in the table (non-hot rows keep k = id
-    // with id % 10 ∈ {7,8,9}) — deleteMor commits no sidecar when
-    // nothing matches, so the key set must really hit rows
-    val delVer = TableLog.deleteMor(spark, skewLog, "k",
+    // with id % 10 ∈ {7,8,9}), so the key set really hits rows
+    val delVer = keyDelete(skewLog,
       spark.range(4000).select(($"id" * 700 + 7).as("k")))
     require(TableLog.snapshot(skewLog).get.dels.nonEmpty,
-      s"skew probe: deleteMor v$delVer committed no sidecar")
+      s"skew probe: v$delVer committed no sidecar")
     var (bSkewed, bCount, bJoin) = (0, -1L, "none")
     withConfs(spark,
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -344,7 +349,14 @@ object OptAudit {
       // many chunks, so the probe must too.
       val delKeys = spark.range(100000)
         .select((lit(n) - 3L - $"id" * 10L).as("k")) // ≡ 7 (mod 10)
-      TableLog.deleteMor(spark, s"$tmp/wh/oa/rl_skew", "k", delKeys)
+      // the sidecar is a `mor` table's form; the probe then runs the
+      // group-based (`cow`) route over it
+      val rl = s"$tmp/wh/oa/rl_skew"
+      def mode(m: String) = TableLog.setWriteSpec(rl,
+        TableLog.writeSpec(rl).copy(rowLevelMode = m))
+      mode(TableLog.Mor)
+      keyDelete(rl, delKeys)
+      mode(TableLog.Cow)
       require(TableLog.snapshot(s"$tmp/wh/oa/rl_skew").get
         .dels.nonEmpty, "d3: sidecar must exist")
       // CONTROL: the same cohort anti-join (fenced file ⟕̸ sidecar

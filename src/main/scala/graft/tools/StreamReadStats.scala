@@ -98,7 +98,9 @@ object StreamReadStats {
     // share; the data STREAM never sees vectors — it refuses
     // row-changing commits). Timed as two counted morScans, min.
     val tDv = mkTable("dvt")
-    TableLog.deleteDv(spark, tDv, col("k") % 100 === 0)
+    TableLog.setWriteSpec(tDv,
+      TableLog.writeSpec(tDv).copy(rowLevelMode = TableLog.Mor))
+    TableLog.delete(spark, tDv, col("k") % 100 === 0)
     val dvLive = n - (n + 99) / 100
     val secDv = (1 to 2).map { _ =>
       val t0 = System.nanoTime()

@@ -143,14 +143,14 @@ class CatalogSpec extends SparkSpec {
     val wh = warehouse
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $CAT.mor")
     spark.sql(s"CREATE TABLE $CAT.mor.t (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('statsCols' = 'k', 'morKey' = 'k')")
+      "TBLPROPERTIES ('statsCols' = 'k', 'rowLevelMode' = 'mor')")
     val path = s"$wh/mor/t"
     spark.sql(s"INSERT INTO $CAT.mor.t SELECT id, id FROM range(100)")
     Thread.sleep(20)
     val cut = java.time.Instant.now()
     Thread.sleep(20)
     // zero-rewrite MOR update through the Scala face on the SAME table
-    TableLog.updateMor(spark, path, "k", "k", 10, 19,
+    TableLog.update(spark, path, col("k").between(10, 19),
       Map("v" -> lit(-1L)))
     val got = spark.sql(
       s"SELECT count(*) AS n FROM $CAT.mor.t WHERE v = -1").as[Long].head()
@@ -244,8 +244,9 @@ class CatalogSpec extends SparkSpec {
       .as[Long].head() == -5)
     assert(spark.sql(s"SELECT v FROM $CAT.dml.t WHERE k = 5000")
       .as[Long].head() == -6)
-    // a non-range predicate on a catalog target executes POSITIONALLY:
-    // zero-rewrite deletion-vector commit, exact SQL semantics
+    // a non-range predicate on a catalog target executes with exact
+    // SQL semantics; this default (cow) table takes the copy-on-write
+    // commit and keeps no deletion vector
     val nB = spark.sql(s"SELECT count(*) AS n FROM $CAT.dml.t")
       .as[Long].head()
     val expDel = spark.sql(
@@ -255,8 +256,9 @@ class CatalogSpec extends SparkSpec {
     TableLog.sql(spark, s"DELETE FROM $CAT.dml.t WHERE v % 2 = 0")
     assert(spark.sql(s"SELECT count(*) AS n FROM $CAT.dml.t")
       .as[Long].head() == nB - expDel)
-    assert(TableLog.snapshot(path).get.files.map(_.path) == fB,
-      "a positional delete must rewrite no data file")
+    assert(!TableLog.snapshot(path).get.files.map(_.path).exists(fB.toSet),
+      "a cow delete rewrites every file the predicate keeps")
+    assert(TableLog.snapshot(path).get.dels.isEmpty)
 
     // CALL procedures accept the dotted identifier as the table arg
     val vBefore = TableLog.latestVersion(path)
@@ -276,14 +278,14 @@ class CatalogSpec extends SparkSpec {
 
     // MOR routing from table properties: zero base-file rewrites
     spark.sql(s"CREATE TABLE $CAT.dml.m (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('statsCols' = 'k', 'morKey' = 'k')")
+      "TBLPROPERTIES ('statsCols' = 'k', 'rowLevelMode' = 'mor')")
     spark.sql(s"INSERT INTO $CAT.dml.m SELECT id, id FROM range(100)")
     val mPath = s"$wh/dml/m"
     val baseFiles = TableLog.snapshot(mPath).get.files.map(_.path).toSet
     TableLog.sql(spark, s"UPDATE $CAT.dml.m SET v = -1 WHERE k = 7")
     val after = TableLog.snapshot(mPath).get
     assert(baseFiles.subsetOf(after.files.map(_.path).toSet),
-      "morKey property must route UPDATE to the zero-rewrite MOR face")
+      "rowLevelMode property must route UPDATE to the zero-rewrite MOR commit")
     assert(after.dels.nonEmpty)
     assert(spark.sql(s"SELECT v FROM $CAT.dml.m WHERE k = 7")
       .as[Long].head() == -1)
@@ -340,7 +342,7 @@ class CatalogSpec extends SparkSpec {
     // in the right place). Updated rows carry the update's version;
     // untouched rows keep their original commit.
     spark.sql(s"CREATE TABLE $CAT.meta.m (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('statsCols' = 'k', 'morKey' = 'k')")
+      "TBLPROPERTIES ('statsCols' = 'k', 'rowLevelMode' = 'mor')")
     spark.sql(s"INSERT INTO $CAT.meta.m SELECT id, id FROM range(100)")
     TableLog.sql(spark, s"UPDATE $CAT.meta.m SET v = -1 " +
       "WHERE k BETWEEN 7 AND 9")
@@ -477,7 +479,7 @@ class CatalogSpec extends SparkSpec {
       assert(silverCount() == 5, "compaction must not re-deliver rows")
     } finally q3.stop()
     // ROW-CHANGING commit refuses with guidance...
-    TableLog.deleteWhere(spark, bronze, "k", 1, 1)
+    TableLog.delete(spark, bronze, col("k").between(1, 1))
     spark.sql(s"INSERT INTO $CAT.sread.bronze VALUES (6, 60)")
     val q4 = mkQuery()
     val e = intercept[Exception] {
@@ -540,7 +542,7 @@ class CatalogSpec extends SparkSpec {
     TableLog.enableCdcFeed(path)
     spark.sql(s"INSERT INTO $CAT.cdcs.t VALUES (1, 10), (2, 20)")
     spark.sql(s"INSERT INTO $CAT.cdcs.t VALUES (3, 30)")
-    TableLog.deleteMor(spark, path, "k", Seq(2L).toDF("k"))
+    TableLog.delete(spark, path, col("k") === 2L)
     // batch: the whole published feed as a read-only table
     val batch = spark.sql(s"SELECT _change_type, count(*) AS n " +
       s"FROM $CAT.cdcs.t__changes GROUP BY _change_type ORDER BY 1")
@@ -594,7 +596,7 @@ class CatalogSpec extends SparkSpec {
     val wh = warehouse
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $CAT.posm")
     spark.sql(s"CREATE TABLE $CAT.posm.t (k BIGINT, v BIGINT) " +
-      "TBLPROPERTIES ('statsCols' = 'k')")
+      "TBLPROPERTIES ('statsCols' = 'k', 'rowLevelMode' = 'mor')")
     val path = s"$wh/posm/t"
     TableLog.append(spark, path,
       spark.range(100).select($"id".as("k"), ($"id" % 9).as("v"))
@@ -614,7 +616,7 @@ class CatalogSpec extends SparkSpec {
       .as[(Long, String, Long)].collect().toSet
     // a positional delete removes rows WITHOUT moving survivors:
     // their (_file,_pos) identities are untouched
-    TableLog.deleteDv(spark, path,
+    TableLog.delete(spark, path,
       org.apache.spark.sql.functions.col("k") % 10 === 3)
     val after = spark.sql(
       s"SELECT k, _file, _pos FROM $CAT.posm.t")
@@ -857,10 +859,11 @@ class CatalogSpec extends SparkSpec {
       spark.range(i * 1000L, (i + 1) * 1000L)
         .select($"id".as("k"), ($"id" % 10).as("v")).coalesce(1),
       statsCols = Seq("k")))
-    // a vector confined to file 0, via the engine face (the table's
-    // rowLevelMode stays 'cow' so vanilla DML takes ReplaceData)
-    TableLog.deleteDv(spark, path,
-      col("k") < 1000 && col("k") % 100 === 7) // 10 rows
+    // a vector confined to file 0, via the engine face under `mor`
+    // (the table's own rowLevelMode is 'cow', so vanilla DML takes
+    // ReplaceData)
+    underMode(path, TableLog.Mor)(TableLog.delete(spark, path,
+      col("k") < 1000 && col("k") % 100 === 7)) // 10 rows
     assert(TableLog.snapshot(path).get.dels.nonEmpty)
     assert(TableLog.snapshot(path).get.rows == 1990)
     // a straddling vanilla DELETE rewrites BOTH files (not exact
@@ -1059,8 +1062,8 @@ class CatalogSpec extends SparkSpec {
         .repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
     // a positional MOR delete leaves a pending vector over file 1
-    TableLog.deleteDv(spark, path,
-      org.apache.spark.sql.functions.col("k") % 100 === 7)
+    underMode(path, TableLog.Mor)(TableLog.delete(spark, path,
+      org.apache.spark.sql.functions.col("k") % 100 === 7))
     assert(TableLog.snapshot(path).get.dels.nonEmpty)
     assert(TableLog.snapshot(path).get.rows == 1980)
     // the group rewrite scans THROUGH the vector: k=107 is already
@@ -1091,8 +1094,7 @@ class CatalogSpec extends SparkSpec {
     // KEY sidecars (anti-join MOR) SELF-HEAL: the statement runs a
     // gated morMaintain (materializing the pending key AND positional
     // sidecars) and then lands against the maintained snapshot
-    TableLog.deleteMor(spark, path, "k",
-      Seq(300L).toDF("k"))
+    underMode(path, TableLog.Mor)(keyDelete(path, "k", Seq(300L).toDF("k")))
     spark.sql(s"DELETE FROM $CAT.rlp.t WHERE k = 400")
     val s2 = TableLog.snapshot(path).get
     assert(s2.dels.isEmpty,
@@ -1293,7 +1295,7 @@ class CatalogSpec extends SparkSpec {
       "ORDER BY k").as[(Long, String)].collect().toSeq ==
       Seq((1L, "insert"), (2L, "insert")))
     // a COW delete (typed capture) + another insert land mid-stream
-    TableLog.deleteWhere(spark, path, "k", 1L, 1L)          // v3
+    TableLog.delete(spark, path, col("k").between(1L, 1L))          // v3
     spark.sql(s"INSERT INTO $CAT.rcf.b VALUES (3, 30)")     // v4
     drain() // RESTART from the checkpoint: exactly the unseen versions
     val afterTwo = spark.sql(s"SELECT _change_type, k FROM $CAT.rcf.s " +
@@ -1408,7 +1410,7 @@ class CatalogSpec extends SparkSpec {
     TableLog.enableCdcFeed(path)
     spark.sql(s"INSERT INTO $CAT.rcb.t VALUES (1, 10), (2, 20)") // v2
     TableLog.tagVersion(path, "wave1", 2L)
-    TableLog.deleteWhere(spark, path, "k", 1L, 1L)              // v3
+    TableLog.delete(spark, path, col("k").between(1L, 1L))              // v3
     spark.sql(s"INSERT INTO $CAT.rcb.t VALUES (3, 30)")         // v4
     def rows(opts: (String, String)*): Seq[(String, Long, Long)] = {
       var r = spark.read
@@ -1611,7 +1613,7 @@ class CatalogSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq.sortBy(_._1) ==
       Seq((1L, "insert"), (2L, "insert")))
     // a typed delete + an insert land mid-stream
-    TableLog.deleteWhere(spark, path, "k", 1L, 1L)          // v3
+    TableLog.delete(spark, path, col("k").between(1L, 1L))          // v3
     spark.sql(s"INSERT INTO $CAT.rcv.b VALUES (3, 30)")     // v4
     drain() // RESTART from the checkpoint: exactly the unseen versions
     val afterTwo = spark.read.parquet(out)
@@ -1802,41 +1804,41 @@ class CatalogSpec extends SparkSpec {
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $CAT.spec")
     spark.sql(s"CREATE TABLE $CAT.spec.t (k BIGINT, tag STRING) " +
       "TBLPROPERTIES ('statsCols' = 'k', 'bloomStatsCols' = 'tag', " +
-      "'rowLevelMode' = 'mor')")
+      "'team' = 'qa')")
     val path = s"$wh/spec/t"
     def props(sql: String): Map[String, String] = spark.sql(sql)
       .as[(String, String)].collect().toMap
     val p1 = props(s"SHOW TBLPROPERTIES $CAT.spec.t")
     assert(p1.get("statsCols").contains("k") &&
       p1.get("bloomStatsCols").contains("tag") &&
-      p1.get("rowLevelMode").contains("mor") && !p1.contains("morKey"))
-    // the stat keys live in the version-1 manifest, not the sidecar
+      p1.get("rowLevelMode").contains("cow") && p1.get("team").contains("qa"))
+    // the spec keys live in the version-1 manifest, not the sidecar
     val side = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(path, "_catalog.properties")))
-    assert(side.contains("rowLevelMode") && !side.contains("statsCols"),
-      side)
+    assert(side.contains("team") && !side.contains("statsCols") &&
+      !side.contains("rowLevelMode"), side)
     assert(TableLog.latestVersion(path) == 1 &&
       TableLog.snapshot(path).get.spec.longCols == Seq("k"))
-    // ALTER on the stat keys is ONE setWriteSpec commit
+    // ALTER on the spec keys is ONE setWriteSpec commit
     spark.sql(s"ALTER TABLE $CAT.spec.t SET TBLPROPERTIES " +
-      "('strStatsCols' = 'tag', 'morKey' = 'k')")
+      "('strStatsCols' = 'tag', 'rowLevelMode' = 'mor')")
     spark.sql(s"ALTER TABLE $CAT.spec.t UNSET TBLPROPERTIES ('bloomStatsCols')")
     assert(TableLog.latestVersion(path) == 3)
     val p3 = props(s"SHOW TBLPROPERTIES $CAT.spec.t")
     assert(p3.get("strStatsCols").contains("tag") &&
-      p3.get("morKey").contains("k") && !p3.contains("bloomStatsCols"))
+      p3.get("rowLevelMode").contains("mor") && !p3.contains("bloomStatsCols"))
     val d = TableLog.detail(spark, path).select("write_spec").as[String]
       .head()
-    assert(d.contains("str=[tag]") && d.contains("morKey=k") &&
+    assert(d.contains("str=[tag]") && d.contains("rowLevelMode=mor") &&
       d.contains("bloom=[]"), d)
     // VERSION AS OF loads that version's spec
     val cat = GraftCatalog.catalogOf(spark, CAT).get
     val ident = org.apache.spark.sql.connector.catalog.Identifier
       .of(Array("spec"), "t")
     val v1 = cat.loadTable(ident, "1").properties()
-    assert(v1.get("bloomStatsCols") == "tag" && v1.get("morKey") == null &&
-      v1.get("rowLevelMode") == "mor")
-    assert(cat.loadTable(ident, "3").properties().get("morKey") == "k")
+    assert(v1.get("bloomStatsCols") == "tag" &&
+      v1.get("rowLevelMode") == "cow" && v1.get("team") == "qa")
+    assert(cat.loadTable(ident, "3").properties().get("rowLevelMode") == "mor")
     // a stat key naming a missing column is refused, the spec untouched
     intercept[Exception](spark.sql(s"ALTER TABLE $CAT.spec.t SET " +
       "TBLPROPERTIES ('statsCols' = 'nope')"))
@@ -2033,10 +2035,11 @@ class CatalogSpec extends SparkSpec {
       spark.range(2000).select($"id".as("k"), ($"id" % 10).as("v"))
         .repartitionByRange(4, $"k"),
       statsCols = Seq("k"))
-    // a pending KEY merge-on-read sidecar (deleteMor) — previously a
-    // hard refusal for the vanilla row-level path
-    TableLog.deleteMor(spark, path, "k",
-      spark.range(10).select(($"id" * 100).as("k")))
+    // a pending KEY merge-on-read sidecar (a CDC apply of deletes
+    // under `mor`) — previously a hard refusal for the vanilla
+    // row-level path
+    underMode(path, TableLog.Mor)(keyDelete(path, "k",
+      spark.range(10).select(($"id" * 100).as("k"))))
     val pre = TableLog.snapshot(path).get
     assert(pre.dels.exists(_.keyCol == "k"),
       "setup must leave a pending KEY sidecar")
@@ -2087,7 +2090,7 @@ class CatalogSpec extends SparkSpec {
     TableLog.append(spark, path,
       spark.range(1000).select($"id".as("k"), $"id".as("v")),
       statsCols = Seq("k"))
-    TableLog.deleteMor(spark, path, "k", Seq(3L, 7L).toDF("k"))
+    underMode(path, TableLog.Mor)(keyDelete(path, "k", Seq(3L, 7L).toDF("k")))
     val v0 = TableLog.latestVersion(path)
     spark.conf.set("spark.graft.rowLevel.maxAutoMaintainBytes", "1")
     try {

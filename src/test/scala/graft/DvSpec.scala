@@ -3,10 +3,10 @@ package graft
 import graft.sinks.TableLog
 import org.apache.spark.sql.functions._
 
-/** Positional (deletion-vector) merge-on-read: deleteDv/updateDv —
-  * arbitrary-predicate zero-rewrite DML, applied at read as a
-  * codegen'd scan filter on `_metadata.row_index`, never an
-  * anti-join. */
+/** Positional (deletion-vector) merge-on-read: `delete`/`update` on a
+  * `rowLevelMode = mor` table — arbitrary-predicate zero-rewrite DML,
+  * applied at read as a codegen'd scan filter on `_metadata.row_index`,
+  * never an anti-join. */
 class DvSpec extends SparkSpec {
 
   import spark.implicits._
@@ -18,7 +18,8 @@ class DvSpec extends SparkSpec {
     val df = spark.range(n).select($"id".as("k"), ($"id" % 10).as("v"),
       concat(lit("u"), ($"id" % 97).cast("string")).as("who"))
     TableLog.create(spark, t,
-      df.repartitionByRange(parts, $"k"), statsCols = Seq("k"))
+      df.repartitionByRange(parts, $"k"), statsCols = Seq("k"),
+      rowLevelMode = TableLog.Mor)
   }
 
   test("deleteDv: arbitrary predicate, zero rewrites, exact rows") {
@@ -26,7 +27,7 @@ class DvSpec extends SparkSpec {
     mkTable(t)
     val before = TableLog.snapshot(t).get
     // a predicate NO key/range face can express: modulo + string
-    val v = TableLog.deleteDv(spark, t,
+    val v = TableLog.delete(spark, t,
       col("v") === 3 && col("who") === "u13")
     assert(v == 2)
     val after = TableLog.snapshot(t).get
@@ -43,13 +44,13 @@ class DvSpec extends SparkSpec {
     assert(after.rows == want.size.toLong)
     // the audited count survives a second, overlapping positional
     // delete (already-vectored rows never recount)
-    val v2 = TableLog.deleteDv(spark, t, col("v") === 3)
+    val v2 = TableLog.delete(spark, t, col("v") === 3)
     assert(v2 == 3)
     val want2 = want.filterNot(_.getLong(1) == 3L)
     assert(TableLog.read(spark, t).orderBy("k").collect().toSeq == want2)
     assert(TableLog.snapshot(t).get.rows == want2.size.toLong)
     // no-match predicate: no-op at the current version
-    assert(TableLog.deleteDv(spark, t, col("who") === "nobody") == 3)
+    assert(TableLog.delete(spark, t, col("who") === "nobody") == 3)
     // appends after the vector are untouched by it (identity fencing:
     // new files are never in the target list)
     TableLog.append(spark, t, Seq((5000L, 3L, "u13")).toDF("k", "v", "who"),
@@ -71,7 +72,7 @@ class DvSpec extends SparkSpec {
     // range-expressible predicate + an extra conjunct: the DV path
     // must stat-prune to the one overlapping file (kept set), and the
     // vector must name only that file
-    TableLog.deleteDv(spark, t,
+    TableLog.delete(spark, t,
       col("k").between(100, 120) && col("v") =!= 5)
     val after = TableLog.snapshot(t).get
     val dvFiles = spark.read.parquet(s"$t/${after.dels.head.file.path}")
@@ -82,21 +83,24 @@ class DvSpec extends SparkSpec {
       2000 - (100 to 120).count(_ % 10 != 5))
   }
 
-  test("deleteDv refuses nondeterministic predicates and wide vectors") {
+  test("row-level verbs refuse nondeterministic predicates on both routes; a refusal commits nothing") {
     val t = tmp("graft_dv_refuse")
     mkTable(t)
     val nd = intercept[Exception](
-      TableLog.deleteDv(spark, t, rand() < 0.5))
+      TableLog.delete(spark, t, rand() < 0.5))
     assert(nd.getMessage.contains("deterministic"))
-    // a vector wider than the spec's maxDvPositions: the positional
-    // update refuses (a delete falls back to copy-on-write, below)
-    TableLog.setWriteSpec(t,
-      TableLog.writeSpec(t).copy(maxDvPositions = 10))
-    val wide = intercept[Exception](
-      TableLog.updateDv(spark, t, col("v") >= 0, Map("v" -> lit(0L))))
-    assert(wide.getMessage.contains("maxPositions"))
-    // neither refusal committed data
-    assert(TableLog.latestVersion(t) == 2)
+    val nu = intercept[Exception](
+      TableLog.update(spark, t, rand() < 0.5, Map("v" -> lit(0L))))
+    assert(nu.getMessage.contains("deterministic"))
+    // the copy-on-write route refuses the same way
+    underMode(t, TableLog.Cow) {
+      val nc = intercept[Exception](
+        TableLog.delete(spark, t, rand() < 0.5))
+      assert(nc.getMessage.contains("deterministic"))
+    }
+    // no refusal committed data (versions 2 and 3 are the mode flips)
+    assert(TableLog.latestVersion(t) == 3)
+    assert(TableLog.snapshot(t).get.dels.isEmpty)
     assert(TableLog.read(spark, t).count() == 1000)
   }
 
@@ -107,7 +111,7 @@ class DvSpec extends SparkSpec {
     // 300 matched rows > cap 10 → the COW rewrite path, same predicate
     TableLog.setWriteSpec(t,
       TableLog.writeSpec(t).copy(maxDvPositions = 10))
-    val v = TableLog.deleteDv(spark, t, col("v").isin(1, 4, 7))
+    val v = TableLog.delete(spark, t, col("v").isin(1, 4, 7))
     assert(v == 3)
     val s = TableLog.snapshot(t).get
     // COW: no pending sidecar, exact SQL delete semantics
@@ -126,14 +130,14 @@ class DvSpec extends SparkSpec {
       "sidecars before committing") {
     val t = tmp("graft_dv_agg")
     mkTable(t)
-    val v1 = TableLog.deleteDv(spark, t, col("v") === 1)
+    val v1 = TableLog.delete(spark, t, col("v") === 1)
     assert(TableLog.snapshot(t).get.dels.size == 1)
     // bound of 1 byte: the pending vector from v1 is over it, so this
     // commit first materializes (one morMaintain commit), THEN adds
     // its own fresh vector — two versions ahead, one sidecar pending
     spark.conf.set("spark.graft.rowLevel.maxPendingDvBytes", "1")
     val v2 =
-      try TableLog.deleteDv(spark, t, col("v") === 2)
+      try TableLog.delete(spark, t, col("v") === 2)
       finally spark.conf.unset("spark.graft.rowLevel.maxPendingDvBytes")
     assert(v2 == v1 + 2)
     val s = TableLog.snapshot(t).get
@@ -154,7 +158,7 @@ class DvSpec extends SparkSpec {
     // rows share v values across the predicate boundary — updateMor
     // on key v would refuse (straddled-shared-key audit); positions
     // address rows exactly, so updateDv just works
-    val v = TableLog.updateDv(spark, t,
+    val v = TableLog.update(spark, t,
       col("k").between(100, 199) && col("v") === 7,
       Map("who" -> lit("redacted")))
     assert(v == 2)
@@ -170,7 +174,7 @@ class DvSpec extends SparkSpec {
     assert(got.where($"v" === 7).count() == 100)
     assert(got.count() == 1000)
     // set expressions read the PRE-update row
-    TableLog.updateDv(spark, t, col("k") === 7,
+    TableLog.update(spark, t, col("k") === 7,
       Map("v" -> (col("v") + 100L)))
     assert(TableLog.read(spark, t).where($"k" === 7)
       .select("v").as[Long].head() == 107)
@@ -180,8 +184,8 @@ class DvSpec extends SparkSpec {
     val t = tmp("graft_dv_mix")
     mkTable(t)
     // v2: keyed MOR delete; v3: positional delete; v4: rename
-    TableLog.deleteMor(spark, t, "k", Seq(10L, 20L).toDF("k"))
-    TableLog.deleteDv(spark, t, col("v") === 4 && col("k") < 100)
+    keyDelete(t, "k", Seq(10L, 20L).toDF("k"))
+    TableLog.delete(spark, t, col("v") === 4 && col("k") < 100)
     TableLog.renameColumn(spark, t, "who", "actor")
     val got = TableLog.read(spark, t)
     assert(got.columns.toSeq == Seq("k", "v", "actor"))
@@ -190,7 +194,7 @@ class DvSpec extends SparkSpec {
     assert(got.count() == want.toLong)
     assert(TableLog.snapshot(t).get.rows == want.toLong)
     // morFold folds the two kinds separately (key fold + dv entries)
-    TableLog.deleteDv(spark, t, col("v") === 5 && col("k") < 50)
+    TableLog.delete(spark, t, col("v") === 5 && col("k") < 50)
     val preFold = TableLog.snapshot(t).get
     assert(preFold.dels.count(_.keyCol == "__pos__") == 2)
     TableLog.morFold(spark, t)
@@ -224,7 +228,7 @@ class DvSpec extends SparkSpec {
       "read (the probe projection is deterministic)") {
     val t = tmp("graft_dv_push")
     mkTable(t)
-    TableLog.deleteDv(spark, t, col("v") === 3 && col("who") === "u13")
+    TableLog.delete(spark, t, col("v") === 3 && col("who") === "u13")
     // the DV read path projects the probe columns at the scan; if any
     // of them were NONDETERMINISTIC (input_file_name once was),
     // PushPredicateThroughNonJoin would refuse to push a user filter
@@ -253,13 +257,13 @@ class DvSpec extends SparkSpec {
     mkTable(t, n = 200, parts = 2)
     TableLog.enableCdcFeed(t)
     TableLog.publishInitialSnapshot(t)
-    TableLog.deleteDv(spark, t, col("v") === 9 && col("k") < 100)
+    TableLog.delete(spark, t, col("v") === 9 && col("k") < 100)
     val feed = TableLog.readFeed(spark, t)
     val dels = feed.where($"_change_type" === "delete")
     assert(dels.count() == 10)
     assert(dels.select("k").as[Long].collect().toSet ==
       (0 until 100).filter(_ % 10 == 9).map(_.toLong).toSet)
-    TableLog.updateDv(spark, t, col("k") === 42,
+    TableLog.update(spark, t, col("k") === 42,
       Map("who" -> lit("x")))
     val feed2 = TableLog.readFeed(spark, t)
     assert(feed2.where($"_change_type" === "delete" && $"k" === 42)

@@ -35,7 +35,8 @@ class LogScanSpec extends SparkSpec {
       spark.range(0L, 4000L, 1L, 8)
         .select($"id".as("k"), ($"id" % 7).as("v"),
           concat(lit("cat_"), ($"id" / 500).cast("long")).as("c")),
-      statsCols = Seq("k"), strStatsCols = Seq("c"))
+      statsCols = Seq("k"), strStatsCols = Seq("c"),
+      rowLevelMode = TableLog.Mor)
     t
   }
 
@@ -125,7 +126,7 @@ class LogScanSpec extends SparkSpec {
 
   test("scan: MOR sidecars, schema ops, and renames flow through the declarative face") {
     val t = mkTable()
-    TableLog.deleteMor(spark, t, "k", Seq(150L, 151L).toDF("k"))
+    keyDelete(t, "k", Seq(150L, 151L).toDF("k"))
     val df = TableLog.scan(spark, t)
     val q = df.where($"k".between(100, 200))
     assert(q.count() == 99, "MOR-deleted rows must not surface")
@@ -167,7 +168,7 @@ class LogScanSpec extends SparkSpec {
     // pending MOR sidecar: count stays metadata (rows are maintained
     // through deletes), min/max must NOT trust stats (the extreme row
     // may be the deleted one — here it is)
-    TableLog.deleteMor(spark, t, "k", Seq(0L, 3999L).toDF("k"))
+    keyDelete(t, "k", Seq(0L, 3999L).toDF("k"))
     val df2 = TableLog.scan(spark, t)
     val c2 = df2.agg(count(lit(1)).as("n"))
     assert(filesScanned(c2) == 0)

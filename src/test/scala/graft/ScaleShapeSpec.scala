@@ -197,9 +197,9 @@ class ScaleShapeSpec extends SparkSpec {
       spark.range(400000).select(
         when($"id" % 10 < 7, lit(42L)).otherwise($"id").as("k"),
         xxhash64($"id").as("v")).repartition(8, ($"id" % 8).cast("int")),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     // keys ≡ 7 (mod 10) exist (non-hot rows keep k = id, id%10 ∈ 7..9)
-    TableLog.deleteMor(spark, t, "k",
+    keyDelete(t, "k",
       spark.range(500).select(($"id" * 700 + 7).as("k")))
     assert(TableLog.snapshot(t).get.dels.nonEmpty)
     val tuned = Seq(
@@ -477,9 +477,9 @@ class ScaleShapeSpec extends SparkSpec {
       TableLog.create(spark, t,
         spark.range(n).select($"id".as("k"), ($"id" % 7).as("v"))
           .repartitionByRange(files, $"k").sortWithinPartitions("k"),
-        statsCols = Seq("k"))
+        statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
       Seq(10L, n / 2, n - 10).foreach(key =>
-        TableLog.deleteMor(spark, t, "k", Seq(key).toDF("k")))
+        keyDelete(t, "k", Seq(key).toDF("k")))
       val before = TableLog.snapshot(t).get.files.map(_.path).toSet
       TableLog.morMaintain(spark, t, maxSidecars = 0)
       val after = TableLog.snapshot(t).get.files.map(_.path).toSet

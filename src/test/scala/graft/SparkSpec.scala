@@ -21,6 +21,30 @@ trait SparkSpec extends AnyFunSuite {
 
   /** How many data files the optimized plan of `df` opens. */
   def filesScanned(df: DataFrame): Int = filesOpened(df).size
+
+  /** A pending KEY sidecar on `keyCol`, built the way production
+    * builds one: a CDC batch deleting `keys`, applied onto a table
+    * whose `rowLevelMode` is `mor` (the upsert's blind-write form).
+    * Returns the committed version. */
+  /** Run `f` with `table` declared `rowLevelMode` `mode`, then restore
+    * its spec — two write-spec commits — for a spec that needs one
+    * commit shape on a table whose own routes are the other's. */
+  def underMode[A](table: String, mode: String)(f: => A): A = {
+    import graft.sinks.TableLog
+    val was = TableLog.writeSpec(table)
+    TableLog.setWriteSpec(table, was.copy(rowLevelMode = mode))
+    try f finally { TableLog.setWriteSpec(table, was); () }
+  }
+
+  def keyDelete(table: String, keyCol: String, keys: DataFrame): Long = {
+    import org.apache.spark.sql.functions.lit
+    import graft.sinks.TableLog
+    require(TableLog.writeSpec(table).rowLevelMode == TableLog.Mor,
+      s"$table: a key sidecar needs rowLevelMode = mor")
+    TableLog.applyCdc(spark, table, keys.select(keyCol)
+      .withColumn(TableLog.changeTypeCol, lit("delete"))
+      .withColumn(TableLog.changeVersionCol, lit(1L)), keyCol)
+  }
 }
 
 object SparkSpec {

@@ -27,7 +27,7 @@ class SqlDmlSpec extends SparkSpec {
     val before = TableLog.snapshot(t).get
 
     // UPDATE: narrow range on the k-clustered table — the commit must
-    // rewrite ONLY the stat-overlapping file, like updateWhere
+    // rewrite ONLY the stat-overlapping file (copy-on-write update)
     val uv = TableLog.sql(spark,
       "UPDATE dml_lake SET v = v + 100 WHERE k BETWEEN 600 AND 640")
     assert(uv.head.getLong(0) == 2)
@@ -44,7 +44,7 @@ class SqlDmlSpec extends SparkSpec {
     // DELETE long range
     TableLog.sql(spark, "DELETE FROM dml_lake WHERE k >= 3900")
     assert(TableLog.read(spark, t).count() == 3900)
-    // DELETE string IN-list routes to deleteWhereIn
+    // DELETE string IN-list prunes by the string stats
     TableLog.sql(spark, "DELETE FROM dml_lake WHERE tag IN ('c2')")
     assert(TableLog.read(spark, t).where($"tag" === "c2").count() == 0)
     val n2 = TableLog.read(spark, t).count()
@@ -68,19 +68,22 @@ class SqlDmlSpec extends SparkSpec {
     val e1 = intercept[UnsupportedOperationException](TableLog.sql(spark,
       "UPDATE dml_lake SET v = 0")) // no WHERE
     assert(e1.getMessage.contains("UPDATE"))
-    // a NON-RANGE predicate now EXECUTES positionally: a zero-rewrite
-    // deletion-vector commit with exact SQL semantics
+    // a NON-RANGE predicate executes with exact SQL semantics; on this
+    // default (copy-on-write) table it rewrites only the pruned files
+    // and leaves no deletion vector
     val nBefore = TableLog.read(spark, t).count()
-    val filesBefore = TableLog.snapshot(t).get.files.map(_.path)
+    val (hit, miss) = TableLog.snapshot(t).get.files.partition(
+      _.stats.find(_.col == "k").forall(_.max > 3500))
     val expectDel = TableLog.read(spark, t)
       .where($"v" % 2 === 0 && $"k" > 3500).count()
-    assert(expectDel > 0)
+    assert(expectDel > 0 && miss.nonEmpty)
     TableLog.sql(spark,
       "DELETE FROM dml_lake WHERE v % 2 = 0 AND k > 3500")
     assert(TableLog.read(spark, t).count() == nBefore - expectDel)
-    assert(TableLog.snapshot(t).get.files.map(_.path) == filesBefore,
-      "a positional delete must rewrite no data file")
-    assert(TableLog.snapshot(t).get.dels.exists(_.keyCol == "__pos__"))
+    val kept = TableLog.snapshot(t).get.files.map(_.path).toSet
+    assert(miss.forall(f => kept(f.path)) && !hit.exists(f => kept(f.path)),
+      "exactly the files that can hold k > 3500 are rewritten")
+    assert(!TableLog.snapshot(t).get.dels.exists(_.keyCol == "__pos__"))
     val e3 = intercept[UnsupportedOperationException](TableLog.sql(spark,
       """MERGE INTO dml_lake USING dml_src ON dml_lake.k = dml_src.k
         |WHEN MATCHED THEN DELETE""".stripMargin))
@@ -95,12 +98,12 @@ class SqlDmlSpec extends SparkSpec {
       "DELETE FROM some_other_view WHERE k = 1"))
   }
 
-  test("morKey routing: UPDATE/MERGE/key-IN-DELETE text commits through the MOR faces, zero rewrites") {
+  test("rowLevelMode mor routing: UPDATE/MERGE/DELETE text commits deletion vectors and key sidecars, zero rewrites") {
     val t = tmp("graft_sqldml_mor")
     // UNCLUSTERED in k: COW would rewrite everything, MOR must not
     TableLog.create(spark, t, spark.range(2000)
       .select($"id".as("k"), ($"id" % 7).as("v"))
-      .repartition(6, $"v"), statsCols = Seq("k"), morKey = Some("k"))
+      .repartition(6, $"v"), statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     TableLog.registerSqlTable(spark, "dml_mor", t)
     val before = TableLog.snapshot(t).get
 
@@ -125,8 +128,10 @@ class SqlDmlSpec extends SparkSpec {
     assert(TableLog.read(spark, t).where($"v" === 999).count() == 20)
     assert(TableLog.read(spark, t)
       .where($"k".between(300, 900) && $"v" < 100).count() == 0)
-    // a RANGE delete on a morKey table stays copy-on-write by design
+    // a RANGE delete on a mor table is a deletion vector too
     TableLog.sql(spark, "DELETE FROM dml_mor WHERE k BETWEEN 0 AND 4")
+    assert(before.files.map(_.path).toSet
+      .subsetOf(TableLog.snapshot(t).get.files.map(_.path).toSet))
     assert(TableLog.read(spark, t).count() == 2002)
     // view refresh held throughout
     assert(TableLog.sql(spark, "SELECT count(*) AS n FROM dml_mor")
@@ -422,11 +427,11 @@ class SqlDmlSpec extends SparkSpec {
     val t = tmp("graft_sqldml_call")
     TableLog.create(spark, t, spark.range(2000)
       .select($"id".as("k")).repartitionByRange(2, $"k"),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     TableLog.registerSqlTable(spark, "call_t", t)
     // accumulate debt: MOR sidecars + small appends
-    TableLog.deleteMor(spark, t, "k", Seq(10L).toDF("k"))
-    TableLog.deleteMor(spark, t, "k", Seq(20L).toDF("k"))
+    keyDelete(t, "k", Seq(10L).toDF("k"))
+    keyDelete(t, "k", Seq(20L).toDF("k"))
     // mor_fold collapses the window-adjacent burst to one entry
     TableLog.sql(spark, "CALL mor_fold('call_t')")
     assert(TableLog.snapshot(t).get.dels.size == 1)
@@ -474,13 +479,14 @@ class SqlDmlSpec extends SparkSpec {
     val t = tmp("graft_sqldml_subq")
     TableLog.create(spark, t, spark.range(2000)
       .select($"id".as("k"), ($"id" % 7).as("v"))
-      .repartitionByRange(4, $"k"), statsCols = Seq("k"))
+      .repartitionByRange(4, $"k"), statsCols = Seq("k"),
+      rowLevelMode = TableLog.Mor)
     TableLog.registerSqlTable(spark, "subq_t", t)
     Seq(3L, 700L, 1500L, 99999L).toDF("k")
       .createOrReplaceTempView("subq_src")
     val before = TableLog.snapshot(t).get
-    // no range/IN-list face can express this — the positional
-    // fallback evaluates the subquery through Spark itself
+    // Spark itself evaluates the subquery; the mor table commits the
+    // matched positions
     TableLog.sql(spark,
       "DELETE FROM subq_t WHERE k IN (SELECT k FROM subq_src)")
     val after = TableLog.snapshot(t).get
@@ -566,11 +572,11 @@ class SqlDmlSpec extends SparkSpec {
     val t = tmp("graft_sqldml_typed")
     TableLog.create(spark, t, spark.range(100)
       .select($"id".as("k"), ($"id" + 0.5).as("price")),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     TableLog.registerSqlTable(spark, "dml_typed", t)
     // price = 50 under cast-to-long range semantics would have deleted
-    // every row in [50.0, 51.0) — i.e. id 50 (price 50.5). Positional
-    // routing evaluates SQL equality: NO row has price exactly 50, so
+    // every row in [50.0, 51.0) — i.e. id 50 (price 50.5). Spark
+    // evaluates SQL equality: NO row has price exactly 50, so
     // this is a committed NOTHING — a no-op at the current version.
     val v0 = TableLog.latestVersion(t)
     TableLog.sql(spark, "DELETE FROM dml_typed WHERE price = 50")
@@ -590,7 +596,7 @@ class SqlDmlSpec extends SparkSpec {
     val e3 = intercept[Exception](
       TableLog.sql(spark, "DELETE FROM dml_typed WHERE kk = 5"))
     assert(e3.getMessage.contains("kk"))
-    // integral predicates still translate to the range faces
+    // integral predicates prune the manifest by the long stats
     TableLog.sql(spark, "DELETE FROM dml_typed WHERE k BETWEEN 90 AND 200")
     assert(TableLog.read(spark, t).count() == 89)
   }
@@ -625,7 +631,7 @@ class SqlDmlSpec extends SparkSpec {
     val t = tmp("graft_sqldml_bulkdv")
     TableLog.create(spark, t, spark.range(1000)
       .select($"id".as("k"), ($"id" % 10).as("v")),
-      statsCols = Seq("k"), maxDvPositions = 10)
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor, maxDvPositions = 10)
     // a tiny per-commit vector cap, declared in the write spec
     TableLog.registerSqlTable(spark, "dml_bulk", t)
     // non-range predicate → positional route; 100 matched > 10 → COW
@@ -646,18 +652,20 @@ class SqlDmlSpec extends SparkSpec {
     TableLog.sql(spark, "DELETE FROM dml_bulk WHERE v % 7 = 2 AND k < 10")
     assert(TableLog.snapshot(t).get.files.map(_.path) == filesBefore)
     assert(TableLog.snapshot(t).get.dels.exists(_.keyCol == "__pos__"))
-    // ...and the bulk UPDATE twin still refuses with guidance (an
-    // arbitrary-predicate bulk update has no COW face to step to)
-    val e = intercept[Exception](TableLog.sql(spark,
-      "UPDATE dml_bulk SET v = 0 WHERE v % 3 = 0"))
-    assert(e.getMessage.contains("maxPositions"))
+    // ...and the bulk UPDATE twin takes the same copy-on-write step
+    val live = TableLog.read(spark, t).count()
+    TableLog.sql(spark, "UPDATE dml_bulk SET v = 0 WHERE v % 3 = 0")
+    assert(TableLog.read(spark, t).count() == live)
+    assert(TableLog.sql(spark,
+      "SELECT count(*) AS n FROM dml_bulk WHERE v IN (3, 6, 9)")
+      .head.getLong(0) == 0)
   }
 
   test("CREATE TABLE OPTIONS carry maxDvPositions into the registration") {
     val loc = tmp("graft_sqldml_bulkopt")
     TableLog.sql(spark,
       s"""CREATE TABLE dml_bulkopt USING graft LOCATION '$loc'
-         |OPTIONS (statsCols 'k', maxDvPositions '10')
+         |OPTIONS (statsCols 'k', rowLevelMode 'mor', maxDvPositions '10')
          |AS SELECT id AS k, id % 10 AS v FROM range(1000)""".stripMargin)
     TableLog.sql(spark, "DELETE FROM dml_bulkopt WHERE v % 3 = 1")
     val s = TableLog.snapshot(loc).get

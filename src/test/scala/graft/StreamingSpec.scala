@@ -792,7 +792,7 @@ class StreamingSpec extends SparkSpec {
       spark.range(a, b).select($"id", ($"id" % 7).as("v"))
     TableLog.create(spark, bronze,
       rows(0, 50).repartitionByRange(2, $"id"), statsCols = Seq("id"))
-    TableLog.deleteWhere(spark, bronze, "id", 10, 20)
+    TableLog.delete(spark, bronze, col("id").between(10, 20))
     // the typed feed streamed into a silver commit-log table: the
     // FileStreamSource's checkpoint is the exactly-once ledger for the
     // read side, the txn id for the write side
@@ -809,7 +809,7 @@ class StreamingSpec extends SparkSpec {
     // new bronze activity — an append AND a delete — flows incrementally
     TableLog.append(spark, bronze,
       rows(50, 60).repartitionByRange(1, $"id"), statsCols = Seq("id"))
-    TableLog.deleteWhere(spark, bronze, "id", 55, 57)
+    TableLog.delete(spark, bronze, col("id").between(55, 57))
     drain()
     assert(silverCounts() == Map("insert" -> 60L, "delete" -> 14L))
     // the state derived from silver's typed rows equals live bronze
@@ -836,7 +836,7 @@ class StreamingSpec extends SparkSpec {
     TableLog.create(spark, bronze,
       rows(0 until 20, identity).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, bronze, "k", 3, 5)
+    TableLog.delete(spark, bronze, col("k").between(3, 5))
     def drain(): Unit = TableLog.cdcApplyStream(spark, bronze, silver,
       "k", "capply", ckpt)
     drain()
@@ -854,7 +854,7 @@ class StreamingSpec extends SparkSpec {
     TableLog.append(spark, bronze,
       rows(10 until 25, _ * 10).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, bronze, "k", 0, 1)
+    TableLog.delete(spark, bronze, col("k").between(0, 1))
     drain()
     val s2 = ((2L until 10L).filterNot(k => k >= 3 && k <= 5)
       .map(k => k -> k) ++ (10L until 25L).map(k => k -> k * 10)).toMap
@@ -868,7 +868,7 @@ class StreamingSpec extends SparkSpec {
     // through the stream as an upsert — delete+insert pair, insert wins
     TableLog.mergeUpsert(spark, bronze,
       Seq((12L, -12L), (40L, -40L)).toDF("k", "v"), Seq("k"))
-    TableLog.updateWhere(spark, bronze, "k", 20, 22,
+    TableLog.update(spark, bronze, col("k").between(20, 22),
       Map("v" -> (org.apache.spark.sql.functions.col("v") + 7L)))
     drain()
     val s3 = s2 + (12L -> -12L) + (40L -> -40L) +
@@ -880,7 +880,7 @@ class StreamingSpec extends SparkSpec {
     assert(TableLog.latestVersion(silver) == vUpd && silverMap() == s3)
   }
 
-  test("cdcApplyStream(mor = true): per-trigger sidecar commits, zero silver rewrites, exactly once") {
+  test("cdcApplyStream onto a mor silver table: per-trigger sidecar commits, zero silver rewrites, exactly once") {
     import graft.sinks.TableLog
     import spark.implicits._
     val bronze = java.nio.file.Files
@@ -898,14 +898,14 @@ class StreamingSpec extends SparkSpec {
     def drain(): Unit = TableLog.cdcApplyStream(spark, bronze, silver,
       "k", "capplym", ckpt)
     drain() // bootstrap batch
-    // the silver table declares morKey: later batches commit sidecars
+    // the silver table declares mor: later batches commit sidecars
     TableLog.setWriteSpec(silver,
-      TableLog.writeSpec(silver).copy(morKey = Some("k")))
+      TableLog.writeSpec(silver).copy(rowLevelMode = TableLog.Mor))
     val boot = TableLog.snapshot(silver).get
     TableLog.append(spark, bronze,
       rows(10 until 25, _ * 10).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, bronze, "k", 0, 1)
+    TableLog.delete(spark, bronze, col("k").between(0, 1))
     drain() // MOR batches: updates + deletes land as sidecar commits
     val after = TableLog.snapshot(silver).get
     assert(boot.files.map(_.path).toSet
@@ -923,7 +923,7 @@ class StreamingSpec extends SparkSpec {
     // maintenance tick: more bronze activity flows in, and the
     // autoMorSidecars bound retires the accumulated sidecars in the
     // same drain — reads unchanged, zero pending read amplification
-    TableLog.deleteWhere(spark, bronze, "k", 24, 24)
+    TableLog.delete(spark, bronze, col("k").between(24, 24))
     TableLog.cdcApplyStream(spark, bronze, silver, "k", "capplym", ckpt,
       autoMorSidecars = Some(0))
     assert(TableLog.snapshot(silver).get.dels.isEmpty,

@@ -683,16 +683,16 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.vacuumPreview(t)._2.isEmpty)
   }
 
-  test("updateMor: scattered update = new images + key sidecar, ZERO rewrites; fence, travel, compaction, guards") {
+  test("update on a mor table: scattered update = new images + deletion vector, ZERO rewrites; fence, travel, compaction, no key guards") {
     val t = tmp("graft_log_umor")
     val df = spark.range(1000).select($"id".as("k"), ($"id" % 7).as("v"),
       lit("a").as("tag"))
     // UNCLUSTERED in k: every file spans the whole key range — the COW
     // update would rewrite all of them; MOR must rewrite none
     TableLog.create(spark, t, df.repartition(4, $"v"),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     val before = TableLog.snapshot(t).get
-    TableLog.updateMor(spark, t, "k", "k", 100, 899,
+    TableLog.update(spark, t, col("k").between(100, 899),
       Map("v" -> ($"v" + 100), "tag" -> lit("u")))
     val after = TableLog.snapshot(t).get
     assert(before.files.map(_.path).toSet
@@ -715,28 +715,27 @@ class TableLogSpec extends SparkSpec {
     TableLog.compact(spark, t, 1L << 26)
     assert(TableLog.snapshot(t).get.dels.isEmpty)
     assert(TableLog.read(spark, t).where($"tag" === "u").count() == 800)
-    // GUARDS. straddling keys: rows sharing a matched key that do NOT
-    // match the predicate would be lost — refused
+    // NO KEY GUARDS: positions address rows exactly, so rows sharing
+    // a value across the predicate boundary update independently
     val t2 = tmp("graft_log_umor2")
     TableLog.create(spark, t2, spark.range(200)
-      .select($"id", ($"id" % 100).as("kk")), statsCols = Seq("id"))
-    val e1 = intercept[IllegalArgumentException](TableLog.updateMor(
-      spark, t2, "kk", "id", 0, 49, Map("id" -> ($"id" + 1000L))))
-    assert(e1.getMessage.contains("share a matched"))
-    // a predicate covering each key's rows TOGETHER is fine
-    TableLog.updateMor(spark, t2, "kk", "id", 0, 199,
+      .select($"id", ($"id" % 100).as("kk")), statsCols = Seq("id"),
+      rowLevelMode = TableLog.Mor)
+    TableLog.update(spark, t2, col("id").between(0, 49),
       Map("id" -> ($"id" + 1000L)))
-    assert(TableLog.read(spark, t2).where($"id" >= 1000).count() == 200)
-    // NULL matched key refused
+    assert(TableLog.read(spark, t2).where($"id" >= 1000).count() == 50)
+    assert(TableLog.read(spark, t2).count() == 200)
+    // …and a NULL in any column is just a value
     val t3 = tmp("graft_log_umor3")
     TableLog.create(spark, t3, spark.range(10).select($"id",
-      when($"id" === 5, lit(null)).otherwise($"id").as("k")))
-    val e2 = intercept[IllegalArgumentException](TableLog.updateMor(
-      spark, t3, "k", "id", 0, 9, Map("id" -> ($"id" + 100L))))
-    assert(e2.getMessage.contains("NULL"))
-    // silent type widening refused, exactly like updateWhere
-    val e3 = intercept[IllegalArgumentException](TableLog.updateMor(
-      spark, t, "k", "k", 0, 10, Map("v" -> ($"v" + lit(0.5)))))
+      when($"id" === 5, lit(null)).otherwise($"id").as("k")),
+      rowLevelMode = TableLog.Mor)
+    TableLog.update(spark, t3, col("id").between(0, 9),
+      Map("id" -> ($"id" + 100L)))
+    assert(TableLog.read(spark, t3).where($"id" >= 100).count() == 10)
+    // silent type widening refused, exactly like the COW update
+    val e3 = intercept[IllegalArgumentException](TableLog.update(
+      spark, t, col("k").between(0, 10), Map("v" -> ($"v" + lit(0.5)))))
     assert(e3.getMessage.contains("cast the expression"))
   }
 
@@ -744,7 +743,7 @@ class TableLogSpec extends SparkSpec {
     val t = tmp("graft_log_mmor")
     val base = spark.range(1000).select($"id".as("k"), ($"id" % 7).as("v"))
     TableLog.create(spark, t, base.repartition(4, $"v"),
-      statsCols = Seq("k"), morKey = Some("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     val before = TableLog.snapshot(t).get
     // bimodal source: an update band inside the domain + inserts past it
     val src = spark.range(500, 1500).select($"id".as("k"),
@@ -790,16 +789,16 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, t, spark.range(500)
       .select($"id".as("k"), ($"id" % 5 + 100).as("v"))
       .repartitionByRange(4, $"k"), statsCols = Seq("k"))          // v2
-    TableLog.deleteWhere(spark, t, "k", 100, 199)                 // v3
+    TableLog.delete(spark, t, col("k").between(100, 199))                 // v3
     val feed = TableLog.readFeed(spark, t, withVersion = true)
     // COW reference: whole feed in one apply
     TableLog.applyCdc(spark, svCow, feed, "k")
-    // MOR: bootstrap batch, the silver table declares morKey, then the
+    // MOR: bootstrap batch, the silver table declares mor, then the
     // mutation batch commits as a sidecar
     TableLog.applyCdc(spark, svMor,
       feed.where($"_change_version" === 1), "k")
     TableLog.setWriteSpec(svMor,
-      TableLog.writeSpec(svMor).copy(morKey = Some("k")))
+      TableLog.writeSpec(svMor).copy(rowLevelMode = TableLog.Mor))
     val before = TableLog.snapshot(svMor).get
     TableLog.applyCdc(spark, svMor,
       feed.where($"_change_version" >= 2), "k",
@@ -831,8 +830,8 @@ class TableLogSpec extends SparkSpec {
     TableLog.enableCdcFeed(t)
     TableLog.create(spark, t, spark.range(100)
       .select($"id".as("k"), ($"id" % 5).as("v")).coalesce(2),
-      statsCols = Seq("k"), morKey = Some("k"))                    // v1
-    TableLog.updateMor(spark, t, "k", "k", 10, 59,
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)                    // v1
+    TableLog.update(spark, t, col("k").between(10, 59),
       Map("v" -> ($"v" + 100)))              // v2
     TableLog.mergeUpsert(spark, t, spark.range(90, 120)
       .select($"id".as("k"), lit(777L).as("v")), Seq("k"))        // v3
@@ -1003,7 +1002,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, t,
       rows(100, 150).repartitionByRange(2, $"id"), statsCols = Seq("id"))
     // the CDC feed is what legalizes this delete on a feed-enabled table
-    TableLog.deleteWhere(spark, t, "id", 40, 120)
+    TableLog.delete(spark, t, col("id").between(40, 120))
     val feed = TableLog.readFeed(spark, t)
     assert(feed.where($"_change_type" === "insert").count() == 150)
     assert(feed.where($"_change_type" === "delete").count() == 81)
@@ -1047,7 +1046,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.enableFeed(t2)
     TableLog.create(spark, t2, rows(0, 10))
     intercept[IllegalArgumentException](
-      TableLog.deleteWhere(spark, t2, "id", 0, 5))
+      TableLog.delete(spark, t2, col("id").between(0, 5)))
     // and the plain feed's read face carries NO _change_type column
     assert(!TableLog.readFeed(spark, t2).columns.contains("_change_type"))
   }
@@ -1062,7 +1061,7 @@ class TableLogSpec extends SparkSpec {
     val untouchedBefore = before.files.filterNot(f =>
       f.stats.exists(s => s.col == "k" && s.max >= 2000 && s.min <= 2999))
     assert(untouchedBefore.size >= 5, "fixture: most files must not overlap")
-    val v = TableLog.deleteWhere(spark, t, "k", 2000, 2999)
+    val v = TableLog.delete(spark, t, col("k").between(2000, 2999))
     val after = TableLog.snapshot(t).get
     // semantics: exactly the range is gone
     assert(after.rows == 7000)
@@ -1080,7 +1079,7 @@ class TableLogSpec extends SparkSpec {
     // time travel: the pre-delete version still reads complete
     assert(TableLog.readVersion(spark, t, v - 1).count() == 8000)
     // no-op delete (no file can contain a match): no commit at all
-    assert(TableLog.deleteWhere(spark, t, "k", 90000, 99000) == v)
+    assert(TableLog.delete(spark, t, col("k").between(90000, 99000)) == v)
     assert(TableLog.latestVersion(t) == v)
   }
 
@@ -1105,7 +1104,7 @@ class TableLogSpec extends SparkSpec {
     }.get
     val st = f1.stats.find(_.col == "k").get
     assert(st.min > 0 && st.max < 3999, "fixture: interior file")
-    val v = TableLog.deleteWhere(spark, t, "k", st.min, st.max)
+    val v = TableLog.delete(spark, t, col("k").between(st.min, st.max))
     val after = TableLog.snapshot(t).get
     assert(v == before.version + 1)
     // the fully-deleted file is gone and NOTHING replaced it — zero-row
@@ -1132,7 +1131,7 @@ class TableLogSpec extends SparkSpec {
       expected.sum)
     // the no-op contract SURVIVES the all-deleted rewrite: a
     // disjoint-range delete finds no candidate file and commits nothing
-    assert(TableLog.deleteWhere(spark, t, "k", 1000000, 2000000) == v)
+    assert(TableLog.delete(spark, t, col("k").between(1000000, 2000000)) == v)
     assert(TableLog.latestVersion(t) == v)
   }
 
@@ -1160,7 +1159,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, tR, spark.range(5000).selectExpr(
       "id AS k", "CAST(id % 9 AS int) AS v")
       .repartitionByRange(4, $"k"), statsCols = Seq("k", "v"))
-    TableLog.deleteWhere(spark, tR, "k", 0, 2999)
+    TableLog.delete(spark, tR, col("k").between(0, 2999))
     assert(TableLog.read(spark, tR).count() == 2000L)
     assert(TableLog.snapshot(tR).get.files.forall(_.rows > 0L))
     // no unmanifested garbage beyond CAS-loser class: every on-disk
@@ -1187,11 +1186,11 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t,
       spark.range(8000).select($"id".as("k"), ($"id" * 3).as("v"))
         .repartitionByRange(8, $"k").sortWithinPartitions("k"),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     val v0 = TableLog.latestVersion(t)
     // three scattered MOR deletes — zero rewrites, three sidecars
     Seq(10L, 2010L, 4010L).foreach { key =>
-      TableLog.deleteMor(spark, t, "k", Seq(key).toDF("k"))
+      keyDelete(t, "k", Seq(key).toDF("k"))
     }
     val snapBefore = TableLog.snapshot(t).get
     assert(snapBefore.dels.size == 3)
@@ -1243,8 +1242,8 @@ class TableLogSpec extends SparkSpec {
         concat(lit("k"), lpad($"id".cast("string"), 5, "0")).as("name"),
         ($"id" * 2).as("v"))
         .repartitionByRange(4, $"name").sortWithinPartitions("name"),
-      strStatsCols = Seq("name"))
-    TableLog.deleteMor(spark, t, "name",
+      strStatsCols = Seq("name"), rowLevelMode = TableLog.Mor)
+    keyDelete(t, "name",
       Seq("k00010", "k00011").toDF("name"))
     val snapBefore = TableLog.snapshot(t).get
     // one commit, but the key frame's partitioning may split the
@@ -1272,14 +1271,14 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t,
       spark.range(6000).select($"id".as("k"), ($"id" % 13).as("v"))
         .repartitionByRange(6, $"k").sortWithinPartitions("k"),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     val rnd = new scala.util.Random(42)
     // three rounds of mixed merge-on-read mutations at scattered keys
     (1 to 3).foreach { i =>
       val delKeys = Seq.fill(4)(rnd.nextLong(6000).abs)
-      TableLog.deleteMor(spark, t, "k", delKeys.toDF("k"))
+      keyDelete(t, "k", delKeys.toDF("k"))
       val lo = rnd.nextLong(5000).abs
-      TableLog.updateMor(spark, t, "k", "k", lo, lo + 50,
+      TableLog.update(spark, t, col("k").between(lo, lo + 50),
         Map("v" -> lit(100L + i)))
     }
     val snapBefore = TableLog.snapshot(t).get
@@ -1308,10 +1307,10 @@ class TableLogSpec extends SparkSpec {
     val t = tmp("graft_log_maintain")
     TableLog.create(spark, t,
       spark.range(4000).toDF("k").repartitionByRange(4, $"k"),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     // accumulate all three kinds of debt: MOR sidecars, small files,
     // history
-    TableLog.deleteMor(spark, t, "k", Seq(10L, 2010L).toDF("k"))
+    keyDelete(t, "k", Seq(10L, 2010L).toDF("k"))
     (0 until 3).foreach(i => TableLog.append(spark, t,
       Seq(10000L + i).toDF("k"), statsCols = Seq("k")))
     val before = TableLog.read(spark, t).orderBy("k").collect().toSeq
@@ -1346,7 +1345,7 @@ class TableLogSpec extends SparkSpec {
     // WRITE on the branch: every face is available; src is untouched
     TableLog.append(spark, br, spark.range(2000, 2200).toDF("k"),
       statsCols = Seq("k"))                                       // v3
-    TableLog.deleteWhere(spark, br, "k", 0, 99)                   // v4
+    TableLog.delete(spark, br, col("k").between(0, 99))                   // v4
     assert(TableLog.read(spark, src).count() == 1500)
     assert(TableLog.latestVersion(src) == fork)
     // AUDIT on the branch before anything is visible
@@ -1419,7 +1418,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, src, spark.range(10000, 10100).toDF("k"),
       statsCols = Seq("k"))
     // …while the branch deletes a range (rewrites file 0) and appends
-    TableLog.deleteWhere(spark, br, "k", 0, 49)
+    TableLog.delete(spark, br, col("k").between(0, 49))
     TableLog.append(spark, br, spark.range(20000, 20200).toDF("k"),
       statsCols = Seq("k"))
     intercept[IllegalArgumentException](
@@ -1449,8 +1448,8 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, src2,
       spark.range(0L, 1000L, 1L, 4).toDF("k"), statsCols = Seq("k"))
     TableLog.cloneTable(spark, src2, br2)
-    TableLog.deleteWhere(spark, src2, "k", 0, 9)
-    TableLog.deleteWhere(spark, br2, "k", 40, 49)
+    TableLog.delete(spark, src2, col("k").between(0, 9))
+    TableLog.delete(spark, br2, col("k").between(40, 49))
     val c = intercept[Exception](TableLog.mergeBranch(spark, src2, br2))
     assert(c.getMessage.contains("CONFLICT"))
 
@@ -1508,13 +1507,14 @@ class TableLogSpec extends SparkSpec {
     val br = tmp("graft_log_m3g_br")
     TableLog.create(spark, src,
       spark.range(0L, 400L, 1L, 2).select($"id".as("k"), $"id".as("v")),
-      statsCols = Seq("k"), counterDelta = Map("ing" -> 400L))
+      statsCols = Seq("k"), counterDelta = Map("ing" -> 400L),
+      rowLevelMode = TableLog.Mor)
     TableLog.cloneTable(spark, src, br)
     TableLog.append(spark, src,
       spark.range(1000, 1100).select($"id".as("k"), $"id".as("v")),
       statsCols = Seq("k"), counterDelta = Map("ing" -> 100L))
     // a pending MOR sidecar on the branch refuses with the maintain hint
-    TableLog.updateMor(spark, br, "k", "k", 10, 19,
+    TableLog.update(spark, br, col("k").between(10, 19),
       Map("v" -> org.apache.spark.sql.functions.lit(-1L)))
     val e = intercept[IllegalArgumentException](
       TableLog.mergeBranch(spark, src, br))
@@ -1806,7 +1806,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t,
       spark.range(2000).select($"id".as("k"), ($"id" * 2).as("v"))
         .repartitionByRange(4, $"k"), statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, t, "k", 100, 399)
+    TableLog.delete(spark, t, col("k").between(100, 399))
     // simulate a crash after the delete's commit but before publication:
     // drop the marker, the capture links, and the (already cleaned)
     // stage, then HEAL from several publishers at once — stage creation
@@ -1871,7 +1871,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.append(spark, bronze,
       rows(5 until 15, _ * 100).repartitionByRange(2, $"k"),
       statsCols = Seq("k"))                                   // v2: upd 5-9, ins 10-14
-    TableLog.deleteWhere(spark, bronze, "k", 8, 12)               // v3
+    TableLog.delete(spark, bronze, col("k").between(8, 12))               // v3
     // one typed batch = the whole feed; silver bootstraps from it
     TableLog.applyCdc(spark, silver,
       TableLog.readFeed(spark, bronze, withVersion = true), "k",
@@ -1975,12 +1975,12 @@ class TableLogSpec extends SparkSpec {
     assert(typedAt(vMerge, "delete") == 50 && typedAt(vMerge, "insert") == 60)
     tracks()
     // in-place update: old/new images both captured
-    val vUpd = TableLog.updateWhere(spark, t, "k", 200, 249,
+    val vUpd = TableLog.update(spark, t, col("k").between(200, 249),
       Map("v" -> ($"v" + 1000000L)))
     tracks()
     assert(typedAt(vUpd, "delete") == 50 && typedAt(vUpd, "insert") == 50)
     // an update whose expressions change nothing publishes nothing
-    val vNoop = TableLog.updateWhere(spark, t, "k", 300, 349,
+    val vNoop = TableLog.update(spark, t, col("k").between(300, 349),
       Map("v" -> $"v"))
     assert(typedAt(vNoop, "delete") == 0 && typedAt(vNoop, "insert") == 0)
     tracks()
@@ -2025,7 +2025,7 @@ class TableLogSpec extends SparkSpec {
     val untouchedBefore = before.files.filterNot(f =>
       f.stats.exists(s => s.col == "k" && s.max >= 2000 && s.min <= 2999))
     assert(untouchedBefore.size >= 5, "fixture: most files must not overlap")
-    val v = TableLog.updateWhere(spark, t, "k", 2000, 2999,
+    val v = TableLog.update(spark, t, col("k").between(2000, 2999),
       Map("v" -> ($"v" * -1), "tag" -> lit("upd")))
     val back = TableLog.read(spark, t)
     assert(back.count() == 8000, "update never changes the row count")
@@ -2044,18 +2044,16 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.readVersion(spark, t, v - 1)
       .where($"tag" === "upd").count() == 0)
     // no-op (no file can contain a match): no commit
-    assert(TableLog.updateWhere(spark, t, "k", 90000, 91000,
+    assert(TableLog.update(spark, t, col("k").between(90000, 91000),
       Map("v" -> lit(0L))) == v)
     assert(TableLog.latestVersion(t) == v)
     // unknown set column / empty set refused
-    intercept[IllegalArgumentException](TableLog.updateWhere(spark, t,
-      "k", 0, 1, Map("nope" -> lit(1L))))
-    intercept[IllegalArgumentException](TableLog.updateWhere(spark, t,
-      "k", 0, 1, Map.empty[String, org.apache.spark.sql.Column]))
+    intercept[IllegalArgumentException](TableLog.update(spark, t, col("k").between(0, 1), Map("nope" -> lit(1L))))
+    intercept[IllegalArgumentException](TableLog.update(spark, t, col("k").between(0, 1), Map.empty[String, org.apache.spark.sql.Column]))
     // txn idempotence: a replayed update is a no-op
-    val v2 = TableLog.updateWhere(spark, t, "k", 0, 10,
+    val v2 = TableLog.update(spark, t, col("k").between(0, 10),
       Map("v" -> lit(5L)), txnId = Some("u1"))
-    assert(TableLog.updateWhere(spark, t, "k", 0, 10,
+    assert(TableLog.update(spark, t, col("k").between(0, 10),
       Map("v" -> lit(5L)), txnId = Some("u1")) == v2)
     assert(TableLog.latestVersion(t) == v2)
     // NULL keys never match a range update
@@ -2063,15 +2061,14 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, tn,
       Seq[(java.lang.Long, String)]((1L, "a"), (2500L, "b"), (null, "c"))
         .toDF("k", "v"), statsCols = Seq("k"))
-    TableLog.updateWhere(spark, tn, "k", 0, 9000, Map("v" -> lit("X")))
+    TableLog.update(spark, tn, col("k").between(0, 9000), Map("v" -> lit("X")))
     assert(TableLog.read(spark, tn)
       .where($"k".isNull).head.getString(1) == "c")
     // plain feed refuses; the CDC capture path is pinned above
     val f = tmp("graft_log_updw_feed")
     TableLog.enableFeed(f)
     TableLog.create(spark, f, Seq((1L, 2L)).toDF("k", "v"))
-    intercept[IllegalArgumentException](TableLog.updateWhere(spark, f,
-      "k", 0, 10, Map("v" -> lit(0L))))
+    intercept[IllegalArgumentException](TableLog.update(spark, f, col("k").between(0, 10), Map("v" -> lit(0L))))
   }
 
   test("updateWhere: every set RHS sees the OLD row (swap works, >4 interdependent columns deterministic); type drift refused") {
@@ -2082,7 +2079,7 @@ class TableLogSpec extends SparkSpec {
         ($"id" + 4000).as("d"), ($"id" + 5000).as("e")),
       statsCols = Seq("k"))
     // the classic swap: both RHS must read the pre-update image
-    TableLog.updateWhere(spark, t, "k", 0, 49,
+    TableLog.update(spark, t, col("k").between(0, 49),
       Map("a" -> $"b", "b" -> $"a"))
     val r = TableLog.read(spark, t).where($"k" === 7L).head()
     assert(r.getLong(1) == 2007L && r.getLong(2) == 1007L,
@@ -2093,7 +2090,7 @@ class TableLogSpec extends SparkSpec {
     // order, so the old foldLeft chain was NONDETERMINISTIC here; the
     // single projection makes each column read its left neighbor's OLD
     // value regardless of Map order
-    TableLog.updateWhere(spark, t, "k", 10, 19,
+    TableLog.update(spark, t, col("k").between(10, 19),
       Map("a" -> $"e", "b" -> $"a", "c2" -> $"b", "d" -> $"c2",
         "e" -> $"d"))
     val r2 = TableLog.read(spark, t).where($"k" === 13L).head()
@@ -2105,12 +2102,12 @@ class TableLogSpec extends SparkSpec {
     assert(r2.getLong(5) == 4013L, "e <- old d")
     // schema audit: a set expression that widens the column type is
     // refused BEFORE any write (the manifest schema never changes)
-    val e1 = intercept[IllegalArgumentException](TableLog.updateWhere(
-      spark, t, "k", 0, 5, Map("a" -> lit(0.5))))
+    val e1 = intercept[IllegalArgumentException](TableLog.update(
+      spark, t, col("k").between(0, 5), Map("a" -> lit(0.5))))
     assert(e1.getMessage.contains("cast the expression"))
     // predicate column in the set: cond is evaluated against the OLD
     // key, so moving the key out of the range still updates the row
-    TableLog.updateWhere(spark, t, "k", 90, 94,
+    TableLog.update(spark, t, col("k").between(90, 94),
       Map("k" -> ($"k" + 1000L), "a" -> lit(-1L)))
     assert(TableLog.read(spark, t).where($"k" >= 1090L && $"a" === -1L)
       .count() == 5)
@@ -2124,8 +2121,8 @@ class TableLogSpec extends SparkSpec {
     // 8 exact 1000-key files; both deleted keys live in file 0
     TableLog.create(spark, t,
       spark.range(0L, 8000L, 1L, 8).select($"id".as("k"), ($"id" % 7).as("v")),
-      statsCols = Seq("k"))
-    TableLog.deleteMor(spark, t, "k", Seq(10L, 20L).toDF("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
+    keyDelete(t, "k", Seq(10L, 20L).toDF("k"))
     val df = TableLog.read(spark, t)
     assert(df.count() == 7998)
     def scannedUnder(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
@@ -2143,7 +2140,7 @@ class TableLogSpec extends SparkSpec {
     assert(scannedUnder(plan) >= 9)
     // a second sidecar fencing a different file widens the anti-join
     // tier to exactly two files, never the whole table
-    TableLog.deleteMor(spark, t, "k", Seq(5000L).toDF("k"))
+    keyDelete(t, "k", Seq(5000L).toDF("k"))
     val plan2 = TableLog.read(spark, t).queryExecution.optimizedPlan
     val antiLefts2 = plan2.collect {
       case j: Join if j.joinType == LeftAnti => scannedUnder(j.left) }
@@ -2155,10 +2152,10 @@ class TableLogSpec extends SparkSpec {
     val t = tmp("graft_log_morfold")
     TableLog.create(spark, t,
       spark.range(0L, 8000L, 1L, 8).select($"id".as("k"), ($"id" % 7).as("v")),
-      statsCols = Seq("k"))                                       // v1
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)          // v1
     // a delete burst: six single-key sidecars, no data commits between
     (0 until 6).foreach(i =>
-      TableLog.deleteMor(spark, t, "k", Seq(i * 1000L + 3).toDF("k")))
+      keyDelete(t, "k", Seq(i * 1000L + 3).toDF("k")))
     assert(TableLog.snapshot(t).get.dels.size == 6)
     val before = TableLog.read(spark, t).orderBy("k").collect().toSeq
     assert(before.size == 7994)
@@ -2184,13 +2181,13 @@ class TableLogSpec extends SparkSpec {
     // and stays visible
     TableLog.append(spark, t, Seq((3L, 99L)).toDF("k", "v"))
     assert(TableLog.read(spark, t).where($"k" === 3L).count() == 1)
-    // an update-MOR commit stamps its new images AT its own version,
-    // so later sidecars must NOT fold across it (its images carry
-    // re-inserted values an over-folded fence would re-delete)
-    TableLog.updateMor(spark, t, "k", "k", 2500, 2500,
+    // a MOR update stamps its new images AT its own version, so later
+    // sidecars must NOT fold across it (its images carry re-inserted
+    // values an over-folded fence would re-delete)
+    TableLog.update(spark, t, col("k").between(2500, 2500),
       Map("v" -> lit(-1L)))
-    TableLog.deleteMor(spark, t, "k", Seq(4500L).toDF("k"))
-    TableLog.deleteMor(spark, t, "k", Seq(5500L).toDF("k"))
+    keyDelete(t, "k", Seq(4500L).toDF("k"))
+    keyDelete(t, "k", Seq(5500L).toDF("k"))
     val preFold = TableLog.read(spark, t).orderBy("k").collect().toSeq
     TableLog.morFold(spark, t)
     val after = TableLog.snapshot(t).get
@@ -2216,12 +2213,12 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t,
       spark.range(8000).select($"id".as("k"), ($"id" * 10).as("v"))
         .repartition(8, $"k"),
-      statsCols = Seq("k"))
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
     val beforePaths = TableLog.snapshot(t).get.files.map(_.path).toSet
     assert(beforePaths.size >= 8)
     // scattered keys: one in every hundred, everywhere in the domain
     val keys = spark.range(80).select(($"id" * 100 + 7).as("k"))
-    val vDel = TableLog.deleteMor(spark, t, "k", keys)
+    val vDel = keyDelete(t, "k", keys)
     val after = TableLog.snapshot(t).get
     // ZERO data-file rewrites: the file list is untouched, only a
     // sidecar was added
@@ -2241,17 +2238,17 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.read(spark, t).where($"k" === 7L).head.getLong(1) == -70L)
     assert(TableLog.snapshot(t).get.rows == 7921)
     // second sidecar stacks
-    TableLog.deleteMor(spark, t, "k",
+    keyDelete(t, "k",
       spark.range(3).select(($"id" * 100 + 13).as("k")))
     assert(TableLog.read(spark, t).count() == 7921 - 3)
     // already-deleted keys are not double-counted
-    val vAgain = TableLog.deleteMor(spark, t, "k",
+    val vAgain = keyDelete(t, "k",
       spark.range(3).select(($"id" * 100 + 13).as("k")))
     assert(TableLog.snapshot(t).get.rows == 7918)
-    // COW interop: an updateWhere over a range containing deleted keys
-    // neither resurrects them nor loses the update
-    TableLog.updateWhere(spark, t, "k", 200, 299,
-      Map("v" -> lit(-1L)))
+    // COW interop: a copy-on-write update over a range containing
+    // deleted keys neither resurrects them nor loses the update
+    underMode(t, TableLog.Cow)(TableLog.update(spark, t,
+      col("k").between(200, 299), Map("v" -> lit(-1L))))
     val afterUpd = TableLog.read(spark, t)
     assert(afterUpd.where($"k" === 207L).count() == 0,
       "COW rewrite must not resurrect a MOR-deleted row")
@@ -2281,19 +2278,21 @@ class TableLogSpec extends SparkSpec {
       s"vacuum must reclaim the materialized sidecar $p"))
     assert(TableLog.read(spark, t).orderBy("k", "v").collect().toSeq
       == expect)
-    // no-op: keys matching nothing commit nothing
+    // no-op: an empty delete batch commits nothing
     val vNow = TableLog.latestVersion(t)
-    assert(TableLog.deleteMor(spark, t, "k",
-      Seq(999999L).toDF("k")) == vNow)
-    // NULL keys never match
-    assert(TableLog.deleteMor(spark, t, "k",
-      Seq[java.lang.Long](null).toDF("k")) == vNow)
+    assert(keyDelete(t, "k",
+      Seq.empty[Long].toDF("k")) == vNow)
+    // NULL keys are refused (a NULL key matches no row), nothing lands
+    intercept[IllegalArgumentException](keyDelete(t, "k",
+      Seq[java.lang.Long](null).toDF("k")))
+    assert(TableLog.latestVersion(t) == vNow)
     // plain feed refuses
     val f = tmp("graft_log_delmor_feed")
     TableLog.enableFeed(f)
-    TableLog.create(spark, f, Seq((1L, 2L)).toDF("k", "v"))
+    TableLog.create(spark, f, Seq((1L, 2L)).toDF("k", "v"),
+      rowLevelMode = TableLog.Mor)
     intercept[IllegalArgumentException](
-      TableLog.deleteMor(spark, f, "k", Seq(1L).toDF("k")))
+      keyDelete(f, "k", Seq(1L).toDF("k")))
   }
 
   test("renameColumn/dropColumn: pure metadata; old files resolve physical names; dead incarnations never resurrect") {
@@ -2333,7 +2332,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.renameColumn(spark, t, "qty", "quantity")
     assert(TableLog.read(spark, t).where($"k" === 3).head.getLong(1) == 6L)
     // COW update across cohorts neither loses the rename nor the values
-    TableLog.updateWhere(spark, t, "k", 0, 2, Map("quantity" -> lit(-1L)))
+    TableLog.update(spark, t, col("k").between(0, 2), Map("quantity" -> lit(-1L)))
     val upd = TableLog.read(spark, t)
     assert(upd.where($"k" <= 2).agg(sum("quantity")).head.getLong(0) == -3L)
     assert(upd.where($"k" === 3).head.getLong(1) == 6L)
@@ -2351,8 +2350,8 @@ class TableLogSpec extends SparkSpec {
       TableLog.renameColumn(spark, f, "k", "kk"))
     val m = tmp("graft_log_schevo_mor")
     TableLog.create(spark, m, spark.range(10).select($"id".as("k"),
-      $"id".as("v")))
-    TableLog.deleteMor(spark, m, "k", Seq(3L).toDF("k"))
+      $"id".as("v")), rowLevelMode = TableLog.Mor)
+    keyDelete(m, "k", Seq(3L).toDF("k"))
     val e = intercept[RuntimeException](
       TableLog.renameColumn(spark, m, "k", "kk"))
     assert(e.getMessage.contains("sidecar"))
@@ -2459,9 +2458,10 @@ class TableLogSpec extends SparkSpec {
     val t = tmp("graft_log_delmor_str")
     TableLog.create(spark, t, spark.range(2000).select(
       format_string("doc_%04d", $"id").as("doc"), ($"id" % 7).as("v"))
-      .repartition(4, $"v"), strStatsCols = Seq("doc"))
+      .repartition(4, $"v"), strStatsCols = Seq("doc"),
+      rowLevelMode = TableLog.Mor)
     val before = TableLog.snapshot(t).get.files.map(_.path).toSet
-    TableLog.deleteMor(spark, t, "doc",
+    keyDelete(t, "doc",
       Seq("doc_0005", "doc_1999").toDF("doc"))
     val s = TableLog.snapshot(t).get
     assert(s.files.map(_.path).toSet == before, "zero data-file rewrites")
@@ -2503,10 +2503,10 @@ class TableLogSpec extends SparkSpec {
       .toDF("k", "v"))
     assert(TableLog.read(spark, t).count() == 102)
     // COW update: a SET that would break the constraint is refused
-    val e2 = intercept[IllegalArgumentException](TableLog.updateWhere(
-      spark, t, "k", 0, 10, Map("v" -> lit(77L))))
+    val e2 = intercept[IllegalArgumentException](TableLog.update(
+      spark, t, col("k").between(0, 10), Map("v" -> lit(77L))))
     assert(e2.getMessage.contains("v_range"))
-    TableLog.updateWhere(spark, t, "k", 0, 10, Map("v" -> lit(7L)))
+    TableLog.update(spark, t, col("k").between(0, 10), Map("v" -> lit(7L)))
     // COW merge: violating source refused, passing source lands
     intercept[IllegalArgumentException](TableLog.mergeUpsert(spark, t,
       Seq((5L, -1L)).toDF("k", "v"), Seq("k")))
@@ -2653,13 +2653,14 @@ class TableLogSpec extends SparkSpec {
   test("compactSmall: packed rows drop sidecar-deleted keys; the sidecar still fences carried files") {
     val t = tmp("graft_log_compactsmall_mor")
     TableLog.create(spark, t, spark.range(100000).select($"id".as("k"),
-      $"id".as("v")).coalesce(1), statsCols = Seq("k"))
+      $"id".as("v")).coalesce(1), statsCols = Seq("k"),
+      rowLevelMode = TableLog.Mor)
     TableLog.append(spark, t, spark.range(100000, 100010)
       .select($"id".as("k"), $"id".as("v")).coalesce(1), statsCols = Seq("k"))
     TableLog.append(spark, t, spark.range(100010, 100020)
       .select($"id".as("k"), $"id".as("v")).coalesce(1), statsCols = Seq("k"))
     // one deleted key lands in the big (carried) file, one in a small one
-    TableLog.deleteMor(spark, t, "k", Seq(5L, 100005L).toDF("k"))
+    keyDelete(t, "k", Seq(5L, 100005L).toDF("k"))
     val bigPath = TableLog.snapshot(t).get.files.minBy(_.ver).path
     val bigSize = java.nio.file.Files.size(
       java.nio.file.Paths.get(t, bigPath))
@@ -2679,10 +2680,11 @@ class TableLogSpec extends SparkSpec {
 
   test("detail + vacuumPreview: the operational faces are metadata-true and the preview matches the sweep") {
     val t = tmp("graft_log_detail")
-    TableLog.create(spark, t, spark.range(100).select($"id".as("k")))
+    TableLog.create(spark, t, spark.range(100).select($"id".as("k")),
+      rowLevelMode = TableLog.Mor)
     TableLog.append(spark, t, spark.range(100, 150).select($"id".as("k")))
     TableLog.compact(spark, t, 1L << 26)                          // v3 full
-    TableLog.deleteMor(spark, t, "k", Seq(5L).toDF("k"))          // v4
+    keyDelete(t, "k", Seq(5L).toDF("k"))          // v4
     TableLog.addCheckConstraint(spark, t, "k_pos", "k >= 0")      // v5
     // manifest carries write-time sizes: detail is ZERO filesystem
     // stats, and the sizes are the true ones
@@ -2715,12 +2717,12 @@ class TableLogSpec extends SparkSpec {
     val src = tmp("graft_log_clone_src")
     TableLog.create(spark, src, spark.range(1000).select($"id".as("k"),
       ($"id" % 10).as("v")).repartitionByRange(4, $"k"),
-      statsCols = Seq("k"))                                       // v1
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)          // v1
     TableLog.renameColumn(spark, src, "v", "val")                 // v2
     TableLog.append(spark, src, spark.range(1000, 1100)
       .select($"id".as("k"), ($"id" % 10).as("val")).coalesce(1),
       statsCols = Seq("k"))                                       // v3
-    TableLog.deleteMor(spark, src, "k", Seq(7L, 1050L).toDF("k")) // v4
+    keyDelete(src, "k", Seq(7L, 1050L).toDF("k")) // v4
     TableLog.addCheckConstraint(spark, src, "val_range", "val < 10") // v5
     val dst = tmp("graft_log_clone_dst")
     val cv = TableLog.cloneTable(spark, src, dst)
@@ -2744,7 +2746,7 @@ class TableLogSpec extends SparkSpec {
     assert(e.getMessage.contains("val_range"))
     // independent evolution: append to dst, delete in src — neither leaks
     TableLog.append(spark, dst, Seq((2000L, 5L)).toDF("k", "val"))
-    TableLog.deleteWhere(spark, src, "k", 0, 499)
+    TableLog.delete(spark, src, col("k").between(0, 499))
     assert(TableLog.read(spark, dst).count() == 1099)
     // 1098 − 499 (k 0..499 minus the already-MOR-deleted k=7)
     assert(TableLog.read(spark, src).count() == 599)
@@ -2774,10 +2776,11 @@ class TableLogSpec extends SparkSpec {
   test("restore: metadata-only rewind of files, sidecars, schema, and op history; guards hold") {
     val t = tmp("graft_log_restore")
     TableLog.create(spark, t, spark.range(100).select($"id".as("k"),
-      ($"id" * 2).as("v")), statsCols = Seq("k"))                 // v1
+      ($"id" * 2).as("v")), statsCols = Seq("k"),
+      rowLevelMode = TableLog.Mor)                                // v1
     TableLog.append(spark, t, spark.range(100, 150)
       .select($"id".as("k"), ($"id" * 2).as("v")))                // v2
-    TableLog.deleteWhere(spark, t, "k", 0, 49)                    // v3
+    TableLog.delete(spark, t, col("k").between(0, 49))                    // v3
     assert(TableLog.read(spark, t).count() == 100)
     val v2Sum = TableLog.readVersion(spark, t, 2)
       .agg(sum("v")).head.getLong(0)
@@ -2792,7 +2795,7 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.history(spark, t).where($"action" === "restore")
       .head.getLong(0) == 4)
     // MOR sidecars rewind too
-    TableLog.deleteMor(spark, t, "k", Seq(5L).toDF("k"))          // v5
+    keyDelete(t, "k", Seq(5L).toDF("k"))          // v5
     assert(TableLog.read(spark, t).count() == 149)
     TableLog.restore(spark, t, 4)                                 // v6
     assert(TableLog.read(spark, t).where($"k" === 5L).count() == 1)
@@ -2807,7 +2810,7 @@ class TableLogSpec extends SparkSpec {
     assert(dataFilesScanned(t, col("k").between(0, 10)) > 0)
     // CURRENT checks certify restored content: a restore that would
     // smuggle pre-constraint rows back in is refused
-    TableLog.deleteWhere(spark, t, "k", 100, 149)                 // v9
+    TableLog.delete(spark, t, col("k").between(100, 149))                 // v9
     TableLog.addCheckConstraint(spark, t, "k_small", "k < 100")   // v10
     val e = intercept[IllegalArgumentException](
       TableLog.restore(spark, t, 8))
@@ -2890,7 +2893,7 @@ class TableLogSpec extends SparkSpec {
     // the COW update prune stays tight across the rename too: only the
     // one range-overlapping (pre-rename) file is rewritten
     val before = TableLog.snapshot(t).get.files.map(_.path).toSet
-    TableLog.updateWhere(spark, t, "key", 100, 200, Map("v" -> lit(-1L)))
+    TableLog.update(spark, t, col("key").between(100, 200), Map("v" -> lit(-1L)))
     val after = TableLog.snapshot(t).get.files
     assert(after.count(f => before(f.path)) == 7,
       "exactly one pre-rename file should have been rewritten")
@@ -2964,8 +2967,8 @@ class TableLogSpec extends SparkSpec {
     TableLog.create(spark, t,
       spark.range(1000).select($"id".as("k"), ($"id" * 3).as("v"))
         .repartition(4, $"k"),
-      statsCols = Seq("k"))
-    TableLog.deleteMor(spark, t, "k",
+      statsCols = Seq("k"), rowLevelMode = TableLog.Mor)
+    keyDelete(t, "k",
       spark.range(20).select(($"id" * 50 + 1).as("k")))
     // the feed's delete half is exactly the 20 deleted rows
     val feed = TableLog.readFeed(spark, t)
@@ -2979,7 +2982,7 @@ class TableLogSpec extends SparkSpec {
     val liveS = TableLog.read(spark, sv)
     assert(liveS.exceptAll(liveT).isEmpty && liveT.exceptAll(liveS).isEmpty)
     // a second MOR delete captures only the NEWLY deleted rows
-    TableLog.deleteMor(spark, t, "k",
+    keyDelete(t, "k",
       spark.range(10).select(($"id" * 100 + 2).as("k")))
     val dels2 = TableLog.readFeed(spark, t)
       .where($"_change_type" === "delete")
@@ -3107,7 +3110,7 @@ class TableLogSpec extends SparkSpec {
       Seq[(java.lang.Long, String)]((1L, "a"), (2500L, "b"), (null, "c"))
         .toDF("k", "v"),
       statsCols = Seq("k"))
-    TableLog.deleteWhere(spark, t, "k", 2000, 2999)
+    TableLog.delete(spark, t, col("k").between(2000, 2999))
     val back = TableLog.read(spark, t).select("v").orderBy("v")
       .collect().map(_.getString(0)).toSeq
     // the NULL-k row is kept: NULL is in no range
@@ -3116,7 +3119,7 @@ class TableLogSpec extends SparkSpec {
     TableLog.enableFeed(f)
     TableLog.create(spark, f, Seq((1L, "a")).toDF("k", "v"))
     val e = intercept[IllegalArgumentException](
-      TableLog.deleteWhere(spark, f, "k", 0, 10))
+      TableLog.delete(spark, f, col("k").between(0, 10)))
     assert(e.getMessage.contains("append-only"))
   }
 
@@ -3142,7 +3145,7 @@ class TableLogSpec extends SparkSpec {
     assert(feed.select(countDistinct($"id")).head.getLong(0) == 400)
     // disableFeed is the sanctioned escape: deletes become legal again
     TableLog.disableFeed(t)
-    TableLog.deleteWhere(spark, t, "id", 1000, 1099)
+    TableLog.delete(spark, t, col("id").between(1000, 1099))
     assert(TableLog.read(spark, t).count() == 300)
   }
 
@@ -3158,7 +3161,7 @@ class TableLogSpec extends SparkSpec {
       f.strStats.exists(s => s.col == "src" &&
         TableLog.utf8Leq(s.min, "src_b") && TableLog.utf8Leq("src_b", s.max)))
     assert(untouched.size >= 2, "fixture: some files must not overlap")
-    TableLog.deleteWhereIn(spark, t, "src", Seq("src_b"))
+    TableLog.delete(spark, t, col("src").isin("src_b"))
     val after = TableLog.snapshot(t).get
     assert(after.rows == 700)
     assert(TableLog.read(spark, t).where($"src" === "src_b").count() == 0)
@@ -3199,7 +3202,7 @@ class TableLogSpec extends SparkSpec {
     assert(scanWhere(t, col("k") === 42L)
       .collect().map(_.getLong(0)).toSeq == Seq(42L))
     // ...and a copy-on-write delete rebuilds them for its rewritten files
-    TableLog.deleteWhere(spark, t, "k", 42, 42)
+    TableLog.delete(spark, t, col("k").between(42, 42))
     assert(scanWhere(t, col("k") === 42L).count() == 0)
     assert(TableLog.snapshot(t).get.files
       .forall(_.strStats.exists(_.col == "bloom:k")))
@@ -3258,7 +3261,7 @@ class TableLogSpec extends SparkSpec {
     // the delete's delta is (removes = affected files, adds = their
     // remainders); the maintained aggregate must absorb it without a
     // rescan, exactly like an append or merge delta
-    TableLog.deleteWhere(spark, src, "k", 1000, 1999)
+    TableLog.delete(spark, src, col("k").between(1000, 1999))
     TableLog.maintainAgg(spark, src, mv, Seq("g"), Seq("x"))
     val got = TableLog.read(spark, mv).orderBy("g")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -3275,7 +3278,7 @@ class TableLogSpec extends SparkSpec {
         .repartitionByRange(2, $"k"), statsCols = Seq("k"))
     // the range touches only PRE-evolution files: their rewrite must run
     // under the manifest schema (tag = null), not their physical one
-    TableLog.deleteWhere(spark, t, "k", 0, 49)
+    TableLog.delete(spark, t, col("k").between(0, 49))
     val back = TableLog.read(spark, t)
     assert(back.columns.toSeq == Seq("k", "tag"))
     assert(back.count() == 150)
@@ -3541,14 +3544,15 @@ class TableLogSpec extends SparkSpec {
     val t = tmp("graft_log_rw_meta")
     TableLog.create(spark, t,
       spark.range(4000L).select($"id".as("k"), ($"id" % 7).as("v"))
-        .repartitionByRange(4, $"k"), statsCols = Seq("k"))
+        .repartitionByRange(4, $"k"), statsCols = Seq("k"),
+      rowLevelMode = TableLog.Mor)
     // a positional (DV) delete of 100 rows INSIDE the slice about to
     // be replaced: the metadata-derived live count must subtract them.
     // All slices are strictly INTERIOR to one file's key block —
     // range-partition boundaries are sample-approximate, so a slice
     // touching a boundary could overlap two files and flake the
     // planned-read pins below.
-    TableLog.deleteDv(spark, t, $"k" >= 1250 && $"k" < 1350)
+    TableLog.delete(spark, t, $"k" >= 1250 && $"k" < 1350)
     assert(TableLog.snapshot(t).get.dels.nonEmpty, "DV must be pending")
     def pruneRange(lo: Long, hi: Long) = (s: TableLog.Snapshot) =>
       s.files.filter(f => f.stats.find(_.col == "k").forall(st =>
@@ -3576,7 +3580,7 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.read(spark, t).count() == 3700 - 600 + 100)
     // KEY sidecar pending on the slice → data-dependent removal →
     // counting-scan fallback (≥2 planned reads), still exact
-    TableLog.deleteMor(spark, t, "k",
+    keyDelete(t, "k",
       spark.range(3200L, 3250L).toDF("k"))
     val planned2 = TableLog.morFilesPlanned.get()
     TableLog.replaceWhere(spark, t, $"k" >= 3200 && $"k" < 3800,
@@ -3610,8 +3614,8 @@ class TableLogSpec extends SparkSpec {
       }
       // plain table, every face in sequence
       val t = mk("graft_auditscan_plain")
-      TableLog.deleteWhere(spark, t, "id", 100, 300)              // −201
-      TableLog.updateWhere(spark, t, "id", 500, 700,
+      TableLog.delete(spark, t, col("id").between(100, 300))              // −201
+      TableLog.update(spark, t, col("id").between(500, 700),
         Map("v" -> ($"v" + 100L)))
       TableLog.mergeUpsert(spark, t,
         spark.range(900L, 1100L).select($"id", ($"id" % 5).as("v")),
@@ -3627,15 +3631,16 @@ class TableLogSpec extends SparkSpec {
         .where($"id".between(500, 700) && $"v" >= 100L).count() == 201)
       // DV-fenced: the derivation must subtract the vectored positions
       val t2 = mk("graft_auditscan_dv")
-      TableLog.deleteDv(spark, t2, $"id".between(50, 60))  // −11, pending DV
+      underMode(t2, TableLog.Mor)(
+        TableLog.delete(spark, t2, $"id".between(50, 60)))  // −11, pending DV
       assert(TableLog.snapshot(t2).get.dels.nonEmpty, "DV must be pending")
-      TableLog.deleteWhere(spark, t2, "id", 0, 200)               // −190 live
+      TableLog.delete(spark, t2, col("id").between(0, 200))               // −190 live
       assert(TableLog.read(spark, t2).count() == 4000 - 201)
       // key-fenced: falls back to the counting scan, still exact
       val t3 = mk("graft_auditscan_key")
-      TableLog.deleteMor(spark, t3, "id",
-        spark.range(10L, 20L).toDF("id"))             // −10, key sidecar
-      TableLog.deleteWhere(spark, t3, "id", 0, 100)               // −91 live
+      underMode(t3, TableLog.Mor)(keyDelete(t3, "id",
+        spark.range(10L, 20L).toDF("id")))            // −10, key sidecar
+      TableLog.delete(spark, t3, col("id").between(0, 100))               // −91 live
       assert(TableLog.read(spark, t3).count() == 4000 - 101)
     } finally spark.conf.unset("spark.graft.mutation.auditScan")
   }

@@ -72,31 +72,31 @@ class WriteSpecSpec extends SparkSpec {
       TableLog.append(spark, t, rows(2300, 2400, 1))
       TableLog.zOrderMaintain(spark, t)
     }
-    face("deleteWhere")(TableLog.deleteWhere(spark, t, "k", 0L, 9L))
-    face("deleteWhereIn")(TableLog.deleteWhereIn(spark, t, "tag", Seq("t13")))
-    face("deleteMor")(TableLog.deleteMor(spark, t, "k",
-      Seq(20L, 21L).toDF("k")))
-    face("deleteDv")(TableLog.deleteDv(spark, t, $"k" % 97 === 5))
-    face("updateDv")(TableLog.updateDv(spark, t, $"k" % 89 === 3,
-      Map("v" -> lit(-1L))))
-    face("updateMor")(TableLog.updateMor(spark, t, "k", "k", 100L, 120L,
-      Map("v" -> lit(-2L))))
-    face("updateWhere")(TableLog.updateWhere(spark, t, "k", 200L, 220L,
+    // the row-level verbs on the copy-on-write table
+    face("delete")(TableLog.delete(spark, t, col("k").between(0L, 9L)))
+    face("delete (string IN)")(TableLog.delete(spark, t,
+      col("tag").isin("t13")))
+    face("update")(TableLog.update(spark, t, col("k").between(200L, 220L),
       Map("v" -> lit(-3L))))
-    face("morMaintain")(TableLog.morMaintain(spark, t, maxSidecars = 0))
     def changes(lo: Long, hi: Long) = rows(lo, hi, 1)
       .withColumn(TableLog.changeTypeCol, lit("insert"))
       .withColumn(TableLog.changeVersionCol, lit(1L))
-    // the upserts on a copy-on-write table, then on a morKey table
+    // the upserts on a copy-on-write table, then every row-level
+    // verb on the same table declared mor
     face("mergeUpsert")(TableLog.mergeUpsert(spark, t, rows(300, 320, 1)
       .withColumn("v", lit(-4L)), Seq("k")))
     face("applyCdc")(TableLog.applyCdc(spark, t, changes(320, 340), "k"))
     val cowSpec = TableLog.writeSpec(t)
-    TableLog.setWriteSpec(t, cowSpec.copy(morKey = Some("k")))
-    face("mergeUpsert (morKey)")(TableLog.mergeUpsert(spark, t,
+    TableLog.setWriteSpec(t, cowSpec.copy(rowLevelMode = TableLog.Mor))
+    face("delete (mor)")(TableLog.delete(spark, t, $"k" % 97 === 5))
+    face("update (mor)")(TableLog.update(spark, t, $"k" % 89 === 3,
+      Map("v" -> lit(-1L))))
+    face("key sidecar (mor)")(keyDelete(t, "k", Seq(20L, 21L).toDF("k")))
+    face("mergeUpsert (mor)")(TableLog.mergeUpsert(spark, t,
       rows(340, 360, 1).withColumn("v", lit(-6L)), Seq("k")))
-    face("applyCdc (morKey)")(TableLog.applyCdc(spark, t,
+    face("applyCdc (mor)")(TableLog.applyCdc(spark, t,
       changes(360, 380), "k"))
+    face("morMaintain")(TableLog.morMaintain(spark, t, maxSidecars = 0))
     TableLog.setWriteSpec(t, cowSpec)
     face("replaceWhere")(TableLog.replaceWhere(spark, t,
       $"k".between(400L, 450L), rows(400, 451, 1)))
@@ -228,5 +228,131 @@ class WriteSpecSpec extends SparkSpec {
     // the same list as a set passes
     TableLog.append(spark, t, rows(600, 610, 1).drop("tag")
       .withColumnRenamed("k", "key"), statsCols = Seq("v", "key"))
+  }
+
+  // ── rowLevelMode: the write spec picks every row-level commit ──────
+
+  test("rowLevelMode cow (the default): a SQL DELETE with a non-range " +
+      "predicate rewrites only the pruned files and leaves no deletion " +
+      "vector") {
+    val t = tmp("graft_ws_route_cow")
+    TableLog.create(spark, t, spark.range(0L, 4000L, 1L, 4)
+      .select($"id".as("x"), ($"id" % 7).as("v")), statsCols = Seq("x"))
+    TableLog.registerSqlTable(spark, "route_cow", t)
+    val before = TableLog.snapshot(t).get
+    TableLog.sql(spark, "DELETE FROM route_cow WHERE x % 2 = 0 AND x < 1000")
+    val after = TableLog.snapshot(t).get
+    assert(after.spec.rowLevelMode == TableLog.Cow)
+    assert(!after.dels.exists(_.keyCol == TableLog.DvKeyCol),
+      "a cow table must not write a deletion vector")
+    // the one file holding x < 1000 is rewritten, three carry
+    assert(before.files.map(_.path).count(after.files.map(_.path).toSet) == 3)
+    assert(after.action == "delete" && after.rows == 3500)
+    assert(TableLog.read(spark, t).where($"x" < 1000).count() == 500)
+    // with no range conjunct every file is rewritten, still no vector
+    TableLog.sql(spark, "DELETE FROM route_cow WHERE x % 2 = 0")
+    val all = TableLog.snapshot(t).get
+    assert(all.dels.isEmpty && all.rows == 2000)
+    assert(TableLog.read(spark, t).where($"x" % 2 === 0).count() == 0)
+  }
+
+  test("rowLevelMode mor: an update matching more than maxDvPositions " +
+      "rows commits copy-on-write with the right rows") {
+    val t = tmp("graft_ws_route_bulk")
+    TableLog.create(spark, t, rows(0, 1000, 4), statsCols = Seq("k"),
+      rowLevelMode = TableLog.Mor, maxDvPositions = 10)
+    val v = TableLog.update(spark, t, $"v" % 3 === 0,
+      Map("tag" -> lit("bulk")))
+    val s = TableLog.snapshot(t).get
+    assert(v == 2 && s.action == "update", s"got ${s.action}")
+    assert(s.dels.isEmpty, "the over-cap update must land as COW")
+    val want = rows(0, 1000).select($"k", $"v",
+      when($"v" % 3 === 0, lit("bulk")).otherwise($"tag").as("tag"))
+    val got = TableLog.read(spark, t)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(s.rows == 1000)
+    // under the cap the same table takes the deletion vector
+    TableLog.update(spark, t, $"k" === 7L, Map("v" -> lit(-1L)))
+    assert(TableLog.snapshot(t).get.action == "update_dv")
+  }
+
+  test("a Scala-created mor table takes WriteDelta for a catalog DELETE") {
+    val wh = warehouse
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $CAT.route")
+    val path = s"$wh/route/scala_mor"
+    TableLog.create(spark, path, rows(0, 1000), statsCols = Seq("k"),
+      rowLevelMode = TableLog.Mor)
+    val before = TableLog.snapshot(path).get
+    spark.sql(s"DELETE FROM $CAT.route.scala_mor WHERE k % 10 = 3")
+    val after = TableLog.snapshot(path).get
+    assert(after.action == "write_delta_delete", s"got ${after.action}")
+    assert(after.files.map(_.path) == before.files.map(_.path),
+      "WriteDelta rewrites no data file")
+    assert(after.dels.exists(_.keyCol == TableLog.DvKeyCol))
+    assert(spark.sql(s"SELECT count(*) FROM $CAT.route.scala_mor")
+      .as[Long].head() == 900)
+    spark.sql(s"DROP TABLE $CAT.route.scala_mor")
+  }
+
+  test("ALTER TABLE SET TBLPROPERTIES ('rowLevelMode'='mor') commits one " +
+      "version; VERSION AS OF the prior version reports cow") {
+    val wh = warehouse
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $CAT.route")
+    spark.sql(s"CREATE TABLE $CAT.route.alt (k BIGINT, v BIGINT) " +
+      "TBLPROPERTIES ('statsCols' = 'k')")
+    val path = s"$wh/route/alt"
+    TableLog.append(spark, path, spark.range(100).select($"id".as("k"),
+      $"id".as("v")))
+    val v0 = TableLog.latestVersion(path)
+    spark.sql(s"ALTER TABLE $CAT.route.alt SET TBLPROPERTIES " +
+      "('rowLevelMode' = 'mor')")
+    assert(TableLog.latestVersion(path) == v0 + 1)
+    assert(TableLog.snapshot(path).get.action == "write_spec")
+    def mode(sql: String) = spark.sql(sql).as[(String, String)].collect()
+      .toMap.get("rowLevelMode")
+    assert(mode(s"SHOW TBLPROPERTIES $CAT.route.alt").contains("mor"))
+    val cat = GraftCatalog.catalogOf(spark, CAT).get
+    val ident = org.apache.spark.sql.connector.catalog.Identifier
+      .of(Array("route"), "alt")
+    assert(cat.loadTable(ident, v0.toString).properties()
+      .get("rowLevelMode") == "cow")
+    assert(!new String(Files.readAllBytes(
+      Paths.get(path, "_catalog.properties"))).contains("rowLevelMode"),
+      "the mode is versioned in the manifest, never in the sidecar")
+    // the declared mode routes the next statement: a deletion vector
+    spark.sql(s"DELETE FROM $CAT.route.alt WHERE k % 10 = 3")
+    assert(TableLog.snapshot(path).get.action == "write_delta_delete")
+    // UNSET returns the table to cow, again one version
+    val v1 = TableLog.latestVersion(path)
+    spark.sql(s"ALTER TABLE $CAT.route.alt UNSET TBLPROPERTIES ('rowLevelMode')")
+    assert(TableLog.latestVersion(path) == v1 + 1 &&
+      TableLog.writeSpec(path).rowLevelMode == TableLog.Cow)
+    spark.sql(s"DROP TABLE $CAT.route.alt")
+  }
+
+  test("a morKey table property or DDL option is refused, naming rowLevelMode") {
+    val wh = warehouse
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $CAT.route")
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val e1 = intercept[Exception](spark.sql(s"CREATE TABLE $CAT.route.mk " +
+      "(k BIGINT) TBLPROPERTIES ('morKey' = 'k')"))
+    assert(msgs(e1).exists(m => m.contains("morKey") &&
+      m.contains("rowLevelMode")), msgs(e1))
+    assert(!Files.exists(Paths.get(wh, "route", "mk", "_log")))
+    spark.sql(s"CREATE TABLE $CAT.route.mk2 (k BIGINT)")
+    val e2 = intercept[Exception](spark.sql(s"ALTER TABLE $CAT.route.mk2 " +
+      "SET TBLPROPERTIES ('morKey' = 'k')"))
+    assert(msgs(e2).exists(_.contains("rowLevelMode")), msgs(e2))
+    assert(TableLog.latestVersion(s"$wh/route/mk2") == 1)
+    assert(!new String(Files.readAllBytes(Paths.get(wh, "route", "mk2",
+      "_catalog.properties"))).contains("morKey"))
+    val loc = tmp("graft_ws_route_opt")
+    val e3 = intercept[Exception](TableLog.sql(spark,
+      s"CREATE TABLE route_mk USING graft LOCATION '$loc' " +
+        "OPTIONS (morKey 'k') AS SELECT id AS k FROM range(10)"))
+    assert(msgs(e3).exists(_.contains("rowLevelMode")), msgs(e3))
+    assert(TableLog.latestVersion(loc) == 0)
+    spark.sql(s"DROP TABLE $CAT.route.mk2")
   }
 }

@@ -232,11 +232,9 @@ class WriteStatsSpec extends SparkSpec {
         assert(q.count() == found)
       }
     }
-    val deleteJobs = jobsOf(TableLog.deleteDv(spark, t,
-      col("id") < 3000 && pmod(col("id"), lit(7L)) === 3,
-      statsCols = stats, strStatsCols = strStats,
-      bloomStatsCols = bloom))
-    assert(deleteJobs <= 4, s"deleteDv ran $deleteJobs jobs")
+    val deleteJobs = jobsOf(TableLog.delete(spark, t,
+      col("id") < 3000 && pmod(col("id"), lit(7L)) === 3))
+    assert(deleteJobs <= 4, s"delete ran $deleteJobs jobs")
     // upserts of existing keys and of new ones, one typed partition each
     def upserts(lo: Long, hi: Long) = spark.range(lo, hi, 1L, 1).as[Long]
       .map(id => (id, id % 1000 + 1, s"t${id / 100}", id * 2654435761L % 8000))
